@@ -1,7 +1,5 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
-
 /** Per-round benchmark main (driver contract): runs every SparkEntry query
   * against `SPARK_GRAFT_SF_DIR`, prints ONE JSON line.
   *
@@ -14,18 +12,7 @@ import org.apache.spark.sql.SparkSession
 object Bench {
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.sql.adaptive.coalescePartitions.enabled", "true")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
-    GraftLogging.silenceKnownNoise()
+    val spark = GraftSession.local(GraftSession.cpus, "graft-bench")
 
     def materialize(name: String): Unit =
       SparkEntry.queries(name)(spark, sfDir)
@@ -332,15 +319,11 @@ object Bench {
     // entire 32-core perf comparison to this): streaming gates leave
     // state-store maintenance threads that log multi-line stack traces
     // while the RpcEnv tears down, and an interleaved trace clobbers a
-    // metric line printed BEFORE spark.stop(). Order of operations now:
-    // stop any straggler streams and wait for them, stop the session
+    // metric line printed BEFORE spark.stop(). Order of operations:
+    // GraftSession.stop quiesces straggler streams and stops the session
     // (all teardown noise lands here), THEN emit the metric line as the
     // process's final stdout write and flush it explicitly.
-    spark.streams.active.foreach { q =>
-      scala.util.Try { q.stop(); q.awaitTermination(30000) }
-    }
-    GraftLogging.silenceShutdownRaces()
-    scala.util.Try(spark.stop())
+    GraftSession.stop(spark)
     println(s"""{"metric":"total","value":${num(total)},"unit":"sec","queries":$qs,"sf":$sfNum}""")
     System.out.flush()
   }

@@ -2,7 +2,6 @@ package graft
 
 import graft.pipeline._
 import graft.store.Catalog
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
 
@@ -21,17 +20,8 @@ object PipelineMain {
       java.nio.file.Files.createTempDirectory("graft-pipeline").toString)
     val nUrls = args.lift(1).map(_.toInt).getOrElse(100)
     val maxRounds = args.lift(2).map(_.toInt).getOrElse(5)
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "8")
 
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .appName("graft-pipeline")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = GraftSession.local(GraftSession.cpus, "graft-pipeline")
     import spark.implicits._
 
     val store = new PipelineStore(spark, new Catalog(catalogDir))
@@ -64,6 +54,6 @@ object PipelineMain {
       s"links=${store.companyServices.snapshot().count()} " +
       s"events=${store.crmEvents.snapshot().count()} " +
       s"notifications=${store.notifications.snapshot().count()}")
-    spark.stop()
+    GraftSession.stop(spark)
   }
 }

@@ -76,18 +76,7 @@ object SparkEntry {
   private val tmpRoots = scala.collection.mutable.ArrayBuffer[java.nio.file.Path]()
   private lazy val tmpCleanupHook: Unit =
     Runtime.getRuntime.addShutdownHook(new Thread(() =>
-      tmpRoots.synchronized(tmpRoots.foreach { root =>
-        scala.util.Try {
-          import java.nio.file._
-          // Close the walk stream per root so directory handles release
-          // before the delete completes (an unclosed stream can hold the
-          // very directories being removed).
-          val st = Files.walk(root)
-          try st.sorted(java.util.Comparator.reverseOrder())
-            .forEach(p => Files.deleteIfExists(p))
-          finally st.close()
-        }
-      })))
+      tmpRoots.synchronized(tmpRoots.foreach(deleteRecursively))))
   /** One live temp root PER PREFIX: a repeated invocation of the same
     * query (Verify determinism double-runs, best-of-N bench samples,
     * dev loops) deletes the previous run's store/checkpoint before
@@ -99,6 +88,9 @@ object SparkEntry {
   private def deleteRecursively(root: java.nio.file.Path): Boolean =
     scala.util.Try {
       import java.nio.file._
+      // Close the walk stream so directory handles release before the
+      // delete completes (an unclosed stream can hold the very
+      // directories being removed).
       val st = Files.walk(root)
       try st.sorted(java.util.Comparator.reverseOrder())
         .forEach(p => Files.deleteIfExists(p))

@@ -1,5 +1,4 @@
 package graft
-import org.apache.spark.sql.SparkSession
 import java.nio.file.{Files, Paths}
 /** Driver-run correctness dump: each SparkEntry.queries result → parquet,
   * plus oracle_sql.json, for the driver's DuckDB compare. */
@@ -13,16 +12,7 @@ object Verify {
         System.err.println("usage: graft.Verify <sfDir> <outDir> [q1,q2,...]")
         sys.exit(2)
     }
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
-    GraftLogging.silenceKnownNoise()
+    val spark = GraftSession.local(GraftSession.cpus, "graft-verify")
     new java.io.File(outDir).mkdirs()
     SparkEntry.queries
       .filter { case (name, _) => only.forall(_.contains(name)) }
@@ -49,12 +39,6 @@ object Verify {
       .filter { case (k, _) => only.forall(_.contains(k)) }
       .map { case (k, v) => s"${q(k)}: ${q(v)}" }.mkString("{", ",", "}")
     Files.writeString(Paths.get(s"$outDir/oracle_sql.json"), json)
-    // quiesce straggler streams before teardown so the process tail stays
-    // free of state-store unload stack traces (same contract as Bench)
-    spark.streams.active.foreach { q =>
-      scala.util.Try { q.stop(); q.awaitTermination(30000) }
-    }
-    GraftLogging.silenceShutdownRaces()
-    scala.util.Try(spark.stop())
+    GraftSession.stop(spark)
   }
 }

@@ -51,7 +51,9 @@ case class PqRoundAgg(
 
   override def update(buf: Array[Long], input: InternalRow): Array[Long] = {
     val v = child.eval(input)
-    if (v != null) {
+    // a vector of the wrong length has no subvector layout to assign:
+    // skip it (reading it would run past its element region)
+    if (v != null && v.asInstanceOf[ArrayData].numElements() == m * ds) {
       val e = v.asInstanceOf[ArrayData]
       // same assignment kernel as the encode path (exact integer
       // distances, smallest-cid tie-break) — determinism is shared, not

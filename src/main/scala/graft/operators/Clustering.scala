@@ -53,9 +53,9 @@ object Clustering {
     // skip nulls (a null element would silently clamp to the +2.0 bound)
     // and NaN casts to 0 — either way the point lands in a wrong cluster
     // and pollutes center means with fabricated coordinates. Dropping a
-    // malformed embedding is a documented, observable choice.
-    val clean = points.filter(col(embCol).isNotNull &&
-      !exists(col(embCol).cast("array<double>"), x => x.isNull || isnan(x)))
+    // malformed embedding is a documented, observable choice — the same
+    // policy as PQ training ([[Pq.isWellFormed]]).
+    val clean = points.filter(Pq.isWellFormed(embCol))
     val pts = clean.select(col(idCol).as("id"), eMilli.as("__e"))
 
     // Seeds: the k rows with the smallest (md5(id), id) draw, cid 1..k in

@@ -475,11 +475,8 @@ object Dedup {
       .unionByName(pairs.select(col("id_b").as("src"), col("id_a").as("dst"))
         .filter(col("id_a").isNotNull && col("id_b").isNotNull))
       .distinct()
-    val edgesRdd = org.apache.spark.sql.graftbridge.InternalRowBridge
-      .toRdd(edgesPlan).map(_.copy())
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    val edges = org.apache.spark.sql.graftbridge.InternalRowBridge
-      .fromRdd(edgesPlan.sparkSession, edgesRdd, edgesPlan.schema)
+    val (edges, edgesRdd) =
+      org.apache.spark.sql.graftbridge.InternalRowBridge.persisted(edgesPlan)
     def releaseEdges(): Unit = { edgesRdd.unpersist(blocking = false); () }
     // small-graph fast path (same reasoning as broadcasting a small join
     // side): a bounded edge set is solved exactly on the driver with
@@ -544,11 +541,8 @@ object Dedup {
       // every new action
       val (truncated, newDf, newRdd) =
         if ((i + 1) % checkpointEvery == 0) {
-          val rdd = org.apache.spark.sql.graftbridge.InternalRowBridge
-            .toRdd(step).map(_.copy())
-            .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-          val df = org.apache.spark.sql.graftbridge.InternalRowBridge
-            .fromRdd(step.sparkSession, rdd, step.schema)
+          val (df, rdd) =
+            org.apache.spark.sql.graftbridge.InternalRowBridge.persisted(step)
           (df, None, Some(rdd: org.apache.spark.rdd.RDD[_]))
         } else {
           val df = step.cache()

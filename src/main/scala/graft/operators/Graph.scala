@@ -33,22 +33,13 @@ import org.apache.spark.sql.functions._
   */
 object Graph {
 
-  /** Loop-invariant materialization WITHOUT eager execution: persist the
-    * InternalRow RDD ourselves and wrap it back as a LogicalRDD scan —
-    * the plan is truncated like `localCheckpoint`, but nothing computes
-    * until the first action over the returned frame (calling the
-    * operator never runs Spark jobs — plan-only inspection stays free),
-    * and the persisted blocks are reclaimed by the ContextCleaner once
-    * the result frame is dropped, instead of orphaned checkpoint blocks
-    * accumulating across calls in a long-lived session. Same pattern as
-    * `Dedup.dupClustersManaged`'s truncation rounds. */
-  private def materializeOnce(df: DataFrame): DataFrame = {
-    val rdd = org.apache.spark.sql.graftbridge.InternalRowBridge
-      .toRdd(df).map(_.copy())
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    org.apache.spark.sql.graftbridge.InternalRowBridge
-      .fromRdd(df.sparkSession, rdd, df.schema)
-  }
+  /** Loop-invariant materialization WITHOUT eager execution (calling
+    * the operator never runs Spark jobs — plan-only inspection stays
+    * free), and no orphaned checkpoint blocks accumulating across calls
+    * in a long-lived session. Same cut as `Dedup.dupClustersManaged`'s
+    * truncation rounds. */
+  private def materializeOnce(df: DataFrame): DataFrame =
+    org.apache.spark.sql.graftbridge.InternalRowBridge.persisted(df)._1
 
   /** Host→host outlink edges of a crawled corpus (r16): the natural
     * composition of three shipped components — [[graft.functions

@@ -33,6 +33,11 @@ object Catalog {
     * exists for it, so vacuum and readers never see it. */
   val SchemaTable = "__schema__"
 
+  /** Age past which the open-time sweep treats a `.stage-*` directory as
+    * a crashed writer's leftover. A younger one may belong to a live
+    * writer in another process mid-write, so it is left alone. */
+  val StaleStageMillis: Long = 60L * 60 * 1000
+
   /** Watermark key for (table, streamId) — both components url-encoded,
     * like every other manifest key, so quotes/braces can't corrupt the
     * manifest text and `a:b`+`c` can never alias `a`+`b:c`. */
@@ -101,18 +106,19 @@ final class Catalog(val root: String) {
   // Open-time sweep of crashed-run staging leftovers: a process killed
   // mid-multi-slice-staging leaves a .stage-<uuid> shell behind (the
   // in-process cleanup is try/finally, but a crash skips finally). Stage
-  // dirs are process-private scratch — never referenced by any manifest —
-  // so sweeping them on open is always safe for THIS catalog's readers;
-  // a concurrently-alive writer on the same root is already excluded by
-  // the single-writer OCC model.
+  // dirs are process-private scratch — never referenced by any manifest.
+  // Only STALE ones go: a fresh stage may be a live writer's in-flight
+  // write in another process, and sweeping it would make that writer
+  // lose its staged slices (its move loop then throws).
   locally {
-    if (Files.isDirectory(rootPath)) {
-      val st = Files.list(rootPath)
-      try st.iterator().asScala
-        .filter(_.getFileName.toString.startsWith(".stage-"))
-        .foreach(p => scala.util.Try(Catalog.rmTree(p)))
-      finally st.close()
-    }
+    val cutoff = System.currentTimeMillis() - Catalog.StaleStageMillis
+    val st = Files.list(rootPath)
+    try st.iterator().asScala
+      .filter(_.getFileName.toString.startsWith(".stage-"))
+      .filter(p => scala.util.Try(
+        Files.getLastModifiedTime(p).toMillis < cutoff).getOrElse(false))
+      .foreach(p => scala.util.Try(Catalog.rmTree(p)))
+    finally st.close()
   }
 
   /** table name → (partition key → current version id), or empty map. */

@@ -944,11 +944,14 @@ final class GraftTable(
       m("pks").asInstanceOf[scala.collection.Seq[String]].toSet)
   }
 
-  /** Partition-column types whose driver-side `toString` agrees exactly
-    * with Spark's `cast(col as string)` — the [[localDelta]] fast path
-    * only fires when the landing-slice key can be derived on the driver
-    * byte-identically to [[partKeyCol]]. */
-  private val driverSafePartTypes: Set[org.apache.spark.sql.types.DataType] = {
+  /** Column types the [[localDelta]] fast path handles exactly like the
+    * Spark path: their driver-side `toString` agrees with Spark's
+    * `cast(col as string)` (partition columns → the landing-slice key,
+    * byte-identical to [[partKeyCol]]), and boxed-value equality agrees
+    * with window partitioning (key columns → the survivor rank). Binary
+    * keys compare by reference on the driver, and NaN float/double keys
+    * never equal each other there while Spark groups them as one key. */
+  private val driverSafeTypes: Set[org.apache.spark.sql.types.DataType] = {
     import org.apache.spark.sql.types._
     Set(StringType, BooleanType, ByteType, ShortType, IntegerType, LongType)
   }
@@ -966,8 +969,9 @@ final class GraftTable(
     * picks on a LocalRelation's order-preserving ids), NULL key columns
     * group as equal (window partitioning semantics), and the slice key
     * replicates [[partKeyCol]] through [[Catalog.encodeValue]] — gated
-    * on [[driverSafePartTypes]] so a cast-vs-toString divergence
-    * (timestamps, decimals) falls back to the Spark path. */
+    * on [[driverSafeTypes]] for partition AND key columns, so any
+    * divergence (timestamps, decimals, binary/float keys) falls back to
+    * the Spark path. */
   private def localDelta(tagged: DataFrame, keyCols: Seq[String])
       : Option[(DataFrame, Long, Long, Set[String])] = {
     import org.apache.spark.sql.catalyst.plans.logical.LocalRelation
@@ -986,7 +990,7 @@ final class GraftTable(
       case _ => false
     }
     if (!isLocal) return None
-    if (partitionCols.exists(c => !driverSafePartTypes.contains(schema(c).dataType)))
+    if ((partitionCols ++ keyCols).exists(c => !driverSafeTypes.contains(schema(c).dataType)))
       return None
     val dataCols = schema.fieldNames.toSeq
     val inSchema = tagged.schema // dataCols :+ __del, by both callers
@@ -1221,11 +1225,17 @@ final class Txn(catalog: Catalog, opts: TxnOptions = TxnOptions(timeoutMs = 0)) 
           java.nio.file.Files.createDirectories(dest.getParent)
           if (java.nio.file.Files.isDirectory(src))
             java.nio.file.Files.move(src, dest) // same filesystem: under catalog.root
-          else
+          else if (java.nio.file.Files.exists(stageRoot.resolve("_SUCCESS")))
             // a touched slice every row left (e.g. all its keys deleted)
             // stays in the manifest as an empty directory — same contract
             // as the single-slice path's empty write
             java.nio.file.Files.createDirectories(dest)
+          else
+            // the committed write is gone (swept or deleted under us):
+            // publishing its slices as empty would silently drop data
+            throw new IllegalStateException(
+              s"staged write for ${t.name} lost its output at $stageRoot " +
+                "(no _SUCCESS marker); refusing to publish empty slices")
           SliceStats.writeSidecar(t.spark, dir, t.bloomCols.toSet)
           dirs += (pk -> dir)
           parts += (pk -> Some(v))

@@ -1,7 +1,7 @@
 package graft
 
 /** One place for the known-spurious Spark logger noise the engine's
-  * sessions silence (test base + the Verify/Bench mains).
+  * sessions silence (every session is built by [[GraftSession.local]]).
   *
   * `org.apache.spark.sql.execution.LogicalRDD` warns "The output columns
   * are expected to the same (for name and type) for output …" on every
@@ -13,9 +13,11 @@ package graft
   * pinned to ERROR to keep green logs WARN-free.
   */
 object GraftLogging {
-  /** Call BEFORE SparkSession creation where possible — NativeCodeLoader
-    * fires its one startup WARN (no native hadoop lib in this container,
-    * builtin-java classes are fine) during context init. */
+  /** Called by [[GraftSession.local]] once the context is up. The
+    * NativeCodeLoader pin only helps where a log4j2 config on the
+    * classpath keeps Spark from resetting levels at context init (the
+    * specs): its one startup WARN (no native hadoop lib; builtin-java
+    * classes are fine) fires during that init. */
   def silenceKnownNoise(): Unit = {
     org.apache.logging.log4j.core.config.Configurator.setLevel(
       "org.apache.spark.sql.execution.LogicalRDD",
@@ -52,7 +54,7 @@ object GraftLogging {
         l, org.apache.logging.log4j.Level.ERROR))
   }
 
-  /** Call immediately BEFORE `spark.stop()` in the mains. State-store
+  /** Called by [[GraftSession.stop]] right before `spark.stop()`. State-store
     * maintenance threads race the RpcEnv teardown and log a multi-line
     * ERROR stack trace ("Could not unload state store provider …
     * RpcEnv already stopped") — a pure shutdown race with nothing left

@@ -22,4 +22,16 @@ object InternalRowBridge {
   def fromRdd(spark: SparkSession, rdd: RDD[InternalRow], schema: StructType): DataFrame =
     spark.asInstanceOf[org.apache.spark.sql.classic.SparkSession]
       .internalCreateDataFrame(rdd, schema)
+
+  /** Loop materialization WITHOUT eager execution: persist `df`'s rows
+    * (MEMORY_AND_DISK) and wrap them back as a `Scan ExistingRDD` — the
+    * plan is truncated like `localCheckpoint`, but nothing computes until
+    * the first action over the returned frame, and the blocks are
+    * reclaimed by the ContextCleaner once the frame is dropped (or
+    * earlier through the returned RDD's `unpersist`). */
+  def persisted(df: DataFrame): (DataFrame, RDD[InternalRow]) = {
+    val rdd = toRdd(df).map(_.copy())
+      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+    (fromRdd(df.sparkSession, rdd, df.schema), rdd)
+  }
 }

@@ -12,19 +12,5 @@ trait SparkTestBase { self: AnyFunSuite =>
 object SparkTestBase {
   // One session per JVM — ScalaTest suites share it; Spark local mode
   // only supports one context anyway.
-  lazy val session: SparkSession = {
-    GraftLogging.silenceKnownNoise()
-    val s = SparkSession.builder()
-      .master("local[4]")
-      .appName("graft-test")
-      .config("spark.sql.shuffle.partitions", "4")
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    s.sparkContext.setLogLevel("WARN")
-    GraftLogging.silenceKnownNoise()
-    s
-  }
+  lazy val session: SparkSession = GraftSession.local(4, "graft-test")
 }

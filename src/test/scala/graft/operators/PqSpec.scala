@@ -104,6 +104,20 @@ class PqSpec extends AnyFunSuite with SparkTestBase {
     assert(ivf == expected, "IVFADC ranking diverges from cell-restricted exact ADC")
   }
 
+  test("training skips a wrong-length embedding: same codebook as without it") {
+    val corpus = clustered()
+    // the short vector's id sorts after the k=8 seed draw (smallest
+    // md5(id)), so only the Lloyd rounds ever see it
+    def md5(id: Long): String = java.security.MessageDigest.getInstance("MD5")
+      .digest(id.toString.getBytes("UTF-8")).map("%02x".format(_)).mkString
+    val seedCut = (0L until 400L).map(md5).sorted.apply(7)
+    val shortId = Iterator.from(1000).map(_.toLong).find(md5(_) > seedCut).get
+    val withShort = corpus.unionByName(
+      Seq((shortId, Array.fill(15)(1.9f))).toDF("vec_id", "embedding"))
+    val base = Pq.train(corpus, "embedding", "vec_id", m = 4, k = 8, iters = 2)
+    assert(Pq.train(withShort, "embedding", "vec_id", m = 4, k = 8, iters = 2) == base)
+  }
+
   test("degenerate corpus: centroids that lose every member carry over") {
     // 10 identical vectors, k=4: every assignment ties to cid 1, so
     // centroids 2..4 never see a member and must keep their seed

@@ -205,6 +205,55 @@ class StagingSpec extends AnyFunSuite with SparkTestBase {
     assert(applied == 2L) // one surviving upsert + one tombstone
     assert(t.snapshot().filter(col("id") === 0 && col("source") === "winner").count() == 1)
     assert(t.snapshot().filter(col("id") === 1).count() == 0)
+
+    // key types whose driver-side equality differs from Spark's grouping
+    // (binary compares by reference, NaN never equals NaN; ±0.0 must
+    // stay one key as well): the literal delta must give exactly what the
+    // same delta forced through the Spark window path (an RDD-backed
+    // frame) gives
+    def viaBothPaths(keyType: DataType, keys: Seq[Any]): Unit = {
+      val sch = StructType(Seq(
+        StructField("k", keyType, nullable = false),
+        StructField("v", StringType, nullable = true)))
+      val rows = keys.zipWithIndex.map { case (k, i) =>
+        org.apache.spark.sql.Row(k, s"v$i") }
+      def render(r: org.apache.spark.sql.Row): String = (r.get(0) match {
+        case b: Array[Byte] => b.mkString("[", ",", "]")
+        case x => String.valueOf(x)
+      }) + "|" + r.getString(1)
+      def upsertInto(delta: org.apache.spark.sql.DataFrame): (Long, Seq[String]) = {
+        val tbl = new GraftTable(spark, new Catalog(
+          java.nio.file.Files.createTempDirectory("graft-stage-keys").toString),
+          "kt", sch, uniqueKeys = Seq(Seq("k")))
+        val n = tbl.upsert(Seq("k"), delta)
+        (n, tbl.snapshot().collect().map(render).toSeq.sorted)
+      }
+      val literal = upsertInto(spark.createDataFrame(
+        java.util.Arrays.asList(rows: _*), sch))
+      val forced = upsertInto(spark.createDataFrame(
+        spark.sparkContext.parallelize(rows, 1), sch))
+      assert(literal == forced, s"$keyType keys: driver path diverges")
+    }
+    viaBothPaths(BinaryType, Seq(Array[Byte](1, 2), Array[Byte](1, 2),
+      Array[Byte](), Array[Byte](3), Array[Byte]()))
+    viaBothPaths(DoubleType, Seq(0.0, -0.0, Double.NaN, 1.5, Double.NaN, -0.0))
+  }
+
+  test("open-time stage sweep removes only stale .stage-* dirs") {
+    // a second Catalog opening the root while a writer is mid-stage must
+    // not sweep the live stage; a crashed run's old stage does go
+    val root = java.nio.file.Files.createTempDirectory("graft-stage-sweep")
+    new Catalog(root.toString)
+    val fresh = java.nio.file.Files.createDirectories(root.resolve(".stage-fresh"))
+    java.nio.file.Files.createFile(fresh.resolve("part-0.parquet"))
+    val stale = java.nio.file.Files.createDirectories(root.resolve(".stage-stale"))
+    java.nio.file.Files.setLastModifiedTime(stale,
+      java.nio.file.attribute.FileTime.fromMillis(
+        System.currentTimeMillis() - Catalog.StaleStageMillis - 60000L))
+    new Catalog(root.toString)
+    assert(java.nio.file.Files.exists(fresh.resolve("part-0.parquet")),
+      "a fresh (possibly live) stage dir was swept")
+    assert(!java.nio.file.Files.exists(stale), "a stale stage dir survived")
   }
 
   test("a 1-row literal upsert on an unpartitioned table runs ≤2 root executions") {

@@ -45,7 +45,7 @@ def main():
     if "--run" in sys.argv:
         subprocess.run(
             ["sbt", f'runMain graft.Verify {sf_dir} {out_dir}'],
-            cwd="/root/repo", check=True)
+            cwd=Path(__file__).resolve().parent.parent, check=True)
 
     oracle = json.loads((out_dir / "oracle_sql.json").read_text())
     con = duckdb.connect()
