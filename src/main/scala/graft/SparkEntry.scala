@@ -1,19 +1,12 @@
 package graft
 
-import graft.functions.TextFunctions
-import graft.operators.{AsOf, Curation, Dedup, RangeJoin, Relevance, Sampling, Similarity}
-import graft.query._
+import graft.gates._
+import graft.gates.Fixtures.pricingSummary
 import org.apache.spark.sql.{DataFrame, SparkSession}
-import org.apache.spark.sql.functions._
 
-/** Driver contract — see /root/repo/SURVEY.md §7 + the builder prompt.
-  *
-  * Each entry in [[queries]] exercises one operator from SURVEY §2's
-  * inventory (the Prisma relational surface of the reference at
-  * `/root/reference/src/db/client/effect.ts` re-expressed Spark-first via
-  * [[graft.query.Model]]), or one of the beyond-reference training-data
-  * operators. Each has a matching DuckDB oracle in [[oracleSql]] unless the
-  * op is not SQL-expressible.
+/** Driver contract: [[entry]] plus the gate registry. Each gate is one
+  * [[graft.gates.Gate]] — a Spark query and the DuckDB oracle SQL it must
+  * hash-match — written in its family's file under `graft/gates/`.
   *
   * Conventions for oracle parity:
   *   - every query ends in a deterministic total ORDER BY (driver hash
@@ -25,7 +18,7 @@ import org.apache.spark.sql.functions._
   */
 object SparkEntry {
 
-  /** Flagship query on /root/testdata/sf0.001; driver smoke-checks rows>0.
+  /** Flagship query; the smoke check wants rows > 0.
     * TPC-H-Q1-shaped pricing summary — the reference's only standalone
     * analytics query is a filtered count (`src/runQueries.ts:45-49`); this
     * is its natural Spark generalization (filter → groupBy → agg).
@@ -33,10845 +26,23 @@ object SparkEntry {
   def entry(spark: SparkSession): DataFrame =
     pricingSummary(spark, "/root/testdata/sf0.001")
 
-  private def dec(c: org.apache.spark.sql.Column) = c.cast("decimal(18,2)")
+  /** Every gate, family by family. */
+  def all: Seq[Gate] =
+    RelationalGates.all ++ StoreGates.all ++ StreamingGates.all ++
+      RetrievalGates.all ++ DedupGates.all ++ TextGates.all ++
+      CrawlGates.all ++ MediaGates.all ++ GraphMlGates.all
 
-  /** Deterministic synthetic JSON doc derived from events.props.k — gives
-    * the JsonF completeness queries arrays, JSON nulls AND DB nulls to
-    * chew on (the corpus props are flat {"k": N}). Built with IDENTICAL
-    * text in the DuckDB oracles. */
-  private def jsonDoc: org.apache.spark.sql.Column = {
-    val k = get_json_object(col("props"), "$.k").cast("long")
-    when(pmod(k, lit(7)) === 0, lit(null).cast("string"))
-      .when(pmod(k, lit(7)) === 1, lit("""{"name": null, "tags": null}"""))
-      .otherwise(concat(
-        lit("{\"name\": \"Alpha"), k.cast("string"),
-        lit("\", \"tags\": [\"t"), pmod(k, lit(4)).cast("string"),
-        lit("\", \"mid\", \"e"), pmod(k, lit(3)).cast("string"),
-        lit("\"]}")))
-  }
-  // Exact decimal aggregate, surfaced as double: the decimal sum is
-  // order-independent (unlike double sums), and the final cast to double is
-  // IEEE-correctly-rounded in both Spark and DuckDB — so the driver's hash
-  // compare sees bit-identical float64 on both sides.
-  private def decSum(c: org.apache.spark.sql.Column) = sum(dec(c)).cast("double")
+  private lazy val registry: Map[String, Gate] = Gate.index(all)
 
-  /** The local test corpus is ONE parquet row group, so its scan yields a
-    * single partition and every CPU-heavy kernel downstream (tokenize,
-    * shingle, minhash, hyperplane projections) runs on one core. A real
-    * corpus arrives in thousands of splits; this restores the parallelism
-    * the scan would naturally have. Applied ONLY to kernel-heavy inputs,
-    * and CONDITIONALLY: when the planned scan already yields at least
-    * one partition per core (the 100 TB case), no shuffle is added at
-    * all. The probe is restricted to SCAN-SHAPED plans (scans, unions,
-    * projections, filters): on those, building the RDD runs no job even
-    * under AQE (there are no shuffle stages to materialize). A plan that
-    * already contains a shuffle-inducing operator is returned unchanged
-    * — probing it under AQE would EXECUTE its map stages just to read a
-    * partition count, and the count would reflect shuffle.partitions,
-    * not scan splits. */
-  /** Temp directory for a query-scoped throwaway store/stream, deleted
-    * recursively at JVM exit — repeated dev-loop runs (determinism
-    * double-runs, best-of-N bench samples) otherwise accumulate parquet
-    * versions under /tmp indefinitely. */
-  private val tmpRoots = scala.collection.mutable.ArrayBuffer[java.nio.file.Path]()
-  private lazy val tmpCleanupHook: Unit =
-    Runtime.getRuntime.addShutdownHook(new Thread(() =>
-      tmpRoots.synchronized(tmpRoots.foreach(deleteRecursively))))
-  /** One live temp root PER PREFIX: a repeated invocation of the same
-    * query (Verify determinism double-runs, best-of-N bench samples,
-    * dev loops) deletes the previous run's store/checkpoint before
-    * creating the fresh one, so temp disk is bounded by the number of
-    * distinct store-building queries, not the number of invocations.
-    * Safe because every gate materializes a query fully before the same
-    * query runs again — nothing holds a lazy frame over the old files. */
-  private val tmpByPrefix = scala.collection.mutable.HashMap[String, java.nio.file.Path]()
-  private def deleteRecursively(root: java.nio.file.Path): Boolean =
-    scala.util.Try {
-      import java.nio.file._
-      // Close the walk stream so directory handles release before the
-      // delete completes (an unclosed stream can hold the very
-      // directories being removed).
-      val st = Files.walk(root)
-      try st.sorted(java.util.Comparator.reverseOrder())
-        .forEach(p => Files.deleteIfExists(p))
-      finally st.close()
-    }.isSuccess
-  private def tempDir(prefix: String): String = {
-    tmpCleanupHook
-    tmpRoots.synchronized {
-      tmpByPrefix.remove(prefix).foreach { old =>
-        // a failed/partial delete (transient open handle) stays registered
-        // so the JVM shutdown hook retries it — unregistering here would
-        // leak the half-deleted root forever
-        if (deleteRecursively(old)) tmpRoots -= old
-      }
-      val p = java.nio.file.Files.createTempDirectory(prefix)
-      tmpByPrefix(prefix) = p
-      tmpRoots += p
-      p.toString
-    }
-  }
+  /** Gate name → Spark query over an sf directory. */
+  lazy val queries: Map[String, (SparkSession, String) => DataFrame] =
+    registry.map { case (name, g) => name -> g.run }
+
+  /** Gate name → equivalent DuckDB SQL over the same parquet tables. */
+  lazy val oracleSql: Map[String, String] =
+    registry.map { case (name, g) => name -> g.oracle }
+
   /** Test hook: live temp roots for a prefix (the no-orphan invariant). */
   private[graft] def liveTempDirs(prefix: String): Seq[java.nio.file.Path] =
-    tmpRoots.synchronized(
-      tmpRoots.filter(_.getFileName.toString.startsWith(prefix)).toSeq)
-
-  // ---- Build-once-per-JVM lifecycle fixtures (r16) --------------------
-  //
-  // The persistent-index gates each run a full build → mutate → refresh
-  // → restore/vacuum lifecycle before the read they hash-gate. The
-  // LIFECYCLE is what those gates assert (its requires run inside the
-  // build closure, and Verify — a fresh JVM, one call per gate — always
-  // executes it in full); the BENCH's repeated best-of-N samples were
-  // re-paying dozens of COW commits per sample just to re-time the same
-  // read. `fixture` memoizes the built catalog root per (key, sfDir) for
-  // the JVM's lifetime: the first call per gate runs the whole lifecycle,
-  // later calls reuse the root. Every consumer is READ-ONLY after the
-  // build (a gate whose per-sample phase mutated would need a file-level
-  // copy — catalog manifests are root-relative, so a copied tree would
-  // be a valid catalog — but no current gate does, so that path
-  // intentionally does not exist). Oracle hashes are unchanged by
-  // construction — the memoized state is exactly what the per-call
-  // build produced.
-  private val fixtures =
-    new java.util.concurrent.ConcurrentHashMap[String, String]()
-  /** The (doc_id, source, n_chars) store schema the ValueIndex gate
-    * family shares. */
-  private def vidxSchema = {
-    import org.apache.spark.sql.types._
-    StructType(Seq(
-      StructField("doc_id", LongType, nullable = false),
-      StructField("source", StringType, nullable = true),
-      StructField("n_chars", LongType, nullable = true)))
-  }
-
-  /** [[vidxSchema]] plus the `lang` column (the composite-index gates). */
-  private def vidxLangSchema = {
-    import org.apache.spark.sql.types._
-    StructType(Seq(
-      StructField("doc_id", LongType, nullable = false),
-      StructField("source", StringType, nullable = true),
-      StructField("lang", StringType, nullable = true),
-      StructField("n_chars", LongType, nullable = true)))
-  }
-
-  /** The (doc_id, text) store schema the BM25 gate family shares. */
-  private def bm25Schema = {
-    import org.apache.spark.sql.types._
-    StructType(Seq(
-      StructField("doc_id", LongType, nullable = false),
-      StructField("text", StringType, nullable = true)))
-  }
-
-  /** Shared null-planted fixture of q_group_indexed /
-    * q_count_null_indexed: % 13 sources NULL at ingest (the build must
-    * count them), % 31 MOVED to NULL post-build (the refresh must
-    * transfer posting rows into the meta null census). */
-  private def vidxGroupFixture(s: SparkSession, dir: String)
-      : (graft.store.GraftTable, graft.store.ValueIndex) = {
-    val root = fixture("vidx-group", dir) { root =>
-      val cat = new graft.store.Catalog(root)
-      val docs = Tables.documents(s, dir)
-        .select(col("doc_id"),
-          when(pmod(col("doc_id"), lit(13)) === 0, lit(null))
-            .otherwise(col("source")).as("source"),
-          col("n_chars"))
-      val src = new graft.store.GraftTable(s, cat, "docs", vidxSchema,
-        uniqueKeys = Seq(Seq("doc_id")))
-      src.createMany(docs.filter(pmod(col("doc_id"), lit(4)) =!= 0))
-      val idx = graft.store.ValueIndex.build(src, "bysrc", "source",
-        "doc_id", nBuckets = 8)
-      src.createMany(docs.filter(pmod(col("doc_id"), lit(4)) === 0))
-      src.updateMany(graft.query.RawCol(pmod(col("doc_id"), lit(31)) === 0),
-        Map("source" -> lit(null).cast("string")))
-      require(idx.refresh().nonEmpty,
-        "vidx-group fixture: the post-build window must drain")
-    }
-    val src = new graft.store.GraftTable(s, new graft.store.Catalog(root),
-      "docs", vidxSchema, uniqueKeys = Seq(Seq("doc_id")))
-    (src, graft.store.ValueIndex.open(src, "bysrc", "source", "doc_id"))
-  }
-
-  /** Shared read-only BM25 fixture: the full documents corpus indexed as
-    * `r1`, plain or positional — q_bm25_topk / q_rrf_persist share the
-    * plain build, q_bm25_slop the positional one. Fresh handles per call. */
-  private def bm25BaseFixture(s: SparkSession, dir: String,
-                              withPositions: Boolean)
-      : (graft.store.GraftTable, graft.store.Bm25Index) = {
-    val key = if (withPositions) "bm25-pos" else "bm25-plain"
-    val root = fixture(key, dir) { root =>
-      val cat = new graft.store.Catalog(root)
-      val src = new graft.store.GraftTable(s, cat, "docs", bm25Schema,
-        uniqueKeys = Seq(Seq("doc_id")))
-      src.createMany(Tables.documents(s, dir)
-        .select(col("doc_id"), col("text")))
-      graft.store.Bm25Index.build(src, "r1", "text", "doc_id",
-        nBuckets = 8, withPositions = withPositions)
-      ()
-    }
-    val src = new graft.store.GraftTable(s, new graft.store.Catalog(root),
-      "docs", bm25Schema, uniqueKeys = Seq(Seq("doc_id")))
-    (src, graft.store.Bm25Index.open(src, "r1", "text", "doc_id"))
-  }
-
-  /** Shared read-only fixture of the single-column index surface gates
-    * (q_find_many_indexed / q_count_indexed / q_find_ids_indexed): the
-    * FULL documents corpus with a `bysrc` value index — identical in all
-    * three, so one build serves them. Returns fresh handles per call. */
-  private def vidxFullFixture(s: SparkSession, dir: String)
-      : (graft.store.GraftTable, graft.store.ValueIndex) = {
-    val root = fixture("vidx-full", dir) { root =>
-      val cat = new graft.store.Catalog(root)
-      val src = new graft.store.GraftTable(s, cat, "docs", vidxSchema,
-        uniqueKeys = Seq(Seq("doc_id")))
-      src.createMany(Tables.documents(s, dir)
-        .select(col("doc_id"), col("source"), col("n_chars")))
-      graft.store.ValueIndex.build(src, "bysrc", "source", "doc_id",
-        nBuckets = 8)
-      ()
-    }
-    val src = new graft.store.GraftTable(s, new graft.store.Catalog(root),
-      "docs", vidxSchema, uniqueKeys = Seq(Seq("doc_id")))
-    (src, graft.store.ValueIndex.open(src, "bysrc", "source", "doc_id"))
-  }
-
-  /** [[fixture]]'s result-level sibling for gates whose whole body IS
-    * the lifecycle (ANN persist/rebuild/restore/vacuum, dedup/media
-    * index): the first call per (key, sfDir) runs the full gate —
-    * mutations, refreshes, mid-gate requires — and memoizes the FINAL
-    * read frame; later calls re-execute only that read plan (the
-    * lifecycle's catalog state is immutable COW, so the plan replays
-    * byte-identically). Verify (fresh JVM, one call per gate) always
-    * pays the full lifecycle; the bench's best-of-N resamples time the
-    * read, which is what a repeated sample can honestly measure. */
-  private val results =
-    new java.util.concurrent.ConcurrentHashMap[String, DataFrame]()
-  private def cachedResult(s: SparkSession, key: String, dir: String)
-                          (body: => DataFrame): DataFrame =
-    // Keyed by SESSION IDENTITY too: a memoized frame is bound to the
-    // session that planned it — handing it to a second session in the
-    // same JVM (or a restarted one after stop()) would fail obscurely at
-    // execution time. Dead-session entries are bounded (one per gate per
-    // session) and one-session-per-JVM is the only path the harness runs.
-    results.computeIfAbsent(
-      s"$key|$dir|${System.identityHashCode(s)}", _ => body)
-
-  private def fixture(key: String, dir: String)
-                     (build: String => Unit): String =
-    fixtures.computeIfAbsent(s"$key|$dir", _ => {
-      val root = tempDir(s"graft-fx-$key")
-      build(root)
-      root
-    })
-
-  private def par(s: SparkSession, df: DataFrame): DataFrame = {
-    import org.apache.spark.sql.catalyst.plans.logical._
-    val shuffleShaped = df.queryExecution.optimizedPlan.collectFirst {
-      case p @ (_: Join | _: Aggregate | _: Window | _: Sort |
-                _: RepartitionOperation | _: Distinct | _: GlobalLimit) => p
-    }.isDefined
-    if (shuffleShaped) df
-    else {
-      val target = s.sparkContext.defaultParallelism
-      val scanParts = org.apache.spark.sql.graftbridge.InternalRowBridge
-        .toRdd(df).getNumPartitions
-      if (scanParts >= target) df else df.repartition(target)
-    }
-  }
-
-
-  /** The substring-dedup gate corpus: documents plus, for every
-    * doc_id % 10 == 0, a twin (+100000) carrying the doc's first 60
-    * tokens verbatim — a guaranteed ≥50-token cross-doc run. ONE
-    * definition shared by the span and scrub gates (their oracles build
-    * the identical corpus), so the planted-fixture construction cannot
-    * drift between them. */
-  private def plantedTwinCorpus(s: SparkSession, dir: String): DataFrame = {
-    val docs = Tables.documents(s, dir).select(col("doc_id"), col("text"))
-    docs.unionByName(docs.filter(pmod(col("doc_id"), lit(10)) === 0)
-      .select((col("doc_id") + 100000L).as("doc_id"),
-        array_join(slice(split(col("text"), " "), 1, 60), " ").as("text")))
-  }
-
-  /** Shared harness for the streaming gates: run an AvailableNow stream
-    * into parquet via foreachBatch and read the result back.
-    *
-    *   - Writes are IDEMPOTENT under foreachBatch re-execution: complete
-    *     mode overwrites one directory (last batch wins — the mode's
-    *     semantics); append mode overwrites a per-batch directory, so a
-    *     replayed batch never appends duplicates.
-    *   - The timeout is HARD: an overrun stops the query and throws —
-    *     returning partial output to a hash-compared oracle would be a
-    *     flaky failure with the query still writing in the background.
-    *   - Small-state scope-down: 8 shuffle partitions (per-partition
-    *     state-store file IO dominates these fixture-sized states at 32),
-    *     restored afterwards. */
-  private def runStreamToParquet(s: SparkSession, stream: DataFrame,
-                                 mode: String, tmpPrefix: String): DataFrame = {
-    val tmp = tempDir(tmpPrefix)
-    val out = tmp + "/out"
-    val prevParts = s.conf.get("spark.sql.shuffle.partitions")
-    // Gate-harness partition count: state-store instances (and their
-    // checkpoint delta files) scale with shuffle partitions, so the
-    // fixed per-stream cost drops with fewer partitions — measured
-    // 12.2 s → 11.3 s across the 8 stream gates going 8 → 4, flat from
-    // 4 → 2. The remaining ~1-2 s per gate is the stream lifecycle
-    // itself (query planning, offset/commit logs, start/stop), which is
-    // the honest cost of driving REAL streaming machinery per gate. A
-    // production job sizes this to its actual key cardinality.
-    s.conf.set("spark.sql.shuffle.partitions", "4")
-    try {
-      val q = stream.writeStream.outputMode(mode)
-        .foreachBatch { (b: DataFrame, bid: Long) =>
-          val dir = if (mode == "complete") out else s"$out/b$bid"
-          b.write.mode("overwrite").parquet(dir); ()
-        }
-        .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
-        .option("checkpointLocation", tmp + "/ckpt").start()
-      if (!q.awaitTermination(180000)) {
-        q.stop()
-        throw new IllegalStateException(
-          s"$tmpPrefix: stream exceeded its 180s budget — refusing partial output")
-      }
-    } finally s.conf.set("spark.sql.shuffle.partitions", prevParts)
-    // A stream that completed with zero batches (empty source) wrote no
-    // output directory — return an empty frame with the stream's schema
-    // rather than letting the read-back throw path-not-found.
-    val outPath = java.nio.file.Paths.get(out)
-    val hasOutput =
-      if (mode == "complete") java.nio.file.Files.exists(outPath)
-      else java.nio.file.Files.exists(outPath) && {
-        val ls = java.nio.file.Files.list(outPath)
-        try ls.anyMatch(p => p.getFileName.toString.startsWith("b"))
-        finally ls.close()
-      }
-    if (!hasOutput)
-      s.createDataFrame(s.sparkContext.emptyRDD[org.apache.spark.sql.Row], stream.schema)
-    else if (mode == "complete") s.read.parquet(out)
-    else s.read.parquet(out + "/b*")
-  }
-
-  /** TPC-H Q1 shape: scan-side filter, groupBy, decimal-exact aggregates. */
-  private def pricingSummary(s: SparkSession, dir: String): DataFrame = {
-    val li = Tables.lineitem(s, dir)
-    li.filter(col("l_shipdate") <= lit("1998-09-02").cast("timestamp"))
-      .groupBy(col("l_returnflag"), col("l_linestatus"))
-      .agg(
-        decSum(col("l_quantity")).as("sum_qty"),
-        decSum(col("l_extendedprice")).as("sum_base_price"),
-        sum(dec(col("l_extendedprice")) * (lit(1).cast("decimal(18,2)") - dec(col("l_discount")))).cast("double").as("sum_disc_price"),
-        count(lit(1)).as("count_order"))
-      .orderBy(col("l_returnflag"), col("l_linestatus"))
-  }
-
-  /** One per implemented operator from SURVEY.md §2. */
-  def queries: Map[String, (SparkSession, String) => DataFrame] = Map(
-    // §3.1 — the reference's one ad-hoc analytics query (runQueries.ts:45-49):
-    // count of rows in the "pending" status slice.
-    "q_count_filter" -> ((s, dir) =>
-      Tables.orders(s, dir)
-        .filter(col("o_orderstatus") === "P")
-        .agg(count(lit(1)).as("n"))),
-
-    // §2.A #16/#17 generalized: groupBy + exact decimal aggregates (Q1 shape).
-    "q1_agg" -> ((s, dir) => pricingSummary(s, dir)),
-
-    // §2.A #1 findUnique — point lookup by unique key, via the Model DSL.
-    "q_find_unique" -> ((s, dir) =>
-      TpchModels.customer(s, dir).findUnique("c_custkey", 42L)),
-
-    // §2.A #3 findFirst — filter → multi-key orderBy → first row.
-    "q_find_first" -> ((s, dir) =>
-      TpchModels.orders(s, dir).findFirst(QueryArgs(
-        where = Some(F.cmp("o_totalprice", CmpF(gt = Some(100000.0)))),
-        orderBy = Seq(OrderBy("o_orderdate"), OrderBy("o_orderkey"))))),
-
-    // §2.A #2 findUniqueOrThrow — BOTH legs of the P2025 contract as data:
-    // a present key returns its row, a missing key raises
-    // RecordNotFoundException whose code lands in `err`. The oracle is a
-    // probe-list left join deriving the same code from key absence.
-    "q_find_unique_throw" -> ((s, dir) => {
-      import s.implicits._
-      val m = TpchModels.customer(s, dir)
-      Seq(42L, 999999999L).map { k =>
-        try {
-          val r = m.findUniqueOrThrow("c_custkey", k)
-          (k, Option(r.getAs[String]("c_name")), None: Option[String])
-        } catch {
-          case e: graft.store.RecordNotFoundException => (k, None, Some(e.code))
-        }
-      }.toDF("key", "name", "err").orderBy("key")
-    }),
-
-    // §2.A #4 findFirstOrThrow — hit leg returns the first row under the
-    // declared order; miss leg (an unsatisfiable filter) surfaces P2025.
-    "q_find_first_throw" -> ((s, dir) => {
-      import s.implicits._
-      val m = TpchModels.orders(s, dir)
-      def probe(tag: String, minTotal: Double) =
-        try {
-          val r = m.findFirstOrThrow(QueryArgs(
-            where = Some(F.cmp("o_totalprice", CmpF(gt = Some(minTotal)))),
-            orderBy = Seq(OrderBy("o_totalprice", desc = true), OrderBy("o_orderkey"))))
-          (tag, Option(r.getAs[Long]("o_orderkey").toString), None: Option[String])
-        } catch {
-          case e: graft.store.RecordNotFoundException => (tag, None, Some(e.code))
-        }
-      Seq(probe("hit", 100000.0), probe("miss", 1.0e9))
-        .toDF("probe", "okey", "err").orderBy("probe")
-    }),
-
-    // §2.A #8 createManyAndReturn through the REAL store path: seed ids
-    // 1..50, bulk-insert ids 1..80 under skipDuplicates — the returned
-    // frame is exactly the actually-inserted rows (51..80), duplicates
-    // excluded, which the oracle derives by set difference.
-    "q_create_many_return" -> ((s, dir) => {
-      import org.apache.spark.sql.types._
-      val cat = new graft.store.Catalog(tempDir("graft-cmr-q"))
-      val t = new graft.store.GraftTable(s, cat, "cust", StructType(Seq(
-        StructField("id", LongType, nullable = false),
-        StructField("name", StringType, nullable = true),
-        StructField("seg", StringType, nullable = true))),
-        uniqueKeys = Seq(Seq("id")))
-      def cust(hi: Long) = Tables.customer(s, dir)
-        .filter(col("c_custkey") <= hi)
-        .select(col("c_custkey").as("id"), col("c_name").as("name"),
-          col("c_mktsegment").as("seg"))
-      t.createMany(cust(50))
-      t.createManyAndReturn(cust(80), skipDuplicates = true).orderBy("id")
-    }),
-
-    // §2.A #12 updateManyAndReturn through the REAL store path: flag the
-    // high-balance slice and return the post-update images, which the
-    // oracle reconstructs with a CASE over the same input slice.
-    "q_update_many_return" -> ((s, dir) => {
-      import org.apache.spark.sql.types._
-      val cat = new graft.store.Catalog(tempDir("graft-umr-q"))
-      val t = new graft.store.GraftTable(s, cat, "cust", StructType(Seq(
-        StructField("id", LongType, nullable = false),
-        StructField("name", StringType, nullable = true),
-        StructField("acctbal", DoubleType, nullable = true),
-        StructField("seg", StringType, nullable = true))),
-        uniqueKeys = Seq(Seq("id")))
-      t.createMany(Tables.customer(s, dir).filter(col("c_custkey") <= 200)
-        .select(col("c_custkey").as("id"), col("c_name").as("name"),
-          col("c_acctbal").as("acctbal"), col("c_mktsegment").as("seg")))
-      t.updateManyAndReturn(
-        F.cmp("acctbal", CmpF(gt = Some(5000.0))),
-        Map("seg" -> lit("FLAGGED")))
-        .select(col("id"), col("name"), col("acctbal").cast("double").as("acctbal"),
-          col("seg"))
-        .orderBy("id")
-    }),
-
-    // §2.A #5 findMany — filter + orderBy + skip/take (offset pagination).
-    "q_find_many_page" -> ((s, dir) =>
-      TpchModels.customer(s, dir).findMany(QueryArgs(
-        where = Some(F.str("c_mktsegment", StringF(equals = Some(Some("BUILDING"))))),
-        orderBy = Seq(OrderBy("c_acctbal", desc = true), OrderBy("c_custkey")),
-        skip = Some(10), take = Some(20)))),
-
-    // §2.B StringFilter: contains + endsWith + mode insensitive.
-    "q_str_filters" -> ((s, dir) =>
-      TpchModels.part(s, dir).findMany(QueryArgs(
-        where = Some(And(Seq(
-          F.str("p_type", StringF(endsWith = Some("DARD"))),
-          F.str("p_name", StringF(contains = Some("RED"), insensitive = true))))),
-        orderBy = Seq(OrderBy("p_partkey")),
-        select = Seq("p_partkey", "p_name", "p_type")))),
-
-    // §2.B in / notIn list predicates.
-    "q_in_notin" -> ((s, dir) =>
-      TpchModels.part(s, dir).findMany(QueryArgs(
-        where = Some(And(Seq(
-          F.str("p_brand", StringF(in = Some(Seq("Brand#11", "Brand#22", "Brand#33")))),
-          F.cmp("p_size", CmpF(notIn = Some(Seq(1, 2, 3))))))),
-        orderBy = Seq(OrderBy("p_partkey")),
-        select = Seq("p_partkey", "p_brand", "p_size")))),
-
-    // §2.C nulls first/last — Prisma's `nulls: first|last` through the
-    // real OrderBy compilation, made OBSERVABLE via LIMIT: the driver
-    // hash-compare sorts rows before hashing, so ordering is only
-    // testable through which rows the order SELECTS. nulls-first top-10
-    // must be null rows; nulls-last top-10 the highest non-null prices.
-    "q_order_nulls" -> ((s, dir) => {
-      val base = Tables.orders(s, dir).filter(col("o_orderkey") <= 200L)
-        .select(col("o_orderkey"),
-          when(col("o_orderstatus") === "P", lit(null).cast("double"))
-            .otherwise(col("o_totalprice")).as("price"))
-      def top(tag: String, nf: Boolean) = base
-        .orderBy(OrderBy("price", desc = true, nullsFirst = Some(nf)).column,
-          OrderBy("o_orderkey").column)
-        .limit(10).withColumn("probe", lit(tag))
-      top("first", nf = true).unionByName(top("last", nf = false))
-        .select(col("probe"), col("o_orderkey"), col("price"))
-        .orderBy(col("probe"), col("o_orderkey"))
-    }),
-
-    // §2.B BoolNullableFilter — the TRI-STATE contract gated directly:
-    // a derived nullable boolean (view events → NULL) probed through the
-    // real BoolF algebra all five ways. equals:Some(v) is null-dropping
-    // (SQL three-valued =), equals:None is IS NULL, not:Some(v) keeps
-    // only the opposite NON-NULL value, not:None is IS NOT NULL — the
-    // oracle mirrors each with the equivalent CASE/count.
-    "q_bool_tristate" -> ((s, dir) => {
-      val flag = when(col("event_type") === "view",
-        lit(null).cast("boolean")).otherwise(col("value") > 100.0)
-      val ev = Tables.events(s, dir).select(flag.as("flag"))
-      def n(f: BoolF) = sum(when(f(col("flag")), 1L).otherwise(0L))
-      ev.agg(
-        n(BoolF(equals = Some(Some(true)))).as("eq_true"),
-        n(BoolF(equals = Some(Some(false)))).as("eq_false"),
-        n(BoolF(equals = Some(None))).as("eq_null"),
-        n(BoolF(not = Some(Some(true)))).as("not_true"),
-        n(BoolF(not = Some(None))).as("not_null"))
-    }),
-
-    // §2.B Enum filter — the status-enum algebra (JobStatus/`o_orderstatus`
-    // as the enum domain) through the real EnumF: in + not compose as AND,
-    // mirrored by the oracle's IN / <> predicates.
-    "q_enum_filter" -> ((s, dir) =>
-      TpchModels.orders(s, dir).findMany(QueryArgs(
-        where = Some(And(Seq(
-          F.enum_("o_orderstatus", EnumF(in = Some(Seq("F", "P")), not = Some("F"))),
-          F.cmp("o_orderkey", CmpF(lte = Some(500L)))))),
-        orderBy = Seq(OrderBy("o_orderkey")),
-        select = Seq("o_orderkey", "o_orderstatus")))),
-
-    // §2.B DateTimeFilter range + numeric range, AND/OR connectors.
-    "q_range_connectors" -> ((s, dir) =>
-      TpchModels.orders(s, dir).findMany(QueryArgs(
-        where = Some(And(Seq(
-          F.cmp("o_orderdate", CmpF(
-            gte = Some(java.sql.Timestamp.valueOf("1996-01-01 00:00:00")),
-            lt = Some(java.sql.Timestamp.valueOf("1996-07-01 00:00:00")))),
-          Or(Seq(
-            F.cmp("o_totalprice", CmpF(gt = Some(350000.0))),
-            F.str("o_orderpriority", StringF(equals = Some(Some("1-URGENT"))))))))),
-        orderBy = Seq(OrderBy("o_orderkey")),
-        select = Seq("o_orderkey", "o_orderdate", "o_totalprice", "o_orderpriority")))),
-
-    // §2.B JsonNullableFilter: JSON path + numeric compare on events.props.
-    "q_json_filter" -> ((s, dir) => {
-      val m = new Model(() => Tables.events(s, dir), "event_id")
-      m.findMany(QueryArgs(
-        where = Some(F.json("props", JsonF(path = Seq("k"), gte = Some(95)))),
-        orderBy = Seq(OrderBy("event_id")),
-        select = Seq("event_id", "event_type", "props")))
-    }),
-
-    // §2.B JSON via Spark 4 VariantType: parse once, extract typed — the
-    // modern path for the reference's JSONB metadata (schema.prisma:95).
-    "q_json_variant" -> ((s, dir) =>
-      Tables.events(s, dir)
-        .withColumn("v", parse_json(col("props")))
-        .filter(try_variant_get(col("v"), "$.k", "double") >= 95.0)
-        .select(col("event_id"),
-          try_variant_get(col("v"), "$.k", "long").as("k"))
-        .orderBy(col("event_id"))),
-
-    // §2.C negative take (models/Company.ts:130-136): the LAST 5 orders of
-    // the low-key customers w.r.t. the sort, returned in the declared order.
-    "q_take_last" -> ((s, dir) =>
-      TpchModels.orders(s, dir).findMany(QueryArgs(
-        where = Some(F.cmp("o_custkey", CmpF(lte = Some(20L)))),
-        orderBy = Seq(OrderBy("o_orderdate"), OrderBy("o_orderkey")),
-        take = Some(-5),
-        select = Seq("o_orderkey", "o_custkey", "o_orderdate")))),
-
-    // §2.B JsonNullableFilter completeness — array_starts_with /
-    // array_ends_with + insensitive string mode. The corpus props are flat
-    // {"k": N}, so a richer JSON doc (arrays, JSON nulls, DB nulls) is
-    // derived deterministically from k with IDENTICAL text in both engines.
-    "q_json_array" -> ((s, dir) => {
-      // cheap scan-pushed filter FIRST, JSON parsing on the survivors only
-      val df = Tables.events(s, dir)
-        .filter(col("event_type") === "click").withColumn("doc", jsonDoc)
-      val m = new Model(() => df, "event_id")
-      m.findMany(QueryArgs(
-        where = Some(And(Seq(
-          F.json("doc", JsonF(path = Seq("tags"), arrayStartsWith = Some("t1"))),
-          F.json("doc", JsonF(path = Seq("tags"), arrayEndsWith = Some("e2"))),
-          F.json("doc", JsonF(path = Seq("name"), stringStartsWith = Some("ALPHA"),
-            insensitive = true))))),
-        orderBy = Seq(OrderBy("event_id")),
-        select = Seq("event_id")))
-    }),
-
-    // §2.B DbNull vs JsonNull distinction (commonInputTypes.ts:126-148):
-    // classify rows by which null they carry — isDbNull sees the SQL NULL
-    // column, isJsonNull sees the JSON `null` at the path (variant-typed
-    // extraction; get_json_object alone cannot tell it from a missing key).
-    "q_json_nulls" -> ((s, dir) => {
-      // one barrier-pinned parse serves the filter AND the classifier
-      // projection (four JsonF compilations would otherwise each re-parse)
-      val df = Tables.events(s, dir)
-        .filter(col("event_type") === "click").withColumn("doc", jsonDoc)
-        .withColumn("__jv", graft.functions.Barrier.evalOnce(try_parse_json(col("doc"))))
-      val jn = JsonF(path = Seq("tags"), isJsonNull = Some(true))
-        .applyVariant(col("doc"), col("__jv"))
-      val dbn = JsonF(isDbNull = Some(true)).applyVariant(col("doc"), col("__jv"))
-      df.filter(coalesce(jn, lit(false)) || coalesce(dbn, lit(false)))
-        .select(col("event_id"),
-          when(coalesce(jn, lit(false)), lit("json_null"))
-            .otherwise(lit("db_null")).as("kind"))
-        .orderBy(col("event_id"))
-    }),
-
-    // §2.B JsonF recursive `not` (commonInputTypes.ts:147) with SQL
-    // three-valued logic: a missing doc, a JSON-null name, or a name not
-    // matching the inner predicate — only the LAST kind survives (NULL
-    // matches neither a filter nor its negation, like the JSONB-backed SQL).
-    "q_json_not" -> ((s, dir) => {
-      val df = Tables.events(s, dir)
-        .filter(col("event_type") === "click").withColumn("doc", jsonDoc)
-      val m = new Model(() => df, "event_id")
-      m.findMany(QueryArgs(
-        where = Some(F.json("doc", JsonF(path = Seq("name"),
-          not = Some(JsonF(stringStartsWith = Some("Alpha1")))))),
-        orderBy = Seq(OrderBy("event_id")),
-        select = Seq("event_id")))
-    }),
-
-    // §2.B JsonF `equals: InputJsonValue` on an ARRAY value
-    // (commonInputTypes.ts:133): structural equality via the variant
-    // canonical form — both engines minify, so whitespace differences in
-    // the source text don't matter.
-    "q_json_eq_obj" -> ((s, dir) => {
-      val df = Tables.events(s, dir)
-        .filter(col("event_type") === "click").withColumn("doc", jsonDoc)
-      val m = new Model(() => df, "event_id")
-      m.findMany(QueryArgs(
-        where = Some(F.json("doc", JsonF(path = Seq("tags"),
-          equalsJson = Some("""["t1", "mid", "e2"]""")))),
-        orderBy = Seq(OrderBy("event_id")),
-        select = Seq("event_id")))
-    }),
-
-    // §2.A #16 aggregate pre-args (effect.ts:552-558): where → orderBy →
-    // take page FIRST, aggregates over the page.
-    "q_aggregate_take" -> ((s, dir) =>
-      TpchModels.orders(s, dir).aggregate(
-        AggSpec(countAll = true, min = Seq("o_totalprice"), max = Seq("o_totalprice")),
-        QueryArgs(
-          where = Some(F.str("o_orderstatus", StringF(equals = Some(Some("O"))))),
-          orderBy = Seq(OrderBy("o_totalprice", desc = true), OrderBy("o_orderkey")),
-          skip = Some(10), take = Some(100)))),
-
-    // §2.A #17 typed having tree (CompanyScalarWhereWithAggregatesInput,
-    // models/Company.ts:278-292): count/max aggregates + a group-key leaf,
-    // composed under AND; the count aggregate is NOT in the selection
-    // (computed hidden, dropped after the filter).
-    "q_group_having_typed" -> ((s, dir) =>
-      TpchModels.orders(s, dir).groupBy(
-        by = Seq("o_custkey"),
-        spec = AggSpec(countAll = true),
-        havingTyped = Some(HAnd(Seq(
-          HAgg("o_orderkey", "count", CmpF(gte = Some(12L))),
-          HAgg("o_totalprice", "max", CmpF(lt = Some(450000.0))),
-          HAgg("o_custkey", "key", CmpF(lte = Some(1400L)))))),
-        orderBy = Seq(OrderBy("o_custkey")))),
-
-    // §2.A #10 nested writes under update (`update({where, data, relation:
-    // {create}}}`, syncCrm.ts:156-163) through the REAL store: create the
-    // parent batch, updateNested flips a status and derives audit children
-    // from the POST-UPDATE matched slice, snapshot read-back proves what
-    // was published. Deterministic → fully oracle-checkable.
-    "q_update_nested" -> ((s, dir) => {
-      import org.apache.spark.sql.types._
-      val cat = new graft.store.Catalog(
-        tempDir("graft-upd-nested-q"))
-      val clientT = new graft.store.GraftTable(s, cat, "client", StructType(Seq(
-        StructField("id", LongType, nullable = false),
-        StructField("name", StringType, nullable = true),
-        StructField("status", StringType, nullable = false),
-        StructField("segment", StringType, nullable = true))),
-        uniqueKeys = Seq(Seq("id")))
-      val auditT = new graft.store.GraftTable(s, cat, "client_audit", StructType(Seq(
-        StructField("audit_id", StringType, nullable = false),
-        StructField("parent_id", LongType, nullable = false),
-        StructField("seg", StringType, nullable = true))),
-        uniqueKeys = Seq(Seq("audit_id")))
-      clientT.onDeleteRestrict(auditT, "parent_id", "id")
-      clientT.createMany(Tables.customer(s, dir).filter(col("c_custkey") <= 60)
-        .select(col("c_custkey").as("id"), col("c_name").as("name"),
-          lit("new").as("status"), col("c_mktsegment").as("segment")))
-      graft.store.Txn.run(cat) { tx =>
-        tx.updateNested(clientT,
-          F.cmp("id", CmpF(lte = Some(30L)))
-            .and(F.str("status", StringF(equals = Some(Some("new"))))),
-          Map("status" -> lit("synced")),
-          Seq(graft.store.NestedCreate(auditT, b => b.select(
-            concat(lit("au-"), col("id").cast("string")).as("audit_id"),
-            col("id").as("parent_id"),
-            col("segment").as("seg")))))
-        ()
-      }
-      clientT.snapshot()
-        .join(auditT.snapshot(), col("id") === col("parent_id"), "left")
-        .select(col("id"), col("name"), col("status"), col("audit_id"), col("seg"))
-        .orderBy(col("id"))
-    }),
-
-    // §2.B relation some — EXISTS semi-join shape.
-    "q_rel_some" -> ((s, dir) =>
-      TpchModels.customer(s, dir).findMany(QueryArgs(
-        where = Some(RelSome("orders", F.cmp("o_totalprice", CmpF(gt = Some(400000.0))))),
-        orderBy = Seq(OrderBy("c_custkey")),
-        select = Seq("c_custkey", "c_name")))),
-
-    // §2.B relation none — NOT EXISTS anti-join (never-synced shape,
-    // runner/syncCrm.ts:62).
-    "q_rel_none" -> ((s, dir) =>
-      TpchModels.customer(s, dir).findMany(QueryArgs(
-        where = Some(RelNone("orders", F.str("o_orderstatus", StringF(equals = Some(Some("F")))))),
-        orderBy = Seq(OrderBy("c_custkey")),
-        select = Seq("c_custkey", "c_name")))),
-
-    // §2.B relation every — no violating related row (vacuously true).
-    "q_rel_every" -> ((s, dir) =>
-      TpchModels.orders(s, dir).findMany(QueryArgs(
-        where = Some(And(Seq(
-          F.cmp("o_orderdate", CmpF(gte = Some(java.sql.Timestamp.valueOf("1998-01-01 00:00:00")))),
-          RelEvery("lineitems", F.cmp("l_quantity", CmpF(lte = Some(45.0))))))),
-        orderBy = Seq(OrderBy("o_orderkey")),
-        select = Seq("o_orderkey", "o_orderdate")))),
-
-    // §2.C distinct-on-fields w.r.t. order: latest order per customer.
-    "q_distinct_on" -> ((s, dir) =>
-      TpchModels.orders(s, dir).findMany(QueryArgs(
-        distinct = Seq("o_custkey"),
-        orderBy = Seq(OrderBy("o_orderdate", desc = true), OrderBy("o_orderkey")),
-        select = Seq("o_orderkey", "o_custkey", "o_orderdate")))),
-
-    // §2.C cursor keyset pagination (exclusive via skip=1, Prisma idiom).
-    "q_cursor_page" -> ((s, dir) =>
-      TpchModels.customer(s, dir).findMany(QueryArgs(
-        orderBy = Seq(OrderBy("c_acctbal", desc = true), OrderBy("c_custkey")),
-        cursor = Some(("c_custkey", 100L)), skip = Some(1), take = Some(20),
-        select = Seq("c_custkey", "c_name", "c_acctbal")))),
-
-    // §2.C order-by-relation-count (models/Company.ts:438-440).
-    "q_order_by_rel_count" -> ((s, dir) =>
-      TpchModels.customer(s, dir)
-        .orderByRelationCount("orders", desc = true, take = Some(25))
-        .select(col("c_custkey"), col("c_name"))),
-
-    // §2.A #16 aggregate: _count/_min/_max (exact, no FP aggregation).
-    "q_aggregate" -> ((s, dir) =>
-      TpchModels.orders(s, dir).aggregate(
-        AggSpec(countAll = true, count = Seq("o_custkey"),
-          min = Seq("o_orderdate", "o_totalprice"),
-          max = Seq("o_orderdate", "o_totalprice")),
-        where = Some(F.str("o_orderstatus", StringF(equals = Some(Some("O"))))))),
-
-    // §2.A #17 groupBy + having + orderBy incl. aggregate column.
-    "q_group_having" -> ((s, dir) =>
-      TpchModels.orders(s, dir).groupBy(
-        by = Seq("o_custkey"),
-        spec = AggSpec(countAll = true, max = Seq("o_totalprice")),
-        having = Some(col("_count_all") >= 10),
-        orderBy = Seq(OrderBy("_count_all", desc = true), OrderBy("o_custkey")),
-        take = Some(50))
-        .withColumn("_max_o_totalprice", dec(col("_max_o_totalprice")).cast("double"))),
-
-    // §2.D 1-N include projected to _count (hydration, runner/syncCrm.ts:64-68).
-    "q_include_count" -> ((s, dir) =>
-      TpchModels.customer(s, dir).findMany(QueryArgs(
-        include = Seq("orders"),
-        select = Seq("c_custkey", "_count_orders")))
-        .withColumn("_count_orders", col("_count_orders").cast("long"))
-        .orderBy(col("c_custkey"))),
-
-    // §2.C filtered include + nested select (models/Company.ts:708-770):
-    // customers hydrated with ONLY their top-3 most recent high-value
-    // orders (per-relation where + orderBy + take + select), `_count`
-    // reporting the pre-take match count; flattened for the oracle.
-    "q_include_filtered" -> ((s, dir) =>
-      TpchModels.customer(s, dir).findMany(QueryArgs(
-        includeArgs = Seq(IncludeArgs("orders",
-          where = Some(F.raw(col("o_totalprice") > 100000.0)),
-          orderBy = Seq(OrderBy("o_orderdate", desc = true),
-            OrderBy("o_orderkey", desc = true)),
-          take = Some(3),
-          select = Seq("o_orderkey", "o_totalprice", "o_orderdate"))),
-        select = Seq("c_custkey", "orders", "_count_orders")))
-        .select(col("c_custkey"), col("_count_orders").cast("long").as("n_highvalue"),
-          posexplode(col("orders")))
-        .select(col("c_custkey"), col("n_highvalue"),
-          (col("pos") + 1).cast("long").as("ord_rank"),
-          col("col.o_orderkey").as("o_orderkey"),
-          col("col.o_totalprice").as("o_totalprice"),
-          col("col.o_orderdate").as("o_orderdate"))
-        .orderBy(col("c_custkey"), col("ord_rank"))),
-
-    // §2.D left join + per-key aggregate over the joined side.
-    "q_join_left_count" -> ((s, dir) => {
-      val c = Tables.customer(s, dir)
-      val o = Tables.orders(s, dir)
-      c.join(o, c("c_custkey") === o("o_custkey"), "left")
-        .groupBy(col("c_custkey"))
-        .agg(count(col("o_orderkey")).as("n_orders"),
-             decSum(col("o_totalprice")).as("total_spent"))
-        .orderBy(col("c_custkey"))
-    }),
-
-    // §2.D anti-join on the raw DataFrame surface: customers with no
-    // high-value order (NOT EXISTS with a pushed-down filter on the right).
-    "q_join_anti" -> ((s, dir) => {
-      val c = Tables.customer(s, dir)
-      val o = Tables.orders(s, dir)
-        .filter(col("o_totalprice") > 300000.0)
-        .select(col("o_custkey"))
-      c.join(o, c("c_custkey") === o("o_custkey"), "left_anti")
-        .select(col("c_custkey"), col("c_name"), col("c_mktsegment"))
-        .orderBy(col("c_custkey"))
-    }),
-
-    // §2.D M-N two-hop join (part↔supplier through lineitem), aggregated.
-    "q_join_mn" -> ((s, dir) => {
-      val li = Tables.lineitem(s, dir).select(col("l_partkey"), col("l_suppkey"))
-      val sup = Tables.supplier(s, dir)
-      li.join(sup, li("l_suppkey") === sup("s_suppkey"))
-        .groupBy(col("l_partkey"))
-        .agg(countDistinct(col("s_suppkey")).as("n_suppliers"))
-        .filter(col("n_suppliers") >= 4)
-        .orderBy(col("l_partkey"))
-    }),
-
-    // Analytical multi-join shape (TPC-H Q3): segment + date filters on
-    // both sides of a 3-way join, revenue per order, top 10.
-    "q_revenue_top" -> ((s, dir) => {
-      val c = Tables.customer(s, dir).filter(col("c_mktsegment") === "BUILDING")
-      val o = Tables.orders(s, dir)
-        .filter(col("o_orderdate") < lit("1995-03-15").cast("timestamp"))
-      val l = Tables.lineitem(s, dir)
-        .filter(col("l_shipdate") > lit("1995-03-15").cast("timestamp"))
-      c.join(o, c("c_custkey") === o("o_custkey"))
-        .join(l, o("o_orderkey") === l("l_orderkey"))
-        .groupBy(col("o_orderkey"), col("o_orderdate"))
-        .agg(sum(dec(col("l_extendedprice")) * (lit(1).cast("decimal(18,2)") - dec(col("l_discount"))))
-          .cast("double").as("revenue"))
-        .orderBy(col("revenue").desc, col("o_orderkey"))
-        .limit(10)
-    }),
-
-    // Analytical snowflake shape (TPC-H Q5): region → nation → customer →
-    // orders → lineitem, revenue per nation.
-    "q_revenue_nation" -> ((s, dir) => {
-      val r = Tables.region(s, dir).filter(col("r_name") === "ASIA")
-      val n = Tables.nation(s, dir)
-      val c = Tables.customer(s, dir)
-      val o = Tables.orders(s, dir)
-      val l = Tables.lineitem(s, dir)
-      r.join(n, r("r_regionkey") === n("n_regionkey"))
-        .join(c, n("n_nationkey") === c("c_nationkey"))
-        .join(o, c("c_custkey") === o("o_custkey"))
-        .join(l, o("o_orderkey") === l("l_orderkey"))
-        .groupBy(col("n_name"))
-        .agg(sum(dec(col("l_extendedprice")) * (lit(1).cast("decimal(18,2)") - dec(col("l_discount"))))
-          .cast("double").as("revenue"))
-        .orderBy(col("revenue").desc, col("n_name"))
-    }),
-
-    // Event sessionization as window functions: 30-minute-gap sessions per
-    // user (the batch-SQL mirror of streaming.Streaming.sessionize).
-    "q_sessions" -> ((s, dir) => {
-      val w = org.apache.spark.sql.expressions.Window
-        .partitionBy(col("user_id")).orderBy(col("ts"), col("event_id"))
-      Tables.events(s, dir)
-        .withColumn("prev_ts", lag(col("ts"), 1).over(w))
-        .withColumn("new_session",
-          when(col("prev_ts").isNull ||
-            unix_timestamp(col("ts")) - unix_timestamp(col("prev_ts")) > 1800, 1)
-            .otherwise(0))
-        .groupBy(col("user_id"))
-        .agg(sum(col("new_session")).as("n_sessions"), count(lit(1)).as("n_events"))
-        .orderBy(col("user_id"))
-    }),
-
-    // Correlated scalar subquery (Catalyst decorrelates it into an
-    // aggregate + join, SURVEY §4.2): orders 2x above their customer's
-    // average spend.
-    "q_above_avg" -> ((s, dir) => {
-      Tables.registerViews(s, dir)
-      // price > 2*avg expressed as price*count > 2*sum in DECIMAL — the
-      // avg-of-doubles form drifts between engines at the boundary
-      s.sql("""
-        SELECT o_orderkey, o_custkey, o_totalprice FROM orders o
-        WHERE CAST(o_totalprice AS DECIMAL(18,2))
-                * (SELECT count(*) FROM orders o2 WHERE o2.o_custkey = o.o_custkey)
-              > 2 * (SELECT sum(CAST(o2.o_totalprice AS DECIMAL(18,2)))
-                     FROM orders o2 WHERE o2.o_custkey = o.o_custkey)
-        ORDER BY o_orderkey""")
-    }),
-
-    // Event funnel: users progressing view -> signup -> purchase in
-    // event-time order (conditional min-timestamps + ordering predicate).
-    "q_funnel" -> ((s, dir) =>
-      Tables.events(s, dir)
-        .groupBy(col("user_id"))
-        .agg(
-          min(when(col("event_type") === "view", col("ts"))).as("t_view"),
-          min(when(col("event_type") === "signup", col("ts"))).as("t_signup"),
-          min(when(col("event_type") === "purchase", col("ts"))).as("t_purchase"))
-        .filter(col("t_view") < col("t_signup") && col("t_signup") < col("t_purchase"))
-        .select(col("user_id"), col("t_view"), col("t_signup"), col("t_purchase"))
-        .orderBy(col("user_id"))),
-
-    // Latest event per user (argmax via first-row-per-key window).
-    "q_latest_event" -> ((s, dir) => {
-      val w = org.apache.spark.sql.expressions.Window
-        .partitionBy(col("user_id"))
-        .orderBy(col("ts").desc, col("event_id").desc)
-      Tables.events(s, dir)
-        .withColumn("rn", row_number().over(w))
-        .filter(col("rn") === 1)
-        .select(col("user_id"), col("event_id"), col("event_type"), col("value"))
-        .orderBy(col("user_id"))
-    }),
-
-    // Set operators: EXCEPT/INTERSECT over key sets.
-    "q_set_ops" -> ((s, dir) => {
-      val building = Tables.customer(s, dir)
-        .filter(col("c_mktsegment") === "BUILDING").select(col("c_custkey"))
-      val bigSpenders = Tables.orders(s, dir)
-        .filter(col("o_totalprice") > 400000.0)
-        .select(col("o_custkey").as("c_custkey")).distinct()
-      building.except(bigSpenders)
-        .withColumn("src", lit("building_only"))
-        .unionByName(building.intersect(bigSpenders).withColumn("src", lit("both")))
-        .orderBy(col("src"), col("c_custkey"))
-    }),
-
-    // Pivot-shaped conditional aggregation: quantity by returnflag across
-    // linestatus columns (the portable form of PIVOT).
-    "q_pivot" -> ((s, dir) =>
-      Tables.lineitem(s, dir)
-        .groupBy(col("l_returnflag"))
-        .agg(
-          sum(when(col("l_linestatus") === "O", dec(col("l_quantity")))).cast("double").as("qty_o"),
-          sum(when(col("l_linestatus") === "F", dec(col("l_quantity")))).cast("double").as("qty_f"))
-        .orderBy(col("l_returnflag"))),
-
-    // Ranking window: suppliers dense-ranked by revenue within nation.
-    "q_supplier_rank" -> ((s, dir) => {
-      val li = Tables.lineitem(s, dir)
-      val sup = Tables.supplier(s, dir)
-      val rev = li.join(sup, li("l_suppkey") === sup("s_suppkey"))
-        .groupBy(col("s_nationkey"), col("s_suppkey"))
-        .agg(decSum(col("l_extendedprice")).as("revenue"))
-      val w = org.apache.spark.sql.expressions.Window
-        .partitionBy(col("s_nationkey"))
-        .orderBy(col("revenue").desc, col("s_suppkey"))
-      rev.withColumn("rnk", dense_rank().over(w).cast("long"))
-        .filter(col("rnk") <= 3)
-        .select(col("s_nationkey"), col("s_suppkey"), col("revenue"), col("rnk"))
-        .orderBy(col("s_nationkey"), col("rnk"), col("s_suppkey"))
-    }),
-
-    // Distribution buckets: order-total deciles. Exact NTILE semantics via
-    // the two-pass distributed ranking operator — no single-partition
-    // window (Ranking.ntileExact range-partitions, ranks per partition,
-    // offsets by preceding-partition counts).
-    "q_deciles" -> ((s, dir) => {
-      operators.Ranking.ntileExact(Tables.orders(s, dir), 10, "decile",
-          Seq(col("o_totalprice"), col("o_orderkey")))
-        .groupBy(col("decile"))
-        .agg(count(lit(1)).as("n"),
-          min(col("o_totalprice")).as("lo"),
-          max(col("o_totalprice")).as("hi"))
-        .orderBy(col("decile"))
-    }),
-
-    // Multi-dimensional aggregate: ROLLUP over (returnflag, linestatus)
-    // with subtotal and grand-total rows.
-    "q_rollup" -> ((s, dir) =>
-      Tables.lineitem(s, dir)
-        .rollup(col("l_returnflag"), col("l_linestatus"))
-        .agg(count(lit(1)).as("n"), decSum(col("l_quantity")).as("qty"))
-        .orderBy(col("l_returnflag").asc_nulls_first,
-          col("l_linestatus").asc_nulls_first)),
-
-    // Exact median per group (linear-interpolated 0.5-quantile; inputs are
-    // small exact doubles, so the midpoint arithmetic is bit-identical in
-    // both engines).
-    "q_median" -> ((s, dir) =>
-      Tables.lineitem(s, dir)
-        .groupBy(col("l_returnflag"))
-        .agg(median(col("l_quantity")).as("med_qty"),
-          median(col("l_discount")).as("med_disc"))
-        .orderBy(col("l_returnflag"))),
-
-    // CUBE: every grouping-set combination incl. both subtotals and the
-    // grand total (the rollup's bigger sibling — all 2^k sets).
-    "q_cube" -> ((s, dir) =>
-      Tables.lineitem(s, dir)
-        .cube(col("l_returnflag"), col("l_linestatus"))
-        .agg(count(lit(1)).as("n"), decSum(col("l_quantity")).as("qty"))
-        .orderBy(col("l_returnflag").asc_nulls_first,
-          col("l_linestatus").asc_nulls_first)),
-
-    // RANGE-frame window: per-customer trailing-30-day spend at each order
-    // (value-based frame over epoch seconds, not a row count — the frame
-    // width varies with order density).
-    "q_range_frame" -> ((s, dir) => {
-      val w = org.apache.spark.sql.expressions.Window
-        .partitionBy(col("o_custkey"))
-        .orderBy(unix_timestamp(col("o_orderdate")))
-        .rangeBetween(-2592000L, 0L) // 30 days in seconds
-      Tables.orders(s, dir)
-        .filter(col("o_custkey") <= 100)
-        .select(col("o_custkey"), col("o_orderkey"),
-          sum(dec(col("o_totalprice"))).over(w).cast("double").as("spend_30d"))
-        .orderBy(col("o_custkey"), col("o_orderkey"))
-    }),
-
-    // §2.A #18 raw SQL passthrough (the $queryRaw surface): registered
-    // temp views + spark.sql.
-    "q_raw_sql" -> ((s, dir) => {
-      Tables.registerViews(s, dir)
-      s.sql("""
-        SELECT n.n_name, count(*) AS n_orders
-        FROM customer c
-        JOIN nation n ON c.c_nationkey = n.n_nationkey
-        JOIN orders o ON o.o_custkey = c.c_custkey
-        GROUP BY n.n_name
-        ORDER BY n_orders DESC, n_name ASC""")
-    }),
-
-    // The SQL-function surface end-to-end: the codegen'd Tokenize kernel
-    // registered into the session registry (graftbridge
-    // FunctionRegistration — what GraftExtensions injects at session
-    // build) and driven through spark.sql TEXT, not the Column API. The
-    // oracle mirrors the kernel's [letter/digit]+ runs on this ASCII
-    // corpus with the same regexp split every other tokenizing oracle
-    // uses.
-    "q_raw_fn" -> ((s, dir) => {
-      Tables.registerViews(s, dir)
-      org.apache.spark.sql.graftbridge.FunctionRegistration.register(
-        s, "graft_tokenize",
-        exprs => graft.functions.SketchExpressions.Tokenize(exprs.head))
-      s.sql("""
-        SELECT doc_id,
-               size(graft_tokenize(lower(trim(text)))) AS n_tokens,
-               try_element_at(graft_tokenize(lower(trim(text))), 1) AS first_tok
-        FROM documents WHERE doc_id < 200
-        ORDER BY doc_id""")
-    }),
-
-    // §2.A #18 write side — the $executeRaw surface
-    // (internal/class.ts:118-153): raw SQL INSERT / UPDATE / DELETE text
-    // parsed by Spark's own parser and routed into the COW store's
-    // staged statement surface, batched in ONE atomic transaction. The
-    // read-back goes through the store snapshot; the oracle is the
-    // declaratively-equivalent single SELECT (DuckDB runs one statement
-    // per gate) over the same input slice.
-    "q_exec_raw" -> ((s, dir) => {
-      import org.apache.spark.sql.types._
-      Tables.registerViews(s, dir)
-      val cat = new graft.store.Catalog(
-        tempDir("graft-execraw-q"))
-      val acct = new graft.store.GraftTable(s, cat, "acct", StructType(Seq(
-        StructField("custkey", LongType, nullable = false),
-        StructField("name", StringType, nullable = true),
-        StructField("segment", StringType, nullable = true),
-        StructField("bal", DoubleType, nullable = true))),
-        uniqueKeys = Seq(Seq("custkey")))
-      graft.store.ExecuteRaw.executeMany(s, Map("acct" -> acct), Seq(
-        """INSERT INTO acct
-           SELECT c_custkey, c_name, c_mktsegment, c_acctbal
-           FROM customer WHERE c_custkey <= 500""",
-        "UPDATE acct SET bal = bal * 1.1, segment = 'VIP' WHERE bal > 5000",
-        "DELETE FROM acct WHERE bal < 0"))
-      acct.snapshot()
-        .select(col("custkey"), col("name"), col("segment"), col("bal"))
-        .orderBy(col("custkey"))
-    }),
-
-    // §2.A #19 × #18 — `$transaction([$executeRaw…])` ATOMICITY, oracle-
-    // proven (effect.ts:369-396 + :398-428): a batch whose SECOND
-    // statement violates a unique key must publish NOTHING — including
-    // its first statement's `UPDATE … SET bal = 0`, which would
-    // otherwise zero every balance and empty the final snapshot through
-    // the later DELETE. The oracle replays only the seed and the
-    // successful batch; any leak from the rolled-back batch is a hash
-    // mismatch.
-    "q_exec_raw_txn" -> ((s, dir) => {
-      import org.apache.spark.sql.types._
-      Tables.registerViews(s, dir)
-      val cat = new graft.store.Catalog(tempDir("graft-execraw-txn"))
-      val acct = new graft.store.GraftTable(s, cat, "acct", StructType(Seq(
-        StructField("custkey", LongType, nullable = false),
-        StructField("name", StringType, nullable = true),
-        StructField("segment", StringType, nullable = true),
-        StructField("bal", DoubleType, nullable = true))),
-        uniqueKeys = Seq(Seq("custkey")))
-      val tabs = Map("acct" -> acct)
-      graft.store.ExecuteRaw.execute(s, tabs,
-        """INSERT INTO acct
-           SELECT c_custkey, c_name, c_mktsegment, c_acctbal
-           FROM customer WHERE c_custkey <= 300""")
-      val failed = scala.util.Try(graft.store.ExecuteRaw.executeMany(s, tabs, Seq(
-        "UPDATE acct SET bal = 0",
-        "INSERT INTO acct VALUES (1, 'dup', 'X', 1.0)")))
-      require(failed.isFailure,
-        "q_exec_raw_txn: the duplicate-key batch must abort")
-      graft.store.ExecuteRaw.executeMany(s, tabs, Seq(
-        "UPDATE acct SET bal = bal + 100 WHERE segment = 'BUILDING'",
-        "DELETE FROM acct WHERE bal < 500"))
-      acct.snapshot()
-        .select(col("custkey"), col("name"), col("segment"), col("bal"))
-        .orderBy(col("custkey"))
-    }),
-
-    // §2.A #18 — MERGE INTO through $executeRaw (the full DML triangle:
-    // effect.ts:398-428 accepts arbitrary SQL; upsert exists underneath,
-    // effect.ts:495-541): one statement carrying a conditional DELETE
-    // (first-clause-wins over the UPDATE), an UPDATE reading BOTH sides
-    // of the target⋈source join, and a NOT MATCHED INSERT — all routed
-    // onto the staged store surface and published in one atomic commit.
-    // The oracle recomputes the final state declaratively: matched =
-    // custkey 201..400 (delete where source bal < 0, else bal-sum +
-    // segment flip), unmatched source = 401..600 inserted as NEW.
-    "q_exec_raw_merge" -> ((s, dir) => {
-      import org.apache.spark.sql.types._
-      Tables.registerViews(s, dir)
-      val cat = new graft.store.Catalog(tempDir("graft-execraw-merge"))
-      val acct = new graft.store.GraftTable(s, cat, "acct", StructType(Seq(
-        StructField("custkey", LongType, nullable = false),
-        StructField("name", StringType, nullable = true),
-        StructField("segment", StringType, nullable = true),
-        StructField("bal", DoubleType, nullable = true))),
-        uniqueKeys = Seq(Seq("custkey")))
-      val tabs = Map("acct" -> acct)
-      graft.store.ExecuteRaw.execute(s, tabs,
-        """INSERT INTO acct
-           SELECT c_custkey, c_name, c_mktsegment, c_acctbal
-           FROM customer WHERE c_custkey <= 400""")
-      graft.store.ExecuteRaw.execute(s, tabs,
-        """MERGE INTO acct t
-           USING (SELECT c_custkey AS custkey, c_name AS name,
-                         c_acctbal AS bal
-                  FROM customer WHERE c_custkey BETWEEN 201 AND 600) s
-           ON t.custkey = s.custkey
-           WHEN MATCHED AND s.bal < 0 THEN DELETE
-           WHEN MATCHED THEN UPDATE SET bal = t.bal + s.bal, segment = 'MERGED'
-           WHEN NOT MATCHED THEN INSERT (custkey, name, segment, bal)
-             VALUES (s.custkey, s.name, 'NEW', s.bal)""")
-      acct.snapshot()
-        .select(col("custkey"), col("name"), col("segment"), col("bal"))
-        .orderBy(col("custkey"))
-    }),
-
-    // $executeRaw DDL: CREATE TABLE AS SELECT materializes a real store
-    // table from an arbitrary analyzed query (reference $executeRaw is
-    // arbitrary SQL, class.ts:118-153), and the created table is a FULL
-    // citizen — the follow-up UPDATE rides the same raw-SQL surface and
-    // the read-back is an ordinary snapshot. ExecuteRaw.executeCreate.
-    "q_exec_raw_ctas" -> ((s, dir) => {
-      Tables.registerViews(s, dir)
-      val cat = new graft.store.Catalog(tempDir("graft-ctas-q"))
-      val t = graft.store.ExecuteRaw.executeCreate(s, cat,
-        """CREATE TABLE seg AS
-           SELECT c_mktsegment AS segment, CAST(count(*) AS BIGINT) AS n,
-                  CAST(sum(CAST(c_acctbal AS DECIMAL(18,2))) AS DOUBLE) AS bal
-           FROM customer GROUP BY c_mktsegment""",
-        uniqueKeys = Seq(Seq("segment")))
-      graft.store.ExecuteRaw.execute(s, Map("seg" -> t),
-        "UPDATE seg SET bal = 0.0 WHERE segment < 'F'")
-      t.snapshot()
-        .select(col("segment"), col("n"), col("bal"))
-        .orderBy(col("segment"))
-    }),
-
-    // §2.A #19 — RACING interactive $transactions, oracle-gated. Two
-    // shapes: (1) a DETERMINISTIC interleave — txn A stages its update,
-    // then a full txn B commits underneath, and A's commit MUST raise
-    // P2034 (required, counted), after which the Retry wrapper reruns
-    // A's closure against the post-B snapshot (the Prisma P2034
-    // retry-loop contract, prismaNamespace.ts:885-892); (2) two REAL
-    // threads on a start barrier running commutative adds, each retrying
-    // its commit-race losses. The final balances equal a serial
-    // execution regardless of interleaving — that equality is what the
-    // DuckDB oracle hashes.
-    "q_txn_race" -> ((s, dir) => {
-      import org.apache.spark.sql.types._
-      val cat = new graft.store.Catalog(tempDir("graft-txn-race"))
-      val acct = new graft.store.GraftTable(s, cat, "acct", StructType(Seq(
-        StructField("custkey", LongType, nullable = false),
-        StructField("bal", LongType, nullable = true))),
-        uniqueKeys = Seq(Seq("custkey")))
-      acct.createMany(Tables.customer(s, dir)
-        .filter(col("c_custkey") <= 300)
-        .select(col("c_custkey").as("custkey"), col("c_custkey").as("bal")))
-      var conflicts = 0
-      var interleaved = false
-      graft.pipeline.Retry.onConflict() {
-        val a = new graft.store.Txn(cat)
-        a.updateMany(acct, graft.query.RawCol(lit(true)),
-          Map("bal" -> (col("bal") + 7)))
-        if (!interleaved) {
-          interleaved = true
-          graft.store.Txn.run(cat)(b =>
-            b.updateMany(acct,
-              graft.query.RawCol(pmod(col("custkey"), lit(2)) === 0),
-              Map("bal" -> (col("bal") + 11))))
-        }
-        try a.commit()
-        catch { case e: graft.store.ConcurrentModificationException =>
-          conflicts += 1; throw e }
-      }
-      require(conflicts == 1,
-        s"q_txn_race: the interleaved writer must force exactly one P2034, saw $conflicts")
-      val errs = new java.util.concurrent.ConcurrentLinkedQueue[Throwable]
-      val barrier = new java.util.concurrent.CyclicBarrier(2)
-      def racer(add: Long): Thread = {
-        val th = new Thread(() => {
-          try {
-            barrier.await()
-            graft.pipeline.Retry.onConflict(times = 10, baseMs = 20) {
-              graft.store.Txn.run(cat)(t =>
-                t.updateMany(acct, graft.query.RawCol(lit(true)),
-                  Map("bal" -> (col("bal") + add))))
-            }
-          } catch { case e: Throwable => errs.add(e) }
-        }, s"graft-racer-$add")
-        th.start(); th
-      }
-      val ths = Seq(racer(1000L), racer(10000L))
-      ths.foreach(_.join())
-      if (!errs.isEmpty) throw errs.peek()
-      acct.snapshot().select(col("custkey"), col("bal")).orderBy(col("custkey"))
-    }),
-
-    // Store compaction racing a live writer: a writer thread lands
-    // sequential disjoint createMany commits while a compactor thread
-    // continuously bin-packs (forced rewrites via maxFiles=0); every
-    // commit-race loser retries on P2034 (GraftTable.compact pins the
-    // table AND the schema fingerprint into its OCC base, so a writer
-    // moving the table mid-rewrite fails the COMPACTION, never the
-    // writer's data). Gate = the final snapshot equals the plain union of
-    // all batches — no slice lost to a stale compaction publish, none
-    // duplicated by a retried one — plus a bounded file count proving
-    // compaction really ran against the final state.
-    "q_compact_concurrent" -> ((s, dir) => {
-      import org.apache.spark.sql.types._
-      val cat = new graft.store.Catalog(tempDir("graft-compact-conc"))
-      val t = new graft.store.GraftTable(s, cat, "docs", StructType(Seq(
-        StructField("doc_id", LongType, nullable = false),
-        StructField("v", LongType, nullable = true))),
-        uniqueKeys = Seq(Seq("doc_id")))
-      val docs = Tables.documents(s, dir)
-        .select(col("doc_id"), length(col("text")).cast("long").as("v"))
-      val errs = new java.util.concurrent.ConcurrentLinkedQueue[Throwable]
-      val done = new java.util.concurrent.atomic.AtomicBoolean(false)
-      val compactions = new java.util.concurrent.atomic.AtomicInteger(0)
-      val writer = new Thread(() => {
-        // Retry budget sized for the adversarial cadence, not the happy
-        // path: at sf1 a createMany stages for ~1 s while the compactor
-        // publishes every ~1.5 s, so EACH attempt loses the OCC race with
-        // p ≈ 0.5-0.8 — per-attempt loss is the gate's design, and the
-        // writer's guarantee is probabilistic (p_fail^50 ≈ 0). The old
-        // times=20 with UNCAPPED backoff slept for minutes after ~12
-        // losses (the sf1 "hang"); capped-backoff retries are cheap.
-        try (0 until 6).foreach { i =>
-          graft.pipeline.Retry.onConflict(times = 50, baseMs = 20) {
-            t.createMany(docs.filter(pmod(col("doc_id"), lit(6)) === i))
-          }
-        } catch { case e: Throwable => errs.add(e) }
-        finally done.set(true)
-      }, "graft-compact-writer")
-      val compactor = new Thread(() => {
-        try {
-          while (!done.get()) {
-            // background compaction YIELDS to writers: a lost OCC race is
-            // "try again next tick", not an error — retrying inside the
-            // writer's commit window would livelock both sides at larger
-            // SFs where every commit spans seconds. The 500 ms tick keeps
-            // the publish period comfortably above the writer's staging
-            // window at every SF this gate runs at.
-            try compactions.addAndGet(t.compact(maxFiles = 0))
-            catch { case _: graft.store.ConcurrentModificationException => () }
-            Thread.sleep(500)
-          }
-          // final pass over the fully-written table: no concurrent
-          // writers remain, so this one is entitled to win
-          compactions.addAndGet(
-            graft.pipeline.Retry.onConflict(times = 10, baseMs = 20) {
-              t.compact(maxFiles = 0)
-            })
-        } catch { case e: Throwable => errs.add(e) }
-      }, "graft-compactor")
-      writer.start(); compactor.start()
-      writer.join(); compactor.join()
-      if (!errs.isEmpty) throw errs.peek()
-      require(compactions.get() >= 1,
-        "q_compact_concurrent: compaction must have rewritten at least one slice")
-      val files = cat.currentDirs("docs").values.flatMap(d =>
-        Option(new java.io.File(d).listFiles()).getOrElse(Array.empty).toSeq
-          .filter(f => f.isFile && f.getName.endsWith(".parquet"))).size
-      require(files <= 4,
-        s"q_compact_concurrent: final slice still fragmented ($files files)")
-      t.snapshot().select(col("doc_id"), col("v")).orderBy(col("doc_id"))
-    }),
-
-    // §2.E scalar functions: regexp extraction, trim, coalesce defaulting,
-    // string assembly (the extractGooglePlaces.ts:272-276 shapes).
-    "q_scalar_funcs" -> ((s, dir) =>
-      Tables.part(s, dir)
-        .select(
-          col("p_partkey"),
-          trim(col("p_name")).as("name_trim"),
-          regexp_extract(col("p_name"), "([a-z]+)", 1).as("first_word"),
-          coalesce(col("p_brand"), lit("Default Name")).as("brand_or_default"),
-          concat_ws("|", col("p_type"), col("p_brand")).as("tag_line"),
-          graft.pipeline.Stages.extractPhone(
-            concat(lit("call +"), (col("p_partkey") % 1000000).cast("string"),
-              lit(" ext"))).as("phone"))
-        .orderBy(col("p_partkey"))),
-
-    // §2.E histogram: width_bucket over order totals (the duration
-    // histogram shape, runner/locator.ts:47-50).
-    "q_token_hist" -> ((s, dir) =>
-      par(s, Tables.documents(s, dir))
-        .select(TextFunctions.widthBucket(
-          TextFunctions.tokenCount(col("text")).cast("double"), 0, 100, 10).as("bucket"))
-        .groupBy(col("bucket")).agg(count(lit(1)).as("n"))
-        .orderBy(col("bucket"))),
-
-    // Token budget accounting: whitespace tokens (the fast path) and the
-    // BPE-ish subword estimate (letter/digit runs, long words contribute
-    // ceil(len/4) pieces) side by side — the numbers a mixture planner
-    // budgets context windows with. Pure codegen'd kernels.
-    "q_token_budget" -> ((s, dir) =>
-      par(s, Tables.documents(s, dir))
-        .select(col("doc_id"),
-          TextFunctions.tokenCount(col("text")).cast("long").as("ws_tokens"),
-          TextFunctions.bpeishTokenCount(col("text")).cast("long").as("bpe_tokens"))
-        .orderBy(col("doc_id"))),
-
-    // Boilerplate mining: the corpus's 20 most frequent token 3-grams
-    // with document frequency — the exact heavy-hitters pass that seeds
-    // a template/boilerplate blocklist. One explode scan → one gram
-    // aggregation (map-side partial) → TakeOrdered(20); grams ride as
-    // strings only because the top-k output needs them — the count
-    // shuffle itself is gram-keyed, never corpus-wide.
-    "q_top_ngrams" -> ((s, dir) => {
-      // shared gram producer (token array projected once); doc-frequency
-      // via two-level aggregation instead of count(distinct): no Expand,
-      // both shuffles gram-keyed
-      val grams = operators.CorpusAudit.wordGrams(
-          par(s, Tables.documents(s, dir)), "text", n = 3, keep = Seq(col("doc_id")))
-        .select(col("doc_id"), col("gram").as("g"))
-      grams
-        .groupBy(col("g"), col("doc_id")).agg(count(lit(1)).as("__c"))
-        .groupBy(col("g"))
-        .agg(sum(col("__c")).as("n"), count(lit(1)).as("n_docs"))
-        .orderBy(col("n").desc, col("g").asc)
-        .limit(20)
-    }),
-
-    // Heavy hitters by sketch-then-verify: tokens above 0.5% corpus
-    // frequency. Pass 1 aggregates a 512-counter Misra–Gries summary —
-    // partial-aggregated, so each map task ships ≤512 counters instead of
-    // its whole vocabulary, and the merged sketch is a guaranteed
-    // SUPERSET of every token with frequency > N/513 (mergeable-summaries
-    // bound) ⊇ all tokens over the N/200 gate threshold. Pass 2 re-scans
-    // with a ≤512-literal IN filter and counts EXACTLY — the shuffle is
-    // keyed on ≤512 candidates, never the corpus vocabulary (billions of
-    // singleton keys at 100 TB, almost none of which can be heavy). Same
-    // sketch-then-verify shape as the Bloom decontamination gate; output
-    // is exact, so the oracle is the plain GROUP BY/HAVING.
-    "q_heavy_hitters" -> ((s, dir) => {
-      val toks = par(s, Tables.documents(s, dir))
-        .select(explode(split(col("text"), " ")).as("tok"))
-      val head = toks.agg(
-          count(lit(1)).as("n_total"),
-          graft.functions.MisraGries.heavyHitterCandidates(col("tok"), 512)
-            .as("cands"))
-        .collect()(0) // bounded: one row, ≤512 strings
-      val nTotal = head.getLong(0)
-      val cands = head.getSeq[String](1)
-      toks.filter(col("tok").isin(cands: _*))
-        .groupBy(col("tok")).agg(count(lit(1)).as("n"))
-        .filter(col("n") * lit(200L) > lit(nTotal))
-        .orderBy(col("tok"))
-    }),
-
-    // One-pass column profiling over the event stream: row count, null
-    // count, exact distinct cardinality, stringified min/max per column —
-    // the ingest observability audit that catches schema drift and null
-    // explosions before curation runs. The k exact distincts plan as ONE
-    // scan + Expand (k× partial-aggregated shuffle rows), never k
-    // rescans; `opt_type` (nullif of a value known present) exercises
-    // the null-accounting path on a null-free fixture. min/max stringify
-    // AFTER aggregation — a pre-cast would order "10" < "9".
-    "q_profile" -> ((s, dir) => {
-      val ev = Tables.events(s, dir)
-        .withColumn("opt_type", expr("nullif(event_type, 'click')"))
-      operators.Profile.profile(
-          ev, Seq("event_type", "opt_type", "user_id", "event_id"))
-        .orderBy(col("col_name"))
-    }),
-
-    // Sketch-audited cardinality: the gate output is the EXACT per-type
-    // distinct-user count (oracle-checkable), but the query first runs
-    // the HyperLogLog++ estimate alongside it and REQUIREs agreement
-    // within 6·rsd — the sketch path a 100 TB continuous profile
-    // actually runs (mergeable fixed-size state, no distinct shuffle),
-    // audited against exactness on the same scan shape.
-    "q_approx_distinct" -> ((s, dir) =>
-      operators.Profile.cardinalityAudit(
-          Tables.events(s, dir), "event_type", "user_id", rsd = 0.02)
-        .orderBy(col("event_type"))),
-
-    // Sketch-audited point frequencies — the count–min complement of
-    // q_approx_distinct: the gate output is the EXACT per-type count
-    // (oracle-checkable), but the query first builds the count–min grid
-    // (a fixed 4×2048 mergeable long array — what a 100 TB continuous
-    // profile ships instead of a vocabulary-keyed shuffle) and REQUIREs
-    // every audited value to respect the sketch's one-sided guarantee
-    // exact ≤ estimate ≤ exact + (e/width)·N. functions/CountMin.scala.
-    "q_freq_audit" -> ((s, dir) =>
-      operators.Profile.frequencyAudit(Tables.events(s, dir), "event_type")
-        .orderBy(col("value"))),
-
-    // SCD Type-2 history build from the append-only event log: one row
-    // per event_type TRANSITION per user with half-open validity
-    // intervals, 1-based versions, and a current flag — the
-    // history-preserving counterpart of the reference's overwrite-in-
-    // place status machine. Interval bounds go out as epoch
-    // microseconds (exact integers both engines). All three windows
-    // share one (user_id, ts, event_id) sort → a single Exchange.
-    "q_scd2" -> ((s, dir) =>
-      operators.Temporal.scd2(Tables.events(s, dir),
-          "user_id", "event_type", "ts", "event_id")
-        .select(col("user_id"), col("version"), col("event_type"),
-          unix_micros(col("valid_from")).as("valid_from_us"),
-          unix_micros(col("valid_to")).as("valid_to_us"),
-          col("is_current").cast("long").as("is_current"))
-        .orderBy(col("user_id"), col("version"))),
-
-    // Market-basket co-occurrence: top-20 part pairs ordered within the
-    // same order, counted across orders. The self-join fans out C(k,2)
-    // per basket (TPC-H: k ≤ 7, bounded); the global top-20 plans as
-    // TakeOrderedAndProject — per-partition bounded heaps, never a full
-    // sort of the pair space.
-    "q_copurchase" -> ((s, dir) =>
-      operators.Temporal.coOccurrence(
-        Tables.lineitem(s, dir), "l_orderkey", "l_partkey", topN = 20)),
-
-    // Unicode NFC normalization ahead of fingerprinting: decomposed
-    // accents (e + U+0301), the canonical mixed-normalization hazard of
-    // crawl text, must compose to single code points before any exact or
-    // near-dup hash — byte-different spellings of the same string are
-    // otherwise distinct documents forever. Runs as a custom codegen
-    // Expression (UnicodeExpressions.NfcNormalize) with an isNormalized
-    // fast path, inside the whole-stage span — not a UDF. The fixture
-    // corpus is ASCII (already NFC), so the gate plants a decomposed
-    // suffix on every row and checks both the composed text and the
-    // char-count contraction; oracle = DuckDB's nfc_normalize.
-    "q_nfc_normalize" -> ((s, dir) => {
-      val raw = concat(col("text"), lit(" cafe\u0301"))
-      Tables.documents(s, dir)
-        .select(col("doc_id"),
-          graft.functions.UnicodeExpressions.nfcNormalize(raw).as("text_nfc"),
-          (length(graft.functions.UnicodeExpressions.nfcNormalize(raw)) -
-            length(raw)).cast("long").as("nfc_delta"))
-        .orderBy(col("doc_id"))
-    }),
-
-    // Sliding-window chunking: 60-token windows advancing by 50 (10-token
-    // overlap), one row per chunk with index/count/re-joined text — the
-    // long-document splitter every pretrain/RAG ingest needs. Pure
-    // explode + array-slice expressions, no shuffle.
-    "q_chunk" -> ((s, dir) =>
-      operators.Packing.chunkDocs(
-          Tables.documents(s, dir).filter(col("doc_id") < 200),
-          "text", "doc_id", maxTokens = 60, overlap = 10)
-        .orderBy(col("doc_id"), col("chunk_idx"))),
-
-    // Cross-source overlap audit: pairwise Jaccard of each source pair's
-    // distinct word-3-gram sets — which sources duplicate each other,
-    // the question that decides mixture weights. Aggregate-then-expand
-    // (inverted gram→sources index, pair explosion bounded by |sources|
-    // per gram), never a corpus-sized gram self-join.
-    "q_source_overlap" -> ((s, dir) => {
-      val grams = operators.CorpusAudit.wordGrams(
-        par(s, Tables.documents(s, dir)), "text", n = 3, keep = Seq(col("source")))
-      operators.CorpusAudit.sourceOverlap(grams, "source", "gram")
-        .select(col("src_a"), col("src_b"), col("n_a"), col("n_b"),
-          col("inter"), col("jaccard"))
-        .orderBy(col("src_a"), col("src_b"))
-    }),
-
-    // §2.E derived metric: success rate percentage from status counts
-    // (runner/locator.ts:192-195), orders: F=failed, P=skipped analog.
-    "q_success_rate" -> ((s, dir) =>
-      Tables.orders(s, dir).agg(
-        count(lit(1)).as("processed"),
-        count(when(col("o_orderstatus") === "F", 1)).as("failed"),
-        count(when(col("o_orderstatus") === "P", 1)).as("skipped"))
-        .select(col("processed"), col("failed"), col("skipped"),
-          round((col("processed") - col("failed") - col("skipped")) * 100.0 / col("processed"), 4)
-            .as("success_rate_pct"))),
-
-    // Window function: per-customer running spend in date order.
-    "q_window_running" -> ((s, dir) => {
-      val w = org.apache.spark.sql.expressions.Window
-        .partitionBy(col("o_custkey"))
-        .orderBy(col("o_orderdate"), col("o_orderkey"))
-        .rowsBetween(org.apache.spark.sql.expressions.Window.unboundedPreceding, 0)
-      Tables.orders(s, dir)
-        .filter(col("o_custkey") <= 50)
-        .select(col("o_custkey"), col("o_orderkey"),
-          sum(dec(col("o_totalprice"))).over(w).cast("double").as("running_spend"))
-        .orderBy(col("o_custkey"), col("o_orderkey"))
-    }),
-
-    // §2.A #10 update semantics as a state transform (the when/otherwise
-    // merge the store layer commits — here observable as a query).
-    "q_update_emul" -> ((s, dir) =>
-      Tables.customer(s, dir)
-        .select(col("c_custkey"),
-          when(col("c_acctbal") < 0, lit("DELINQUENT"))
-            .otherwise(col("c_mktsegment")).as("segment"),
-          when(col("c_acctbal") < 0, round(dec(col("c_acctbal")) * dec(lit(1.1)), 2).cast("double"))
-            .otherwise(col("c_acctbal")).as("balance"))
-        .orderBy(col("c_custkey"))),
-
-    // §2.A #14 upsert/MERGE semantics: high-value orders replace customer
-    // segment rows, new keys appended (anti-join + union shape).
-    "q_upsert_emul" -> ((s, dir) => {
-      val existing = Tables.customer(s, dir)
-        .select(col("c_custkey").as("key"), col("c_mktsegment").as("val"))
-      val incoming = Tables.orders(s, dir)
-        .filter(col("o_totalprice") > 450000.0)
-        .select((col("o_custkey") + 1000000L).as("key"), lit("BIG_SPENDER").as("val"))
-        .dropDuplicates("key")
-      existing.join(incoming.select("key"), Seq("key"), "left_anti")
-        .unionByName(incoming)
-        .orderBy(col("key"))
-    }),
-
-    // §2.A #6 nested relation writes through the REAL store path: parent
-    // create with a nested 1-1 child create (syncCrm.ts:156-163 shape) and
-    // a nested M-N connectOrCreate + link (scrapeWebsite.ts:224-236 shape),
-    // atomically in one transaction, then read back joined. The oracle is
-    // the declaratively-equivalent SELECT over the same input slice.
-    "q_nested_create" -> ((s, dir) => {
-      import org.apache.spark.sql.types._
-      val cat = new graft.store.Catalog(
-        tempDir("graft-nested-q"))
-      val parentT = new graft.store.GraftTable(s, cat, "client", StructType(Seq(
-        StructField("id", LongType, nullable = false),
-        StructField("name", StringType, nullable = true))),
-        uniqueKeys = Seq(Seq("id")))
-      val eventT = new graft.store.GraftTable(s, cat, "client_event", StructType(Seq(
-        StructField("event_id", StringType, nullable = false),
-        StructField("parent_id", LongType, nullable = false),
-        StructField("note", StringType, nullable = true))),
-        uniqueKeys = Seq(Seq("event_id")))
-      val tagT = new graft.store.GraftTable(s, cat, "tag", StructType(Seq(
-        StructField("tag_id", StringType, nullable = false),
-        StructField("tag", StringType, nullable = false))),
-        uniqueKeys = Seq(Seq("tag")))
-      val linkT = new graft.store.GraftTable(s, cat, "client_tag", StructType(Seq(
-        StructField("parent_id", LongType, nullable = false),
-        StructField("tag_id", StringType, nullable = false))),
-        uniqueKeys = Seq(Seq("parent_id", "tag_id")))
-      val batch = Tables.customer(s, dir).filter(col("c_custkey") <= 100)
-        .select(col("c_custkey").as("id"), col("c_name").as("name"),
-          col("c_acctbal").as("acctbal"), col("c_mktsegment").as("segment"))
-      parentT.createNested(batch, Seq(
-        graft.store.NestedCreate(eventT, b => b.select(
-          concat(lit("ev-"), col("id").cast("string")).as("event_id"),
-          col("id").as("parent_id"),
-          when(col("acctbal") < 0, lit("neg")).otherwise(lit("pos")).as("note"))),
-        graft.store.ConnectOrCreate(
-          relation = tagT,
-          ensure = b => b.select(concat(lit("tag-"), col("segment")).as("tag_id"),
-            col("segment").as("tag")).distinct(),
-          link = linkT,
-          links = b => b.select(col("id").as("parent_id"),
-            concat(lit("tag-"), col("segment")).as("tag_id")))))
-      parentT.snapshot()
-        .join(eventT.snapshot(), col("id") === col("parent_id"))
-        .join(linkT.snapshot().withColumnRenamed("parent_id", "lp"),
-          col("id") === col("lp"))
-        .join(tagT.snapshot(), Seq("tag_id"))
-        .select(col("id"), col("name"), col("event_id"), col("note"), col("tag"))
-        .orderBy(col("id"))
-    }),
-
-    // §2.A #9/#10 referential actions through the REAL store engine,
-    // oracle-gated (the cascade matrix was spec-only before): load a
-    // customer/orders slice with ON DELETE CASCADE + ON UPDATE CASCADE
-    // declared, delete a parent subset (children follow in the SAME
-    // commit), then remap a parent-key subset (children follow), and
-    // read the child table back. The oracle is the declaratively
-    // equivalent SELECT over the same input slice.
-    "q_cascade" -> ((s, dir) => {
-      import org.apache.spark.sql.types._
-      val cat = new graft.store.Catalog(
-        tempDir("graft-cascade-q"))
-      val cust = new graft.store.GraftTable(s, cat, "cust", StructType(Seq(
-        StructField("custkey", LongType, nullable = false),
-        StructField("name", StringType, nullable = true))),
-        uniqueKeys = Seq(Seq("custkey")))
-      val ord = new graft.store.GraftTable(s, cat, "ord", StructType(Seq(
-        StructField("orderkey", LongType, nullable = false),
-        StructField("custkey", LongType, nullable = false),
-        StructField("totalprice", DoubleType, nullable = true))),
-        uniqueKeys = Seq(Seq("orderkey")))
-      cust.onDeleteCascade(ord, "custkey", "custkey")
-      cust.createMany(Tables.customer(s, dir).filter(col("c_custkey") <= 300)
-        .select(col("c_custkey").as("custkey"), col("c_name").as("name")))
-      ord.createMany(Tables.orders(s, dir).filter(col("o_custkey") <= 300)
-        .select(col("o_orderkey").as("orderkey"), col("o_custkey").as("custkey"),
-          col("o_totalprice").as("totalprice")))
-      cust.deleteMany(graft.query.RawCol(pmod(col("custkey"), lit(7)) === 0))
-      cust.updateMany(graft.query.RawCol(pmod(col("custkey"), lit(11)) === 0),
-        Map("custkey" -> (col("custkey") + 100000L)))
-      ord.snapshot()
-        .select(col("orderkey"), col("custkey"), col("totalprice"))
-        .orderBy(col("orderkey"))
-    }),
-
-    // Partition-scoped copy-on-write PROVEN, not promised: a status-
-    // partitioned store takes one slice-local update and one slice-local
-    // delete; the result row per partition carries `rewritten` = "did the
-    // manifest version move" (read from the catalog, i.e. what the engine
-    // DID) while the oracle derives the same flag from the data ("does
-    // the partition contain a matched row") — plus the post-mutation
-    // count/sum per partition. A whole-table rewrite, or a write that
-    // skipped a touched slice, hash-mismatches. This is the write-path
-    // 100 TB lever: a status flip at scale rewrites ONE slice, not the
-    // table (ARCHITECTURE.md §layout; reference polls status slices via
-    // runner/locator.ts:61-67).
-    "q_cascade_part" -> ((s, dir) => {
-      import org.apache.spark.sql.types._
-      import s.implicits._
-      val cat = new graft.store.Catalog(tempDir("graft-part-q"))
-      val t = new graft.store.GraftTable(s, cat, "jobs", StructType(Seq(
-        StructField("id", LongType, nullable = false),
-        StructField("status", StringType, nullable = false),
-        StructField("total", DoubleType, nullable = true))),
-        uniqueKeys = Seq(Seq("id")), partitionCols = Seq("status"))
-      t.createMany(Tables.orders(s, dir).filter(col("o_orderkey") <= 2000)
-        .select(col("o_orderkey").as("id"), col("o_orderstatus").as("status"),
-          col("o_totalprice").as("total")))
-      val pre = cat.partVersions("jobs")
-      t.updateMany(graft.query.RawCol(col("status") === "F" && col("id") <= 500L),
-        Map("total" -> lit(0.0)))
-      t.deleteMany(graft.query.RawCol(col("status") === "P" && col("id") > 1500L))
-      val post = cat.partVersions("jobs")
-      val flags = pre.keys.toSeq.sorted.map { pk =>
-        (pk.stripPrefix("status="), post.get(pk) != pre.get(pk))
-      }
-      val agg = t.snapshot().groupBy(col("status"))
-        .agg(count(lit(1)).as("__n"),
-          sum(col("total").cast("decimal(18,2)")).as("__s"))
-      flags.toDF("part", "rewritten")
-        .join(agg, col("part") === col("status"), "left")
-        .select(col("part"), col("rewritten"),
-          coalesce(col("__n"), lit(0L)).as("n_after"),
-          coalesce(col("__s").cast("double"), lit(0.0)).as("sum_total"))
-        .orderBy(col("part"))
-    }),
-
-    // End-to-end curation pipeline, hash-gated as ONE composition: Gopher
-    // quality filter → exact dedup (md5 winner) → content-hash
-    // train/val/test split → token-budget shards over the train slice.
-    // Every stage is the production operator, chained the way a real
-    // ingest run chains them, and the whole lineage stays declarative —
-    // one plan, no driver materialization between stages.
-    "q_pipeline" -> ((s, dir) => {
-      val docs = par(s, Tables.documents(s, dir)
-        .select(col("doc_id"), col("source"), col("text")))
-      val kept = operators.QualityRules.gopherFilter(docs, "text",
-        operators.QualityRules.Thresholds(minWords = 40, minStopwordHits = 1))
-      val deduped = Dedup.exactByKey(kept, md5(col("text")), "doc_id")
-      val split = deduped.withColumn("split",
-          operators.Sampling.hashSplitAssign(col("text"),
-            Seq(("train", 0.8), ("val", 0.9)), "test"))
-        .withColumn("n_tok", TextFunctions.tokenCount(col("text")).cast("long"))
-      val train = operators.Packing.assignShardsByTokenBudget(
-          split.filter(col("split") === "train"),
-          Seq(col("source"), col("doc_id")), col("n_tok"), budget = 3000L)
-        .select(col("doc_id"), col("source"), col("split"), col("n_tok"),
-          col("shard"))
-      train.unionByName(split.filter(col("split") =!= "train")
-          .select(col("doc_id"), col("source"), col("split"), col("n_tok"),
-            lit(-1L).as("shard")))
-        .orderBy(col("doc_id"))
-    }),
-
-    // ---- beyond-reference training-data operators (BASELINE.json) ----
-
-    // Text analysis: token counting + stopword counting, pure codegen.
-    "q_text_stats" -> ((s, dir) =>
-      par(s, Tables.documents(s, dir))
-        .select(col("doc_id"),
-          TextFunctions.tokenCount(col("text")).cast("long").as("n_tokens"),
-          size(filter(TextFunctions.tokens(col("text")),
-            t => array_contains(array(textStopwords.map(lit): _*), t))).cast("long").as("n_stopwords"),
-          col("n_chars"))
-        .orderBy(col("doc_id"))),
-
-    // Language distribution of the corpus (lang column exercised).
-    "q_lang_dist" -> ((s, dir) =>
-      Tables.documents(s, dir)
-        .groupBy(col("lang")).agg(count(lit(1)).as("n"))
-        .orderBy(col("n").desc, col("lang"))),
-
-    // Language-ID heuristic over the corpus. The heuristic is pure column
-    // algebra — CJK codepoint probe, then argmax of marker-token counts
-    // (ties → first profile in sorted order, "und" when nothing scores) —
-    // so the oracle replays the same CASE in SQL; accuracy on
-    // real-language fixtures is additionally spec-tested.
-    "q_lang_id" -> ((s, dir) =>
-      Tables.documents(s, dir)
-        .select(col("doc_id"), TextFunctions.langId(col("text")).as("lang_pred"))
-        .orderBy(col("doc_id"))),
-
-    // TRAINED language-ID (r17): the routed path — a hashed
-    // char-trigram multinomial Naive Bayes (the fastText-shaped linear
-    // scorer) TRAINED on the planted 6-language fixture and applied to
-    // a mixed-evidence probe (one fixture sentence + 24 chars of the
-    // English-ish document text, so margins are real, not replay of the
-    // training set). Training is one counting aggregation into integer
-    // micro log-weights (one rounded ln per (lang, bucket) — the round-6
-    // libm-parity contract), scoring is a broadcast join + exact integer
-    // sums + a deterministic argmax, so the oracle replays the ENTIRE
-    // train+route pipeline symbolically. q_lang_id stays as the cheap
-    // stopword probe. operators/LangId.scala.
-    "q_lang_id_trained" -> ((s, dir) => {
-      val L = operators.LangId
-      val model = L.train(L.trainingFixture(s))
-      val j = (pmod(col("doc_id"), lit(48)) + 1).cast("int")
-      val sentArr = array(L.FixtureSentences.map(t => lit(t._2)): _*)
-      val langArr = array(L.FixtureSentences.map(t => lit(t._1)): _*)
-      // par: the probe's per-row kernel work (char-trigram expansion +
-      // md5 bucket per gram, ~500 grams/doc) runs below the first
-      // exchange, so the one-file test parquet would pin it to a single
-      // core — same single-scan bound as the r17 codec gates; no-op at
-      // real scale where the scan has many splits
-      val probes = par(s, Tables.documents(s, dir)).select(col("doc_id"),
-        element_at(langArr, j).as("lang_planted"),
-        concat(element_at(sentArr, j), lit(" "),
-          substring(col("text"), 1, 24)).as("ptxt"))
-      L.route(probes, "ptxt", "doc_id", model)
-        .join(probes.select(col("doc_id"), col("lang_planted")), Seq("doc_id"))
-        .select(col("doc_id"), col("lang_planted"), col("lang_pred"),
-          col("score_micro"))
-        .orderBy(col("doc_id"))
-    }),
-
-    // Document fingerprints through the ORACLE-PORTABLE md5 twins: same
-    // canonicalization and windowing as the xxhash64 production path
-    // (fingerprint/winnowFingerprint — those stay the fast path inside
-    // curation/dedup and are spec-tested for determinism), hash swapped to
-    // md5 so an independent engine can recompute every value.
-    "q_fingerprint" -> ((s, dir) =>
-      // par: the one-row-group test parquet would run this md5 kernel
-      // single-threaded; barrier: both fingerprint flavors read ONE
-      // tokenize (CollapseProject would re-inline the regex into each)
-      par(s, Tables.documents(s, dir))
-        .withColumn("__toks",
-          graft.functions.Barrier.evalOnce(TextFunctions.tokens(col("text"))))
-        .select(col("doc_id"),
-          TextFunctions.fingerprintPortableStaged(col("__toks")).as("fp_md5"),
-          TextFunctions.winnowFingerprintPortableStaged(col("__toks"), 5).as("winnow_md5"))
-        .orderBy(col("doc_id"))),
-
-    // Deterministic content-hash sampling (reproducible corpus cuts — the
-    // same doc is in or out everywhere; PRNG sampling can't cross-check).
-    "q_sample" -> ((s, dir) =>
-      operators.Sampling.hashSample(Tables.documents(s, dir), col("text"), 0.25)
-        .select(col("doc_id"), col("source"))
-        .orderBy(col("doc_id"))),
-
-    // Stratified deterministic sampling: per-language rates in one
-    // codegen'd CASE (downsample dominant strata, keep rare ones).
-    "q_sample_stratified" -> ((s, dir) =>
-      operators.Sampling.stratifiedHashSample(Tables.documents(s, dir),
-          col("text"), col("lang"),
-          rates = Map("en" -> 0.1, "de" -> 0.5), defaultRate = 1.0)
-        .groupBy(col("lang")).agg(count(lit(1)).as("n"))
-        .orderBy(col("lang"))),
-
-    // Temperature-weighted mixture epochs (the pretraining α-smoothing
-    // recipe: q_i ∝ p_i^α flattens dominant sources): per-source epoch
-    // factors q_i·N/n_i at α=0.5, computed from one bounded count
-    // aggregation (the operator is driver-side by design — #sources
-    // values). Formula mirrored parenthesis-for-parenthesis, 6-decimal
-    // rounded on both sides (pow differs in the last ulp across libms).
-    "q_temperature" -> ((s, dir) => {
-      val counts = Tables.documents(s, dir).groupBy(col("source")).count()
-        .collect().map(r => r.getString(0) -> r.getLong(1)).toMap
-      val eps = operators.Mixing.temperatureEpochs(counts, alpha = 0.5)
-      import s.implicits._
-      counts.toSeq.map { case (src, n) => (src, n, eps(src)) }
-        .toDF("source", "n", "epochs")
-        .orderBy(col("source"))
-    }),
-
-    // Per-source quota: cap every source at its 15 longest documents —
-    // the Common-Crawl "cap every domain" gate. The rank<=n filter
-    // compiles to WindowGroupLimit (map-side bounded heaps before the
-    // shuffle — plan-asserted), so a 100 M-row source ships ~15 rows per
-    // input partition, never the whole group.
-    "q_source_quota" -> ((s, dir) =>
-      operators.Sampling.capPerGroup(Tables.documents(s, dir),
-          group = col("source"), n = 15,
-          order = Seq(col("n_chars").desc, col("doc_id").asc))
-        .select(col("doc_id"), col("source"), col("n_chars"))
-        .orderBy(col("doc_id"))),
-
-    // Deterministic content-hash train/val/test split: byte-identical
-    // documents always land in the same split (exact-dup leakage is
-    // structurally impossible), pure codegen'd CASE, no shuffle.
-    "q_split" -> ((s, dir) =>
-      Tables.documents(s, dir)
-        .select(col("doc_id"), col("source"),
-          operators.Sampling.hashSplitAssign(col("text"),
-            Seq(("train", 0.8), ("val", 0.9)), "test").as("split"))
-        .orderBy(col("doc_id"))),
-
-    // Leakage-safe split: the draw keys on the near-dup CLUSTER
-    // representative, so an entire cluster lands on one side of every
-    // train/val/test boundary — the eval-contamination mode a content
-    // hash alone cannot stop (near-dups hash differently). Clusters come
-    // from the production MinHash-LSH + min-label path over the planted
-    // tripled quarter (pairs filtered to the id shifts, as in
-    // q_dup_clusters, so the oracle replays the cluster structure
-    // symbolically); unclustered docs degrade to their own-id draw
-    // through the LEFT join. operators/Sampling.scala.
-    "q_leakage_split" -> ((s, dir) => {
-      val docs = Tables.documents(s, dir).select(col("doc_id"), col("text"))
-      val quarter = docs.filter(pmod(col("doc_id"), lit(4)) === 0)
-      val c1 = quarter.select((col("doc_id") + 10000L).as("doc_id"), col("text"))
-      val c2 = quarter.select((col("doc_id") + 20000L).as("doc_id"), col("text"))
-      val all = par(s, docs.unionByName(c1).unionByName(c2))
-      val diff = col("id_b") - col("id_a")
-      val pairs = Dedup.minhashLshPairs(all, "text", "doc_id", threshold = 0.7)
-        .filter(diff === 10000L || diff === 20000L)
-      operators.Sampling.leakageSafeSplit(all, "doc_id",
-          Dedup.dupClusters(pairs), Seq(("train", 0.8), ("val", 0.9)), "test")
-        .select(col("doc_id"), col("cluster"), col("split"))
-        .orderBy(col("doc_id"))
-    }),
-
-    // DSIR importance weights (data selection via importance resampling):
-    // per-document mean log-likelihood ratio of hashed word-bigram buckets
-    // under the English-slice LM vs the full-corpus LM. One gram scan,
-    // one 1024-row LM aggregation broadcast back, one per-doc aggregation.
-    "q_dsir" -> ((s, dir) =>
-      operators.Importance.dsirWeights(par(s, Tables.documents(s, dir)),
-          "doc_id", "text", isTarget = col("lang") === "en", buckets = 1024)
-        .orderBy(col("doc_id"))),
-
-    // Curriculum construction: the corpus ordered by reference-likeness
-    // (cross-entropy ascending — cleanest-first, the curriculum-learning
-    // data layout) and cut into 5000-token training stages via the
-    // window-free two-pass prefix sum. Composes the production CE
-    // scorer and the budget sharder in ONE declarative plan; the
-    // round-6 ce is hash-stable, so ordering on it is engine-safe.
-    "q_curriculum" -> ((s, dir) => {
-      val ce = operators.Importance.unigramCrossEntropy(
-        par(s, Tables.documents(s, dir)), "doc_id", "text",
-        isRef = col("source").isin("src0", "src1"), buckets = 4096)
-      operators.Packing.assignShardsByTokenBudget(ce,
-          Seq(col("ce"), col("doc_id")), col("n_tok"), budget = 5000L)
-        .select(col("doc_id"), col("n_tok"), col("ce"), col("shard"))
-        .orderBy(col("doc_id"))
-    }),
-
-    // CCNet-style perplexity filter: per-document cross-entropy under a
-    // unigram LM trained on the src0/src1 reference slice (the
-    // "Wikipedia KenLM" analog). One token scan, one 4096-row LM
-    // aggregation broadcast back, one per-doc aggregation.
-    "q_perplexity" -> ((s, dir) =>
-      operators.Importance.unigramCrossEntropy(par(s, Tables.documents(s, dir)),
-          "doc_id", "text", isRef = col("source").isin("src0", "src1"),
-          buckets = 4096)
-        .orderBy(col("doc_id"))),
-
-    // Linear multi-touch attribution: each purchase splits 1000 milli-
-    // credits equally over its view/click touches in the preceding hour
-    // (remainder to the most recent touch) — banded pair join, one
-    // conversion-id window, integer credit sums.
-    "q_attribution" -> ((s, dir) => {
-      val ev = Tables.events(s, dir)
-      val conv = ev.filter(col("event_type") === "purchase")
-        .select(col("event_id").as("conv_id"), col("user_id"),
-          col("ts").as("conv_ts"))
-      val touch = ev.filter(col("event_type").isin("view", "click"))
-        .select(col("event_id").as("touch_id"), col("user_id"),
-          col("ts").as("touch_ts"))
-      operators.Temporal.linearAttribution(conv, touch, "user_id",
-          "conv_ts", "touch_ts", "conv_id", "touch_id",
-          windowSeconds = 3600)
-        .orderBy(col("touch_id"))
-    }),
-
-    // Cohort retention triangle: weekly first-event cohorts x distinct
-    // active users per offset — integer epoch-division bucketing, two
-    // bounded shuffles, no windows.
-    "q_retention" -> ((s, dir) =>
-      operators.Temporal.retentionMatrix(Tables.events(s, dir),
-          "user_id", "ts")
-        .orderBy(col("cohort"), col("period_offset"))),
-
-    // Salted join under oracle: the hot-key spreading (left side salted,
-    // right side replicated x8, join on (key, salt)) must be output-
-    // invariant — every left row carries exactly one salt and the right
-    // replica set covers all salts, so the pair set equals the plain
-    // join. The oracle runs the plain join; equality gates the rewrite.
-    "q_salted_join" -> ((s, dir) => {
-      val li = Tables.lineitem(s, dir)
-        .select(col("l_suppkey").as("suppkey"), col("l_extendedprice"),
-          col("l_discount"))
-      val sup = Tables.supplier(s, dir)
-        .select(col("s_suppkey").as("suppkey"), col("s_nationkey"))
-      operators.Skew.saltedJoin(li, sup, "suppkey", factor = 8)
-        .groupBy(col("s_nationkey"))
-        .agg(count(lit(1)).as("n"),
-          sum(dec(col("l_extendedprice")) *
-            (lit(1).cast("decimal(18,2)") - dec(col("l_discount"))))
-            .cast("double").as("revenue"))
-        .orderBy(col("s_nationkey"))
-    }),
-
-    // Two-phase salted aggregation under oracle: partial collect on
-    // (key, salt), final flatten on key — the explicit map-side combine
-    // for non-algebraic aggregates. Output exploded to scalar
-    // (key, pos, value) rows after a deterministic sort, so the hash
-    // compare sees content, not list layout.
-    "q_salted_agg" -> ((s, dir) => {
-      val li = Tables.lineitem(s, dir).filter(col("l_orderkey") < 400)
-      operators.Skew.twoPhaseCollect(li, "l_returnflag", "l_quantity",
-          factor = 8)
-        .select(col("l_returnflag"),
-          posexplode(array_sort(col("l_quantity_list"))))
-        .select(col("l_returnflag"), col("pos").cast("long").as("pos"),
-          col("col").cast("double").as("qty"))
-        .orderBy(col("l_returnflag"), col("pos"))
-    }),
-
-    // Point-in-time join: every purchase enriched with the SCD2 state
-    // version valid at its instant — the feature-store no-future-leakage
-    // rule, planned as an as-of carry-forward (one shuffle), never an
-    // interval theta-join. The oracle evaluates the honest half-open
-    // interval join; equality proves the as-of reduction.
-    "q_pit_join" -> ((s, dir) => {
-      val ev = Tables.events(s, dir)
-      val hist = operators.Temporal.scd2(ev, "user_id", "event_type",
-          "ts", "event_id")
-        .withColumnRenamed("event_type", "state")
-      val facts = ev.filter(col("event_type") === "purchase")
-        .select(col("event_id"), col("user_id"), col("ts"))
-      operators.Temporal.pointInTime(facts, hist, "user_id", "ts",
-          Seq("state", "version"))
-        .select(col("event_id"), col("user_id"), col("state"), col("version"))
-        .orderBy(col("event_id"))
-    }),
-
-    // Sketch-audited quantiles: output is the EXACT per-type value
-    // percentiles (quantile_cont semantics both engines), but the query
-    // first requires the mergeable approx_percentile sketch — the state
-    // a 100 TB continuous profile actually keeps — inside each target's
-    // exact rank-tolerance bracket.
-    "q_quantile_audit" -> ((s, dir) =>
-      operators.Profile.quantileAudit(Tables.events(s, dir),
-          "event_type", "value", probs = Seq(0.25, 0.5, 0.75, 0.95))
-        .orderBy(col("event_type"), col("p"))),
-
-    // Entity resolution: every distinct part name corrupted by dropping
-    // its (len-2)th character, then fuzzy-matched back to the clean set —
-    // blocked on the first token (hash equi-join, never all-pairs),
-    // length-banded before any distance, Levenshtein-verified. Blocking
-    // recall itself is under oracle: a planted pair the scheme loses
-    // would be missing from BOTH engines' outputs only if the algebra
-    // says so.
-    "q_fuzzy_join" -> ((s, dir) => {
-      val names = Tables.part(s, dir).select(col("p_name")).distinct()
-      val corrupted = names.select(expr(
-        "concat(substr(p_name, 1, length(p_name) - 3), " +
-          "substr(p_name, length(p_name) - 1)) AS dirty"))
-      operators.Linkage.fuzzyJoin(corrupted, "dirty", names, "p_name",
-          maxDist = 1)
-        .orderBy(col("left_val"), col("right_val"))
-    }),
-
-    // Distribution drift alarm (PSI): per-bin population-stability
-    // contributions between the purchase and click value distributions —
-    // fixed-width scan-side binning, shuffle bounded by bins, totals
-    // broadcast from a 1-row frame; ln/divisions mirrored term-for-term.
-    "q_drift" -> ((s, dir) => {
-      val ev = Tables.events(s, dir)
-      operators.Profile.drift(
-          ev.filter(col("event_type") === "purchase"),
-          ev.filter(col("event_type") === "click"),
-          "value", binWidth = 50.0)
-        .orderBy(col("bin"))
-    }),
-
-    // FineWeb-Edu-style model-based quality filter: hashed bag-of-words
-    // linear classifier scored via a BROADCAST join against the 4096-row
-    // weight table (the shape a trained fastText model loads as), one
-    // shuffle on doc_id, integer milliweight sums so the score is
-    // bit-stable under any partitioning.
-    "q_quality_classifier" -> ((s, dir) =>
-      operators.QualityClassifier.scoreWithModel(
-          par(s, Tables.documents(s, dir)), "text", "doc_id",
-          operators.QualityClassifier.syntheticModel(s, 4096), dim = 4096)
-        .orderBy(col("doc_id"))),
-
-    // PERSISTENT secondary value index (store/ValueIndex.scala) —
-    // Prisma's @@index as a store object, the FOURTH index family
-    // (dedup sketches / ANN codes / BM25 postings / value postings) on
-    // the same lifecycle machinery. The store's layout-dependent paths
-    // (partition pruning, zone maps, blooms) degrade on a column the
-    // table is neither partitioned nor clustered by; the index answers
-    // `findMany(where: {source: ...})` from bucket-pruned posting
-    // slices with ZERO source-table jobs, then hydrates via a broadcast
-    // semi-join. The gate drives the full lifecycle: build on a 3/4
-    // prefix → post-build inserts AND value-MOVING updates (the update's
-    // preimage must leave the old value's bucket and its postimage land
-    // in the new one) → refresh-to-exactness → a reopened handle's
-    // single-value probe REQUIREd to read exactly one bucket partition
-    // → hydrated fetch hash-gated against the plain predicate oracle.
-    "q_value_index" -> ((s, dir) => {
-      val root = fixture("vidx-bysrc", dir) { root =>
-        val cat = new graft.store.Catalog(root)
-        val docs = Tables.documents(s, dir)
-          .select(col("doc_id"), col("source"), col("n_chars"))
-        val src = new graft.store.GraftTable(s, cat, "docs", vidxSchema,
-          uniqueKeys = Seq(Seq("doc_id")))
-        src.createMany(docs.filter(pmod(col("doc_id"), lit(4)) =!= 0))
-        val idx = graft.store.ValueIndex.build(src, "bysrc", "source",
-          "doc_id", nBuckets = 8)
-        src.createMany(docs.filter(pmod(col("doc_id"), lit(4)) === 0))
-        src.updateMany(graft.query.RawCol(pmod(col("doc_id"), lit(31)) === 0),
-          Map("source" -> lit("src9")))
-        require(idx.refresh().nonEmpty,
-          "q_value_index: the post-build window must drain")
-        require(idx.refresh().isEmpty,
-          "q_value_index: caught up — a second refresh drains nothing")
-      }
-      val src = new graft.store.GraftTable(s, new graft.store.Catalog(root),
-        "docs", vidxSchema, uniqueKeys = Seq(Seq("doc_id")))
-      val probe = graft.store.ValueIndex.open(src, "bysrc", "source",
-        "doc_id")
-      val one = probe.lookupIds(Seq("src3"))
-      val bucketDirs = one.inputFiles
-        .map(_.replaceAll(".*/bucket=([0-9]+)/.*", "$1")).distinct
-      require(one.inputFiles.nonEmpty && bucketDirs.length == 1,
-        s"q_value_index: a one-value probe must read exactly one bucket, " +
-          s"got ${bucketDirs.toSeq}")
-      probe.fetch(Seq("src3", "src9"))
-        .select(col("doc_id"), col("source"), col("n_chars"))
-        .orderBy(col("doc_id"))
-    }),
-
-    // The secondary index reaching the PRISMA SURFACE without the caller
-    // naming it — exactly how @@index works: findMany(where: {source:
-    // {in: [...]}, n_chars: {gte: ...}}) routes its equality/IN conjunct
-    // through ValueIndex.fetch (bucket-pruned postings + broadcast
-    // semi-join hydration) while the FULL where tree still applies
-    // afterwards (the n_chars range filters the hydrated rows; routing
-    // is never a correctness dependency). The gate REQUIREs the plan
-    // actually read the index's posting files — a silent fallback to
-    // the scan would pass the hash and hide a dead optimizer path.
-    "q_find_many_indexed" -> ((s, dir) => {
-      val (_, idx) = vidxFullFixture(s, dir)
-      val src = idx.src
-      val model = new graft.query.Model(
-        df = () => src.snapshot(), primaryKey = "doc_id",
-        indexSources = Map("source" -> (vs => idx.fetch(vs))))
-      val out = model.findMany(graft.query.QueryArgs(
-        where = Some(graft.query.And(Seq(
-          graft.query.Field("source",
-            graft.query.StringF(in = Some(Seq("src1", "src4")))),
-          graft.query.Field("n_chars",
-            graft.query.CmpF(gte = Some(120L)))))),
-        orderBy = Seq(graft.query.OrderBy("doc_id"))))
-      require(out.inputFiles.exists(_.contains("__vidx_")),
-        "q_find_many_indexed: the read must route through the index")
-      out
-    }),
-
-    // COMPOSITE secondary index — Prisma's @@index([a, b]) as tuple-
-    // valued postings (store/ValueIndex.scala): the bucket hash covers
-    // the WHOLE tuple, so a full-tuple probe reads only its buckets
-    // while a leading-prefix probe CANNOT prune and must provably fall
-    // back to the scan (both plan-asserted here). Lifecycle mirrors
-    // q_value_index: build on a 3/4 prefix → post-build inserts and a
-    // component-moving update (the tuple leaves its old bucket, lands
-    // in the new) → refresh-to-exactness → Model routing: findMany with
-    // routable equality/IN on BOTH columns sources from the index (the
-    // probe set is the per-column cross product), the n_chars range
-    // still applies from the re-applied where tree.
-    "q_value_index_composite" -> ((s, dir) => {
-      val root = fixture("vidx-srclang", dir) { root =>
-        val cat = new graft.store.Catalog(root)
-        val docs = Tables.documents(s, dir)
-          .select(col("doc_id"), col("source"), col("lang"), col("n_chars"))
-        val src = new graft.store.GraftTable(s, cat, "docs", vidxLangSchema,
-          uniqueKeys = Seq(Seq("doc_id")))
-        src.createMany(docs.filter(pmod(col("doc_id"), lit(4)) =!= 0))
-        val idx = graft.store.ValueIndex.build(src, "srclang",
-          Seq("source", "lang"), "doc_id", nBuckets = 8)
-        src.createMany(docs.filter(pmod(col("doc_id"), lit(4)) === 0))
-        src.updateMany(graft.query.RawCol(pmod(col("doc_id"), lit(31)) === 0),
-          Map("lang" -> lit("xx")))
-        require(idx.refresh().nonEmpty,
-          "q_value_index_composite: the post-build window must drain")
-      }
-      val src = new graft.store.GraftTable(s, new graft.store.Catalog(root),
-        "docs", vidxLangSchema, uniqueKeys = Seq(Seq("doc_id")))
-      val probe = graft.store.ValueIndex.open(src, "srclang",
-        Seq("source", "lang"), "doc_id")
-      val one = probe.lookupTupleIds(Seq(Seq("src1", "en")))
-      val bucketDirs = one.inputFiles
-        .map(_.replaceAll(".*/bucket=([0-9]+)/.*", "$1")).distinct
-      require(one.inputFiles.nonEmpty && bucketDirs.length == 1,
-        s"q_value_index_composite: a one-tuple probe must read exactly " +
-          s"one bucket, got ${bucketDirs.toSeq}")
-      val model = new graft.query.Model(
-        df = () => src.snapshot(), primaryKey = "doc_id",
-        compositeIndexSources = Map(Seq("source", "lang") ->
-          (ts => probe.fetchTuples(ts))))
-      // a PREFIX probe (source only) routes too since r16 — buckets
-      // hash the LEADING column, so `where {source}` prunes like a
-      // full-tuple probe (value-checked in q_value_index_prefix)
-      val prefix = model.findMany(graft.query.QueryArgs(
-        where = Some(graft.query.Field("source",
-          graft.query.StringF(equals = Some(Some("src1")))))))
-      require(prefix.inputFiles.exists(_.contains("__vidx_")),
-        "q_value_index_composite: a prefix probe must route")
-      val out = model.findMany(graft.query.QueryArgs(
-        where = Some(graft.query.And(Seq(
-          graft.query.Field("source",
-            graft.query.StringF(equals = Some(Some("src1")))),
-          graft.query.Field("lang",
-            graft.query.StringF(in = Some(Seq("en", "de", "xx")))),
-          graft.query.Field("n_chars",
-            graft.query.CmpF(gte = Some(100L)))))),
-        orderBy = Seq(graft.query.OrderBy("doc_id"))))
-      require(out.inputFiles.exists(_.contains("__vidx_")),
-        "q_value_index_composite: the full-tuple read must route")
-      out
-    }),
-
-    // INDEX-ONLY count: a count whose entire where tree is one routable
-    // equality/IN leaf answers from the postings with ZERO source-table
-    // jobs — the source thunk is never even invoked (asserted with a
-    // tripwire df()), because each row's column holds exactly one value
-    // so the posting count IS the row count. This is Prisma's
-    // count(where: {indexed: ...}) at 100 TB: cost ∝ the probed values'
-    // posting rows, not the corpus.
-    "q_count_indexed" -> ((s, dir) => {
-      val (src, idx) = vidxFullFixture(s, dir)
-      var sourceTouched = false
-      val model = new graft.query.Model(
-        df = () => { sourceTouched = true; src.snapshot() },
-        primaryKey = "doc_id",
-        indexCountSources = Map("source" -> (vs => idx.countIds(vs))))
-      val n = model.count(Some(graft.query.Field("source",
-        graft.query.StringF(in = Some(Seq("src1", "src2"))))))
-      require(!sourceTouched,
-        "q_count_indexed: the index-only count must never invoke df()")
-      // a residual conjunct forces the hydrated path (and df())
-      val n2 = model.count(Some(graft.query.And(Seq(
-        graft.query.Field("source",
-          graft.query.StringF(equals = Some(Some("src1")))),
-        graft.query.Field("n_chars", graft.query.CmpF(gte = Some(100L)))))))
-      require(sourceTouched,
-        "q_count_indexed: a residual conjunct must hydrate through df()")
-      s.range(1).select(lit(n).as("n_indexed"), lit(n2).as("n_hydrated"))
-    }),
-
-    // INDEX-ONLY ids projection through the Prisma surface:
-    // findMany(where: {source: {in: ...}}, select: [doc_id]) answers
-    // from the postings — at 100 TB a "which rows assert X" read is a
-    // membership question the index already holds, and hydrating the
-    // source just to throw away every column is a corpus-priced no-op.
-    // Same tripwire discipline as q_count_indexed (df() never invoked)
-    // plus a plan assert that the read touched only __vidx_ files; a
-    // trailing orderBy/take on the key stays inside the fast path.
-    "q_find_ids_indexed" -> ((s, dir) => {
-      val (src, idx) = vidxFullFixture(s, dir)
-      var sourceTouched = false
-      val model = new graft.query.Model(
-        df = () => { sourceTouched = true; src.snapshot() },
-        primaryKey = "doc_id",
-        indexIdsSources = Map("source" -> (vs => idx.idsOf(vs))))
-      val out = model.findMany(graft.query.QueryArgs(
-        where = Some(graft.query.Field("source",
-          graft.query.StringF(in = Some(Seq("src1", "src3"))))),
-        select = Seq("doc_id"),
-        orderBy = Seq(graft.query.OrderBy("doc_id"))))
-      require(!sourceTouched,
-        "q_find_ids_indexed: the ids projection must never invoke df()")
-      require(out.inputFiles.nonEmpty &&
-          out.inputFiles.forall(_.contains("__vidx_")),
-        "q_find_ids_indexed: the read must touch only index posting files")
-      out
-    }),
-
-    // COMPOSITE-PREFIX routing (r16): `where {a}` against
-    // `@@index([a, b])` is the single most common secondary-index usage
-    // in Postgres — the btree serves it from the leading prefix, and so
-    // does the value index now that buckets hash the LEADING column.
-    // Full lifecycle (build on 3/4, late inserts, a source-moving
-    // updateMany, refresh — the update must RELOCATE postings across
-    // buckets), then two prefix reads: an ids projection answering from
-    // postings alone (df() tripwire + postings-only plan assert) and a
-    // hydrated findMany through the composite source with a residual
-    // non-routable conjunct re-applied on top. A probe on the NON-
-    // leading column must still fall back (tripwire flips).
-    "q_value_index_prefix" -> ((s, dir) => {
-      val root = fixture("vidx-prefix", dir) { root =>
-        val cat = new graft.store.Catalog(root)
-        // % 17 NULL langs: a NULL NON-LEADING component must stay
-        // indexed (r16 review fix) — a prefix probe on source that
-        // missed these rows would hash-mismatch the oracle, which
-        // selects by source alone
-        val docs = Tables.documents(s, dir)
-          .select(col("doc_id"), col("source"),
-            when(pmod(col("doc_id"), lit(17)) === 0, lit(null))
-              .otherwise(col("lang")).as("lang"),
-            col("n_chars"))
-        val src = new graft.store.GraftTable(s, cat, "docs", vidxLangSchema,
-          uniqueKeys = Seq(Seq("doc_id")))
-        src.createMany(docs.filter(pmod(col("doc_id"), lit(4)) =!= 0))
-        val idx = graft.store.ValueIndex.build(src, "srclang",
-          Seq("source", "lang"), "doc_id", nBuckets = 8)
-        src.createMany(docs.filter(pmod(col("doc_id"), lit(4)) === 0))
-        src.updateMany(graft.query.RawCol(pmod(col("doc_id"), lit(31)) === 0),
-          Map("source" -> lit("src9")))
-        require(idx.refresh().nonEmpty,
-          "q_value_index_prefix: the post-build window must drain")
-      }
-      val src = new graft.store.GraftTable(s, new graft.store.Catalog(root),
-        "docs", vidxLangSchema, uniqueKeys = Seq(Seq("doc_id")))
-      val idx = graft.store.ValueIndex.open(src, "srclang",
-        Seq("source", "lang"), "doc_id")
-      var sourceTouched = false
-      val model = new graft.query.Model(
-        df = () => { sourceTouched = true; src.snapshot() },
-        primaryKey = "doc_id",
-        compositeIndexSources = Map(Seq("source", "lang") ->
-          (ts => idx.fetchTuples(ts))),
-        indexIdsSources = Map("source" ->
-          (vs => idx.idsOfTuples(vs.map(Seq(_))))))
-      val ids = model.findMany(graft.query.QueryArgs(
-        where = Some(graft.query.Field("source",
-          graft.query.StringF(in = Some(Seq("src1", "src9"))))),
-        select = Seq("doc_id"),
-        orderBy = Seq(graft.query.OrderBy("doc_id"))))
-      require(!sourceTouched,
-        "q_value_index_prefix: the ids projection must never invoke df()")
-      require(ids.inputFiles.nonEmpty &&
-          ids.inputFiles.forall(_.contains("__vidx_")),
-        "q_value_index_prefix: the ids read must touch only posting files")
-      val hyd = model.findMany(graft.query.QueryArgs(
-        where = Some(graft.query.And(Seq(
-          graft.query.Field("source",
-            graft.query.StringF(equals = Some(Some("src1")))),
-          graft.query.Field("n_chars",
-            graft.query.CmpF(gte = Some(100L)))))),
-        orderBy = Seq(graft.query.OrderBy("doc_id"))))
-      require(!sourceTouched,
-        "q_value_index_prefix: the hydrated prefix read routes, df() stays cold")
-      require(hyd.inputFiles.exists(_.contains("__vidx_")),
-        "q_value_index_prefix: the hydrated prefix read must route")
-      // non-leading column alone: no prefix, no route — scan fallback
-      val nonLeading = model.findMany(graft.query.QueryArgs(
-        where = Some(graft.query.Field("lang",
-          graft.query.StringF(equals = Some(Some("en")))))))
-      require(sourceTouched && !nonLeading.inputFiles.exists(_.contains("__vidx_")),
-        "q_value_index_prefix: a non-leading probe must fall back to df()")
-      ids.select(col("doc_id"), lit("ids").as("part"))
-        .unionByName(hyd.select(col("doc_id"), lit("hyd").as("part")))
-        .orderBy(col("part"), col("doc_id"))
-    }),
-
-    // INDEX-ONLY groupBy (r16): `groupBy(source)._count` on an indexed
-    // column is a postings-only aggregation — at 100 TB a per-value
-    // census is a question the index already holds, and hydrating the
-    // corpus to count it is a corpus-priced no-op. NULLs are the trap:
-    // the postings don't index them, so the index carries the NULL
-    // group's count in its meta row, maintained across refreshes — this
-    // gate plants nulls BOTH at ingest (build must count them) and via
-    // a post-build updateMany that MOVES values to NULL (refresh must
-    // transfer posting rows into the meta count). Three reads: the
-    // unrestricted census (must include the NULL group), a probed
-    // groupBy (equality never selects NULL), and a residual-conjunct
-    // variant that must hydrate through df() (tripwire flips).
-    "q_group_indexed" -> ((s, dir) => {
-      val (src, idx) = vidxGroupFixture(s, dir)
-      var sourceTouched = false
-      val model = new graft.query.Model(
-        df = () => { sourceTouched = true; src.snapshot() },
-        primaryKey = "doc_id",
-        indexGroupSources = Map("source" -> (p => idx.groupCounts(p))))
-      val spec = graft.query.AggSpec(countAll = true)
-      val all = model.groupBy(Seq("source"), spec)
-      require(!sourceTouched,
-        "q_group_indexed: the unrestricted census must never invoke df()")
-      require(all.inputFiles.nonEmpty &&
-          all.inputFiles.forall(_.contains("__vidx_")),
-        "q_group_indexed: the census must touch only index posting files")
-      val probed = model.groupBy(Seq("source"), spec,
-        where = Some(graft.query.Field("source",
-          graft.query.StringF(in = Some(Seq("src1", "src2"))))))
-      require(!sourceTouched,
-        "q_group_indexed: the probed groupBy must never invoke df()")
-      // a residual conjunct (n_chars) forces the hydrated plan
-      val hyd = model.groupBy(Seq("source"), spec,
-        where = Some(graft.query.And(Seq(
-          graft.query.Field("source",
-            graft.query.StringF(in = Some(Seq("src1", "src2")))),
-          graft.query.Field("n_chars",
-            graft.query.CmpF(gte = Some(100L)))))))
-      require(sourceTouched,
-        "q_group_indexed: a residual conjunct must hydrate through df()")
-      all.select(col("source"), col("_count_all"), lit("all").as("part"))
-        .unionByName(probed.select(col("source"), col("_count_all"),
-          lit("in").as("part")))
-        .unionByName(hyd.select(col("source"), col("_count_all"),
-          lit("hyd").as("part")))
-        .orderBy(col("part"), col("source").asc_nulls_first)
-    }),
-
-    // INDEX-ONLY `IS NULL` count (r16): count(where: {source: null}) is
-    // the census question the index's meta row already answers — zero
-    // jobs of ANY kind when fresh (one bounded meta read), because null
-    // tuples never reach the postings and their count is maintained
-    // there across refreshes. Prisma's equals-null leaf routes through
-    // Model.indexNullCountSources with the same tripwire discipline;
-    // a residual conjunct hydrates. Shares the null-planted lifecycle
-    // fixture with q_group_indexed.
-    "q_count_null_indexed" -> ((s, dir) => {
-      val (src, idx) = vidxGroupFixture(s, dir)
-      var sourceTouched = false
-      val model = new graft.query.Model(
-        df = () => { sourceTouched = true; src.snapshot() },
-        primaryKey = "doc_id",
-        indexNullCountSources = Map("source" -> (() => idx.countNulls())))
-      val n = model.count(Some(graft.query.Field("source",
-        graft.query.StringF(equals = Some(None)))))
-      require(!sourceTouched,
-        "q_count_null_indexed: the IS NULL count must never invoke df()")
-      val n2 = model.count(Some(graft.query.And(Seq(
-        graft.query.Field("source", graft.query.StringF(equals = Some(None))),
-        graft.query.Field("n_chars", graft.query.CmpF(gte = Some(100L)))))))
-      require(sourceTouched,
-        "q_count_null_indexed: a residual conjunct must hydrate through df()")
-      s.range(1).select(lit(n).as("n_null"), lit(n2).as("n_hydrated"))
-    }),
-
-    // TRAINING the quality head — the half q_quality_classifier assumed
-    // away (it scores an exported model; this one produces it). Logistic
-    // regression by full-batch gradient descent over the same hashed
-    // bag-of-words features, in the integer fixed-point discipline that
-    // makes q_kmeans/q_pagerank hash-exact: per-doc milli features by
-    // truncating division, exact DECIMAL gradient folds (order-
-    // independent under any shuffle), one float division + sigmoid per
-    // doc per round mirrored term-for-term, HALF_UP weight updates. The
-    // label is a seed heuristic (docs containing the token 'join') — the
-    // FineWeb-Edu recipe of bootstrapping a cheap signal into a scalable
-    // scorer. The oracle unrolls all 3 rounds as CTE pairs; the output
-    // is the trained weight table, the exact frame scoreWithModel loads.
-    "q_quality_train" -> ((s, dir) => {
-      val docs = Tables.documents(s, dir).withColumn("y",
-        array_contains(
-          graft.functions.TextFunctions.tokens(col("text")), "join")
-          .cast("int"))
-      operators.QualityClassifier.train(par(s, docs), "text", "doc_id", "y",
-          dim = 256, iters = 3, lr = 500.0)
-        .orderBy(col("bucket"))
-    }),
-
-    // Mixture weighting: per-source fractional epochs (the pretraining
-    // "N epochs of source X" recipe), deterministic hash-draw for the
-    // fractional copy, exploded with a 1-based epoch tag.
-    "q_mixture" -> ((s, dir) =>
-      operators.Mixing.mixture(Tables.documents(s, dir).filter(col("doc_id") < 100),
-          col("text"), col("source"),
-          weights = Map("src0" -> 2.5, "src1" -> 1.0), defaultEpochs = 0.5)
-        .select(col("doc_id"), col("source"), col("epoch").cast("long").as("epoch"))
-        .orderBy(col("doc_id"), col("epoch"))),
-
-    // Sequence-packing plan (concatenate-then-chunk): per-source running
-    // char offset → context-window index + in-chunk offset; one
-    // partitioned window per stream, streams pack in parallel.
-    "q_packing" -> ((s, dir) =>
-      operators.Packing.concatChunks(Tables.documents(s, dir),
-          stream = col("source"), order = col("doc_id"),
-          sizeCol = col("n_chars"), capacity = 4096L)
-        .select(col("doc_id"), col("source"),
-          col("chunk").cast("long").as("chunk"),
-          col("chunk_offset").cast("long").as("chunk_offset"))
-        .orderBy(col("doc_id"))),
-
-    // Shard assignment: 100 consecutive rows of the global (source,
-    // doc_id) order per output shard — the two-pass distributed ranking
-    // again, no single-reducer row numbering.
-    "q_sharding" -> ((s, dir) =>
-      operators.Packing.assignShards(Tables.documents(s, dir),
-          Seq(col("source"), col("doc_id")), rowsPerShard = 100L)
-        .select(col("doc_id"), col("source"), col("shard").cast("long").as("shard"))
-        .orderBy(col("doc_id"))),
-
-    // Token-BALANCED sharding: shards cut on a cumulative token budget
-    // (what the trainer's loader wants), via the two-pass distributed
-    // prefix sum — sum() OVER (ORDER BY ...) semantics with no
-    // single-reducer window.
-    "q_shard_budget" -> ((s, dir) =>
-      operators.Packing.assignShardsByTokenBudget(
-          par(s, Tables.documents(s, dir)).select(col("doc_id"), col("source"),
-            TextFunctions.tokenCount(col("text")).cast("long").as("n_tok")),
-          Seq(col("source"), col("doc_id")), col("n_tok"), budget = 5000L)
-        .select(col("doc_id"), col("source"), col("n_tok"), col("shard"))
-        .orderBy(col("doc_id"))),
-
-    // Gopher-style rule filtering (Rae et al. 2021 §A1.1): per-doc
-    // surface stats + pass/fail verdict, pure codegen'd column algebra —
-    // the narrow scan-side filter a 1000-executor read applies for free.
-    "q_gopher" -> ((s, dir) =>
-      operators.QualityRules.gopherStats(
-          par(s, Tables.documents(s, dir).select(col("doc_id"), col("text"))),
-          "text", operators.QualityRules.Thresholds(minWords = 40, minStopwordHits = 1))
-        .select(col("doc_id"), col("n_words"),
-          round(col("mean_word_len"), 6).as("mean_word_len"),
-          round(col("symbol_ratio"), 6).as("symbol_ratio"),
-          round(col("alpha_frac"), 6).as("alpha_frac"),
-          col("sw_hits"), col("keep"))
-        .orderBy(col("doc_id"))),
-
-    // C4 line-level cleaning (Raffel et al. 2020 §2.2) over a
-    // deterministic LINED fixture (the synthetic corpus has no newlines
-    // or punctuation, so the gate rebuilds each doc as 8-word lines:
-    // every (doc_id+i)%3==0 line terminated with '.', %3==1 left bare
-    // — dropped by the terminal-punct rule — and %3==2 suffixed with
-    // ' {' — dropped by the banned-fragment rule). The oracle replays
-    // BOTH the fixture construction and the cleaning.
-    "q_c4_clean" -> ((s, dir) => {
-      val docs = par(s, Tables.documents(s, dir)).select(col("doc_id"), col("text"))
-      val lined = docs
-        .withColumn("__w", graft.functions.Barrier.evalOnce(split(col("text"), " ")))
-        .withColumn("text2", array_join(
-          transform(sequence(lit(0), ceil(size(col("__w")) / 8.0).cast("int") - 1), i =>
-            concat(array_join(slice(col("__w"), i * 8 + 1, lit(8)), " "),
-              when((col("doc_id") + i) % 3 === 0, lit("."))
-                .when((col("doc_id") + i) % 3 === 1, lit(""))
-                .otherwise(lit(" {")))), "\n"))
-      operators.QualityRules.c4LineClean(lined, "text2", minLineWords = 3, minLines = 1)
-        .select(col("doc_id"), col("n_lines"), col("n_kept"), col("text_clean"))
-        .orderBy(col("doc_id"))
-    }),
-
-    // Vocabulary building + token-id encoding (the corpus-side half of
-    // tokenizer training): top-20 tokens by (freq desc, token asc)
-    // become ids 1..20, docs encode as id sequences with 0 for OOV. The
-    // vocab is a bounded driver list rebroadcast as a map literal —
-    // scan-side element_at per token, no join, no shuffle beyond the
-    // one vocabulary aggregation.
-    "q_vocab_encode" -> ((s, dir) =>
-      operators.CorpusAudit.encodeTokenIds(
-          par(s, Tables.documents(s, dir)), "doc_id", "text", vocabSize = 20)
-        .orderBy(col("doc_id"))),
-
-    // Distributed BPE merge training (operators/Bpe.scala): 8 iterations
-    // of weighted pair-count → deterministic argmax → literal-replace
-    // rewrite over the distinct-word frame. The trained merge table IS
-    // the output; the oracle unrolls the identical 8 iterations as
-    // chained CTEs (same fixpoint-replace application, same
-    // count-desc/pair-asc tie-break).
-    "q_bpe_train" -> ((s, dir) =>
-      operators.Bpe.train(Tables.documents(s, dir), "text", numMerges = 8)
-        .orderBy(col("step"))),
-
-    // Unigram-LM tokenizer training (r17, operators/UnigramLm.scala) —
-    // the SentencePiece half of the subword world beside BPE: seed
-    // vocabulary from occurrence-counted substrings, integer micro
-    // log-prob scores (one rounded ln per piece per round), two hard-EM
-    // rounds of Viterbi segmentation → usage counts → prune-unused →
-    // rescore. The Viterbi runs as a codegen'd scan-side kernel over
-    // the distinct-word frame with the metadata-sized vocabulary as a
-    // codegen reference; the oracle unrolls BOTH the EM rounds and the
-    // per-position DP (words truncated to 8 chars bound the unroll
-    // depth) including the backward tie-toward-longest-piece recovery —
-    // a slip anywhere in seeding, scoring, segmentation, or pruning
-    // hash-mismatches.
-    "q_unigram_train" -> ((s, dir) =>
-      operators.UnigramLm.train(Tables.documents(s, dir), "text")
-        .orderBy(col("piece"))),
-
-    // The unigram inference half (the q_bpe_encode sibling): every
-    // distinct corpus word Viterbi-segmented under the trained final
-    // scores — one codegen'd scan over the distinct-word frame, vocab
-    // as a codegen reference, no join. The oracle re-runs the full
-    // training unroll plus ONE more DP pass and re-assembles each
-    // word's pieces left-to-right by end position.
-    "q_unigram_segment" -> ((s, dir) =>
-      operators.UnigramLm.segmentWords(Tables.documents(s, dir), "text")
-        .orderBy(col("word"))),
-
-    // Deterministic weighted interleaving (operators/Mixing.scala): the
-    // materialized global training order under stride scheduling —
-    // source srcN gets weight N%4+1 (derived from the name so the
-    // oracle replays it), per-source rank windows + the two-pass global
-    // position, virtual-time ties broken by (source, id).
-    "q_interleave" -> ((s, dir) => {
-      val docs = Tables.documents(s, dir).select(col("doc_id"), col("source"))
-      operators.Mixing.interleaveByWeight(par(s, docs), "doc_id", "source",
-          expr("CAST(substring(source, 4) AS INT) % 4 + 1"))
-        .select(col("doc_id"), col("source"), col("global_pos"))
-        .orderBy(col("global_pos"))
-    }),
-
-    // The inference half: every distinct corpus word segmented under the
-    // 8 trained merges — one scan-side chain of literal replaces over
-    // the distinct-word frame; the oracle replays training AND
-    // application in the same generated CTE chain (segment mode).
-    "q_bpe_encode" -> ((s, dir) =>
-      operators.Bpe.segment(Tables.documents(s, dir), "text", numMerges = 8)
-        .orderBy(col("word"))),
-
-    // HTML → training-text extraction (functions/HtmlKernels.scala) —
-    // the crawl pipeline's step zero, driven over a full adversarial
-    // page built FROM each document's text (script with a fake </p>
-    // inside a string, style with a bare '>', comments, uppercase tags,
-    // an attribute containing '>', inline <B>/<a> mid-paragraph, pure-
-    // link nav + footer, and every supported entity form). The correct
-    // extraction is closed-form in the token list — paragraphs of 8
-    // tokens, each suffixed with the decoded ' & <tag> M! end' — so the
-    // oracle replays it symbolically: any slip in tag walking, entity
-    // decoding, block segmentation, or the jusText-style density/word-
-    // floor boilerplate rule hash-mismatches. The whole extraction is
-    // one codegen'd scan-side column: at 100 TB this is a single linear
-    // pass over the payload bytes, embarrassingly parallel.
-    "q_html_extract" -> ((s, dir) => {
-      val H = graft.functions.HtmlExpressions
-      Tables.documents(s, dir)
-        .select(col("doc_id"),
-          H.htmlSynth(col("doc_id"), col("text")).as("html"))
-        .select(col("doc_id"),
-          H.htmlText(col("html")).as("text_out"),
-          H.htmlStats(col("html")).as("st"))
-        .select(col("doc_id"), col("text_out"),
-          element_at(col("st"), 1).as("n_blocks"),
-          element_at(col("st"), 2).as("n_kept"),
-          element_at(col("st"), 3).as("n_drop_link"),
-          element_at(col("st"), 4).as("n_drop_short"),
-          element_at(col("st"), 5).as("kept_chars"))
-        .orderBy(col("doc_id"))
-    }),
-
-    // WARC container walk (sources/WarcKernels.scala) — how a web corpus
-    // physically arrives: Common Crawl's .warc.gz layout (per-record gzip
-    // members, CRLF header blocks, Content-Length-framed payloads, the
-    // two-CRLF record separator). Each document becomes a 3-record
-    // archive (request / response / metadata) whose response body is the
-    // q_html_extract adversarial page, and the records explode back out
-    // with their types, target URIs, and the embedded HTTP status/MIME —
-    // so the gate proves gzip member decode, the strict record walk, and
-    // the HTTP split against a symbolic oracle. Fail-closed parsing
-    // (truncation, CRC damage, bad separators → ZERO records, never
-    // partial) is spec-pinned in WarcSpec. Scale shape: gzip is not
-    // splittable, so the FILE is the parallelism unit — exactly how CC
-    // ships (64k files/crawl); the walk itself is one linear pass.
-    "q_warc_records" -> ((s, dir) => {
-      val W = graft.sources.WarcExpressions
-      val H = graft.functions.HtmlExpressions
-      par(s, Tables.documents(s, dir))
-        .select(col("doc_id"), explode(W.warcRecords(W.warcSynth(
-          col("doc_id"), H.htmlSynth(col("doc_id"), col("text"))))).as("r"))
-        .select(col("doc_id"),
-          col("r.pos").cast("long").as("pos"),
-          col("r.rec_type").as("rec_type"),
-          col("r.uri").as("uri"),
-          col("r.http_status").cast("long").as("http_status"),
-          col("r.mime").as("mime"))
-        .orderBy(col("doc_id"), col("pos"))
-    }),
-
-    // The complete crawl front door in ONE scan-side plan: .warc.gz
-    // bytes → gzip member decode → WARC record walk → HTTP header/body
-    // split → HTML boilerplate-stripped main text (Warc.pages shape).
-    // The response body round-trips byte-exactly through gzip + WARC
-    // framing + HTTP Content-Length into the SAME closed-form extraction
-    // the q_html_extract oracle computes — a slip anywhere in the chain
-    // (a lost CRLF, an off-by-one payload bound, a charset mangle)
-    // hash-mismatches the text.
-    "q_warc_extract" -> ((s, dir) => {
-      val W = graft.sources.WarcExpressions
-      val H = graft.functions.HtmlExpressions
-      par(s, Tables.documents(s, dir))
-        .select(col("doc_id"), W.warcPage(W.warcSynth(col("doc_id"),
-          H.htmlSynth(col("doc_id"), col("text")))).as("p"))
-        .select(col("doc_id"), col("p.uri").as("uri"),
-          H.htmlText(col("p.body")).as("text_out"))
-        .orderBy(col("doc_id"))
-    }),
-
-    // HTTP chunked transfer-encoding through the same front door: real
-    // Common Crawl response records frequently arrive Transfer-Encoding:
-    // chunked, and a walker that takes the post-header bytes verbatim
-    // leaks chunk-size lines into the training text. The synth frames
-    // the SAME adversarial page into 46-byte chunks with the three traps
-    // a lazy dechunker falls into — a chunk extension (`;pin=1`),
-    // UPPERCASE hex size, and a trailer header after the 0-chunk — and
-    // the extraction must still equal the q_warc_extract closed form
-    // byte for byte (dechunking is transparent). The malformed-ladder
-    // fail-closed vector is spec-pinned in WarcSpec.
-    "q_warc_chunked" -> ((s, dir) => {
-      val W = graft.sources.WarcExpressions
-      val H = graft.functions.HtmlExpressions
-      par(s, Tables.documents(s, dir))
-        .select(col("doc_id"), W.warcPage(W.warcSynthChunked(col("doc_id"),
-          H.htmlSynth(col("doc_id"), col("text")))).as("p"))
-        .select(col("doc_id"), col("p.uri").as("uri"),
-          H.htmlText(col("p.body")).as("text_out"))
-        .orderBy(col("doc_id"))
-    }),
-
-    // Charset-aware body decode: a double-digit share of the real web is
-    // still Latin-1/cp1252, and an unconditional UTF-8 read mojibakes it
-    // SILENTLY (the bytes stay bytes; only the text is wrong — no oracle
-    // but a transcoding one can catch it). The synth encodes the page
-    // windows-1252 with planted 0xE9/0x93/0x94/0xEF bytes and exercises
-    // both declaration paths — even ids declare charset=ISO-8859-1 in
-    // the HTTP Content-Type (which must fold to cp1252, the WHATWG label
-    // rule: browsers never decode the latin-1 label family as actual
-    // Latin-1), odd ids carry only a <meta charset> for the HTML5
-    // prescan sniff. The no-label UTF-8-validate→cp1252 fallback is
-    // spec-pinned in WarcSpec.
-    "q_warc_charset" -> ((s, dir) => {
-      val W = graft.sources.WarcExpressions
-      val H = graft.functions.HtmlExpressions
-      par(s, Tables.documents(s, dir))
-        .select(col("doc_id"),
-          W.warcPage(W.warcSynthCharset(col("doc_id"), col("text"))).as("p"))
-        .select(col("doc_id"), col("p.uri").as("uri"),
-          H.htmlText(col("p.body")).as("text_out"))
-        .orderBy(col("doc_id"))
-    }),
-
-    // WET — the EXTRACTED-text sibling Common Crawl publishes beside
-    // each WARC, and what most LLM pipelines actually consume:
-    // `conversion` records carrying plain text (no HTTP envelope, no
-    // HTML). The synth re-lines each doc into 8-token lines, so
-    // Content-Length framing over embedded newlines must round-trip
-    // EXACTLY (a CRLF-vs-LF slip or an off-by-one payload bound lands
-    // on a different string); the warcinfo member must walk through
-    // without contributing a row.
-    "q_wet_text" -> ((s, dir) => {
-      val W = graft.sources.WarcExpressions
-      par(s, Tables.documents(s, dir))
-        .select(col("doc_id"), explode(W.wetTexts(
-          W.warcSynthWet(col("doc_id"), col("text")))).as("p"))
-        .select(col("doc_id"), col("p.uri").as("uri"),
-          col("p.text").as("text_out"))
-        .orderBy(col("doc_id"))
-    }),
-
-    // MULTI-PAGE archives through the Warc.pages shape: a real crawl
-    // `.warc.gz` carries thousands of fetches, and a walker that takes
-    // only the FIRST response per archive silently drops the rest (the
-    // round-14 pages() bug — found in review, fixed to explode
-    // warcPages; this gate pins the fix under oracle). Each doc becomes
-    // a TWO-fetch archive (its page plus a shifted twin) and BOTH
-    // responses must walk out with their own target URIs.
-    "q_warc_pages" -> ((s, dir) => {
-      val W = graft.sources.WarcExpressions
-      val H = graft.functions.HtmlExpressions
-      // half the corpus: the gate pins the multi-record WALK, and each
-      // row already costs two full gzip+WARC round-trips — the even
-      // half proves the same algebra at half the by-nature-linear price
-      par(s, Tables.documents(s, dir))
-        .filter(pmod(col("doc_id"), lit(2)) === 0)
-        .select(col("doc_id"),
-          concat(
-            W.warcSynth(col("doc_id"),
-              H.htmlSynth(col("doc_id"), col("text"))),
-            W.warcSynth(col("doc_id") + 1000000L,
-              H.htmlSynth(col("doc_id"), col("text")))).as("bytes"))
-        .select(col("doc_id"), explode(W.warcPages(col("bytes"))).as("p"))
-        .select(col("doc_id"), col("p.uri").as("uri"),
-          H.htmlText(col("p.body")).as("text_out"))
-        .orderBy(col("doc_id"), col("uri"))
-    }),
-
-    // The STREAMING WARC walk as the oracle-gated path (r16): at 100 TB
-    // the crawl front door is Warc.pagesStream — O(one record) heap per
-    // task instead of the expression path's whole-decompressed-archive
-    // materialization — so IT is the walk that must hash-match, not just
-    // spec-test (the same rule that gates q_dup_clusters_dist's
-    // distributed twin). The synthesized corpus lands on disk first as
-    // real multi-member `.warc.gz` files (one per partition — Common
-    // Crawl's own shape: members concatenate, gzip restarts per record
-    // pair), then the bounded-heap walk reads them back through
-    // binaryFile's path listing + the growing-prefix record iterator.
-    // FULL corpus, TWO records per member pair — this restores the
-    // multi-record coverage q_warc_pages halved in r15.
-    "q_warc_stream_walk" -> ((s, dir) => {
-      val W = graft.sources.WarcExpressions
-      val H = graft.functions.HtmlExpressions
-      val out = tempDir("graft-warcstream-q")
-      // par BEFORE the per-row gzip synth AND the landing: the single
-      // parquet file otherwise caps both the synth and the walk at ONE
-      // task (one archive = one file = one walk partition) on a 32-core
-      // box; gzip members are not splittable, so the FILE is the walk's
-      // parallelism unit — exactly the many-small-archives layout a
-      // real crawl ships
-      par(s, Tables.documents(s, dir))
-        .select(concat(
-          W.warcSynth(col("doc_id"),
-            H.htmlSynth(col("doc_id"), col("text"))),
-          W.warcSynth(col("doc_id") + 1000000L,
-            H.htmlSynth(col("doc_id"), col("text")))).as("bytes"))
-        .foreachPartition { (it: Iterator[org.apache.spark.sql.Row]) =>
-          if (it.hasNext) {
-            val pid = org.apache.spark.TaskContext.getPartitionId()
-            val f = new java.io.FileOutputStream(s"$out/part-$pid.warc.gz")
-            try it.foreach(r => f.write(r.getAs[Array[Byte]](0)))
-            finally f.close()
-          }
-        }
-      graft.sources.Warc.pagesStream(s, out)
-        .select(col("uri"), col("text").as("text_out"))
-        .orderBy(col("uri"))
-    }),
-
-    // OUTLINK extraction (r16): every crawl pipeline's frontier and every
-    // link-quality signal starts at "which URLs does this page link to" —
-    // htmlLinks walks the <a href>s under the SAME recovery rules as the
-    // text extraction (script/style subtrees are not links, comments
-    // skipped, quoted '>' safe), urlResolve absolutizes each against the
-    // page's own URL (RFC 3986 §5.2). The synth page's links are a
-    // closed form of the token list — 3 nav links, one per 8-token
-    // paragraph with >= 3 tokens (token #3 of the chunk), 2 footer
-    // links — so the oracle replays every href, position by position.
-    "q_link_graph" -> ((s, dir) => {
-      val H = graft.functions.HtmlExpressions
-      val U = graft.functions.UrlExpressions
-      val pageUrl = concat(lit("https://site-"), pmod(col("doc_id"), lit(97)),
-        lit(".example/page/"), col("doc_id"))
-      Tables.documents(s, dir)
-        .select(col("doc_id"), pageUrl.as("page_url"),
-          posexplode(H.htmlLinks(H.htmlSynth(col("doc_id"), col("text")))))
-        .select(col("doc_id"), (col("pos") + 1).cast("long").as("idx"),
-          U.urlResolve(col("page_url"), col("col")).as("link"))
-        .orderBy(col("doc_id"), col("idx"))
-    }),
-
-    // CRAWL POLITENESS (r16): robots.txt per RFC 9309 — the decision a
-    // crawler makes BEFORE every fetch. The synth file plants the
-    // protocol's corners: group selection (the graftbot group must
-    // shadow the `*` group entirely), longest-match precedence (a
-    // longer Allow beats its Disallow prefix), wildcard+anchor rules
-    // (/*.pdf$), non-rule lines (Crawl-delay/Sitemap/comments) ignored
-    // for matching, and the `*` fallback for an unlisted agent. Three
-    // decisions per doc; the oracle replays each as a closed-form CASE.
-    "q_robots" -> ((s, dir) => {
-      val R = graft.sources.RobotsExpressions
-      val txt = R.robotsSynth(col("doc_id"))
-      val k = pmod(col("doc_id"), lit(5))
-      val pathA = when(pmod(col("doc_id"), lit(4)) === 0,
-          concat(lit("/blocked-"), k, lit("/page")))
-        .when(pmod(col("doc_id"), lit(4)) === 1,
-          concat(lit("/blocked-"), k, lit("/ok/page")))
-        .when(pmod(col("doc_id"), lit(4)) === 2, lit("/private/x"))
-        .otherwise(concat(lit("/doc-"), k, lit(".pdf")))
-      def row(tag: String, agent: String, p: org.apache.spark.sql.Column) =
-        Tables.documents(s, dir).select(col("doc_id"),
-          lit(tag).as("probe"), p.as("path"),
-          R.robotsEval(txt, lit(agent), p).as("d"))
-      row("bot", "GraftBot/1.0", pathA)
-        .unionByName(row("other_sub", "OtherBot/2.0", lit("/private/sub")))
-        .unionByName(row("other_pub", "OtherBot/2.0", lit("/private/pub")))
-        .select(col("doc_id"), col("probe"), col("path"),
-          col("d.allowed").as("allowed"), col("d.rule").as("rule"))
-        .orderBy(col("doc_id"), col("probe"))
-    }),
-
-    // Sitemap discovery + extraction (r16): the robots.txt `Sitemap:`
-    // directive (file-wide, group-independent) chains into the urlset
-    // walk — <loc> values in document order, XML entities decoded,
-    // whitespace trimmed. Together with q_robots/q_link_graph this
-    // closes the crawl frontier loop: allowed? → seeds → outlinks.
-    "q_sitemap" -> ((s, dir) => {
-      val R = graft.sources.RobotsExpressions
-      val fromRobots = Tables.documents(s, dir)
-        .select(col("doc_id"),
-          posexplode(R.robotsSitemaps(R.robotsSynth(col("doc_id")))))
-        .select(col("doc_id"), lit(0L).as("idx"), col("col").as("loc"))
-      val fromSitemap = Tables.documents(s, dir)
-        .select(col("doc_id"),
-          posexplode(R.sitemapLocs(R.sitemapSynth(col("doc_id")))))
-        .select(col("doc_id"), (col("pos") + 1).cast("long").as("idx"),
-          col("col").as("loc"))
-      fromRobots.unionByName(fromSitemap)
-        .orderBy(col("doc_id"), col("idx"))
-    }),
-
-    // CRAWL-DELAY surfacing (r17): the politeness scheduler needs the
-    // delay NEXT TO the allow/deny verdict — parse captures each group's
-    // Crawl-delay in integer millis (fractional seconds are in the
-    // wild). The synth plants per-id delays in three places: `k.5` s in
-    // the first graftbot block, a fixed 2 s in a SECOND rule-less
-    // graftbot block (the RFC 9309 §2.2.1 group-combining must merge
-    // them; effective = max, the conservative read), 1 s on the `*`
-    // group, and -1 for a file with no groups at all. The reference
-    // analog is the fixed 3 s pacing its runner hardcodes
-    // (src/runner/locator.ts:160) — here the file's own value wins.
-    "q_crawl_delay" -> ((s, dir) => {
-      val R = graft.sources.RobotsExpressions
-      val txt = R.robotsSynth(col("doc_id"))
-      Tables.documents(s, dir)
-        .select(col("doc_id"),
-          R.robotsCrawlDelay(txt, lit("GraftBot/1.0")).as("bot_delay_ms"),
-          R.robotsCrawlDelay(txt, lit("OtherBot/2.0")).as("star_delay_ms"),
-          R.robotsCrawlDelay(lit("# no groups"), lit("GraftBot/1.0"))
-            .as("none_delay_ms"))
-        .orderBy(col("doc_id"))
-    }),
-
-    // IN-PAGE directives (r17): <meta name=robots> noindex/nofollow and
-    // <link rel=canonical> — canonical is the strongest crawl-dedup
-    // signal after URL normalization (the page names its own canonical
-    // URL; RefinedWeb/CC pipelines collapse on it before any content
-    // hash). Planted corners: uppercase tag/attr case, `none` = both
-    // flags, whitespace-padded rel token lists, entity-decoded hrefs,
-    // relative canonicals resolved against the page URL (RFC 3986),
-    // FIRST-canonical-wins on a planted duplicate, decoys inside
-    // <script> and comments that must NOT count, and a no-directives
-    // page (nulls). The oracle replays every branch as a CASE.
-    "q_canonical" -> ((s, dir) => {
-      val H = graft.functions.HtmlExpressions
-      val U = graft.functions.UrlExpressions
-      val k = pmod(col("doc_id"), lit(97))
-      val pageUrl = concat(lit("https://site-"), k,
-        lit(".example/page/"), col("doc_id"))
-      val m4 = pmod(col("doc_id"), lit(4))
-      val m3 = pmod(col("doc_id"), lit(3))
-      val meta = when(m4 === 0,
-          lit("<META name=\"robots\" content=\"NOINDEX, nofollow\">"))
-        .when(m4 === 1, lit("<meta name=\"robots\" content=\" noindex \">"))
-        .when(m4 === 2, lit("<meta name=robots content=\"none\">"))
-        .otherwise(
-          lit("<meta name=\"description\" content=\"noindex is not here\">"))
-      val canon = when(m3 === 0, concat(
-          lit("<link rel=\"canonical\" href=\"https://canon-"), k,
-          lit(".example/c/"), col("doc_id"),
-          // the duplicate must lose to the first one
-          lit("\"><link rel=\"canonical\" href=\"/dup-ignored\">")))
-        .when(m3 === 1, concat(
-          lit("<LINK rel=\" CANONICAL alternate\" href=\"/canon/"),
-          col("doc_id"), lit("?a=1&amp;b=2\">")))
-        .otherwise(lit("<link rel=\"stylesheet\" href=\"/style.css\">"))
-      val html = concat(lit("<html><head>"),
-        lit("<script>var s = '<link rel=\"canonical\" href=\"/decoy\">';" +
-          "var m = '<meta name=\"robots\" content=\"noindex\">';</script>"),
-        lit("<!-- <meta name=\"robots\" content=\"nofollow\"> -->"),
-        meta, canon,
-        lit("</head><body><p>some page words here</p></body></html>"))
-      Tables.documents(s, dir)
-        .select(col("doc_id"), pageUrl.as("page_url"),
-          H.htmlDirectives(html).as("d"))
-        .select(col("doc_id"),
-          col("d.noindex").as("noindex"),
-          col("d.nofollow").as("nofollow"),
-          col("d.canonical").as("canonical"),
-          when(col("d.canonical").isNotNull,
-            U.urlResolve(col("page_url"), col("d.canonical")))
-            .as("canonical_abs"))
-        .orderBy(col("doc_id"))
-    }),
-
-    // CANONICAL-COLLAPSE dedup (r17): the crawl-dedup step rel=canonical
-    // exists for — URLs sharing a declared canonical collapse to ONE
-    // representative BEFORE any content hash runs (RefinedWeb drops a
-    // double-digit CC share by URL identity alone; canonical catches
-    // what spelling normalization cannot). Key = the page's canonical
-    // target (absolute or resolved relative), else its own normalized
-    // URL — everything then NORMALIZED so 'HTTP://Site-K...:80' spells
-    // one key. Representative = min doc_id per key (partitioned window,
-    // bounded by the largest dup group). The planted corpus shares
-    // canonical targets across doc_id%50 groups so real clusters form;
-    // the oracle replays key construction and the window.
-    "q_canonical_dedup" -> ((s, dir) => {
-      val H = graft.functions.HtmlExpressions
-      val U = graft.functions.UrlExpressions
-      val k = pmod(col("doc_id"), lit(97))
-      val m3 = pmod(col("doc_id"), lit(3))
-      val g = pmod(col("doc_id"), lit(50))
-      // deliberately un-normalized page spelling: the key path must
-      // normalize it away
-      val pageUrl = concat(lit("HTTP://Site-"), k,
-        lit(".Example.COM:80/page/"), col("doc_id"))
-      val canonLink = when(m3 === 0, concat(
-          lit("<link rel=\"canonical\" href=\"https://canon-"), g,
-          lit(".example/main\">")))
-        .when(m3 === 1, concat(lit("<link rel=\"canonical\" href=\"/c/"),
-          g, lit("\">")))
-        .otherwise(lit("<p>no canonical here</p>"))
-      val html = concat(lit("<html><head>"), canonLink,
-        lit("</head><body><p>some page words</p></body></html>"))
-      val keyed = Tables.documents(s, dir)
-        .select(col("doc_id"), pageUrl.as("page_url"),
-          H.htmlDirectives(html).getField("canonical").as("canonical"))
-        .select(col("doc_id"),
-          U.urlNormalize(coalesce(
-            U.urlResolve(col("page_url"), col("canonical")),
-            col("page_url"))).as("canon_key"))
-      val w = org.apache.spark.sql.expressions.Window
-        .partitionBy(col("canon_key"))
-      keyed
-        .withColumn("rep_id", min(col("doc_id")).over(w))
-        .withColumn("is_dup", col("doc_id") =!= col("rep_id"))
-        .select(col("doc_id"), col("canon_key"), col("rep_id"), col("is_dup"))
-        .orderBy(col("doc_id"))
-    }),
-
-    // QUALITY-AWARE cluster representative selection (r17): the
-    // keep-one rule that FOLLOWS dedup clustering — FineWeb/RefinedWeb
-    // keep the BEST member of each dup group, not an arbitrary one.
-    // Clusters here are the canonical-URL identity groups
-    // (q_canonical_dedup's key, doc_id%50 — every member has its OWN
-    // text); quality is the classifier's EXACT integer milliweight sum
-    // (QualityClassifier.scoreMilli — no float enters the ordering), so
-    // the argmax fold (min over (-score, id): highest score, smallest
-    // id on an exact tie) is bit-stable under any partitioning. One
-    // scan-side score, one keyed aggregation — no self-join, state
-    // bounded by cluster count.
-    "q_rep_select" -> ((s, dir) => {
-      val keyed = Tables.documents(s, dir)
-        .select(col("doc_id"), col("text"),
-          concat(lit("https://canon-"), pmod(col("doc_id"), lit(50)),
-            lit(".example/main")).as("canon_key"))
-      val scored = operators.QualityClassifier
-        .scoreMilli(keyed, "text", "doc_id", dim = 4096)
-      keyed.select(col("doc_id"), col("canon_key"))
-        .join(scored, Seq("doc_id"))
-        .groupBy(col("canon_key"))
-        .agg(count(lit(1)).as("n_members"),
-          min(struct((-col("score_milli")).as("neg"),
-            col("doc_id").as("id"))).as("__m"))
-        .select(col("canon_key"), col("n_members"),
-          col("__m.id").as("rep_id"),
-          (-col("__m.neg")).as("rep_score_milli"))
-        .orderBy(col("canon_key"))
-    }),
-
-    // ANCHOR-TEXT corpus (r16): the (href, anchor) pairs of every link —
-    // anchor text is among the strongest relevance/label signals the web
-    // gives away for free (it trains retrievers and labels link targets
-    // with OTHER pages' words). Same recovery rules as htmlLinks; the
-    // anchor is the element's text content up to its matching (or
-    // implicit) close, entity-decoded and whitespace-normalized. The
-    // synth page's pairs are a closed form: nav labels, each >=3-token
-    // paragraph's linked token (its own anchor), footer labels.
-    "q_anchor_text" -> ((s, dir) => {
-      val H = graft.functions.HtmlExpressions
-      Tables.documents(s, dir)
-        .select(col("doc_id"),
-          posexplode(H.htmlAnchors(H.htmlSynth(col("doc_id"), col("text")))))
-        .select(col("doc_id"), (col("pos") + 1).cast("long").as("idx"),
-          col("col.href").as("href"), col("col.anchor").as("anchor"))
-        .orderBy(col("doc_id"), col("idx"))
-    }),
-
-    // Crawl-frontier source scoring (r16): host→host edges from the
-    // extracted outlinks (Graph.crawlHostEdges — scan-side generate +
-    // ONE keyed aggregation) feeding the existing integer fixed-point
-    // PageRank. The planted pages exercise all three href forms a real
-    // crawl sees (absolute, protocol-relative //host, root-relative)
-    // and give every page one cross-host pair plus a self-link; the
-    // oracle rebuilds the same edge multiset arithmetically and unrolls
-    // four propagation rounds (the q_pagerank pattern).
-    "q_crawl_rank" -> ((s, dir) => {
-      val pageUrl = concat(lit("https://site-"), pmod(col("doc_id"), lit(97)),
-        lit(".example/page/"), col("doc_id"))
-      val html = concat(
-        lit("<html><body><p><a href=\"https://site-"),
-        pmod(col("doc_id") * 7 + 3, lit(97)),
-        lit(".example/a\">x</a> <a href=\"//site-"),
-        pmod(col("doc_id") * 13 + 5, lit(97)),
-        lit(".example/b\">y</a> <a href=\"/self\">z</a></p></body></html>"))
-      val pages = Tables.documents(s, dir)
-        .select(pageUrl.as("url"), html.as("html"))
-      val edges = operators.Graph.crawlHostEdges(pages, "url", "html")
-        .select(
-          regexp_extract(col("src_host"), "site-([0-9]+)", 1)
-            .cast("long").as("src"),
-          regexp_extract(col("dst_host"), "site-([0-9]+)", 1)
-            .cast("long").as("dst"),
-          col("w"))
-      val nodes = s.range(97).select(col("id"))
-      operators.Graph.pageRankFixedPoint(edges, nodes, iters = 4)
-        .orderBy(col("id"))
-    }),
-
-    // ROBOTS FRONTIER composition (r17): the parse-once-per-host shape
-    // the Robots scaladoc prescribes, as the gated path — dedupe to
-    // hosts, robots_rules parses each host's file ONCE on the 97-row
-    // host frame, the parsed rule arrays broadcast-join back over the
-    // frontier, and robots_decide runs the per-URL match walk with no
-    // parse. Composed with the crawl ordering: the same planted link
-    // graph as q_crawl_rank ranks hosts (integer fixed-point PageRank)
-    // and the frontier comes out (host_rank DESC, doc_id) — verdict and
-    // priority in one frame, which IS a polite crawl scheduler's input.
-    // FrontierSpec asserts the O(hosts) parse-count contract via the
-    // RobotsKernels.parseCalls counter; the oracle replays both the
-    // q_robots decision CASE (re-keyed by host id) and the unrolled
-    // rank rounds.
-    "q_robots_frontier" -> ((s, dir) => {
-      val R = graft.sources.RobotsExpressions
-      val k = pmod(col("doc_id"), lit(97))
-      val k5 = pmod(k, lit(5))
-      val m = pmod(col("doc_id"), lit(4))
-      val path = when(m === 0,
-          concat(lit("/blocked-"), k5, lit("/page-"), col("doc_id")))
-        .when(m === 1,
-          concat(lit("/blocked-"), k5, lit("/ok/page-"), col("doc_id")))
-        .when(m === 2, concat(lit("/private/doc-"), col("doc_id")))
-        .otherwise(concat(lit("/files/doc-"), col("doc_id"), lit(".pdf")))
-      val frontier = Tables.documents(s, dir).select(col("doc_id"),
-        concat(lit("https://site-"), k, lit(".example"), path).as("url"))
-      // ONE robots.txt per HOST (not per page): text keyed by host id,
-      // so rules use (host id % 5) — matching the frontier's k5
-      val robots = s.range(97).select(
-        concat(lit("site-"), col("id"), lit(".example")).as("host"),
-        R.robotsSynth(col("id")).as("robots_txt"))
-      // host importance from the same planted link graph as q_crawl_rank
-      val pageUrl = concat(lit("https://site-"), k,
-        lit(".example/page/"), col("doc_id"))
-      val html = concat(
-        lit("<html><body><p><a href=\"https://site-"),
-        pmod(col("doc_id") * 7 + 3, lit(97)),
-        lit(".example/a\">x</a> <a href=\"//site-"),
-        pmod(col("doc_id") * 13 + 5, lit(97)),
-        lit(".example/b\">y</a> <a href=\"/self\">z</a></p></body></html>"))
-      val pages = Tables.documents(s, dir)
-        .select(pageUrl.as("url"), html.as("html"))
-      val edges = operators.Graph.crawlHostEdges(pages, "url", "html")
-        .select(
-          regexp_extract(col("src_host"), "site-([0-9]+)", 1)
-            .cast("long").as("src"),
-          regexp_extract(col("dst_host"), "site-([0-9]+)", 1)
-            .cast("long").as("dst"),
-          col("w"))
-      val ranks = operators.Graph
-        .pageRankFixedPoint(edges, s.range(97).select(col("id")), iters = 4)
-        .select(concat(lit("site-"), col("id"), lit(".example")).as("host"),
-          col("r").as("host_rank"))
-      graft.sources.Frontier
-        .politeFrontier(frontier, "url", robots, "host", "robots_txt",
-          agent = "GraftBot/1.0")
-        .join(broadcast(ranks), Seq("host"))
-        .select(col("doc_id"), col("host"), col("path"), col("allowed"),
-          col("rule"), col("host_rank"))
-        .orderBy(col("host_rank").desc, col("doc_id"))
-    }),
-
-    // FRONTIER SCHEDULE (r17): the politeness loop closed — verdicts
-    // from the parse-once-per-host composition, each host's OWN
-    // Crawl-delay (graftbot: max((host%5)·1000+500, 2000) ms from the
-    // combined groups), and stride scheduling: allowed URLs get a dense
-    // per-host fetch index and a scheduled offset idx·delay. This is
-    // the table a fetch executor consumes directly; the reference
-    // hardcodes a fixed 3 s sleep between fetches
-    // (src/runner/locator.ts:160) — here the file's declared delay
-    // paces each host independently. Window partitions on host
-    // (bounded state); the oracle replays verdicts, row_number, and
-    // the delay arithmetic.
-    "q_frontier_schedule" -> ((s, dir) => {
-      val R = graft.sources.RobotsExpressions
-      val k = pmod(col("doc_id"), lit(97))
-      val k5 = pmod(k, lit(5))
-      val m = pmod(col("doc_id"), lit(4))
-      val path = when(m === 0,
-          concat(lit("/blocked-"), k5, lit("/page-"), col("doc_id")))
-        .when(m === 1,
-          concat(lit("/blocked-"), k5, lit("/ok/page-"), col("doc_id")))
-        .when(m === 2, concat(lit("/private/doc-"), col("doc_id")))
-        .otherwise(concat(lit("/files/doc-"), col("doc_id"), lit(".pdf")))
-      val frontier = Tables.documents(s, dir).select(col("doc_id"),
-        concat(lit("https://site-"), k, lit(".example"), path).as("url"))
-      val robots = s.range(97).select(
-        concat(lit("site-"), col("id"), lit(".example")).as("host"),
-        R.robotsSynth(col("id")).as("robots_txt"))
-      val delays = robots.select(col("host"),
-        R.robotsCrawlDelay(col("robots_txt"), lit("GraftBot/1.0"))
-          .as("delay_ms"))
-      val verdicts = graft.sources.Frontier
-        .politeFrontier(frontier, "url", robots, "host", "robots_txt",
-          agent = "GraftBot/1.0")
-        .join(broadcast(delays), Seq("host"))
-      graft.sources.Frontier
-        .politeSchedule(verdicts, "host", "delay_ms", Seq(col("doc_id")))
-        .select(col("doc_id"), col("host"), col("fetch_idx"),
-          col("delay_ms"), col("scheduled_ms"))
-        .orderBy(col("host"), col("fetch_idx"))
-    }),
-
-    // CJK-aware tokenization (r16): unsegmented scripts carry no spaces,
-    // so the letter-run tokenizer made an entire Chinese/Japanese
-    // sentence ONE token — BM25 idf, minhash shingles, and n-gram
-    // quality all silently degraded on non-segmented languages. The
-    // kernel now emits each Han/kana code point as its own token
-    // (character unigrams, the standard IR baseline). The planted corpus
-    // mixes Latin runs, doc-id-indexed Han + Hiragana code points, a
-    // digit run, and an Ext-B surrogate-pair ideograph; the oracle
-    // REPLAYS the segmentation position by position (the q_bpe_train
-    // generated-CTE pattern), so a boundary slip anywhere —
-    // run-not-flushed, surrogate split, wrong range — hash-mismatches.
-    "q_cjk_tokens" -> ((s, dir) => {
-      def cps(from: Int, n: Int) = array((0 until n).map(i =>
-        lit(new String(Character.toChars(from + i)))): _*)
-      val c1 = element_at(cps(0x4E00, 16),
-        (pmod(col("doc_id"), lit(16)) + 1).cast("int"))
-      val c2 = element_at(cps(0x4E10, 8),
-        (pmod(col("doc_id"), lit(8)) + 1).cast("int"))
-      val k = element_at(cps(0x3042, 10),
-        (pmod(col("doc_id"), lit(10)) + 1).cast("int"))
-      val extB = lit(new String(Character.toChars(0x20000)))
-      val text = concat(lit("Alpha"), c1, c2, lit(" bravo"), k,
-        lit("7 "), c1, extB)
-      Tables.documents(s, dir)
-        .select(col("doc_id"),
-          posexplode(graft.functions.TextFunctions.tokens(text)))
-        .select(col("doc_id"), (col("pos") + 1).cast("long").as("idx"),
-          col("col").as("token"))
-        .orderBy(col("doc_id"), col("idx"))
-    }),
-
-    // URL canonicalization (functions/UrlKernels.scala) — the key a
-    // crawl pipeline dedups on (RefinedWeb drops a double-digit share of
-    // CC by URL alone). RFC 3986 §6.2 syntax subset, every rule planted
-    // in the synth spelling: scheme+host case, the scheme's default
-    // port, %7e→~ unreserved decode beside %2f→%2F reserved uppercasing,
-    // /a/../docs/./ dot-segment removal, fragment drop. The oracle emits
-    // the expected canonical string directly, so any rule firing wrong —
-    // or firing on the wrong component — mismatches.
-    "q_url_normalize" -> ((s, dir) => {
-      val U = graft.functions.UrlExpressions
-      val k = pmod(col("doc_id"), lit(97))
-      val raw = concat(
-        when(pmod(col("doc_id"), lit(2)) === 0, lit("HTTP://"))
-          .otherwise(lit("HTTPS://")),
-        when(pmod(col("doc_id"), lit(3)) === 0,
-            concat(lit("WWW.Blog-"), k, lit(".Example.CO.UK")))
-          .otherwise(concat(lit("Site-"), k, lit(".Example.COM"))),
-        when(pmod(col("doc_id"), lit(2)) === 0, lit(":80"))
-          .otherwise(lit(":443")),
-        lit("/a/../docs/./%7epg/%2fx/"), col("doc_id"),
-        lit("?q=%41b&tag=c%20d"), lit("#sec-"), col("doc_id"))
-      Tables.documents(s, dir)
-        .select(col("doc_id"), U.urlNormalize(raw).as("url_norm"))
-        .select(col("doc_id"), col("url_norm"),
-          U.urlHost(col("url_norm")).as("host"),
-          U.registeredDomain(U.urlHost(col("url_norm"))).as("domain"))
-        .orderBy(col("doc_id"))
-    }),
-
-    // URL-level curation end to end: two raw spellings per page collapse
-    // to one canonical key (dedup), a registered-domain blocklist
-    // anti-joins away banned sites (broadcast — the blocklist is tiny,
-    // the corpus is not), and a path-depth heuristic drops crawler-trap
-    // shapes; survivors roll up per registrable domain. At 100 TB this
-    // is the cheapest curation pass there is: normalize + distinct on
-    // the key, one broadcast anti-join, zero corpus-side state.
-    "q_url_filter" -> ((s, dir) => {
-      val U = graft.functions.UrlExpressions
-      val k = pmod(col("doc_id"), lit(97))
-      val host = when(pmod(col("doc_id"), lit(3)) === 0,
-          concat(lit("WWW.Site-"), k, lit(".Example-"), pmod(k, lit(10)),
-            lit(".CO.UK")))
-        .otherwise(concat(lit("Site-"), k, lit(".Example-"), pmod(k, lit(10)),
-          lit(".COM")))
-      val deep = when(pmod(col("doc_id"), lit(7)) === 0,
-        lit("/d1/d2/d3/d4")).otherwise(lit(""))
-      val pathq = concat(deep, lit("/page/"), col("doc_id"), lit("?s=1"))
-      val varA = concat(lit("http://"), host, lit(":80"), pathq, lit("#a"))
-      val varB = concat(lit("HTTP://"), host, pathq)
-      val normed = Tables.documents(s, dir)
-        .select(explode(array(varA, varB)).as("raw"))
-        .select(U.urlNormalize(col("raw")).as("url")).distinct()
-      val withDom = normed.select(col("url"),
-        U.registeredDomain(U.urlHost(col("url"))).as("domain"))
-      // crawler-trap heuristic: '/'-count past the scheme's two
-      val depth = length(col("url")) -
-        length(regexp_replace(col("url"), "/", "")) - lit(2)
-      val block = s.createDataFrame(Seq(
-        Tuple1("example-0.com"), Tuple1("example-7.co.uk"))).toDF("domain")
-      withDom.filter(depth <= lit(3))
-        .join(broadcast(block), Seq("domain"), "left_anti")
-        .groupBy(col("domain")).agg(count(lit(1)).as("n_urls"))
-        .orderBy(col("domain"))
-    }),
-
-    // Exact substring dedup (operators/SubstringDedup.scala) over the
-    // corpus plus PLANTED cross-doc substrings: every doc_id % 10 == 0
-    // spawns a twin (+100000) carrying its first 60 tokens verbatim — a
-    // guaranteed ≥ 50-token shared run, so each twin must report the
-    // merged span [0, 59] (plus any organic ≥50-token repeats, which the
-    // oracle derives identically). Ownership = smallest doc_id, so spans
-    // land on the twins, never the originals.
-    "q_substring_dedup" -> ((s, dir) =>
-      operators.SubstringDedup.dupSpans(
-          par(s, plantedTwinCorpus(s, dir)), "doc_id", "text", k = 50)
-        .orderBy(col("doc_id"), col("span_start"))),
-
-    // The actionable half of exact substring dedup: the detected spans
-    // applied back to the corpus — every token inside a span dropped,
-    // text canonically single-space rejoined for every doc (fully-covered
-    // twins collapse to n_kept 0 / empty text). Same planted-twin corpus
-    // as q_substring_dedup so the two gates cross-check.
-    "q_substring_scrub" -> ((s, dir) => {
-      val corpus = par(s, plantedTwinCorpus(s, dir))
-      val spans = operators.SubstringDedup.dupSpans(
-        corpus, "doc_id", "text", k = 50)
-      operators.SubstringDedup.removeSpans(corpus, spans, "doc_id", "text")
-        .orderBy(col("doc_id"))
-    }),
-
-    // Same operator at REALISTIC tokenizer-vocabulary size — the corpus's
-    // ~31 distinct tokens are first diversified deterministically (token i
-    // of doc d gets suffix (d*31+i) mod 997 → ~30k distinct tokens, the
-    // identical derivation in both engines), then encoded at vocabSize
-    // 5000: far above the literal-map threshold, so this exercises the
-    // broadcast-join path a 32k–100k BPE vocab needs (a 5k-entry map
-    // LITERAL is a codegen/constant-pool hazard — PlanSpec asserts the
-    // join). ids 1..5000 by (freq desc, token asc), 0 = OOV.
-    "q_vocab_encode_large" -> ((s, dir) => {
-      val derived = par(s, Tables.documents(s, dir))
-        .select(col("doc_id"), array_join(
-          transform(split(col("text"), " "), (t, i) =>
-            concat(t, lit("_"),
-              ((col("doc_id") * 31 + i.cast("long")) % 997).cast("string"))),
-          " ").as("text2"))
-      operators.CorpusAudit.encodeTokenIds(
-          derived, "doc_id", "text2", vocabSize = 5000)
-        .orderBy(col("doc_id"))
-    }),
-
-    // Intra-document line dedup over a lined fixture with PLANTED
-    // within-page repetition: each doc's 8-word lines plus a re-appended
-    // copy of its first third — the first-occurrence pass must strip
-    // exactly the planted copies (plus any organic repeats, which the
-    // oracle computes identically). Order-preserving, scan-side.
-    "q_line_dedup" -> ((s, dir) => {
-      val docs = par(s, Tables.documents(s, dir)).select(col("doc_id"), col("text"))
-      val lined = docs
-        .withColumn("__w", graft.functions.Barrier.evalOnce(split(col("text"), " ")))
-        .withColumn("__ls", graft.functions.Barrier.evalOnce(
-          transform(sequence(lit(0), ceil(size(col("__w")) / 8.0).cast("int") - 1),
-            i => array_join(slice(col("__w"), i * 8 + 1, lit(8)), " "))))
-        .withColumn("text3", array_join(
-          concat(col("__ls"),
-            slice(col("__ls"), lit(1), ceil(size(col("__ls")) / 3.0).cast("int"))),
-          "\n"))
-      // maxLines pinned above any fixture size: the oracle SQL dedups
-      // unconditionally, so the guard (spec-tested in TrainingOpsSpec)
-      // must not fire here even if a future corpus grows 10k+-line docs
-      Dedup.dedupLinesWithinDoc(lined, "text3", maxLines = Int.MaxValue)
-        .select(col("doc_id"), col("n_lines"), col("n_unique"), col("text_dedup"))
-        .orderBy(col("doc_id"))
-    }),
-
-    // Out-of-vocabulary rate vs the corpus's own top-k vocabulary (k=20
-    // here — the synthetic corpus has ~31 distinct tokens; CCNet-style
-    // curation signal, minus the LM): TakeOrdered vocabulary, broadcast
-    // probe — the corpus never self-joins. The gate runs the STAGED
-    // token path (tokenize once, feed both the vocabulary count and the
-    // probe join from the materialized stream) — the shape a 100 TB
-    // corpus needs, where tokenization dominates the scan.
-    "q_oov" -> ((s, dir) =>
-      operators.CorpusAudit.oovRate(Tables.documents(s, dir), "text",
-          "doc_id", vocabSize = 20, stageTokens = true)
-        .select(col("doc_id"), col("n_tokens"), col("oov"), col("oov_rate"))
-        .orderBy(col("doc_id"))),
-
-    // Exact dedup: byte-exact winners via md5-keyed first-row-per-group.
-    "q_dedup_exact" -> ((s, dir) =>
-      Dedup.exactByKey(Tables.documents(s, dir), md5(col("text")), "doc_id")
-        .select(col("doc_id"), col("source"))
-        .orderBy(col("doc_id"))),
-
-    // C4/RefinedWeb-style boilerplate removal: 8-token windows occurring
-    // verbatim in MORE than one document get dropped and the documents
-    // reassembled from the survivors — the planted organic near-dup pairs
-    // share exactly such windows, so the result is non-trivially changed
-    // and still exactly SQL-expressible.
-    "q_segment_dedup" -> ((s, dir) =>
-      Dedup.segmentDedup(
-          par(s, Tables.documents(s, dir).select(col("doc_id"), col("text"))),
-          "text", "doc_id", segTokens = 8, maxDocFreq = 1)
-        .select(col("doc_id"), col("text"),
-          col("droppedSegments").as("n_dropped"))
-        .orderBy(col("doc_id"))),
-
-    // Benchmark decontamination: every tenth document plays the held-out
-    // benchmark; corpus docs sharing >=1 distinct 8-gram with it are
-    // flagged with their hit counts (the organic near-dup pairs straddle
-    // the split, so the result is non-trivial and exactly checkable).
-    "q_decontaminate" -> ((s, dir) => {
-      val docs = Tables.documents(s, dir).select(col("doc_id"), col("text"))
-      val bench = docs.filter(pmod(col("doc_id"), lit(10)) === 0)
-      val corpus = docs.filter(pmod(col("doc_id"), lit(10)) =!= 0)
-      Dedup.decontaminationHits(corpus, bench, "text", "doc_id",
-          n = 8, minHits = 1)
-        .select(col("doc_id"), col("nHits").as("n_hits"))
-        .orderBy(col("doc_id"))
-    }),
-
-    // Incremental near-dedup: the 100 TB regime sketches ONLY the new
-    // batch and band-joins it against the prebuilt corpus index — here
-    // the batch is an id-shifted copy of the corpus, so every new doc
-    // must resolve to its original with jaccard exactly 1.0 (identical
-    // shingle sets). Organic matches are filtered to the planted diff,
-    // as in q_dedup_minhash.
-    "q_dedup_incr" -> ((s, dir) => {
-      val docs = par(s, Tables.documents(s, dir).select(col("doc_id"), col("text")))
-      val index = Dedup.minhashIndex(docs, "text", "doc_id")
-      val batch = docs.select((col("doc_id") + 10000L).as("doc_id"), col("text"))
-      // persistSketch: the batch sketch feeds BOTH sides of the
-      // within-batch join plus the vs-corpus probe — uncached it would
-      // re-tokenize the batch three times. The pair-sized result is
-      // materialized eagerly so the SCOPED release (the Managed handle
-      // unpersists only the sketch this query cached — never the rest of
-      // a shared session's cache) can run inside the query.
-      val managed = Dedup.minhashIncrementalManaged(index, batch, "text", "doc_id",
-        persistSketch = true)
-      val out = managed.df
-        .filter(col("dup_of") === col("new_id") - 10000L)
-        .select(col("new_id"), col("dup_of"), col("jaccard"))
-        .orderBy(col("new_id"))
-        .localCheckpoint()
-      managed.release()
-      out
-    }),
-
-    // PERSISTENT dedup index (store/DedupIndex, AnnIndex's text
-    // sibling): the corpus sketched ONCE into catalog tables
-    // (sketches + the (k, numHashes) config riding one commit with the
-    // change-feed cursor), copies arriving via ordinary store writes,
-    // the refresh re-sketching ONLY the delta through CdfTail, and a
-    // REOPENED handle (no sketch-the-corpus path exists on it) probing
-    // the new batch against the persisted sketches. Output = the planted
-    // copy-of-self pairs at jaccard exactly 1.0 — identical shingle sets
-    // collide in every band regardless of hash family, the same
-    // determinism q_dedup_incr's oracle rests on.
-    "q_dedup_persist" -> ((s, dir) => cachedResult(s, "q_dedup_persist", dir) {
-      import org.apache.spark.sql.types._
-      val cat = new graft.store.Catalog(tempDir("graft-deduppersist-q"))
-      val docs = Tables.documents(s, dir).select(col("doc_id"), col("text"))
-      val src = new graft.store.GraftTable(s, cat, "docs", StructType(Seq(
-        StructField("doc_id", LongType, nullable = false),
-        StructField("text", StringType, nullable = true))),
-        uniqueKeys = Seq(Seq("doc_id")))
-      src.createMany(docs)
-      val idx = graft.store.DedupIndex.build(src, "d1", "text", "doc_id",
-        nBuckets = 4)
-      // the incremental batch is a QUARTER of the corpus — batch-sized
-      // work is the operator's whole point, and the full-corpus pass
-      // already happened once at build
-      val batch = docs.filter(pmod(col("doc_id"), lit(4)) === 0)
-        .select((col("doc_id") + 10000L).as("doc_id"), col("text"))
-      src.createMany(batch)
-      require(idx.refresh().nonEmpty,
-        "q_dedup_persist: the insert window must drain")
-      require(idx.refresh().isEmpty,
-        "q_dedup_persist: caught up — a second refresh drains nothing")
-      require(idx.sketch.snapshot().count() == docs.count() + batch.count(),
-        "q_dedup_persist: the delta must be absorbed incrementally")
-      graft.store.DedupIndex.open(src, "d1", "text", "doc_id")
-        .dupsAgainst(batch)
-        .filter(col("dup_of") === col("new_id") - 10000L)
-        .select(col("new_id"), col("dup_of"), col("jaccard"))
-        .orderBy(col("new_id"))
-    }),
-
-    // STREAMING ingest × persistent index: documents arrive through the
-    // exactly-once streaming sink, and the SAME foreachBatch keeps the
-    // dedup index current — StoreSink's watermark commit then
-    // DedupIndex.refresh's cursor commit, each exactly-once under its
-    // own manifest key, so a replayed batch is absorbed by the sink AND
-    // drains nothing into the index. The probe runs from a reopened
-    // handle against sketches that were maintained batch-by-batch, never
-    // built from a full-corpus pass. Same planted-copy determinism as
-    // q_dedup_persist.
-    "q_stream_index" -> ((s, dir) => {
-      import org.apache.spark.sql.types._
-      val tmp = tempDir("graft-streamidx-q")
-      val cat = new graft.store.Catalog(tmp + "/cat")
-      val src = new graft.store.GraftTable(s, cat, "docs", StructType(Seq(
-        StructField("doc_id", LongType, nullable = false),
-        StructField("text", StringType, nullable = true))),
-        uniqueKeys = Seq(Seq("doc_id")))
-      val idx = graft.store.DedupIndex.build(src, "d1", "text", "doc_id",
-        nBuckets = 4)
-      val docSchema = Tables.documents(s, dir).schema
-      val appendSink = graft.streaming.StoreSink.exactlyOnceAppend(src, "ingest")
-      val sinkAndRefresh: (DataFrame, Long) => Unit = (df, batchId) => {
-        appendSink(df, batchId)
-        idx.refresh()
-        ()
-      }
-      val q = s.readStream.schema(docSchema)
-        .parquet(s"$dir/documents.parque[t]")
-        .select(col("doc_id"), col("text"))
-        .writeStream.foreachBatch(sinkAndRefresh)
-        .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
-        .option("checkpointLocation", tmp + "/ckpt").start()
-      q.awaitTermination(180000)
-      val docs = Tables.documents(s, dir).select(col("doc_id"), col("text"))
-      require(idx.sketch.snapshot().count() == docs.count(),
-        "q_stream_index: every streamed doc must be sketched")
-      // replayed batch: sink absorbs it, the index drains nothing
-      val cur = idx.currentThrough()
-      sinkAndRefresh(docs, 0L)
-      require(idx.currentThrough() == cur,
-        "q_stream_index: a replayed batch must not advance the index")
-      val batch = docs.filter(pmod(col("doc_id"), lit(4)) === 0)
-        .select((col("doc_id") + 10000L).as("doc_id"), col("text"))
-      graft.store.DedupIndex.open(src, "d1", "text", "doc_id")
-        .dupsAgainst(batch)
-        .filter(col("dup_of") === col("new_id") - 10000L)
-        .select(col("new_id"), col("dup_of"), col("jaccard"))
-        .orderBy(col("new_id"))
-    }),
-
-    // STREAMING ingest × persistent BM25 index — the q_stream_index
-    // composition for the THIRD index type, and the common production
-    // shape for keyword search (a continuously ingested corpus). The
-    // index is built on the EMPTY table, so every posting and both
-    // corpus scalars arrive exclusively through per-batch change-feed
-    // refreshes riding behind StoreSink's exactly-once append; a
-    // deliberately REPLAYED batch is absorbed by the sink's watermark
-    // and must leave the postings cursor unmoved (the signed scalar
-    // fold would double N/Σdl otherwise). The final search runs from a
-    // reopened handle over postings that were maintained batch-by-batch
-    // — never a corpus tokenize — and must hash-match a from-scratch
-    // token-BM25 replay of the whole corpus.
-    "q_stream_bm25" -> ((s, dir) => {
-      import org.apache.spark.sql.types._
-      val tmp = tempDir("graft-streambm25-q")
-      val cat = new graft.store.Catalog(tmp + "/cat")
-      val src = new graft.store.GraftTable(s, cat, "docs", StructType(Seq(
-        StructField("doc_id", LongType, nullable = false),
-        StructField("text", StringType, nullable = true))),
-        uniqueKeys = Seq(Seq("doc_id")))
-      val idx = graft.store.Bm25Index.build(src, "r1", "text", "doc_id",
-        nBuckets = 4)
-      val docSchema = Tables.documents(s, dir).schema
-      val appendSink = graft.streaming.StoreSink.exactlyOnceAppend(src, "ingest")
-      val sinkAndRefresh: (DataFrame, Long) => Unit = (df, batchId) => {
-        appendSink(df, batchId)
-        idx.refresh()
-        ()
-      }
-      val q = s.readStream.schema(docSchema)
-        .parquet(s"$dir/documents.parque[t]")
-        .select(col("doc_id"), col("text"))
-        .writeStream.foreachBatch(sinkAndRefresh)
-        .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
-        .option("checkpointLocation", tmp + "/ckpt").start()
-      q.awaitTermination(180000)
-      val docs = Tables.documents(s, dir).select(col("doc_id"), col("text"))
-      require(idx.stats()._1 == docs.count(),
-        "q_stream_bm25: every streamed doc must be counted in N")
-      // replayed batch: the sink absorbs it, the postings drain nothing
-      val cur = idx.currentThrough()
-      sinkAndRefresh(docs, 0L)
-      require(idx.currentThrough() == cur,
-        "q_stream_bm25: a replayed batch must not advance the index")
-      graft.store.Bm25Index.open(src, "r1", "text", "doc_id")
-        .search(Seq("vector", "stream", "window"))
-        .orderBy(col("doc_id"))
-    }),
-
-    // STREAMING CRAWL INGESTION — the crawl front door composed with the
-    // exactly-once streaming tier, end to end: the corpus lands on disk
-    // as eight multi-record .warc.gz archives (many gzip members per
-    // file — exactly how a crawler ships fetches), a real AvailableNow
-    // file stream picks them up a few files per trigger, every batch
-    // walks its archives (gzip → WARC → HTTP → HTML extraction, all
-    // scan-side) and appends the extracted pages through StoreSink's
-    // batch-id watermark. A deliberately REPLAYED batch must be a no-op
-    // — the crash-recovery contract a continuously-ingesting corpus
-    // depends on. The hash gate is the q_html_extract closed form
-    // reached through file landing + streaming + the store round-trip.
-    "q_stream_crawl" -> ((s, dir) => {
-      import org.apache.spark.sql.types._
-      val tmp = tempDir("graft-streamcrawl-q")
-      val W = graft.sources.WarcExpressions
-      val H = graft.functions.HtmlExpressions
-      val warcDir = tmp + "/warc"
-      new java.io.File(warcDir).mkdirs()
-      Tables.documents(s, dir).select(W.warcSynth(col("doc_id"),
-          H.htmlSynth(col("doc_id"), col("text"))).as("bytes"))
-        .repartition(8)
-        .foreachPartition { (it: Iterator[org.apache.spark.sql.Row]) =>
-          if (it.hasNext) {
-            val pid = org.apache.spark.TaskContext.getPartitionId()
-            val out = new java.io.FileOutputStream(
-              s"$warcDir/crawl-$pid.warc.gz")
-            try it.foreach(r => out.write(r.getAs[Array[Byte]]("bytes")))
-            finally out.close()
-          }
-        }
-      val cat = new graft.store.Catalog(tmp + "/cat")
-      val store = new graft.store.GraftTable(s, cat, "pages", StructType(Seq(
-        StructField("doc_id", LongType, nullable = false),
-        StructField("text", StringType, nullable = true))),
-        uniqueKeys = Seq(Seq("doc_id")))
-      val appendSink = graft.streaming.StoreSink.exactlyOnceAppend(
-        store, "crawl")
-      def extract(files: DataFrame): DataFrame = files
-        .select(explode(W.warcPages(col("content"))).as("p"))
-        .select(
-          regexp_extract(col("p.uri"), "/page/([0-9]+)$", 1)
-            .cast("long").as("doc_id"),
-          H.htmlText(col("p.body")).as("text"))
-      val q = s.readStream.format("binaryFile")
-        .schema(StructType(Seq(
-          StructField("path", StringType),
-          StructField("modificationTime", TimestampType),
-          StructField("length", LongType),
-          StructField("content", BinaryType))))
-        .option("maxFilesPerTrigger", 3)
-        .load(warcDir)
-        .writeStream.foreachBatch { (df: DataFrame, bid: Long) =>
-          appendSink(extract(df), bid); ()
-        }
-        .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
-        .option("checkpointLocation", tmp + "/ckpt").start()
-      q.awaitTermination(180000)
-      val expected = Tables.documents(s, dir).count()
-      require(store.snapshot().count() == expected,
-        "q_stream_crawl: every page must land exactly once")
-      // replayed batch 0: the sink's watermark absorbs it
-      appendSink(extract(s.read.format("binaryFile").load(warcDir)), 0L)
-      require(store.snapshot().count() == expected,
-        "q_stream_crawl: a replayed batch must not duplicate pages")
-      store.snapshot().orderBy(col("doc_id"))
-    }),
-
-    // Streaming ingest maintaining the THIRD persistent index — the
-    // q_stream_index (dedup sketches) / q_stream_bm25 (postings) pattern
-    // completed for the ANN codes table. The codebooks train on a stable
-    // 3/4 prefix BEFORE the stream (a trained artifact must not depend
-    // on nondeterministic batch boundaries); the stream then lands the
-    // remaining quarter through the exactly-once StoreSink with a
-    // per-batch frozen-codebook refresh, so the final index equals the
-    // q_ann_persist build+refresh state regardless of how the source
-    // split into batches — which is why the SAME symbolic oracle replays
-    // it. A deliberately REPLAYED batch must advance neither the store
-    // nor the index cursor.
-    "q_stream_ann" -> ((s, dir) => {
-      import org.apache.spark.sql.types._
-      val tmp = tempDir("graft-streamann-q")
-      val cat = new graft.store.Catalog(tmp + "/cat")
-      val emb = Tables.embeddings(s, dir).select(col("vec_id"), col("embedding"))
-      val src = new graft.store.GraftTable(s, cat, "vecs", StructType(Seq(
-        StructField("vec_id", LongType, nullable = false),
-        StructField("embedding", ArrayType(FloatType), nullable = true))),
-        uniqueKeys = Seq(Seq("vec_id")))
-      src.createMany(emb.filter(pmod(col("vec_id"), lit(4)) =!= 0))
-      val idx = graft.store.AnnIndex.build(src, "e1", "embedding", "vec_id",
-        nCells = 4, m = 4, k = 8, iters = 2)
-      val embSchema = Tables.embeddings(s, dir).schema
-      val appendSink = graft.streaming.StoreSink.exactlyOnceAppend(src, "ingest")
-      val sinkAndRefresh: (DataFrame, Long) => Unit = (df, batchId) => {
-        appendSink(df.filter(pmod(col("vec_id"), lit(4)) === 0)
-          .select(col("vec_id"), col("embedding")), batchId)
-        idx.refresh()
-        ()
-      }
-      val q = s.readStream.schema(embSchema)
-        .parquet(s"$dir/embeddings.parque[t]")
-        .writeStream.foreachBatch(sinkAndRefresh)
-        .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
-        .option("checkpointLocation", tmp + "/ckpt").start()
-      q.awaitTermination(180000)
-      require(src.snapshot().count() == emb.count(),
-        "q_stream_ann: every streamed vector must land in the store")
-      require(idx.codes.snapshot().select(col("id")).distinct().count()
-          == emb.count(),
-        "q_stream_ann: every vector must carry codes after the drain")
-      val cur = idx.currentThrough()
-      sinkAndRefresh(Tables.embeddings(s, dir), 0L) // replayed batch
-      require(idx.currentThrough() == cur,
-        "q_stream_ann: a replayed batch must not advance the index")
-      val queries = emb.filter(col("vec_id") < 10)
-        .select(col("vec_id").as("qid"), col("embedding"))
-      graft.store.AnnIndex.open(src, "e1", "embedding", "vec_id")
-        .search(queries, "qid", nProbe = 2, topk = 5)
-        .orderBy(col("qid"), col("rank"))
-    }),
-
-    // Bloom-accelerated decontamination: identical OUTPUT to
-    // q_decontaminate (the exact verify join kills Bloom false
-    // positives, so the same oracle applies) — only the data movement
-    // differs: a ~10-bit/key sketch probes scan-side inside codegen and
-    // culls the corpus grams BEFORE any join, the path that survives a
-    // benchmark suite too large to broadcast exactly.
-    "q_decontaminate_bloom" -> ((s, dir) => {
-      val docs = Tables.documents(s, dir).select(col("doc_id"), col("text"))
-      val bench = docs.filter(pmod(col("doc_id"), lit(10)) === 0)
-      val corpus = docs.filter(pmod(col("doc_id"), lit(10)) =!= 0)
-      Dedup.decontaminationHitsBloom(corpus, bench, "text", "doc_id",
-          n = 8, minHits = 1, fpp = 0.01)
-        .select(col("doc_id"), col("nHits").as("n_hits"))
-        .orderBy(col("doc_id"))
-    }),
-
-    // Gopher-style repetition signals: total/distinct/top-frequency of
-    // token 3-grams per document plus the duplicate-gram fraction — the
-    // intra-doc repetition gates of quality filtering, one kernel pass.
-    "q_repetition" -> ((s, dir) =>
-      Tables.documents(s, dir)
-        // parity guard: docs under the window size have no 3-grams in the
-        // oracle's lead() formulation (same split on both sides)
-        .filter(size(split(col("text"), " ")) >= 3)
-        // barrier: three stat extractions + the fraction must read ONE
-        // kernel evaluation, not re-inline it per consumer
-        .select(col("doc_id"), graft.functions.Barrier.evalOnce(
-          TextFunctions.repetitionStats(col("text"), 3)).as("__st"))
-        .select(col("doc_id"),
-          try_element_at(col("__st"), lit(1)).as("total_grams"),
-          try_element_at(col("__st"), lit(2)).as("distinct_grams"),
-          try_element_at(col("__st"), lit(3)).as("max_gram_freq"))
-        .withColumn("dup_fraction",
-          (col("total_grams") - col("distinct_grams")).cast("double") /
-            col("total_grams").cast("double"))
-        .orderBy(col("doc_id"))),
-
-    // PII scrub at scan speed (pure codegen'd regexp_replace chain). The
-    // corpus itself is clean, so both engines inject the same
-    // deterministic email/IP/phone built from the doc id, then redact.
-    "q_scrub_pii" -> ((s, dir) => {
-      val dirty = concat(
-        lit("reach user"), col("doc_id"), lit("@example.com or 10.0."),
-        pmod(col("doc_id"), lit(256)), lit("."), pmod(col("doc_id"), lit(100)),
-        lit(" tel 555-867-5309 "), col("text"))
-      par(s, Tables.documents(s, dir))
-        // barrier: n_redacted reads `clean` — unpinned, CollapseProject
-        // inlines the triple-regex rewrite into both consumers and the
-        // scrub runs twice per row (measured 5.8 s → 2.8 s at sf1)
-        .select(col("doc_id"),
-          graft.functions.Barrier.evalOnce(TextFunctions.scrubPii(dirty)).as("clean"))
-        .withColumn("n_redacted",
-          (size(split(col("clean"), "<PII>")) - 1).cast("long"))
-        .orderBy(col("doc_id"))
-    }),
-
-    // Multimodal frame-sampling plan: the synthetic media table is fully
-    // deterministic from media_id, so DuckDB re-derives it with
-    // generate_series and the explode(sequence(0, min(duration, cap),
-    // stride)) plan is oracle-checkable pure arithmetic. Null durations
-    // (images) coalesce to one offset-0 row — the "at least a poster
-    // frame" contract.
-    // REAL byte-level multimodal decode, not plan arithmetic: build a
-    // complete 24bpp BMP per document (id-derived dims and pixels), then
-    // PARSE the actual bytes back — header fields from the little-endian
-    // layout, channel sums from walking the padded bottom-up pixel rows.
-    // The oracle recomputes every output from the format's published
-    // arithmetic (stride = ((3w+3)/4)*4, file size = 54 + stride*h, the
-    // pixel formulas summed symbolically) — any builder/parser offset
-    // slip, stride error, or sign bug hash-mismatches. Scan-side codegen'd
-    // expressions; no shuffle.
-    "q_media_bmp" -> ((s, dir) => {
-      val M = graft.multimodal.MediaExpressions
-      val d = Tables.documents(s, dir)
-        .select(col("doc_id").as("id"),
-          (pmod(col("doc_id"), lit(32)) + 1).cast("int").as("w"),
-          (pmod(col("doc_id"), lit(24)) + 1).cast("int").as("h"))
-      d.withColumn("p", M.bmpParse(M.bmpSynth(col("id"), col("w"), col("h"))))
-        .select(col("id"),
-          element_at(col("p"), 1).as("width"),
-          element_at(col("p"), 2).as("height"),
-          element_at(col("p"), 3).as("bpp"),
-          element_at(col("p"), 4).as("file_size"),
-          element_at(col("p"), 5).as("actual_size"),
-          element_at(col("p"), 6).as("sum_b"),
-          element_at(col("p"), 7).as("sum_g"),
-          element_at(col("p"), 8).as("sum_r"))
-        .orderBy(col("id"))
-    }),
-
-    // REAL COMPRESSED-codec parse, pure JDK: build an 8-bit RGB PNG per
-    // document (zlib-deflated scanlines cycling ALL FIVE RFC 2083
-    // filters, an ancillary tEXt chunk to force a genuine chunk walk,
-    // the stream split across multiple IDAT chunks, CRC32 on every
-    // chunk), then parse the bytes back — inflate, un-filter, sum the
-    // channels. The pixels are the exact bmpSynth formulas, so the
-    // oracle replays the sums symbolically like q_media_bmp; any slip in
-    // deflate framing, chunk reassembly, or filter reconstruction breaks
-    // the sums. multimodal/MediaKernels.pngSynth/pngParse.
-    "q_media_png" -> ((s, dir) => {
-      val M = graft.multimodal.MediaExpressions
-      val d = Tables.documents(s, dir)
-        .select(col("doc_id").as("id"),
-          (pmod(col("doc_id"), lit(16)) + 3).cast("int").as("w"),
-          (pmod(col("doc_id"), lit(11)) + 5).cast("int").as("h"))
-      d.withColumn("p", M.pngParse(M.pngSynth(col("id"), col("w"), col("h"))))
-        .select(col("id"),
-          element_at(col("p"), 1).as("width"),
-          element_at(col("p"), 2).as("height"),
-          element_at(col("p"), 3).as("bit_depth"),
-          element_at(col("p"), 4).as("color_type"),
-          element_at(col("p"), 5).as("sum_r"),
-          element_at(col("p"), 6).as("sum_g"),
-          element_at(col("p"), 7).as("sum_b"))
-        .orderBy(col("id"))
-    }),
-
-    // ADAM7-INTERLACED PNG — the progressive-rendering layout a crawl
-    // corpus meets beside sequential PNGs: seven independently-FILTERED
-    // sub-images whose scanlines interleave positions across the frame.
-    // Interlace is observable through the total sums alone: filters
-    // reference within-pass neighbors, so a decoder that ignores the
-    // pass structure mis-unfilters nearly every byte. Same pixel
-    // formulas as q_media_png under a different dims mix.
-    // multimodal/MediaKernels.pngSynthI/pngParse.
-    "q_media_png_i" -> ((s, dir) => {
-      val M = graft.multimodal.MediaExpressions
-      val d = par(s, Tables.documents(s, dir))
-        .select(col("doc_id").as("id"),
-          (pmod(col("doc_id"), lit(18)) + 3).cast("int").as("w"),
-          (pmod(col("doc_id"), lit(14)) + 3).cast("int").as("h"))
-      d.withColumn("p", M.pngParse(M.pngSynthI(col("id"), col("w"), col("h"))))
-        .select(col("id"),
-          element_at(col("p"), 1).as("width"),
-          element_at(col("p"), 2).as("height"),
-          element_at(col("p"), 3).as("bit_depth"),
-          element_at(col("p"), 4).as("color_type"),
-          element_at(col("p"), 5).as("sum_r"),
-          element_at(col("p"), 6).as("sum_g"),
-          element_at(col("p"), 7).as("sum_b"))
-        .orderBy(col("id"))
-    }),
-
-    // INTERLACED GIF — the 4-pass row shuffle. Total channel sums are
-    // row-permutation-INVARIANT (an interlace-oblivious decoder would
-    // pass them by accident), so the gate also pins the row-PARITY red
-    // sums: pass-2/3/4 rows land on the wrong parity unless the decoder
-    // really walks the 0,8,16…/4,12…/2,6…/odd row map.
-    // multimodal/MediaKernels.gifSynthI/gifParse.
-    "q_media_gif_i" -> ((s, dir) => {
-      val M = graft.multimodal.MediaExpressions
-      val d = Tables.documents(s, dir)
-        .select(col("doc_id").as("id"),
-          (pmod(col("doc_id"), lit(17)) + 2).cast("int").as("w"),
-          (pmod(col("doc_id"), lit(19)) + 2).cast("int").as("h"))
-      d.withColumn("p", M.gifParse(M.gifSynthI(col("id"), col("w"), col("h"))))
-        .select(col("id"),
-          element_at(col("p"), 1).as("width"),
-          element_at(col("p"), 2).as("height"),
-          element_at(col("p"), 3).as("gct_size"),
-          element_at(col("p"), 4).as("min_code_size"),
-          element_at(col("p"), 5).as("sum_r"),
-          element_at(col("p"), 6).as("sum_g"),
-          element_at(col("p"), 7).as("sum_b"),
-          element_at(col("p"), 8).as("sum_r_even"),
-          element_at(col("p"), 9).as("sum_r_odd"))
-        .orderBy(col("id"))
-    }),
-
-    // REAL DICTIONARY-CODER parse, pure JVM: build a GIF89a per document
-    // (256-entry id-derived global palette, GCE + comment extension
-    // blocks forcing a genuine block walk, the index plane LZW-coded
-    // with variable-width 9→12-bit codes split into sub-blocks), then
-    // parse the bytes back — block walk, LZW decode, palette-mapped
-    // channel sums. GIF is palette-indexed, so the oracle replays the
-    // index formula + palette formulas symbolically; any slip in bit
-    // packing, width growth, or the KwKwK case corrupts the sums.
-    // multimodal/MediaKernels.gifSynth/gifParse.
-    "q_media_gif" -> ((s, dir) => {
-      val M = graft.multimodal.MediaExpressions
-      val d = Tables.documents(s, dir)
-        .select(col("doc_id").as("id"),
-          (pmod(col("doc_id"), lit(19)) + 2).cast("int").as("w"),
-          (pmod(col("doc_id"), lit(13)) + 3).cast("int").as("h"))
-      d.withColumn("p", M.gifParse(M.gifSynth(col("id"), col("w"), col("h"))))
-        .select(col("id"),
-          element_at(col("p"), 1).as("width"),
-          element_at(col("p"), 2).as("height"),
-          element_at(col("p"), 3).as("gct_size"),
-          element_at(col("p"), 4).as("min_code_size"),
-          element_at(col("p"), 5).as("sum_r"),
-          element_at(col("p"), 6).as("sum_g"),
-          element_at(col("p"), 7).as("sum_b"))
-        .orderBy(col("id"))
-    }),
-
-    // REAL TRANSFORM-codec parse, pure JVM — baseline 4:2:0 JPEG, the
-    // dominant crawl format AND its dominant sampling: build a T.81
-    // baseline file per document (DQT/DHT segments, spec example Huffman
-    // tables, SOF0 with 2×2 luma sampling, restart intervals,
-    // byte-stuffed entropy data), then parse the bytes back — marker
-    // walk, Huffman tables built FROM the file, multi-block MCUs,
-    // zigzag, dequant, separable IDCT, coverage-counted chroma
-    // upsampling, RSTn resets. Exactness is number theory, not a stub:
-    // luma constant per 8×8 block and chroma constant per 16×16
-    // macroblock survive the downsample AND the DC-step-8 quantization
-    // bit-exactly, so the oracle replays the block formulas
-    // symbolically; the AC/gradient path is spec-covered with error
-    // bounds in both samplings. multimodal/MediaKernels.jpegSynth/
-    // jpegParse.
-    "q_media_jpeg" -> ((s, dir) => {
-      val M = graft.multimodal.MediaExpressions
-      val d = par(s, Tables.documents(s, dir))
-        .select(col("doc_id").as("id"),
-          (pmod(col("doc_id"), lit(21)) + 4).cast("int").as("w"),
-          (pmod(col("doc_id"), lit(15)) + 4).cast("int").as("h"))
-      d.withColumn("p", M.jpegParse(M.jpegSynth(col("id"), col("w"), col("h"))))
-        .select(col("id"),
-          element_at(col("p"), 1).as("width"),
-          element_at(col("p"), 2).as("height"),
-          element_at(col("p"), 3).as("n_components"),
-          element_at(col("p"), 4).as("restart_interval"),
-          element_at(col("p"), 5).as("sum_y"),
-          element_at(col("p"), 6).as("sum_cb"),
-          element_at(col("p"), 7).as("sum_cr"))
-        .orderBy(col("id"))
-    }),
-
-    // PROGRESSIVE JPEG (SOF2) — the largest real-crawl share the
-    // baseline subset missed: per document, a multi-scan T.81 Annex G
-    // file (interleaved DC-first at Al=1, per-component spectral AC
-    // bands, DC + AC refinement scans, file-defined Huffman tables with
-    // real EOBn run codes, RSTn inside every scan), decoded by the
-    // multi-scan path — coefficients accumulate across scans, then one
-    // dequant/IDCT/coverage-sum pass. Exactness: constant blocks make
-    // every AC band pure EOB runs, and DC point-transform + refinement
-    // is (v>>1)<<1 | (v&1) == v, so the same number theory as
-    // q_media_jpeg holds and the oracle replays the plane formulas.
-    // multimodal/MediaKernels.jpegSynthProg/jpegParseProgressive.
-    "q_media_jpeg_prog" -> ((s, dir) => {
-      val M = graft.multimodal.MediaExpressions
-      val d = par(s, Tables.documents(s, dir))
-        .select(col("doc_id").as("id"),
-          (pmod(col("doc_id"), lit(23)) + 4).cast("int").as("w"),
-          (pmod(col("doc_id"), lit(17)) + 4).cast("int").as("h"))
-      d.withColumn("p", M.jpegParse(M.jpegSynthProg(col("id"), col("w"), col("h"))))
-        .select(col("id"),
-          element_at(col("p"), 1).as("width"),
-          element_at(col("p"), 2).as("height"),
-          element_at(col("p"), 3).as("n_components"),
-          element_at(col("p"), 4).as("restart_interval"),
-          element_at(col("p"), 5).as("sum_y"),
-          element_at(col("p"), 6).as("sum_cb"),
-          element_at(col("p"), 7).as("sum_cr"))
-        .orderBy(col("id"))
-    }),
-
-    // REAL RIFF/WAVE parse: build a PCM-16 file per document with an
-    // id-derived junk LIST chunk BETWEEN fmt and data (a parser that
-    // assumes fixed offsets instead of walking chunks fails), then parse
-    // the bytes back and decode the int16 frames into a
-    // sum-of-absolute-amplitudes. Oracle mirrors the chunk arithmetic and
-    // sums the sample formula symbolically.
-    "q_media_wav" -> ((s, dir) => {
-      val M = graft.multimodal.MediaExpressions
-      val d = Tables.documents(s, dir)
-        .select(col("doc_id").as("id"),
-          (pmod(col("doc_id"), lit(2)) + 1).cast("int").as("ch"),
-          (lit(8000) + pmod(col("doc_id"), lit(4)) * 4000).cast("int").as("rate"),
-          (lit(100) + pmod(col("doc_id"), lit(156))).cast("int").as("frames"))
-      d.withColumn("p",
-          M.wavParse(M.wavSynth(col("id"), col("ch"), col("rate"), col("frames"))))
-        .select(col("id"),
-          element_at(col("p"), 1).as("channels"),
-          element_at(col("p"), 2).as("sample_rate"),
-          element_at(col("p"), 3).as("bits"),
-          element_at(col("p"), 4).as("byte_rate"),
-          element_at(col("p"), 5).as("block_align"),
-          element_at(col("p"), 6).as("data_bytes"),
-          element_at(col("p"), 7).as("duration_ms"),
-          element_at(col("p"), 8).as("sum_abs"))
-        .orderBy(col("id"))
-    }),
-
-    "q_media_offsets" -> ((s, _) => {
-      val media = graft.multimodal.Multimodal.synthetic(s, 500)
-      // stride/cap chosen so the synthetic durations (1000..1499 ms)
-      // exercise BOTH branches: rows under 1050 ms are duration-bound
-      // (7 frames), rows at/over it hit the maxFrames cap (8 frames)
-      graft.multimodal.Multimodal
-        .sampleOffsets(media, strideMs = 150L, maxFrames = 8)
-        .select(col("media_id"), col("meta.modality").as("modality"),
-          col("offset_ms"))
-        .orderBy(col("media_id"), col("offset_ms"))
-    }),
-
-    // Multimodal resize metadata rewrite: fit-to-256 preserving aspect
-    // ratio, pure plan (least/greatest/ceil — IEEE op order mirrored in
-    // the oracle parenthesis-for-parenthesis). Audio/video rows carry
-    // null width/height and must pass through as null targets.
-    "q_media_resize" -> ((s, _) => {
-      val media = graft.multimodal.Multimodal.synthetic(s, 500)
-      graft.multimodal.Multimodal.resizePlan(media, maxSide = 256)
-        .select(col("media_id"),
-          col("meta.width").as("width"), col("meta.height").as("height"),
-          col("target_width"), col("target_height"))
-        .orderBy(col("media_id"))
-    }),
-
-    // PERCEPTUAL image dedup — the multimodal counterpart of SimHash
-    // text dedup, composed from the real byte kernels: every document
-    // becomes a 24bpp BMP plus a near-duplicate twin (+1 on one pixel's
-    // blue channel, bmpPerturb), each payload decodes through the
-    // codegen'd 64-bit dHash (9×8 luminance grid over the ACTUAL pixel
-    // rows, gradient-sign bits), and pairs come from the SAME 4×16-bit
-    // Hamming band join SimHash uses (exact recall ≤3 bits, never
-    // all-pairs — the 100 TB shape). The oracle replays the WHOLE
-    // pipeline symbolically: pixel formulas → integer luminance → grid
-    // binning → exact mean comparisons → per-pair differing-bit count,
-    // so any slip in decode, binning, or banding hash-mismatches.
-    "q_media_dedup" -> ((s, dir) => {
-      val M = graft.multimodal.MediaExpressions
-      val d = Tables.documents(s, dir).select(col("doc_id").as("id"),
-        (lit(16) + pmod(col("doc_id"), lit(16))).cast("int").as("w"),
-        (lit(12) + pmod(col("doc_id"), lit(12))).cast("int").as("h"))
-      val base = d.select(col("id").as("img"),
-        M.bmpSynth(col("id"), col("w"), col("h")).as("payload"))
-      val twin = d.select((col("id") + 1000000L).as("img"),
-        M.bmpPerturb(M.bmpSynth(col("id"), col("w"), col("h"))).as("payload"))
-      val hashed = par(s, base.unionByName(twin))
-        .select(col("img"), M.bmpDhash(col("payload")).as("p"))
-        .filter(element_at(col("p"), 1) === 1L)
-        .select(col("img"), element_at(col("p"), 2).as("h64"))
-      Dedup.hamming64Pairs(hashed, "h64", "img",
-        maxHamming = 2, maxBucket = 1 << 20)
-        .filter(col("id_b") === col("id_a") + 1000000L)
-        .orderBy(col("id_a"))
-    }),
-
-    // PERSISTED media signatures (store/MaterializedColumn — the general
-    // shape behind AnnIndex/DedupIndex): the dHash decode pass runs once
-    // per ROW LIFETIME — at build for the base images, at the CDF
-    // refresh for the twins — and the near-dup probe band-joins the
-    // MATERIALIZED hashes without touching a payload byte. Output is
-    // exactly q_media_dedup's (same twins, bands, filter), so the same
-    // symbolic dHash replay gates it; the REQUIREs pin the
-    // incremental-absorption and exactly-once properties.
-    "q_media_index" -> ((s, dir) => cachedResult(s, "q_media_index", dir) {
-      val M = graft.multimodal.MediaExpressions
-      import org.apache.spark.sql.types._
-      val cat = new graft.store.Catalog(tempDir("graft-mediaidx-q"))
-      val d = Tables.documents(s, dir).select(col("doc_id").as("id"),
-        (lit(16) + pmod(col("doc_id"), lit(16))).cast("int").as("w"),
-        (lit(12) + pmod(col("doc_id"), lit(12))).cast("int").as("h"))
-      val src = new graft.store.GraftTable(s, cat, "media", StructType(Seq(
-        StructField("img", LongType, nullable = false),
-        StructField("payload", BinaryType, nullable = true))),
-        uniqueKeys = Seq(Seq("img")))
-      src.createMany(d.select(col("id").as("img"),
-        M.bmpSynth(col("id"), col("w"), col("h")).as("payload")))
-      val derived = Seq(
-        "ok" -> element_at(M.bmpDhash(col("payload")), 1),
-        "h64" -> element_at(M.bmpDhash(col("payload")), 2))
-      val sig = graft.store.MaterializedColumn.build(src, "dhash", "img", derived)
-      src.createMany(d.select((col("id") + 1000000L).as("img"),
-        M.bmpPerturb(M.bmpSynth(col("id"), col("w"), col("h"))).as("payload")))
-      require(sig.refresh().nonEmpty,
-        "q_media_index: the twin window must drain")
-      require(sig.refresh().isEmpty,
-        "q_media_index: caught up — a second refresh drains nothing")
-      require(sig.table.snapshot().count() == 2 * d.count(),
-        "q_media_index: twins must be absorbed incrementally")
-      val hashed = graft.store.MaterializedColumn
-        .open(src, "dhash", "img", derived).frame()
-        .filter(col("ok") === 1L)
-        .select(col("id").as("img"), col("h64"))
-      Dedup.hamming64Pairs(par(s, hashed), "h64", "img",
-        maxHamming = 2, maxBucket = 1 << 20)
-        .filter(col("id_b") === col("id_a") + 1000000L)
-        .orderBy(col("id_a"))
-    }),
-
-    // PERCEPTUAL audio dedup — the WAV member of the sketch family
-    // (SimHash:text :: dHash:image :: energy-contour fingerprint:audio):
-    // every document becomes a PCM-16 RIFF/WAVE clip plus a near-dup twin
-    // (+1 on frame 0/channel 0's int16 sample, wavPerturb), each payload
-    // decodes through the codegen'd 64-bit fingerprint (65 equal-share
-    // time bins over the ACTUAL PCM frames, gradient-sign bits over exact
-    // bin means), and pairs come from the SAME 4×16-bit Hamming band join
-    // the image/text sketches use (exact recall ≤3 bits, never
-    // all-pairs). The oracle replays the WHOLE pipeline symbolically:
-    // sample formula → |amplitude| → 65-bin assignment → exact mean
-    // comparisons → per-pair differing-bit count, so any slip in the
-    // chunk walk, PCM decode, binning, or banding hash-mismatches.
-    "q_media_audio_dedup" -> ((s, dir) => {
-      val M = graft.multimodal.MediaExpressions
-      val d = Tables.documents(s, dir).select(col("doc_id").as("id"),
-        (lit(1) + pmod(col("doc_id"), lit(2))).cast("int").as("ch"),
-        (lit(130) + pmod(col("doc_id"), lit(70))).cast("int").as("fr"))
-      val base = d.select(col("id").as("clip"),
-        M.wavSynth(col("id"), col("ch"), lit(8000), col("fr")).as("payload"))
-      val twin = d.select((col("id") + 1000000L).as("clip"),
-        M.wavPerturb(M.wavSynth(col("id"), col("ch"), lit(8000), col("fr")))
-          .as("payload"))
-      val hashed = par(s, base.unionByName(twin))
-        .select(col("clip"), M.wavEfp(col("payload")).as("p"))
-        .filter(element_at(col("p"), 1) === 1L)
-        .select(col("clip"), element_at(col("p"), 2).as("h64"))
-      Dedup.hamming64Pairs(hashed, "h64", "clip",
-        maxHamming = 2, maxBucket = 1 << 20)
-        .filter(col("id_b") === col("id_a") + 1000000L)
-        .orderBy(col("id_a"))
-    }),
-
-    // The multimodal decode boundary as the custom WHOLE-OPERATOR plan
-    // (plans/MediaFeaturesPlan: logical node + strategy + physical exec
-    // over Tungsten rows): BmpPixelDecoder decodes real BMP payloads to
-    // [mean_r, mean_g, mean_b] float32 features; every 13th payload is
-    // NULL and must yield null features. The oracle replays the pixel
-    // sums symbolically and reproduces the FLOAT32 arithmetic chain
-    // (long→float casts, float multiply/divide) — DuckDB FLOAT ops are
-    // IEEE float32 like the JVM's, so the gate is bit-exact, no rounding.
-    "q_media_features" -> ((s, dir) => {
-      val M = graft.multimodal.MediaExpressions
-      val d = Tables.documents(s, dir).select(col("doc_id").as("media_id"),
-        (lit(8) + pmod(col("doc_id"), lit(16))).cast("int").as("w"),
-        (lit(6) + pmod(col("doc_id"), lit(10))).cast("int").as("h"))
-      val media = d.select(col("media_id"),
-        when(pmod(col("media_id"), lit(13)) === 0, lit(null).cast("binary"))
-          .otherwise(M.bmpSynth(col("media_id"), col("w"), col("h")))
-          .as("payload"))
-      graft.multimodal.Multimodal
-        .withFeatures(media, new graft.multimodal.Multimodal.BmpPixelDecoder)
-        .select(col("media_id"),
-          element_at(col("features"), 1).as("f_r"),
-          element_at(col("features"), 2).as("f_g"),
-          element_at(col("features"), 3).as("f_b"))
-        .orderBy(col("media_id"))
-    }),
-
-    // GVID raw-frame video container: build a deterministic multi-frame
-    // 24bpp clip per document, parse the bytes back (header fields from
-    // the little-endian layout, channel sums from walking every stored
-    // frame), surface integer duration. Oracle mirrors the header
-    // arithmetic and sums the per-frame pixel formulas symbolically —
-    // the video sibling of q_media_bmp/q_media_wav.
-    "q_media_vid" -> ((s, dir) => {
-      val M = graft.multimodal.MediaExpressions
-      val d = Tables.documents(s, dir)
-        .select(col("doc_id").as("id"),
-          (lit(6) + pmod(col("doc_id"), lit(8))).cast("int").as("w"),
-          (lit(5) + pmod(col("doc_id"), lit(6))).cast("int").as("h"),
-          (lit(1) + pmod(col("doc_id"), lit(5))).cast("int").as("fr"),
-          ((lit(12) + pmod(col("doc_id"), lit(25))) * 1000).cast("int").as("fps"))
-      d.withColumn("p", M.vidParse(M.vidSynth(
-          col("id"), col("w"), col("h"), col("fr"), col("fps"))))
-        .select(col("id"),
-          element_at(col("p"), 1).as("width"),
-          element_at(col("p"), 2).as("height"),
-          element_at(col("p"), 3).as("frames"),
-          element_at(col("p"), 4).as("fps_milli"),
-          element_at(col("p"), 5).as("data_bytes"),
-          element_at(col("p"), 6).as("duration_ms"),
-          element_at(col("p"), 7).as("sum_b"),
-          element_at(col("p"), 8).as("sum_g"),
-          element_at(col("p"), 9).as("sum_r"))
-        .orderBy(col("id"))
-    }),
-
-    // PERCEPTUAL video dedup — completes the sketch family across every
-    // modality (SimHash:text :: dHash:image :: energy contour:audio ::
-    // majority-vote dHash:video): every document becomes a multi-frame
-    // GVID clip plus a near-dup twin (+1 on frame 0's first pixel's blue
-    // channel, vidPerturb), each payload decodes through the codegen'd
-    // 64-bit signature (per-frame 9×8-grid gradient-sign dHash, then a
-    // strict majority vote per bit across frames — robust to frame-local
-    // noise the way dHash is to pixel noise), and pairs come from the
-    // SAME 4×16-bit Hamming band join every other sketch uses (exact
-    // recall ≤3 bits, never all-pairs — the 100 TB shape). The oracle
-    // replays the WHOLE pipeline symbolically: per-frame pixel formulas →
-    // integer luminance → grid binning → exact mean comparisons →
-    // per-frame bits → majority vote → per-pair differing-bit count, so
-    // any slip in the frame walk, binning, voting, or banding
-    // hash-mismatches.
-    "q_media_video_dedup" -> ((s, dir) => {
-      val M = graft.multimodal.MediaExpressions
-      val d = Tables.documents(s, dir).select(col("doc_id").as("id"),
-        (lit(6) + pmod(col("doc_id"), lit(8))).cast("int").as("w"),
-        (lit(5) + pmod(col("doc_id"), lit(6))).cast("int").as("h"),
-        (lit(1) + pmod(col("doc_id"), lit(5))).cast("int").as("fr"))
-      def synth = M.vidSynth(col("id"), col("w"), col("h"), col("fr"),
-        lit(24000).cast("int"))
-      val base = d.select(col("id").as("vid"), synth.as("payload"))
-      val twin = d.select((col("id") + 1000000L).as("vid"),
-        M.vidPerturb(synth).as("payload"))
-      val hashed = par(s, base.unionByName(twin))
-        .select(col("vid"), M.vidDhash(col("payload")).as("p"))
-        .filter(element_at(col("p"), 1) === 1L)
-        .select(col("vid"), element_at(col("p"), 2).as("h64"))
-      Dedup.hamming64Pairs(hashed, "h64", "vid",
-        maxHamming = 2, maxBucket = 1 << 20)
-        .filter(col("id_b") === col("id_a") + 1000000L)
-        .orderBy(col("id_a"))
-    }),
-
-    // Exactly-once streaming sink, driver-gated end-to-end: a REAL file-
-    // source stream (Trigger.AvailableNow) appends the corpus through
-    // StoreSink into a COW table; the committed batch is then DELIBERATELY
-    // replayed (what a crash between data commit and checkpoint commit
-    // does on restart) — the watermark makes it a no-op, and a failure of
-    // the guard would throw P2002 on the duplicate ids, failing the gate
-    // loudly. A second stream upserts v=-1 for doc_id%10==0 (the CDC
-    // shape) and is replayed too. Oracle = DuckDB computing the same
-    // final state directly.
-    "q_stream_store" -> ((s, dir) => {
-      val tmp = tempDir("graft-qstream")
-      val cat = new graft.store.Catalog(tmp + "/cat")
-      val schema = org.apache.spark.sql.types.StructType(Seq(
-        org.apache.spark.sql.types.StructField("doc_id",
-          org.apache.spark.sql.types.LongType, nullable = false),
-        org.apache.spark.sql.types.StructField("v",
-          org.apache.spark.sql.types.LongType, nullable = true)))
-      val t = new graft.store.GraftTable(s, cat, "stream_docs", schema,
-        uniqueKeys = Seq(Seq("doc_id")))
-      val docSchema = Tables.documents(s, dir).schema
-      // glob form: the file source derives basePath from the glob's
-      // parent DIRECTORY (a bare file path is rejected as basePath)
-      def docStream() = s.readStream.schema(docSchema)
-        .parquet(s"$dir/documents.parque[t]")
-
-      val appendSink = graft.streaming.StoreSink.exactlyOnceAppend(t, "ingest")
-      val q1 = docStream()
-        .select(col("doc_id"), length(col("text")).cast("long").as("v"))
-        .writeStream.foreachBatch(appendSink)
-        .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
-        .option("checkpointLocation", tmp + "/ckpt1").start()
-      q1.awaitTermination(180000)
-
-      // replay batch 0 — must be absorbed by the committed watermark
-      appendSink(Tables.documents(s, dir)
-        .select(col("doc_id"), length(col("text")).cast("long").as("v")), 0L)
-
-      val upsertSink =
-        graft.streaming.StoreSink.exactlyOnceUpsert(t, Seq("doc_id"), "cdc")
-      val q2 = docStream()
-        .filter(pmod(col("doc_id"), lit(10)) === 0)
-        .select(col("doc_id"), lit(-1L).as("v"))
-        .writeStream.foreachBatch(upsertSink)
-        .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
-        .option("checkpointLocation", tmp + "/ckpt2").start()
-      q2.awaitTermination(180000)
-
-      // replay the upsert batch as well — same no-op contract
-      upsertSink(Tables.documents(s, dir)
-        .filter(pmod(col("doc_id"), lit(10)) === 0)
-        .select(col("doc_id"), lit(-1L).as("v")), 0L)
-
-      t.snapshot().select(col("doc_id"), col("v")).orderBy(col("doc_id"))
-    }),
-
-    // CRASH-RESTART exactly-once, across a REAL query restart: the
-    // corpus lands as four files; a maxFilesPerTrigger=1 stream ingests
-    // through StoreSink and the query is KILLED right after batch 1's
-    // data+watermark commit lands in the store but BEFORE the streaming
-    // checkpoint records the batch — the exact crash window at-least-once
-    // foreachBatch cannot survive. A second query starts from the SAME
-    // checkpoint: the offset log replays batch 1 (absorbed by the
-    // committed txn watermark — a broken guard would P2002 on duplicate
-    // ids), then batches 2..n process once. No duplicate, no lost batch
-    // — the durable-workflow resume the reference gets from its runner
-    // state machine (runner/locator.ts:15-36). Oracle = the batch union.
-    "q_stream_restart" -> ((s, dir) => {
-      val tmp = tempDir("graft-qrestart")
-      val inbox = tmp + "/inbox"
-      val cat = new graft.store.Catalog(tmp + "/cat")
-      val schema = org.apache.spark.sql.types.StructType(Seq(
-        org.apache.spark.sql.types.StructField("doc_id",
-          org.apache.spark.sql.types.LongType, nullable = false),
-        org.apache.spark.sql.types.StructField("v",
-          org.apache.spark.sql.types.LongType, nullable = true)))
-      val t = new graft.store.GraftTable(s, cat, "restart_docs", schema,
-        uniqueKeys = Seq(Seq("doc_id")))
-      val docs = Tables.documents(s, dir)
-        .select(col("doc_id"), length(col("text")).cast("long").as("v"))
-      (0 until 4).foreach(i => docs.filter(pmod(col("doc_id"), lit(4)) === i)
-        .coalesce(1).write.mode("append").parquet(inbox))
-      val sink = graft.streaming.StoreSink.exactlyOnceAppend(t, "restart")
-      val crashArmed = new java.util.concurrent.atomic.AtomicBoolean(true)
-      val crashing: (DataFrame, Long) => Unit = (df, id) => {
-        sink(df, id) // store publishes data + batch watermark atomically
-        if (id == 1 && crashArmed.get())
-          throw new RuntimeException("graft: injected crash after commit")
-      }
-      def run() = s.readStream.schema(docs.schema)
-        .option("maxFilesPerTrigger", 1).parquet(inbox)
-        .writeStream.foreachBatch(crashing)
-        .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
-        .option("checkpointLocation", tmp + "/ckpt").start()
-      // the injected crash is the TEST — silence MicroBatchExecution's
-      // ERROR for the deliberately-dying first query (an ERROR line in
-      // a green run trains people to ignore ERRORs), then restore
-      val mbLogger = org.apache.logging.log4j.LogManager.getLogger(
-        "org.apache.spark.sql.execution.streaming.runtime.MicroBatchExecution")
-        .asInstanceOf[org.apache.logging.log4j.core.Logger]
-      val prevLevel = mbLogger.getLevel
-      mbLogger.setLevel(org.apache.logging.log4j.Level.FATAL)
-      val q1 = run()
-      try {
-        scala.util.Try(q1.awaitTermination(180000))
-        require(q1.exception.isDefined,
-          "q_stream_restart: the injected crash must kill the first query")
-      } finally mbLogger.setLevel(prevLevel)
-      crashArmed.set(false)
-      val q2 = run()
-      q2.awaitTermination(180000)
-      t.snapshot().select(col("doc_id"), col("v")).orderBy(col("doc_id"))
-    }),
-
-    // Watermarked STREAM-STREAM interval join, driver-gated: every click
-    // within 60 minutes after a view by the same user, through the real
-    // symmetric-hash-join state machinery (both sides watermarked — the
-    // hardest Structured Streaming operator), AvailableNow into parquet.
-    // Oracle = the batch interval join at µs precision.
-    "q_stream_join" -> ((s, dir) => {
-      // a quarter of the users: the gate tests the symmetric-join STATE
-      // MACHINERY, not volume
-      val joined = graft.streaming.Streaming.attributionJoin(
-        graft.streaming.Streaming.readEventStream(s, dir)
-          .filter(pmod(col("user_id"), lit(4)) === 0), "view", "click")
-      runStreamToParquet(s, joined, "append", "graft-qsj")
-        .select(col("user_id"), col("l_id").as("view_id"),
-          col("r_id").as("click_id"))
-        .orderBy(col("view_id"), col("click_id"))
-    }),
-
-    // Watermarked streaming window aggregation, driver-gated end-to-end:
-    // a real file-source stream over the events fixture through
-    // withWatermark + window(1 day) + count, complete-mode foreachBatch
-    // into parquet, read back. Exercises the actual StateStore-backed
-    // streaming aggregation, not the batch plan; the oracle is the batch
-    // equivalent (UTC-day truncation, same ns→µs timestamp contract the
-    // batch event queries use).
-    "q_stream_window" -> ((s, dir) => {
-      val stream = graft.streaming.Streaming.readEventStream(s, dir)
-        .select(col("ts"), col("event_type"))
-        .withWatermark("ts", "1 hour")
-        .groupBy(window(col("ts"), "1 day").as("w"), col("event_type"))
-        .agg(count(lit(1)).as("n"))
-      runStreamToParquet(s, stream, "complete", "graft-qsw")
-        .select(col("w.start").cast("long").as("win_start"),
-          col("event_type"), col("n"))
-        .orderBy(col("win_start"), col("event_type"))
-    }),
-
-    // APPEND-mode watermarked window aggregation, driver-gated: unlike
-    // the complete-mode gate (q_stream_window), append mode emits a
-    // window ONLY once the watermark proves it final — the
-    // StateStoreSave eviction path that complete mode never runs, and
-    // the only correct output mode when a downstream sink cannot absorb
-    // retractions. Windows still open when the stream ends are WITHHELD
-    // by design; the oracle keeps exactly the finalized ones
-    // (window end ≤ max(ts) − 1h watermark delay — the fixture's max ts
-    // sits minutes past the last midnight, so the day-boundary window
-    // ends can never tie with the watermark and < vs ≤ is moot).
-    "q_stream_window_append" -> ((s, dir) => {
-      val stream = graft.streaming.Streaming.readEventStream(s, dir)
-        .select(col("ts"), col("event_type"))
-        .withWatermark("ts", "1 hour")
-        .groupBy(window(col("ts"), "1 day").as("w"), col("event_type"))
-        .agg(count(lit(1)).as("n"))
-      runStreamToParquet(s, stream, "append", "graft-qswa")
-        .select(col("w.start").cast("long").as("win_start"),
-          col("event_type"), col("n"))
-        .orderBy(col("win_start"), col("event_type"))
-    }),
-
-    // Watermarked SESSION-window aggregation, driver-gated end-to-end:
-    // the native session_window dynamic-gap merge state (per-user
-    // 30-minute-gap sessions) through the real streaming machinery,
-    // complete-mode foreachBatch into parquet. The oracle is the batch
-    // gaps-and-islands sessionization — the same contract q_sessions
-    // checks in batch, now proven equivalent through streaming state.
-    "q_stream_session" -> ((s, dir) => {
-      val stream = graft.streaming.Streaming.sessionWindowAggregates(
-        graft.streaming.Streaming.readEventStream(s, dir)
-          .select(col("ts"), col("user_id")))
-      runStreamToParquet(s, stream, "complete", "graft-qses")
-        .select(col("user_id"), unix_micros(col("w.start")).as("session_start"),
-          col("n"))
-        .orderBy(col("user_id"), col("session_start"))
-    }),
-
-    // CUSTOM-STATE sessionization (flatMapGroupsWithState +
-    // EventTimeTimeout), driver-gated: unlike q_stream_session (the
-    // native session_window operator), this drives the engine's own
-    // hold-until-watermark session state machine — sessions surface only
-    // once the watermark proves no admissible late event can extend or
-    // bridge them; the rest stay HELD in state and are withheld from the
-    // output by design (the append-mode finality contract). The oracle
-    // is batch gaps-and-islands at ms precision restricted to exactly
-    // the watermark-finalized sessions (end + gap < max(ts) − 1h delay).
-    "q_stream_session_state" -> ((s, dir) => {
-      import s.implicits._
-      val ev = graft.streaming.Streaming.readEventStream(s, dir)
-        .select(col("user_id"), col("ts"))
-        .withWatermark("ts", "1 hour")
-        .as[(Long, java.sql.Timestamp)]
-      val sessions = graft.streaming.Streaming
-        .sessionizeStream(ev, gapMinutes = 30).toDF()
-      runStreamToParquet(s, sessions, "append", "graft-qsss")
-        .select(col("user_id"),
-          unix_millis(col("session_start")).as("start_ms"),
-          unix_millis(col("session_end")).as("end_ms"),
-          col("n_events"))
-        .orderBy(col("user_id"), col("start_ms"))
-    }),
-
-    // Stream-STATIC broadcast enrichment join, driver-gated: the event
-    // stream joined per-microbatch against the static customer dimension
-    // (stateless — no watermark, the dimension broadcast to every task;
-    // the most common production streaming join), then a complete-mode
-    // aggregation by (segment, event_type). The oracle is the plain
-    // batch join — stream-static semantics guarantee equality.
-    "q_stream_enrich" -> ((s, dir) => {
-      val dim = Tables.customer(s, dir)
-        .select(col("c_custkey"), col("c_mktsegment"))
-      val stream = graft.streaming.Streaming.readEventStream(s, dir)
-        .withColumn("c_custkey", pmod(col("user_id"), lit(100)) + 1)
-        .join(broadcast(dim), Seq("c_custkey"))
-        .groupBy(col("c_mktsegment"), col("event_type"))
-        .agg(count(lit(1)).as("n"),
-          sum(col("value").cast("decimal(18,2)")).cast("double").as("total"))
-      runStreamToParquet(s, stream, "complete", "graft-qse")
-        .select(col("c_mktsegment"), col("event_type"), col("n"), col("total"))
-        .orderBy(col("c_mktsegment"), col("event_type"))
-    }),
-
-    // Streaming exact dedup through the REAL dropDuplicatesWithinWatermark
-    // state machinery (the in-stream ingest dedup a 100 TB pipeline runs
-    // before anything else touches the batch): one row survives per
-    // (user_id, event_type) key. WHICH physical row survives is
-    // partition-order-dependent, so only the KEY COLUMNS are emitted —
-    // that projection is deterministic and the oracle is SELECT DISTINCT.
-    "q_stream_dedup" -> ((s, dir) => {
-      val stream = graft.streaming.Streaming.readEventStream(s, dir)
-        .select(col("ts"), col("user_id"), col("event_type"))
-        .withWatermark("ts", "1 hour")
-        .dropDuplicatesWithinWatermark("user_id", "event_type")
-        .select(col("user_id"), col("event_type"))
-      // dropDuplicatesWithinWatermark only equals a GLOBAL distinct while
-      // the whole fixture lands in one batch — a key recurring >1h apart
-      // across batches is legitimately re-emitted (that IS the operator's
-      // contract). The batch distinct on the read-back pins the gate to
-      // the global-set oracle without weakening the streaming machinery
-      // under test; the count assertion keeps the distinct from MASKING a
-      // broken dedup stage (for the one-batch fixture the stream output
-      // must already be duplicate-free — if the invariant ever breaks,
-      // fail loudly instead of silently collapsing leaked duplicates).
-      val out = runStreamToParquet(s, stream, "append", "graft-qsd")
-      val (raw_n, dedup_n) = (out.count(), out.distinct().count())
-      require(raw_n == dedup_n,
-        s"q_stream_dedup: stream emitted $raw_n rows but only $dedup_n are " +
-          "distinct — the within-watermark dedup leaked duplicates")
-      out.distinct()
-        .orderBy(col("user_id"), col("event_type"))
-    }),
-
-    // LEFT-OUTER watermarked stream-stream interval join, driver-gated:
-    // a view with NO click inside the 60-minute window emits exactly once
-    // with a null (coalesced to -1) click id. The null row is produced by
-    // state EVICTION — only once the global watermark proves no matching
-    // click can still arrive — which is the half of the outer-join state
-    // machine the inner gate (q_stream_join) never exercises. Views are
-    // bounded to 2h before the EARLIER of the two sides' max event times:
-    // the global watermark is the MIN across both watermarked inputs, so
-    // every admitted view's eviction horizon (l_ts + 60min) sits ≥30min
-    // below the final watermark and is guaranteed to flush before the
-    // AvailableNow run ends. The cutoff predicate references the
-    // watermark column, so Catalyst keeps it ABOVE the EventTimeWatermark
-    // node — the watermark still observes the full event range and the
-    // filter cannot starve its own eviction clock. Oracle = the batch
-    // left join with the identical cutoff expression.
-    "q_stream_outer" -> ((s, dir) => {
-      val ev = Tables.events(s, dir)
-        .filter(pmod(col("user_id"), lit(4)) === 0)
-      val cutoff = ev.agg(least(
-          max(when(col("event_type") === "view", col("ts"))),
-          max(when(col("event_type") === "click", col("ts")))).as("m"))
-        .select((col("m") - expr("INTERVAL 2 HOURS")).as("c"))
-        .collect()(0).getTimestamp(0) // bounded: one scalar row
-      val joined = graft.streaming.Streaming.attributionJoin(
-        graft.streaming.Streaming.readEventStream(s, dir)
-          .filter(pmod(col("user_id"), lit(4)) === 0),
-        "view", "click", joinType = "left_outer")
-        .filter(col("l_ts") <= lit(cutoff))
-      runStreamToParquet(s, joined, "append", "graft-qso")
-        .select(col("user_id"), col("l_id").as("view_id"),
-          coalesce(col("r_id"), lit(-1L)).as("click_id"))
-        .orderBy(col("view_id"), col("click_id"))
-    }),
-
-    // MinHash-LSH near-dedup: corpus ∪ id-shifted copy — every copy is a
-    // guaranteed jaccard-1.0 duplicate of its original; the recovered
-    // (id, id+10000) pairs are the oracle-checkable slice (the corpus also
-    // contains organic near-dups, which the same call surfaces — spec-tested,
-    // not oracle-predictable).
-    "q_dedup_minhash" -> ((s, dir) => {
-      val docs = Tables.documents(s, dir).select(col("doc_id"), col("text"))
-      val copies = docs.select((col("doc_id") + 10000L).as("doc_id"), col("text"))
-      Dedup.minhashLshPairs(par(s, docs.unionByName(copies)), "text", "doc_id",
-        threshold = 0.7)
-        .filter(col("id_b") === col("id_a") + 10000L && col("id_a") < 10000L)
-        .select(col("id_a"), col("id_b")).orderBy(col("id_a"))
-    }),
-
-    // SimHash: every planted copy collides with its original at hamming 0
-    // (sketch identity for identical token multisets).
-    "q_dedup_simhash" -> ((s, dir) => {
-      val docs = Tables.documents(s, dir).select(col("doc_id"), col("text"))
-      val copies = docs.select((col("doc_id") + 10000L).as("doc_id"), col("text"))
-      Dedup.simhashPairs(par(s, docs.unionByName(copies)), "text", "doc_id",
-        maxHamming = 0)
-        .filter(col("id_b") === col("id_a") + 10000L && col("id_a") < 10000L)
-        .select(col("id_a"), col("id_b")).orderBy(col("id_a"))
-    }),
-
-    // The DISTRIBUTED connected-components path, driver-gated: same
-    // planted chains as q_dup_clusters, but smallGraphEdges=0 disables
-    // the driver union-find fast path, forcing the min-label propagation
-    // loop (join + aggregate per round, periodic lineage truncation) —
-    // the solver that actually runs at 100 TB, now oracle-checked too.
-    // The result is materialized eagerly so the Managed storage handle
-    // releases before the query returns (no cache squatting in a
-    // long-lived session).
-    "q_dup_clusters_dist" -> ((s, dir) => {
-      // an eighth of the corpus: the distributed loop's round count is
-      // what's under test, not the volume (q_dup_clusters covers that)
-      val docs = Tables.documents(s, dir)
-        .filter(pmod(col("doc_id"), lit(8)) === 0)
-        .select(col("doc_id"), col("text"))
-      val c1 = docs.select((col("doc_id") + 10000L).as("doc_id"), col("text"))
-      val c2 = docs.select((col("doc_id") + 20000L).as("doc_id"), col("text"))
-      val all = par(s, docs.unionByName(c1).unionByName(c2))
-      val diff = col("id_b") - col("id_a")
-      val pairs = Dedup.minhashLshPairs(all, "text", "doc_id",
-          threshold = 0.7)
-        .filter(diff === 10000L || diff === 20000L)
-      val m = Dedup.dupClustersManaged(pairs, smallGraphEdges = 0L)
-      val out = m.df
-        .select(col("id").cast("long").as("id"),
-          col("cluster").cast("long").as("cluster"))
-        .orderBy(col("id"))
-        .localCheckpoint() // eager: cluster-label-sized, frees the loop's storage
-      m.release()
-      out
-    }),
-
-    // Fixed-point PageRank over the nation trade graph: 5 rounds of
-    // damped importance propagation (operators.Graph), entirely in
-    // integer millionth-units — integer sums commute across partition
-    // orders, so the distributed join+agg loop is bit-identical to the
-    // oracle's single-threaded unrolled CTE chain (a double-typed
-    // PageRank could never hash-match). The graph derives from the
-    // lineitem⋈orders⋈customer⋈supplier star: customer-nation →
-    // supplier-nation edges weighted by lineitem count, broadcast
-    // dimension joins, one fact-scan aggregation. Per iteration: one
-    // src-keyed hash join + one dst-keyed partial agg — the canonical
-    // distributed PageRank step; at 100 TB the edge frame shuffles once
-    // and the rank vector (nodes, not edges) is the only per-round state.
-    // Label-propagation communities over the trade graph: 4 synchronous
-    // rounds, integer vote sums + smallest-label ties, isolated nodes
-    // keep their own label — bit-deterministic, oracle-unrolled like
-    // PageRank.
-    "q_label_prop" -> ((s, dir) => {
-      val edges = operators.Graph.nationTradeEdges(
-        Tables.lineitem(s, dir), Tables.orders(s, dir),
-        Tables.customer(s, dir), Tables.supplier(s, dir))
-      val nodes = Tables.nation(s, dir)
-        .select(col("n_nationkey").cast("long").as("id"))
-      operators.Graph.labelPropagation(edges, nodes, iters = 4)
-        .join(broadcast(Tables.nation(s, dir)),
-          col("id") === col("n_nationkey").cast("long"))
-        .select(col("n_name"), col("community"))
-        .orderBy(col("n_name"))
-    }),
-
-    "q_pagerank" -> ((s, dir) => {
-      val edges = operators.Graph.nationTradeEdges(
-        Tables.lineitem(s, dir), Tables.orders(s, dir),
-        Tables.customer(s, dir), Tables.supplier(s, dir))
-      val nodes = Tables.nation(s, dir)
-        .select(col("n_nationkey").cast("long").as("id"))
-      operators.Graph.pageRankFixedPoint(edges, nodes, iters = 5)
-        .join(broadcast(Tables.nation(s, dir)),
-          col("id") === col("n_nationkey").cast("long"))
-        .select(col("n_name"), col("r"))
-        .orderBy(col("n_name"))
-    }),
-
-    // Per-nation triangle participation over the trade graph, sparsified
-    // to undirected pairs whose combined weight beats the global average
-    // (the complete-ish graph would put every nation in every triangle —
-    // the threshold makes local density a real signal). Triangles are
-    // enumerated once each via the ordered wedge join a<b<c; integer
-    // counts, exactly order-independent.
-    "q_triangles" -> ((s, dir) => {
-      val e = operators.Graph.nationTradeEdges(
-        Tables.lineitem(s, dir), Tables.orders(s, dir),
-        Tables.customer(s, dir), Tables.supplier(s, dir))
-      val und = e.filter(col("src") =!= col("dst"))
-        .select(least(col("src"), col("dst")).as("a"),
-          greatest(col("src"), col("dst")).as("b"), col("w"))
-        .groupBy(col("a"), col("b")).agg(sum(col("w")).as("wu"))
-      // scalar mean rides the plan as a 1-row broadcast, not a collect
-      val kept = und.crossJoin(broadcast(und.agg(avg(col("wu")).as("avgw"))))
-        .filter(col("wu") > col("avgw"))
-        .select(col("a").as("src"), col("b").as("dst"))
-      val nodes = Tables.nation(s, dir)
-        .select(col("n_nationkey").cast("long").as("id"))
-      operators.Graph.triangleCounts(kept, nodes)
-        .join(broadcast(Tables.nation(s, dir)),
-          col("id") === col("n_nationkey").cast("long"))
-        .select(col("n_name"), col("n_triangles"))
-        .orderBy(col("n_name"))
-    }),
-
-    // Connected-component dup clusters, oracle-checked: two id-shifted
-    // copies per doc plant the transitive chain x ~ x+10000 ~ x+20000;
-    // min-label propagation must collapse every chain to x. Edges are
-    // restricted to the planted diffs — organic near-dup ids differ by
-    // < 10000, so no organic edge survives the filter and the expected
-    // clustering is exactly computable in SQL.
-    "q_dup_clusters" -> ((s, dir) => {
-      // deterministic quarter of the corpus (sf-proportional): clustering
-      // semantics don't need every doc, and the 3x union triples the input
-      val docs = Tables.documents(s, dir)
-        .filter(pmod(col("doc_id"), lit(4)) === 0)
-        .select(col("doc_id"), col("text"))
-      val c1 = docs.select((col("doc_id") + 10000L).as("doc_id"), col("text"))
-      val c2 = docs.select((col("doc_id") + 20000L).as("doc_id"), col("text"))
-      val all = par(s, docs.unionByName(c1).unionByName(c2))
-      val diff = col("id_b") - col("id_a")
-      val pairs = Dedup.minhashLshPairs(all, "text", "doc_id",
-          threshold = 0.7)
-        .filter(diff === 10000L || diff === 20000L)
-      Dedup.dupClusters(pairs)
-        .select(col("id").cast("long").as("id"),
-          col("cluster").cast("long").as("cluster"))
-        .orderBy(col("id"))
-    }),
-
-    // n-gram Jaccard verification over a deterministic candidate set
-    // (adjacent doc ids) — exact set-overlap arithmetic both engines.
-    "q_ngram_jaccard" -> ((s, dir) => {
-      val docs = Tables.documents(s, dir)
-      val pairs = docs.select(col("doc_id").as("id_a"), (col("doc_id") + 1L).as("id_b"))
-        .filter(col("id_b") < 500)
-      Dedup.ngramJaccard(docs, pairs, "text", "doc_id", n = 3)
-        .orderBy(col("id_a"))
-    }),
-
-    // Embedding near-dup: corpus ∪ copy, cosine 1.0 pairs recovered via
-    // hyperplane-LSH blocking + exact verification.
-    "q_embed_neardup" -> ((s, dir) => {
-      val emb = Tables.embeddings(s, dir).select(col("vec_id"), col("embedding"))
-      val copies = emb.select((col("vec_id") + 10000L).as("vec_id"), col("embedding"))
-      Dedup.embeddingNearDupPairs(par(s, emb.unionByName(copies)), "embedding", "vec_id",
-        dim = 64, threshold = 0.999, numPlanes = 16)
-        .select(col("id_a"), col("id_b")).orderBy(col("id_a"), col("id_b"))
-    }),
-
-    // Asymmetric containment: each doc paired with its own 12-token
-    // prefix "quote" (containment exactly 1.0) and with its NEIGHBOR's
-    // quote (low) — the partial-copy signal symmetric Jaccard misses.
-    "q_containment" -> ((s, dir) => {
-      // parity guard: a zero-token doc (all punctuation) would get the
-      // kernel's empty set but the oracle CASE's [''] pseudo-gram
-      val docs = Tables.documents(s, dir).select(col("doc_id"), col("text"))
-        .filter(size(TextFunctions.tokens(col("text"))) >= 1)
-      val quotes = docs.select((col("doc_id") + 30000L).as("doc_id"),
-        array_join(slice(split(col("text"), " "), 1, 12), " ").as("text"))
-      val all = docs.unionByName(quotes)
-      val own = docs.select(col("doc_id").as("id_a"),
-        (col("doc_id") + 30000L).as("id_b"))
-      val nextQuote = docs.alias("a")
-        .join(docs.alias("b"), col("b.doc_id") === col("a.doc_id") + 1)
-        .select(col("a.doc_id").as("id_a"), (col("b.doc_id") + 30000L).as("id_b"))
-      Dedup.ngramContainment(all, own.unionByName(nextQuote), "text", "doc_id", n = 3)
-        .orderBy(col("id_a"), col("id_b"))
-    }),
-
-    // SemDeDup composition: tripled corpus (two id-shifted copies) →
-    // cosine-1.0 pairs → transitive clusters → one survivor per semantic
-    // cluster. Pairs are filtered to the planted id-shifts so the
-    // survivor set is exactly the originals — SQL-checkable like
-    // q_dedup_minhash/q_dup_clusters.
-    "q_semantic_dedup" -> ((s, dir) => {
-      val emb = Tables.embeddings(s, dir).select(col("vec_id"), col("embedding"))
-      val c1 = emb.select((col("vec_id") + 10000L).as("vec_id"), col("embedding"))
-      val c2 = emb.select((col("vec_id") + 20000L).as("vec_id"), col("embedding"))
-      val all = par(s, emb.unionByName(c1).unionByName(c2))
-      val diff = col("id_b") - col("id_a")
-      val pairs = Dedup.embeddingNearDupPairs(all, "embedding", "vec_id",
-          dim = 64, threshold = 0.999, numPlanes = 16)
-        .filter(diff === 10000L || diff === 20000L)
-      Dedup.dedupByPairs(all, pairs, "vec_id").df
-        .select(col("vec_id")).orderBy(col("vec_id"))
-    }),
-
-    // ANN: exact cosine top-5 for five query vectors (ids only — the
-    // ordering is FP-robust, the raw cosine is not hash-comparable).
-    // Ranked via the bounded-heap TopK aggregate: partial aggregation
-    // ships at most k candidates per query to the shuffle.
-    "q_ann_topk" -> ((s, dir) => {
-      val corpus = Tables.embeddings(s, dir)
-      val queries = corpus.filter(col("vec_id") < 5)
-        .select(col("vec_id").as("qid"), col("embedding"))
-      Similarity.bruteForceTopKAgg(corpus, queries, "embedding", "vec_id", "qid", k = 5)
-        .select(col("qid"), col("id"), col("rank").cast("long").as("rank"))
-        .orderBy(col("qid"), col("rank"))
-    }),
-
-    // Near-dup audit: the corpus's ORGANIC near-duplicate pairs surfaced
-    // by MinHash-LSH through the ORACLE-PORTABLE md5 hash family — the
-    // oracle recomputes every signature, band key, and surviving pair
-    // bit-for-bit, so the banding/collision/verify machinery itself is
-    // hash-gated (not just the planted-copy slice q_dedup_minhash
-    // checks). Production dedup keeps the xxhash64 fast path
-    // (minhashLshPairs), spec-tested for family-agnostic agreement.
-    "q_near_dup_audit" -> ((s, dir) =>
-      Dedup.minhashLshPairsPortable(par(s, Tables.documents(s, dir)), "text", "doc_id",
-        threshold = 0.7)
-        .orderBy(col("id_a"), col("id_b"))),
-
-    // Full curation composition: annotate → gates → exact dedup → near
-    // dedup, with per-gate drop accounting — HASH-GATED end to end. The
-    // near-dup stage runs at threshold 1.0, where LSH is exact (identical
-    // shingle sets ⇒ identical signatures ⇒ every band collides; verified
-    // jaccard = 1.0 ⇔ set equality), so the whole report is arithmetic an
-    // independent engine can reproduce: gate counts from the mirrored
-    // quality algebra, exact-dedup survivors = distinct canonical texts,
-    // near-dedup survivors = distinct 3-shingle sets. The sub-1.0
-    // threshold behavior (probabilistic banding) stays spec-tested
-    // (CurationSpec) and oracle-gated on the planted-copy slice
-    // (q_dedup_minhash).
-    "q_curation" -> ((s, dir) =>
-      Curation.report(par(s, Tables.documents(s, dir)), "text", "doc_id",
-        Curation.Config(minQuality = 0.4, minTokens = 5, nearDupThreshold = 1.0))
-        .orderBy(col("gate"))),
-
-    // Int8-quantized ANN: corpus compressed to per-vector scale + int8
-    // codes (the 100 TB memory lever), queries full precision, ranked
-    // over the dequantized reconstruction. The quantize/dequantize
-    // arithmetic mirrors exactly (round half-away-from-zero both
-    // engines); rank order is FP-robust like q_ann_topk.
-    "q_ann_quantized" -> ((s, dir) => {
-      val corpus = par(s, Tables.embeddings(s, dir))
-      val queries = corpus.filter(col("vec_id") < 10)
-        .select(col("vec_id").as("qid"), col("embedding"))
-      Similarity.quantizedTopK(corpus, queries, "embedding", "vec_id", "qid", k = 5)
-        .select(col("qid"), col("id"), col("rank").cast("long").as("rank"))
-        .orderBy(col("qid"), col("rank"))
-    }),
-
-    // Product-quantization ANN (Jégou et al. 2011) — the memory lever
-    // past int8: m=4 codebooks of k=8 centroids trained by integer
-    // Lloyd's over the corpus subspaces, corpus encoded to 4 codes/row
-    // (zero-shuffle scan against the literal codebook), queries answered
-    // by ADC lookup tables through the bounded-heap TopK aggregate. The
-    // oracle replays the ENTIRE pipeline symbolically (seeding by md5
-    // draw, per-round assignment/update CTEs, lost-centroid carry-over,
-    // LUT scoring, ascending-distance rank), so any slip anywhere in
-    // train/encode/search hash-mismatches.
-    "q_ann_pq" -> ((s, dir) => {
-      val corpus = par(s, Tables.embeddings(s, dir))
-      val queries = corpus.filter(col("vec_id") < 10)
-        .select(col("vec_id").as("qid"), col("embedding"))
-      graft.operators.Pq.pqTopK(corpus, queries, "embedding", "vec_id", "qid",
-        m = 4, k = 8, iters = 2, topk = 5)
-        .orderBy(col("qid"), col("rank"))
-    }),
-
-    // IVFADC (Jégou et al. 2011 §V): IVF coarse cells gate which PQ
-    // codes a query even scores — the full memory-AND-compute lever for
-    // 100 TB ANN (non-probed cells never scanned with cell-partitioned
-    // storage). The coarse quantizer is a PQ codebook with m=1, so the
-    // oracle replays the SAME symbolic chain twice (prefix g), then
-    // probes nProbe cells per query and gates the ADC join on cell
-    // membership. Any slip in either codebook, the probe ranking, or
-    // the gated scan hash-mismatches.
-    "q_ann_ivfpq" -> ((s, dir) => {
-      val corpus = par(s, Tables.embeddings(s, dir))
-      val queries = corpus.filter(col("vec_id") < 10)
-        .select(col("vec_id").as("qid"), col("embedding"))
-      graft.operators.Pq.ivfPqTopK(corpus, queries, "embedding", "vec_id",
-        "qid", nCells = 4, nProbe = 2, m = 4, k = 8, iters = 2, topk = 5)
-        .orderBy(col("qid"), col("rank"))
-    }),
-
-    // PERSISTENT ANN index (store/AnnIndex): codebooks trained ONCE on
-    // the build-time snapshot and committed to the catalog with the
-    // encoded codes + CDF cursor; later inserts reach the index through
-    // a change-feed refresh that re-encodes ONLY the delta with the
-    // PERSISTED codebooks; the probe answers from a REOPENED handle (no
-    // training path exists on it) over the cell-partitioned codes table.
-    // Mid-gate REQUIREs pin the zero-retrain property (model slices
-    // byte-identical across refresh) and exactly-once drains; the oracle
-    // trains on the snapshot subset but scores codes for ALL rows — a
-    // Spark side that retrained on the final corpus hash-mismatches.
-    "q_ann_persist" -> ((s, dir) => cachedResult(s, "q_ann_persist", dir) {
-      import org.apache.spark.sql.types._
-      val cat = new graft.store.Catalog(tempDir("graft-annpersist-q"))
-      val emb = Tables.embeddings(s, dir).select(col("vec_id"), col("embedding"))
-      val src = new graft.store.GraftTable(s, cat, "vecs", StructType(Seq(
-        StructField("vec_id", LongType, nullable = false),
-        StructField("embedding", ArrayType(FloatType), nullable = true))),
-        uniqueKeys = Seq(Seq("vec_id")))
-      src.createMany(emb.filter(pmod(col("vec_id"), lit(4)) =!= 0))
-      val idx = graft.store.AnnIndex.build(src, "e1", "embedding", "vec_id",
-        nCells = 4, m = 4, k = 8, iters = 2)
-      src.createMany(emb.filter(pmod(col("vec_id"), lit(4)) === 0))
-      val modelBefore = cat.manifest()(idx.model.name)
-      require(idx.refresh().nonEmpty,
-        "q_ann_persist: the post-build insert window must drain")
-      require(cat.manifest()(idx.model.name) == modelBefore,
-        "q_ann_persist: refresh must not retrain — model slices stay put")
-      require(idx.refresh().isEmpty,
-        "q_ann_persist: caught up — a second refresh drains nothing")
-      // LIFECYCLE COMPOSITION: compact the cell-partitioned codes table
-      // (build + refresh left multi-file slices) and assert the probe's
-      // partition-scoped scan shape SURVIVES the rewrite — a compaction
-      // that lost the sidecar stats or the slice layout would silently
-      // fall back to scanning every cell. The final search then rides
-      // the compacted files, so the hash gate proves the rewrite kept
-      // the data byte-exact too.
-      require(idx.codes.compact(maxFiles = 0) >= 1,
-        "q_ann_persist: the codes table must have slices to compact")
-      val someCell = idx.codes.snapshot().select(col("cell"))
-        .limit(1).collect()(0).getInt(0)
-      val probe0 = idx.codes.snapshotWhere(col("cell") === someCell)
-      require(probe0.inputFiles.nonEmpty && probe0.inputFiles.forall(
-          _.contains(s"/${idx.codes.name}/cell=$someCell/")),
-        "q_ann_persist: a one-cell probe must plan only that cell's " +
-          "files after compaction")
-      val queries = emb.filter(col("vec_id") < 10)
-        .select(col("vec_id").as("qid"), col("embedding"))
-      graft.store.AnnIndex.open(src, "e1", "embedding", "vec_id")
-        .search(queries, "qid", nProbe = 2, topk = 5)
-        .orderBy(col("qid"), col("rank"))
-    }),
-
-    // ANN STALENESS AUDIT — the sketch-audit pattern (q_approx_distinct,
-    // q_quantile_audit) applied to vector search. Recall half: the
-    // persisted index's ADC search and two-stage rerank run BESIDE exact
-    // top-k under the SAME integer-L2 metric (rerankExact over the full
-    // query×corpus candidate set), and mean recall@5 must clear its
-    // bracket — the sampled exactness check a 100 TB deployment runs on
-    // a query panel, never the corpus. Drift half: after a shifted
-    // cohort lands (refresh encodes it with the FROZEN codebooks —
-    // correct but increasingly stale), the PSI between the training
-    // snapshot's embedding distribution and the current corpus is the
-    // retrain-due signal, REQUIREd to fire past the conventional 0.25
-    // "shifted" band. Output = the per-bin PSI frame, the same
-    // engine-portable arithmetic as q_drift. store/AnnIndex +
-    // operators/Pq.rerankExact + operators/Profile.drift.
-    "q_ann_recall_audit" -> ((s, dir) => cachedResult(s, "q_ann_recall_audit", dir) {
-      import org.apache.spark.sql.types._
-      val cat = new graft.store.Catalog(tempDir("graft-annaudit-q"))
-      val emb = Tables.embeddings(s, dir).select(col("vec_id"), col("embedding"))
-      val src = new graft.store.GraftTable(s, cat, "vecs", StructType(Seq(
-        StructField("vec_id", LongType, nullable = false),
-        StructField("embedding", ArrayType(FloatType), nullable = true))),
-        uniqueKeys = Seq(Seq("vec_id")))
-      src.createMany(emb)
-      val c0 = cat.currentCommitId()
-      val idx = graft.store.AnnIndex.build(src, "e1", "embedding", "vec_id",
-        nCells = 4, m = 8, k = 16, iters = 2)
-      // recall audit on the training snapshot, from a REOPENED handle
-      val queries = emb.filter(col("vec_id") < 20)
-        .select(col("vec_id").as("qid"), col("embedding"))
-      val opened = graft.store.AnnIndex.open(src, "e1", "embedding", "vec_id")
-      val exact = graft.operators.Pq.rerankExact(
-        queries.select(col("qid"))
-          .crossJoin(src.snapshot().select(col("vec_id").as("id"))),
-        src.snapshot(), queries, "embedding", "vec_id", "qid", topk = 5)
-        .select(col("qid"), col("id")).localCheckpoint()
-      def recallOf(got: DataFrame): Double =
-        got.select(col("qid"), col("id"))
-          .join(exact, Seq("qid", "id"), "left_semi").count()
-          .toDouble / exact.count()
-      // shortlist sized FROM the corpus (a constant tuned at one SF
-      // saturates at the next): a fixed 1/20 fraction keeps the
-      // shortlist/candidate ratio — and therefore recall — stable as
-      // the corpus grows; re-rank work stays |Q|*shortlist
-      val shortlist = math.max(50L, src.snapshot().count() / 20L).toInt
-      val rAdc = recallOf(opened.search(queries, "qid", nProbe = 3, topk = 5))
-      val rRerank = recallOf(opened.searchRerank(queries, "qid",
-        nProbe = 3, shortlist = shortlist, topk = 5))
-      // brackets calibrated across sf0.01/0.1/1/30x (observed rerank
-      // 0.77/0.68/1.0/1.0, ADC 0.34/0.25/1.0/1.0) with ~0.1 margin —
-      // recall is deterministic per corpus, so a breach is a real
-      // regression, not noise
-      require(rRerank >= 0.55,
-        f"q_ann_recall_audit: two-stage recall@5 $rRerank%.3f under bracket")
-      require(rAdc >= 0.15,
-        f"q_ann_recall_audit: ADC recall@5 $rAdc%.3f under bracket")
-      require(rRerank >= rAdc - 1e-9,
-        "q_ann_recall_audit: exact re-rank must not lose recall vs ADC")
-      // drift half: a +0.5 shifted cohort arrives; the frozen-codebook
-      // refresh stays exact (IndexMaintenanceSpec owns that), but the
-      // training snapshot no longer represents the corpus — PSI fires
-      src.createMany(emb.filter(pmod(col("vec_id"), lit(3)) === 0)
-        .select((col("vec_id") + 20000L).as("vec_id"),
-          transform(col("embedding"), x => x + lit(0.5f)).as("embedding")))
-      require(idx.refresh().nonEmpty,
-        "q_ann_recall_audit: the drift window must drain")
-      val drift = operators.Profile.drift(
-        src.snapshotAt(c0).select(try_element_at(col("embedding"), lit(1)).as("e1")),
-        src.snapshot().select(try_element_at(col("embedding"), lit(1)).as("e1")),
-        "e1", binWidth = 0.1)
-      require(drift.agg(sum(col("psi"))).collect()(0).getDouble(0) > 0.25,
-        "q_ann_recall_audit: the retrain-due signal must fire past 0.25")
-      drift.orderBy(col("bin"))
-    }),
-
-    // ANN REBUILD — the ACT half of the staleness loop q_ann_recall_audit
-    // detects. A drifted cohort (an integer-derived lattice far from the
-    // training cloud — exact in float AND double, so the oracle replays
-    // it without FP-parity risk) drains under the FROZEN codebooks;
-    // those codes can only reconstruct into the original cloud, so the
-    // imposters invade original queries' ADC top-5 and recall degrades.
-    // AnnIndex.rebuild retrains on the current snapshot, re-encodes all
-    // rows, and swaps model+codes+cursor in ONE transaction; the
-    // mid-gate REQUIREs pin recall recovery above the pre-drift bracket
-    // AND the cursor still draining post-rebuild deltas. The oracle
-    // replays train-on-(corpus∪drift) / encode-all (delta included) —
-    // a Spark side that skipped the retrain, retrained on the wrong
-    // snapshot, or lost the cursor hash-mismatches.
-    "q_ann_rebuild" -> ((s, dir) => cachedResult(s, "q_ann_rebuild", dir) {
-      import org.apache.spark.sql.types._
-      val cat = new graft.store.Catalog(tempDir("graft-annrebuild-q"))
-      val emb = Tables.embeddings(s, dir).select(col("vec_id"), col("embedding"))
-      val src = new graft.store.GraftTable(s, cat, "vecs", StructType(Seq(
-        StructField("vec_id", LongType, nullable = false),
-        StructField("embedding", ArrayType(FloatType), nullable = true))),
-        uniqueKeys = Seq(Seq("vec_id")))
-      src.createMany(emb)
-      val idx = graft.store.AnnIndex.build(src, "e1", "embedding", "vec_id",
-        nCells = 4, m = 8, k = 16, iters = 2)
-      // drift cohort sized FROM the corpus: a third of it, at ids the
-      // probe corpora leave free; element j of lattice vector i is
-      // ((i·31 + j·7) mod 24)/16 + 1/2 — multiples of 1/16, exactly
-      // representable, [0.5, 1.94) vs the N(0, 0.1) training cloud
-      val nDrift = src.snapshot().count() / 3
-      val driftRows = s.range(0, nDrift).select(
-        (col("id") + 20000L).as("vec_id"),
-        transform(sequence(lit(0), lit(63)), j =>
-          (pmod(col("id") * 31 + j.cast("long") * 7L, lit(24L))
-            .cast("double") / lit(16.0) + lit(0.5)).cast("float"))
-          .as("embedding"))
-      src.createMany(driftRows)
-      require(idx.refresh().nonEmpty,
-        "q_ann_rebuild: the drift window must drain")
-      // recall panel: original queries vs the exact top-5 of the CURRENT
-      // corpus (drift rows are true negatives — far by exact distance)
-      val queries = emb.filter(col("vec_id") < 20)
-        .select(col("vec_id").as("qid"), col("embedding"))
-      val exact = graft.operators.Pq.rerankExact(
-        queries.select(col("qid"))
-          .crossJoin(src.snapshot().select(col("vec_id").as("id"))),
-        src.snapshot(), queries, "embedding", "vec_id", "qid", topk = 5)
-        .select(col("qid"), col("id")).localCheckpoint()
-      def recallOf(got: DataFrame): Double =
-        got.select(col("qid"), col("id"))
-          .join(exact, Seq("qid", "id"), "left_semi").count()
-          .toDouble / exact.count()
-      val rPre = recallOf(idx.search(queries, "qid", nProbe = 3, topk = 5))
-      idx.rebuild(nCells = 4, m = 8, k = 16, iters = 2)
-      val rPost = recallOf(idx.search(queries, "qid", nProbe = 3, topk = 5))
-      // calibrated across sf0.01/0.1/1/30x: rPre 0.34/0.25/1.0/1.0,
-      // rPost 0.38/0.29/1.0/1.0 — retraining strictly recovers recall
-      // here (recall is deterministic per corpus, so a breach is a real
-      // regression); 0.15 is q_ann_recall_audit's pre-drift ADC bracket
-      require(rPost >= rPre - 1e-9,
-        f"q_ann_rebuild: rebuild must not lose recall ($rPre%.3f -> $rPost%.3f)")
-      require(rPost >= 0.15,
-        f"q_ann_rebuild: post-rebuild ADC recall@5 $rPost%.3f under the " +
-          "pre-drift bracket")
-      // cursor preserved: a post-rebuild delta still drains, encoded
-      // under the REBUILT codebooks (the oracle scores it that way)
-      src.createMany(emb.filter(pmod(col("vec_id"), lit(5)) === 1)
-        .select((col("vec_id") + 40000L).as("vec_id"), col("embedding")))
-      require(idx.refresh().nonEmpty,
-        "q_ann_rebuild: the cursor must keep draining after the swap")
-      require(idx.refresh().isEmpty,
-        "q_ann_rebuild: caught up — a second refresh drains nothing")
-      val q10 = emb.filter(col("vec_id") < 10)
-        .select(col("vec_id").as("qid"), col("embedding"))
-      graft.store.AnnIndex.open(src, "e1", "embedding", "vec_id")
-        .search(q10, "qid", nProbe = 3, topk = 5)
-        .orderBy(col("qid"), col("rank"))
-    }),
-
-    // Two-stage retrieval (the production ANN pattern): IVFADC produces
-    // a 20-candidate shortlist per query through the compressed-code
-    // scan, then the EXACT integer distance over the full vectors
-    // re-ranks the shortlist — quantization error leaves the final
-    // order. |Q|·20 rows of re-rank work, never a corpus re-scan. The
-    // oracle replays both stages: the full codebook chain + ADC
-    // shortlist cut, then the exact-distance window over the joined
-    // candidates. operators/Pq.rerankExact.
-    "q_ann_rerank" -> ((s, dir) => {
-      val corpus = par(s, Tables.embeddings(s, dir))
-      val queries = corpus.filter(col("vec_id") < 10)
-        .select(col("vec_id").as("qid"), col("embedding"))
-      val shortlist = graft.operators.Pq.ivfPqTopK(corpus, queries,
-        "embedding", "vec_id", "qid", nCells = 4, nProbe = 2, m = 4,
-        k = 8, iters = 2, topk = 20)
-      graft.operators.Pq.rerankExact(shortlist, corpus, queries,
-          "embedding", "vec_id", "qid", topk = 5)
-        .orderBy(col("qid"), col("rank"))
-    }),
-
-    // Hard-negative mining (DPR-style): top-5 corpus items per query
-    // inside the cosine band (0.1, 0.9] — informative negatives below
-    // the near-dup band; self (cosine 1.0) falls out of the band. The
-    // rank order is FP-robust like q_ann_topk; the cut boundaries sit
-    // far from any synthetic cosine value.
-    "q_hard_negatives" -> ((s, dir) => {
-      val corpus = Tables.embeddings(s, dir)
-      val queries = corpus.filter(col("vec_id") < 10)
-        .select(col("vec_id").as("qid"), col("embedding"))
-      Similarity.hardNegatives(corpus, queries, "embedding", "vec_id", "qid",
-        k = 5, loCos = 0.1, hiCos = 0.9)
-        .orderBy(col("qid"), col("rank"))
-    }),
-
-    // Distributed Lloyd's k-means over the embedding corpus (SemDeDup
-    // clustering / IVF coarse-quantizer training), HASH-exact via the
-    // integer-arithmetic contract: milli-quantized coords, micro-unit
-    // centers by truncating division, exact integer squared distances,
-    // md5-draw seeding — zero floating point, so the oracle replays every
-    // Lloyd round bit-for-bit.
-    "q_kmeans" -> ((s, dir) =>
-      operators.Clustering.kmeans(par(s, Tables.embeddings(s, dir)),
-        "embedding", "vec_id", k = 10, iters = 2)),
-
-    // IVF ANN: self-hit at rank 1 is deterministic (a query identical to a
-    // corpus vector lands in its own probed centroid; cosine 1.0 wins).
-    "q_ann_ivf" -> ((s, dir) => {
-      val corpus = par(s, Tables.embeddings(s, dir))
-      val queries = corpus.filter(col("vec_id") < 10)
-        .select(col("vec_id").as("qid"), col("embedding"))
-      Similarity.ivfTopK(corpus, queries, "embedding", "vec_id", "qid",
-        k = 5, nCenters = 16, nProbe = 2, lloydIters = 1)
-        .filter(col("rank") === 1)
-        .select(col("qid"), col("id"))
-        .orderBy(col("qid"))
-    }),
-
-    // LSH-bucketed ANN: rank-1 self-hit is deterministic (identical vector
-    // shares every bucket; cosine 1.0 outranks all), oracle-checkable.
-    "q_ann_lsh" -> ((s, dir) => {
-      val corpus = Tables.embeddings(s, dir)
-      val queries = corpus.filter(col("vec_id") < 20)
-        .select(col("vec_id").as("qid"), col("embedding"))
-      Similarity.lshTopK(corpus, queries, "embedding", "vec_id", "qid",
-        dim = 64, k = 5, numPlanes = 12, maxHammingProbe = 1)
-        .filter(col("rank") === 1)
-        .select(col("qid"), col("id"))
-        .orderBy(col("qid"))
-    }),
-
-    // As-of join: each purchase annotated with the user's latest prior-or-
-    // equal view — union+window plan (ONE shuffle of probes+quotes, no
-    // range explosion, no nested loop). operators/AsOf.scala.
-    "q_asof_join" -> ((s, dir) => {
-      val ev = Tables.events(s, dir)
-      val probes = ev.filter(col("event_type") === "purchase")
-        .select(col("event_id"), col("user_id"), col("ts"))
-      val quotes = ev.filter(col("event_type") === "view")
-        .select(col("user_id").as("q_user"), col("ts").as("q_ts"),
-          col("event_id").as("view_id"), col("value").as("view_value"))
-      AsOf.asofJoin(probes, quotes,
-          probeKey = "user_id", quoteKey = "q_user",
-          probeTime = "ts", quoteTime = "q_ts",
-          payload = Seq("view_id", "view_value"),
-          tieBreak = Some("view_id"))
-        .select(col("event_id"), col("view_id"), col("view_value"))
-        .orderBy(col("event_id"))
-    }),
-
-    // As-of join, STRICT + tolerance mode (pandas merge_asof
-    // tolerance=1h, allow_exact_matches=False): an equal-time view is
-    // invisible, and a latest-prior view older than an hour yields
-    // nulls. Monotonicity makes the oracle's in-window LATERAL
-    // equivalent: if the latest prior quote is outside the window, every
-    // earlier one is too.
-    "q_asof_tolerance" -> ((s, dir) => {
-      val ev = Tables.events(s, dir)
-      val probes = ev.filter(col("event_type") === "purchase")
-        .select(col("event_id"), col("user_id"), col("ts"))
-      val quotes = ev.filter(col("event_type") === "view")
-        .select(col("user_id").as("q_user"), col("ts").as("q_ts"),
-          col("event_id").as("view_id"), col("value").as("view_value"))
-      AsOf.asofJoin(probes, quotes,
-          probeKey = "user_id", quoteKey = "q_user",
-          probeTime = "ts", quoteTime = "q_ts",
-          payload = Seq("view_id", "view_value"),
-          tieBreak = Some("view_id"),
-          within = Some((pt, qt) => qt >= pt - expr("INTERVAL 1 HOUR")),
-          strict = true)
-        .select(col("event_id"), col("view_id"), col("view_value"))
-        .orderBy(col("event_id"))
-    }),
-
-    // Skew-proof as-of join: identical semantics to q_asof_join but run
-    // through the time-sliced plan (window partitions on (key, bucket),
-    // carry-in seeds across bucket boundaries) on deliberately HOT keys —
-    // user_id folded mod 7 concentrates the whole corpus onto 7 keys,
-    // the shape that serializes the plain plan's per-key sort at scale.
-    "q_asof_skew" -> ((s, dir) => {
-      val ev = Tables.events(s, dir)
-      val probes = ev.filter(col("event_type") === "purchase")
-        .select(col("event_id"), pmod(col("user_id"), lit(7)).as("hot_user"),
-          col("ts"))
-      val quotes = ev.filter(col("event_type") === "view")
-        .select(pmod(col("user_id"), lit(7)).as("q_user"),
-          col("ts").as("q_ts"),
-          col("event_id").as("view_id"), col("value").as("view_value"))
-      AsOf.bucketedAsofJoin(probes, quotes,
-          probeKey = "hot_user", quoteKey = "q_user",
-          probeTime = "ts", quoteTime = "q_ts",
-          payload = Seq("view_id", "view_value"),
-          bucketSeconds = 3600L,
-          tieBreak = Some("view_id"))
-        .select(col("event_id"), col("view_id"), col("view_value"))
-        .orderBy(col("event_id"))
-    }),
-
-    // Band (range) join: events of the same user within ±1 h of each
-    // purchase — bucketed equi-join (≤2× explode of the probe side),
-    // never a broadcast nested-loop. operators/RangeJoin.scala.
-    "q_range_join" -> ((s, dir) => {
-      val ev = Tables.events(s, dir)
-      val purchases = ev.filter(col("event_type") === "purchase")
-        .select(col("event_id"), col("user_id"), col("ts"))
-      val others = ev.select(col("user_id").as("r_user"),
-        col("ts").as("r_ts"), col("event_id").as("r_id"))
-      val joined = RangeJoin.bandJoin(purchases, others,
-        leftKey = "user_id", rightKey = "r_user",
-        leftTime = "ts", rightTime = "r_ts",
-        before = 3600L, after = 3600L)
-      joined.filter(col("r_id") =!= col("event_id"))
-        .groupBy(col("event_id"))
-        .agg(count(lit(1)).as("n_nearby"), max(col("r_id")).as("max_id"))
-        .orderBy(col("event_id"))
-    }),
-
-    // Optimizer-tier interval-join rescue: the join below is written
-    // NAIVELY — a pure point-in-interval condition with no equi key, the
-    // shape raw SQL produces and Spark plans as BroadcastNestedLoopJoin.
-    // plans/RangeJoinRewrite (injected into this session's optimizer)
-    // rewrites it to bucket-explode + equi-join + exact residual; the
-    // PlanSpec assertion proves no nested-loop survives. Purchases
-    // against 2-hour signup promo windows, counted per purchase.
-    "q_range_rewrite" -> ((s, dir) => {
-      graft.plans.RangeJoinRewrite.install(s)
-      s.conf.set(graft.plans.RangeJoinRewrite.WidthConf,
-        (7200L * 1000000L).toString) // bucket = the window span, in micros
-      val ev = Tables.events(s, dir)
-      val purchases = ev.filter(col("event_type") === "purchase")
-        .select(col("event_id"),
-          unix_micros(col("ts").cast("timestamp")).as("t"))
-      val windows = ev
-        .filter(col("event_type") === "signup" &&
-          pmod(col("event_id"), lit(50)) === 0)
-        .select(col("event_id").as("w_id"),
-          unix_micros(col("ts").cast("timestamp")).as("lo"),
-          (unix_micros(col("ts").cast("timestamp")) + lit(7200L * 1000000L))
-            .as("hi"))
-      purchases.join(windows, col("t") >= col("lo") && col("t") <= col("hi"))
-        .groupBy(col("event_id"))
-        .agg(count(lit(1)).as("n_windows"), max(col("w_id")).as("max_window"))
-        .orderBy(col("event_id"))
-    }),
-
-    // BM25 keyword relevance: one stats pass (N, avgdl, per-term df in a
-    // single Aggregate) broadcast back over one scoring scan — no corpus
-    // shuffle. operators/Relevance.scala.
-    "q_bm25" -> ((s, dir) =>
-      Relevance.bm25(Tables.documents(s, dir), "doc_id", "text", "n_chars",
-        terms = Seq("vector", "stream", "window"))
-        .orderBy(col("doc_id"))),
-
-    // Reciprocal-Rank Fusion of two bounded top-50 rankings (keyword tf
-    // and a length prior) into one hybrid order — the calibration-free
-    // way a retrieval stack merges sparse and dense candidates. Both
-    // producers are TakeOrderedAndProject(50) heads (bounded per-
-    // partition heaps, no global sort); the fusion window runs over ≤100
-    // rows by construction. Only integer ranks are emitted, so the
-    // IEEE 1/(60+r) ordering is engine-portable. operators/Relevance.scala.
-    "q_rrf_fusion" -> ((s, dir) => {
-      val docs = Tables.documents(s, dir)
-      def headRanks(scored: DataFrame,
-                    order: Seq[org.apache.spark.sql.Column]): DataFrame = {
-        // limit(50) plans as TakeOrderedAndProject under the total order;
-        // the row_number window then runs over the 50-row result only
-        val w = org.apache.spark.sql.expressions.Window.orderBy(order: _*)
-        scored.orderBy(order: _*).limit(50)
-          .withColumn("r", row_number().over(w))
-          .select(col("doc_id"), col("r"))
-      }
-      val kw = headRanks(
-        docs.select(col("doc_id"),
-            Relevance.termCount(col("text"), "vector").as("tf"))
-          .filter(col("tf") > 0),
-        Seq(col("tf").desc, col("doc_id").asc))
-      val len = headRanks(docs.select(col("doc_id"), col("n_chars")),
-        Seq(col("n_chars").desc, col("doc_id").asc))
-      Relevance.rrf(Seq((kw, "kw"), (len, "len")), "doc_id", "r")
-        .orderBy(col("fused_rank"))
-    }),
-
-    // PERSISTENT BM25 index (store/Bm25Index): the inverted posting
-    // table as a catalog artifact — keyword retrieval's last per-query
-    // corpus pass removed. Build tokenizes the corpus ONCE (postings
-    // bucket-partitioned by term hash + one corpus-scalar meta row,
-    // committed with the CDF cursor); the post-build delta exercises all
-    // three signed-fold paths (inserts, deletes, in-place text updates);
-    // refresh re-tokenizes only the delta and folds N/Σdl by signed
-    // sums; the mid-gate REQUIREs pin the fold against a from-scratch
-    // recompute; the final search runs from a REOPENED handle — zero
-    // corpus jobs, the postings scan pruned to the terms' buckets.
-    "q_bm25_persist" -> ((s, dir) => {
-      val root = fixture("bm25-persist", dir) { root =>
-        val cat = new graft.store.Catalog(root)
-        val docs = Tables.documents(s, dir).select(col("doc_id"), col("text"))
-        val src = new graft.store.GraftTable(s, cat, "docs", bm25Schema,
-          uniqueKeys = Seq(Seq("doc_id")))
-        src.createMany(docs)
-        val idx = graft.store.Bm25Index.build(src, "r1", "text", "doc_id",
-          nBuckets = 8)
-        // quarter-corpus inserts, a delete stripe, an update stripe — the
-        // <10000 guards keep the mutations off the inserted copies
-        src.createMany(docs.filter(pmod(col("doc_id"), lit(4)) === 0)
-          .select((col("doc_id") + 10000L).as("doc_id"), col("text")))
-        src.deleteMany(graft.query.RawCol(
-          pmod(col("doc_id"), lit(7)) === 3 && col("doc_id") < 10000L))
-        src.updateMany(graft.query.RawCol(
-          pmod(col("doc_id"), lit(11)) === 5 && col("doc_id") < 10000L),
-          Map("text" -> concat(col("text"), lit(" vector"))))
-        require(idx.refresh().nonEmpty,
-          "q_bm25_persist: the delta window must drain")
-        require(idx.refresh().isEmpty,
-          "q_bm25_persist: caught up — a second refresh drains nothing")
-        // the signed fold and the delta-tokenized postings must equal a
-        // from-scratch recompute (gate-side audit scans, not query cost)
-        val snap = src.snapshot()
-        val expect = snap.agg(count(lit(1)),
-          coalesce(sum(size(filter(split(coalesce(col("text"), lit("")),
-            " "), t => t =!= lit(""))).cast("long")), lit(0L))).collect()(0)
-        val (n1, s1, _) = idx.stats()
-        require(n1 == expect.getLong(0) && s1 == expect.getLong(1),
-          "q_bm25_persist: signed scalar fold must equal from-scratch")
-        require(idx.post.snapshot().count() ==
-          graft.store.Bm25Index.postingsOf(snap, "text", "doc_id").count(),
-          "q_bm25_persist: refreshed postings must equal from-scratch")
-        // LIFECYCLE COMPOSITION (the q_ann_persist codes pattern applied
-        // to the inverted index): compact the bucket-partitioned postings
-        // (build + refresh left multi-file slices) and assert the
-        // term-routed scan SHAPE survives the rewrite — a compaction that
-        // lost the slice layout would silently fall back to scanning every
-        // bucket on every query. The final search rides the compacted
-        // files, so the hash gate proves the rewrite kept the rows too.
-        require(idx.post.compact(maxFiles = 0) >= 1,
-          "q_bm25_persist: the postings table must have slices to compact")
-      }
-      val src = new graft.store.GraftTable(s, new graft.store.Catalog(root),
-        "docs", bm25Schema, uniqueKeys = Seq(Seq("doc_id")))
-      val idx = graft.store.Bm25Index.open(src, "r1", "text", "doc_id")
-      val b0 = s.range(1).select(
-        pmod(xxhash64(lit("vector")), lit(8)).cast("int"))
-        .collect()(0).getInt(0)
-      val probe0 = idx.post.snapshotWhere(col("bucket") === b0)
-      require(probe0.inputFiles.nonEmpty && probe0.inputFiles.forall(
-          _.contains(s"/${idx.post.name}/bucket=$b0/")),
-        "q_bm25_persist: a one-term probe must plan only its bucket's " +
-          "files after compaction")
-      idx.search(Seq("vector", "stream", "window"))
-        .orderBy(col("doc_id"))
-    }),
-
-    // EXACT-PHRASE retrieval from the POSITIONAL postings: the postings
-    // carry each term's token positions, so "value table" (consecutive
-    // tokens, in order) answers from a bucket-pruned scan — candidate
-    // docs pivot to one row of position arrays and the intersection
-    // p∈ps₀ ∧ p+1∈ps₁ runs inside codegen; no corpus re-tokenize, no
-    // explode. The oracle replays the phrase count directly on the
-    // token lists — a positions slip anywhere (build, signed-delta
-    // refresh, sort order) lands on the wrong occurrence counts.
-    "q_bm25_phrase" -> ((s, dir) => {
-      val root = fixture("bm25-phrase", dir) { root =>
-        val cat = new graft.store.Catalog(root)
-        val docs = Tables.documents(s, dir).select(col("doc_id"), col("text"))
-        val src = new graft.store.GraftTable(s, cat, "docs", bm25Schema,
-          uniqueKeys = Seq(Seq("doc_id")))
-        src.createMany(docs)
-        val idx = graft.store.Bm25Index.build(src, "r1", "text", "doc_id",
-          nBuckets = 8, withPositions = true)
-        // a delta so the phrase positions also flow through the refresh
-        // path: appended text SHIFTS no existing positions (append-only
-        // edit), inserted copies land under fresh ids
-        src.createMany(docs.filter(pmod(col("doc_id"), lit(4)) === 0)
-          .select((col("doc_id") + 10000L).as("doc_id"), col("text")))
-        src.updateMany(graft.query.RawCol(
-          pmod(col("doc_id"), lit(11)) === 5 && col("doc_id") < 10000L),
-          Map("text" -> concat(col("text"), lit(" value table"))))
-        require(idx.refresh().nonEmpty,
-          "q_bm25_phrase: the delta window must drain")
-      }
-      val src = new graft.store.GraftTable(s, new graft.store.Catalog(root),
-        "docs", bm25Schema, uniqueKeys = Seq(Seq("doc_id")))
-      graft.store.Bm25Index.open(src, "r1", "text", "doc_id")
-        .phraseSearch(Seq("value", "table"))
-        .orderBy(col("doc_id"))
-    }),
-
-    // SLOPPY phrase / proximity retrieval ("value table part"~3) from
-    // the SAME positional postings — no index change, only query-time
-    // algebra: per candidate doc the greedy chain (min next position
-    // per slot) computes each start's displacement inside codegen
-    // (transform/filter/array_min/zip-free — HOFs only), matches are
-    // starts within the slop window, and prox is the integer proximity
-    // score Σ(slop − disp + 1), so an exact occurrence outweighs a
-    // stretched one. Greedy-chain semantics are deterministic and
-    // CTE-replayable — the oracle recomputes every start's minimal
-    // displacement with two min-join hops; Lucene's own sloppy scorer
-    // is iterator-order-dependent, which is exactly why this contract
-    // pins a portable alternative.
-    "q_bm25_slop" -> ((s, dir) => {
-      val (_, idx) = bm25BaseFixture(s, dir, withPositions = true)
-      idx.slopSearch(Seq("value", "table", "part"), slop = 3)
-        .orderBy(col("doc_id"))
-    }),
-
-    // TOP-K keyword retrieval from the persisted index: at 100 TB a hot
-    // term's posting list is corpus-scale, so search(topk) bounds the
-    // RESULT inside the plan — TakeOrderedAndProject keeps per-partition
-    // k-row heaps and merges k rows across the exchange, never a full
-    // sort or an unbounded return the caller re-cuts. The query also
-    // REPEATS a term: search dedupes at entry, so the duplicate must not
-    // double its Okapi contribution or inflate n_terms (the oracle
-    // scores the distinct term set). Deterministic cut: rounded score
-    // desc, then doc_id.
-    "q_bm25_topk" -> ((s, dir) => {
-      val (_, idx) = bm25BaseFixture(s, dir, withPositions = false)
-      val res = idx.search(Seq("vector", "stream", "vector"), topk = 25)
-      require(res.queryExecution.executedPlan.toString
-          .contains("TakeOrderedAndProject"),
-        "q_bm25_topk: the bounded cut must plan as TakeOrderedAndProject")
-      res.orderBy(col("bm25").desc, col("doc_id"))
-    }),
-
-    // RRF composed OVER the persistent BM25 index: the keyword leg of
-    // the fusion reads postings from the catalog (bucket-pruned, zero
-    // corpus jobs), the length prior scans as before — the hybrid
-    // retrieval stack with its sparse side persisted. Same bounded
-    // top-50 heads and integer-rank output as q_rrf_fusion.
-    "q_rrf_persist" -> ((s, dir) => {
-      val (_, idx) = bm25BaseFixture(s, dir, withPositions = false)
-      val docs = Tables.documents(s, dir)
-      def headRanks(scored: DataFrame,
-                    order: Seq[org.apache.spark.sql.Column]): DataFrame = {
-        val w = org.apache.spark.sql.expressions.Window.orderBy(order: _*)
-        scored.orderBy(order: _*).limit(50)
-          .withColumn("r", row_number().over(w))
-          .select(col("doc_id"), col("r"))
-      }
-      val kw = headRanks(idx.search(Seq("vector")),
-        Seq(col("bm25").desc, col("doc_id").asc))
-      val len = headRanks(docs.select(col("doc_id"), col("n_chars")),
-        Seq(col("n_chars").desc, col("doc_id").asc))
-      Relevance.rrf(Seq((kw, "kw"), (len, "len")), "doc_id", "r")
-        .orderBy(col("fused_rank"))
-    }),
-
-    // Retrieval-quality metrics over a deterministic per-customer order
-    // ranking (total price desc, orderkey tiebreak; relevant = status
-    // 'F'): MRR, binary NDCG@10, precision/recall@10 per query. One
-    // query-partitioned window + one groupBy on the same key + a k-row
-    // broadcast IDCG lookup — the evaluation side of the BM25/ANN
-    // rankers, scale-shaped the same way. operators/Evaluation.scala.
-    "q_rank_metrics" -> ((s, dir) =>
-      graft.operators.Evaluation.rankMetrics(
-        Tables.orders(s, dir).select(col("o_custkey"), col("o_orderkey"),
-          (col("o_orderstatus") === "F").as("rel"), col("o_totalprice")),
-        queryCol = "o_custkey", itemCol = "o_orderkey", relCol = "rel",
-        order = Seq(col("o_totalprice").desc), k = 10)
-        .withColumnRenamed("o_custkey", "custkey")
-        .orderBy(col("custkey"))),
-
-    // Cohen's kappa between two deterministic labelers (chars >= 200 vs
-    // spaces >= 39 — pure integer string arithmetic both engines compute
-    // identically): one distributive 4-cell confusion aggregate, then
-    // chance-corrected agreement. The label-quality audit a curation
-    // pipeline runs before trusting a filter. operators/Evaluation.scala.
-    "q_label_agreement" -> ((s, dir) =>
-      graft.operators.Evaluation.cohenKappa(Tables.documents(s, dir),
-        col("n_chars") >= 200,
-        (length(col("text")) -
-          length(replace(col("text"), lit(" "), lit("")))) >= 39)),
-
-    // ROC AUC of document length as a predictor of lang='en': histogram
-    // Mann-Whitney with midrank tie correction — groupBy(score) collapses
-    // the corpus, the two-pass prefix sum (Ranking.withGlobalPrefixSum,
-    // never a single-reducer window) accumulates negatives-below, and the
-    // 2·P·N·AUC numerator folds as an exact Long. The threshold-free
-    // companion to q_quality_classifier's fixed cutoffs.
-    // operators/Evaluation.scala.
-    "q_auc" -> ((s, dir) =>
-      graft.operators.Evaluation.aucRoc(Tables.documents(s, dir),
-        score = col("n_chars"), label = col("lang") === "en")),
-
-    // Sliced AUC per source: same exact-integer histogram, running
-    // negatives from a window PARTITIONED by source over the per-group
-    // histogram (one shuffle on the group key, reused by the following
-    // aggregate) — the per-slice ranker health report.
-    // operators/Evaluation.scala.
-    "q_auc_by" -> ((s, dir) =>
-      graft.operators.Evaluation.aucRocBy(Tables.documents(s, dir),
-        group = col("source"), score = col("n_chars"),
-        label = col("lang") === "en")
-        .withColumnRenamed("grp", "source")
-        .orderBy(col("source"))),
-
-    // Reliability diagram + per-decile Brier for an integer-basis-point
-    // forecast (n_chars % 101 cents vs a deterministic outcome): all sums
-    // are exact Long folds (cents and squared-error units), one division
-    // per output cell — partition-fold order cannot move a bit.
-    // operators/Evaluation.scala.
-    "q_calibration" -> ((s, dir) =>
-      graft.operators.Evaluation.calibration(Tables.documents(s, dir),
-        pCents = col("n_chars") % 101, label = col("doc_id") % 4 === 0)
-        .orderBy(col("bin"))),
-
-    // Streaming quality firewall: DataQuality.monitor audits each
-    // micro-batch of a REAL file stream (AvailableNow + checkpoint)
-    // inside foreachBatch and sinks the per-batch audit rows; the
-    // single-file fixture lands in one batch, so batch 0's audit equals
-    // the batch oracle over the whole table — and the gate refuses
-    // partial output if the batch split ever changes.
-    // operators/DataQuality.scala.
-    "q_stream_dq" -> ((s, dir) => {
-      import graft.operators.DataQuality._
-      val tmp = tempDir("graft-qdq")
-      val stream = graft.streaming.Streaming.readEventStream(s, dir)
-      val checks = Seq(
-        Completeness("user_id", 1.0),
-        Uniqueness("event_id", 1.0),
-        Uniqueness("user_id", 0.5),
-        Compliance("value_nonneg", col("value") >= 0.0, 1.0),
-        Compliance("purchase_share", col("event_type") === "purchase", 0.25))
-      val prevParts = s.conf.get("spark.sql.shuffle.partitions")
-      s.conf.set("spark.sql.shuffle.partitions", "4")
-      try {
-        val q = monitor(stream, checks, tmp + "/ckpt") { (rows, bid) =>
-          rows.write.mode("overwrite").parquet(s"$tmp/out/b$bid"); ()
-        }
-        if (!q.awaitTermination(180000)) {
-          q.stop()
-          throw new IllegalStateException(
-            "q_stream_dq: stream exceeded its 180s budget")
-        }
-      } finally s.conf.set("spark.sql.shuffle.partitions", prevParts)
-      val batches = Option(new java.io.File(tmp + "/out").listFiles())
-        .getOrElse(Array.empty).count(_.isDirectory)
-      require(batches == 1,
-        s"q_stream_dq: fixture must audit as ONE batch, saw $batches")
-      s.read.parquet(tmp + "/out/b0")
-        .orderBy(col("check"), col("column"))
-    }),
-
-    // Declarative data-quality audit: six constraints (completeness,
-    // exact uniqueness, predicate compliance, mean floor) compiled into
-    // ONE Aggregate pass over documents; two checks are deliberately
-    // failing so the pass/fail path is part of the gate.
-    // operators/DataQuality.scala.
-    // Constraint suggestion (the profile half of the DQ loop): one
-    // Aggregate pass over documents emits the checks the corpus
-    // currently satisfies — completeness, key-likeness, numeric bounds —
-    // as review-ready rows whose thresholds the same data passes by
-    // construction. operators/DataQuality.scala.
-    "q_dq_suggest" -> ((s, dir) =>
-      graft.operators.DataQuality.suggest(Tables.documents(s, dir),
-        Seq("doc_id", "text", "lang", "source", "n_chars"))
-        .orderBy(col("column"), col("check"))),
-
-    "q_dq_audit" -> ((s, dir) => {
-      import graft.operators.DataQuality._
-      audit(Tables.documents(s, dir), Seq(
-        Completeness("text", 1.0),
-        Uniqueness("doc_id", 1.0),
-        Uniqueness("lang", 0.5),
-        Compliance("english_share", col("lang") === "en", 0.9),
-        Compliance("min_len_100", col("n_chars") >= 100, 0.75),
-        MeanAtLeast("n_chars", 100.0)))
-        .orderBy(col("check"), col("column"))
-    }),
-
-    // Deterministic weighted sampling (Efraimidis–Spirakis priorities on
-    // the shared md5 draw): longer documents proportionally likelier, yet
-    // the sample is fixed across engines/partitionings. Plan: scan +
-    // TakeOrdered(k), no shuffle. operators/Sampling.scala.
-    "q_weighted_sample" -> ((s, dir) =>
-      Sampling.weightedPrioritySample(Tables.documents(s, dir),
-          key = col("text"), weight = col("n_chars"), k = 50,
-          tieBreak = col("doc_id"))
-        .select(col("doc_id"), col("lang"))
-        .orderBy(col("doc_id"))),
-
-    // Time travel through the REAL store: load customers (commit 1), then
-    // mutate twice — the pinned snapshotAt(commit 1) must reproduce the
-    // original load byte-for-byte, which the oracle checks against the
-    // source table directly. TimeTravelSpec covers the mechanics; this
-    // proves the pinned read end-to-end against DuckDB.
-    // Metadata-only schema evolution: ADD COLUMN costs one manifest
-    // line, never a file rewrite — old rows null-fill through the
-    // explicit-schema read, new writes and updates carry the column.
-    "q_schema_evolve" -> ((s, dir) => {
-      import org.apache.spark.sql.types._
-      val cat = new graft.store.Catalog(tempDir("graft-evo-q"))
-      val t = new graft.store.GraftTable(s, cat, "cust", StructType(Seq(
-        StructField("id", LongType, nullable = false),
-        StructField("name", StringType, nullable = true))),
-        uniqueKeys = Seq(Seq("id")))
-      t.createMany(Tables.customer(s, dir).filter(col("c_custkey") <= 300)
-        .select(col("c_custkey").as("id"), col("c_name").as("name")))
-      val t2 = t.evolve(add = Seq(StructField("tier", StringType, nullable = true)))
-      t2.updateMany(graft.query.RawCol(col("id") <= 100L),
-        Map("tier" -> lit("gold")))
-      t2.snapshot()
-        .select(col("id"), col("name"), col("tier"))
-        .orderBy(col("id"))
-    }),
-
-    // Incremental view maintenance: a per-status count/sum view kept
-    // current by folding the change feed (signed-delta algebra, decimal
-    // sums) instead of re-aggregating the table. The OUTPUT comes from
-    // the delta path; the ORACLE recomputes the final state from
-    // scratch — hash equality proves maintenance correctness against an
-    // independent engine.
-    "q_ivm" -> ((s, dir) => {
-      import org.apache.spark.sql.types._
-      val cat = new graft.store.Catalog(tempDir("graft-ivm-q"))
-      val t = new graft.store.GraftTable(s, cat, "ord", StructType(Seq(
-        StructField("okey", LongType, nullable = false),
-        StructField("status", StringType, nullable = false),
-        StructField("total", DoubleType, nullable = true))),
-        uniqueKeys = Seq(Seq("okey")))
-      def ord(lo: Long, hi: Long) = Tables.orders(s, dir)
-        .filter(col("o_orderkey") >= lo && col("o_orderkey") <= hi)
-        .select(col("o_orderkey").as("okey"),
-          col("o_orderstatus").as("status"), col("o_totalprice").as("total"))
-      t.createMany(ord(0, 2000))
-      val state0 = graft.store.MaterializedAgg.compute(
-        t.snapshot(), Seq("status"), Seq("total"))
-      val pin = cat.currentCommitId()
-      t.updateMany(graft.query.RawCol(col("okey") <= 500L),
-        Map("status" -> lit("X")))
-      t.deleteMany(graft.query.RawCol(col("okey") > 1500L))
-      t.createMany(ord(2001, 2100))
-      val maintained = graft.store.MaterializedAgg.applyDelta(state0,
-        graft.store.ChangeFeed.changesBetween(t, pin, cat.currentCommitId()),
-        Seq("status"), Seq("total"))
-      maintained
-        .select(col("status"), col("n"),
-          col("sum_total").cast("double").as("sum_total"))
-        .orderBy(col("status"))
-    }),
-
-    // Incremental JOIN view maintenance — the delta-join companion of
-    // q_ivm: ord ⋈ cust stays materialized across a mutation storm that
-    // hits every hard case of the signed decomposition ΔA⋈B_new +
-    // A_old⋈ΔB — a join-KEY-moving update on A (preimage must leave its
-    // old partner's rows), a value-only update on B (every referencing
-    // joined row must re-image), deletes on both sides (including
-    // partners of moved rows), and inserts on both. The oracle recomputes
-    // the FINAL join from scratch in DuckDB, so any slip in the algebra
-    // (double-removal, stranded preimage, missed cross term) mismatches.
-    "q_ivm_join" -> ((s, dir) => {
-      import org.apache.spark.sql.types._
-      val cat = new graft.store.Catalog(tempDir("graft-ivmj-q"))
-      val ords = new graft.store.GraftTable(s, cat, "ord", StructType(Seq(
-        StructField("okey", LongType, nullable = false),
-        StructField("ckey", LongType, nullable = false),
-        StructField("total", DoubleType, nullable = true))),
-        uniqueKeys = Seq(Seq("okey")))
-      val custs = new graft.store.GraftTable(s, cat, "cust", StructType(Seq(
-        StructField("ckey", LongType, nullable = false),
-        StructField("seg", StringType, nullable = true))),
-        uniqueKeys = Seq(Seq("ckey")))
-      def ord(lo: Long, hi: Long) = Tables.orders(s, dir)
-        .filter(col("o_orderkey") >= lo && col("o_orderkey") <= hi)
-        .select(col("o_orderkey").as("okey"),
-          col("o_custkey").as("ckey"), col("o_totalprice").as("total"))
-      def cust(lo: Long, hi: Long) = Tables.customer(s, dir)
-        .filter(col("c_custkey") >= lo && col("c_custkey") <= hi)
-        .select(col("c_custkey").as("ckey"), col("c_mktsegment").as("seg"))
-      ords.createMany(ord(0, 2000))
-      custs.createMany(cust(0, 1200))
-      val state0 = graft.store.MaterializedJoin.compute(
-        ords.snapshot(), custs.snapshot(), Seq("ckey"))
-      val pin = cat.currentCommitId()
-      ords.updateMany(graft.query.RawCol(col("okey") <= 300L),
-        Map("ckey" -> lit(7L)))                                 // key-moving update on A
-      ords.deleteMany(graft.query.RawCol(col("okey") > 1800L))  // delete on A
-      ords.createMany(ord(2001, 2100))                          // insert on A
-      custs.updateMany(graft.query.RawCol(col("ckey") <= 100L),
-        Map("seg" -> lit("MOVED")))                             // value update on B
-      custs.deleteMany(graft.query.RawCol(col("ckey") > 1100L)) // delete on B
-      custs.createMany(cust(1201, 1300))                        // insert on B
-      val now = cat.currentCommitId()
-      val maintained = graft.store.MaterializedJoin.applyDelta(state0,
-        graft.store.ChangeFeed.changesBetween(ords, pin, now),
-        ords.snapshotAt(pin),
-        graft.store.ChangeFeed.changesBetween(custs, pin, now),
-        custs.snapshot(), Seq("ckey"))
-      // unique PKs on both sides ⇒ every multiplicity is exactly 1; fold
-      // __m into the projection so a miscounted group fails the gate
-      maintained
-        .select(col("okey"), col("ckey"), col("total"), col("seg"), col("__m"))
-        .orderBy(col("okey"))
-    }),
-
-    // Snapshot GC (VACUUM) — the retention contract driven end-to-end
-    // and PHYSICALLY verified: a mutation storm leaves superseded slice
-    // versions on disk (COW never rewrites in place), vacuum(0) must
-    // delete every non-current version directory and keepHistory=1 must
-    // reclaim the archived manifests, after which time travel to the
-    // pinned commit throws the documented error while the CURRENT
-    // snapshot stays byte-intact. The on-disk walk happens inside the
-    // query and folds into a gated boolean column, so a vacuum that
-    // leaks directories, deletes a current one, or leaves stale history
-    // readable hash-mismatches against the oracle.
-    "q_vacuum" -> ((s, dir) => {
-      import org.apache.spark.sql.types._
-      val root = tempDir("graft-vac-q")
-      val cat = new graft.store.Catalog(root)
-      val t = new graft.store.GraftTable(s, cat, "docs", StructType(Seq(
-        StructField("doc_id", LongType, nullable = false),
-        StructField("v", LongType, nullable = true))),
-        uniqueKeys = Seq(Seq("doc_id")))
-      t.createMany(Tables.documents(s, dir)
-        .select(col("doc_id"), length(col("text")).cast("long").as("v")))
-      val pin = cat.currentCommitId()
-      t.updateMany(graft.query.RawCol(pmod(col("doc_id"), lit(10)) === 0L),
-        Map("v" -> lit(-1L)))
-      t.deleteMany(graft.query.RawCol(pmod(col("doc_id"), lit(7)) === 3L))
-      t.compact()
-
-      def versionDirs(): Set[String] = {
-        val tdir = java.nio.file.Paths.get(root, "docs")
-        if (!java.nio.file.Files.exists(tdir)) Set.empty
-        else {
-          val out = scala.collection.mutable.Set[String]()
-          java.nio.file.Files.list(tdir).forEach { pk =>
-            if (java.nio.file.Files.isDirectory(pk))
-              java.nio.file.Files.list(pk).forEach { v =>
-                if (java.nio.file.Files.isDirectory(v)) out += v.toString
-              }
-          }
-          out.toSet
-        }
-      }
-      val current = cat.currentDirs("docs").values.toSet
-      val before = versionDirs()
-      cat.vacuum(retainMs = 0, keepHistory = 1)
-      val after = versionDirs()
-      val oldUnreadable =
-        try { t.snapshotAt(pin).count(); false }
-        catch { case _: graft.store.RecordNotFoundException => true }
-      val gcOk = (before -- current).nonEmpty && // storm really left garbage
-        after == current &&                      // …all reclaimed, none current lost
-        oldUnreadable
-      t.snapshot().select(col("doc_id"), col("v"), lit(gcOk).as("gc_ok"))
-        .orderBy(col("doc_id"))
-    }),
-
-    // Change data feed (Delta/Iceberg table_changes over the COW store):
-    // insert/delete/update-image rows between a pinned commit and head.
-    // The manifest diff prunes unmoved slices before any file is read;
-    // what survives pairs through ONE pk full-outer join. Oracle replays
-    // the three mutations against the raw parquet.
-    "q_cdf" -> ((s, dir) => {
-      import org.apache.spark.sql.types._
-      val cat = new graft.store.Catalog(tempDir("graft-cdf-q"))
-      val t = new graft.store.GraftTable(s, cat, "cust", StructType(Seq(
-        StructField("id", LongType, nullable = false),
-        StructField("name", StringType, nullable = true),
-        StructField("acctbal", DoubleType, nullable = true))),
-        uniqueKeys = Seq(Seq("id")))
-      def cust(lo: Long, hi: Long) = Tables.customer(s, dir)
-        .filter(col("c_custkey") >= lo && col("c_custkey") <= hi)
-        .select(col("c_custkey").as("id"), col("c_name").as("name"),
-          col("c_acctbal").as("acctbal"))
-      t.createMany(cust(0, 200))
-      // (cust is inclusive on both ends; the second batch starts past 200)
-      val pin = cat.currentCommitId()
-      t.updateMany(graft.query.RawCol(col("id") <= 100L),
-        Map("acctbal" -> lit(0.0)))
-      t.deleteMany(graft.query.RawCol(col("id") > 150L))
-      t.createMany(cust(201, 210))
-      graft.store.ChangeFeed.changesBetween(t, pin, cat.currentCommitId())
-        .select(col("id"), col("name"), col("acctbal"), col("_change_type"))
-        .orderBy(col("id"), col("_change_type"))
-    }),
-
-    // Exactly-once CDF TAIL — the consumer side of q_cdf: a mirror table
-    // is maintained purely by draining the source's change feed through
-    // the durable manifest cursor (CdfTail.drainOnce + the set-based
-    // Txn.applyChanges MERGE). Drains interleave with q_cdf's mutation
-    // rounds; mid-gate REQUIREs pin the exactly-once contract (a replay
-    // drain is a no-op, the cursor advanced atomically with the mirror
-    // writes). Output = the mirror; the oracle replays the NET mutations
-    // over customer — hash equality proves the tail applied every change
-    // exactly once. store/CdfTail.scala, GraftTable.stagedApplyChanges.
-    "q_cdf_tail" -> ((s, dir) => {
-      import org.apache.spark.sql.types._
-      val cat = new graft.store.Catalog(tempDir("graft-cdftail-q"))
-      def tbl(n: String) = new graft.store.GraftTable(s, cat, n, StructType(Seq(
-        StructField("id", LongType, nullable = false),
-        StructField("name", StringType, nullable = true),
-        StructField("acctbal", DoubleType, nullable = true))),
-        uniqueKeys = Seq(Seq("id")))
-      val src = tbl("cust")
-      val mir = tbl("mirror")
-      def cust(lo: Long, hi: Long) = Tables.customer(s, dir)
-        .filter(col("c_custkey") >= lo && col("c_custkey") <= hi)
-        .select(col("c_custkey").as("id"), col("c_name").as("name"),
-          col("c_acctbal").as("acctbal"))
-      def drain(): Unit = graft.store.CdfTail.drainAll(src, "mirror") {
-        (txn, ch, _, _) => txn.applyChanges(mir, ch); ()
-      }
-      src.createMany(cust(0, 200))
-      drain() // round 1: the initial load arrives as inserts
-      src.updateMany(graft.query.RawCol(col("id") <= 100L),
-        Map("acctbal" -> lit(0.0)))
-      src.deleteMany(graft.query.RawCol(col("id") > 150L))
-      drain() // round 2: update pre/postimages + deletes
-      src.createMany(cust(201, 210))
-      drain() // round 3: late inserts
-      require(graft.store.CdfTail
-          .drainOnce(src, "mirror")((_, _, _, _) => ()).isEmpty,
-        "q_cdf_tail: a caught-up tail must drain nothing (exactly-once)")
-      mir.snapshot()
-        .select(col("id"), col("name"), col("acctbal"))
-        .orderBy(col("id"))
-    }),
-
-    "q_time_travel" -> ((s, dir) => {
-      import org.apache.spark.sql.types._
-      val cat = new graft.store.Catalog(
-        tempDir("graft-tt-q"))
-      val t = new graft.store.GraftTable(s, cat, "cust", StructType(Seq(
-        StructField("id", LongType, nullable = false),
-        StructField("name", StringType, nullable = true),
-        StructField("acctbal", DoubleType, nullable = true))),
-        uniqueKeys = Seq(Seq("id")))
-      t.createMany(Tables.customer(s, dir).filter(col("c_custkey") <= 200)
-        .select(col("c_custkey").as("id"), col("c_name").as("name"),
-          col("c_acctbal").as("acctbal")))
-      val pin = cat.currentCommitId()
-      t.updateMany(graft.query.RawCol(col("id") <= 100L),
-        Map("acctbal" -> lit(0.0)))
-      t.deleteMany(graft.query.RawCol(col("id") > 150L))
-      t.snapshotAt(pin)
-        .select(col("id"), col("name"), col("acctbal"))
-        .orderBy(col("id"))
-    }),
-
-    // RESTORE TO COMMIT — q_time_travel's write-side twin (Delta RESTORE
-    // semantics): after a bad update+delete, one manifest swap rolls the
-    // CURRENT pointers back to the good commit; no data is rewritten, the
-    // bad commits stay time-travelable (REQUIREd mid-gate), and the
-    // restore is an ordinary OCC commit. The oracle is the original load
-    // — hash equality proves the rollback is exact. GraftTable.restoreTo.
-    "q_restore" -> ((s, dir) => {
-      import org.apache.spark.sql.types._
-      val cat = new graft.store.Catalog(tempDir("graft-restore-q"))
-      val t = new graft.store.GraftTable(s, cat, "cust", StructType(Seq(
-        StructField("id", LongType, nullable = false),
-        StructField("name", StringType, nullable = true),
-        StructField("acctbal", DoubleType, nullable = true))),
-        uniqueKeys = Seq(Seq("id")))
-      t.createMany(Tables.customer(s, dir)
-        .select(col("c_custkey").as("id"), col("c_name").as("name"),
-          col("c_acctbal").as("acctbal")))
-      val good = cat.currentCommitId()
-      t.updateMany(graft.query.RawCol(col("id") <= 100L),
-        Map("acctbal" -> lit(0.0)))
-      t.deleteMany(graft.query.RawCol(col("id") > 1000L))
-      val bad = cat.currentCommitId()
-      t.restoreTo(good)
-      require(cat.currentCommitId() == bad + 1,
-        "q_restore: restore must be a NEW commit, not a history rewrite")
-      require(t.snapshotAt(bad)
-          .filter(col("id") <= 100L && col("acctbal") =!= 0.0).count() == 0,
-        "q_restore: the bad commit must stay time-travelable across restore")
-      t.snapshot()
-        .select(col("id"), col("name"), col("acctbal"))
-        .orderBy(col("id"))
-    }),
-
-    // RESTORE × change-feed composition (Delta's table_changes across
-    // RESTORE): a tail whose cursor predates a restoreTo must observe the
-    // rollback as INVERSE deltas exactly once — re-inserts of the
-    // bad-deleted rows, postimages reverting the bad updates — and a
-    // caught-up tail must then drain nothing. The mirror is maintained
-    // ONLY through the tail; hash-equality of the mirror against the
-    // original load proves the inverse deltas were complete and exact.
-    // ChangeFeed diffs manifest snapshots, so the restore commit needs no
-    // special-casing — the pk-diff of (bad state → restored state) IS the
-    // inverse feed. GraftTable.restoreTo + store/CdfTail.drainOnce.
-    "q_restore_cdf" -> ((s, dir) => cachedResult(s, "q_restore_cdf", dir) {
-      import org.apache.spark.sql.types._
-      val cat = new graft.store.Catalog(tempDir("graft-restorecdf-q"))
-      def tbl(n: String) = new graft.store.GraftTable(s, cat, n, StructType(Seq(
-        StructField("id", LongType, nullable = false),
-        StructField("name", StringType, nullable = true),
-        StructField("acctbal", DoubleType, nullable = true))),
-        uniqueKeys = Seq(Seq("id")))
-      val src = tbl("cust")
-      val mir = tbl("mirror")
-      def drain(): Unit = graft.store.CdfTail.drainAll(src, "mirror") {
-        (txn, ch, _, _) => txn.applyChanges(mir, ch); ()
-      }
-      // id range 1..140 exists at every SF (sf0.001 customer has 150)
-      src.createMany(Tables.customer(s, dir).filter(col("c_custkey") <= 140)
-        .select(col("c_custkey").as("id"), col("c_name").as("name"),
-          col("c_acctbal").as("acctbal")))
-      drain()
-      val good = cat.currentCommitId()
-      src.updateMany(graft.query.RawCol(col("id") <= 100L),
-        Map("acctbal" -> lit(0.0)))
-      src.deleteMany(graft.query.RawCol(col("id") > 120L))
-      drain() // the bad commits reach the mirror BEFORE the rollback
-      src.restoreTo(good)
-      var types = Map.empty[String, Long]
-      val w = graft.store.CdfTail.drainOnce(src, "mirror") { (txn, ch, _, _) =>
-        types = ch.groupBy(col("_change_type")).count().collect()
-          .map(r => r.getString(0) -> r.getLong(1)).toMap
-        txn.applyChanges(mir, ch); ()
-      }
-      require(w.nonEmpty, "q_restore_cdf: the restore window must drain")
-      require(types.getOrElse("insert", 0L) == 20L,
-        s"q_restore_cdf: the 20 bad-deleted rows must return as inserts, got $types")
-      require(types.getOrElse("delete", 0L) == 0L,
-        s"q_restore_cdf: a pure rollback re-adds, it never deletes, got $types")
-      require(types.getOrElse("update_postimage", 0L) ==
-          types.getOrElse("update_preimage", 0L) &&
-          types.getOrElse("update_postimage", 0L) >= 1L,
-        s"q_restore_cdf: reverted balances must arrive as paired images, got $types")
-      require(graft.store.CdfTail
-          .drainOnce(src, "mirror")((_, _, _, _) => ()).isEmpty,
-        "q_restore_cdf: a tail caught up past the restore must drain nothing")
-      mir.snapshot()
-        .select(col("id"), col("name"), col("acctbal"))
-        .orderBy(col("id"))
-    }),
-
-    // RESTORE × PERSISTENT INDEX: the composition q_restore_cdf proves
-    // for a plain mirror, driven through a real index consumer. The
-    // corpus is corrupted (bogus inserts + a delete stripe + text
-    // rewrites), the DedupIndex absorbs the bad window, then restoreTo
-    // rolls the source back and ONE refresh must absorb the rollback as
-    // inverse deltas — delta-priced un-indexing, never a rebuild. The
-    // mid-gate REQUIREs pin the refreshed sketch table row-for-row equal
-    // to a fresh build on the restored snapshot; the output is the
-    // planted-copy probe, so the hash gate rides sketches that lived
-    // through corrupt→restore→refresh. GraftTable.restoreTo +
-    // store/DedupIndex + store/CdfTail.
-    "q_restore_index" -> ((s, dir) => cachedResult(s, "q_restore_index", dir) {
-      import org.apache.spark.sql.types._
-      val cat = new graft.store.Catalog(tempDir("graft-restoreidx-q"))
-      val docs = Tables.documents(s, dir).select(col("doc_id"), col("text"))
-      val src = new graft.store.GraftTable(s, cat, "docs", StructType(Seq(
-        StructField("doc_id", LongType, nullable = false),
-        StructField("text", StringType, nullable = true))),
-        uniqueKeys = Seq(Seq("doc_id")))
-      src.createMany(docs)
-      val idx = graft.store.DedupIndex.build(src, "d1", "text", "doc_id",
-        nBuckets = 4)
-      val good = cat.currentCommitId()
-      src.createMany(docs.filter(pmod(col("doc_id"), lit(5)) === 1)
-        .select((col("doc_id") + 20000L).as("doc_id"), col("text")))
-      src.deleteMany(graft.query.RawCol(
-        pmod(col("doc_id"), lit(7)) === 2 && col("doc_id") < 20000L))
-      src.updateMany(graft.query.RawCol(
-        pmod(col("doc_id"), lit(9)) === 4 && col("doc_id") < 20000L),
-        Map("text" -> lit("corrupted text payload")))
-      require(idx.refresh().nonEmpty,
-        "q_restore_index: the bad window must drain")
-      src.restoreTo(good)
-      require(idx.refresh().nonEmpty,
-        "q_restore_index: the restore window must drain")
-      require(idx.refresh().isEmpty,
-        "q_restore_index: caught up after the rollback")
-      // the rolled-back index equals a fresh build on the restored
-      // snapshot, row for row (gate-side audit scan, not query cost):
-      // equal cardinalities + one empty multiset difference imply the
-      // other direction is empty too — no need to pay the join twice
-      val persisted = idx.sketch.snapshot().select(
-        col("id"), col("sh"), col("sig"))
-      val fresh = graft.operators.Dedup.minhashIndex(
-        src.snapshot(), "text", "doc_id")
-      require(persisted.count() == fresh.count() &&
-          persisted.exceptAll(fresh).limit(1).count() == 0,
-        "q_restore_index: refreshed index must equal a fresh build " +
-          "on the restored snapshot")
-      val batch = docs.filter(pmod(col("doc_id"), lit(4)) === 0)
-        .select((col("doc_id") + 10000L).as("doc_id"), col("text"))
-      graft.store.DedupIndex.open(src, "d1", "text", "doc_id")
-        .dupsAgainst(batch)
-        .filter(col("dup_of") === col("new_id") - 10000L)
-        .select(col("new_id"), col("dup_of"), col("jaccard"))
-        .orderBy(col("new_id"))
-    }),
-
-    // CURSOR-AWARE VACUUM driven end-to-end: the corpus moves on
-    // (inserts + a delete stripe + text updates) while the index
-    // SLEEPS, then the most aggressive retention (retainMs=0,
-    // keepHistory=1) runs — without the cdf-watermark pinning this
-    // reclaims exactly the cursor's history manifest and the preimage
-    // slice versions the pending refresh is about to diff against. The
-    // refresh must then drain the backlog to exactness (REQUIREd equal
-    // to a fresh re-sketch), a post-catch-up vacuum reclaims what
-    // nothing references, and the probe hash-gates sketches that lived
-    // through lag → vacuum → refresh. Catalog.vacuum + store/DedupIndex.
-    "q_vacuum_index" -> ((s, dir) => cachedResult(s, "q_vacuum_index", dir) {
-      import org.apache.spark.sql.types._
-      val cat = new graft.store.Catalog(tempDir("graft-vacidx-q"))
-      val docs = Tables.documents(s, dir).select(col("doc_id"), col("text"))
-      val src = new graft.store.GraftTable(s, cat, "docs", StructType(Seq(
-        StructField("doc_id", LongType, nullable = false),
-        StructField("text", StringType, nullable = true))),
-        uniqueKeys = Seq(Seq("doc_id")))
-      src.createMany(docs)
-      val idx = graft.store.DedupIndex.build(src, "d1", "text", "doc_id",
-        nBuckets = 4)
-      src.createMany(docs.filter(pmod(col("doc_id"), lit(4)) === 0)
-        .select((col("doc_id") + 10000L).as("doc_id"), col("text")))
-      src.deleteMany(graft.query.RawCol(
-        pmod(col("doc_id"), lit(9)) === 2 && col("doc_id") < 10000L))
-      src.updateMany(graft.query.RawCol(
-        pmod(col("doc_id"), lit(13)) === 6 && col("doc_id") < 10000L),
-        Map("text" -> concat(col("text"), lit(" tail"))))
-      cat.vacuum(retainMs = 0, keepHistory = 1) // the cursor still lags
-      require(idx.refresh().nonEmpty,
-        "q_vacuum_index: the lagging window must survive the vacuum")
-      require(idx.refresh().isEmpty,
-        "q_vacuum_index: caught up — a second refresh drains nothing")
-      val persisted = idx.sketch.snapshot().select(
-        col("id"), col("sh"), col("sig"))
-      val fresh = graft.operators.Dedup.minhashIndex(
-        src.snapshot(), "text", "doc_id")
-      require(persisted.count() == fresh.count() &&
-          persisted.exceptAll(fresh).limit(1).count() == 0,
-        "q_vacuum_index: post-vacuum refresh must land exactly")
-      // caught up: the cursor pins only head, retention reclaims freely
-      cat.vacuum(retainMs = 0, keepHistory = 1)
-      require(idx.refresh().isEmpty,
-        "q_vacuum_index: a caught-up cursor survives the second vacuum")
-      // probe copies of the CURRENT snapshot: every surviving %4 doc
-      // (originals and round-one copies alike) pairs with itself at 1.0
-      val batch = src.snapshot().filter(pmod(col("doc_id"), lit(4)) === 0)
-        .select((col("doc_id") + 20000L).as("doc_id"), col("text"))
-      graft.store.DedupIndex.open(src, "d1", "text", "doc_id")
-        .dupsAgainst(batch)
-        .filter(col("dup_of") === col("new_id") - 20000L)
-        .select(col("new_id"), col("dup_of"), col("jaccard"))
-        .orderBy(col("new_id"))
-    }),
-
-    // Z-order clustering end-to-end: orders loaded into the store, slice
-    // rewritten Morton-ordered on (o_custkey, o_totalprice), then a
-    // snapshotWhere range on BOTH clustered columns reads only the files
-    // whose bands overlap (ZorderSpec asserts the skip ratio; this proves
-    // the surviving rows against DuckDB).
-    "q_zorder_skip" -> ((s, dir) => {
-      import org.apache.spark.sql.types._
-      val cat = new graft.store.Catalog(
-        tempDir("graft-z-q"))
-      val t = new graft.store.GraftTable(s, cat, "ord", StructType(Seq(
-        StructField("okey", LongType, nullable = false),
-        StructField("cust", LongType, nullable = false),
-        StructField("total", DoubleType, nullable = true))),
-        uniqueKeys = Seq(Seq("okey")))
-      t.createMany(Tables.orders(s, dir).select(
-        col("o_orderkey").as("okey"), col("o_custkey").as("cust"),
-        col("o_totalprice").as("total")))
-      t.compact(targetBytes = 64L << 10, zorderBy = Seq("cust", "total"))
-      t.snapshotWhere(col("cust") < 100L && col("total") > 200000.0)
-        .select(col("okey"), col("cust"), col("total"))
-        .orderBy(col("okey"))
-    }),
-
-    // Bucketed co-located join: both sides written bucketBy(8) on the
-    // join key, then sort-merge-joined WITHOUT any shuffle — the scan
-    // itself provides the hash distribution, which at 100 TB is the
-    // difference between a layout decision made once at write time and
-    // re-shuffling the fact table on every join. Broadcast is hinted
-    // off (a broadcast would hide the property being gated); the query
-    // REQUIREs the join sub-plan contains zero exchanges before
-    // aggregating. Oracle = the same join over the raw parquet.
-    "q_bucket_join" -> ((s, dir) => {
-      val base = tempDir("graft-bkt-q")
-      s.sql("DROP TABLE IF EXISTS graft_bkt_orders")
-      s.sql("DROP TABLE IF EXISTS graft_bkt_cust")
-      Tables.orders(s, dir)
-        .select(col("o_orderkey"), col("o_custkey"), col("o_totalprice"))
-        .write.mode("overwrite").option("path", s"$base/orders")
-        .bucketBy(8, "o_custkey").sortBy("o_custkey")
-        .saveAsTable("graft_bkt_orders")
-      Tables.customer(s, dir)
-        .select(col("c_custkey"), col("c_mktsegment"))
-        .write.mode("overwrite").option("path", s"$base/cust")
-        .bucketBy(8, "c_custkey").sortBy("c_custkey")
-        .saveAsTable("graft_bkt_cust")
-      val joined = s.table("graft_bkt_orders")
-        .hint("merge")
-        .join(s.table("graft_bkt_cust"),
-          col("o_custkey") === col("c_custkey"))
-      val exchanges = "Exchange hashpartitioning".r
-        .findAllIn(joined.queryExecution.executedPlan.toString).size
-      require(exchanges == 0,
-        s"q_bucket_join: bucketed join planned $exchanges shuffles, expected 0")
-      joined.groupBy(col("c_mktsegment"))
-        .agg(count(lit(1)).as("n"), decSum(col("o_totalprice")).as("rev"))
-        .orderBy(col("c_mktsegment"))
-    }),
-
-    // Stats-based data skipping through the REAL store: customers loaded
-    // into a mktsegment-partitioned COW table (one stats sidecar per
-    // slice), then snapshotWhere prunes slices by the c_custkey range
-    // before reading — StatsSkipSpec asserts the skip; this query proves
-    // the surviving rows are exactly right.
-    "q_stats_skip" -> ((s, dir) => {
-      import org.apache.spark.sql.types._
-      val cat = new graft.store.Catalog(
-        tempDir("graft-stats-q"))
-      val t = new graft.store.GraftTable(s, cat, "cust", StructType(Seq(
-        StructField("id", LongType, nullable = false),
-        StructField("segment", StringType, nullable = false),
-        StructField("acctbal", DoubleType, nullable = true))),
-        uniqueKeys = Seq(Seq("id")), partitionCols = Seq("segment"))
-      t.createMany(Tables.customer(s, dir).select(
-        col("c_custkey").as("id"), col("c_mktsegment").as("segment"),
-        col("c_acctbal").as("acctbal")))
-      t.snapshotWhere(col("id") <= 120L && col("acctbal") > 0.0)
-        .select(col("id"), col("segment"), col("acctbal"))
-        .orderBy(col("id"))
-    }),
-
-    // Planning-time skipping with NO explicit pruning call: the snapshot
-    // is a HadoopFsRelation over GraftFileIndex, so the plain .filter
-    // here is pushed down by Catalyst, prunes slices/files at the index,
-    // and reaches the vectorized parquet scan as PushedFilters — the
-    // Delta/Iceberg integration shape. Same data and predicate as
-    // q_stats_skip, different routing. store/GraftFileIndex.scala.
-    "q_pushdown_skip" -> ((s, dir) => {
-      import org.apache.spark.sql.types._
-      val cat = new graft.store.Catalog(
-        tempDir("graft-pushdown-q"))
-      val t = new graft.store.GraftTable(s, cat, "cust", StructType(Seq(
-        StructField("id", LongType, nullable = false),
-        StructField("segment", StringType, nullable = false),
-        StructField("acctbal", DoubleType, nullable = true))),
-        uniqueKeys = Seq(Seq("id")), partitionCols = Seq("segment"))
-      t.createMany(Tables.customer(s, dir).select(
-        col("c_custkey").as("id"), col("c_mktsegment").as("segment"),
-        col("c_acctbal").as("acctbal")))
-      t.snapshotRelation()
-        .filter(col("id") <= 120L && col("acctbal") > 0.0)
-        .select(col("id"), col("segment"), col("acctbal"))
-        .orderBy(col("id"))
-    }),
-
-    // Per-file BLOOM skipping — the point-lookup complement of
-    // q_pushdown_skip/q_stats_skip: customers land in 8 files round-robin
-    // by key, so every file's phone range spans the whole domain and
-    // min/max can prove nothing; the parquet-native blooms the write
-    // built (lifted into the sidecar) reject the files that provably
-    // lack the probed phone at PLANNING time. The gate REQUIREs files
-    // were actually skipped, then returns the looked-up row — at 100 TB
-    // this is "open the one file that can match", not "scan every file
-    // whose range overlaps" (i.e. all of them). store/SliceStats.scala.
-    "q_bloom_skip" -> ((s, dir) => {
-      import org.apache.spark.sql.types._
-      val cat = new graft.store.Catalog(tempDir("graft-bloomskip-q"))
-      // ndv must be SIZED TO THE DATA: a bloom built for 4096 distinct
-      // values saturates at 10× that load (every bit set → FPP ≈ 1 →
-      // zero pruning — observed at the sf1 probe, 37k names/file into a
-      // 4096-ndv bitset). Sizing from the corpus is exactly the capacity
-      // planning a production bloomCols declaration encodes.
-      val bloomNdv = math.max(4096L, Tables.customer(s, dir).count() / 4L)
-      val t = new graft.store.GraftTable(s, cat, "cust", StructType(Seq(
-        StructField("id", LongType, nullable = false),
-        StructField("name", StringType, nullable = false),
-        StructField("acctbal", DoubleType, nullable = true))),
-        bloomCols = Seq("name"), bloomNdv = bloomNdv)
-      t.createMany(Tables.customer(s, dir).select(
-          col("c_custkey").as("id"), col("c_name").as("name"),
-          col("c_acctbal").as("acctbal"))
-        .repartition(8, pmod(col("c_custkey"), lit(8))))
-      // bounded 1-row probe: the gate keys on customer 42's name so the
-      // literal tracks the scale factor instead of being hardcoded
-      val probe = t.snapshot().filter(col("id") === 42L)
-        .select(col("name")).collect()(0).getString(0)
-      val (df, idx) = t.snapshotRelationWithIndex()
-      val out = df.filter(col("name") === probe)
-        .select(col("id"), col("name"), col("acctbal"))
-        .orderBy(col("id"))
-      out.count() // plan + list once so the skip counters are real
-      require(idx.lastTotalFiles >= 2 && idx.lastKeptFiles < idx.lastTotalFiles,
-        s"q_bloom_skip: bloom must prune files " +
-          s"(kept ${idx.lastKeptFiles} of ${idx.lastTotalFiles})")
-      out
-    }),
-  )
-
-  private val textStopwords = Seq("the", "a", "and", "of", "to", "in", "is")
-
-  /** DuckDB twin of [[operators.Bpe.train]], generated: the k training
-    * iterations unroll as chained CTEs — w0 is the word-frequency table
-    * as spaced char sequences; each step counts adjacent pairs (weighted
-    * by word freq), argmaxes with the count-desc/pair-asc tie-break, and
-    * rewrites via the same depth-nested literal replace (fixpoint
-    * application) the Spark side uses. One generated string so the two
-    * engines cannot drift on depth or tie-break. */
-  private def bpeOracle(k: Int, depth: Int,
-                        segment: Boolean = false): String = {
-    def rep(inner: String): String =
-      (1 to depth).foldLeft(inner)((e, _) =>
-        s"replace($e, ' ' || pr || ' ', ' ' || mg || ' ')")
-    val sb = new StringBuilder
-    sb.append("""
-      WITH w0 AS (
-        SELECT t AS word,
-               ' ' || regexp_replace(t, '(.)', '\1 ', 'g') AS seq,
-               CAST(count(*) AS BIGINT) AS f
-        FROM (SELECT unnest(string_split(text, ' ')) AS t FROM documents)
-        WHERE t <> '' GROUP BY t
-      )""")
-    // In segment mode m$i must NEVER be empty: w$i = w$(i-1) CROSS JOIN
-    // m$i would annihilate the word table when the corpus runs out of
-    // pairs before step k (Spark's train stops early and segment applies
-    // only the real merges). A sentinel pair of control chars (absent
-    // from any text) at count −1 loses every argmax with candidates and
-    // its replace is a no-op when it wins an empty round. Train mode
-    // stays sentinel-free: an empty m$i contributes zero rows to the
-    // UNION, matching the early stop.
-    val mSrc =
-      if (segment) "(SELECT pr, c FROM p%d UNION ALL " +
-        "SELECT chr(1) || ' ' || chr(1), CAST(-1 AS BIGINT))"
-      else "p%d"
-    for (i <- 1 to k) {
-      sb.append(s""",
-      p$i AS (
-        SELECT pr, CAST(sum(f) AS BIGINT) AS c FROM (
-          SELECT f, unnest(list_transform(range(1, len(toks)),
-                     j -> toks[j] || ' ' || toks[j+1])) AS pr
-          FROM (SELECT f, string_split(trim(seq), ' ') AS toks FROM w${i - 1})
-        ) GROUP BY pr
-      ),
-      m$i AS (
-        SELECT pr, replace(pr, ' ', '') AS mg, c
-        FROM ${mSrc.format(i)} ORDER BY c DESC, pr ASC LIMIT 1
-      )""")
-      if (i < k || segment) sb.append(s""",
-      w$i AS (
-        SELECT word, ${rep("seq")} AS seq, f FROM w${i - 1} CROSS JOIN m$i
-      )""")
-    }
-    if (segment)
-      sb.append(s"""
-      SELECT word,
-             CAST(len(string_split(trim(seq), ' ')) AS BIGINT) AS n_symbols,
-             trim(seq) AS seq
-      FROM w$k ORDER BY word""")
-    else {
-      sb.append("\n      " + (1 to k).map(i =>
-        s"SELECT CAST($i AS BIGINT) AS step, pr AS pair, c AS freq FROM m$i")
-        .mkString("\n      UNION ALL "))
-      sb.append("\n      ORDER BY step")
-    }
-    sb.toString
-  }
-
-  /** Unrolled fixed-point PageRank oracle: the same integer millionth-
-    * unit recurrence as `operators.Graph.pageRankFixedPoint`, one CTE
-    * per iteration (`//` = DuckDB floor division = Spark `div` on the
-    * all-positive operands). Integer arithmetic is what makes the
-    * distributed and single-threaded evaluations hash-identical. */
-  /** DuckDB replay of [[operators.Clustering.kmeans]]: one CTE pair
-    * (assign aN, update cN) per Lloyd round, all-integer arithmetic so
-    * every round is bit-identical to the Spark side. */
-  /** DuckDB replay of [[operators.Pq.pqTopK]]: subspace k-means per
-    * round (same integer/md5 contract as [[kmeansOracle]], with the sub
-    * column threaded through and lost centroids carried over), final
-    * encoding, per-query ADC lookup tables, ascending-distance rank. */
-  /** One PQ train+encode CTE chain (prefix `p` keeps two chains — e.g.
-    * the IVF coarse quantizer, which IS a PQ with m=1 — from colliding
-    * in the same WITH). Emits `${p}sp`/`${p}c0..c$iters`/`${p}codes`
-    * over the shared `pts`; the caller appends search CTEs.
-    * `trainPts` names the CTE the SEEDS and Lloyd rounds read — the
-    * persisted-index oracle trains on the build-time snapshot (`pts0`)
-    * while `${p}codes` still encodes ALL of `pts`, exactly the
-    * train-once/encode-everything split AnnIndex persists. */
-  private def pqChainSql(p: String, m: Int, k: Int, iters: Int,
-                         trainPts: String = "pts"): String = {
-    val sb = new StringBuilder
-    sb.append(s""",
-      ${p}dims AS (SELECT len(e) // $m AS ds FROM pts LIMIT 1),
-      ${p}sp AS (
-        SELECT id, sub, list_slice(e, sub * ds + 1, (sub + 1) * ds) AS se
-        FROM pts CROSS JOIN ${p}dims
-        CROSS JOIN (SELECT unnest(range(0, $m)) AS sub)
-      )""")
-    val tsp = if (trainPts == "pts") s"${p}sp" else s"${p}tsp"
-    if (trainPts != "pts") sb.append(s""",
-      ${p}tsp AS (
-        SELECT id, sub, list_slice(e, sub * ds + 1, (sub + 1) * ds) AS se
-        FROM $trainPts CROSS JOIN ${p}dims
-        CROSS JOIN (SELECT unnest(range(0, $m)) AS sub)
-      )""")
-    sb.append(s""",
-      ${p}seed AS (
-        SELECT id, row_number() OVER (ORDER BY md5(CAST(id AS VARCHAR)), id) AS cid
-        FROM (SELECT id FROM $trainPts ORDER BY md5(CAST(id AS VARCHAR)), id LIMIT $k)
-      ), ${p}c0 AS (
-        SELECT sp.sub, CAST(s.cid AS INTEGER) AS cid,
-               list_transform(sp.se, v -> v * 1000) AS c
-        FROM $tsp sp JOIN ${p}seed s ON sp.id = s.id
-      )""")
-    for (i <- 1 to iters) {
-      sb.append(s""",
-      ${p}a$i AS (
-        SELECT id, sub, se, cid FROM (
-          SELECT sp.id, sp.sub, sp.se, c.cid,
-                 row_number() OVER (PARTITION BY sp.id, sp.sub ORDER BY
-                   list_sum(list_transform(range(1, len(sp.se) + 1),
-                     i -> (sp.se[i] * 1000 - c.c[i]) * (sp.se[i] * 1000 - c.c[i]))),
-                   c.cid) AS rn
-          FROM $tsp sp JOIN ${p}c${i - 1} c ON sp.sub = c.sub) WHERE rn = 1
-      ), ${p}u$i AS (
-        SELECT sub, cid, list(v ORDER BY pos) AS c FROM (
-          SELECT sub, cid, pos, CAST((sum(v) * 1000) // count(*) AS BIGINT) AS v
-          FROM (SELECT sub, cid, unnest(se) AS v, generate_subscripts(se, 1) AS pos
-                FROM ${p}a$i)
-          GROUP BY sub, cid, pos)
-        GROUP BY sub, cid
-      ), ${p}c$i AS (
-        SELECT o.sub, o.cid, coalesce(u.c, o.c) AS c
-        FROM ${p}c${i - 1} o LEFT JOIN ${p}u$i u ON o.sub = u.sub AND o.cid = u.cid
-      )""")
-    }
-    sb.append(s""",
-      ${p}codes AS (
-        SELECT id, sub, cid FROM (
-          SELECT sp.id, sp.sub, c.cid,
-                 row_number() OVER (PARTITION BY sp.id, sp.sub ORDER BY
-                   list_sum(list_transform(range(1, len(sp.se) + 1),
-                     i -> (sp.se[i] * 1000 - c.c[i]) * (sp.se[i] * 1000 - c.c[i]))),
-                   c.cid) AS rn
-          FROM ${p}sp sp JOIN ${p}c$iters c ON sp.sub = c.sub) WHERE rn = 1
-      )""")
-    sb.toString
-  }
-
-  private val pqPtsSql = """
-      WITH pts AS (
-        SELECT vec_id AS id,
-               list_transform(embedding, x ->
-                 greatest(-2000, least(2000,
-                   CAST(round(CAST(x AS DOUBLE) * 1000, 0) AS BIGINT))) + 2000) AS e
-        FROM embeddings
-      )"""
-
-  private def pqOracle(m: Int, k: Int, iters: Int, topk: Int): String = {
-    val sb = new StringBuilder
-    sb.append(pqPtsSql)
-    sb.append(pqChainSql("", m, k, iters))
-    sb.append(s""",
-      q AS (
-        SELECT id AS qid, e AS qe FROM pts WHERE id < 10
-      ), lut AS (
-        SELECT q.qid, c.sub, c.cid,
-               list_sum(list_transform(range(1, len(c.c) + 1), i ->
-                 (list_slice(q.qe, c.sub * ds + 1, (c.sub + 1) * ds)[i] * 1000 - c.c[i])
-               * (list_slice(q.qe, c.sub * ds + 1, (c.sub + 1) * ds)[i] * 1000 - c.c[i]))) AS dist
-        FROM q CROSS JOIN dims CROSS JOIN c$iters c
-      ), scored AS (
-        SELECT l.qid, a.id, sum(l.dist) AS dist
-        FROM codes a JOIN lut l ON a.sub = l.sub AND a.cid = l.cid
-        GROUP BY l.qid, a.id
-      ), ranked AS (
-        SELECT qid, id,
-               row_number() OVER (PARTITION BY qid ORDER BY dist, id) AS rank
-        FROM scored
-      )
-      SELECT qid, id, CAST(rank AS BIGINT) AS rank
-      FROM ranked WHERE rank <= $topk ORDER BY qid, rank""")
-    sb.toString
-  }
-
-  /** IVFADC replay: the coarse quantizer is the same chain with m=1
-    * (prefix `g`), probing keeps each query's nProbe nearest cells, and
-    * `scored` gates the PQ code join on cell membership. */
-  private def ivfPqOracle(nCells: Int, nProbe: Int, m: Int, k: Int,
-                          iters: Int, topk: Int): String = {
-    val sb = new StringBuilder
-    sb.append(pqPtsSql)
-    sb.append(pqChainSql("g", 1, nCells, iters))
-    sb.append(pqChainSql("", m, k, iters))
-    sb.append(s""",
-      q AS (
-        SELECT id AS qid, e AS qe FROM pts WHERE id < 10
-      ), probe AS (
-        SELECT qid, cid AS cell FROM (
-          SELECT q.qid, c.cid,
-                 row_number() OVER (PARTITION BY q.qid ORDER BY
-                   list_sum(list_transform(range(1, len(c.c) + 1),
-                     i -> (q.qe[i] * 1000 - c.c[i]) * (q.qe[i] * 1000 - c.c[i]))),
-                   c.cid) AS rn
-          FROM q CROSS JOIN gc$iters c) WHERE rn <= $nProbe
-      ), lut AS (
-        SELECT q.qid, c.sub, c.cid,
-               list_sum(list_transform(range(1, len(c.c) + 1), i ->
-                 (list_slice(q.qe, c.sub * ds + 1, (c.sub + 1) * ds)[i] * 1000 - c.c[i])
-               * (list_slice(q.qe, c.sub * ds + 1, (c.sub + 1) * ds)[i] * 1000 - c.c[i]))) AS dist
-        FROM q CROSS JOIN dims CROSS JOIN c$iters c
-      ), scored AS (
-        SELECT l.qid, a.id, sum(l.dist) AS dist
-        FROM codes a
-        JOIN gcodes g ON a.id = g.id
-        JOIN probe p ON g.cid = p.cell
-        JOIN lut l ON l.qid = p.qid AND a.sub = l.sub AND a.cid = l.cid
-        GROUP BY l.qid, a.id
-      ), ranked AS (
-        SELECT qid, id,
-               row_number() OVER (PARTITION BY qid ORDER BY dist, id) AS rank
-        FROM scored
-      )
-      SELECT qid, id, CAST(rank AS BIGINT) AS rank
-      FROM ranked WHERE rank <= $topk ORDER BY qid, rank""")
-    sb.toString
-  }
-
-  /** Persistent-index replay ([[graft.store.AnnIndex]]): BOTH codebooks
-    * train on the build-time snapshot `pts0` (ids with id % 4 <> 0) but
-    * every row of `pts` — including the post-build inserts the
-    * change-feed refresh encoded — carries codes, and the probe scores
-    * the full code table. Any retraining on the Spark side (codebooks
-    * drifting toward the final corpus) hash-mismatches here. */
-  private def annPersistOracle(nCells: Int, nProbe: Int, m: Int, k: Int,
-                               iters: Int, topk: Int): String = {
-    val sb = new StringBuilder
-    sb.append(pqPtsSql)
-    sb.append(""",
-      pts0 AS (SELECT id, e FROM pts WHERE id % 4 <> 0)""")
-    sb.append(pqChainSql("g", 1, nCells, iters, trainPts = "pts0"))
-    sb.append(pqChainSql("", m, k, iters, trainPts = "pts0"))
-    sb.append(s""",
-      q AS (
-        SELECT id AS qid, e AS qe FROM pts WHERE id < 10
-      ), probe AS (
-        SELECT qid, cid AS cell FROM (
-          SELECT q.qid, c.cid,
-                 row_number() OVER (PARTITION BY q.qid ORDER BY
-                   list_sum(list_transform(range(1, len(c.c) + 1),
-                     i -> (q.qe[i] * 1000 - c.c[i]) * (q.qe[i] * 1000 - c.c[i]))),
-                   c.cid) AS rn
-          FROM q CROSS JOIN gc$iters c) WHERE rn <= $nProbe
-      ), lut AS (
-        SELECT q.qid, c.sub, c.cid,
-               list_sum(list_transform(range(1, len(c.c) + 1), i ->
-                 (list_slice(q.qe, c.sub * ds + 1, (c.sub + 1) * ds)[i] * 1000 - c.c[i])
-               * (list_slice(q.qe, c.sub * ds + 1, (c.sub + 1) * ds)[i] * 1000 - c.c[i]))) AS dist
-        FROM q CROSS JOIN dims CROSS JOIN c$iters c
-      ), scored AS (
-        SELECT l.qid, a.id, sum(l.dist) AS dist
-        FROM codes a
-        JOIN gcodes g ON a.id = g.id
-        JOIN probe p ON g.cid = p.cell
-        JOIN lut l ON l.qid = p.qid AND a.sub = l.sub AND a.cid = l.cid
-        GROUP BY l.qid, a.id
-      ), ranked AS (
-        SELECT qid, id,
-               row_number() OVER (PARTITION BY qid ORDER BY dist, id) AS rank
-        FROM scored
-      )
-      SELECT qid, id, CAST(rank AS BIGINT) AS rank
-      FROM ranked WHERE rank <= $topk ORDER BY qid, rank""")
-    sb.toString
-  }
-
-  /** Rebuild replay ([[graft.store.AnnIndex.rebuild]]): the final corpus
-    * is original ∪ drift-lattice ∪ post-rebuild delta; BOTH codebooks
-    * train on the REBUILD snapshot (original ∪ drift — ids < 40000),
-    * every row carries codes (the delta encoded by refresh under the
-    * rebuilt codebooks), and the probe scores the full code table. A
-    * Spark side that kept the frozen build-time codebooks, retrained on
-    * the wrong snapshot, or dropped the delta hash-mismatches. The
-    * lattice is exact in float and double, so its replay carries no
-    * FP-parity risk. */
-  private def annRebuildOracle(nCells: Int, nProbe: Int, m: Int, k: Int,
-                               iters: Int, topk: Int): String = {
-    val sb = new StringBuilder
-    sb.append("""
-      WITH raw AS (
-        SELECT vec_id, embedding FROM embeddings
-        UNION ALL
-        SELECT 20000 + i AS vec_id,
-               list_transform(range(0, 64), j ->
-                 CAST(CAST((i * 31 + j * 7) % 24 AS DOUBLE) / 16.0 + 0.5
-                      AS FLOAT)) AS embedding
-        FROM (SELECT unnest(range(0,
-          (SELECT count(*) // 3 FROM embeddings))) AS i)
-        UNION ALL
-        SELECT vec_id + 40000 AS vec_id, embedding
-        FROM embeddings WHERE vec_id % 5 = 1
-      ), pts AS (
-        SELECT vec_id AS id,
-               list_transform(embedding, x ->
-                 greatest(-2000, least(2000,
-                   CAST(round(CAST(x AS DOUBLE) * 1000, 0) AS BIGINT))) + 2000) AS e
-        FROM raw
-      ), pts0 AS (SELECT id, e FROM pts WHERE id < 40000)""")
-    sb.append(pqChainSql("g", 1, nCells, iters, trainPts = "pts0"))
-    sb.append(pqChainSql("", m, k, iters, trainPts = "pts0"))
-    sb.append(s""",
-      q AS (
-        SELECT id AS qid, e AS qe FROM pts WHERE id < 10
-      ), probe AS (
-        SELECT qid, cid AS cell FROM (
-          SELECT q.qid, c.cid,
-                 row_number() OVER (PARTITION BY q.qid ORDER BY
-                   list_sum(list_transform(range(1, len(c.c) + 1),
-                     i -> (q.qe[i] * 1000 - c.c[i]) * (q.qe[i] * 1000 - c.c[i]))),
-                   c.cid) AS rn
-          FROM q CROSS JOIN gc$iters c) WHERE rn <= $nProbe
-      ), lut AS (
-        SELECT q.qid, c.sub, c.cid,
-               list_sum(list_transform(range(1, len(c.c) + 1), i ->
-                 (list_slice(q.qe, c.sub * ds + 1, (c.sub + 1) * ds)[i] * 1000 - c.c[i])
-               * (list_slice(q.qe, c.sub * ds + 1, (c.sub + 1) * ds)[i] * 1000 - c.c[i]))) AS dist
-        FROM q CROSS JOIN dims CROSS JOIN c$iters c
-      ), scored AS (
-        SELECT l.qid, a.id, sum(l.dist) AS dist
-        FROM codes a
-        JOIN gcodes g ON a.id = g.id
-        JOIN probe p ON g.cid = p.cell
-        JOIN lut l ON l.qid = p.qid AND a.sub = l.sub AND a.cid = l.cid
-        GROUP BY l.qid, a.id
-      ), ranked AS (
-        SELECT qid, id,
-               row_number() OVER (PARTITION BY qid ORDER BY dist, id) AS rank
-        FROM scored
-      )
-      SELECT qid, id, CAST(rank AS BIGINT) AS rank
-      FROM ranked WHERE rank <= $topk ORDER BY qid, rank""")
-    sb.toString
-  }
-
-  /** Two-stage replay: [[ivfPqOracle]]'s chain cut at `shortlist`, then
-    * the exact milli-space distance re-ranks the joined candidates. */
-  private def ivfPqRerankOracle(nCells: Int, nProbe: Int, m: Int, k: Int,
-                                iters: Int, shortlist: Int,
-                                topk: Int): String = {
-    val sb = new StringBuilder
-    sb.append(pqPtsSql)
-    sb.append(pqChainSql("g", 1, nCells, iters))
-    sb.append(pqChainSql("", m, k, iters))
-    sb.append(s""",
-      q AS (
-        SELECT id AS qid, e AS qe FROM pts WHERE id < 10
-      ), probe AS (
-        SELECT qid, cid AS cell FROM (
-          SELECT q.qid, c.cid,
-                 row_number() OVER (PARTITION BY q.qid ORDER BY
-                   list_sum(list_transform(range(1, len(c.c) + 1),
-                     i -> (q.qe[i] * 1000 - c.c[i]) * (q.qe[i] * 1000 - c.c[i]))),
-                   c.cid) AS rn
-          FROM q CROSS JOIN gc$iters c) WHERE rn <= $nProbe
-      ), lut AS (
-        SELECT q.qid, c.sub, c.cid,
-               list_sum(list_transform(range(1, len(c.c) + 1), i ->
-                 (list_slice(q.qe, c.sub * ds + 1, (c.sub + 1) * ds)[i] * 1000 - c.c[i])
-               * (list_slice(q.qe, c.sub * ds + 1, (c.sub + 1) * ds)[i] * 1000 - c.c[i]))) AS dist
-        FROM q CROSS JOIN dims CROSS JOIN c$iters c
-      ), scored AS (
-        SELECT l.qid, a.id, sum(l.dist) AS dist
-        FROM codes a
-        JOIN gcodes g ON a.id = g.id
-        JOIN probe p ON g.cid = p.cell
-        JOIN lut l ON l.qid = p.qid AND a.sub = l.sub AND a.cid = l.cid
-        GROUP BY l.qid, a.id
-      ), ranked AS (
-        SELECT qid, id,
-               row_number() OVER (PARTITION BY qid ORDER BY dist, id) AS rank
-        FROM scored
-      ), shortlist AS (
-        SELECT qid, id FROM ranked WHERE rank <= $shortlist
-      ), rr AS (
-        SELECT s.qid, s.id,
-               row_number() OVER (PARTITION BY s.qid ORDER BY
-                 list_sum(list_transform(range(1, len(c.e) + 1),
-                   i -> (c.e[i] - q.qe[i]) * (c.e[i] - q.qe[i]))), s.id) AS rank
-        FROM shortlist s JOIN pts c ON s.id = c.id JOIN q ON s.qid = q.qid
-      )
-      SELECT qid, id, CAST(rank AS BIGINT) AS rank
-      FROM rr WHERE rank <= $topk ORDER BY qid, rank""")
-    sb.toString
-  }
-
-  /** DuckDB replay of [[operators.QualityClassifier.train]]: one
-    * (s, r, g, w) CTE quartet per gradient round — integer milli
-    * features by truncating division, HUGEINT dot/gradient folds,
-    * the identical float division + sigmoid + HALF_UP rounding. */
-  private def qualityTrainOracle(dim: Int, iters: Int, lr: Double): String = {
-    val sb = new StringBuilder
-    sb.append(s"""
-      WITH tok AS (
-        SELECT doc_id, list_filter(string_split(text, ' '), x -> x <> '') AS w
-        FROM documents
-      ), base AS (
-        SELECT doc_id,
-               CASE WHEN list_contains(w, 'join') THEN 1 ELSE 0 END AS y,
-               len(w) AS n, w
-        FROM tok WHERE len(w) > 0
-      ), tl AS (
-        SELECT doc_id, y, n, unnest(w) AS t FROM base
-      ), feats AS (
-        SELECT doc_id, y,
-               CAST(CAST(concat('0x', substr(md5(t), 1, 8)) AS UBIGINT)
-                 % $dim AS BIGINT) AS bucket,
-               (count(*) * 1000) // n AS feat
-        FROM tl GROUP BY doc_id, y, n, bucket
-      ), nn AS (SELECT count(DISTINCT doc_id) AS n_docs FROM feats),
-      w0 AS (
-        SELECT CAST(i AS BIGINT) AS bucket, CAST(0 AS BIGINT) AS w
-        FROM range($dim) t(i)
-      )""")
-    for (i <- 1 to iters) {
-      sb.append(s""",
-      s$i AS (
-        SELECT f.doc_id, f.y,
-               CAST(sum(CAST(w.w * f.feat AS HUGEINT)) AS DOUBLE)
-                 / 1000000.0 AS s
-        FROM feats f JOIN w${i - 1} w USING (bucket)
-        GROUP BY f.doc_id, f.y
-      ), r$i AS (
-        SELECT doc_id,
-               CAST(round((1.0 / (1.0 + exp(-s))) * 1000000.0, 0) AS BIGINT)
-                 - y * 1000000 AS resid
-        FROM s$i
-      ), g$i AS (
-        SELECT f.bucket, sum(CAST(r.resid * f.feat AS HUGEINT)) AS g
-        FROM feats f JOIN r$i r USING (doc_id) GROUP BY f.bucket
-      ), w$i AS (
-        SELECT w.bucket,
-               w.w - CAST(round(CAST(coalesce(g.g, 0) AS DOUBLE) * $lr
-                 / (1000000.0 * nn.n_docs), 0) AS BIGINT) AS w
-        FROM w${i - 1} w LEFT JOIN g$i g USING (bucket) CROSS JOIN nn
-      )""")
-    }
-    sb.append(s"""
-      SELECT bucket, w AS w_milli FROM w$iters ORDER BY bucket""")
-    sb.toString
-  }
-
-  private def kmeansOracle(k: Int, iters: Int): String = {
-    val sb = new StringBuilder
-    sb.append(s"""
-      WITH pts AS (
-        SELECT vec_id AS id,
-               list_transform(embedding, x ->
-                 greatest(-2000, least(2000,
-                   CAST(round(CAST(x AS DOUBLE) * 1000, 0) AS BIGINT))) + 2000) AS e
-        FROM embeddings
-      ), seed AS (
-        SELECT row_number() OVER (ORDER BY md5(CAST(id AS VARCHAR)), id) AS cid, e
-        FROM (SELECT id, e FROM pts
-              ORDER BY md5(CAST(id AS VARCHAR)), id LIMIT $k)
-      ), c0 AS (
-        SELECT CAST(cid AS BIGINT) AS cid,
-               list_transform(e, v -> v * 1000) AS c
-        FROM seed
-      )""")
-    for (i <- 1 to iters) {
-      sb.append(s""",
-      a$i AS (
-        SELECT id, e, cid FROM (
-          SELECT p.id, p.e, c.cid,
-                 row_number() OVER (PARTITION BY p.id ORDER BY
-                   list_sum(list_transform(range(1, len(p.e) + 1),
-                     i -> (p.e[i] * 1000 - c.c[i]) * (p.e[i] * 1000 - c.c[i]))),
-                   c.cid) AS rn
-          FROM pts p CROSS JOIN c${i - 1} c) WHERE rn = 1
-      ), c$i AS (
-        SELECT cid, list(v ORDER BY pos) AS c FROM (
-          SELECT cid, pos,
-                 CAST((sum(v) * 1000) // count(*) AS BIGINT) AS v
-          FROM (SELECT cid, unnest(e) AS v, generate_subscripts(e, 1) AS pos
-                FROM a$i)
-          GROUP BY cid, pos)
-        GROUP BY cid
-      )""")
-    }
-    val f = iters + 1
-    sb.append(s""",
-      a$f AS (
-        SELECT id, cid FROM (
-          SELECT p.id, c.cid,
-                 row_number() OVER (PARTITION BY p.id ORDER BY
-                   list_sum(list_transform(range(1, len(p.e) + 1),
-                     i -> (p.e[i] * 1000 - c.c[i]) * (p.e[i] * 1000 - c.c[i]))),
-                   c.cid) AS rn
-          FROM pts p CROSS JOIN c$iters c) WHERE rn = 1
-      )
-      SELECT id, CAST(cid AS BIGINT) AS cid FROM a$f ORDER BY id""")
-    sb.toString
-  }
-
-  /** DuckDB replay of [[operators.Graph.labelPropagation]]: one CTE per
-    * synchronous round, integer vote sums, smallest-label tie-breaks. */
-  private def labelPropOracle(iters: Int): String = {
-    val sb = new StringBuilder
-    sb.append("""
-      WITH edges AS (
-        SELECT CAST(c.c_nationkey AS BIGINT) AS src,
-               CAST(s.s_nationkey AS BIGINT) AS dst,
-               CAST(count(*) AS BIGINT) AS w
-        FROM lineitem l
-        JOIN orders o ON l.l_orderkey = o.o_orderkey
-        JOIN customer c ON o.o_custkey = c.c_custkey
-        JOIN supplier s ON l.l_suppkey = s.s_suppkey
-        GROUP BY 1, 2
-      ), und AS (
-        SELECT least(src, dst) AS a, greatest(src, dst) AS b,
-               CAST(sum(w) AS BIGINT) AS wu
-        FROM edges WHERE src <> dst GROUP BY 1, 2
-      ), sym AS (
-        SELECT a AS v, b AS u, wu FROM und
-        UNION ALL SELECT b, a, wu FROM und
-      ), nodes AS (
-        SELECT CAST(n_nationkey AS BIGINT) AS id FROM nation
-      ), l0 AS (
-        SELECT id, id AS lbl FROM nodes
-      )""")
-    for (i <- 1 to iters)
-      sb.append(s""",
-      l$i AS (
-        SELECT p.id, coalesce(b.best, p.lbl) AS lbl
-        FROM l${i - 1} p
-        LEFT JOIN (
-          SELECT v AS id, lbl AS best FROM (
-            SELECT s.v, p2.lbl,
-                   row_number() OVER (PARTITION BY s.v
-                     ORDER BY sum(s.wu) DESC, p2.lbl ASC) AS rn
-            FROM sym s JOIN l${i - 1} p2 ON p2.id = s.u
-            GROUP BY s.v, p2.lbl) t WHERE rn = 1
-        ) b ON b.id = p.id
-      )""")
-    sb.append(s"""
-      SELECT nation.n_name AS n_name, l$iters.lbl AS community
-      FROM l$iters JOIN nation ON l$iters.id = CAST(n_nationkey AS BIGINT)
-      ORDER BY n_name""")
-    sb.toString
-  }
-
-  private def pagerankOracle(iters: Int): String = {
-    val sb = new StringBuilder
-    sb.append("""
-      WITH edges AS (
-        SELECT CAST(c.c_nationkey AS BIGINT) AS src,
-               CAST(s.s_nationkey AS BIGINT) AS dst,
-               CAST(count(*) AS BIGINT) AS w
-        FROM lineitem l
-        JOIN orders o ON l.l_orderkey = o.o_orderkey
-        JOIN customer c ON o.o_custkey = c.c_custkey
-        JOIN supplier s ON l.l_suppkey = s.s_suppkey
-        GROUP BY 1, 2
-      ), ew AS (
-        SELECT e.src, e.dst, e.w, o.ow
-        FROM edges e
-        JOIN (SELECT src, CAST(sum(w) AS BIGINT) AS ow
-              FROM edges GROUP BY src) o USING (src)
-      ), nodes AS (
-        SELECT CAST(n_nationkey AS BIGINT) AS id FROM nation
-      ), r0 AS (
-        SELECT id, CAST(1000000 AS BIGINT) AS r FROM nodes
-      )""")
-    for (i <- 1 to iters)
-      sb.append(s""",
-      r$i AS (
-        SELECT n.id,
-               CAST(150000 + COALESCE(
-                 sum((p.r * e.w * 850) // (e.ow * 1000)), 0) AS BIGINT) AS r
-        FROM nodes n
-        LEFT JOIN ew e ON e.dst = n.id
-        LEFT JOIN r${i - 1} p ON p.id = e.src
-        GROUP BY n.id
-      )""")
-    sb.append(s"""
-      SELECT nation.n_name AS n_name, r$iters.r AS r
-      FROM r$iters JOIN nation ON r$iters.id = CAST(n_nationkey AS BIGINT)
-      ORDER BY n_name""")
-    sb.toString
-  }
-
-  /** q_crawl_rank's oracle: rebuild the planted host→host edge multiset
-    * arithmetically (absolute/protocol-relative/self hrefs), then unroll
-    * `iters` integer PageRank rounds — [[pagerankOracle]]'s recurrence
-    * over the crawl graph. */
-  private def crawlRankOracle(iters: Int): String =
-    crawlRankCtes(iters) + s"""
-      SELECT id, r FROM r$iters ORDER BY id"""
-
-  /** The shared WITH-prefix of q_crawl_rank and q_robots_frontier:
-    * rebuild the planted host→host edge multiset and unroll `iters`
-    * integer PageRank rounds ending at CTE `r<iters>` (id, r). One
-    * string, two consumers — the planted graph cannot drift between
-    * the rank gate and the frontier gate that orders by it. */
-  private def crawlRankCtes(iters: Int): String = {
-    val sb = new StringBuilder
-    sb.append("""
-      WITH raw AS (
-        SELECT doc_id % 97 AS src, (doc_id * 7 + 3) % 97 AS dst
-        FROM documents
-        UNION ALL
-        SELECT doc_id % 97, (doc_id * 13 + 5) % 97 FROM documents
-        UNION ALL
-        SELECT doc_id % 97, doc_id % 97 FROM documents
-      ), edges AS (
-        SELECT CAST(src AS BIGINT) AS src, CAST(dst AS BIGINT) AS dst,
-               CAST(count(*) AS BIGINT) AS w
-        FROM raw GROUP BY 1, 2
-      ), ew AS (
-        SELECT e.src, e.dst, e.w, o.ow
-        FROM edges e
-        JOIN (SELECT src, CAST(sum(w) AS BIGINT) AS ow
-              FROM edges GROUP BY src) o USING (src)
-      ), nodes AS (
-        SELECT CAST(range AS BIGINT) AS id FROM range(97)
-      ), r0 AS (
-        SELECT id, CAST(1000000 AS BIGINT) AS r FROM nodes
-      )""")
-    for (i <- 1 to iters)
-      sb.append(s""",
-      r$i AS (
-        SELECT n.id,
-               CAST(150000 + COALESCE(
-                 sum((p.r * e.w * 850) // (e.ow * 1000)), 0) AS BIGINT) AS r
-        FROM nodes n
-        LEFT JOIN ew e ON e.dst = n.id
-        LEFT JOIN r${i - 1} p ON p.id = e.src
-        GROUP BY n.id
-      )""")
-    sb.toString
-  }
-
-  /** q_robots_frontier's oracle: the [[crawlRankCtes]] host ranks joined
-    * onto the frontier's closed-form robots verdicts (the q_robots CASE,
-    * re-keyed by HOST id instead of doc id — the parse-once-per-host
-    * composition must reproduce exactly the per-row decisions). */
-  private def robotsFrontierOracle(iters: Int): String =
-    crawlRankCtes(iters) + s""",
-      fr AS (
-        SELECT doc_id, doc_id % 97 AS k, (doc_id % 97) % 5 AS k5,
-               doc_id % 4 AS m
-        FROM documents
-      )
-      SELECT f.doc_id,
-             'site-' || f.k || '.example' AS host,
-             CASE m WHEN 0 THEN '/blocked-' || k5 || '/page-' || doc_id
-                    WHEN 1 THEN '/blocked-' || k5 || '/ok/page-' || doc_id
-                    WHEN 2 THEN '/private/doc-' || doc_id
-                    ELSE '/files/doc-' || doc_id || '.pdf' END AS path,
-             CASE m WHEN 1 THEN true WHEN 2 THEN true
-                    ELSE false END AS allowed,
-             CASE m WHEN 0 THEN '/blocked-' || k5 || '/'
-                    WHEN 1 THEN '/blocked-' || k5 || '/ok/'
-                    WHEN 2 THEN ''
-                    ELSE '/*.pdf$$' END AS rule,
-             r.r AS host_rank
-      FROM fr f JOIN r$iters r ON r.id = f.k
-      ORDER BY host_rank DESC, f.doc_id"""
-
-  /** q_lang_id_trained's oracle: replay the WHOLE train+route pipeline —
-    * fixture VALUES generated from [[operators.LangId.FixtureSentences]]
-    * (one source, two engines), trigram hash counting, the Laplace
-    * micro log-weights (the one rounded ln per (lang, bucket)), probe
-    * scoring as exact integer sums, argmax with the lang-ascending
-    * tie-break. */
-  private def langIdTrainedOracle: String = {
-    val dim = operators.LangId.Dim
-    val values = operators.LangId.FixtureSentences.zipWithIndex.map {
-      case ((lang, txt), i) => s"($i, '$lang', '$txt')"
-    }.mkString(",\n        ")
-    s"""
-      WITH fx(i, lang, txt) AS (VALUES
-        $values
-      ), tl AS (
-        SELECT lang, lower(txt) AS t FROM fx
-      ), tg AS (
-        SELECT lang, t, unnest(range(1, len(t) - 1)) AS p
-        FROM tl WHERE len(t) >= 3
-      ), gb AS (
-        SELECT lang,
-               CAST(CAST(concat('0x',
-                 substr(md5(substr(t, CAST(p AS INT), 3)), 1, 8))
-                 AS UBIGINT) % $dim AS BIGINT) AS bucket
-        FROM tg
-      ), cnt AS (
-        SELECT lang, bucket, count(*) AS c FROM gb GROUP BY 1, 2
-      ), tot AS (
-        SELECT lang, count(*) AS n FROM gb GROUP BY 1
-      ), model AS (
-        SELECT t.lang, CAST(r.range AS BIGINT) AS bucket,
-               CAST(round(ln(CAST(COALESCE(c.c, 0) + 1 AS DOUBLE) /
-                 CAST(t.n + $dim AS DOUBLE)) * 1e6) AS BIGINT) AS w
-        FROM range($dim) r
-        CROSS JOIN tot t
-        LEFT JOIN cnt c ON c.lang = t.lang AND c.bucket = r.range
-      ), probes AS (
-        SELECT d.doc_id, f.lang AS lang_planted,
-               lower(f.txt || ' ' || substr(d.text, 1, 24)) AS t
-        FROM documents d JOIN fx f ON f.i = d.doc_id % 48
-      ), pg AS (
-        SELECT doc_id, lang_planted, t, unnest(range(1, len(t) - 1)) AS p
-        FROM probes WHERE len(t) >= 3
-      ), pb AS (
-        SELECT doc_id, lang_planted,
-               CAST(CAST(concat('0x',
-                 substr(md5(substr(t, CAST(p AS INT), 3)), 1, 8))
-                 AS UBIGINT) % $dim AS BIGINT) AS bucket
-        FROM pg
-      ), sc AS (
-        SELECT doc_id, lang_planted, m.lang,
-               CAST(sum(m.w) AS BIGINT) AS score
-        FROM pb JOIN model m USING (bucket)
-        GROUP BY 1, 2, 3
-      ), rk AS (
-        SELECT doc_id, lang_planted, lang, score,
-               row_number() OVER (PARTITION BY doc_id
-                 ORDER BY score DESC, lang) AS rn
-        FROM sc
-      )
-      SELECT doc_id, lang_planted, lang AS lang_pred, score AS score_micro
-      FROM rk WHERE rn = 1
-      ORDER BY doc_id"""
-  }
-
-  /** q_unigram_train's oracle: unroll the ENTIRE hard-EM unigram-LM
-    * training — seed substring counts, micro log-prob scores, and per
-    * EM round a position-by-position Viterbi DP (`B` CTEs, forward max)
-    * plus the backward recovery (`pick` CTEs, exact-score-match with
-    * the longest-piece tie-break), usage counts, prune-unused /
-    * floor-single-chars, rescore. Word truncation to `maxWordLen`
-    * bounds the DP depth so the unroll is finite — the same
-    * generated-CTE discipline as [[bpeOracle]]. */
-  private def unigramOracle(maxPieceLen: Int, maxWordLen: Int,
-                            minSeed: Long, iters: Int,
-                            segment: Boolean = false): String = {
-    val sb = new StringBuilder
-    sb.append(s"""
-      WITH words AS MATERIALIZED (
-        SELECT substr(w0, 1, $maxWordLen) AS w, CAST(count(*) AS BIGINT) AS f
-        FROM (SELECT unnest(string_split(text, ' ')) AS w0 FROM documents)
-        WHERE w0 <> '' GROUP BY 1
-      ), wpos AS MATERIALIZED (
-        SELECT w, f, unnest(range(1, len(w) + 1)) AS i FROM words
-      ), candp AS MATERIALIZED (
-        SELECT w, f, i, l,
-               substr(w, CAST(i - l + 1 AS INT), CAST(l AS INT)) AS piece
-        FROM (SELECT w, f, i,
-                     unnest(range(1, least($maxPieceLen, i) + 1)) AS l
-              FROM wpos)
-      ), vocab0 AS MATERIALIZED (
-        SELECT piece AS p, CAST(sum(f) AS BIGINT) AS c
-        FROM candp GROUP BY 1
-        HAVING sum(f) >= $minSeed OR len(piece) = 1
-      ), tot0 AS MATERIALIZED (
-        SELECT CAST(sum(c) AS BIGINT) AS t FROM vocab0
-      ), s1 AS MATERIALIZED (
-        SELECT p, CAST(round(ln(CAST(c AS DOUBLE) / CAST(t AS DOUBLE))
-          * 1e6) AS BIGINT) AS s
-        FROM vocab0, tot0
-      )""")
-    // one Viterbi round: candidate scores, forward DP (B/Ball chain),
-    // backward recovery (R/pick chain) — shared by the EM rounds and
-    // the final segmentation pass
-    def emitDp(it: Int): Unit = {
-      sb.append(s""",
-      cand$it AS MATERIALIZED (
-        SELECT c.w, c.f, c.i, c.l, c.piece, s.s
-        FROM candp c JOIN s$it s ON s.p = c.piece
-      ),
-      B${it}_0 AS MATERIALIZED (
-        SELECT w, 0 AS pos, CAST(0 AS BIGINT) AS b FROM words
-      ),
-      Ball${it}_0 AS MATERIALIZED (SELECT * FROM B${it}_0)""")
-      for (k <- 1 to maxWordLen) {
-        sb.append(s""",
-      B${it}_$k AS MATERIALIZED (
-        SELECT c.w, $k AS pos, CAST(max(p.b + c.s) AS BIGINT) AS b
-        FROM cand$it c
-        JOIN Ball${it}_${k - 1} p ON p.w = c.w AND p.pos = c.i - c.l
-        WHERE c.i = $k GROUP BY c.w
-      ),
-      Ball${it}_$k AS MATERIALIZED (
-        SELECT * FROM Ball${it}_${k - 1} UNION ALL SELECT * FROM B${it}_$k
-      )""")
-      }
-      sb.append(s""",
-      R${it}_0 AS MATERIALIZED (SELECT w, f, len(w) AS pos FROM words)""")
-      for (k <- 1 to maxWordLen) {
-        sb.append(s""",
-      pick${it}_$k AS MATERIALIZED (
-        SELECT r.w, r.f, r.pos, c.l, c.piece,
-               row_number() OVER (PARTITION BY r.w ORDER BY c.l DESC) AS rn
-        FROM R${it}_${k - 1} r
-        JOIN cand$it c ON c.w = r.w AND c.i = r.pos
-        JOIN Ball${it}_$maxWordLen p
-          ON p.w = r.w AND p.pos = r.pos - c.l
-        JOIN Ball${it}_$maxWordLen q ON q.w = r.w AND q.pos = r.pos
-        WHERE r.pos > 0 AND p.b + c.s = q.b
-      ),
-      R${it}_$k AS MATERIALIZED (
-        SELECT w, f, pos - l AS pos FROM pick${it}_$k WHERE rn = 1
-      )""")
-      }
-    }
-    for (it <- 1 to iters) {
-      emitDp(it)
-      val used = (1 to maxWordLen)
-        .map(k => s"SELECT piece, f FROM pick${it}_$k WHERE rn = 1")
-        .mkString("\n        UNION ALL ")
-      sb.append(s""",
-      used$it AS MATERIALIZED (
-        SELECT piece AS p, CAST(sum(f) AS BIGINT) AS c
-        FROM ($used)
-        GROUP BY 1
-      ),
-      vocab$it AS MATERIALIZED (
-        SELECT v.p, COALESCE(u.c, 1) AS c
-        FROM vocab${it - 1} v LEFT JOIN used$it u ON u.p = v.p
-        WHERE u.p IS NOT NULL OR len(v.p) = 1
-      ),
-      tot$it AS MATERIALIZED (SELECT CAST(sum(c) AS BIGINT) AS t FROM vocab$it),
-      s${it + 1} AS MATERIALIZED (
-        SELECT p, CAST(round(ln(CAST(c AS DOUBLE) / CAST(t AS DOUBLE))
-          * 1e6) AS BIGINT) AS s
-        FROM vocab$it, tot$it
-      )""")
-    }
-    if (segment) {
-      // the inference pass: one more Viterbi round under the FINAL
-      // scores, pieces re-assembled left-to-right by their end position
-      val fin = iters + 1
-      emitDp(fin)
-      val picks = (1 to maxWordLen)
-        .map(k => s"SELECT w, pos, piece FROM pick${fin}_$k WHERE rn = 1")
-        .mkString("\n        UNION ALL ")
-      sb.append(s"""
-      SELECT w AS word, CAST(count(*) AS BIGINT) AS n_pieces,
-             string_agg(piece, ' ' ORDER BY pos) AS seq
-      FROM ($picks)
-      GROUP BY w
-      ORDER BY word""")
-    } else {
-      sb.append(s"""
-      SELECT v.p AS piece, v.c AS "count", s.s AS score_micro
-      FROM vocab$iters v JOIN s${iters + 1} s ON s.p = v.p
-      ORDER BY piece""")
-    }
-    sb.toString
-  }
-
-  /** Shared CTE prefix of the two substring gates: the planted-twin
-    * corpus ([[plantedTwinCorpus]]'s SQL twin), the k=50 gram scan on
-    * gram TEXT (the Spark side ships xxhash64 of the same gram —
-    * identical grouping), min-doc ownership, non-owner marking, and the
-    * gaps-and-islands pass `m4`. One string, two consumers — the span
-    * and scrub oracles cannot drift on corpus or policy. */
-  private val substringSpanCtes: String = """
-      WITH corpus AS (
-        SELECT doc_id, text FROM documents
-        UNION ALL
-        SELECT doc_id + 100000 AS doc_id,
-               array_to_string(string_split(text, ' ')[1:60], ' ') AS text
-        FROM documents WHERE doc_id % 10 = 0
-      ), toks AS (
-        SELECT doc_id, string_split(text, ' ') AS t FROM corpus
-        WHERE len(string_split(text, ' ')) >= 50
-      ), pos AS (
-        SELECT doc_id, t, unnest(range(1, len(t) - 48)) AS i FROM toks
-      ), grams AS (
-        SELECT doc_id, i - 1 AS p,
-               array_to_string(t[i:i+49], ' ') AS g
-        FROM pos
-      ), owners AS (
-        SELECT g, min(doc_id) AS owner FROM (
-          SELECT DISTINCT doc_id, g FROM grams
-        ) GROUP BY g HAVING count(*) >= 2
-      ), marked AS (
-        SELECT DISTINCT gr.doc_id, gr.p
-        FROM grams gr JOIN owners o ON o.g = gr.g AND gr.doc_id <> o.owner
-      ), m2 AS (
-        SELECT doc_id, p,
-               max(p + 49) OVER (PARTITION BY doc_id ORDER BY p
-                 ROWS BETWEEN UNBOUNDED PRECEDING AND 1 PRECEDING) AS pm
-        FROM marked
-      ), m3 AS (
-        SELECT doc_id, p,
-               CASE WHEN pm IS NULL OR p > pm + 1 THEN 1 ELSE 0 END AS nw
-        FROM m2
-      ), m4 AS (
-        SELECT doc_id, p, sum(nw) OVER (PARTITION BY doc_id ORDER BY p) AS sid
-        FROM m3
-      )"""
-
-  /** For each key in queries, equivalent ANSI SQL runnable by DuckDB on
-    * the same parquet tables. Omit for non-SQL-expressible ops. */
-  def oracleSql: Map[String, String] = {
-    val m = oracleSqlBase
-    // the persistent-signature gate produces EXACTLY q_media_dedup's
-    // output (same planted twins, same band parameters, same filter) —
-    // the only difference is that the probe reads materialized hashes
-    // instead of decoding payloads, which the mid-gate REQUIREs pin
-    m + ("q_media_index" -> m("q_media_dedup"))
-  }
-
-  private def oracleSqlBase: Map[String, String] = Map(
-    "q_bpe_train" -> bpeOracle(k = 8, depth = 16),
-    "q_unigram_train" -> unigramOracle(maxPieceLen = 4, maxWordLen = 8,
-      minSeed = 50, iters = 2),
-    "q_unigram_segment" -> unigramOracle(maxPieceLen = 4, maxWordLen = 8,
-      minSeed = 50, iters = 2, segment = true),
-    "q_bpe_encode" -> bpeOracle(k = 8, depth = 16, segment = true),
-
-    // the synth page's closed-form extraction: paragraphs of 8 tokens,
-    // each suffixed with the decoded entity tail; title/nav/footer are
-    // the 3 boilerplate blocks (1 word-floor + 2 link-density drops)
-    "q_html_extract" -> """
-      WITH tok AS (
-        SELECT doc_id, list_filter(string_split(text, ' '), x -> x <> '') AS w
-        FROM documents
-      ), words AS (
-        SELECT doc_id, unnest(w) AS word, generate_subscripts(w, 1) AS idx
-        FROM tok
-      ), par AS (
-        SELECT doc_id, (idx - 1) // 8 AS grp,
-               string_agg(word, ' ' ORDER BY idx) || ' & <tag> M! end' AS ptxt
-        FROM words GROUP BY doc_id, (idx - 1) // 8
-      ), agg AS (
-        SELECT doc_id,
-               string_agg(ptxt, chr(10) ORDER BY grp) AS text_out,
-               count(*) AS npar,
-               sum(length(ptxt)) AS kept_chars
-        FROM par GROUP BY doc_id
-      )
-      SELECT d.doc_id,
-             coalesce(a.text_out, '') AS text_out,
-             CAST(coalesce(a.npar, 0) + 3 AS BIGINT) AS n_blocks,
-             CAST(coalesce(a.npar, 0) AS BIGINT) AS n_kept,
-             CAST(2 AS BIGINT) AS n_drop_link,
-             CAST(1 AS BIGINT) AS n_drop_short,
-             CAST(coalesce(a.kept_chars, 0) AS BIGINT) AS kept_chars
-      FROM documents d LEFT JOIN agg a USING (doc_id)
-      ORDER BY d.doc_id""",
-
-    // the 3-record synth archive's listing: fixed (pos, type, status,
-    // mime) lattice crossed with the id-derived target uri
-    "q_warc_records" -> """
-      WITH r AS (
-        SELECT * FROM (VALUES
-          (0, 'request',  -1, CAST(NULL AS VARCHAR)),
-          (1, 'response', 200, 'text/html; charset=utf-8'),
-          (2, 'metadata', -1, CAST(NULL AS VARCHAR)))
-          AS t(pos, rec_type, status, mime)
-      )
-      SELECT d.doc_id,
-             CAST(r.pos AS BIGINT) AS pos,
-             r.rec_type,
-             'https://site-' || (d.doc_id % 97) || '.example/page/'
-               || d.doc_id AS uri,
-             CAST(r.status AS BIGINT) AS http_status,
-             r.mime
-      FROM documents d CROSS JOIN r
-      ORDER BY d.doc_id, pos""",
-
-    // the q_html_extract closed form again, now reached THROUGH the
-    // gzip + WARC + HTTP chain, plus the response record's target uri
-    "q_warc_extract" -> """
-      WITH tok AS (
-        SELECT doc_id, list_filter(string_split(text, ' '), x -> x <> '') AS w
-        FROM documents
-      ), words AS (
-        SELECT doc_id, unnest(w) AS word, generate_subscripts(w, 1) AS idx
-        FROM tok
-      ), par AS (
-        SELECT doc_id, (idx - 1) // 8 AS grp,
-               string_agg(word, ' ' ORDER BY idx) || ' & <tag> M! end' AS ptxt
-        FROM words GROUP BY doc_id, (idx - 1) // 8
-      ), agg AS (
-        SELECT doc_id, string_agg(ptxt, chr(10) ORDER BY grp) AS text_out
-        FROM par GROUP BY doc_id
-      )
-      SELECT d.doc_id,
-             'https://site-' || (d.doc_id % 97) || '.example/page/'
-               || d.doc_id AS uri,
-             coalesce(a.text_out, '') AS text_out
-      FROM documents d LEFT JOIN agg a USING (doc_id)
-      ORDER BY d.doc_id""",
-
-    // chunked framing is transparent: the dechunked extraction is the
-    // q_warc_extract closed form, byte for byte
-    "q_warc_chunked" -> """
-      WITH tok AS (
-        SELECT doc_id, list_filter(string_split(text, ' '), x -> x <> '') AS w
-        FROM documents
-      ), words AS (
-        SELECT doc_id, unnest(w) AS word, generate_subscripts(w, 1) AS idx
-        FROM tok
-      ), par AS (
-        SELECT doc_id, (idx - 1) // 8 AS grp,
-               string_agg(word, ' ' ORDER BY idx) || ' & <tag> M! end' AS ptxt
-        FROM words GROUP BY doc_id, (idx - 1) // 8
-      ), agg AS (
-        SELECT doc_id, string_agg(ptxt, chr(10) ORDER BY grp) AS text_out
-        FROM par GROUP BY doc_id
-      )
-      SELECT d.doc_id,
-             'https://site-' || (d.doc_id % 97) || '.example/page/'
-               || d.doc_id AS uri,
-             coalesce(a.text_out, '') AS text_out
-      FROM documents d LEFT JOIN agg a USING (doc_id)
-      ORDER BY d.doc_id""",
-
-    // the cp1252 page's closed-form transcoding: paragraphs of 8 tokens,
-    // each suffixed with the decoded ' café “q” naïve' (the curly quotes
-    // are cp1252-only bytes — a UTF-8 or true-Latin-1 misread of 0x93
-    // cannot produce them); the 2-word title falls to the word floor
-    "q_warc_charset" -> """
-      WITH tok AS (
-        SELECT doc_id, list_filter(string_split(text, ' '), x -> x <> '') AS w
-        FROM documents
-      ), words AS (
-        SELECT doc_id, unnest(w) AS word, generate_subscripts(w, 1) AS idx
-        FROM tok
-      ), par AS (
-        SELECT doc_id, (idx - 1) // 8 AS grp,
-               string_agg(word, ' ' ORDER BY idx) || ' café “q” naïve' AS ptxt
-        FROM words GROUP BY doc_id, (idx - 1) // 8
-      ), agg AS (
-        SELECT doc_id, string_agg(ptxt, chr(10) ORDER BY grp) AS text_out
-        FROM par GROUP BY doc_id
-      )
-      SELECT d.doc_id,
-             'https://site-' || (d.doc_id % 97) || '.example/page/'
-               || d.doc_id AS uri,
-             coalesce(a.text_out, '') AS text_out
-      FROM documents d LEFT JOIN agg a USING (doc_id)
-      ORDER BY d.doc_id""",
-
-    // the WET conversion payload is the doc's text re-lined into
-    // 8-token LF-joined lines — exact round-trip, empty text for
-    // token-less docs
-    "q_wet_text" -> """
-      WITH tok AS (
-        SELECT doc_id, list_filter(string_split(text, ' '), x -> x <> '') AS w
-        FROM documents
-      ), words AS (
-        SELECT doc_id, unnest(w) AS word, generate_subscripts(w, 1) AS idx
-        FROM tok
-      ), lines AS (
-        SELECT doc_id, (idx - 1) // 8 AS grp,
-               string_agg(word, ' ' ORDER BY idx) AS ltxt
-        FROM words GROUP BY doc_id, (idx - 1) // 8
-      ), agg AS (
-        SELECT doc_id, string_agg(ltxt, chr(10) ORDER BY grp) AS text_out
-        FROM lines GROUP BY doc_id
-      )
-      SELECT d.doc_id,
-             'https://site-' || (d.doc_id % 97) || '.example/page/'
-               || d.doc_id AS uri,
-             coalesce(a.text_out, '') AS text_out
-      FROM documents d LEFT JOIN agg a USING (doc_id)
-      ORDER BY d.doc_id""",
-
-    // two rows per doc — the page and its shifted twin, each under its
-    // own target uri, both carrying the same closed-form extraction
-    "q_warc_pages" -> """
-      WITH tok AS (
-        SELECT doc_id, list_filter(string_split(text, ' '), x -> x <> '') AS w
-        FROM documents
-      ), words AS (
-        SELECT doc_id, unnest(w) AS word, generate_subscripts(w, 1) AS idx
-        FROM tok
-      ), par AS (
-        SELECT doc_id, (idx - 1) // 8 AS grp,
-               string_agg(word, ' ' ORDER BY idx) || ' & <tag> M! end' AS ptxt
-        FROM words GROUP BY doc_id, (idx - 1) // 8
-      ), agg AS (
-        SELECT doc_id, string_agg(ptxt, chr(10) ORDER BY grp) AS text_out
-        FROM par GROUP BY doc_id
-      ), u AS (
-        SELECT doc_id,
-               'https://site-' || (doc_id % 97) || '.example/page/'
-                 || doc_id AS uri
-        FROM documents
-        UNION ALL
-        SELECT doc_id,
-               'https://site-' || ((doc_id + 1000000) % 97)
-                 || '.example/page/' || (doc_id + 1000000)
-        FROM documents
-      )
-      SELECT u.doc_id, u.uri, coalesce(a.text_out, '') AS text_out
-      FROM u LEFT JOIN agg a USING (doc_id)
-      WHERE u.doc_id % 2 = 0
-      ORDER BY doc_id, uri""",
-
-    // the streaming walk replays the same closed form, full corpus,
-    // keyed by uri (the stream's own output identity)
-    "q_warc_stream_walk" -> """
-      WITH tok AS (
-        SELECT doc_id, list_filter(string_split(text, ' '), x -> x <> '') AS w
-        FROM documents
-      ), words AS (
-        SELECT doc_id, unnest(w) AS word, generate_subscripts(w, 1) AS idx
-        FROM tok
-      ), par AS (
-        SELECT doc_id, (idx - 1) // 8 AS grp,
-               string_agg(word, ' ' ORDER BY idx) || ' & <tag> M! end' AS ptxt
-        FROM words GROUP BY doc_id, (idx - 1) // 8
-      ), agg AS (
-        SELECT doc_id, string_agg(ptxt, chr(10) ORDER BY grp) AS text_out
-        FROM par GROUP BY doc_id
-      ), u AS (
-        SELECT doc_id,
-               'https://site-' || (doc_id % 97) || '.example/page/'
-                 || doc_id AS uri
-        FROM documents
-        UNION ALL
-        SELECT doc_id,
-               'https://site-' || ((doc_id + 1000000) % 97)
-                 || '.example/page/' || (doc_id + 1000000)
-        FROM documents
-      )
-      SELECT u.uri, coalesce(a.text_out, '') AS text_out
-      FROM u LEFT JOIN agg a USING (doc_id)
-      ORDER BY uri""",
-
-    // replay every extracted href, position by position: nav (1..3),
-    // one link per >=3-token paragraph (token #3 of each 8-token chunk,
-    // in chunk order), footer last — all resolved against the page URL
-    "q_link_graph" -> """
-      WITH tok AS (
-        SELECT doc_id, list_filter(string_split(text, ' '), x -> x <> '') AS w
-        FROM documents
-      ), words AS (
-        SELECT doc_id, unnest(w) AS word, generate_subscripts(w, 1) AS idx
-        FROM tok
-      ), host AS (
-        SELECT doc_id,
-               'https://site-' || (doc_id % 97) || '.example' AS h
-        FROM documents
-      ), plink AS (
-        SELECT w.doc_id,
-               row_number() OVER (PARTITION BY w.doc_id ORDER BY idx) AS pn,
-               h.h || '/' || w.word AS link
-        FROM words w JOIN host h USING (doc_id)
-        WHERE (idx - 1) % 8 = 2
-      ), m AS (
-        SELECT doc_id, count(*) AS nm FROM plink GROUP BY doc_id
-      ), alllinks AS (
-        SELECT doc_id, 1 AS idx, h || '/' AS link FROM host
-        UNION ALL SELECT doc_id, 2, h || '/about' FROM host
-        UNION ALL SELECT doc_id, 3, h || '/contact' FROM host
-        UNION ALL SELECT doc_id, 3 + pn, link FROM plink
-        UNION ALL
-        SELECT h.doc_id, 4 + coalesce(m.nm, 0), h.h || '/tos'
-        FROM host h LEFT JOIN m USING (doc_id)
-        UNION ALL
-        SELECT h.doc_id, 5 + coalesce(m.nm, 0), h.h || '/privacy'
-        FROM host h LEFT JOIN m USING (doc_id)
-      )
-      SELECT doc_id, CAST(idx AS BIGINT) AS idx, link FROM alllinks
-      ORDER BY doc_id, idx""",
-
-    "q_crawl_rank" -> crawlRankOracle(4),
-    "q_robots_frontier" -> robotsFrontierOracle(4),
-
-    // allowed rows (m in 1,2), per-host dense fetch index by doc_id,
-    // stride offset under the host's combined-group graftbot delay
-    "q_frontier_schedule" -> """
-      WITH fr AS (
-        SELECT doc_id, doc_id % 97 AS k FROM documents
-        WHERE doc_id % 4 IN (1, 2)
-      ), sched AS (
-        SELECT doc_id, k,
-               row_number() OVER (PARTITION BY k ORDER BY doc_id) - 1
-                 AS fetch_idx
-        FROM fr
-      )
-      SELECT doc_id, 'site-' || k || '.example' AS host,
-             CAST(fetch_idx AS BIGINT) AS fetch_idx,
-             CAST(GREATEST((k % 5) * 1000 + 500, 2000) AS BIGINT)
-               AS delay_ms,
-             CAST(fetch_idx * GREATEST((k % 5) * 1000 + 500, 2000)
-               AS BIGINT) AS scheduled_ms
-      FROM sched
-      ORDER BY host, fetch_idx""",
-
-    // the keep-one rule replayed: exact milliweight per member (the
-    // q_quality_classifier token/hash/weight pipeline), argmax per
-    // canonical group by (milli DESC, doc_id)
-    "q_rep_select" -> """
-      WITH toks AS (
-        SELECT doc_id, unnest(list_filter(
-          regexp_split_to_array(lower(trim(text)), '[^a-z0-9]+'),
-          x -> len(x) > 0)) AS t
-        FROM documents
-      ), feats AS (
-        SELECT doc_id,
-               CAST(CAST(concat('0x', substr(md5(t), 1, 8)) AS UBIGINT)
-                    % 4096 AS BIGINT) AS b
-        FROM toks
-      ), agg AS (
-        SELECT doc_id,
-               CAST(sum((b * 37 + 11) % 2001 - 1000) AS BIGINT) AS milli
-        FROM feats GROUP BY doc_id
-      ), keyed AS (
-        SELECT doc_id,
-               'https://canon-' || (doc_id % 50) || '.example/main'
-                 AS canon_key,
-               milli
-        FROM agg
-      ), rk AS (
-        SELECT canon_key, doc_id, milli,
-               row_number() OVER (PARTITION BY canon_key
-                 ORDER BY milli DESC, doc_id) AS rn,
-               count(*) OVER (PARTITION BY canon_key) AS n_members
-        FROM keyed
-      )
-      SELECT canon_key, CAST(n_members AS BIGINT) AS n_members,
-             doc_id AS rep_id, milli AS rep_score_milli
-      FROM rk WHERE rn = 1
-      ORDER BY canon_key""",
-
-    // canonical-collapse keys: declared canonical (absolute, or
-    // relative resolved against the page) else the page's own URL,
-    // everything normalized; representative = min doc_id per key
-    "q_canonical_dedup" -> """
-      WITH d AS (
-        SELECT doc_id, doc_id % 97 AS k, doc_id % 3 AS m3,
-               doc_id % 50 AS g
-        FROM documents
-      ), keyed AS (
-        SELECT doc_id,
-               CASE WHEN m3 = 0
-                      THEN 'https://canon-' || g || '.example/main'
-                    WHEN m3 = 1
-                      THEN 'http://site-' || k || '.example.com/c/' || g
-                    ELSE 'http://site-' || k || '.example.com/page/' ||
-                      doc_id END AS canon_key
-        FROM d
-      )
-      SELECT doc_id, canon_key,
-             min(doc_id) OVER (PARTITION BY canon_key) AS rep_id,
-             doc_id <> min(doc_id) OVER (PARTITION BY canon_key) AS is_dup
-      FROM keyed
-      ORDER BY doc_id""",
-
-    // every (href, anchor) pair, position by position — nav labels,
-    // the linked token of each >=3-token paragraph, footer labels
-    "q_anchor_text" -> """
-      WITH tok AS (
-        SELECT doc_id, list_filter(string_split(text, ' '), x -> x <> '') AS w
-        FROM documents
-      ), words AS (
-        SELECT doc_id, unnest(w) AS word, generate_subscripts(w, 1) AS idx
-        FROM tok
-      ), plink AS (
-        SELECT doc_id,
-               row_number() OVER (PARTITION BY doc_id ORDER BY idx) AS pn,
-               word
-        FROM words WHERE (idx - 1) % 8 = 2
-      ), m AS (
-        SELECT doc_id, count(*) AS nm FROM plink GROUP BY doc_id
-      ), alllinks AS (
-        SELECT doc_id, 1 AS idx, '/' AS href, 'home' AS anchor
-        FROM documents
-        UNION ALL SELECT doc_id, 2, '/about', 'about' FROM documents
-        UNION ALL SELECT doc_id, 3, '/contact', 'contact' FROM documents
-        UNION ALL SELECT doc_id, 3 + pn, '/' || word, word FROM plink
-        UNION ALL
-        SELECT d.doc_id, 4 + coalesce(m.nm, 0), '/tos', 'terms'
-        FROM documents d LEFT JOIN m USING (doc_id)
-        UNION ALL
-        SELECT d.doc_id, 5 + coalesce(m.nm, 0), '/privacy', 'privacy'
-        FROM documents d LEFT JOIN m USING (doc_id)
-      )
-      SELECT doc_id, CAST(idx AS BIGINT) AS idx, href, anchor
-      FROM alllinks ORDER BY doc_id, idx""",
-
-    // each robots decision replayed as a closed-form CASE: k = doc_id%5
-    // keys the graftbot rules, doc_id%4 picks the probed path
-    "q_robots" -> """
-      WITH d AS (
-        SELECT doc_id, doc_id % 5 AS k, doc_id % 4 AS m FROM documents
-      ), rows_ AS (
-        SELECT doc_id, 'bot' AS probe,
-               CASE m WHEN 0 THEN '/blocked-' || k || '/page'
-                      WHEN 1 THEN '/blocked-' || k || '/ok/page'
-                      WHEN 2 THEN '/private/x'
-                      ELSE '/doc-' || k || '.pdf' END AS path,
-               CASE m WHEN 1 THEN true WHEN 2 THEN true
-                      ELSE false END AS allowed,
-               CASE m WHEN 0 THEN '/blocked-' || k || '/'
-                      WHEN 1 THEN '/blocked-' || k || '/ok/'
-                      WHEN 2 THEN ''
-                      ELSE '/*.pdf$' END AS rule
-        FROM d
-        UNION ALL
-        SELECT doc_id, 'other_sub', '/private/sub', false, '/private/'
-        FROM d
-        UNION ALL
-        SELECT doc_id, 'other_pub', '/private/pub', true, '/private/pub$'
-        FROM d
-      )
-      SELECT doc_id, probe, path, allowed, rule FROM rows_
-      ORDER BY doc_id, probe""",
-
-    // the Sitemap directive (idx 0) plus the urlset's three locs in
-    // document order, entity-decoded and trimmed
-    "q_sitemap" -> """
-      WITH d AS (
-        SELECT doc_id, doc_id % 5 AS k5, doc_id % 97 AS k97 FROM documents
-      ), rows_ AS (
-        SELECT doc_id, 0 AS idx,
-               'https://site-' || k5 || '.example/sitemap.xml' AS loc FROM d
-        UNION ALL
-        SELECT doc_id, 1,
-               'https://site-' || k97 || '.example/page/' || doc_id FROM d
-        UNION ALL
-        SELECT doc_id, 2,
-               'https://site-' || k97 || '.example/a?x=' || doc_id || '&y=2'
-        FROM d
-        UNION ALL
-        SELECT doc_id, 3,
-               'https://site-' || k97 || '.example/z/' || doc_id FROM d
-      )
-      SELECT doc_id, CAST(idx AS BIGINT) AS idx, loc FROM rows_
-      ORDER BY doc_id, idx""",
-
-    // crawl delays: first graftbot block k.5 s, second rule-less block
-    // 2 s — combined groups take the max; the * group 1 s; no groups -1
-    "q_crawl_delay" -> """
-      SELECT doc_id,
-             GREATEST((doc_id % 5) * 1000 + 500, 2000) AS bot_delay_ms,
-             CAST(1000 AS BIGINT) AS star_delay_ms,
-             CAST(-1 AS BIGINT) AS none_delay_ms
-      FROM documents
-      ORDER BY doc_id""",
-
-    // in-page directives replayed branch by branch: meta variants by
-    // doc_id % 4 ('none' = both flags; the description meta is not a
-    // robots meta), canonical variants by doc_id % 3 (first-wins on the
-    // planted duplicate, entity-decoded relative href resolved against
-    // the page URL, stylesheet link is no canonical)
-    "q_canonical" -> """
-      WITH d AS (
-        SELECT doc_id, doc_id % 97 AS k, doc_id % 4 AS m4, doc_id % 3 AS m3
-        FROM documents
-      )
-      SELECT doc_id,
-             m4 IN (0, 1, 2) AS noindex,
-             m4 IN (0, 2) AS nofollow,
-             CASE WHEN m3 = 0
-                    THEN 'https://canon-' || k || '.example/c/' || doc_id
-                  WHEN m3 = 1 THEN '/canon/' || doc_id || '?a=1&b=2'
-                  ELSE NULL END AS canonical,
-             CASE WHEN m3 = 0
-                    THEN 'https://canon-' || k || '.example/c/' || doc_id
-                  WHEN m3 = 1 THEN 'https://site-' || k ||
-                    '.example/canon/' || doc_id || '?a=1&b=2'
-                  ELSE NULL END AS canonical_abs
-      FROM d
-      ORDER BY doc_id""",
-
-    // the meta-answered IS NULL census and its hydrated residual twin
-    "q_count_null_indexed" -> """
-      WITH d AS (
-        SELECT doc_id,
-               CASE WHEN doc_id % 13 = 0 OR doc_id % 31 = 0 THEN NULL
-                    ELSE source END AS source,
-               n_chars
-        FROM documents
-      )
-      SELECT (SELECT count(*) FROM d WHERE source IS NULL) AS n_null,
-             (SELECT count(*) FROM d
-              WHERE source IS NULL AND n_chars >= 100) AS n_hydrated""",
-
-    // replay the CJK segmentation position by position: Latin runs
-    // lowercase and flush at script boundaries, each Han/kana/Ext-B
-    // code point is its own token
-    "q_cjk_tokens" -> """
-      WITH d AS (
-        SELECT doc_id,
-               chr(CAST(19968 + doc_id % 16 AS INT)) AS c1,
-               chr(CAST(19984 + doc_id % 8 AS INT)) AS c2,
-               chr(CAST(12354 + doc_id % 10 AS INT)) AS k,
-               chr(131072) AS eb
-        FROM documents
-      ), t AS (
-        SELECT doc_id, 1 AS idx, 'alpha' AS token FROM d
-        UNION ALL SELECT doc_id, 2, c1 FROM d
-        UNION ALL SELECT doc_id, 3, c2 FROM d
-        UNION ALL SELECT doc_id, 4, 'bravo' FROM d
-        UNION ALL SELECT doc_id, 5, k FROM d
-        UNION ALL SELECT doc_id, 6, '7' FROM d
-        UNION ALL SELECT doc_id, 7, c1 FROM d
-        UNION ALL SELECT doc_id, 8, eb FROM d
-      )
-      SELECT doc_id, CAST(idx AS BIGINT) AS idx, token FROM t
-      ORDER BY doc_id, idx""",
-
-    // every normalization rule's expected output, emitted directly
-    "q_url_normalize" -> """
-      WITH d AS (
-        SELECT doc_id, doc_id % 97 AS k,
-               CASE WHEN doc_id % 3 = 0
-                 THEN 'www.blog-' || (doc_id % 97) || '.example.co.uk'
-                 ELSE 'site-' || (doc_id % 97) || '.example.com' END AS host
-        FROM documents
-      )
-      SELECT doc_id,
-             CASE WHEN doc_id % 2 = 0 THEN 'http://' ELSE 'https://' END
-               || host || '/docs/~pg/%2Fx/' || doc_id
-               || '?q=Ab&tag=c%20d' AS url_norm,
-             host,
-             CASE WHEN doc_id % 3 = 0 THEN 'example.co.uk'
-                  ELSE 'example.com' END AS domain
-      FROM d ORDER BY doc_id""",
-
-    // dedup-to-one-canonical-key per page, then the depth and blocklist
-    // drops, rolled up per registrable domain
-    "q_url_filter" -> """
-      WITH u AS (
-        SELECT doc_id,
-               CASE WHEN doc_id % 3 = 0
-                 THEN 'example-' || ((doc_id % 97) % 10) || '.co.uk'
-                 ELSE 'example-' || ((doc_id % 97) % 10) || '.com' END AS domain,
-               (doc_id % 7 = 0) AS deep
-        FROM documents
-      )
-      SELECT domain, CAST(count(*) AS BIGINT) AS n_urls
-      FROM u
-      WHERE NOT deep AND domain NOT IN ('example-0.com', 'example-7.co.uk')
-      GROUP BY domain ORDER BY domain""",
-
-    // stride scheduling replayed: per-source rank, virtual time
-    // (2i-1)/(2w) as the identical IEEE division, global row_number
-    "q_interleave" -> """
-      WITH d AS (
-        SELECT doc_id, source,
-               CAST(substr(source, 4) AS INT) % 4 + 1 AS w,
-               row_number() OVER (PARTITION BY source ORDER BY doc_id) AS rn
-        FROM documents
-      )
-      SELECT doc_id, source,
-             CAST(row_number() OVER (
-               ORDER BY (2*rn - 1) / (2.0*w), source, doc_id) - 1
-               AS BIGINT) AS global_pos
-      FROM d ORDER BY global_pos""",
-
-    // the shared span CTE chain, reported as merged spans
-    "q_substring_dedup" -> (substringSpanCtes + """
-      SELECT doc_id,
-             CAST(min(p) AS BIGINT) AS span_start,
-             CAST(max(p) + 49 AS BIGINT) AS span_end,
-             CAST(max(p) + 49 - min(p) + 1 AS BIGINT) AS span_tokens
-      FROM m4 GROUP BY doc_id, sid
-      ORDER BY doc_id, span_start"""),
-
-    // the same shared span CTE chain, then applied: tokens at covered
-    // 0-based positions dropped, text rebuilt single-spaced per doc;
-    // docs whose every token is covered survive as empty rows via the
-    // left join
-    "q_substring_scrub" -> (substringSpanCtes + """
-      , spans AS (
-        SELECT doc_id, min(p) AS s, max(p) + 49 AS e
-        FROM m4 GROUP BY doc_id, sid
-      ), alltoks AS (
-        SELECT doc_id, unnest(string_split(text, ' ')) AS t,
-               generate_subscripts(string_split(text, ' '), 1) AS pos
-        FROM corpus
-      ), kept AS (
-        SELECT a.doc_id, a.t, a.pos FROM alltoks a
-        WHERE NOT EXISTS (SELECT 1 FROM spans s
-                          WHERE s.doc_id = a.doc_id
-                            AND a.pos - 1 BETWEEN s.s AND s.e)
-      ), agg AS (
-        SELECT doc_id, CAST(count(*) AS BIGINT) AS n_kept,
-               string_agg(t, ' ' ORDER BY pos) AS text_scrub
-        FROM kept GROUP BY doc_id
-      )
-      SELECT c.doc_id,
-             CAST(coalesce(a.n_kept, 0) AS BIGINT) AS n_kept,
-             coalesce(a.text_scrub, '') AS text_scrub
-      FROM corpus c LEFT JOIN agg a ON a.doc_id = c.doc_id
-      ORDER BY c.doc_id"""),
-    "q_count_filter" ->
-      "SELECT count(*) AS n FROM orders WHERE o_orderstatus = 'P'",
-
-    "q1_agg" -> """
-      SELECT l_returnflag, l_linestatus,
-             CAST(sum(CAST(l_quantity AS DECIMAL(18,2))) AS DOUBLE) AS sum_qty,
-             CAST(sum(CAST(l_extendedprice AS DECIMAL(18,2))) AS DOUBLE) AS sum_base_price,
-             CAST(sum(CAST(l_extendedprice AS DECIMAL(18,2)) * (CAST(1 AS DECIMAL(18,2)) - CAST(l_discount AS DECIMAL(18,2)))) AS DOUBLE) AS sum_disc_price,
-             count(*) AS count_order
-      FROM lineitem
-      WHERE l_shipdate <= TIMESTAMP '1998-09-02 00:00:00'
-      GROUP BY l_returnflag, l_linestatus
-      ORDER BY l_returnflag, l_linestatus""",
-
-    "q_find_unique" ->
-      "SELECT * FROM customer WHERE c_custkey = 42",
-
-    "q_find_first" -> """
-      SELECT * FROM orders WHERE o_totalprice > 100000.0
-      ORDER BY o_orderdate ASC, o_orderkey ASC LIMIT 1""",
-
-    // the P2025 contract as data: code present exactly when the key is
-    // absent (probe-list left join — no hardcoded outcomes)
-    "q_find_unique_throw" -> """
-      WITH probes(key) AS (VALUES (42), (999999999))
-      SELECT CAST(p.key AS BIGINT) AS key, c.c_name AS name,
-             CASE WHEN c.c_custkey IS NULL THEN 'P2025' END AS err
-      FROM probes p LEFT JOIN customer c ON c.c_custkey = p.key
-      ORDER BY key""",
-
-    "q_find_first_throw" -> """
-      WITH hit AS (
-        SELECT o_orderkey FROM orders WHERE o_totalprice > 100000.0
-        ORDER BY o_totalprice DESC, o_orderkey LIMIT 1
-      ), miss AS (
-        SELECT o_orderkey FROM orders WHERE o_totalprice > 1000000000.0
-        ORDER BY o_totalprice DESC, o_orderkey LIMIT 1
-      )
-      SELECT 'hit' AS probe,
-             (SELECT CAST(o_orderkey AS VARCHAR) FROM hit) AS okey,
-             CASE WHEN NOT EXISTS (SELECT 1 FROM hit) THEN 'P2025' END AS err
-      UNION ALL
-      SELECT 'miss',
-             (SELECT CAST(o_orderkey AS VARCHAR) FROM miss),
-             CASE WHEN NOT EXISTS (SELECT 1 FROM miss) THEN 'P2025' END
-      ORDER BY probe""",
-
-    // actually-inserted rows only: the incoming batch minus the seeded keys
-    "q_create_many_return" -> """
-      SELECT c_custkey AS id, c_name AS name, c_mktsegment AS seg
-      FROM customer WHERE c_custkey > 50 AND c_custkey <= 80
-      ORDER BY id""",
-
-    // post-update images of the matched slice
-    "q_update_many_return" -> """
-      SELECT c_custkey AS id, c_name AS name,
-             CAST(c_acctbal AS DOUBLE) AS acctbal, 'FLAGGED' AS seg
-      FROM customer WHERE c_custkey <= 200 AND c_acctbal > 5000.0
-      ORDER BY id""",
-
-    "q_find_many_page" -> """
-      SELECT * FROM customer WHERE c_mktsegment = 'BUILDING'
-      ORDER BY c_acctbal DESC, c_custkey ASC LIMIT 20 OFFSET 10""",
-
-    "q_str_filters" -> """
-      SELECT p_partkey, p_name, p_type FROM part
-      WHERE p_type LIKE '%DARD' AND lower(p_name) LIKE '%red%'
-      ORDER BY p_partkey""",
-
-    "q_in_notin" -> """
-      SELECT p_partkey, p_brand, p_size FROM part
-      WHERE p_brand IN ('Brand#11','Brand#22','Brand#33')
-        AND p_size NOT IN (1,2,3)
-      ORDER BY p_partkey""",
-
-    "q_order_nulls" -> """
-      WITH base AS (
-        SELECT o_orderkey,
-               CASE WHEN o_orderstatus = 'P' THEN NULL
-                    ELSE o_totalprice END AS price
-        FROM orders WHERE o_orderkey <= 200)
-      SELECT probe, o_orderkey, price FROM (
-        SELECT 'first' AS probe, o_orderkey, price FROM base
-        ORDER BY price DESC NULLS FIRST, o_orderkey LIMIT 10)
-      UNION ALL
-      SELECT probe, o_orderkey, price FROM (
-        SELECT 'last' AS probe, o_orderkey, price FROM base
-        ORDER BY price DESC NULLS LAST, o_orderkey LIMIT 10)
-      ORDER BY probe, o_orderkey""",
-
-    "q_enum_filter" -> """
-      SELECT o_orderkey, o_orderstatus FROM orders
-      WHERE o_orderstatus IN ('F', 'P') AND o_orderstatus <> 'F'
-        AND o_orderkey <= 500
-      ORDER BY o_orderkey""",
-
-    // tri-state boolean algebra replayed with three-valued SQL: = drops
-    // NULLs, NOT(x = true) is true only for false, IS [NOT] NULL exact
-    "q_bool_tristate" -> """
-      WITH f AS (
-        SELECT CASE WHEN event_type = 'view' THEN NULL
-                    ELSE value > 100.0 END AS flag
-        FROM events)
-      SELECT
-        CAST(count(CASE WHEN flag = true THEN 1 END) AS BIGINT) AS eq_true,
-        CAST(count(CASE WHEN flag = false THEN 1 END) AS BIGINT) AS eq_false,
-        CAST(count(CASE WHEN flag IS NULL THEN 1 END) AS BIGINT) AS eq_null,
-        CAST(count(CASE WHEN NOT (flag = true) THEN 1 END) AS BIGINT) AS not_true,
-        CAST(count(CASE WHEN flag IS NOT NULL THEN 1 END) AS BIGINT) AS not_null
-      FROM f""",
-
-    "q_range_connectors" -> """
-      SELECT o_orderkey, o_orderdate, o_totalprice, o_orderpriority FROM orders
-      WHERE o_orderdate >= TIMESTAMP '1996-01-01 00:00:00'
-        AND o_orderdate <  TIMESTAMP '1996-07-01 00:00:00'
-        AND (o_totalprice > 350000.0 OR o_orderpriority = '1-URGENT')
-      ORDER BY o_orderkey""",
-
-    "q_json_filter" -> """
-      SELECT event_id, event_type, props FROM events
-      WHERE CAST(json_extract_string(props, '$.k') AS DOUBLE) >= 95
-      ORDER BY event_id""",
-
-    "q_json_variant" -> """
-      SELECT event_id, CAST(json_extract_string(props, '$.k') AS BIGINT) AS k
-      FROM events
-      WHERE CAST(json_extract_string(props, '$.k') AS DOUBLE) >= 95
-      ORDER BY event_id""",
-
-    "q_rel_some" -> """
-      SELECT c_custkey, c_name FROM customer c
-      WHERE EXISTS (SELECT 1 FROM orders o
-                    WHERE o.o_custkey = c.c_custkey AND o.o_totalprice > 400000.0)
-      ORDER BY c_custkey""",
-
-    "q_rel_none" -> """
-      SELECT c_custkey, c_name FROM customer c
-      WHERE NOT EXISTS (SELECT 1 FROM orders o
-                        WHERE o.o_custkey = c.c_custkey AND o.o_orderstatus = 'F')
-      ORDER BY c_custkey""",
-
-    "q_rel_every" -> """
-      SELECT o_orderkey, o_orderdate FROM orders o
-      WHERE o_orderdate >= TIMESTAMP '1998-01-01 00:00:00'
-        AND NOT EXISTS (SELECT 1 FROM lineitem l
-                        WHERE l.l_orderkey = o.o_orderkey
-                          AND NOT coalesce(l.l_quantity <= 45.0, FALSE))
-      ORDER BY o_orderkey""",
-
-    "q_distinct_on" -> """
-      SELECT o_orderkey, o_custkey, o_orderdate FROM (
-        SELECT *, row_number() OVER (PARTITION BY o_custkey
-                                     ORDER BY o_orderdate DESC, o_orderkey ASC) AS rn
-        FROM orders) t
-      WHERE rn = 1
-      ORDER BY o_orderdate DESC, o_orderkey ASC""",
-
-    "q_cursor_page" -> """
-      WITH cur AS (SELECT c_acctbal, c_custkey FROM customer WHERE c_custkey = 100)
-      SELECT c.c_custkey, c.c_name, c.c_acctbal FROM customer c, cur
-      WHERE c.c_acctbal < cur.c_acctbal
-         OR (c.c_acctbal = cur.c_acctbal AND c.c_custkey > cur.c_custkey)
-      ORDER BY c.c_acctbal DESC, c.c_custkey ASC LIMIT 20""",
-
-    "q_order_by_rel_count" -> """
-      SELECT c_custkey, c_name FROM customer c
-      ORDER BY (SELECT count(*) FROM orders o WHERE o.o_custkey = c.c_custkey) DESC,
-               c_custkey ASC
-      LIMIT 25""",
-
-    "q_aggregate" -> """
-      SELECT count(*) AS _count_all,
-             count(o_custkey) AS _count_o_custkey,
-             min(o_orderdate) AS _min_o_orderdate,
-             min(o_totalprice) AS _min_o_totalprice,
-             max(o_orderdate) AS _max_o_orderdate,
-             max(o_totalprice) AS _max_o_totalprice
-      FROM orders WHERE o_orderstatus = 'O'""",
-
-    "q_group_having" -> """
-      SELECT o_custkey, count(*) AS _count_all,
-             CAST(CAST(max(o_totalprice) AS DECIMAL(18,2)) AS DOUBLE) AS _max_o_totalprice
-      FROM orders
-      GROUP BY o_custkey
-      HAVING count(*) >= 10
-      ORDER BY _count_all DESC, o_custkey ASC LIMIT 50""",
-
-    "q_include_count" -> """
-      SELECT c.c_custkey, count(o.o_orderkey) AS _count_orders
-      FROM customer c LEFT JOIN orders o ON o.o_custkey = c.c_custkey
-      GROUP BY c.c_custkey
-      ORDER BY c.c_custkey""",
-
-    "q_join_left_count" -> """
-      SELECT c.c_custkey,
-             count(o.o_orderkey) AS n_orders,
-             CAST(sum(CAST(o.o_totalprice AS DECIMAL(18,2))) AS DOUBLE) AS total_spent
-      FROM customer c LEFT JOIN orders o ON c.c_custkey = o.o_custkey
-      GROUP BY c.c_custkey
-      ORDER BY c.c_custkey""",
-
-    "q_join_anti" -> """
-      SELECT c_custkey, c_name, c_mktsegment FROM customer c
-      WHERE NOT EXISTS (SELECT 1 FROM orders o
-                        WHERE o.o_custkey = c.c_custkey AND o.o_totalprice > 300000.0)
-      ORDER BY c_custkey""",
-
-    "q_join_mn" -> """
-      SELECT l_partkey, count(DISTINCT s_suppkey) AS n_suppliers
-      FROM lineitem JOIN supplier ON l_suppkey = s_suppkey
-      GROUP BY l_partkey
-      HAVING count(DISTINCT s_suppkey) >= 4
-      ORDER BY l_partkey""",
-
-    "q_revenue_top" -> """
-      SELECT o.o_orderkey, o.o_orderdate,
-             CAST(sum(CAST(l.l_extendedprice AS DECIMAL(18,2)) * (CAST(1 AS DECIMAL(18,2)) - CAST(l.l_discount AS DECIMAL(18,2)))) AS DOUBLE) AS revenue
-      FROM customer c
-      JOIN orders o ON c.c_custkey = o.o_custkey
-      JOIN lineitem l ON o.o_orderkey = l.l_orderkey
-      WHERE c.c_mktsegment = 'BUILDING'
-        AND o.o_orderdate < TIMESTAMP '1995-03-15 00:00:00'
-        AND l.l_shipdate > TIMESTAMP '1995-03-15 00:00:00'
-      GROUP BY o.o_orderkey, o.o_orderdate
-      ORDER BY revenue DESC, o.o_orderkey LIMIT 10""",
-
-    "q_revenue_nation" -> """
-      SELECT n.n_name,
-             CAST(sum(CAST(l.l_extendedprice AS DECIMAL(18,2)) * (CAST(1 AS DECIMAL(18,2)) - CAST(l.l_discount AS DECIMAL(18,2)))) AS DOUBLE) AS revenue
-      FROM region r
-      JOIN nation n ON r.r_regionkey = n.n_regionkey
-      JOIN customer c ON n.n_nationkey = c.c_nationkey
-      JOIN orders o ON c.c_custkey = o.o_custkey
-      JOIN lineitem l ON o.o_orderkey = l.l_orderkey
-      WHERE r.r_name = 'ASIA'
-      GROUP BY n.n_name
-      ORDER BY revenue DESC, n.n_name""",
-
-    "q_sessions" -> """
-      WITH t AS (
-        SELECT user_id, ts, event_id,
-               lag(ts) OVER (PARTITION BY user_id ORDER BY ts, event_id) AS prev_ts
-        FROM events)
-      SELECT user_id,
-             CAST(sum(CASE WHEN prev_ts IS NULL
-                       OR epoch(ts) - epoch(prev_ts) > 1800 THEN 1 ELSE 0 END) AS BIGINT) AS n_sessions,
-             count(*) AS n_events
-      FROM t GROUP BY user_id ORDER BY user_id""",
-
-    "q_above_avg" -> """
-      SELECT o_orderkey, o_custkey, o_totalprice FROM orders o
-      WHERE CAST(o_totalprice AS DECIMAL(18,2))
-              * (SELECT count(*) FROM orders o2 WHERE o2.o_custkey = o.o_custkey)
-            > 2 * (SELECT sum(CAST(o2.o_totalprice AS DECIMAL(18,2)))
-                   FROM orders o2 WHERE o2.o_custkey = o.o_custkey)
-      ORDER BY o_orderkey""",
-
-    "q_funnel" -> """
-      SELECT user_id, t_view, t_signup, t_purchase FROM (
-        SELECT user_id,
-               min(CASE WHEN event_type = 'view' THEN ts END) AS t_view,
-               min(CASE WHEN event_type = 'signup' THEN ts END) AS t_signup,
-               min(CASE WHEN event_type = 'purchase' THEN ts END) AS t_purchase
-        FROM events GROUP BY user_id) t
-      WHERE t_view < t_signup AND t_signup < t_purchase
-      ORDER BY user_id""",
-
-    "q_latest_event" -> """
-      SELECT user_id, event_id, event_type, value FROM (
-        SELECT *, row_number() OVER (PARTITION BY user_id
-                    ORDER BY ts DESC, event_id DESC) AS rn
-        FROM events) t
-      WHERE rn = 1 ORDER BY user_id""",
-
-    "q_set_ops" -> """
-      WITH building AS (SELECT c_custkey FROM customer WHERE c_mktsegment = 'BUILDING'),
-           big AS (SELECT DISTINCT o_custkey AS c_custkey FROM orders WHERE o_totalprice > 400000.0)
-      SELECT c_custkey, 'building_only' AS src FROM (SELECT * FROM building EXCEPT SELECT * FROM big)
-      UNION ALL
-      SELECT c_custkey, 'both' AS src FROM (SELECT * FROM building INTERSECT SELECT * FROM big)
-      ORDER BY src, c_custkey""",
-
-    "q_pivot" -> """
-      SELECT l_returnflag,
-             CAST(sum(CASE WHEN l_linestatus = 'O' THEN CAST(l_quantity AS DECIMAL(18,2)) END) AS DOUBLE) AS qty_o,
-             CAST(sum(CASE WHEN l_linestatus = 'F' THEN CAST(l_quantity AS DECIMAL(18,2)) END) AS DOUBLE) AS qty_f
-      FROM lineitem GROUP BY l_returnflag ORDER BY l_returnflag""",
-
-    "q_supplier_rank" -> """
-      WITH rev AS (
-        SELECT s_nationkey, s_suppkey,
-               CAST(sum(CAST(l_extendedprice AS DECIMAL(18,2))) AS DOUBLE) AS revenue
-        FROM lineitem JOIN supplier ON l_suppkey = s_suppkey
-        GROUP BY s_nationkey, s_suppkey)
-      SELECT s_nationkey, s_suppkey, revenue, rnk FROM (
-        SELECT *, CAST(dense_rank() OVER (PARTITION BY s_nationkey
-                 ORDER BY revenue DESC, s_suppkey) AS BIGINT) AS rnk
-        FROM rev) t
-      WHERE rnk <= 3
-      ORDER BY s_nationkey, rnk, s_suppkey""",
-
-    "q_deciles" -> """
-      SELECT decile, count(*) AS n, min(o_totalprice) AS lo, max(o_totalprice) AS hi
-      FROM (SELECT o_totalprice,
-                   CAST(ntile(10) OVER (ORDER BY o_totalprice, o_orderkey) AS BIGINT) AS decile
-            FROM orders) t
-      GROUP BY decile ORDER BY decile""",
-
-    "q_rollup" -> """
-      SELECT l_returnflag, l_linestatus, count(*) AS n,
-             CAST(sum(CAST(l_quantity AS DECIMAL(18,2))) AS DOUBLE) AS qty
-      FROM lineitem
-      GROUP BY ROLLUP (l_returnflag, l_linestatus)
-      ORDER BY l_returnflag ASC NULLS FIRST, l_linestatus ASC NULLS FIRST""",
-
-    "q_raw_sql" -> """
-      SELECT n.n_name, count(*) AS n_orders
-      FROM customer c
-      JOIN nation n ON c.c_nationkey = n.n_nationkey
-      JOIN orders o ON o.o_custkey = c.c_custkey
-      GROUP BY n.n_name
-      ORDER BY n_orders DESC, n_name ASC""",
-
-    "q_scalar_funcs" -> """
-      SELECT p_partkey,
-             trim(p_name) AS name_trim,
-             regexp_extract(p_name, '([a-z]+)', 1) AS first_word,
-             coalesce(p_brand, 'Default Name') AS brand_or_default,
-             concat_ws('|', p_type, p_brand) AS tag_line,
-             trim(regexp_extract('call +' || CAST(p_partkey % 1000000 AS VARCHAR) || ' ext',
-                                 '(\+?\d[\d\s()-]+)', 1)) AS phone
-      FROM part ORDER BY p_partkey""",
-
-    "q_chunk" -> """
-      WITH base AS (
-        SELECT doc_id, string_split(text, ' ') AS w,
-               CAST(len(string_split(text, ' ')) AS BIGINT) AS n
-        FROM documents WHERE doc_id < 200
-      ), chunks AS (
-        SELECT doc_id, w, n,
-               unnest(generate_series(0,
-                 greatest(CAST(1 AS BIGINT), (n - 10 + 49) // 50) - 1)) AS chunk_idx
-        FROM base
-      )
-      SELECT doc_id, chunk_idx,
-             least(60, n - chunk_idx * 50) AS chunk_tokens,
-             array_to_string(w[CAST(chunk_idx * 50 + 1 AS INTEGER)
-               : CAST(chunk_idx * 50 + 60 AS INTEGER)], ' ') AS chunk_text
-      FROM chunks
-      ORDER BY doc_id, chunk_idx""",
-
-    "q_source_overlap" -> """
-      WITH toks AS (
-        SELECT source, doc_id, string_split(text, ' ') AS w FROM documents
-        WHERE len(string_split(text, ' ')) >= 3
-      ), words AS (
-        SELECT source, doc_id, unnest(w) AS word,
-               generate_subscripts(w, 1) AS idx
-        FROM toks
-      ), grams AS (
-        SELECT DISTINCT source,
-               word || ' ' ||
-               lead(word, 1) OVER (PARTITION BY doc_id ORDER BY idx) || ' ' ||
-               lead(word, 2) OVER (PARTITION BY doc_id ORDER BY idx) AS g
-        FROM words
-      ), sg AS (
-        SELECT source, g FROM grams WHERE g IS NOT NULL
-      ), sizes AS (
-        SELECT source, CAST(count(*) AS BIGINT) AS n FROM sg GROUP BY source
-      ), inter AS (
-        SELECT a.source AS src_a, b.source AS src_b,
-               CAST(count(*) AS BIGINT) AS inter
-        FROM sg a JOIN sg b ON a.g = b.g AND a.source < b.source
-        GROUP BY 1, 2
-      )
-      SELECT sa.source AS src_a, sb.source AS src_b,
-             sa.n AS n_a, sb.n AS n_b,
-             COALESCE(i.inter, 0) AS inter,
-             round(COALESCE(i.inter, 0) /
-               CAST(sa.n + sb.n - COALESCE(i.inter, 0) AS DOUBLE), 6) AS jaccard
-      FROM sizes sa JOIN sizes sb ON sa.source < sb.source
-      LEFT JOIN inter i ON i.src_a = sa.source AND i.src_b = sb.source
-      ORDER BY src_a, src_b""",
-
-    "q_raw_fn" -> """
-      SELECT doc_id,
-             CAST(len(toks) AS INTEGER) AS n_tokens,
-             toks[1] AS first_tok
-      FROM (
-        SELECT doc_id,
-               list_filter(regexp_split_to_array(lower(trim(text)),
-                 '[^a-z0-9]+'), x -> len(x) > 0) AS toks
-        FROM documents WHERE doc_id < 200)
-      ORDER BY doc_id""",
-
-    // delete-then-remap as one declarative SELECT: survivors are
-    // custkey % 7 <> 0 (ON DELETE CASCADE drops the children of the
-    // rest), and custkey % 11 = 0 survivors remap to +100000 in BOTH
-    // tables (ON UPDATE CASCADE)
-    "q_cascade" -> """
-      WITH surviving AS (
-        SELECT c_custkey AS custkey FROM customer
-        WHERE c_custkey <= 300 AND c_custkey % 7 <> 0
-      ), remap AS (
-        SELECT custkey,
-               CASE WHEN custkey % 11 = 0 THEN custkey + 100000
-                    ELSE custkey END AS new_key
-        FROM surviving
-      )
-      SELECT o.o_orderkey AS orderkey, r.new_key AS custkey,
-             o.o_totalprice AS totalprice
-      FROM orders o JOIN remap r ON o.o_custkey = r.custkey
-      WHERE o.o_custkey <= 300
-      ORDER BY orderkey""",
-
-    // rewritten = "partition contains a matched row" derived from DATA;
-    // the Spark side reads the same flag from the manifest version diff —
-    // a whole-table rewrite (or a skipped touched slice) hash-mismatches
-    "q_cascade_part" -> """
-      WITH base AS (
-        SELECT o_orderkey AS id, o_orderstatus AS status, o_totalprice AS total
-        FROM orders WHERE o_orderkey <= 2000
-      ), post AS (
-        SELECT id, status,
-               CASE WHEN status = 'F' AND id <= 500 THEN 0.0 ELSE total END AS total
-        FROM base WHERE NOT (status = 'P' AND id > 1500)
-      ), flags AS (
-        SELECT p.status,
-               EXISTS (SELECT 1 FROM base b WHERE b.status = p.status
-                       AND ((b.status = 'F' AND b.id <= 500)
-                         OR (b.status = 'P' AND b.id > 1500))) AS rewritten
-        FROM (SELECT DISTINCT status FROM base) p
-      )
-      SELECT f.status AS part, f.rewritten AS rewritten,
-             CAST(coalesce(c.n, 0) AS BIGINT) AS n_after,
-             CAST(coalesce(c.s, 0.00) AS DOUBLE) AS sum_total
-      FROM flags f LEFT JOIN (
-        SELECT status, count(*) AS n,
-               sum(CAST(total AS DECIMAL(18,2))) AS s
-        FROM post GROUP BY status) c ON c.status = f.status
-      ORDER BY part""",
-
-    // the INSERT/UPDATE/DELETE sequence as one declarative SELECT: the
-    // UPDATE's SET expressions both read the PRE-update row (SQL UPDATE
-    // semantics), and the DELETE keeps NULL-predicate rows
-    "q_exec_raw" -> """
-      WITH ins AS (
-        SELECT c_custkey AS custkey, c_name AS name,
-               c_mktsegment AS segment, c_acctbal AS bal
-        FROM customer WHERE c_custkey <= 500
-      ), upd AS (
-        SELECT custkey, name,
-               CASE WHEN bal > 5000 THEN 'VIP' ELSE segment END AS segment,
-               CASE WHEN bal > 5000 THEN bal * 1.1 ELSE bal END AS bal
-        FROM ins
-      )
-      SELECT custkey, name, segment, bal FROM upd
-      WHERE NOT coalesce(bal < 0, FALSE)
-      ORDER BY custkey""",
-
-    // seed + the SUCCESSFUL batch only — the aborted batch (zero every
-    // balance, then a duplicate-key INSERT) must contribute nothing
-    "q_exec_raw_txn" -> """
-      WITH ins AS (
-        SELECT c_custkey AS custkey, c_name AS name,
-               c_mktsegment AS segment, c_acctbal AS bal
-        FROM customer WHERE c_custkey <= 300
-      ), upd AS (
-        SELECT custkey, name, segment,
-               CASE WHEN segment = 'BUILDING' THEN bal + 100 ELSE bal END AS bal
-        FROM ins
-      )
-      SELECT custkey, name, segment, bal FROM upd
-      WHERE NOT coalesce(bal < 500, FALSE)
-      ORDER BY custkey""",
-
-    // the MERGE replayed declaratively: matched keys (201..400) delete
-    // on negative source bal, else sum balances + flip segment; source
-    // keys past the seed (401..600) insert as NEW
-    // the CTAS result with the raw-SQL UPDATE folded in declaratively
-    "q_exec_raw_ctas" -> """
-      WITH seg AS (
-        SELECT c_mktsegment AS segment, CAST(count(*) AS BIGINT) AS n,
-               CAST(sum(CAST(c_acctbal AS DECIMAL(18,2))) AS DOUBLE) AS bal
-        FROM customer GROUP BY c_mktsegment)
-      SELECT segment, n,
-             CASE WHEN segment < 'F' THEN 0.0 ELSE bal END AS bal
-      FROM seg ORDER BY segment""",
-
-    "q_exec_raw_merge" -> """
-      WITH seed AS (
-        SELECT c_custkey AS custkey, c_name AS name,
-               c_mktsegment AS segment, c_acctbal AS bal
-        FROM customer WHERE c_custkey <= 400
-      ), src AS (
-        SELECT c_custkey AS custkey, c_name AS name, c_acctbal AS bal
-        FROM customer WHERE c_custkey BETWEEN 201 AND 600
-      )
-      SELECT t.custkey, t.name,
-             CASE WHEN m.custkey IS NOT NULL THEN 'MERGED'
-                  ELSE t.segment END AS segment,
-             CASE WHEN m.custkey IS NOT NULL THEN t.bal + m.bal
-                  ELSE t.bal END AS bal
-      FROM seed t LEFT JOIN src m ON t.custkey = m.custkey
-      WHERE NOT coalesce(m.bal < 0, FALSE)
-      UNION ALL
-      SELECT custkey, name, 'NEW' AS segment, bal
-      FROM src WHERE custkey > 400
-      ORDER BY custkey""",
-
-    // serial-equivalent final state of the racing transactions: seed
-    // custkey, +7 (retried txn), +11 on evens (interleaved txn), +1000
-    // and +10000 (the two racing threads' commutative adds)
-    "q_txn_race" -> """
-      SELECT c_custkey AS custkey,
-             CAST(c_custkey + 7
-                  + CASE WHEN c_custkey % 2 = 0 THEN 11 ELSE 0 END
-                  + 11000 AS BIGINT) AS bal
-      FROM customer WHERE c_custkey <= 300
-      ORDER BY custkey""",
-
-    // concurrent write+compaction must preserve exactly the union of the
-    // writer's batches
-    "q_compact_concurrent" -> """
-      SELECT doc_id, CAST(length(text) AS BIGINT) AS v
-      FROM documents ORDER BY doc_id""",
-
-    "q_token_budget" -> """
-      SELECT doc_id,
-             CAST(CASE WHEN len(regexp_replace(text, '^\s+|\s+$', '', 'g')) = 0 THEN 0
-                  ELSE len(regexp_split_to_array(regexp_replace(text, '^\s+|\s+$', '', 'g'), '\s+'))
-                  END AS BIGINT) AS ws_tokens,
-             CAST(COALESCE(list_sum(list_transform(
-               list_filter(regexp_split_to_array(lower(trim(text)),
-                 '[^a-z0-9]+'), x -> len(x) > 0),
-               x -> greatest(1, CAST(ceil(len(x) / 4.0) AS INTEGER)))), 0)
-               AS BIGINT) AS bpe_tokens
-      FROM documents ORDER BY doc_id""",
-
-    "q_top_ngrams" -> """
-      WITH toks AS (
-        SELECT doc_id, string_split(text, ' ') AS w FROM documents
-        WHERE len(string_split(text, ' ')) >= 3
-      ), words AS (
-        SELECT doc_id, unnest(w) AS word, generate_subscripts(w, 1) AS idx
-        FROM toks
-      ), grams AS (
-        SELECT doc_id,
-               word || ' ' ||
-               lead(word, 1) OVER (PARTITION BY doc_id ORDER BY idx) || ' ' ||
-               lead(word, 2) OVER (PARTITION BY doc_id ORDER BY idx) AS g
-        FROM words
-      )
-      SELECT g, CAST(count(*) AS BIGINT) AS n,
-             CAST(count(DISTINCT doc_id) AS BIGINT) AS n_docs
-      FROM grams WHERE g IS NOT NULL
-      GROUP BY g ORDER BY n DESC, g ASC LIMIT 20""",
-
-    "q_heavy_hitters" -> """
-      WITH toks AS (
-        SELECT unnest(string_split(text, ' ')) AS tok FROM documents)
-      SELECT tok, CAST(count(*) AS BIGINT) AS n
-      FROM toks
-      GROUP BY tok
-      HAVING count(*) * 200 > (SELECT count(*) FROM toks)
-      ORDER BY tok""",
-
-    "q_profile" -> """
-      WITH ev AS (
-        SELECT event_type, nullif(event_type, 'click') AS opt_type,
-               user_id, event_id
-        FROM events),
-      s AS (SELECT count(*) AS n FROM ev)
-      SELECT * FROM (
-        SELECT 'event_type' AS col_name, s.n AS n_rows,
-               CAST(s.n - count(event_type) AS BIGINT) AS n_nulls,
-               CAST(count(DISTINCT event_type) AS BIGINT) AS n_distinct,
-               CAST(min(event_type) AS VARCHAR) AS min_s,
-               CAST(max(event_type) AS VARCHAR) AS max_s
-        FROM ev, s GROUP BY s.n
-        UNION ALL
-        SELECT 'opt_type', s.n, CAST(s.n - count(opt_type) AS BIGINT),
-               CAST(count(DISTINCT opt_type) AS BIGINT),
-               CAST(min(opt_type) AS VARCHAR), CAST(max(opt_type) AS VARCHAR)
-        FROM ev, s GROUP BY s.n
-        UNION ALL
-        SELECT 'user_id', s.n, CAST(s.n - count(user_id) AS BIGINT),
-               CAST(count(DISTINCT user_id) AS BIGINT),
-               CAST(min(user_id) AS VARCHAR), CAST(max(user_id) AS VARCHAR)
-        FROM ev, s GROUP BY s.n
-        UNION ALL
-        SELECT 'event_id', s.n, CAST(s.n - count(event_id) AS BIGINT),
-               CAST(count(DISTINCT event_id) AS BIGINT),
-               CAST(min(event_id) AS VARCHAR), CAST(max(event_id) AS VARCHAR)
-        FROM ev, s GROUP BY s.n)
-      ORDER BY col_name""",
-
-    "q_approx_distinct" -> """
-      SELECT event_type, CAST(count(DISTINCT user_id) AS BIGINT) AS n_distinct
-      FROM events GROUP BY event_type ORDER BY event_type""",
-
-    // the count-min audit's RESULT is the exact group count; the sketch
-    // bound check happens Spark-side (a require) before this plan runs
-    "q_freq_audit" -> """
-      SELECT event_type AS value, CAST(count(*) AS BIGINT) AS n_exact
-      FROM events GROUP BY event_type ORDER BY value""",
-
-    "q_scd2" -> """
-      WITH ordered AS (
-        SELECT user_id, event_type, ts, event_id,
-               lag(event_type) OVER (PARTITION BY user_id
-                                     ORDER BY ts, event_id) AS prev
-        FROM events),
-      changes AS (
-        SELECT user_id, event_type, ts, event_id FROM ordered
-        WHERE prev IS NULL OR prev <> event_type)
-      SELECT user_id,
-             CAST(row_number() OVER w AS BIGINT) AS version,
-             event_type,
-             epoch_us(ts) AS valid_from_us,
-             epoch_us(lead(ts) OVER w) AS valid_to_us,
-             CAST(CASE WHEN lead(ts) OVER w IS NULL THEN 1 ELSE 0 END
-                  AS BIGINT) AS is_current
-      FROM changes
-      WINDOW w AS (PARTITION BY user_id ORDER BY ts, event_id)
-      ORDER BY user_id, version""",
-
-    "q_copurchase" -> """
-      WITH items AS (
-        SELECT DISTINCT l_orderkey AS b, l_partkey AS i FROM lineitem),
-      pairs AS (
-        SELECT a.i AS item_a, b.i AS item_b, count(*) AS n
-        FROM items a JOIN items b ON a.b = b.b AND a.i < b.i
-        GROUP BY 1, 2)
-      SELECT item_a, item_b, CAST(n AS BIGINT) AS n
-      FROM pairs ORDER BY n DESC, item_a, item_b LIMIT 20""",
-
-    "q_nfc_normalize" -> """
-      SELECT doc_id,
-             nfc_normalize(text || ' cafe' || chr(769)) AS text_nfc,
-             CAST(length(nfc_normalize(text || ' cafe' || chr(769)))
-                  - length(text || ' cafe' || chr(769)) AS BIGINT) AS nfc_delta
-      FROM documents ORDER BY doc_id""",
-
-    "q_token_hist" -> """
-      WITH t AS (
-        SELECT CASE WHEN len(regexp_replace(text, '^\s+|\s+$', '', 'g')) = 0 THEN 0
-                    ELSE len(regexp_split_to_array(regexp_replace(text, '^\s+|\s+$', '', 'g'), '\s+')) END AS n_tokens
-        FROM documents)
-      SELECT CASE WHEN CAST(n_tokens AS DOUBLE) < 0 THEN 0
-                  WHEN CAST(n_tokens AS DOUBLE) >= 100 THEN 11
-                  ELSE CAST(floor(CAST(n_tokens AS DOUBLE) / 10.0) AS INT) + 1 END AS bucket,
-             count(*) AS n
-      FROM t GROUP BY 1 ORDER BY bucket""",
-
-    "q_success_rate" -> """
-      SELECT count(*) AS processed,
-             count(*) FILTER (WHERE o_orderstatus = 'F') AS failed,
-             count(*) FILTER (WHERE o_orderstatus = 'P') AS skipped,
-             round((count(*) - count(*) FILTER (WHERE o_orderstatus = 'F')
-                    - count(*) FILTER (WHERE o_orderstatus = 'P')) * 100.0 / count(*), 4)
-               AS success_rate_pct
-      FROM orders""",
-
-    "q_window_running" -> """
-      SELECT o_custkey, o_orderkey,
-             CAST(sum(CAST(o_totalprice AS DECIMAL(18,2)))
-                  OVER (PARTITION BY o_custkey ORDER BY o_orderdate, o_orderkey
-                        ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW) AS DOUBLE)
-               AS running_spend
-      FROM orders WHERE o_custkey <= 50
-      ORDER BY o_custkey, o_orderkey""",
-
-    "q_median" -> """
-      SELECT l_returnflag, median(l_quantity) AS med_qty,
-             median(l_discount) AS med_disc
-      FROM lineitem GROUP BY l_returnflag ORDER BY l_returnflag""",
-
-    "q_cube" -> """
-      SELECT l_returnflag, l_linestatus, CAST(count(*) AS BIGINT) AS n,
-             CAST(sum(CAST(l_quantity AS DECIMAL(18,2))) AS DOUBLE) AS qty
-      FROM lineitem
-      GROUP BY CUBE (l_returnflag, l_linestatus)
-      ORDER BY l_returnflag NULLS FIRST, l_linestatus NULLS FIRST""",
-
-    "q_range_frame" -> """
-      SELECT o_custkey, o_orderkey,
-             CAST(sum(CAST(o_totalprice AS DECIMAL(18,2)))
-                  OVER (PARTITION BY o_custkey ORDER BY epoch(o_orderdate)
-                        RANGE BETWEEN 2592000 PRECEDING AND CURRENT ROW) AS DOUBLE)
-               AS spend_30d
-      FROM orders WHERE o_custkey <= 100
-      ORDER BY o_custkey, o_orderkey""",
-
-    "q_update_emul" -> """
-      SELECT c_custkey,
-             CASE WHEN c_acctbal < 0 THEN 'DELINQUENT' ELSE c_mktsegment END AS segment,
-             CASE WHEN c_acctbal < 0
-                  THEN CAST(round(CAST(c_acctbal AS DECIMAL(18,2)) * CAST(1.1 AS DECIMAL(18,2)), 2) AS DOUBLE)
-                  ELSE c_acctbal END AS balance
-      FROM customer ORDER BY c_custkey""",
-
-    "q_upsert_emul" -> """
-      WITH incoming AS (
-        SELECT DISTINCT o_custkey + 1000000 AS key, 'BIG_SPENDER' AS val
-        FROM orders WHERE o_totalprice > 450000.0)
-      SELECT c_custkey AS key, c_mktsegment AS val FROM customer c
-      WHERE NOT EXISTS (SELECT 1 FROM incoming i WHERE i.key = c.c_custkey)
-      UNION ALL SELECT key, val FROM incoming
-      ORDER BY key""",
-
-    "q_take_last" -> """
-      SELECT o_orderkey, o_custkey, o_orderdate FROM (
-        SELECT o_orderkey, o_custkey, o_orderdate FROM orders
-        WHERE o_custkey <= 20
-        ORDER BY o_orderdate DESC, o_orderkey DESC LIMIT 5)
-      ORDER BY o_orderdate, o_orderkey""",
-
-    "q_json_array" -> """
-      WITH j AS (SELECT event_id, CAST(props->>'k' AS BIGINT) AS k FROM events
-                 WHERE event_type = 'click'),
-      d AS (SELECT event_id,
-        CASE WHEN k % 7 = 0 THEN NULL
-             WHEN k % 7 = 1 THEN '{"name": null, "tags": null}'
-             ELSE '{"name": "Alpha' || CAST(k AS VARCHAR) ||
-                  '", "tags": ["t' || CAST(k % 4 AS VARCHAR) ||
-                  '", "mid", "e' || CAST(k % 3 AS VARCHAR) || '"]}'
-        END AS doc FROM j)
-      SELECT event_id FROM d
-      WHERE json_extract_string(doc, '$.tags[0]') = 't1'
-        AND json_extract_string(doc, '$.tags[#-1]') = 'e2'
-        AND lower(json_extract_string(doc, '$.name')) LIKE 'alpha%'
-      ORDER BY event_id""",
-
-    "q_json_nulls" -> """
-      WITH j AS (SELECT event_id, CAST(props->>'k' AS BIGINT) AS k FROM events
-                 WHERE event_type = 'click'),
-      d AS (SELECT event_id,
-        CASE WHEN k % 7 = 0 THEN NULL
-             WHEN k % 7 = 1 THEN '{"name": null, "tags": null}'
-             ELSE '{"name": "Alpha' || CAST(k AS VARCHAR) ||
-                  '", "tags": ["t' || CAST(k % 4 AS VARCHAR) ||
-                  '", "mid", "e' || CAST(k % 3 AS VARCHAR) || '"]}'
-        END AS doc FROM j)
-      SELECT event_id,
-             CASE WHEN doc IS NULL THEN 'db_null' ELSE 'json_null' END AS kind
-      FROM d
-      WHERE doc IS NULL OR json_type(doc, '$.tags') = 'NULL'
-      ORDER BY event_id""",
-
-    "q_json_not" -> """
-      WITH j AS (SELECT event_id, CAST(props->>'k' AS BIGINT) AS k FROM events
-                 WHERE event_type = 'click'),
-      d AS (SELECT event_id,
-        CASE WHEN k % 7 = 0 THEN NULL
-             WHEN k % 7 = 1 THEN '{"name": null, "tags": null}'
-             ELSE '{"name": "Alpha' || CAST(k AS VARCHAR) ||
-                  '", "tags": ["t' || CAST(k % 4 AS VARCHAR) ||
-                  '", "mid", "e' || CAST(k % 3 AS VARCHAR) || '"]}'
-        END AS doc FROM j)
-      SELECT event_id FROM d
-      WHERE NOT starts_with(json_extract_string(doc, '$.name'), 'Alpha1')
-      ORDER BY event_id""",
-
-    "q_json_eq_obj" -> """
-      WITH j AS (SELECT event_id, CAST(props->>'k' AS BIGINT) AS k FROM events
-                 WHERE event_type = 'click'),
-      d AS (SELECT event_id,
-        CASE WHEN k % 7 = 0 THEN NULL
-             WHEN k % 7 = 1 THEN '{"name": null, "tags": null}'
-             ELSE '{"name": "Alpha' || CAST(k AS VARCHAR) ||
-                  '", "tags": ["t' || CAST(k % 4 AS VARCHAR) ||
-                  '", "mid", "e' || CAST(k % 3 AS VARCHAR) || '"]}'
-        END AS doc FROM j)
-      SELECT event_id FROM d
-      WHERE json_extract(doc, '$.tags') = '["t1","mid","e2"]'
-      ORDER BY event_id""",
-
-    "q_aggregate_take" -> """
-      SELECT count(*) AS _count_all,
-             min(o_totalprice) AS _min_o_totalprice,
-             max(o_totalprice) AS _max_o_totalprice
-      FROM (SELECT o_totalprice FROM orders WHERE o_orderstatus = 'O'
-            ORDER BY o_totalprice DESC, o_orderkey LIMIT 100 OFFSET 10)""",
-
-    "q_group_having_typed" -> """
-      SELECT o_custkey, count(*) AS _count_all FROM orders
-      GROUP BY o_custkey
-      HAVING count(o_orderkey) >= 12 AND max(o_totalprice) < 450000.0
-         AND o_custkey <= 1400
-      ORDER BY o_custkey""",
-
-    "q_include_filtered" -> """
-      WITH hv AS (
-        SELECT o_custkey, o_orderkey, o_totalprice, o_orderdate,
-               row_number() OVER (PARTITION BY o_custkey
-                  ORDER BY o_orderdate DESC, o_orderkey DESC) AS ord_rank,
-               count(*) OVER (PARTITION BY o_custkey) AS n_highvalue
-        FROM orders WHERE o_totalprice > 100000.0)
-      SELECT c.c_custkey, h.n_highvalue, h.ord_rank,
-             h.o_orderkey, h.o_totalprice, h.o_orderdate
-      FROM customer c JOIN hv h ON h.o_custkey = c.c_custkey
-      WHERE h.ord_rank <= 3
-      ORDER BY c_custkey, ord_rank""",
-
-    "q_nested_create" -> """
-      SELECT c_custkey AS id, c_name AS name,
-             'ev-' || CAST(c_custkey AS VARCHAR) AS event_id,
-             CASE WHEN c_acctbal < 0 THEN 'neg' ELSE 'pos' END AS note,
-             c_mktsegment AS tag
-      FROM customer WHERE c_custkey <= 100 ORDER BY id""",
-
-    "q_update_nested" -> """
-      SELECT c_custkey AS id, c_name AS name,
-             CASE WHEN c_custkey <= 30 THEN 'synced' ELSE 'new' END AS status,
-             CASE WHEN c_custkey <= 30
-                  THEN 'au-' || CAST(c_custkey AS VARCHAR) END AS audit_id,
-             CASE WHEN c_custkey <= 30 THEN c_mktsegment END AS seg
-      FROM customer WHERE c_custkey <= 60 ORDER BY id""",
-
-    "q_text_stats" -> """
-      SELECT doc_id,
-             CASE WHEN len(regexp_replace(text, '^\s+|\s+$', '', 'g')) = 0 THEN 0
-                  ELSE len(regexp_split_to_array(regexp_replace(text, '^\s+|\s+$', '', 'g'), '\s+')) END AS n_tokens,
-             len(list_filter(
-               list_filter(regexp_split_to_array(lower(trim(text)), '[^a-z0-9]+'), x -> len(x) > 0),
-               x -> x IN ('the','a','and','of','to','in','is'))) AS n_stopwords,
-             n_chars
-      FROM documents ORDER BY doc_id""",
-
-    "q_lang_dist" -> """
-      SELECT lang, count(*) AS n FROM documents
-      GROUP BY lang ORDER BY n DESC, lang""",
-
-    // the langId heuristic replayed in SQL: CJK probe, then argmax of
-    // marker counts over the sorted profiles (de,en,es,fr) — the CASE
-    // cascade "cK >= every later count" picks the FIRST maximum, exactly
-    // the kernel's tie rule; all-zero → 'und'
-    "q_lang_id_trained" -> langIdTrainedOracle,
-
-    "q_lang_id" -> """
-      WITH t AS (
-        SELECT doc_id, text,
-               list_filter(regexp_split_to_array(lower(trim(text)), '[^a-z0-9]+'),
-                 x -> len(x) > 0) AS toks
-        FROM documents
-      ), s AS (
-        SELECT doc_id, text,
-          len(list_filter(toks, x -> x IN ('der','die','das','und','ist','nicht','ein','mit','auf','sich'))) AS c_de,
-          len(list_filter(toks, x -> x IN ('the','and','of','to','in','is','that','for','with','are'))) AS c_en,
-          len(list_filter(toks, x -> x IN ('el','los','las','una','es','que','para','con','por','del'))) AS c_es,
-          len(list_filter(toks, x -> x IN ('le','la','les','des','une','est','dans','pour','que','sur'))) AS c_fr
-        FROM t
-      )
-      SELECT doc_id,
-        CASE WHEN regexp_matches(text, '[\x{4e00}-\x{9fff}]') THEN 'zh'
-             WHEN greatest(c_de, c_en, c_es, c_fr) = 0 THEN 'und'
-             WHEN c_de >= c_en AND c_de >= c_es AND c_de >= c_fr THEN 'de'
-             WHEN c_en >= c_es AND c_en >= c_fr THEN 'en'
-             WHEN c_es >= c_fr THEN 'es'
-             ELSE 'fr' END AS lang_pred
-      FROM s ORDER BY doc_id""",
-
-    // portable fingerprints: md5 over the identical canonical form and
-    // shingle windows the Spark side hashes (hex strings are ASCII, so
-    // the lexicographic winnow min agrees engine-to-engine)
-    "q_fingerprint" -> """
-      WITH t AS (
-        SELECT doc_id,
-               list_filter(regexp_split_to_array(lower(trim(text)), '[^a-z0-9]+'),
-                 x -> len(x) > 0) AS toks
-        FROM documents
-      )
-      SELECT doc_id,
-             md5(array_to_string(toks, ' ')) AS fp_md5,
-             CASE WHEN len(toks) < 5 THEN md5(array_to_string(toks, ' '))
-                  ELSE list_min(list_transform(generate_series(0, len(toks) - 5),
-                    i -> md5(array_to_string(toks[i+1:i+5], ' ')))) END AS winnow_md5
-      FROM t ORDER BY doc_id""",
-
-    // the curation report replayed as SQL arithmetic: quality algebra
-    // mirrored term-for-term (charStats classes are exact set differences
-    // on this ASCII corpus; addition order matches the Spark expression
-    // parenthesis-for-parenthesis), exact-dedup survivors = distinct
-    // canonical texts, near-dedup (threshold 1.0 ⇒ set equality) =
-    // distinct 3-shingle sets; repetition/lang gates pass everything
-    // under this config (maxDupGramFraction = 1.0, allowedLangs = all)
-    "q_curation" -> """
-      WITH t AS (
-        SELECT doc_id, text,
-          list_filter(regexp_split_to_array(lower(trim(text)), '[^a-z0-9]+'),
-            x -> len(x) > 0) AS toks,
-          CASE WHEN len(regexp_replace(text, '^\s+|\s+$', '', 'g')) = 0 THEN 0
-               ELSE len(regexp_split_to_array(regexp_replace(text, '^\s+|\s+$', '', 'g'), '\s+')) END AS n_tok
-        FROM documents
-      ), c AS (
-        SELECT doc_id, toks, n_tok,
-          len(text) AS n_chars,
-          len(regexp_replace(text, '[^a-zA-Z]', '', 'g')) AS n_let,
-          len(regexp_replace(text, '[^0-9]', '', 'g')) AS n_dig,
-          len(text) - len(regexp_replace(text, '[ \t\n\f\r]', '', 'g')) AS n_ws
-        FROM t
-      ), q AS (
-        SELECT doc_id, toks, n_tok,
-          (CASE WHEN n_tok BETWEEN 10 AND 100000 THEN 1.0
-                WHEN n_tok BETWEEN 3 AND 9 THEN 0.5 ELSE 0.0 END * 0.3
-           + CASE WHEN (CASE WHEN len(toks) = 0 THEN 0.0
-                             ELSE CAST(list_sum(list_transform(toks, x -> len(x))) AS DOUBLE) / len(toks) END)
-                       BETWEEN 2.5 AND 10.0 THEN 1.0 ELSE 0.3 END * 0.2
-           + CASE WHEN (CASE WHEN n_chars = 0 THEN 0.0
-                             ELSE CAST(n_chars - n_let - n_dig - n_ws AS DOUBLE) / n_chars END) < 0.2
-                  THEN 1.0 ELSE 0.0 END * 0.2
-           + CASE WHEN (CASE WHEN n_chars = 0 THEN 0.0
-                             ELSE CAST(n_dig AS DOUBLE) / n_chars END) < 0.3 THEN 1.0 ELSE 0.0 END * 0.1
-           + CASE WHEN (CASE WHEN len(toks) = 0 THEN 0.0
-                             ELSE CAST(len(list_filter(toks, x -> x IN ('the','a','an','and','or','of','to','in','is','are','was','for','on','with','as','by','at','it','this','that','be'))) AS DOUBLE) / len(toks) END)
-                       BETWEEN 0.05 AND 0.7 THEN 1.0 ELSE 0.3 END * 0.2
-          ) AS raw_q
-        FROM c
-      ), g AS (
-        SELECT doc_id,
-          n_tok BETWEEN 5 AND 100000 AS len_ok,
-          round(raw_q, 4) >= 0.4 AS q_ok,
-          array_to_string(toks, ' ') AS canon,
-          CASE WHEN len(toks) < 3 THEN array_to_string(toks, ' ')
-               ELSE array_to_string(list_sort(list_distinct(
-                 list_transform(generate_series(1, len(toks) - 2),
-                   i -> array_to_string(toks[i:i+2], ' ')))), chr(1)) END AS sset
-        FROM q
-      ), agg AS (
-        SELECT CAST(count(*) AS BIGINT) AS total,
-               CAST(count(CASE WHEN len_ok THEN 1 END) AS BIGINT) AS n_len,
-               CAST(count(CASE WHEN len_ok AND q_ok THEN 1 END) AS BIGINT) AS n_q,
-               CAST(count(DISTINCT CASE WHEN len_ok AND q_ok THEN canon END) AS BIGINT) AS n_exact,
-               CAST(count(DISTINCT CASE WHEN len_ok AND q_ok THEN sset END) AS BIGINT) AS n_near
-        FROM g
-      )
-      SELECT gate, kept, dropped FROM (
-        SELECT 'exact_dedup' AS gate, n_exact AS kept, n_q - n_exact AS dropped FROM agg
-        UNION ALL SELECT 'input', total, CAST(0 AS BIGINT) FROM agg
-        UNION ALL SELECT 'lang_gate', n_q, CAST(0 AS BIGINT) FROM agg
-        UNION ALL SELECT 'length_gate', n_len, total - n_len FROM agg
-        UNION ALL SELECT 'near_dedup', n_near, n_exact - n_near FROM agg
-        UNION ALL SELECT 'quality_gate', n_q, n_len - n_q FROM agg
-        UNION ALL SELECT 'repetition_gate', n_q, CAST(0 AS BIGINT) FROM agg
-      ) ORDER BY gate""",
-
-    // the four stage formulations of q_gopher / q_dedup_exact / q_split /
-    // q_shard_budget chained into one CTE pipeline
-    "q_pipeline" -> """
-      WITH wst AS (
-        SELECT doc_id, source, text,
-               regexp_replace(text, '^\s+|\s+$', '', 'g') AS t
-        FROM documents
-      ), stats AS (
-        SELECT doc_id, source, text,
-          CASE WHEN len(t) = 0 THEN CAST(0 AS BIGINT)
-               ELSE CAST(len(regexp_split_to_array(t, '\s+')) AS BIGINT) END AS n_words,
-          regexp_split_to_array(t, '\s+') AS words,
-          list_filter(regexp_split_to_array(lower(trim(text)), '[^a-z0-9]+'),
-            x -> len(x) > 0) AS toks
-        FROM wst
-      ), keepers AS (
-        SELECT doc_id, source, text, n_words FROM stats
-        WHERE n_words BETWEEN 40 AND 100000
-          AND (CASE WHEN n_words = 0 THEN 0.0
-               ELSE CAST(list_sum(list_transform(words, w -> len(w))) AS DOUBLE)
-                    / CAST(n_words AS DOUBLE) END) BETWEEN 3.0 AND 10.0
-          AND (CASE WHEN n_words = 0 THEN 0.0
-               ELSE ((len(text) - len(replace(text, '#', ''))) / 1
-                     + (len(text) - len(replace(text, '...', ''))) / 3)
-                    / CAST(n_words AS DOUBLE) END) <= 0.1
-          AND (CASE WHEN n_words = 0 THEN 0.0
-               ELSE CAST(len(list_filter(words, w -> regexp_matches(w, '[a-zA-Z]'))) AS DOUBLE)
-                    / CAST(n_words AS DOUBLE) END) >= 0.8
-          AND len(list_intersect(toks,
-            ['the','be','to','of','and','that','have','with'])) >= 1
-          AND CAST(len(list_filter(string_split(text, chr(10)),
-                l -> regexp_matches(ltrim(l), '^[-*•]'))) AS DOUBLE)
-              / CAST(len(string_split(text, chr(10))) AS DOUBLE) <= 0.9
-          AND CAST(len(list_filter(string_split(text, chr(10)),
-                l -> regexp_matches(rtrim(l), '(\.\.\.|…)$'))) AS DOUBLE)
-              / CAST(len(string_split(text, chr(10))) AS DOUBLE) <= 0.3
-      ), dedup AS (
-        SELECT doc_id, source, text FROM (
-          SELECT k.*, row_number() OVER (PARTITION BY md5(text)
-            ORDER BY doc_id) AS rn FROM keepers k) WHERE rn = 1
-      ), assigned AS (
-        SELECT doc_id, source,
-          CASE WHEN substr(md5(text), 1, 8) < 'cccccccc' THEN 'train'
-               WHEN substr(md5(text), 1, 8) < 'e6666666' THEN 'val'
-               ELSE 'test' END AS split,
-          CAST(CASE WHEN len(regexp_replace(text, '^\s+|\s+$', '', 'g')) = 0 THEN 0
-               ELSE len(regexp_split_to_array(
-                 regexp_replace(text, '^\s+|\s+$', '', 'g'), '\s+'))
-               END AS BIGINT) AS n_tok
-        FROM dedup
-      )
-      SELECT doc_id, source, split, n_tok,
-        CAST((sum(n_tok) OVER (ORDER BY source, doc_id
-           ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW) - n_tok) // 3000
-          AS BIGINT) AS shard
-      FROM assigned WHERE split = 'train'
-      UNION ALL
-      SELECT doc_id, source, split, n_tok, CAST(-1 AS BIGINT) AS shard
-      FROM assigned WHERE split <> 'train'
-      ORDER BY doc_id""",
-
-    // DuckDB sum() windows type as HUGEINT — cast the floor-div back
-    "q_shard_budget" -> """
-      WITH t AS (
-        SELECT doc_id, source,
-          CAST(CASE WHEN len(regexp_replace(text, '^\s+|\s+$', '', 'g')) = 0 THEN 0
-               ELSE len(regexp_split_to_array(regexp_replace(text, '^\s+|\s+$', '', 'g'), '\s+')) END AS BIGINT) AS n_tok
-        FROM documents
-      )
-      SELECT doc_id, source, n_tok,
-        CAST((sum(n_tok) OVER (ORDER BY source, doc_id
-           ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW) - n_tok) // 5000 AS BIGINT) AS shard
-      FROM t ORDER BY doc_id""",
-
-    // mirrors QualityRules.gopherStats expression for expression: the
-    // substring counts use the portable (len - len(replace))/len(t)
-    // form, every ratio divides the same exact-integer doubles
-    "q_gopher" -> """
-      WITH t AS (
-        SELECT doc_id, text,
-          CASE WHEN len(regexp_replace(text, '^\s+|\s+$', '', 'g')) = 0 THEN CAST(0 AS BIGINT)
-               ELSE CAST(len(regexp_split_to_array(regexp_replace(text, '^\s+|\s+$', '', 'g'), '\s+')) AS BIGINT) END AS n_words,
-          regexp_split_to_array(regexp_replace(text, '^\s+|\s+$', '', 'g'), '\s+') AS words,
-          list_filter(regexp_split_to_array(lower(trim(text)), '[^a-z0-9]+'),
-            x -> len(x) > 0) AS toks
-        FROM documents
-      ), s AS (
-        SELECT doc_id, n_words,
-          CASE WHEN n_words = 0 THEN 0.0
-               ELSE CAST(list_sum(list_transform(words, w -> len(w))) AS DOUBLE)
-                    / CAST(n_words AS DOUBLE) END AS mean_word_len,
-          CASE WHEN n_words = 0 THEN 0.0
-               ELSE ((len(text) - len(replace(text, '#', ''))) / 1
-                     + (len(text) - len(replace(text, '...', ''))) / 3)
-                    / CAST(n_words AS DOUBLE) END AS symbol_ratio,
-          CASE WHEN n_words = 0 THEN 0.0
-               ELSE CAST(len(list_filter(words, w -> regexp_matches(w, '[a-zA-Z]'))) AS DOUBLE)
-                    / CAST(n_words AS DOUBLE) END AS alpha_frac,
-          CAST(len(list_intersect(toks,
-            ['the','be','to','of','and','that','have','with'])) AS BIGINT) AS sw_hits,
-          CAST(len(list_filter(string_split(text, chr(10)),
-            l -> regexp_matches(ltrim(l), '^[-*•]'))) AS DOUBLE)
-            / CAST(len(string_split(text, chr(10))) AS DOUBLE) AS bullet_frac,
-          CAST(len(list_filter(string_split(text, chr(10)),
-            l -> regexp_matches(rtrim(l), '(\.\.\.|…)$'))) AS DOUBLE)
-            / CAST(len(string_split(text, chr(10))) AS DOUBLE) AS ellipsis_frac
-        FROM t
-      )
-      SELECT doc_id, n_words,
-             round(mean_word_len, 6) AS mean_word_len,
-             round(symbol_ratio, 6) AS symbol_ratio,
-             round(alpha_frac, 6) AS alpha_frac,
-             sw_hits,
-             (n_words BETWEEN 40 AND 100000
-              AND mean_word_len BETWEEN 3.0 AND 10.0
-              AND symbol_ratio <= 0.1
-              AND alpha_frac >= 0.8
-              AND sw_hits >= 1
-              AND bullet_frac <= 0.9
-              AND ellipsis_frac <= 0.3) AS keep
-      FROM s ORDER BY doc_id""",
-
-    // the vocabulary replayed: same (count desc, token asc) top-20 rank
-    // ids, same 0-for-OOV encoding, ids space-joined in token order
-    "q_vocab_encode" -> """
-      WITH toks AS (
-        SELECT doc_id, unnest(string_split(text, ' ')) AS t,
-               generate_subscripts(string_split(text, ' '), 1) AS pos
-        FROM documents
-      ), vocab AS (
-        SELECT t AS tok,
-               row_number() OVER (ORDER BY count(*) DESC, t ASC) AS id
-        FROM toks GROUP BY t
-        QUALIFY id <= 20
-      ), enc AS (
-        SELECT toks.doc_id, toks.pos, coalesce(v.id, 0) AS tid
-        FROM toks LEFT JOIN vocab v ON v.tok = toks.t
-      )
-      SELECT doc_id,
-             CAST(count(*) AS BIGINT) AS n_tok,
-             string_agg(CAST(tid AS VARCHAR), ' ' ORDER BY pos) AS ids_str
-      FROM enc GROUP BY doc_id ORDER BY doc_id""",
-
-    // large-vocab twin: the deterministic token diversification (suffix
-    // (doc_id*31 + 0-based-pos) mod 997 — generate_subscripts is 1-based,
-    // hence pos-1), then the identical rank-5000 vocabulary and encoding
-    "q_vocab_encode_large" -> """
-      WITH toks0 AS (
-        SELECT doc_id, unnest(string_split(text, ' ')) AS t0,
-               generate_subscripts(string_split(text, ' '), 1) AS pos
-        FROM documents
-      ), toks AS (
-        SELECT doc_id, pos,
-               t0 || '_' || CAST((doc_id*31 + pos - 1) % 997 AS VARCHAR) AS t
-        FROM toks0
-      ), vocab AS (
-        SELECT t AS tok,
-               row_number() OVER (ORDER BY count(*) DESC, t ASC) AS id
-        FROM toks GROUP BY t
-        QUALIFY id <= 5000
-      ), enc AS (
-        SELECT toks.doc_id, toks.pos, coalesce(v.id, 0) AS tid
-        FROM toks LEFT JOIN vocab v ON v.tok = toks.t
-      )
-      SELECT doc_id,
-             CAST(count(*) AS BIGINT) AS n_tok,
-             string_agg(CAST(tid AS VARCHAR), ' ' ORDER BY pos) AS ids_str
-      FROM enc GROUP BY doc_id ORDER BY doc_id""",
-
-    // the planted-repetition fixture rebuilt (8-word lines + the first
-    // third re-appended), then the same first-occurrence filter —
-    // DuckDB's lambda index is 1-based where Spark's is 0-based, hence
-    // `list_position = i` against Spark's `array_position = i + 1`
-    "q_line_dedup" -> """
-      WITH base AS (
-        SELECT doc_id, string_split(text, ' ') AS w FROM documents
-      ), ls AS (
-        SELECT doc_id,
-          list_transform(range(0, CAST(ceil(len(w) / 8.0) AS INT)), i ->
-            array_to_string(w[i*8+1:i*8+8], ' ')) AS ls
-        FROM base
-      ), t AS (
-        SELECT doc_id, string_split(array_to_string(
-          list_concat(ls, ls[1:CAST(ceil(len(ls) / 3.0) AS INT)]), chr(10)),
-          chr(10)) AS lines
-        FROM ls
-      )
-      SELECT doc_id,
-        CAST(len(lines) AS BIGINT) AS n_lines,
-        CAST(len(list_filter(lines, (l, i) -> list_position(lines, l) = i))
-             AS BIGINT) AS n_unique,
-        array_to_string(list_filter(lines,
-          (l, i) -> list_position(lines, l) = i), chr(10)) AS text_dedup
-      FROM t ORDER BY doc_id""",
-
-    // the lined fixture rebuilt with the same 8-word slicing and %3
-    // suffix cycle, then the same line rules: whitespace-trim, terminal
-    // punctuation, >=3 words, no banned fragment
-    "q_c4_clean" -> """
-      WITH base AS (
-        SELECT doc_id, string_split(text, ' ') AS w FROM documents
-      ), lined AS (
-        SELECT doc_id,
-          array_to_string(list_transform(
-            range(0, CAST(ceil(len(w) / 8.0) AS INT)), i ->
-              concat(array_to_string(w[i*8+1:i*8+8], ' '),
-                CASE WHEN (doc_id + i) % 3 = 0 THEN '.'
-                     WHEN (doc_id + i) % 3 = 1 THEN ''
-                     ELSE ' {' END)), chr(10)) AS text2
-        FROM base
-      ), cleaned AS (
-        SELECT doc_id,
-          CAST(len(string_split(text2, chr(10))) AS BIGINT) AS n_lines,
-          list_filter(string_split(text2, chr(10)), l ->
-            regexp_matches(regexp_replace(l, '^[ \t\r]+|[ \t\r]+$', '', 'g'),
-                           '[.!?"]$')
-            AND len(list_filter(string_split(
-                  regexp_replace(l, '^[ \t\r]+|[ \t\r]+$', '', 'g'), ' '),
-                  x -> len(x) > 0)) >= 3
-            AND NOT contains(lower(l), 'lorem ipsum')
-            AND NOT contains(l, '{')
-            AND NOT contains(lower(l), 'javascript')) AS kept
-        FROM lined
-      )
-      SELECT doc_id, n_lines,
-             CAST(len(kept) AS BIGINT) AS n_kept,
-             array_to_string(kept, chr(10)) AS text_clean
-      FROM cleaned WHERE len(kept) >= 1
-      ORDER BY doc_id""",
-
-    "q_oov" -> """
-      WITH toks AS (
-        SELECT doc_id, unnest(list_filter(
-          regexp_split_to_array(lower(trim(text)), '[^a-z0-9]+'),
-          x -> len(x) > 0)) AS t
-        FROM documents
-      ), vocab AS (
-        SELECT t FROM (
-          SELECT t, count(*) AS c FROM toks GROUP BY t
-          ORDER BY c DESC, t ASC LIMIT 20)
-      ), per AS (
-        SELECT k.doc_id,
-          CAST(count(*) AS BIGINT) AS n_tokens,
-          CAST(count(CASE WHEN v.t IS NULL THEN 1 END) AS BIGINT) AS oov
-        FROM toks k LEFT JOIN vocab v USING (t)
-        GROUP BY k.doc_id
-      )
-      SELECT doc_id, n_tokens, oov,
-             round(oov / CAST(n_tokens AS DOUBLE), 6) AS oov_rate
-      FROM per ORDER BY doc_id""",
-
-    "q_sharding" -> """
-      SELECT doc_id, source,
-             CAST((row_number() OVER (ORDER BY source, doc_id) - 1) // 100
-                  AS BIGINT) AS shard
-      FROM documents ORDER BY doc_id""",
-
-    "q_packing" -> """
-      WITH o AS (
-        SELECT doc_id, source,
-               COALESCE(sum(n_chars) OVER (PARTITION BY source ORDER BY doc_id
-                 ROWS BETWEEN UNBOUNDED PRECEDING AND 1 PRECEDING), 0) AS off
-        FROM documents)
-      SELECT doc_id, source,
-             CAST(off // 4096 AS BIGINT) AS chunk,
-             CAST(off % 4096 AS BIGINT) AS chunk_offset
-      FROM o ORDER BY doc_id""",
-
-    "q_mixture" -> """
-      WITH c AS (
-        SELECT doc_id, source,
-          CASE source
-            WHEN 'src0' THEN 2 + CASE WHEN substr(md5(text),1,8) < '80000000'
-                                      THEN 1 ELSE 0 END
-            WHEN 'src1' THEN 1
-            ELSE CASE WHEN substr(md5(text),1,8) < '80000000' THEN 1 ELSE 0 END
-          END AS copies
-        FROM documents WHERE doc_id < 100)
-      SELECT doc_id, source, CAST(unnest(range(1, copies + 1)) AS BIGINT) AS epoch
-      FROM c WHERE copies > 0
-      ORDER BY doc_id, epoch""",
-
-    "q_sample" -> """
-      SELECT doc_id, source FROM documents
-      WHERE substr(md5(text), 1, 8) < '40000000'
-      ORDER BY doc_id""",
-
-    "q_sample_stratified" -> """
-      SELECT lang, count(*) AS n FROM documents
-      WHERE substr(md5(text), 1, 8) <
-        CASE lang WHEN 'en' THEN '19999999' WHEN 'de' THEN '80000000'
-                  ELSE 'g' END
-      GROUP BY lang ORDER BY lang""",
-
-    "q_temperature" -> """
-      WITH c AS (
-        SELECT source, CAST(count(*) AS BIGINT) AS n
-        FROM documents GROUP BY source
-      ), t AS (
-        SELECT CAST(sum(n) AS DOUBLE) AS total FROM c
-      ), p AS (
-        SELECT c.source, c.n, pow(c.n / t.total, 0.5) AS pn, t.total
-        FROM c, t
-      ), ps AS (
-        SELECT sum(pn) AS powsum FROM p
-      )
-      SELECT p.source, p.n,
-             round(pn / ps.powsum * p.total / p.n, 6) AS epochs
-      FROM p, ps ORDER BY source""",
-
-    "q_source_quota" -> """
-      SELECT doc_id, source, n_chars FROM (
-        SELECT doc_id, source, n_chars,
-               row_number() OVER (PARTITION BY source
-                 ORDER BY n_chars DESC, doc_id) AS rk
-        FROM documents) t
-      WHERE rk <= 15 ORDER BY doc_id""",
-
-    "q_split" -> """
-      SELECT doc_id, source,
-             CASE WHEN substr(md5(text), 1, 8) < 'cccccccc' THEN 'train'
-                  WHEN substr(md5(text), 1, 8) < 'e6666666' THEN 'val'
-                  ELSE 'test' END AS split
-      FROM documents ORDER BY doc_id""",
-
-    // cluster structure replayed symbolically (the planted id shifts, as
-    // in q_dup_clusters), then the same md5 threshold CASE keyed on the
-    // representative's string rendering
-    "q_leakage_split" -> """
-      WITH d AS (SELECT doc_id FROM documents WHERE doc_id % 4 = 0),
-      all_docs AS (
-        SELECT doc_id FROM documents
-        UNION ALL SELECT doc_id + 10000 FROM d
-        UNION ALL SELECT doc_id + 20000 FROM d),
-      cl AS (
-        SELECT doc_id,
-               CASE WHEN doc_id >= 20000 THEN doc_id - 20000
-                    WHEN doc_id >= 10000 THEN doc_id - 10000
-                    ELSE doc_id END AS cluster
-        FROM all_docs)
-      SELECT doc_id, cluster,
-             CASE WHEN substr(md5(CAST(cluster AS VARCHAR)), 1, 8)
-                       < 'cccccccc' THEN 'train'
-                  WHEN substr(md5(CAST(cluster AS VARCHAR)), 1, 8)
-                       < 'e6666666' THEN 'val'
-                  ELSE 'test' END AS split
-      FROM cl ORDER BY doc_id""",
-
-    // Attribution: same second-truncated band, same integer credit split
-    // with the remainder on the (tts DESC, tid DESC) leader.
-    "q_attribution" -> """
-      WITH conv AS (
-        SELECT event_id AS cid, user_id,
-               epoch_us(CAST(ts AS TIMESTAMP)) AS cus
-        FROM events WHERE event_type = 'purchase'),
-      touch AS (
-        SELECT event_id AS tid, user_id,
-               epoch_us(CAST(ts AS TIMESTAMP)) AS tus, ts AS tts
-        FROM events WHERE event_type IN ('view', 'click')),
-      pairs AS (
-        -- microsecond band: a touch even 1 µs AFTER the conversion gets
-        -- no credit (second-truncation used to admit up to ~1 s after)
-        SELECT c.cid, t.tid, t.tts
-        FROM conv c JOIN touch t ON t.user_id = c.user_id
-         AND t.tus >= c.cus - 3600000000 AND t.tus <= c.cus),
-      credit AS (
-        SELECT cid, tid,
-               1000 // (count(*) OVER (PARTITION BY cid))
-               + CASE WHEN row_number() OVER (PARTITION BY cid
-                        ORDER BY tts DESC, tid DESC) = 1
-                      THEN 1000 % (count(*) OVER (PARTITION BY cid))
-                      ELSE 0 END AS c
-        FROM pairs)
-      SELECT tid AS touch_id, CAST(sum(c) AS BIGINT) AS credit_milli
-      FROM credit GROUP BY tid ORDER BY touch_id""",
-
-    // Retention: same integer week division, same first-event cohorts.
-    "q_retention" -> """
-      WITH p AS (
-        SELECT user_id AS u, epoch_us(ts) // 604800000000 AS w
-        FROM events),
-      c AS (SELECT u, min(w) AS cohort FROM p GROUP BY u)
-      SELECT c.cohort, p.w - c.cohort AS period_offset,
-             CAST(count(DISTINCT p.u) AS BIGINT) AS n_users
-      FROM p JOIN c ON p.u = c.u
-      GROUP BY c.cohort, period_offset
-      ORDER BY cohort, period_offset""",
-
-    // Salted join: the oracle is the PLAIN join — equality proves the
-    // salt-and-replicate rewrite is output-invariant.
-    "q_salted_join" -> """
-      SELECT s.s_nationkey, CAST(count(*) AS BIGINT) AS n,
-             CAST(sum(CAST(l.l_extendedprice AS DECIMAL(18,2))
-                      * (CAST(1 AS DECIMAL(18,2))
-                         - CAST(l.l_discount AS DECIMAL(18,2)))) AS DOUBLE)
-               AS revenue
-      FROM lineitem l JOIN supplier s ON l.l_suppkey = s.s_suppkey
-      GROUP BY s.s_nationkey ORDER BY s.s_nationkey""",
-
-    // Salted two-phase collect: the oracle is the plain grouped list,
-    // sorted — content equality modulo the salt routing.
-    "q_salted_agg" -> """
-      SELECT l_returnflag, CAST(pos - 1 AS BIGINT) AS pos,
-             CAST(qty AS DOUBLE) AS qty
-      FROM (
-        SELECT l_returnflag, unnest(list_sort(list(l_quantity))) AS qty,
-               generate_subscripts(list_sort(list(l_quantity)), 1) AS pos
-        FROM lineitem WHERE l_orderkey < 400
-        GROUP BY l_returnflag)
-      ORDER BY l_returnflag, pos""",
-
-    // PIT join: the oracle runs the honest half-open interval join
-    // against the same SCD2 CTEs — zero-width versions self-exclude
-    // under `ts < valid_to`, matching the as-of tiebreak.
-    "q_pit_join" -> """
-      WITH ordered AS (
-        SELECT user_id, event_type, ts, event_id,
-               lag(event_type) OVER (PARTITION BY user_id
-                                     ORDER BY ts, event_id) AS prev
-        FROM events),
-      changes AS (
-        SELECT user_id, event_type, ts, event_id FROM ordered
-        WHERE prev IS NULL OR prev <> event_type),
-      hist AS (
-        SELECT user_id,
-               CAST(row_number() OVER w AS BIGINT) AS version,
-               event_type AS state, ts AS valid_from,
-               lead(ts) OVER w AS valid_to
-        FROM changes
-        WINDOW w AS (PARTITION BY user_id ORDER BY ts, event_id)),
-      facts AS (
-        SELECT event_id, user_id, ts FROM events
-        WHERE event_type = 'purchase')
-      SELECT f.event_id, f.user_id, h.state, h.version
-      FROM facts f LEFT JOIN hist h
-        ON h.user_id = f.user_id AND h.valid_from <= f.ts
-       AND (h.valid_to IS NULL OR f.ts < h.valid_to)
-      ORDER BY f.event_id""",
-
-    // Quantile audit: DuckDB's quantile_cont is the same continuous
-    // interpolation as Spark's percentile; equal-length unnests zip.
-    "q_quantile_audit" -> """
-      SELECT event_type, p, q FROM (
-        SELECT event_type,
-               unnest([0.25, 0.5, 0.75, 0.95]) AS p,
-               unnest(quantile_cont(value, [0.25, 0.5, 0.75, 0.95])) AS q
-        FROM events GROUP BY event_type)
-      ORDER BY event_type, p""",
-
-    // Fuzzy join: same corruption, same first-token block, same length
-    // band, same Levenshtein verify (identical semantics both engines).
-    "q_fuzzy_join" -> """
-      WITH names AS (SELECT DISTINCT p_name FROM part),
-      d AS (SELECT DISTINCT concat(substr(p_name, 1, length(p_name) - 3),
-                                   substr(p_name, length(p_name) - 1)) AS dirty
-            FROM names)
-      SELECT d.dirty AS left_val, n.p_name AS right_val,
-             CAST(levenshtein(d.dirty, n.p_name) AS BIGINT) AS dist
-      FROM d JOIN names n
-        ON split_part(d.dirty, ' ', 1) = split_part(n.p_name, ' ', 1)
-      WHERE abs(length(d.dirty) - length(n.p_name)) <= 1
-        AND levenshtein(d.dirty, n.p_name) = 1
-      ORDER BY left_val, right_val""",
-
-    // PSI drift: same fixed-width bins, add-one smoothing over the bin
-    // union, the ln() and divisions mirrored shape-for-shape, round 6.
-    "q_drift" -> """
-      WITH a AS (
-        SELECT CAST(floor(value / 50.0) AS BIGINT) AS bin,
-               CAST(count(*) AS BIGINT) AS n_a
-        FROM events WHERE event_type = 'purchase' AND value IS NOT NULL GROUP BY 1
-      ), b AS (
-        SELECT CAST(floor(value / 50.0) AS BIGINT) AS bin,
-               CAST(count(*) AS BIGINT) AS n_b
-        FROM events WHERE event_type = 'click' AND value IS NOT NULL GROUP BY 1
-      ), j AS (
-        SELECT coalesce(a.bin, b.bin) AS bin,
-               coalesce(n_a, 0) AS n_a, coalesce(n_b, 0) AS n_b
-        FROM a FULL OUTER JOIN b ON a.bin = b.bin
-      ), t AS (
-        SELECT CAST(sum(n_a) AS BIGINT) AS ta, CAST(sum(n_b) AS BIGINT) AS tb,
-               CAST(count(*) AS BIGINT) AS k
-        FROM j
-      )
-      SELECT bin, n_a, n_b,
-             round(((n_a + 1.0) / (ta + k) - (n_b + 1.0) / (tb + k))
-                   * ln(((n_a + 1.0) / (ta + k)) / ((n_b + 1.0) / (tb + k))),
-                   6) AS psi
-      FROM j CROSS JOIN t ORDER BY bin""",
-
-    // Quality classifier: same tokenization, same md5 bucket fold, the
-    // milliweight model regenerated by the same integer formula; the one
-    // division and the sigmoid mirrored shape-for-shape, rounded to 6
-    // (the BM25/DSIR libm-parity contract).
-    "q_quality_classifier" -> """
-      WITH toks AS (
-        SELECT doc_id, unnest(list_filter(
-          regexp_split_to_array(lower(trim(text)), '[^a-z0-9]+'),
-          x -> len(x) > 0)) AS t
-        FROM documents
-      ), feats AS (
-        SELECT doc_id,
-               CAST(CAST(concat('0x', substr(md5(t), 1, 8)) AS UBIGINT)
-                    % 4096 AS BIGINT) AS b
-        FROM toks
-      ), agg AS (
-        SELECT doc_id,
-               CAST(count(*) AS BIGINT) AS n_tokens,
-               CAST(sum((b * 37 + 11) % 2001 - 1000) AS BIGINT) AS milli
-        FROM feats GROUP BY doc_id
-      )
-      SELECT doc_id, n_tokens,
-             round(1.0 / (1.0 + exp(-(CAST(milli AS DOUBLE)
-                                      / (1000.0 * n_tokens)))), 6) AS edu_score,
-             (milli >= 0) AS keep
-      FROM agg ORDER BY doc_id""",
-
-    // DSIR: same bigrams (space split + lead), same md5 bucket fold, the
-    // ln() terms mirrored parenthesis-for-parenthesis, mean rounded to 6
-    // decimals (the BM25 float-parity contract).
-    "q_dsir" -> """
-      WITH toks AS (
-        SELECT doc_id, lang, string_split(text, ' ') AS w FROM documents
-        WHERE len(string_split(text, ' ')) >= 2
-      ), words AS (
-        SELECT doc_id, lang, unnest(w) AS word,
-               generate_subscripts(w, 1) AS idx
-        FROM toks
-      ), grams AS (
-        SELECT doc_id, lang,
-               word || ' ' ||
-               lead(word, 1) OVER (PARTITION BY doc_id ORDER BY idx) AS g
-        FROM words
-      ), g2 AS (
-        SELECT doc_id,
-               (lang = 'en') AS tgt,
-               CAST(concat('0x', substr(md5(g), 1, 8)) AS UBIGINT) % 1024 AS b
-        FROM grams WHERE g IS NOT NULL
-      ), lm AS (
-        SELECT b, CAST(sum(CASE WHEN tgt THEN 1 ELSE 0 END) AS BIGINT) AS ct,
-               CAST(count(*) AS BIGINT) AS call
-        FROM g2 GROUP BY b
-      ), tot AS (
-        SELECT CAST(sum(CASE WHEN tgt THEN 1 ELSE 0 END) AS BIGINT) AS t_all,
-               CAST(count(*) AS BIGINT) AS n_all
-        FROM g2
-      )
-      SELECT g2.doc_id,
-             CAST(count(*) AS BIGINT) AS n_grams,
-             round(sum( ln((lm.ct + 1) / (tot.t_all + 1024.0))
-                      - ln((lm.call + 1) / (tot.n_all + 1024.0)) )
-                   / count(*), 6) AS dsir
-      FROM g2 JOIN lm USING (b) CROSS JOIN tot
-      GROUP BY g2.doc_id ORDER BY g2.doc_id""",
-
-    // the curriculum replayed: the q_perplexity cross-entropy CTEs, then
-    // the running token sum over (ce, doc_id) order integer-div'd by the
-    // 5000-token stage budget
-    "q_curriculum" -> """
-      WITH words AS (
-        SELECT doc_id, source IN ('src0', 'src1') AS ref,
-               CAST(concat('0x', substr(md5(w), 1, 8)) AS UBIGINT) % 4096 AS b
-        FROM (SELECT doc_id, source, unnest(string_split(text, ' ')) AS w
-              FROM documents WHERE len(string_split(text, ' ')) >= 1)
-      ), lm AS (
-        SELECT b, CAST(sum(CASE WHEN ref THEN 1 ELSE 0 END) AS BIGINT) AS cnt
-        FROM words GROUP BY b
-      ), tot AS (
-        SELECT CAST(sum(CASE WHEN ref THEN 1 ELSE 0 END) AS BIGINT) AS t
-        FROM words
-      ), ce AS (
-        SELECT words.doc_id,
-               CAST(count(*) AS BIGINT) AS n_tok,
-               round(-sum(ln((lm.cnt + 1) / (tot.t + 4096.0))) / count(*), 6) AS ce
-        FROM words JOIN lm USING (b) CROSS JOIN tot
-        GROUP BY words.doc_id
-      )
-      SELECT doc_id, n_tok, ce,
-        CAST((sum(n_tok) OVER (ORDER BY ce, doc_id
-           ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW) - n_tok) // 5000
-           AS BIGINT) AS shard
-      FROM ce ORDER BY doc_id""",
-
-    // the unigram-LM cross-entropy replayed: same hashed buckets (md5
-    // 8-hex prefix % 4096), same add-one smoothing, same negated mean
-    "q_perplexity" -> """
-      WITH words AS (
-        SELECT doc_id, source IN ('src0', 'src1') AS ref,
-               CAST(concat('0x', substr(md5(w), 1, 8)) AS UBIGINT) % 4096 AS b
-        FROM (SELECT doc_id, source, unnest(string_split(text, ' ')) AS w
-              FROM documents WHERE len(string_split(text, ' ')) >= 1)
-      ), lm AS (
-        SELECT b, CAST(sum(CASE WHEN ref THEN 1 ELSE 0 END) AS BIGINT) AS cnt
-        FROM words GROUP BY b
-      ), tot AS (
-        SELECT CAST(sum(CASE WHEN ref THEN 1 ELSE 0 END) AS BIGINT) AS t
-        FROM words
-      )
-      SELECT words.doc_id,
-             CAST(count(*) AS BIGINT) AS n_tok,
-             round(-sum(ln((lm.cnt + 1) / (tot.t + 4096.0))) / count(*), 6) AS ce
-      FROM words JOIN lm USING (b) CROSS JOIN tot
-      GROUP BY words.doc_id ORDER BY words.doc_id""",
-
-    "q_dedup_exact" -> """
-      SELECT doc_id, source FROM (
-        SELECT doc_id, source,
-               row_number() OVER (PARTITION BY md5(text) ORDER BY doc_id) AS rn
-        FROM documents) t
-      WHERE rn = 1 ORDER BY doc_id""",
-
-    "q_segment_dedup" -> """
-      WITH toks AS (
-        SELECT doc_id, string_split(text, ' ') AS w FROM documents
-      ), words AS (
-        SELECT doc_id, unnest(w) AS word, generate_subscripts(w, 1) AS idx
-        FROM toks
-      ), segs AS (
-        SELECT doc_id, (idx-1)//8 AS seg_idx,
-               string_agg(word, ' ' ORDER BY idx) AS seg
-        FROM words GROUP BY doc_id, (idx-1)//8
-      ), freq AS (
-        SELECT seg, count(DISTINCT doc_id) AS df FROM segs GROUP BY seg
-      )
-      SELECT s.doc_id,
-             coalesce(string_agg(s.seg, ' ' ORDER BY s.seg_idx)
-                        FILTER (WHERE f.df <= 1), '') AS text,
-             CAST(count(*) FILTER (WHERE f.df > 1) AS BIGINT) AS n_dropped
-      FROM segs s JOIN freq f USING (seg)
-      GROUP BY s.doc_id
-      ORDER BY s.doc_id""",
-
-    "q_decontaminate" -> """
-      WITH toks AS (
-        SELECT doc_id, string_split(text, ' ') AS w FROM documents
-      ), words AS (
-        SELECT doc_id, unnest(w) AS word, generate_subscripts(w, 1) AS idx
-        FROM toks
-      ), grams AS (
-        SELECT doc_id, string_agg(word, ' ' ORDER BY idx2) AS g
-        FROM (SELECT a.doc_id, a.idx AS base, b.idx AS idx2, b.word
-              FROM words a JOIN words b
-                ON a.doc_id = b.doc_id AND b.idx BETWEEN a.idx AND a.idx + 7) t
-        GROUP BY doc_id, base HAVING count(*) = 8
-      ), bgrams AS (
-        SELECT DISTINCT g FROM grams WHERE doc_id % 10 = 0
-      ), cg AS (
-        SELECT DISTINCT doc_id, g FROM grams WHERE doc_id % 10 <> 0
-      )
-      SELECT cg.doc_id, CAST(count(*) AS BIGINT) AS n_hits
-      FROM cg JOIN bgrams USING (g)
-      GROUP BY cg.doc_id HAVING count(*) >= 1
-      ORDER BY cg.doc_id""",
-
-    "q_dedup_incr" -> """
-      SELECT doc_id + 10000 AS new_id, doc_id AS dup_of,
-             CAST(1.0 AS DOUBLE) AS jaccard
-      FROM documents ORDER BY new_id""",
-
-    // same planted-copy determinism, through the PERSISTED sketch table
-    "q_dedup_persist" -> """
-      SELECT doc_id + 10000 AS new_id, doc_id AS dup_of,
-             CAST(1.0 AS DOUBLE) AS jaccard
-      FROM documents WHERE doc_id % 4 = 0 ORDER BY new_id""",
-
-    // and through the STREAM-maintained sketch table (the mid-gate
-    // REQUIREs pin the exactly-once sink/refresh composition)
-    "q_stream_index" -> """
-      SELECT doc_id + 10000 AS new_id, doc_id AS dup_of,
-             CAST(1.0 AS DOUBLE) AS jaccard
-      FROM documents WHERE doc_id % 4 = 0 ORDER BY new_id""",
-
-    // batch-by-batch postings maintenance must land on the SAME scores a
-    // from-scratch token-BM25 over the final corpus computes — the
-    // replay is q_bm25_persist's chain over the unmodified documents
-    "q_stream_bm25" -> """
-      WITH tok AS (
-        SELECT doc_id,
-               list_filter(string_split(text, ' '), x -> x <> '') AS w
-        FROM documents
-      ), t AS (
-        SELECT doc_id,
-               CAST(len(w) AS DOUBLE) AS dl,
-               CAST(len(list_filter(w, x -> x = 'vector')) AS DOUBLE) AS tf0,
-               CAST(len(list_filter(w, x -> x = 'stream')) AS DOUBLE) AS tf1,
-               CAST(len(list_filter(w, x -> x = 'window')) AS DOUBLE) AS tf2
-        FROM tok
-      ), s AS (
-        SELECT CAST(count(*) AS DOUBLE) AS n,
-               CAST(sum(CAST(dl AS BIGINT)) AS DOUBLE)
-                 / CAST(count(*) AS DOUBLE) AS avgdl,
-               CAST(sum(CASE WHEN tf0 > 0 THEN 1 ELSE 0 END) AS DOUBLE) AS df0,
-               CAST(sum(CASE WHEN tf1 > 0 THEN 1 ELSE 0 END) AS DOUBLE) AS df1,
-               CAST(sum(CASE WHEN tf2 > 0 THEN 1 ELSE 0 END) AS DOUBLE) AS df2
-        FROM t)
-      SELECT doc_id,
-             (CASE WHEN tf0 > 0 THEN 1 ELSE 0 END
-              + CASE WHEN tf1 > 0 THEN 1 ELSE 0 END
-              + CASE WHEN tf2 > 0 THEN 1 ELSE 0 END) AS n_terms,
-             round(
-               ln(1.0 + ((s.n - s.df0) + 0.5) / (s.df0 + 0.5))
-                 * ((tf0 * (1.2 + 1.0)) / (tf0 + 1.2 * ((1.0 - 0.75) + ((0.75 * dl) / s.avgdl))))
-               + ln(1.0 + ((s.n - s.df1) + 0.5) / (s.df1 + 0.5))
-                 * ((tf1 * (1.2 + 1.0)) / (tf1 + 1.2 * ((1.0 - 0.75) + ((0.75 * dl) / s.avgdl))))
-               + ln(1.0 + ((s.n - s.df2) + 0.5) / (s.df2 + 0.5))
-                 * ((tf2 * (1.2 + 1.0)) / (tf2 + 1.2 * ((1.0 - 0.75) + ((0.75 * dl) / s.avgdl)))),
-               6) AS bm25
-      FROM t, s
-      WHERE (CASE WHEN tf0 > 0 THEN 1 ELSE 0 END
-             + CASE WHEN tf1 > 0 THEN 1 ELSE 0 END
-             + CASE WHEN tf2 > 0 THEN 1 ELSE 0 END) > 0
-      ORDER BY doc_id""",
-
-    // bloom pre-filter + exact verify == the exact operator's output
-    "q_decontaminate_bloom" -> """
-      WITH toks AS (
-        SELECT doc_id, string_split(text, ' ') AS w FROM documents
-      ), words AS (
-        SELECT doc_id, unnest(w) AS word, generate_subscripts(w, 1) AS idx
-        FROM toks
-      ), grams AS (
-        SELECT doc_id, string_agg(word, ' ' ORDER BY idx2) AS g
-        FROM (SELECT a.doc_id, a.idx AS base, b.idx AS idx2, b.word
-              FROM words a JOIN words b
-                ON a.doc_id = b.doc_id AND b.idx BETWEEN a.idx AND a.idx + 7) t
-        GROUP BY doc_id, base HAVING count(*) = 8
-      ), bgrams AS (
-        SELECT DISTINCT g FROM grams WHERE doc_id % 10 = 0
-      ), cg AS (
-        SELECT DISTINCT doc_id, g FROM grams WHERE doc_id % 10 <> 0
-      )
-      SELECT cg.doc_id, CAST(count(*) AS BIGINT) AS n_hits
-      FROM cg JOIN bgrams USING (g)
-      GROUP BY cg.doc_id HAVING count(*) >= 1
-      ORDER BY cg.doc_id""",
-
-    "q_repetition" -> """
-      WITH toks AS (
-        SELECT doc_id, string_split(text, ' ') AS w FROM documents
-        WHERE len(string_split(text, ' ')) >= 3
-      ), words AS (
-        SELECT doc_id, unnest(w) AS word, generate_subscripts(w, 1) AS idx
-        FROM toks
-      ), grams AS (
-        SELECT doc_id,
-               word || ' ' ||
-               lead(word, 1) OVER (PARTITION BY doc_id ORDER BY idx) || ' ' ||
-               lead(word, 2) OVER (PARTITION BY doc_id ORDER BY idx) AS g
-        FROM words
-      ), gfreq AS (
-        SELECT doc_id, g, count(*) AS c
-        FROM grams WHERE g IS NOT NULL GROUP BY doc_id, g
-      )
-      SELECT doc_id,
-             CAST(sum(c) AS BIGINT) AS total_grams,
-             CAST(count(*) AS BIGINT) AS distinct_grams,
-             CAST(max(c) AS BIGINT) AS max_gram_freq,
-             (CAST(sum(c) AS DOUBLE) - CAST(count(*) AS DOUBLE))
-               / CAST(sum(c) AS DOUBLE) AS dup_fraction
-      FROM gfreq GROUP BY doc_id ORDER BY doc_id""",
-
-    "q_scrub_pii" -> """
-      WITH dirty AS (
-        SELECT doc_id,
-               'reach user' || doc_id || '@example.com or 10.0.' ||
-               (doc_id % 256) || '.' || (doc_id % 100) ||
-               ' tel 555-867-5309 ' || text AS d
-        FROM documents
-      ), cleaned AS (
-        SELECT doc_id,
-               regexp_replace(regexp_replace(regexp_replace(d,
-                 '[A-Za-z0-9._%+-]+@[A-Za-z0-9.-]+\.[A-Za-z]{2,}', '<PII>', 'g'),
-                 '\+?[0-9]{3}[-. ][0-9]{3}[-. ][0-9]{4}', '<PII>', 'g'),
-                 '\b(?:[0-9]{1,3}\.){3}[0-9]{1,3}\b', '<PII>', 'g') AS clean
-        FROM dirty
-      )
-      SELECT doc_id, clean,
-             CAST(len(string_split(clean, '<PII>')) - 1 AS BIGINT) AS n_redacted
-      FROM cleaned ORDER BY doc_id""",
-
-    "q_stream_join" -> """
-      SELECT l.user_id, l.event_id AS view_id, r.event_id AS click_id
-      FROM (SELECT user_id, event_id, CAST(ts AS TIMESTAMP) AS ts
-            FROM events WHERE event_type = 'view' AND user_id % 4 = 0) l
-      JOIN (SELECT user_id, event_id, CAST(ts AS TIMESTAMP) AS ts
-            FROM events WHERE event_type = 'click' AND user_id % 4 = 0) r
-        ON r.user_id = l.user_id
-       AND r.ts >= l.ts
-       AND r.ts <= l.ts + INTERVAL 60 MINUTE
-      ORDER BY view_id, click_id""",
-
-    "q_stream_outer" -> """
-      WITH ev AS (SELECT user_id, event_id, event_type, CAST(ts AS TIMESTAMP) AS ts
-                  FROM events WHERE user_id % 4 = 0),
-      cut AS (SELECT least(
-                max(CASE WHEN event_type = 'view' THEN ts END),
-                max(CASE WHEN event_type = 'click' THEN ts END))
-                - INTERVAL 2 HOUR AS c
-              FROM ev),
-      v AS (SELECT user_id, event_id, ts FROM ev
-            WHERE event_type = 'view' AND ts <= (SELECT c FROM cut)),
-      c AS (SELECT user_id, event_id, ts FROM ev WHERE event_type = 'click')
-      SELECT v.user_id AS user_id, v.event_id AS view_id,
-             COALESCE(c.event_id, -1) AS click_id
-      FROM v LEFT JOIN c
-        ON c.user_id = v.user_id
-       AND c.ts >= v.ts
-       AND c.ts <= v.ts + INTERVAL 60 MINUTE
-      ORDER BY view_id, click_id""",
-
-    "q_stream_window" -> """
-      SELECT epoch_us(CAST(date_trunc('day', CAST(ts AS TIMESTAMP))
-               AS TIMESTAMP)) // 1000000 AS win_start,
-             event_type,
-             CAST(count(*) AS BIGINT) AS n
-      FROM events
-      GROUP BY 1, 2
-      ORDER BY win_start, event_type""",
-
-    "q_stream_window_append" -> """
-      SELECT epoch_us(CAST(date_trunc('day', CAST(ts AS TIMESTAMP))
-               AS TIMESTAMP)) // 1000000 AS win_start,
-             event_type,
-             CAST(count(*) AS BIGINT) AS n
-      FROM events
-      WHERE date_trunc('day', CAST(ts AS TIMESTAMP)) + INTERVAL 1 DAY
-            <= (SELECT max(CAST(ts AS TIMESTAMP)) - INTERVAL 1 HOUR
-                FROM events)
-      GROUP BY 1, 2
-      ORDER BY win_start, event_type""",
-
-    "q_stream_dedup" -> """
-      SELECT DISTINCT user_id, event_type
-      FROM events
-      ORDER BY user_id, event_type""",
-
-    // stream-static join ≡ the batch join (per-microbatch dimension
-    // lookup changes nothing on a static dimension)
-    "q_stream_enrich" -> """
-      SELECT c.c_mktsegment, e.event_type,
-             CAST(count(*) AS BIGINT) AS n,
-             CAST(sum(CAST(e.value AS DECIMAL(18,2))) AS DOUBLE) AS total
-      FROM events e JOIN customer c ON c.c_custkey = e.user_id % 100 + 1
-      GROUP BY 1, 2
-      ORDER BY 1, 2""",
-
-    // per-user gaps-and-islands sessionization — session_window merges
-    // strictly-overlapping [ts, ts+gap) windows, so a gap of EXACTLY the
-    // window size starts a new session (>=, not >)
-    "q_stream_session" -> """
-      WITH o AS (
-        SELECT user_id, CAST(ts AS TIMESTAMP) AS ts,
-               lag(CAST(ts AS TIMESTAMP))
-                 OVER (PARTITION BY user_id ORDER BY ts) AS prev
-        FROM events
-      ), f AS (
-        SELECT user_id, ts,
-               CASE WHEN prev IS NULL
-                      OR epoch_us(ts) - epoch_us(prev) >= 1800000000 THEN 1
-                    ELSE 0 END AS nw
-        FROM o
-      ), s AS (
-        SELECT user_id, ts,
-               sum(nw) OVER (PARTITION BY user_id ORDER BY ts
-                 ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW) AS sid
-        FROM f
-      )
-      SELECT user_id,
-             CAST(epoch_us(min(ts)) AS BIGINT) AS session_start,
-             CAST(count(*) AS BIGINT) AS n
-      FROM s GROUP BY user_id, sid
-      ORDER BY user_id, session_start""",
-
-    // the custom-state session machine replayed in batch: ms-floored
-    // event times (Timestamp.getTime truncation), merge while
-    // diff <= 30 min, and ONLY watermark-finalized sessions
-    // (end + gap < max(ts)_ms - 1h — Spark's ms watermark arithmetic)
-    "q_stream_session_state" -> """
-      WITH e AS (
-        SELECT user_id, epoch_us(CAST(ts AS TIMESTAMP)) // 1000 AS t
-        FROM events
-      ), o AS (
-        SELECT user_id, t,
-               lag(t) OVER (PARTITION BY user_id ORDER BY t) AS prev
-        FROM e
-      ), f AS (
-        SELECT user_id, t,
-               CASE WHEN prev IS NULL OR t - prev > 1800000 THEN 1
-                    ELSE 0 END AS nw
-        FROM o
-      ), g AS (
-        SELECT user_id, t,
-               sum(nw) OVER (PARTITION BY user_id ORDER BY t
-                 ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW) AS sid
-        FROM f
-      ), sess AS (
-        SELECT user_id, min(t) AS start_ms, max(t) AS end_ms,
-               count(*) AS n
-        FROM g GROUP BY user_id, sid
-      ), wm AS (
-        SELECT max(epoch_us(CAST(ts AS TIMESTAMP)) // 1000) - 3600000 AS w
-        FROM events
-      )
-      SELECT user_id, CAST(start_ms AS BIGINT) AS start_ms,
-             CAST(end_ms AS BIGINT) AS end_ms, CAST(n AS INT) AS n_events
-      FROM sess, wm WHERE end_ms + 1800000 < w
-      ORDER BY user_id, start_ms""",
-
-    "q_stream_store" -> """
-      SELECT doc_id,
-             CASE WHEN doc_id % 10 = 0 THEN -1
-                  ELSE length(text) END AS v
-      FROM documents ORDER BY doc_id""",
-
-    // crash-restart resume: exactly the corpus, each row once — a
-    // replayed batch would P2002 in the query itself, a lost batch
-    // leaves a doc_id%4 residue class missing
-    "q_stream_restart" -> """
-      SELECT doc_id, CAST(length(text) AS BIGINT) AS v
-      FROM documents ORDER BY doc_id""",
-
-    // the BMP builder+parser replayed symbolically: every header field
-    // from the format's published arithmetic, every channel sum from the
-    // pixel formulas summed over the (x, y) grid
-    // the COMPRESSED codec replayed in the decoded domain: the oracle
-    // sums the pixel formulas directly — deflate framing, chunk CRCs,
-    // multi-IDAT reassembly, and all five filter reconstructions must
-    // round-trip EXACTLY for the Spark side to reach these sums
-    "q_media_png" -> """
-      WITH d AS (
-        SELECT doc_id AS id, doc_id % 16 + 3 AS w, doc_id % 11 + 5 AS h
-        FROM documents
-      ), dx AS (
-        SELECT id, w, h, unnest(range(0, w)) AS x FROM d
-      ), px AS (
-        SELECT id, w, h, x, unnest(range(0, h)) AS y FROM dx
-      )
-      SELECT id, CAST(w AS BIGINT) AS width, CAST(h AS BIGINT) AS height,
-             CAST(8 AS BIGINT) AS bit_depth,
-             CAST(2 AS BIGINT) AS color_type,
-             CAST(sum((x*5 + y*17 + id*3) % 239) AS BIGINT) AS sum_r,
-             CAST(sum((x*11 + y*3 + id*5) % 251) AS BIGINT) AS sum_g,
-             CAST(sum((x*7 + y*13 + id) % 256) AS BIGINT) AS sum_b
-      FROM px GROUP BY id, w, h ORDER BY id""",
-
-    // Adam7 cancels out entirely under a correct decode: the pass
-    // structure only permutes WHERE bytes sit in the zlib stream, the
-    // reconstructed pixels are the same formulas
-    "q_media_png_i" -> """
-      WITH d AS (
-        SELECT doc_id AS id, doc_id % 18 + 3 AS w, doc_id % 14 + 3 AS h
-        FROM documents
-      ), dx AS (
-        SELECT id, w, h, unnest(range(0, w)) AS x FROM d
-      ), px AS (
-        SELECT id, w, h, x, unnest(range(0, h)) AS y FROM dx
-      )
-      SELECT id, CAST(w AS BIGINT) AS width, CAST(h AS BIGINT) AS height,
-             CAST(8 AS BIGINT) AS bit_depth,
-             CAST(2 AS BIGINT) AS color_type,
-             CAST(sum((x*5 + y*17 + id*3) % 239) AS BIGINT) AS sum_r,
-             CAST(sum((x*11 + y*3 + id*5) % 251) AS BIGINT) AS sum_g,
-             CAST(sum((x*7 + y*13 + id) % 256) AS BIGINT) AS sum_b
-      FROM px GROUP BY id, w, h ORDER BY id""",
-
-    // the 4-pass row shuffle cancels out under a correct de-interlace;
-    // the parity split of the red sum is the spatial witness
-    "q_media_gif_i" -> """
-      WITH d AS (
-        SELECT doc_id AS id, doc_id % 17 + 2 AS w, doc_id % 19 + 2 AS h
-        FROM documents
-      ), dx AS (
-        SELECT id, w, h, unnest(range(0, w)) AS x FROM d
-      ), px AS (
-        SELECT id, w, h, x, unnest(range(0, h)) AS y FROM dx
-      ), ix AS (
-        SELECT id, w, h, y, (x*7 + y*13 + id) % 256 AS i FROM px
-      )
-      SELECT id, CAST(w AS BIGINT) AS width, CAST(h AS BIGINT) AS height,
-             CAST(256 AS BIGINT) AS gct_size,
-             CAST(8 AS BIGINT) AS min_code_size,
-             CAST(sum((i*5 + id*3) % 239) AS BIGINT) AS sum_r,
-             CAST(sum((i*11 + id*5) % 251) AS BIGINT) AS sum_g,
-             CAST(sum((i*7 + id) % 256) AS BIGINT) AS sum_b,
-             CAST(sum(CASE WHEN y % 2 = 0 THEN (i*5 + id*3) % 239
-                           ELSE 0 END) AS BIGINT) AS sum_r_even,
-             CAST(sum(CASE WHEN y % 2 = 1 THEN (i*5 + id*3) % 239
-                           ELSE 0 END) AS BIGINT) AS sum_r_odd
-      FROM ix GROUP BY id, w, h ORDER BY id""",
-
-    "q_media_bmp" -> """
-      WITH d AS (
-        SELECT doc_id AS id, doc_id % 32 + 1 AS w, doc_id % 24 + 1 AS h
-        FROM documents
-      ), dx AS (
-        SELECT id, w, h, unnest(range(0, w)) AS x FROM d
-      ), px AS (
-        SELECT id, w, h, x, unnest(range(0, h)) AS y FROM dx
-      )
-      SELECT id, CAST(w AS BIGINT) AS width, CAST(h AS BIGINT) AS height,
-             CAST(24 AS BIGINT) AS bpp,
-             CAST(54 + ((w*3+3)//4)*4*h AS BIGINT) AS file_size,
-             CAST(54 + ((w*3+3)//4)*4*h AS BIGINT) AS actual_size,
-             CAST(sum((x*7 + y*13 + id) % 256) AS BIGINT) AS sum_b,
-             CAST(sum((x*11 + y*3 + id*5) % 251) AS BIGINT) AS sum_g,
-             CAST(sum((x*5 + y*17 + id*3) % 239) AS BIGINT) AS sum_r
-      FROM px GROUP BY id, w, h ORDER BY id""",
-
-    // the JPEG builder+decoder replayed symbolically: Huffman/zigzag/
-    // quant/IDCT — and the 4:2:0 downsample/upsample — cancel out under
-    // the constant-block DC-step-8 contract (luma per 8×8, chroma per
-    // 16×16 macroblock), leaving the plane formulas summed over the crop
-    "q_media_jpeg" -> """
-      WITH d AS (
-        SELECT doc_id AS id, doc_id % 21 + 4 AS w, doc_id % 15 + 4 AS h
-        FROM documents
-      ), dx AS (
-        SELECT id, w, h, unnest(range(0, w)) AS x FROM d
-      ), px AS (
-        SELECT id, w, h, x, unnest(range(0, h)) AS y FROM dx
-      )
-      SELECT id, CAST(w AS BIGINT) AS width, CAST(h AS BIGINT) AS height,
-             CAST(3 AS BIGINT) AS n_components,
-             CAST(id % 3 + 1 AS BIGINT) AS restart_interval,
-             CAST(sum(((x//8)*5 + (y//8)*17 + id*3) % 256) AS BIGINT) AS sum_y,
-             CAST(sum(((x//16)*11 + (y//16)*3 + id*5) % 256) AS BIGINT) AS sum_cb,
-             CAST(sum(((x//16)*7 + (y//16)*13 + id) % 256) AS BIGINT) AS sum_cr
-      FROM px GROUP BY id, w, h ORDER BY id""",
-
-    // the PROGRESSIVE builder+decoder replayed symbolically: the whole
-    // multi-scan entropy layer (spectral bands, successive
-    // approximation, EOB runs, refinement bits) cancels out under the
-    // constant-block contract exactly as the baseline layer does
-    "q_media_jpeg_prog" -> """
-      WITH d AS (
-        SELECT doc_id AS id, doc_id % 23 + 4 AS w, doc_id % 17 + 4 AS h
-        FROM documents
-      ), dx AS (
-        SELECT id, w, h, unnest(range(0, w)) AS x FROM d
-      ), px AS (
-        SELECT id, w, h, x, unnest(range(0, h)) AS y FROM dx
-      )
-      SELECT id, CAST(w AS BIGINT) AS width, CAST(h AS BIGINT) AS height,
-             CAST(3 AS BIGINT) AS n_components,
-             CAST(id % 3 + 1 AS BIGINT) AS restart_interval,
-             CAST(sum(((x//8)*5 + (y//8)*17 + id*3) % 256) AS BIGINT) AS sum_y,
-             CAST(sum(((x//16)*11 + (y//16)*3 + id*5) % 256) AS BIGINT) AS sum_cb,
-             CAST(sum(((x//16)*7 + (y//16)*13 + id) % 256) AS BIGINT) AS sum_cr
-      FROM px GROUP BY id, w, h ORDER BY id""",
-
-    // the GIF builder+decoder replayed symbolically: the LZW layer
-    // cancels out (decode is exact reconstruction), leaving the index
-    // formula routed through the palette formulas
-    "q_media_gif" -> """
-      WITH d AS (
-        SELECT doc_id AS id, doc_id % 19 + 2 AS w, doc_id % 13 + 3 AS h
-        FROM documents
-      ), dx AS (
-        SELECT id, w, h, unnest(range(0, w)) AS x FROM d
-      ), px AS (
-        SELECT id, w, h, x, unnest(range(0, h)) AS y FROM dx
-      ), ix AS (
-        SELECT id, w, h, (x*7 + y*13 + id) % 256 AS i FROM px
-      )
-      SELECT id, CAST(w AS BIGINT) AS width, CAST(h AS BIGINT) AS height,
-             CAST(256 AS BIGINT) AS gct_size,
-             CAST(8 AS BIGINT) AS min_code_size,
-             CAST(sum((i*5 + id*3) % 239) AS BIGINT) AS sum_r,
-             CAST(sum((i*11 + id*5) % 251) AS BIGINT) AS sum_g,
-             CAST(sum((i*7 + id) % 256) AS BIGINT) AS sum_b
-      FROM ix GROUP BY id, w, h ORDER BY id""",
-
-    // the RIFF/WAVE builder+parser replayed symbolically: chunk
-    // arithmetic for the derived header fields, the PCM sample formula
-    // summed over (frame, channel)
-    "q_media_wav" -> """
-      WITH d AS (
-        SELECT doc_id AS id, doc_id % 2 + 1 AS ch,
-               8000 + (doc_id % 4) * 4000 AS rate,
-               100 + doc_id % 156 AS frames
-        FROM documents
-      ), di AS (
-        SELECT id, ch, rate, frames, unnest(range(0, frames)) AS i FROM d
-      ), sm AS (
-        SELECT id, ch, rate, frames, i, unnest(range(0, ch)) AS c FROM di
-      )
-      SELECT id,
-             CAST(ch AS BIGINT) AS channels,
-             CAST(rate AS BIGINT) AS sample_rate,
-             CAST(16 AS BIGINT) AS bits,
-             CAST(rate * ch * 2 AS BIGINT) AS byte_rate,
-             CAST(ch * 2 AS BIGINT) AS block_align,
-             CAST(frames * ch * 2 AS BIGINT) AS data_bytes,
-             CAST((frames * ch * 2 * 1000) // (rate * ch * 2) AS BIGINT) AS duration_ms,
-             CAST(sum(abs((i*31 + c*17 + id) % 4001 - 2000)) AS BIGINT) AS sum_abs
-      FROM sm GROUP BY id, ch, rate, frames ORDER BY id""",
-
-    "q_media_offsets" -> """
-      WITH base AS (
-        SELECT i AS media_id,
-               CASE (i % 3) WHEN 0 THEN 'image' WHEN 1 THEN 'audio'
-                 ELSE 'video' END AS modality,
-               CASE WHEN i % 3 <> 0 THEN i % 60000 + 1000 ELSE 0 END AS dur
-        FROM generate_series(0, 499) AS t(i)
-      )
-      SELECT * FROM (
-        SELECT media_id, modality,
-               unnest(generate_series(0, least(dur, 1050), 150)) AS offset_ms
-        FROM base)
-      ORDER BY media_id, offset_ms""",
-
-    "q_media_resize" -> """
-      WITH base AS (
-        SELECT i AS media_id,
-               CASE WHEN i % 3 = 0 THEN CAST(i % 1000 + 100 AS INTEGER) END AS width,
-               CASE WHEN i % 3 = 0 THEN CAST(i % 800 + 100 AS INTEGER) END AS height
-        FROM generate_series(0, 499) AS t(i)
-      )
-      SELECT media_id, width, height,
-             CAST(ceil(width * least(CAST(1 AS DOUBLE),
-               CAST(256 AS DOUBLE) / CAST(greatest(width, height) AS DOUBLE)))
-               AS INTEGER) AS target_width,
-             CAST(ceil(height * least(CAST(1 AS DOUBLE),
-               CAST(256 AS DOUBLE) / CAST(greatest(width, height) AS DOUBLE)))
-               AS INTEGER) AS target_height
-      FROM base ORDER BY media_id""",
-
-    // the dHash pipeline replayed symbolically end to end: the twin
-    // bumps one pixel's blue channel (+1 mod 256 at image (0, h-1), the
-    // first STORED pixel of a bottom-up BMP), both variants' luminance
-    // grids bin via the same integer floors, bits compare cell means
-    // exactly (HUGEINT cross-products here == the kernel's
-    // quotient/remainder method — both exact), and the pair's hamming is
-    // the differing-bit count. Every planted twin must surface with
-    // hamming ≤ 1 (one cell moved → at most the one comparison it
-    // participates in flips).
-    "q_media_dedup" -> """
-      WITH d AS (
-        SELECT doc_id AS id, 16 + doc_id % 16 AS w, 12 + doc_id % 12 AS h
-        FROM documents
-      ), dx AS (
-        SELECT id, w, h, unnest(range(0, w)) AS x FROM d
-      ), px AS (
-        SELECT id, w, h, x, unnest(range(0, h)) AS y FROM dx
-      ), lum AS (
-        SELECT id, (x * 9) // w AS gx, (y * 8) // h AS gy,
-               299 * ((x*5 + y*17 + id*3) % 239)
-             + 587 * ((x*11 + y*3 + id*5) % 251)
-             + 114 * ((x*7 + y*13 + id) % 256) AS lb,
-               299 * ((x*5 + y*17 + id*3) % 239)
-             + 587 * ((x*11 + y*3 + id*5) % 251)
-             + 114 * ((x*7 + y*13 + id
-                       + CASE WHEN x = 0 AND y = h - 1 THEN 1 ELSE 0 END) % 256) AS lt
-        FROM px
-      ), cells AS (
-        SELECT id, gy, gx, sum(lb) AS sb, sum(lt) AS st, count(*) AS c
-        FROM lum GROUP BY id, gy, gx
-      ), bits AS (
-        SELECT a.id,
-               CASE WHEN a.sb * b.c < b.sb * a.c THEN 1 ELSE 0 END AS bb,
-               CASE WHEN a.st * b.c < b.st * a.c THEN 1 ELSE 0 END AS bt
-        FROM cells a JOIN cells b
-          ON a.id = b.id AND a.gy = b.gy AND b.gx = a.gx + 1
-        WHERE a.gx < 8
-      )
-      SELECT id AS id_a, id + 1000000 AS id_b,
-             CAST(sum(CASE WHEN bb <> bt THEN 1 ELSE 0 END) AS BIGINT) AS hamming
-      FROM bits GROUP BY id ORDER BY id_a""",
-
-    "q_media_audio_dedup" -> """
-      WITH d AS (
-        SELECT doc_id AS id, 1 + doc_id % 2 AS ch, 130 + doc_id % 70 AS fr
-        FROM documents
-      ), fx AS (
-        SELECT id, ch, fr, unnest(range(0, fr)) AS i FROM d
-      ), fc AS (
-        SELECT id, fr, i, unnest(range(0, ch)) AS c FROM fx
-      ), samp AS (
-        SELECT id, (i * 65) // fr AS k,
-               abs((i*31 + c*17 + id) % 4001 - 2000) AS ab,
-               abs((i*31 + c*17 + id) % 4001 - 2000
-                   + CASE WHEN i = 0 AND c = 0 THEN 1 ELSE 0 END) AS at
-        FROM fc
-      ), bins AS (
-        SELECT id, k, sum(ab) AS eb, sum(at) AS et, count(*) AS n
-        FROM samp GROUP BY id, k
-      ), bits AS (
-        SELECT a.id,
-               CASE WHEN a.eb * b.n < b.eb * a.n THEN 1 ELSE 0 END AS bb,
-               CASE WHEN a.et * b.n < b.et * a.n THEN 1 ELSE 0 END AS bt
-        FROM bins a JOIN bins b ON a.id = b.id AND b.k = a.k + 1
-        WHERE a.k < 64
-      )
-      SELECT id AS id_a, id + 1000000 AS id_b,
-             CAST(sum(CASE WHEN bb <> bt THEN 1 ELSE 0 END) AS BIGINT) AS hamming
-      FROM bits GROUP BY id ORDER BY id_a""",
-
-    // Pixel sums replayed symbolically, then the decoder's float32 chain
-    // reproduced exactly: sums and w·h are < 2^24 so the long→float
-    // casts are exact and the single rounding step is the IEEE float
-    // division both engines share — bit-exact, no round().
-    "q_media_features" -> """
-      WITH d AS (
-        SELECT doc_id AS media_id, 8 + doc_id % 16 AS w, 6 + doc_id % 10 AS h
-        FROM documents
-      ), dx AS (
-        SELECT media_id, w, h, unnest(range(0, w)) AS x FROM d
-      ), px AS (
-        SELECT media_id, w, h, x, unnest(range(0, h)) AS y FROM dx
-      ), sums AS (
-        SELECT media_id, w, h,
-               sum((x*5 + y*17 + media_id*3) % 239) AS sr,
-               sum((x*11 + y*3 + media_id*5) % 251) AS sg,
-               sum((x*7 + y*13 + media_id) % 256) AS sb
-        FROM px GROUP BY media_id, w, h
-      )
-      SELECT media_id,
-             CASE WHEN media_id % 13 = 0 THEN CAST(NULL AS FLOAT)
-                  ELSE CAST(CAST(sr AS FLOAT) / (CAST(255 AS FLOAT) * CAST(w*h AS FLOAT)) AS FLOAT) END AS f_r,
-             CASE WHEN media_id % 13 = 0 THEN CAST(NULL AS FLOAT)
-                  ELSE CAST(CAST(sg AS FLOAT) / (CAST(255 AS FLOAT) * CAST(w*h AS FLOAT)) AS FLOAT) END AS f_g,
-             CASE WHEN media_id % 13 = 0 THEN CAST(NULL AS FLOAT)
-                  ELSE CAST(CAST(sb AS FLOAT) / (CAST(255 AS FLOAT) * CAST(w*h AS FLOAT)) AS FLOAT) END AS f_b
-      FROM sums ORDER BY media_id""",
-
-    // GVID parse: header echoes are pure arithmetic; the channel sums
-    // replay the per-frame pixel formulas (seed id + 7919·f) over every
-    // (f, x, y) symbolically.
-    "q_media_vid" -> """
-      WITH d AS (
-        SELECT doc_id AS id, 6 + doc_id % 8 AS w, 5 + doc_id % 6 AS h,
-               1 + doc_id % 5 AS fr, (12 + doc_id % 25) * 1000 AS fps
-        FROM documents
-      ), df AS (
-        SELECT id, w, h, fr, fps, unnest(range(0, fr)) AS f FROM d
-      ), dx AS (
-        SELECT id, w, h, fr, fps, f, unnest(range(0, w)) AS x FROM df
-      ), px AS (
-        SELECT id, w, h, fr, fps, f, x, unnest(range(0, h)) AS y FROM dx
-      )
-      SELECT id, CAST(w AS BIGINT) AS width, CAST(h AS BIGINT) AS height,
-             CAST(fr AS BIGINT) AS frames, CAST(fps AS BIGINT) AS fps_milli,
-             CAST(w * h * 3 * fr AS BIGINT) AS data_bytes,
-             CAST(fr * 1000000 // fps AS BIGINT) AS duration_ms,
-             CAST(sum((x*7 + y*13 + id + 7919*f) % 256) AS BIGINT) AS sum_b,
-             CAST(sum((x*11 + y*3 + (id + 7919*f)*5) % 251) AS BIGINT) AS sum_g,
-             CAST(sum((x*5 + y*17 + (id + 7919*f)*3) % 239) AS BIGINT) AS sum_r
-      FROM px GROUP BY id, w, h, fr, fps ORDER BY id""",
-
-    // Video perceptual dedup: replay the per-frame dHash (lum → 9×8 grid
-    // cells → gradient-sign bits, exactly as q_media_dedup but with the
-    // frame dimension and top-down rows), then the strict majority vote
-    // per bit position across frames, for both the base clip and the
-    // twin whose frame 0 pixel (0,0) blue channel is +1 (mod 256).
-    "q_media_video_dedup" -> """
-      WITH d AS (
-        SELECT doc_id AS id, 6 + doc_id % 8 AS w, 5 + doc_id % 6 AS h,
-               1 + doc_id % 5 AS fr
-        FROM documents
-      ), df AS (
-        SELECT id, w, h, fr, unnest(range(0, fr)) AS f FROM d
-      ), dx AS (
-        SELECT id, w, h, fr, f, unnest(range(0, w)) AS x FROM df
-      ), px AS (
-        SELECT id, w, h, fr, f, x, unnest(range(0, h)) AS y FROM dx
-      ), lum AS (
-        SELECT id, fr, f, (x * 9) // w AS gx, (y * 8) // h AS gy,
-               299 * ((x*5 + y*17 + (id + 7919*f)*3) % 239)
-             + 587 * ((x*11 + y*3 + (id + 7919*f)*5) % 251)
-             + 114 * ((x*7 + y*13 + id + 7919*f) % 256) AS lb,
-               299 * ((x*5 + y*17 + (id + 7919*f)*3) % 239)
-             + 587 * ((x*11 + y*3 + (id + 7919*f)*5) % 251)
-             + 114 * ((x*7 + y*13 + id + 7919*f
-                       + CASE WHEN f = 0 AND x = 0 AND y = 0 THEN 1 ELSE 0 END) % 256) AS lt
-        FROM px
-      ), cells AS (
-        SELECT id, fr, f, gy, gx, sum(lb) AS sb, sum(lt) AS st, count(*) AS c
-        FROM lum GROUP BY id, fr, f, gy, gx
-      ), bits AS (
-        SELECT a.id, a.fr, a.f, a.gy, a.gx,
-               CASE WHEN a.sb * b.c < b.sb * a.c THEN 1 ELSE 0 END AS bb,
-               CASE WHEN a.st * b.c < b.st * a.c THEN 1 ELSE 0 END AS bt
-        FROM cells a JOIN cells b
-          ON a.id = b.id AND a.f = b.f AND a.gy = b.gy AND b.gx = a.gx + 1
-        WHERE a.gx < 8
-      ), maj AS (
-        SELECT id, gy, gx,
-               CASE WHEN 2 * sum(bb) > fr THEN 1 ELSE 0 END AS mb,
-               CASE WHEN 2 * sum(bt) > fr THEN 1 ELSE 0 END AS mt
-        FROM bits GROUP BY id, fr, gy, gx
-      )
-      SELECT id AS id_a, id + 1000000 AS id_b,
-             CAST(sum(CASE WHEN mb <> mt THEN 1 ELSE 0 END) AS BIGINT) AS hamming
-      FROM maj GROUP BY id ORDER BY id_a""",
-
-    "q_dedup_minhash" -> """
-      SELECT doc_id AS id_a, doc_id + 10000 AS id_b FROM documents
-      ORDER BY id_a""",
-
-    "q_dedup_simhash" -> """
-      SELECT doc_id AS id_a, doc_id + 10000 AS id_b FROM documents
-      ORDER BY id_a""",
-
-    "q_dup_clusters" -> """
-      WITH d AS (SELECT doc_id FROM documents WHERE doc_id % 4 = 0)
-      SELECT id, cluster FROM (
-        SELECT doc_id AS id, doc_id AS cluster FROM d
-        UNION ALL SELECT doc_id + 10000 AS id, doc_id AS cluster FROM d
-        UNION ALL SELECT doc_id + 20000 AS id, doc_id AS cluster FROM d)
-      ORDER BY id""",
-
-    "q_pagerank" -> pagerankOracle(5),
-
-    "q_kmeans" -> kmeansOracle(k = 10, iters = 2),
-    "q_quality_train" -> qualityTrainOracle(dim = 256, iters = 3, lr = 500.0),
-
-    // the q_html_extract closed form reached through landing + streaming
-    "q_stream_crawl" -> """
-      WITH tok AS (
-        SELECT doc_id, list_filter(string_split(text, ' '), x -> x <> '') AS w
-        FROM documents
-      ), words AS (
-        SELECT doc_id, unnest(w) AS word, generate_subscripts(w, 1) AS idx
-        FROM tok
-      ), par AS (
-        SELECT doc_id, (idx - 1) // 8 AS grp,
-               string_agg(word, ' ' ORDER BY idx) || ' & <tag> M! end' AS ptxt
-        FROM words GROUP BY doc_id, (idx - 1) // 8
-      ), agg AS (
-        SELECT doc_id, string_agg(ptxt, chr(10) ORDER BY grp) AS text_out
-        FROM par GROUP BY doc_id
-      )
-      SELECT d.doc_id, coalesce(a.text_out, '') AS text
-      FROM documents d LEFT JOIN agg a USING (doc_id)
-      ORDER BY d.doc_id""",
-
-    // the indexed findMany must equal the plain two-conjunct predicate
-    "q_find_many_indexed" -> """
-      SELECT doc_id, source, n_chars FROM documents
-      WHERE source IN ('src1', 'src4') AND n_chars >= 120
-      ORDER BY doc_id""",
-
-    // the composite-indexed findMany must equal the plain predicate over
-    // the post-update-lattice state
-    "q_value_index_composite" -> """
-      WITH d AS (
-        SELECT doc_id, source,
-               CASE WHEN doc_id % 31 = 0 THEN 'xx' ELSE lang END AS lang,
-               n_chars
-        FROM documents
-      )
-      SELECT doc_id, source, lang, n_chars FROM d
-      WHERE source = 'src1' AND lang IN ('en', 'de', 'xx')
-        AND n_chars >= 100
-      ORDER BY doc_id""",
-
-    // the index-only count and the hydrated residual count, both plain
-    "q_count_indexed" -> """
-      SELECT (SELECT count(*) FROM documents
-              WHERE source IN ('src1', 'src2')) AS n_indexed,
-             (SELECT count(*) FROM documents
-              WHERE source = 'src1' AND n_chars >= 100) AS n_hydrated""",
-
-    // the index-only ids projection must equal the plain predicate
-    "q_find_ids_indexed" -> """
-      SELECT doc_id FROM documents
-      WHERE source IN ('src1', 'src3')
-      ORDER BY doc_id""",
-
-    // the two prefix reads over the mutated corpus (doc_id % 31 = 0
-    // rows moved to source 'src9' before the refresh)
-    "q_value_index_prefix" -> """
-      WITH d AS (
-        SELECT doc_id,
-               CASE WHEN doc_id % 31 = 0 THEN 'src9' ELSE source END AS source,
-               lang, n_chars
-        FROM documents
-      )
-      SELECT doc_id, part FROM (
-        SELECT doc_id, 'ids' AS part FROM d
-        WHERE source IN ('src1', 'src9')
-        UNION ALL
-        SELECT doc_id, 'hyd' AS part FROM d
-        WHERE source = 'src1' AND n_chars >= 100
-      ) ORDER BY part, doc_id""",
-
-    // the three groupBy reads over the null-planted corpus (% 13 nulls
-    // at ingest, % 31 moved to NULL before the refresh)
-    "q_group_indexed" -> """
-      WITH d AS (
-        SELECT doc_id,
-               CASE WHEN doc_id % 13 = 0 OR doc_id % 31 = 0 THEN NULL
-                    ELSE source END AS source,
-               n_chars
-        FROM documents
-      )
-      SELECT source, _count_all, part FROM (
-        SELECT source, count(*) AS _count_all, 'all' AS part FROM d
-        GROUP BY source
-        UNION ALL
-        SELECT source, count(*) AS _count_all, 'in' AS part FROM d
-        WHERE source IN ('src1', 'src2') GROUP BY source
-        UNION ALL
-        SELECT source, count(*) AS _count_all, 'hyd' AS part FROM d
-        WHERE source IN ('src1', 'src2') AND n_chars >= 100 GROUP BY source
-      ) ORDER BY part, source NULLS FIRST""",
-
-    // the source after the update lattice, filtered by the probed values
-    // — the indexed fetch must equal the plain predicate
-    "q_value_index" -> """
-      WITH d AS (
-        SELECT doc_id,
-               CASE WHEN doc_id % 31 = 0 THEN 'src9' ELSE source END AS source,
-               n_chars
-        FROM documents
-      )
-      SELECT doc_id, source, n_chars FROM d
-      WHERE source IN ('src3', 'src9') ORDER BY doc_id""",
-    "q_ann_pq" -> pqOracle(m = 4, k = 8, iters = 2, topk = 5),
-    "q_ann_rebuild" -> annRebuildOracle(nCells = 4, nProbe = 3, m = 8,
-      k = 16, iters = 2, topk = 5),
-
-    "q_ann_persist" -> annPersistOracle(nCells = 4, nProbe = 2, m = 4,
-      k = 8, iters = 2, topk = 5),
-    // train on the 3/4 prefix + encode everything == the q_ann_persist
-    // final state; frozen-codebook streaming refresh makes the result
-    // batch-boundary-independent, so the SAME oracle replays it
-    "q_stream_ann" -> annPersistOracle(nCells = 4, nProbe = 2, m = 4,
-      k = 8, iters = 2, topk = 5),
-    "q_ann_rerank" -> ivfPqRerankOracle(nCells = 4, nProbe = 2, m = 4,
-      k = 8, iters = 2, shortlist = 20, topk = 5),
-    "q_ann_ivfpq" -> ivfPqOracle(nCells = 4, nProbe = 2, m = 4, k = 8,
-      iters = 2, topk = 5),
-
-    "q_label_prop" -> labelPropOracle(4),
-
-    "q_triangles" -> """
-      WITH e AS (
-        SELECT c.c_nationkey AS src, s.s_nationkey AS dst, count(*) AS w
-        FROM lineitem l
-        JOIN orders o ON l.l_orderkey = o.o_orderkey
-        JOIN customer c ON o.o_custkey = c.c_custkey
-        JOIN supplier s ON l.l_suppkey = s.s_suppkey
-        GROUP BY 1, 2),
-      und AS (
-        SELECT least(src, dst) AS a, greatest(src, dst) AS b,
-               sum(w) AS wu
-        FROM e WHERE src <> dst GROUP BY 1, 2),
-      kept AS (
-        SELECT a, b FROM und WHERE wu > (SELECT avg(wu) FROM und)),
-      wedge AS (
-        SELECT e1.a AS a, e1.b AS b, e2.b AS c
-        FROM kept e1 JOIN kept e2 ON e1.b = e2.a),
-      tri AS (
-        SELECT w.a, w.b, w.c
-        FROM wedge w JOIN kept e3 ON w.a = e3.a AND w.c = e3.b),
-      corners AS (
-        SELECT a AS id FROM tri
-        UNION ALL SELECT b FROM tri
-        UNION ALL SELECT c FROM tri),
-      cnt AS (SELECT id, count(*) AS n_triangles FROM corners GROUP BY id)
-      SELECT n.n_name,
-             CAST(coalesce(c.n_triangles, 0) AS BIGINT) AS n_triangles
-      FROM nation n LEFT JOIN cnt c ON n.n_nationkey = c.id
-      ORDER BY n.n_name""",
-
-    "q_dup_clusters_dist" -> """
-      WITH d AS (SELECT doc_id FROM documents WHERE doc_id % 8 = 0)
-      SELECT id, cluster FROM (
-        SELECT doc_id AS id, doc_id AS cluster FROM d
-        UNION ALL SELECT doc_id + 10000 AS id, doc_id AS cluster FROM d
-        UNION ALL SELECT doc_id + 20000 AS id, doc_id AS cluster FROM d)
-      ORDER BY id""",
-
-    "q_ngram_jaccard" -> """
-      WITH sh AS (
-        SELECT doc_id,
-               list_distinct(CASE WHEN len(toks) < 3 THEN [array_to_string(toks, ' ')]
-                 ELSE list_transform(range(1, len(toks) - 1),
-                        i -> array_to_string(toks[i:i+2], ' ')) END) AS s
-        FROM (SELECT doc_id,
-                list_filter(regexp_split_to_array(lower(trim(text)), '[^a-z0-9]+'),
-                            x -> len(x) > 0) AS toks
-              FROM documents))
-      SELECT a.doc_id AS id_a, b.doc_id AS id_b,
-             round(CASE WHEN len(list_distinct(list_concat(a.s, b.s))) = 0 THEN 0.0
-               ELSE CAST(len(list_intersect(a.s, b.s)) AS DOUBLE)
-                    / len(list_distinct(list_concat(a.s, b.s))) END, 4) AS jaccard
-      FROM sh a JOIN sh b ON b.doc_id = a.doc_id + 1
-      WHERE b.doc_id < 500
-      ORDER BY id_a""",
-
-    // the md5-family MinHash-LSH replayed end to end: same 60-bit md5
-    // prefix hashes (hash i of shingle s = md5('i:' || s)), same 16
-    // bands x 2 rows banding (threshold 0.7 -> bandsFor = numHashes/2),
-    // same band-collision join and exact-Jaccard >= 0.7 verify
-    "q_near_dup_audit" -> """
-      WITH t AS (
-        SELECT doc_id,
-               list_filter(regexp_split_to_array(lower(trim(text)), '[^a-z0-9]+'),
-                           x -> len(x) > 0) AS toks
-        FROM documents
-      ), sh AS (
-        SELECT doc_id,
-               list_distinct(CASE WHEN len(toks) < 3 THEN [array_to_string(toks, ' ')]
-                 ELSE list_transform(range(1, len(toks) - 1),
-                        i -> array_to_string(toks[i:i+2], ' ')) END) AS s
-        FROM t
-      ), sig AS (
-        SELECT doc_id, s,
-               list_transform(range(0, 32), i ->
-                 list_min(list_transform(s, x ->
-                   CAST(CAST(concat('0x', substr(md5(concat(i, ':', x)), 1, 15))
-                        AS UBIGINT) AS BIGINT)))) AS g
-        FROM sh
-      ), bands AS (
-        SELECT doc_id, s, j,
-               md5(concat(CAST(g[2*j+1] AS VARCHAR), ':',
-                          CAST(g[2*j+2] AS VARCHAR))) AS bh
-        FROM (SELECT doc_id, s, g, unnest(range(0, 16)) AS j FROM sig)
-      ), cand AS (
-        SELECT DISTINCT a.doc_id AS id_a, b.doc_id AS id_b,
-               a.s AS sa, b.s AS sb
-        FROM bands a JOIN bands b ON a.j = b.j AND a.bh = b.bh
-        WHERE a.doc_id < b.doc_id
-      ), verified AS (
-        SELECT id_a, id_b,
-               CASE WHEN len(list_distinct(list_concat(sa, sb))) = 0 THEN 0.0
-                 ELSE CAST(len(list_intersect(sa, sb)) AS DOUBLE)
-                      / len(list_distinct(list_concat(sa, sb))) END AS j
-        FROM cand
-      )
-      SELECT id_a, id_b, round(j, 4) AS jaccard FROM verified
-      WHERE j >= 0.7
-      ORDER BY id_a, id_b""",
-
-    "q_embed_neardup" -> """
-      SELECT vec_id AS id_a, vec_id + 10000 AS id_b FROM embeddings
-      ORDER BY id_a, id_b""",
-
-    "q_semantic_dedup" -> """
-      SELECT vec_id FROM embeddings ORDER BY vec_id""",
-
-    "q_containment" -> """
-      WITH base AS (
-        SELECT doc_id, toks FROM (
-          SELECT doc_id,
-                 list_filter(regexp_split_to_array(lower(trim(text)), '[^a-z0-9]+'),
-                             x -> len(x) > 0) AS toks
-          FROM documents)
-        WHERE len(toks) >= 1
-      ), corpus AS (
-        SELECT doc_id, toks FROM base
-        UNION ALL
-        SELECT doc_id + 30000, toks[1:12] FROM base
-      ), sh AS (
-        SELECT doc_id,
-               list_distinct(CASE WHEN len(toks) < 3 THEN [array_to_string(toks, ' ')]
-                 ELSE list_transform(range(1, len(toks) - 1),
-                        i -> array_to_string(toks[i:i+2], ' ')) END) AS s
-        FROM corpus
-      ), pairs AS (
-        SELECT doc_id AS id_a, doc_id + 30000 AS id_b FROM base
-        UNION ALL
-        SELECT a.doc_id, b.doc_id + 30000 FROM base a
-        JOIN base b ON b.doc_id = a.doc_id + 1
-      )
-      SELECT p.id_a, p.id_b,
-             round(CASE WHEN len(sb.s) = 0 THEN 0.0
-               ELSE CAST(len(list_intersect(sa.s, sb.s)) AS DOUBLE) / len(sb.s)
-               END, 4) AS containment
-      FROM pairs p
-      JOIN sh sa ON sa.doc_id = p.id_a
-      JOIN sh sb ON sb.doc_id = p.id_b
-      ORDER BY id_a, id_b""",
-
-    "q_ann_topk" -> """
-      WITH q AS (SELECT vec_id AS qid, CAST(embedding AS DOUBLE[]) AS qe
-                 FROM embeddings WHERE vec_id < 5),
-           scored AS (
-        SELECT q.qid, c.vec_id AS id,
-               row_number() OVER (PARTITION BY q.qid
-                 ORDER BY list_cosine_similarity(CAST(c.embedding AS DOUBLE[]), q.qe) DESC,
-                          c.vec_id ASC) AS rank
-        FROM embeddings c CROSS JOIN q)
-      SELECT qid, id, rank FROM scored WHERE rank <= 5
-      ORDER BY qid, rank""",
-
-    // the int8 quantization replayed: same per-vector max-abs/127
-    // scale, same round-half-away codes, same dequantized ranking
-    "q_ann_quantized" -> """
-      WITH c AS (
-        SELECT vec_id, CAST(embedding AS DOUBLE[]) AS e,
-               list_max(list_transform(CAST(embedding AS DOUBLE[]),
-                 x -> abs(x))) / 127.0 AS s
-        FROM embeddings
-      ), deq AS (
-        SELECT vec_id,
-               CASE WHEN s = 0 THEN list_transform(e, x -> 0.0)
-                 ELSE list_transform(e,
-                   x -> CAST(CAST(round(x / s) AS INTEGER) AS DOUBLE) * s)
-               END AS d
-        FROM c
-      ), q AS (SELECT vec_id AS qid, CAST(embedding AS DOUBLE[]) AS qe
-               FROM embeddings WHERE vec_id < 10),
-           scored AS (
-        SELECT q.qid, deq.vec_id AS id,
-               row_number() OVER (PARTITION BY q.qid
-                 ORDER BY list_cosine_similarity(deq.d, q.qe) DESC,
-                          deq.vec_id ASC) AS rank
-        FROM deq CROSS JOIN q)
-      SELECT qid, id, rank FROM scored WHERE rank <= 5
-      ORDER BY qid, rank""",
-
-    // the hard-negative band replayed: same cosine, same (0.1, 0.9]
-    // band, same (cos DESC, id ASC) tie-break
-    "q_hard_negatives" -> """
-      WITH q AS (SELECT vec_id AS qid, CAST(embedding AS DOUBLE[]) AS qe
-                 FROM embeddings WHERE vec_id < 10),
-           scored AS (
-        SELECT q.qid, c.vec_id AS id,
-               list_cosine_similarity(CAST(c.embedding AS DOUBLE[]), q.qe) AS cos
-        FROM embeddings c CROSS JOIN q),
-           banded AS (
-        SELECT qid, id,
-               row_number() OVER (PARTITION BY qid
-                 ORDER BY cos DESC, id ASC) AS rank
-        FROM scored WHERE cos > 0.1 AND cos <= 0.9)
-      SELECT qid, id, rank FROM banded WHERE rank <= 5
-      ORDER BY qid, rank""",
-
-    "q_ann_lsh" -> """
-      SELECT vec_id AS qid, vec_id AS id FROM embeddings
-      WHERE vec_id < 20 ORDER BY qid""",
-
-    "q_ann_ivf" -> """
-      SELECT vec_id AS qid, vec_id AS id FROM embeddings
-      WHERE vec_id < 10 ORDER BY qid""",
-
-    // Latest prior-or-equal view per purchase; ties (none in the corpus,
-    // but the contract is deterministic anyway) break on view_id DESC —
-    // the operator's tieBreak-ascending-last-wins. events.ts is µs-exact
-    // (no sub-µs component), so CAST(.. AS TIMESTAMP) loses nothing.
-    "q_asof_join" -> """
-      SELECT p.event_id, v.view_id, v.view_value
-      FROM (SELECT event_id, user_id, ts FROM events
-            WHERE event_type = 'purchase') p
-      LEFT JOIN LATERAL (
-        SELECT e.event_id AS view_id, e.value AS view_value
-        FROM events e
-        WHERE e.event_type = 'view' AND e.user_id = p.user_id
-          AND e.ts <= p.ts
-        ORDER BY e.ts DESC, e.event_id DESC LIMIT 1) v ON TRUE
-      ORDER BY p.event_id""",
-
-    "q_asof_tolerance" -> """
-      SELECT p.event_id, v.view_id, v.view_value
-      FROM (SELECT event_id, user_id, ts FROM events
-            WHERE event_type = 'purchase') p
-      LEFT JOIN LATERAL (
-        SELECT e.event_id AS view_id, e.value AS view_value
-        FROM events e
-        WHERE e.event_type = 'view' AND e.user_id = p.user_id
-          AND CAST(e.ts AS TIMESTAMP) < CAST(p.ts AS TIMESTAMP)
-          AND CAST(e.ts AS TIMESTAMP) >=
-              CAST(p.ts AS TIMESTAMP) - INTERVAL 1 HOUR
-        ORDER BY e.ts DESC, e.event_id DESC LIMIT 1) v ON TRUE
-      ORDER BY p.event_id""",
-
-    // Same semantics as q_asof_join on the mod-7 hot keys: the bucketed
-    // plan must be indistinguishable from the plain one by construction.
-    "q_asof_skew" -> """
-      SELECT p.event_id, v.view_id, v.view_value
-      FROM (SELECT event_id, user_id % 7 AS hot_user, ts FROM events
-            WHERE event_type = 'purchase') p
-      LEFT JOIN LATERAL (
-        SELECT e.event_id AS view_id, e.value AS view_value
-        FROM events e
-        WHERE e.event_type = 'view' AND e.user_id % 7 = p.hot_user
-          AND e.ts <= p.ts
-        ORDER BY e.ts DESC, e.event_id DESC LIMIT 1) v ON TRUE
-      ORDER BY p.event_id""",
-
-    // Same-user events within ±3600 s of each purchase. The operator
-    // compares at whole-second resolution (timestamp -> long cast), so the
-    // oracle floors epochs to seconds too (all epochs positive: // == floor).
-    "q_range_join" -> """
-      SELECT p.event_id,
-             count(*) AS n_nearby,
-             max(e.event_id) AS max_id
-      FROM (SELECT event_id, user_id, ts FROM events
-            WHERE event_type = 'purchase') p
-      JOIN events e ON e.user_id = p.user_id
-        AND e.event_id <> p.event_id
-        AND epoch_us(CAST(e.ts AS TIMESTAMP))
-              BETWEEN epoch_us(CAST(p.ts AS TIMESTAMP)) - 3600000000
-                  AND epoch_us(CAST(p.ts AS TIMESTAMP)) + 3600000000
-      GROUP BY p.event_id
-      ORDER BY p.event_id""",
-
-    // BM25 with substring-count tf and n_chars length normalization —
-    // every arithmetic step mirrors Relevance.bm25's expression tree
-    // left-to-right so both engines execute the identical IEEE op
-    // sequence; the lone libm call (ln) is rounded away at 6 dp.
-    "q_bm25" -> """
-      WITH s AS (
-        SELECT CAST(count(*) AS DOUBLE) AS n,
-               avg(CAST(n_chars AS DOUBLE)) AS avgdl,
-               CAST(sum(CASE WHEN CAST((length(text) - length(replace(text, 'vector', ''))) / 6 AS INT) > 0 THEN 1 ELSE 0 END) AS DOUBLE) AS df0,
-               CAST(sum(CASE WHEN CAST((length(text) - length(replace(text, 'stream', ''))) / 6 AS INT) > 0 THEN 1 ELSE 0 END) AS DOUBLE) AS df1,
-               CAST(sum(CASE WHEN CAST((length(text) - length(replace(text, 'window', ''))) / 6 AS INT) > 0 THEN 1 ELSE 0 END) AS DOUBLE) AS df2
-        FROM documents),
-      t AS (
-        SELECT doc_id,
-               CAST(CAST((length(text) - length(replace(text, 'vector', ''))) / 6 AS INT) AS DOUBLE) AS tf0,
-               CAST(CAST((length(text) - length(replace(text, 'stream', ''))) / 6 AS INT) AS DOUBLE) AS tf1,
-               CAST(CAST((length(text) - length(replace(text, 'window', ''))) / 6 AS INT) AS DOUBLE) AS tf2,
-               CAST(n_chars AS DOUBLE) AS dl
-        FROM documents)
-      SELECT doc_id,
-             (CASE WHEN tf0 > 0 THEN 1 ELSE 0 END
-              + CASE WHEN tf1 > 0 THEN 1 ELSE 0 END
-              + CASE WHEN tf2 > 0 THEN 1 ELSE 0 END) AS n_terms,
-             round(
-               ln(1.0 + ((s.n - s.df0) + 0.5) / (s.df0 + 0.5))
-                 * ((tf0 * (1.2 + 1.0)) / (tf0 + 1.2 * ((1.0 - 0.75) + ((0.75 * dl) / s.avgdl))))
-               + ln(1.0 + ((s.n - s.df1) + 0.5) / (s.df1 + 0.5))
-                 * ((tf1 * (1.2 + 1.0)) / (tf1 + 1.2 * ((1.0 - 0.75) + ((0.75 * dl) / s.avgdl))))
-               + ln(1.0 + ((s.n - s.df2) + 0.5) / (s.df2 + 0.5))
-                 * ((tf2 * (1.2 + 1.0)) / (tf2 + 1.2 * ((1.0 - 0.75) + ((0.75 * dl) / s.avgdl)))),
-               6) AS bm25
-      FROM t, s
-      WHERE (CASE WHEN tf0 > 0 THEN 1 ELSE 0 END
-             + CASE WHEN tf1 > 0 THEN 1 ELSE 0 END
-             + CASE WHEN tf2 > 0 THEN 1 ELSE 0 END) > 0
-      ORDER BY doc_id""",
-
-    // both top-50 heads replayed with the same total orders; the RRF
-    // contribution 1/(60+r) in explicit DOUBLE arithmetic (sums have at
-    // most two addends — IEEE-order-free), only integer ranks emitted
-    "q_rrf_fusion" -> """
-      WITH kwr AS (
-        SELECT doc_id, row_number() OVER (ORDER BY tf DESC, doc_id) AS r
-        FROM (SELECT doc_id,
-                CAST((length(text) - length(replace(text, 'vector', '')))
-                     / 6 AS INT) AS tf
-              FROM documents) t
-        WHERE tf > 0),
-      lnr AS (
-        SELECT doc_id, row_number() OVER (ORDER BY n_chars DESC, doc_id) AS r
-        FROM documents),
-      u AS (
-        SELECT doc_id, r, 'kw' AS sys FROM kwr WHERE r <= 50
-        UNION ALL SELECT doc_id, r, 'len' AS sys FROM lnr WHERE r <= 50),
-      f AS (
-        SELECT doc_id,
-               sum(1.0 / (60.0 + CAST(r AS DOUBLE))) AS c,
-               CAST(max(CASE WHEN sys = 'kw' THEN r END) AS BIGINT) AS rank_kw,
-               CAST(max(CASE WHEN sys = 'len' THEN r END) AS BIGINT) AS rank_len
-        FROM u GROUP BY doc_id)
-      SELECT doc_id, rank_kw, rank_len,
-             CAST(row_number() OVER (ORDER BY c DESC, doc_id) AS INT)
-               AS fused_rank
-      FROM f ORDER BY fused_rank""",
-
-    // drift half of the ANN staleness audit: PSI between the training
-    // snapshot (the raw embeddings load) and the corpus after the +0.5f
-    // shifted cohort — float addition is IEEE single in both engines,
-    // binning and the PSI arithmetic mirror q_drift term-for-term
-    "q_ann_recall_audit" -> """
-      WITH a AS (
-        SELECT CAST(floor(CAST(embedding[1] AS DOUBLE) / 0.1) AS BIGINT) AS bin,
-               CAST(count(*) AS BIGINT) AS n_a
-        FROM embeddings WHERE embedding[1] IS NOT NULL GROUP BY 1
-      ), cur AS (
-        SELECT embedding[1] AS e1 FROM embeddings
-        UNION ALL
-        SELECT embedding[1] + CAST(0.5 AS FLOAT) AS e1
-        FROM embeddings WHERE vec_id % 3 = 0
-      ), b AS (
-        SELECT CAST(floor(CAST(e1 AS DOUBLE) / 0.1) AS BIGINT) AS bin,
-               CAST(count(*) AS BIGINT) AS n_b
-        FROM cur WHERE e1 IS NOT NULL GROUP BY 1
-      ), j AS (
-        SELECT coalesce(a.bin, b.bin) AS bin,
-               coalesce(n_a, 0) AS n_a, coalesce(n_b, 0) AS n_b
-        FROM a FULL OUTER JOIN b ON a.bin = b.bin
-      ), t AS (
-        SELECT CAST(sum(n_a) AS BIGINT) AS ta, CAST(sum(n_b) AS BIGINT) AS tb,
-               CAST(count(*) AS BIGINT) AS k
-        FROM j
-      )
-      SELECT bin, n_a, n_b,
-             round(((n_a + 1.0) / (ta + k) - (n_b + 1.0) / (tb + k))
-                   * ln(((n_a + 1.0) / (ta + k)) / ((n_b + 1.0) / (tb + k))),
-                   6) AS psi
-      FROM j CROSS JOIN t ORDER BY bin""",
-
-    // the persistent-index twin replays build + delta + refresh as one
-    // modified-corpus CTE, then token-BM25 (split-on-space tf/df/dl —
-    // the index's tokenized semantics, vs q_bm25's substring tf) with
-    // the identical Okapi operand order
-    "q_bm25_persist" -> """
-      WITH base AS (
-        SELECT doc_id,
-               CASE WHEN doc_id % 11 = 5 THEN text || ' vector'
-                    ELSE text END AS text
-        FROM documents WHERE doc_id % 7 <> 3
-        UNION ALL
-        SELECT doc_id + 10000 AS doc_id, text
-        FROM documents WHERE doc_id % 4 = 0
-      ), tok AS (
-        SELECT doc_id,
-               list_filter(string_split(text, ' '), x -> x <> '') AS w
-        FROM base
-      ), t AS (
-        SELECT doc_id,
-               CAST(len(w) AS DOUBLE) AS dl,
-               CAST(len(list_filter(w, x -> x = 'vector')) AS DOUBLE) AS tf0,
-               CAST(len(list_filter(w, x -> x = 'stream')) AS DOUBLE) AS tf1,
-               CAST(len(list_filter(w, x -> x = 'window')) AS DOUBLE) AS tf2
-        FROM tok
-      ), s AS (
-        SELECT CAST(count(*) AS DOUBLE) AS n,
-               CAST(sum(CAST(dl AS BIGINT)) AS DOUBLE)
-                 / CAST(count(*) AS DOUBLE) AS avgdl,
-               CAST(sum(CASE WHEN tf0 > 0 THEN 1 ELSE 0 END) AS DOUBLE) AS df0,
-               CAST(sum(CASE WHEN tf1 > 0 THEN 1 ELSE 0 END) AS DOUBLE) AS df1,
-               CAST(sum(CASE WHEN tf2 > 0 THEN 1 ELSE 0 END) AS DOUBLE) AS df2
-        FROM t)
-      SELECT doc_id,
-             (CASE WHEN tf0 > 0 THEN 1 ELSE 0 END
-              + CASE WHEN tf1 > 0 THEN 1 ELSE 0 END
-              + CASE WHEN tf2 > 0 THEN 1 ELSE 0 END) AS n_terms,
-             round(
-               ln(1.0 + ((s.n - s.df0) + 0.5) / (s.df0 + 0.5))
-                 * ((tf0 * (1.2 + 1.0)) / (tf0 + 1.2 * ((1.0 - 0.75) + ((0.75 * dl) / s.avgdl))))
-               + ln(1.0 + ((s.n - s.df1) + 0.5) / (s.df1 + 0.5))
-                 * ((tf1 * (1.2 + 1.0)) / (tf1 + 1.2 * ((1.0 - 0.75) + ((0.75 * dl) / s.avgdl))))
-               + ln(1.0 + ((s.n - s.df2) + 0.5) / (s.df2 + 0.5))
-                 * ((tf2 * (1.2 + 1.0)) / (tf2 + 1.2 * ((1.0 - 0.75) + ((0.75 * dl) / s.avgdl)))),
-               6) AS bm25
-      FROM t, s
-      WHERE (CASE WHEN tf0 > 0 THEN 1 ELSE 0 END
-             + CASE WHEN tf1 > 0 THEN 1 ELSE 0 END
-             + CASE WHEN tf2 > 0 THEN 1 ELSE 0 END) > 0
-      ORDER BY doc_id""",
-
-    // phrase counts replayed directly on the (mutated) corpus's token
-    // lists: occurrences of w[i]='value' ∧ w[i+1]='table'
-    "q_bm25_phrase" -> """
-      WITH base AS (
-        SELECT doc_id,
-               CASE WHEN doc_id % 11 = 5 THEN text || ' value table'
-                    ELSE text END AS text
-        FROM documents
-        UNION ALL
-        SELECT doc_id + 10000 AS doc_id, text
-        FROM documents WHERE doc_id % 4 = 0
-      ), tok AS (
-        SELECT doc_id,
-               list_filter(string_split(text, ' '), x -> x <> '') AS w
-        FROM base
-      ), c AS (
-        SELECT doc_id,
-               CAST(len(list_filter(range(1, len(w)),
-                 i -> w[i] = 'value' AND w[i + 1] = 'table')) AS INTEGER)
-                 AS n_phrase
-        FROM tok
-      )
-      SELECT doc_id, n_phrase FROM c WHERE n_phrase > 0 ORDER BY doc_id""",
-
-    // the greedy-chain sloppy phrase replayed with two min-join hops:
-    // for each 'value' start, the minimal next 'table' then the minimal
-    // next 'part'; matches are starts with disp ≤ 3, prox = Σ(3−disp+1)
-    "q_bm25_slop" -> """
-      WITH tok AS (
-        SELECT doc_id,
-               list_filter(string_split(text, ' '), x -> x <> '') AS w
-        FROM documents
-      ), words AS (
-        SELECT doc_id, unnest(w) AS word,
-               generate_subscripts(w, 1) - 1 AS p
-        FROM tok
-      ), p0 AS (SELECT doc_id, p FROM words WHERE word = 'value'),
-         p1 AS (SELECT doc_id, p FROM words WHERE word = 'table'),
-         p2 AS (SELECT doc_id, p FROM words WHERE word = 'part'),
-      c1 AS (
-        SELECT s.doc_id, s.p AS q0, min(a.p) AS q1
-        FROM p0 s JOIN p1 a ON a.doc_id = s.doc_id AND a.p > s.p
-        GROUP BY s.doc_id, s.p
-      ), c2 AS (
-        SELECT c.doc_id, c.q0, min(b.p) AS q2
-        FROM c1 c JOIN p2 b ON b.doc_id = c.doc_id AND b.p > c.q1
-        GROUP BY c.doc_id, c.q0, c.q1
-      ), m AS (
-        SELECT doc_id, q2 - q0 - 2 AS disp FROM c2 WHERE q2 - q0 - 2 <= 3
-      )
-      SELECT doc_id, CAST(count(*) AS INTEGER) AS n_matches,
-             CAST(sum(3 - disp + 1) AS BIGINT) AS prox
-      FROM m GROUP BY doc_id ORDER BY doc_id""",
-
-    // top-k over the persisted index: token-BM25 for the DISTINCT term
-    // set (the Spark side receives 'vector' twice — dedup is part of the
-    // contract under test), then the rank cut the TakeOrdered heap
-    // computes: rounded score desc, doc_id tiebreak, first 25
-    "q_bm25_topk" -> """
-      WITH tok AS (
-        SELECT doc_id,
-               list_filter(string_split(text, ' '), x -> x <> '') AS w
-        FROM documents
-      ), t AS (
-        SELECT doc_id,
-               CAST(len(w) AS DOUBLE) AS dl,
-               CAST(len(list_filter(w, x -> x = 'vector')) AS DOUBLE) AS tf0,
-               CAST(len(list_filter(w, x -> x = 'stream')) AS DOUBLE) AS tf1
-        FROM tok
-      ), s AS (
-        SELECT CAST(count(*) AS DOUBLE) AS n,
-               CAST(sum(CAST(dl AS BIGINT)) AS DOUBLE)
-                 / CAST(count(*) AS DOUBLE) AS avgdl,
-               CAST(sum(CASE WHEN tf0 > 0 THEN 1 ELSE 0 END) AS DOUBLE) AS df0,
-               CAST(sum(CASE WHEN tf1 > 0 THEN 1 ELSE 0 END) AS DOUBLE) AS df1
-        FROM t
-      ), scored AS (
-        SELECT doc_id,
-               (CASE WHEN tf0 > 0 THEN 1 ELSE 0 END
-                + CASE WHEN tf1 > 0 THEN 1 ELSE 0 END) AS n_terms,
-               round(
-                 ln(1.0 + ((s.n - s.df0) + 0.5) / (s.df0 + 0.5))
-                   * ((tf0 * (1.2 + 1.0)) / (tf0 + 1.2 * ((1.0 - 0.75) + ((0.75 * dl) / s.avgdl))))
-                 + ln(1.0 + ((s.n - s.df1) + 0.5) / (s.df1 + 0.5))
-                   * ((tf1 * (1.2 + 1.0)) / (tf1 + 1.2 * ((1.0 - 0.75) + ((0.75 * dl) / s.avgdl)))),
-                 6) AS bm25
-        FROM t, s
-        WHERE tf0 > 0 OR tf1 > 0
-      ), ranked AS (
-        SELECT doc_id, n_terms, bm25,
-               row_number() OVER (ORDER BY bm25 DESC, doc_id) AS rn
-        FROM scored
-      )
-      SELECT doc_id, n_terms, bm25 FROM ranked WHERE rn <= 25
-      ORDER BY bm25 DESC, doc_id""",
-
-    // fusion over the persisted keyword leg: replay token-BM25 for
-    // 'vector' (single term — the chain is one product), head both
-    // rankings at 50, fuse with the same 1/(60+r) contributions
-    "q_rrf_persist" -> """
-      WITH tok AS (
-        SELECT doc_id,
-               list_filter(string_split(text, ' '), x -> x <> '') AS w
-        FROM documents
-      ), t AS (
-        SELECT doc_id,
-               CAST(len(w) AS DOUBLE) AS dl,
-               CAST(len(list_filter(w, x -> x = 'vector')) AS DOUBLE) AS tf0
-        FROM tok
-      ), s AS (
-        SELECT CAST(count(*) AS DOUBLE) AS n,
-               CAST(sum(CAST(dl AS BIGINT)) AS DOUBLE)
-                 / CAST(count(*) AS DOUBLE) AS avgdl,
-               CAST(sum(CASE WHEN tf0 > 0 THEN 1 ELSE 0 END) AS DOUBLE) AS df0
-        FROM t)
-      , scored AS (
-        SELECT doc_id,
-               round(
-                 ln(1.0 + ((s.n - s.df0) + 0.5) / (s.df0 + 0.5))
-                   * ((tf0 * (1.2 + 1.0)) / (tf0 + 1.2 * ((1.0 - 0.75) + ((0.75 * dl) / s.avgdl)))),
-                 6) AS bm25
-        FROM t, s WHERE tf0 > 0
-      ), kwr AS (
-        SELECT doc_id, row_number() OVER (ORDER BY bm25 DESC, doc_id) AS r
-        FROM scored
-      ), lnr AS (
-        SELECT doc_id, row_number() OVER (ORDER BY n_chars DESC, doc_id) AS r
-        FROM documents
-      ), u AS (
-        SELECT doc_id, r, 'kw' AS sys FROM kwr WHERE r <= 50
-        UNION ALL SELECT doc_id, r, 'len' AS sys FROM lnr WHERE r <= 50
-      ), f AS (
-        SELECT doc_id,
-               sum(1.0 / (60.0 + CAST(r AS DOUBLE))) AS c,
-               CAST(max(CASE WHEN sys = 'kw' THEN r END) AS BIGINT) AS rank_kw,
-               CAST(max(CASE WHEN sys = 'len' THEN r END) AS BIGINT) AS rank_len
-        FROM u GROUP BY doc_id)
-      SELECT doc_id, rank_kw, rank_len,
-             CAST(row_number() OVER (ORDER BY c DESC, doc_id) AS INT)
-               AS fused_rank
-      FROM f ORDER BY fused_rank""",
-
-    // DuckDB runs the naive interval join directly (its IEJoin plans it
-    // fine at oracle scale) — the gate proves the REWRITTEN plan returns
-    // the identical result.
-    "q_range_rewrite" -> """
-      WITH p AS (
-        SELECT event_id, epoch_us(CAST(ts AS TIMESTAMP)) AS t
-        FROM events WHERE event_type = 'purchase'
-      ), w AS (
-        SELECT event_id AS w_id,
-               epoch_us(CAST(ts AS TIMESTAMP)) AS lo,
-               epoch_us(CAST(ts AS TIMESTAMP)) + 7200000000 AS hi
-        FROM events WHERE event_type = 'signup' AND event_id % 50 = 0
-      )
-      SELECT p.event_id,
-             CAST(count(*) AS BIGINT) AS n_windows,
-             max(w_id) AS max_window
-      FROM p JOIN w ON p.t >= w.lo AND p.t <= w.hi
-      GROUP BY p.event_id ORDER BY p.event_id""",
-
-    // Replays the whole metric pipeline: row_number ranking with the same
-    // total order, conditional DCG sums, prefix-sum IDCG lookup over
-    // range(1,11), and the zero-relevant conventions.
-    "q_rank_metrics" -> """
-      WITH ranked AS (
-        SELECT o_custkey, o_orderkey, (o_orderstatus = 'F') AS rel,
-               row_number() OVER (PARTITION BY o_custkey
-                                  ORDER BY o_totalprice DESC, o_orderkey) AS pos
-        FROM orders
-      ), per AS (
-        SELECT o_custkey,
-               CAST(sum(CASE WHEN rel THEN 1 ELSE 0 END) AS BIGINT) AS n_rel,
-               CAST(sum(CASE WHEN rel AND pos <= 10 THEN 1 ELSE 0 END) AS BIGINT) AS rel_k,
-               sum(CASE WHEN rel AND pos <= 10 THEN 1.0 / log2(pos + 1.0) ELSE 0 END) AS dcg,
-               min(CASE WHEN rel THEN pos END) AS first_rel
-        FROM ranked GROUP BY o_custkey
-      ), idcg AS (
-        SELECT i AS m, sum(1.0 / log2(i + 1.0)) OVER (ORDER BY i) AS v
-        FROM range(1, 11) t(i)
-      )
-      SELECT per.o_custkey AS custkey, n_rel,
-             round(coalesce(1.0 / first_rel, 0), 6) AS mrr,
-             round(CASE WHEN n_rel > 0 THEN dcg / idcg.v ELSE 0 END, 6) AS ndcg_at_k,
-             round(rel_k / 10.0, 6) AS precision_at_k,
-             round(CASE WHEN n_rel > 0 THEN rel_k * 1.0 / n_rel ELSE 0 END, 6) AS recall_at_k
-      FROM per LEFT JOIN idcg ON least(n_rel, 10) = idcg.m
-      ORDER BY custkey""",
-
-    // Confusion cells as exact integers; po/pe/kappa from the UNROUNDED
-    // cell arithmetic, rounded only on output (matching the Spark side).
-    "q_label_agreement" -> """
-      WITH l AS (
-        SELECT (n_chars >= 200) AS a,
-               (len(text) - len(replace(text, ' ', '')) >= 39) AS b
-        FROM documents
-      ), c AS (
-        SELECT CAST(count(*) AS BIGINT) AS n,
-               CAST(sum(CASE WHEN a AND b THEN 1 ELSE 0 END) AS BIGINT) AS both_pos,
-               CAST(sum(CASE WHEN a AND NOT b THEN 1 ELSE 0 END) AS BIGINT) AS a_only,
-               CAST(sum(CASE WHEN NOT a AND b THEN 1 ELSE 0 END) AS BIGINT) AS b_only,
-               CAST(sum(CASE WHEN NOT a AND NOT b THEN 1 ELSE 0 END) AS BIGINT) AS both_neg
-        FROM l
-      ), k AS (
-        SELECT n, both_pos, a_only, b_only, both_neg,
-               (both_pos + both_neg) * 1.0 / n AS po,
-               ((both_pos + a_only) * 1.0 * (both_pos + b_only)
-                + (b_only + both_neg) * 1.0 * (a_only + both_neg)) / (n * 1.0 * n) AS pe
-        FROM c
-      )
-      SELECT n, both_pos, a_only, b_only, both_neg,
-             round(po, 6) AS po, round(pe, 6) AS pe,
-             round(CASE WHEN pe = 1.0 THEN 0.0 ELSE (po - pe) / (1.0 - pe) END, 6) AS kappa
-      FROM k""",
-
-    // Histogram Mann-Whitney: exact integer numerator 2*P*N*AUC =
-    // sum_s p_s*(2*cnb_s + n_s), one double division at the end.
-    "q_auc" -> """
-      WITH h AS (
-        SELECT n_chars AS s,
-               CAST(sum(CASE WHEN lang = 'en' THEN 1 ELSE 0 END) AS BIGINT) AS p,
-               CAST(sum(CASE WHEN lang = 'en' THEN 0 ELSE 1 END) AS BIGINT) AS ng
-        FROM documents GROUP BY n_chars
-      ), w AS (
-        SELECT p, ng,
-               coalesce(sum(ng) OVER (ORDER BY s
-                 ROWS BETWEEN UNBOUNDED PRECEDING AND 1 PRECEDING), 0) AS cnb
-        FROM h
-      ), t AS (
-        SELECT CAST(sum(p + ng) AS BIGINT) AS n,
-               CAST(sum(p) AS BIGINT) AS n_pos,
-               CAST(sum(ng) AS BIGINT) AS n_neg,
-               CAST(sum(p * (2 * cnb + ng)) AS BIGINT) AS num
-        FROM w
-      ), a AS (
-        SELECT n, n_pos, n_neg,
-               CASE WHEN n_pos > 0 AND n_neg > 0
-                    THEN num / (2.0 * n_pos * n_neg) ELSE 0.5 END AS auc_raw
-        FROM t
-      )
-      SELECT n, n_pos, n_neg, round(auc_raw, 6) AS auc,
-             round(2.0 * auc_raw - 1.0, 6) AS gini
-      FROM a""",
-
-    "q_auc_by" -> """
-      WITH h AS (
-        SELECT source AS grp, n_chars AS s,
-               CAST(sum(CASE WHEN lang = 'en' THEN 1 ELSE 0 END) AS BIGINT) AS p,
-               CAST(sum(CASE WHEN lang = 'en' THEN 0 ELSE 1 END) AS BIGINT) AS ng
-        FROM documents GROUP BY 1, 2
-      ), w AS (
-        SELECT grp, p, ng,
-               coalesce(sum(ng) OVER (PARTITION BY grp ORDER BY s
-                 ROWS BETWEEN UNBOUNDED PRECEDING AND 1 PRECEDING), 0) AS cnb
-        FROM h
-      ), t AS (
-        SELECT grp, CAST(sum(p + ng) AS BIGINT) AS n,
-               CAST(sum(p) AS BIGINT) AS n_pos,
-               CAST(sum(ng) AS BIGINT) AS n_neg,
-               CAST(sum(p * (2 * cnb + ng)) AS BIGINT) AS num
-        FROM w GROUP BY grp
-      ), a AS (
-        SELECT grp, n, n_pos, n_neg,
-               CASE WHEN n_pos > 0 AND n_neg > 0
-                    THEN num / (2.0 * n_pos * n_neg) ELSE 0.5 END AS auc_raw
-        FROM t
-      )
-      SELECT grp AS source, n, n_pos, n_neg, round(auc_raw, 6) AS auc,
-             round(2.0 * auc_raw - 1.0, 6) AS gini
-      FROM a ORDER BY source""",
-
-    // Integer basis points: every sum is exact; the oracle replays the
-    // same cents/squared-error folds and divides once per cell.
-    "q_calibration" -> """
-      WITH b AS (
-        SELECT least((n_chars % 101) // 10, 9) AS bin,
-               n_chars % 101 AS c,
-               CASE WHEN doc_id % 4 = 0 THEN 1 ELSE 0 END AS y
-        FROM documents
-      )
-      SELECT bin, CAST(count(*) AS BIGINT) AS n,
-             CAST(sum(y) AS BIGINT) AS n_pos,
-             round(sum(c) / (100.0 * count(*)), 6) AS mean_pred,
-             round(sum(y) * 1.0 / count(*), 6) AS frac_pos,
-             round(sum((c - 100 * y) * (c - 100 * y)) / (10000.0 * count(*)), 6) AS brier
-      FROM b GROUP BY bin ORDER BY bin""",
-
-    // The single-batch fixture makes batch 0's audit the whole table's.
-    "q_stream_dq" -> """
-      WITH m AS (
-        SELECT CAST(count(*) AS BIGINT) AS n,
-               CAST(count(user_id) AS BIGINT) AS c_uid,
-               CAST(count(DISTINCT event_id) AS BIGINT) AS u_eid,
-               CAST(count(DISTINCT user_id) AS BIGINT) AS u_uid,
-               CAST(sum(CASE WHEN value >= 0.0 THEN 1 ELSE 0 END) AS BIGINT) AS nn,
-               CAST(sum(CASE WHEN event_type = 'purchase' THEN 1 ELSE 0 END) AS BIGINT) AS pur
-        FROM events
-      ), r AS (
-        SELECT CAST(0 AS BIGINT) AS batch_id, 'completeness' AS "check",
-               'user_id' AS "column", round(c_uid * 1.0 / n, 6) AS value,
-               CAST(1.0 AS DOUBLE) AS threshold FROM m
-        UNION ALL SELECT 0, 'uniqueness', 'event_id', round(u_eid * 1.0 / n, 6), CAST(1.0 AS DOUBLE) FROM m
-        UNION ALL SELECT 0, 'uniqueness', 'user_id', round(u_uid * 1.0 / n, 6), CAST(0.5 AS DOUBLE) FROM m
-        UNION ALL SELECT 0, 'compliance', 'value_nonneg', round(nn * 1.0 / n, 6), CAST(1.0 AS DOUBLE) FROM m
-        UNION ALL SELECT 0, 'compliance', 'purchase_share', round(pur * 1.0 / n, 6), CAST(0.25 AS DOUBLE) FROM m
-      )
-      SELECT batch_id, "check", "column", value, threshold,
-             (value >= threshold) AS passed
-      FROM r ORDER BY "check", "column"""",
-
-    // Suggestions are conditional rows: uniqueness only when the column
-    // is key-like on this corpus, bounds only for numerics.
-    "q_dq_suggest" -> """
-      WITH m AS (
-        SELECT CAST(count(*) AS BIGINT) AS n,
-               CAST(count(doc_id) AS BIGINT) AS c_doc,
-               CAST(count(DISTINCT doc_id) AS BIGINT) AS u_doc,
-               CAST(count(text) AS BIGINT) AS c_text,
-               CAST(count(DISTINCT text) AS BIGINT) AS u_text,
-               CAST(count(lang) AS BIGINT) AS c_lang,
-               CAST(count(DISTINCT lang) AS BIGINT) AS u_lang,
-               CAST(count(source) AS BIGINT) AS c_src,
-               CAST(count(DISTINCT source) AS BIGINT) AS u_src,
-               CAST(count(n_chars) AS BIGINT) AS c_nc,
-               CAST(count(DISTINCT n_chars) AS BIGINT) AS u_nc,
-               CAST(min(doc_id) AS DOUBLE) AS mn_doc, CAST(max(doc_id) AS DOUBLE) AS mx_doc,
-               CAST(min(n_chars) AS DOUBLE) AS mn_nc, CAST(max(n_chars) AS DOUBLE) AS mx_nc
-        FROM documents
-      ), r AS (
-        SELECT 'doc_id' AS "column", 'completeness' AS "check",
-               CASE WHEN c_doc = n THEN CAST(1.0 AS DOUBLE) ELSE floor((c_doc * 1.0 / n) * 100.0) / 100 END AS threshold FROM m WHERE n > 0
-        UNION ALL SELECT 'doc_id', 'uniqueness', CAST(1.0 AS DOUBLE) FROM m WHERE n > 0 AND u_doc = n
-        UNION ALL SELECT 'doc_id', 'min_at_least', mn_doc FROM m WHERE mn_doc IS NOT NULL
-        UNION ALL SELECT 'doc_id', 'max_at_most', mx_doc FROM m WHERE mx_doc IS NOT NULL
-        UNION ALL SELECT 'text', 'completeness', CASE WHEN c_text = n THEN CAST(1.0 AS DOUBLE) ELSE floor((c_text * 1.0 / n) * 100.0) / 100 END FROM m WHERE n > 0
-        UNION ALL SELECT 'text', 'uniqueness', CAST(1.0 AS DOUBLE) FROM m WHERE n > 0 AND u_text = n
-        UNION ALL SELECT 'lang', 'completeness', CASE WHEN c_lang = n THEN CAST(1.0 AS DOUBLE) ELSE floor((c_lang * 1.0 / n) * 100.0) / 100 END FROM m WHERE n > 0
-        UNION ALL SELECT 'lang', 'uniqueness', CAST(1.0 AS DOUBLE) FROM m WHERE n > 0 AND u_lang = n
-        UNION ALL SELECT 'source', 'completeness', CASE WHEN c_src = n THEN CAST(1.0 AS DOUBLE) ELSE floor((c_src * 1.0 / n) * 100.0) / 100 END FROM m WHERE n > 0
-        UNION ALL SELECT 'source', 'uniqueness', CAST(1.0 AS DOUBLE) FROM m WHERE n > 0 AND u_src = n
-        UNION ALL SELECT 'n_chars', 'completeness', CASE WHEN c_nc = n THEN CAST(1.0 AS DOUBLE) ELSE floor((c_nc * 1.0 / n) * 100.0) / 100 END FROM m WHERE n > 0
-        UNION ALL SELECT 'n_chars', 'uniqueness', CAST(1.0 AS DOUBLE) FROM m WHERE n > 0 AND u_nc = n
-        UNION ALL SELECT 'n_chars', 'min_at_least', mn_nc FROM m WHERE mn_nc IS NOT NULL
-        UNION ALL SELECT 'n_chars', 'max_at_most', mx_nc FROM m WHERE mx_nc IS NOT NULL
-      )
-      SELECT "column", "check", threshold
-      FROM r ORDER BY "column", "check"""",
-
-    // One metrics CTE = the one-Aggregate-pass contract; each check is a
-    // ratio of exact counts (or one avg), rounded 6dp, passed = value >=
-    // threshold on the ROUNDED value exactly as the Spark side computes.
-    "q_dq_audit" -> """
-      WITH m AS (
-        SELECT CAST(count(*) AS BIGINT) AS n,
-               CAST(count(text) AS BIGINT) AS c_text,
-               CAST(count(DISTINCT doc_id) AS BIGINT) AS u_doc,
-               CAST(count(DISTINCT lang) AS BIGINT) AS u_lang,
-               CAST(sum(CASE WHEN lang = 'en' THEN 1 ELSE 0 END) AS BIGINT) AS en_cnt,
-               CAST(sum(CASE WHEN n_chars >= 100 THEN 1 ELSE 0 END) AS BIGINT) AS len_cnt,
-               avg(n_chars) AS mean_chars
-        FROM documents
-      ), r AS (
-        SELECT 'completeness' AS "check", 'text' AS "column",
-               round(c_text * 1.0 / n, 6) AS value, CAST(1.0 AS DOUBLE) AS threshold FROM m
-        UNION ALL SELECT 'uniqueness', 'doc_id', round(u_doc * 1.0 / n, 6), CAST(1.0 AS DOUBLE) FROM m
-        UNION ALL SELECT 'uniqueness', 'lang', round(u_lang * 1.0 / n, 6), CAST(0.5 AS DOUBLE) FROM m
-        UNION ALL SELECT 'compliance', 'english_share', round(en_cnt * 1.0 / n, 6), CAST(0.9 AS DOUBLE) FROM m
-        UNION ALL SELECT 'compliance', 'min_len_100', round(len_cnt * 1.0 / n, 6), CAST(0.75 AS DOUBLE) FROM m
-        UNION ALL SELECT 'mean_at_least', 'n_chars', round(mean_chars, 6), CAST(100.0 AS DOUBLE) FROM m
-      )
-      SELECT "check", "column", value, threshold, (value >= threshold) AS passed
-      FROM r ORDER BY "check", "column"""",
-
-    "q_stats_skip" -> """
-      SELECT c_custkey AS id, c_mktsegment AS segment, c_acctbal AS acctbal
-      FROM customer
-      WHERE c_custkey <= 120 AND c_acctbal > 0.0
-      ORDER BY id""",
-
-    "q_pushdown_skip" -> """
-      SELECT c_custkey AS id, c_mktsegment AS segment, c_acctbal AS acctbal
-      FROM customer
-      WHERE c_custkey <= 120 AND c_acctbal > 0.0
-      ORDER BY id""",
-
-    // the file-skip REQUIRE runs Spark-side; the result is simply every
-    // customer sharing customer 42's name (their unique name in
-    // practice — the oracle does not assume it)
-    "q_bloom_skip" -> """
-      SELECT c_custkey AS id, c_name AS name, c_acctbal AS acctbal
-      FROM customer
-      WHERE c_name = (SELECT c_name FROM customer WHERE c_custkey = 42)
-      ORDER BY id""",
-
-    "q_bucket_join" -> """
-      SELECT c_mktsegment, CAST(count(*) AS BIGINT) AS n,
-             CAST(sum(CAST(o_totalprice AS DECIMAL(18,2))) AS DOUBLE) AS rev
-      FROM orders JOIN customer ON o_custkey = c_custkey
-      GROUP BY c_mktsegment ORDER BY c_mktsegment""",
-
-    // the restore rolled back to the original load exactly
-    "q_restore" -> """
-      SELECT c_custkey AS id, c_name AS name, c_acctbal AS acctbal
-      FROM customer ORDER BY id""",
-
-    // the tail-maintained mirror, after draining the rollback's inverse
-    // deltas, equals the original load — the mid-gate REQUIREs pin the
-    // delta SHAPE (20 re-inserts, paired update images, zero deletes)
-    "q_restore_cdf" -> """
-      SELECT c_custkey AS id, c_name AS name, c_acctbal AS acctbal
-      FROM customer WHERE c_custkey <= 140 ORDER BY id""",
-
-    // corrupt → restore → refresh lands the index exactly where a fresh
-    // build on the original corpus would: the probe sees planted copies
-    "q_restore_index" -> """
-      SELECT doc_id + 10000 AS new_id, doc_id AS dup_of,
-             CAST(1.0 AS DOUBLE) AS jaccard
-      FROM documents WHERE doc_id % 4 = 0 ORDER BY new_id""",
-
-    // lag → vacuum → refresh: the final corpus = originals minus the
-    // %9 delete stripe (updates keep identity; the probe copies the
-    // CURRENT text) plus the round-one +10000 copies — every surviving
-    // %4 id self-pairs at exactly 1.0
-    "q_vacuum_index" -> """
-      SELECT new_id, dup_of, CAST(1.0 AS DOUBLE) AS jaccard FROM (
-        SELECT doc_id + 20000 AS new_id, doc_id AS dup_of
-        FROM documents WHERE doc_id % 4 = 0 AND doc_id % 9 <> 2
-        UNION ALL
-        SELECT doc_id + 30000 AS new_id, doc_id + 10000 AS dup_of
-        FROM documents WHERE doc_id % 4 = 0
-      ) ORDER BY new_id""",
-
-    // the pinned commit predates both mutations → the original load
-    "q_time_travel" -> """
-      SELECT c_custkey AS id, c_name AS name, c_acctbal AS acctbal
-      FROM customer WHERE c_custkey <= 200 ORDER BY id""",
-
-    "q_schema_evolve" -> """
-      SELECT c_custkey AS id, c_name AS name,
-             CASE WHEN c_custkey <= 100 THEN 'gold' END AS tier
-      FROM customer WHERE c_custkey <= 300 ORDER BY id""",
-
-    // IVM oracle: recompute the FINAL state from scratch — the Spark side
-    // answers from the delta-maintained view, so equality is the proof.
-    "q_ivm" -> """
-      WITH finals AS (
-        SELECT CASE WHEN o_orderkey <= 500 THEN 'X'
-                    ELSE o_orderstatus END AS status,
-               o_totalprice AS total
-        FROM orders
-        WHERE o_orderkey <= 1500
-           OR (o_orderkey >= 2001 AND o_orderkey <= 2100))
-      SELECT status, CAST(count(*) AS BIGINT) AS n,
-             CAST(sum(CAST(total AS DECIMAL(18,2))) AS DOUBLE) AS sum_total
-      FROM finals GROUP BY status ORDER BY status""",
-
-    "q_ivm_join" -> """
-      WITH fo AS (
-        SELECT o_orderkey AS okey,
-               CASE WHEN o_orderkey <= 300 THEN 7 ELSE o_custkey END AS ckey,
-               o_totalprice AS total
-        FROM orders
-        WHERE o_orderkey <= 1800 OR (o_orderkey BETWEEN 2001 AND 2100)
-      ), fc AS (
-        SELECT c_custkey AS ckey,
-               CASE WHEN c_custkey <= 100 THEN 'MOVED' ELSE c_mktsegment END AS seg
-        FROM customer
-        WHERE c_custkey <= 1100 OR (c_custkey BETWEEN 1201 AND 1300)
-      )
-      SELECT fo.okey, fo.ckey, fo.total, fc.seg, CAST(1 AS BIGINT) AS __m
-      FROM fo JOIN fc ON fo.ckey = fc.ckey ORDER BY fo.okey""",
-
-    "q_vacuum" -> """
-      SELECT doc_id,
-             CAST(CASE WHEN doc_id % 10 = 0 THEN -1
-                       ELSE length(text) END AS BIGINT) AS v,
-             TRUE AS gc_ok
-      FROM documents
-      WHERE doc_id % 7 <> 3
-      ORDER BY doc_id""",
-
-    // CDF replay: the same three mutations expressed as set algebra over
-    // the raw table. A SET matching the old value emits nothing, hence
-    // the guard on the update images — IS DISTINCT FROM, not <>, because
-    // ChangeFeed's compare is null-safe: a NULL acctbal DOES differ from
-    // 0.0 and must emit an update pair.
-    "q_cdf" -> """
-      WITH base AS (
-        SELECT c_custkey AS id, c_name AS name, c_acctbal AS acctbal
-        FROM customer WHERE c_custkey <= 200)
-      SELECT id, name, acctbal, _change_type FROM (
-        SELECT id, name, acctbal, 'update_preimage' AS _change_type
-        FROM base WHERE id <= 100 AND acctbal IS DISTINCT FROM 0.0
-        UNION ALL
-        SELECT id, name, 0.0, 'update_postimage'
-        FROM base WHERE id <= 100 AND acctbal IS DISTINCT FROM 0.0
-        UNION ALL
-        SELECT id, name, acctbal, 'delete' FROM base WHERE id > 150
-        UNION ALL
-        SELECT c_custkey, c_name, c_acctbal, 'insert' FROM customer
-        WHERE c_custkey > 200 AND c_custkey <= 210)
-      ORDER BY id, _change_type""",
-
-    // the mirror after draining all three rounds = the source's final
-    // state: zeroed balances for id <= 100, ids > 150 deleted (except
-    // the late 201..210 inserts)
-    "q_cdf_tail" -> """
-      SELECT c_custkey AS id, c_name AS name,
-             CASE WHEN c_custkey <= 100 THEN CAST(0.0 AS DOUBLE)
-                  ELSE c_acctbal END AS acctbal
-      FROM customer
-      WHERE c_custkey <= 150 OR (c_custkey > 200 AND c_custkey <= 210)
-      ORDER BY id""",
-
-    "q_zorder_skip" -> """
-      SELECT o_orderkey AS okey, o_custkey AS cust, o_totalprice AS total
-      FROM orders
-      WHERE o_custkey < 100 AND o_totalprice > 200000.0
-      ORDER BY okey""",
-
-    // Efraimidis–Spirakis priorities on the shared md5 draw; the float
-    // priority is ORDER-only (never output), so a last-ulp ln() divergence
-    // between engines cannot flip a hash compare.
-    "q_weighted_sample" -> """
-      SELECT doc_id, lang FROM (
-        SELECT doc_id, lang,
-               ln((CAST(concat('0x', substr(md5(text), 1, 8)) AS UBIGINT) + 0.5)
-                  / 4294967296.0) / CAST(n_chars AS DOUBLE) AS p
-        FROM documents
-        ORDER BY p DESC, doc_id ASC LIMIT 50)
-      ORDER BY doc_id""",
-  )
+    Fixtures.liveTempDirs(prefix)
 }

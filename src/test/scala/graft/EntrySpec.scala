@@ -21,6 +21,15 @@ class EntrySpec extends AnyFunSuite with SparkTestBase {
     assert(missing.isEmpty, s"oracleSql without queries: $missing")
   }
 
+  test("Gate.index rejects a duplicated gate name") {
+    val g = graft.gates.Gate("q_twice", (s, _) => s.emptyDataFrame, "SELECT 1")
+    val e = intercept[IllegalArgumentException] {
+      graft.gates.Gate.index(Seq(g, g.copy(oracle = "SELECT 2")))
+    }
+    assert(e.getMessage.contains("q_twice"))
+    assert(SparkEntry.queries.size == SparkEntry.all.size)
+  }
+
   test("q_find_unique returns exactly the keyed row") {
     val rows = SparkEntry.queries("q_find_unique")(spark, sfDir).collect()
     assert(rows.length == 1 && rows(0).getAs[Long]("c_custkey") == 42L)

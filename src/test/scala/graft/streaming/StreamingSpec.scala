@@ -343,4 +343,20 @@ class StreamingSpec extends AnyFunSuite with SparkTestBase {
     assert(t.snapshot().select("id").as[Long].collect().sorted.toSeq == Seq(1L, 2L, 3L, 4L))
     assert(StoreSink.lastBatch(cat, t, "mq").nonEmpty)
   }
+
+  test("awaitOrStop stops a stream that overruns its budget and names it") {
+    // a rate source never runs dry, so the query can only end by the budget
+    val q = spark.readStream.format("rate").option("rowsPerSecond", 1).load()
+      .writeStream.format("noop")
+      .option("checkpointLocation",
+        java.nio.file.Files.createTempDirectory("graft-await-q").toString)
+      .start()
+    try {
+      val e = intercept[IllegalStateException] {
+        graft.gates.Fixtures.awaitOrStop(q, "rate_forever", budgetMs = 1000L)
+      }
+      assert(e.getMessage.contains("rate_forever"))
+      assert(!q.isActive, "the overrun query must be stopped")
+    } finally q.stop()
+  }
 }
