@@ -1,8 +1,7 @@
 package graft.pipeline
 
-import graft.query.{BoolF, F}
 import graft.store.{ConnectOrCreate, Txn}
-import org.apache.spark.sql.{Column, DataFrame}
+import org.apache.spark.sql.{Column, DataFrame, Observation}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
 
@@ -86,8 +85,7 @@ object Stages {
   def runLocator(store: PipelineStore, extractor: PlacesExtractor): StageMetrics = {
     // catalog-level partition pruning: only the status=NULL slice is listed
     val slice = store.urls.snapshotSlice(Map("status" -> null)).filter(pendingCond)
-    val processed = slice.count()
-    if (processed == 0) return StageMetrics(0, 0, 0, 0, 0)
+    if (slice.isEmpty) return StageMetrics(0, 0, 0, 0, 0)
 
     val extracted = extractor.extract(slice).cache()
     // URL validity gate + geo exclusion: drop "United States" addresses,
@@ -110,18 +108,18 @@ object Stages {
     val okSources = extracted.select(col("sourceId").as("id")).distinct()
 
     var inserted = 0L
-    var succeeded = 0L
+    var flips = (0L, 0L)
     Retry.onConflict() {
       Txn.run(store.catalog) { tx =>
         inserted = tx.createMany(store.places, newPlaces, skipDuplicates = true)
-        succeeded = tx.updateWhereIn(store.urls, "id", okSources, pendingCond,
-          Map("status" -> lit(true)))
-        tx.updateMany(store.urls, F.raw(pendingCond),
-          Map("status" -> lit(false), "notes" -> lit("extraction failed")))
+        flips = tx.updateWhereIn(store.urls, "id", okSources, pendingCond,
+          Map("status" -> lit(true)),
+          otherwise = Map("status" -> lit(false), "notes" -> lit("extraction failed")))
       }
     }
     extracted.unpersist()
-    val m = StageMetrics(processed, succeeded, processed - succeeded, 0, inserted)
+    val (succeeded, failed) = flips
+    val m = StageMetrics(succeeded + failed, succeeded, failed, 0, inserted)
     notify(store, "Places_Locator", "locator run complete", m)
     m
   }
@@ -137,8 +135,7 @@ object Stages {
   def runEnricher(store: PipelineStore, extractor: WebsiteExtractor,
                   vocab: Seq[String] = ServiceVocabulary.default): StageMetrics = {
     val slice = store.places.snapshotSlice(Map("status" -> null)).filter(pendingCond)
-    val processed = slice.count()
-    if (processed == 0) return StageMetrics(0, 0, 0, 0, 0)
+    if (slice.isEmpty) return StageMetrics(0, 0, 0, 0, 0)
 
     val vocabArr = array(vocab.map(lit): _*)
     // vocabulary constraint + dedup (scrapeWebsite.ts:152,188,227)
@@ -146,7 +143,6 @@ object Stages {
       .withColumn("servicesOffered",
         array_distinct(array_intersect(coalesce(col("servicesOffered"),
           array().cast(ArrayType(StringType))), vocabArr)))
-      .cache()
 
     val accepted = extracted
       .filter(!coalesce(col("phoneNumber").contains("+1"), lit(false)))
@@ -184,19 +180,19 @@ object Stages {
 
     val acceptedKeys = accepted.select(col("sourceId").as("id"))
     var inserted = 0L
-    var succeeded = 0L
+    var flips = (0L, 0L)
     Retry.onConflict() {
       Txn.run(store.catalog) { tx =>
         inserted = tx.createNested(store.companies, companyBatch, Seq(tagsNested),
           skipDuplicates = true)
-        succeeded = tx.updateWhereIn(store.places, "id", acceptedKeys, pendingCond,
-          Map("status" -> lit(true)))
-        tx.updateMany(store.places, F.raw(pendingCond),
-          Map("status" -> lit(false), "notes" -> lit("skipped: gate or no extraction")))
+        flips = tx.updateWhereIn(store.places, "id", acceptedKeys, pendingCond,
+          Map("status" -> lit(true)),
+          otherwise = Map("status" -> lit(false), "notes" -> lit("skipped: gate or no extraction")))
       }
     }
-    extracted.unpersist(); accepted.unpersist()
-    val m = StageMetrics(processed, succeeded, 0, processed - succeeded, inserted)
+    accepted.unpersist()
+    val (succeeded, skipped) = flips
+    val m = StageMetrics(succeeded + skipped, succeeded, 0, skipped, inserted)
     notify(store, "Website_Content_Scrapper", "enricher run complete", m)
     m
   }
@@ -210,65 +206,80 @@ object Stages {
     * links), reset the source PlaceEntry to pending
     * (`runner/syncCrm.ts:107-125`). */
   def runCrmSync(store: PipelineStore, sink: CrmSink): StageMetrics = {
-    val companies = store.companies.snapshot()
-    val events = store.crmEvents.snapshot()
-    val links = store.companyServices.snapshot()
-    val services = store.services.snapshot()
-
-    // "never synced, has email" + relation hydration (syncCrm.ts:60-69),
-    // as one set operation: anti-join + not-null filter + M-N collect_list
-    val candidates = companies
-      .join(events.select(col("companyId").as("id")), Seq("id"), "left_anti")
-      .filter(col("emailAddress").isNotNull)
-      .cache()
-    val processed = candidates.count()
-    if (processed == 0) return StageMetrics(0, 0, 0, 0, 0)
-
-    val svcNames = links
-      .join(services.select(col("id").as("B"), col("name").as("serviceName")), Seq("B"))
-      .groupBy(col("A").as("id"))
-      .agg(sort_array(collect_list(col("serviceName"))).as("serviceNames"))
-
-    val hydrated = candidates.join(svcNames, Seq("id"), "left")
-      .withColumn("serviceNames",
-        coalesce(col("serviceNames"), array().cast(ArrayType(StringType))))
-      .cache()
-
-    val toSkip = hydrated.filter(size(col("serviceNames")) === 0).cache()
-    val toSync = hydrated.filter(size(col("serviceNames")) > 0)
-      // tag assembly [industry, location, ...services], deduped
-      // (syncCrm.ts activity:141)
-      .withColumn("tags", array_distinct(concat(
-        filter(array(col("industry"), col("location")), _.isNotNull),
-        col("serviceNames"))))
-
-    val outcomes = sink.sync(toSync).cache()
-    val newEvents = outcomes.select(
-      keyId("ev", col("companyId")).as("id"),
-      col("companyId"),
-      col("ok").as("status"),
-      col("notes"),
-      nullT.as("createdAt"), nullT.as("updatedAt"))
-
-    val skipKeys = toSkip.select("id")
-    val skipUrls = toSkip.select(col("websiteUrl").as("url"))
-    val skipped = toSkip.count()
+    var m = StageMetrics(0, 0, 0, 0, 0)
+    // every frame is built inside the retried body: an Observation fills
+    // once, so a retried transaction must observe its own run
     Retry.onConflict() {
-      Txn.run(store.catalog) { tx =>
-        if (skipped > 0) {
-          // compensation: drop the companies + their links, requeue sources
-          tx.deleteWhereIn(store.companies, "id", skipKeys)
-          tx.deleteWhereIn(store.companyServices, "A", skipKeys.withColumnRenamed("id", "A"))
-          tx.updateWhereIn(store.places, "url", skipUrls, lit(true),
-            Map("status" -> nullB, "notes" -> lit("requeued: no services")))
+      val companies = store.companies.snapshot()
+      val events = store.crmEvents.snapshot()
+      val links = store.companyServices.snapshot()
+      val services = store.services.snapshot()
+
+      // "never synced, has email" + relation hydration (syncCrm.ts:60-69),
+      // as one set operation: anti-join + not-null filter + M-N collect_list
+      val candidates = companies
+        .join(events.select(col("companyId").as("id")), Seq("id"), "left_anti")
+        .filter(col("emailAddress").isNotNull)
+
+      val svcNames = links
+        .join(services.select(col("id").as("B"), col("name").as("serviceName")), Seq("B"))
+        .groupBy(col("A").as("id"))
+        .agg(sort_array(collect_list(col("serviceName"))).as("serviceNames"))
+
+      // ONE action freezes the hydrated candidates and counts them and the
+      // zero-service ones on the way
+      val census = new Observation()
+      val hydrated = candidates.join(svcNames, Seq("id"), "left")
+        .withColumn("serviceNames",
+          coalesce(col("serviceNames"), array().cast(ArrayType(StringType))))
+        .observe(census, count(lit(1)).as("n"),
+          count(when(size(col("serviceNames")) === 0, 1)).as("skip"))
+        .localCheckpoint()
+      val counts = census.get
+      val processed = counts("n").asInstanceOf[Long]
+      val skipped = counts("skip").asInstanceOf[Long]
+
+      if (processed > 0) {
+        val toSkip = hydrated.filter(size(col("serviceNames")) === 0)
+        val toSync = hydrated.filter(size(col("serviceNames")) > 0)
+          // tag assembly [industry, location, ...services], deduped
+          // (syncCrm.ts activity:141)
+          .withColumn("tags", array_distinct(concat(
+            filter(array(col("industry"), col("location")), _.isNotNull),
+            col("serviceNames"))))
+
+        // the outcome counts ride the events insert's checkpoint, which
+        // runs the sink exactly once
+        val outcomeCounts = new Observation()
+        val outcomes = sink.sync(toSync)
+          .observe(outcomeCounts, count(when(col("ok"), 1)).as("ok"),
+            count(when(!col("ok"), 1)).as("failed"))
+        val newEvents = outcomes.select(
+          keyId("ev", col("companyId")).as("id"),
+          col("companyId"),
+          col("ok").as("status"),
+          col("notes"),
+          nullT.as("createdAt"), nullT.as("updatedAt"))
+
+        val skipKeys = toSkip.select("id")
+        val skipUrls = toSkip.select(col("websiteUrl").as("url"))
+        Txn.run(store.catalog) { tx =>
+          if (skipped > 0) {
+            // compensation: drop the companies + their links, requeue sources
+            tx.deleteWhereIn(store.companies, "id", skipKeys)
+            tx.deleteWhereIn(store.companyServices, "A", skipKeys.withColumnRenamed("id", "A"))
+            tx.updateWhereIn(store.places, "url", skipUrls, lit(true),
+              Map("status" -> nullB, "notes" -> lit("requeued: no services")))
+          }
+          tx.createMany(store.crmEvents, newEvents, skipDuplicates = true)
         }
-        tx.createMany(store.crmEvents, newEvents, skipDuplicates = true)
+        val outcome = outcomeCounts.get
+        val succeeded = outcome("ok").asInstanceOf[Long]
+        val failed = outcome("failed").asInstanceOf[Long]
+        m = StageMetrics(processed, succeeded, failed, skipped, succeeded + failed)
       }
     }
-    val succeeded = outcomes.filter(col("ok")).count()
-    val failed = outcomes.filter(!col("ok")).count()
-    candidates.unpersist(); hydrated.unpersist(); toSkip.unpersist(); outcomes.unpersist()
-    val m = StageMetrics(processed, succeeded, failed, skipped, succeeded + failed)
+    if (m.processed == 0) return m
     notify(store, "CRM_Sync", "crm sync run complete", m)
     m
   }

@@ -10,6 +10,10 @@ import org.apache.spark.sql.types._
   * slices get rewritten), and the matched/inserted row count. */
 private[store] final case class Staged(next: DataFrame, touched: Set[String], n: Long)
 
+/** What an update's staging needs from the rows it rewrites: rows per
+  * branch, and the slices they leave and land in. */
+private[store] final case class UpdateCensus(n: IndexedSeq[Long], touched: Set[String])
+
 /** Isolation levels accepted by `\$transaction`
   * (`internal/prismaNamespace.ts:885-892`). The store ALWAYS provides
   * snapshot reads (manifest resolved once per txn) with an optimistic
@@ -622,15 +626,59 @@ final class GraftTable(
     * `SET a = b, b = a` swaps (Postgres semantics) instead of reading a
     * half-rewritten row. */
   private def withSet(df: DataFrame, cond: Column, set: Map[String, Column]): DataFrame =
+    withSets(df, Seq(cond -> set))
+
+  /** [[withSet]] with several (condition, SET) branches, first match wins:
+    * the two-branch update of [[stagedUpdateWhereIn]] rewrites both
+    * branches in the same single projection. */
+  private def withSets(df: DataFrame, branches: Seq[(Column, Map[String, Column])]): DataFrame = {
+    val touchesUpdatedAt = schema.fieldNames.contains("updatedAt") &&
+      timestampCols.contains("updatedAt")
     df.select(df.columns.toIndexedSeq.map { c =>
-      set.get(c) match {
-        case Some(newVal) => when(cond, newVal).otherwise(col(c)).as(c)
-        case None if c == "updatedAt" && schema.fieldNames.contains("updatedAt") &&
-          timestampCols.contains("updatedAt") =>
-          when(cond, current_timestamp()).otherwise(col(c)).as(c)
-        case None => col(c)
+      // a branch that leaves `c` alone still claims its rows (keeps the
+      // old value) so a later branch writing `c` cannot take them over
+      val arms = branches.map { case (cond, set) =>
+        cond -> set.get(c)
+          .orElse(if (c == "updatedAt" && touchesUpdatedAt) Some(current_timestamp()) else None)
       }
+      if (arms.forall(_._2.isEmpty)) col(c)
+      else arms.tail.foldLeft(when(arms.head._1, arms.head._2.getOrElse(col(c)))) {
+        case (w, (cond, v)) => w.when(cond, v.getOrElse(col(c)))
+      }.otherwise(col(c)).as(c)
     }: _*)
+  }
+
+  /** ONE collect over the rows an update rewrites (`rows` holds only rows
+    * some branch matches): per branch, pre-image slice and post-image
+    * slice, the row count and the count of rows whose SET breaks a write
+    * constraint. Post-image slices are only computed when a SET moves a
+    * partition column. A violation is classified to its precise P-code
+    * by [[validateUpdated]] only once the census shows one. */
+  private def updateCensus(rows: DataFrame,
+                           branches: Seq[(Column, Map[String, Column])]): UpdateCensus = {
+    val moves = branches.exists(b => partitionCols.exists(b._2.contains))
+    val br = branches.indices.reverse.foldLeft(lit(-1)) { (acc, i) =>
+      when(branches(i)._1, lit(i)).otherwise(acc)
+    }
+    val tagged = rows.withColumn("__br", br).withColumn("__prepk", partKeyCol)
+    val post = withSets(tagged,
+      branches.indices.map(i => (col("__br") === i) -> branches(i)._2))
+    val viol = branches.indices.flatMap { i =>
+      setViolation(branches(i)._2.keySet).map(col("__br") === i && _)
+    }.reduceOption(_ || _).getOrElse(lit(false))
+    val census = post
+      .groupBy(col("__br"), col("__prepk"),
+        (if (moves) partKeyCol else col("__prepk")).as("__postpk"))
+      .agg(count(lit(1)), count(when(viol, 1)))
+      .collect()
+    branches.indices.foreach { i =>
+      if (census.exists(r => r.getInt(0) == i && r.getLong(4) > 0))
+        validateUpdated(post.filter(col("__br") === i), branches(i)._2.keySet)
+    }
+    UpdateCensus(
+      branches.indices.map(i => census.filter(_.getInt(0) == i).map(_.getLong(3)).sum),
+      census.flatMap(r => Seq(r.getString(1), r.getString(2))).toSet)
+  }
 
   private[store] def stagedCreate(current: DataFrame, rows: DataFrame,
                                   failOnDup: Boolean): Staged =
@@ -751,44 +799,32 @@ final class GraftTable(
   private[store] def matchedView(current: DataFrame, where: Where): DataFrame =
     current.filter(coalesce(Where.compile(where, current.apply), lit(false)))
 
-  /** stagedUpdate that also returns the post-update matched slice
-    * (updateManyAndReturn, `effect.ts:527-533`).
-    *
-    * The matched count and touched-slice stats ride the returned slice's
-    * checkpoint as observed metrics — ONE driver action where the naive
-    * path (stagedUpdate's pkStats + a separate checkpoint) paid three.
-    * Pre-image partition keys are carried through the SET as a projected
-    * column so a partition-moving update still touches both source and
-    * destination slices. */
   /** Write-path constraint checks over the written/updated rows: a
     * capped string column over its maxLengths limit is P2000; NULL
     * written into a non-nullable SET column is P2014 when the column is
     * a declared FK (a required relation severed at the relation level)
     * and P2011 otherwise (the raw column constraint). All probes are
-    * limit(1) — the violation set never materializes. Probe cost: zero
-    * when no SET column is capped or non-nullable; otherwise one
-    * evaluation of the frame's plan on the happy path (cheap where the
-    * caller checkpointed — the Returning and upsert paths — one re-scan
-    * of the matched slice on the lazy stagedUpdate/WhereIn paths), plus
-    * per-class probes only once a violation is known to exist. */
+    * `isEmpty` — they stop at the first violating row, and their plans
+    * carry no per-plan limit counter, so a repeated probe reuses its
+    * generated code. Probe cost: zero when no SET column is capped or
+    * non-nullable; otherwise one evaluation of the frame's plan on the
+    * happy path (cheap where the caller checkpointed — the Returning and
+    * upsert paths), plus per-class probes only once a violation is known
+    * to exist. The lazy stagedUpdate/WhereIn paths count violations in
+    * their census instead and only call this to classify one. */
   private[store] def validateUpdated(updated: DataFrame, setCols: Set[String]): Unit = {
-    val lenChecks = maxLengths.filter { case (c, _) => setCols.contains(c) }.toSeq
-    val nnCols = setCols
-      .filter(c => schema.fieldNames.contains(c) && !schema(c).nullable).toSeq
-    if (lenChecks.isEmpty && nnCols.isEmpty) return
     // one combined probe on the happy path; per-class probes only run to
     // pick the precise P-code once a violation is known to exist
-    val anyViol = (lenChecks.map { case (c, mx) => length(col(c)) > mx } ++
-      nnCols.map(col(_).isNull)).reduce(_ || _)
-    if (updated.filter(anyViol).limit(1).count() == 0) return
-    lenChecks.foreach { case (c, mx) =>
-      if (updated.filter(length(col(c)) > mx).limit(1).count() > 0)
+    val anyViol = setViolation(setCols).getOrElse(return)
+    if (updated.filter(anyViol).isEmpty) return
+    maxLengths.filter { case (c, _) => setCols.contains(c) }.foreach { case (c, mx) =>
+      if (!updated.filter(length(col(c)) > mx).isEmpty)
         throw new ValueTooLongException(
           s"$name: update writes a value over $c's declared max length $mx")
     }
     val fkCols = parentRefs.map(_._2).toSet
-    nnCols.foreach { c =>
-      if (updated.filter(col(c).isNull).limit(1).count() > 0) {
+    nonNullableSetCols(setCols).foreach { c =>
+      if (!updated.filter(col(c).isNull).isEmpty) {
         if (fkCols.contains(c))
           throw new RequiredRelationException(
             s"$name: update would sever the required relation on $c " +
@@ -799,6 +835,26 @@ final class GraftTable(
     }
   }
 
+  /** Columns of a SET clause whose written value must not be NULL. */
+  private def nonNullableSetCols(setCols: Set[String]): Seq[String] =
+    setCols.filter(c => schema.fieldNames.contains(c) && !schema(c).nullable).toSeq
+
+  /** A row-level test for "this post-image breaks a write constraint of
+    * the SET columns" — None when no SET column is capped or non-nullable. */
+  private def setViolation(setCols: Set[String]): Option[Column] =
+    (maxLengths.filter { case (c, _) => setCols.contains(c) }.toSeq
+      .map { case (c, mx) => length(col(c)) > mx } ++
+      nonNullableSetCols(setCols).map(col(_).isNull)).reduceOption(_ || _)
+
+  /** stagedUpdate that also returns the post-update matched slice
+    * (updateManyAndReturn, `effect.ts:527-533`).
+    *
+    * The matched count and touched-slice stats ride the returned slice's
+    * checkpoint as observed metrics — ONE driver action where the naive
+    * path (stagedUpdate's pkStats + a separate checkpoint) paid three.
+    * Pre-image partition keys are carried through the SET as a projected
+    * column so a partition-moving update still touches both source and
+    * destination slices. */
   private[store] def stagedUpdateReturning(current: DataFrame, where: Where,
                                            set: Map[String, Column]): (Staged, DataFrame) = {
     val cond0 = coalesce(Where.compile(where, current.apply), lit(false))
@@ -824,50 +880,45 @@ final class GraftTable(
 
   private[store] def stagedUpdate(current: DataFrame, where: Where,
                                   set: Map[String, Column], single: Boolean): Staged = {
-    val rawCond = Where.compile(where, current.apply)
-    val cond0 = coalesce(rawCond, lit(false))
-    val matched = current.filter(cond0)
-    val (before, n) = pkStats(matched)
-    if (single && n == 0)
+    val cond0 = coalesce(Where.compile(where, current.apply), lit(false))
+    val census = updateCensus(current.filter(cond0), Seq(lit(true) -> set))
+    if (single && census.n(0) == 0)
       throw new RecordNotFoundException(s"$name: update found no row")
-    validateUpdated(withSet(matched, lit(true), set), set.keySet)
-    // if the SET moves rows across partitions, the destination slices are
-    // touched too (computed on the matched slice only — small)
-    val touched =
-      if (partitionCols.exists(set.contains))
-        before ++ pkStats(withSet(matched, lit(true), set))._1
-      else before
     // materialize the predicate BEFORE any column is rewritten — a `when`
     // chain re-resolving the condition against already-updated columns
     // would silently stop matching mid-update
     val withCond = current.withColumn("__upd", cond0)
     val next = withSet(withCond, col("__upd"), set).drop("__upd")
-    Staged(next, touched, n)
+    Staged(next, census.touched, census.n(0))
   }
 
   /** Join-based bulk update: set `set` on rows whose `keyCol` appears in
     * `keys` (and that satisfy `extraCond`). Distributed equivalent of
     * `UPDATE … WHERE id IN (SELECT …)` — used by the pipeline to flip
     * statuses for a whole processed slice without collecting ids to the
-    * driver (the keys side is a small DataFrame → AQE broadcasts it). */
+    * driver (the keys side is a small DataFrame → AQE broadcasts it).
+    *
+    * A non-empty `otherwise` is a second branch, MERGE's `WHEN NOT
+    * MATCHED BY SOURCE`: it applies to rows that satisfy `extraCond` but
+    * whose key is not in `keys` (a NULL key is never in `keys`). Both
+    * branches rewrite their slices in the same pass, and their counts come
+    * from the same census; the second element is the `otherwise` count
+    * (0 when `otherwise` is empty). */
   private[store] def stagedUpdateWhereIn(current: DataFrame, keyCol: String,
                                          keys: DataFrame, extraCond: Column,
-                                         set: Map[String, Column]): Staged = {
+                                         set: Map[String, Column],
+                                         otherwise: Map[String, Column]): (Staged, Long) = {
     val marker = keys.select(col(keyCol)).distinct().withColumn("__match", lit(true))
-    // materialize the predicate before rewriting columns (see stagedUpdate)
+    // materialize the predicates before rewriting columns (see stagedUpdate)
     val joined = current.join(marker, Seq(keyCol), "left")
-      .withColumn("__upd", coalesce(col("__match"), lit(false)) && coalesce(extraCond, lit(false)))
-    val cond = col("__upd")
-    val matched = joined.filter(cond)
-    validateUpdated(
-      withSet(matched, lit(true), set).drop("__match", "__upd"), set.keySet)
-    val (before, n) = pkStats(matched)
-    val touched =
-      if (partitionCols.exists(set.contains))
-        before ++ pkStats(withSet(matched, lit(true), set))._1
-      else before
-    val next = withSet(joined, cond, set).drop("__match", "__upd")
-    Staged(next, touched, n)
+      .withColumn("__in", coalesce(extraCond, lit(false)))
+      .withColumn("__upd", coalesce(col("__match"), lit(false)) && col("__in"))
+    val branches = Seq(col("__upd") -> set) ++
+      (if (otherwise.isEmpty) Nil else Seq(col("__in") -> otherwise))
+    val rewritten = if (otherwise.isEmpty) col("__upd") else col("__in")
+    val census = updateCensus(joined.filter(rewritten), branches)
+    val next = withSets(joined, branches).drop("__match", "__in", "__upd")
+    (Staged(next, census.touched, census.n(0)), census.n.lift(1).getOrElse(0L))
   }
 
   /** Returns the staged next state plus the doomed slice (the caller — the
@@ -1267,8 +1318,7 @@ final class Txn(catalog: Catalog, opts: TxnOptions = TxnOptions(timeoutMs = 0)) 
       val orphans = written.select(col(childCol))
         .filter(col(childCol).isNotNull)
         .join(parentKeys, Seq(childCol), "left_anti")
-        .limit(1).count()
-      if (orphans > 0)
+      if (!orphans.isEmpty)
         throw new ForeignKeyViolationException(
           s"${t.name}: write rejected — ${t.name}.$childCol references no ${parent.name}.$parentCol row")
     }
@@ -1336,12 +1386,11 @@ final class Txn(catalog: Catalog, opts: TxnOptions = TxnOptions(timeoutMs = 0)) 
           .distinct()
         // An ambiguous remap (one old key → several new values: parentCol
         // was not unique across the matched rows) would FAN OUT the child
-        // join and corrupt rows — refuse it. One limit(1) probe on the
+        // join and corrupt rows — refuse it. One emptiness probe on the
         // update-sized map.
         val ambiguous = keyMap.groupBy(col("__old"))
           .agg(count(lit(1)).as("__n")).filter(col("__n") > 1)
-          .limit(1).count()
-        if (ambiguous > 0)
+        if (!ambiguous.isEmpty)
           throw new ForeignKeyViolationException(
             s"${t.name}: ON UPDATE CASCADE on non-unique $parentCol is " +
               s"ambiguous — several new values for one referenced key")
@@ -1379,7 +1428,7 @@ final class Txn(catalog: Catalog, opts: TxnOptions = TxnOptions(timeoutMs = 0)) 
       if (!child.schema(childCol).nullable) {
         val nullOld = keyMap.filter(col("__new").isNull)
           .select(col("__old").as(childCol))
-        if (cur.join(nullOld, Seq(childCol), "left_semi").limit(1).count() > 0)
+        if (!cur.join(nullOld, Seq(childCol), "left_semi").isEmpty)
           throw new NullConstraintException(
             s"${child.name}: ON UPDATE CASCADE would null non-nullable $childCol")
       }
@@ -1412,8 +1461,8 @@ final class Txn(catalog: Catalog, opts: TxnOptions = TxnOptions(timeoutMs = 0)) 
           .filter(uk.map(c => col(c).isNotNull).reduce(_ && _))
         val dup = affectedKeys
           .groupBy(uk.map(col): _*).agg(count(lit(1)).as("__c"))
-          .filter(col("__c") > 1).limit(1).count()
-        if (dup > 0)
+          .filter(col("__c") > 1)
+        if (!dup.isEmpty)
           throw new UniqueViolationException(
             s"${child.name}: ON UPDATE CASCADE would collide unique key " +
               s"(${uk.mkString(",")})")
@@ -1446,19 +1495,33 @@ final class Txn(catalog: Catalog, opts: TxnOptions = TxnOptions(timeoutMs = 0)) 
   }
 
   def updateWhereIn(t: GraftTable, keyCol: String, keys: DataFrame,
-                    extraCond: Column, set: Map[String, Column]): Long = {
+                    extraCond: Column, set: Map[String, Column]): Long =
+    updateWhereIn(t, keyCol, keys, extraCond, set, Map.empty[String, Column])._1
+
+  /** Two-branch [[updateWhereIn]]: `set` on rows that satisfy `extraCond`
+    * and whose key is in `keys`, `otherwise` on the other rows that satisfy
+    * `extraCond` (MERGE's `WHEN NOT MATCHED BY SOURCE`) — one statement,
+    * one census, one rewrite of the touched slices, where an
+    * `updateWhereIn` followed by an `updateMany` pays two of each.
+    * Returns (rows `set` applied to, rows `otherwise` applied to). */
+  def updateWhereIn(t: GraftTable, keyCol: String, keys: DataFrame,
+                    extraCond: Column, set: Map[String, Column],
+                    otherwise: Map[String, Column]): (Long, Long) = {
     val cur = stateOf(t)
-    val s = t.stagedUpdateWhereIn(cur, keyCol, keys, extraCond, set)
-    // matched-rows view: key ∈ keys ∧ extraCond
-    def matched = {
-      val marker = keys.select(col(keyCol)).distinct()
-      cur.join(marker, Seq(keyCol), "left_semi")
-        .filter(coalesce(extraCond, lit(false)))
-    }
+    val (s, nOtherwise) = t.stagedUpdateWhereIn(cur, keyCol, keys, extraCond, set, otherwise)
+    // per-branch pre-image views: key ∈ keys ∧ extraCond, and the rest of
+    // extraCond (the anti-join keeps NULL keys, which match nothing)
+    val marker = keys.select(col(keyCol)).distinct()
+    val inCond = coalesce(extraCond, lit(false))
+    def matched = cur.join(marker, Seq(keyCol), "left_semi").filter(inCond)
+    def unmatched = cur.join(marker, Seq(keyCol), "left_anti").filter(inCond)
+    // both helpers are no-ops (no job) for a SET that names no FK column
     checkUpdatedRefs(t, set, t.applySet(matched, set))
+    checkUpdatedRefs(t, otherwise, t.applySet(unmatched, otherwise))
     stage(t, s)
     cascadeParentKeyRewrite(t, set, matched)
-    s.n
+    cascadeParentKeyRewrite(t, otherwise, unmatched)
+    (s.n, nOtherwise)
   }
 
   /** FK `ON DELETE RESTRICT` (P2003): a delete whose doomed rows are still
@@ -1472,8 +1535,7 @@ final class Txn(catalog: Catalog, opts: TxnOptions = TxnOptions(timeoutMs = 0)) 
     t.restricts.foreach { case (child, childCol, parentCol) =>
       val referenced = stateOf(child)
         .join(doomed.select(col(parentCol).as(childCol)), Seq(childCol), "left_semi")
-        .limit(1).count()
-      if (referenced > 0)
+      if (!referenced.isEmpty)
         throw new ForeignKeyViolationException(
           s"${t.name}: delete restricted — ${child.name}.$childCol still references doomed ${t.name}.$parentCol row(s)")
     }
@@ -1603,10 +1665,12 @@ final class Txn(catalog: Catalog, opts: TxnOptions = TxnOptions(timeoutMs = 0)) 
       t.uniqueKeys.head
     } else Nil
     val resolved = if (nested.isEmpty) rows else {
-      // ONE bounded action for the whole key (limit-1 probe), not one
-      // per key column — this is the single action the nested path adds
-      // to the insert budget (ActionBudgetSpec pins it)
-      if (rows.filter(key.map(fcol(_).isNull).reduce(_ || _)).limit(1).count() > 0)
+      // ONE bounded action for the whole key (an emptiness probe), not
+      // one per key column — and none when every key column is declared
+      // non-nullable: the insert's census already throws the same P2011
+      // for a NULL there (ActionBudgetSpec pins the non-nullable budget)
+      if (key.exists(t.schema(_).nullable) &&
+          !rows.filter(key.map(fcol(_).isNull).reduce(_ || _)).isEmpty)
         throw new NullConstraintException(
           s"${t.name}: createNested parent key ${key.mkString(",")} must be " +
             "non-null (null-keyed parents cannot be paired with their nested writes)")

@@ -9,6 +9,11 @@ object GraftSession {
   def cpus: Int = sys.env.get("SPARK_GRAFT_CPUS").map(_.trim.toInt)
     .getOrElse(Runtime.getRuntime.availableProcessors())
 
+  /** Size of Spark's generated-class cache (static; Spark's default is
+    * 100). One warm pipeline drain alone runs about 180 distinct classes,
+    * so at 100 entries every drain recompiles most of them. */
+  val CodegenCacheEntries = 1000
+
   def local(cpus: Int, appName: String): SparkSession = {
     val spark = SparkSession.builder()
       .master(s"local[$cpus]")
@@ -19,6 +24,7 @@ object GraftSession {
       .config("spark.sql.legacy.parquet.nanosAsLong", "true")
       .config("spark.sql.session.timeZone", "UTC")
       .config("spark.ui.enabled", "false")
+      .config("spark.sql.codegen.cache.maxEntries", CodegenCacheEntries.toString)
       .getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
     // after init: without a log4j2 config on the classpath Spark installs

@@ -80,9 +80,10 @@ class PipelineSpec extends AnyFunSuite with SparkTestBase {
       .getAs[String]("telephone") == "+44 20 111-222")
     // name trimmed (extractGooglePlaces.ts:192)
     assert(places.filter($"url" === "https://acme.example").head().getAs[String]("name") == "Acme Law")
-    // source statuses: g1,g2 true; g3 false with notes
+    // source statuses: g1,g2 true without notes; g3 false with notes
     val urls = st.urls.snapshot()
     assert(urls.filter($"status" <=> true).select("id").as[String].collect().toSet == Set("g1", "g2"))
+    assert(urls.filter($"status" <=> true && $"notes".isNotNull).isEmpty)
     val g3 = urls.filter($"id" === "g3").head()
     assert(!g3.getAs[Boolean]("status") && g3.getAs[String]("notes") == "extraction failed")
   }
@@ -106,10 +107,13 @@ class PipelineSpec extends AnyFunSuite with SparkTestBase {
     assert(svc.select("name").as[String].collect().toSet == Set("Family Law", "Tax Law"))
     assert(st.companyServices.snapshot().count() == 2)
 
-    // place statuses: acme true, others false (skipped)
+    // place statuses: acme true without notes, others false (skipped)
     val places = st.places.snapshot()
     assert(places.filter($"status" <=> true).select("url").as[String].collect().toSet ==
       Set("https://acme.example"))
+    assert(places.filter($"status" <=> true && $"notes".isNotNull).isEmpty)
+    assert(places.filter($"status" <=> false).select("notes").as[String].collect().toSet ==
+      Set("skipped: gate or no extraction"))
   }
 
   test("stage 3: syncs with email, creates events; compensation for zero-service companies") {
