@@ -46,24 +46,15 @@ object Clustering {
     val spark = points.sparkSession
     import spark.implicits._
 
-    val eMilli = transform(col(embCol).cast("array<double>"),
-      x => greatest(lit(-2000L),
-        least(lit(2000L), round(x * 1000, 0).cast("long"))) + 2000L)
-    // null/NaN coordinates are EXCLUDED, not quantized: least/greatest
-    // skip nulls (a null element would silently clamp to the +2.0 bound)
-    // and NaN casts to 0 — either way the point lands in a wrong cluster
-    // and pollutes center means with fabricated coordinates. Dropping a
-    // malformed embedding is a documented, observable choice — the same
-    // policy as PQ training ([[Pq.isWellFormed]]).
-    val clean = points.filter(Pq.isWellFormed(embCol))
-    val pts = clean.select(col(idCol).as("id"), eMilli.as("__e"))
+    // PQ training's quantization: null/NaN coordinates are EXCLUDED, not
+    // quantized (a null element would silently clamp to the +2.0 bound,
+    // NaN casts to 0 — either way the point lands in a wrong cluster and
+    // pollutes center means with fabricated coordinates)
+    val pts = Pq.quantized(points, embCol, idCol)
 
-    // Seeds: the k rows with the smallest (md5(id), id) draw, cid 1..k in
-    // that order — portable, and independent of physical row order.
-    val seedRows: Array[Row] = pts
-      .withColumn("__m", md5(col("id").cast("string")))
-      .orderBy(col("__m"), col("id")).limit(k)
-      .select(col("__e")).collect()
+    // Seeds: PQ's (md5(id), id) draw, cid 1..k in that order — portable,
+    // and independent of physical row order. A duplicated id throws.
+    val seedRows: Array[Row] = Pq.seedRowsOf(pts, k)
     var centers: IndexedSeq[(Long, Seq[Long])] =
       seedRows.toIndexedSeq.zipWithIndex.map { case (r, i) =>
         ((i + 1).toLong, r.getSeq[Long](0).map(_ * 1000L))

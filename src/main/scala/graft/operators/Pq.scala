@@ -168,17 +168,22 @@ object Pq {
     Codebook(cb.m, cb.k, cb.ds, IndexedSeq.tabulate(cb.m * cb.k)(idx =>
       upd.getOrElse((idx / cb.k, idx % cb.k + 1), cb.centers(idx))))
 
-  private def quantized(points: DataFrame, embCol: String,
-                        idCol: String): DataFrame =
+  private[operators] def quantized(points: DataFrame, embCol: String,
+                                   idCol: String): DataFrame =
     clean(points, embCol)
       .select(col(idCol).as("id"), eMilli(embCol).as("__e"))
 
   /** Seeds: the n rows with the smallest (md5(id), id) draw — portable
-    * and independent of physical row order. One bounded collect. */
-  private def seedRowsOf(pts: DataFrame, n: Int): Array[Row] =
+    * and independent of physical row order. One bounded collect, after
+    * one probe that rejects a duplicated id: the round aggregate weighs
+    * every ROW, so a duplicate would pull the centers once per copy. */
+  private[operators] def seedRowsOf(pts: DataFrame, n: Int): Array[Row] = {
+    require(pts.groupBy(col("id")).count().filter(col("count") > 1).isEmpty,
+      "training points carry a duplicated id")
     pts.withColumn("__m", md5(col("id").cast("string")))
       .orderBy(col("__m"), col("id")).limit(n)
       .select(col("__e")).collect()
+  }
 
   private def trainOn(pts: DataFrame, m: Int, k: Int, iters: Int,
                       seedRows: Array[Row]): Codebook = {

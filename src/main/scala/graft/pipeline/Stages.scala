@@ -17,10 +17,13 @@ final case class StageMetrics(processed: Long, succeeded: Long,
 
 /** The three pipeline stages (SURVEY §0, §3), re-expressed as set-oriented
   * incremental Spark jobs instead of row-at-a-time poll loops: each run
-  * consumes the whole `status IS NULL` slice in one declarative plan and
-  * commits data + status flips in one atomic transaction. The poll loop
-  * becomes "run until the pending slice is empty" (streaming variant in
-  * [[graft.streaming]]).
+  * is ONE optimistic transaction that reads its inputs, consumes the whole
+  * `status IS NULL` slice in one declarative plan, stages data, status
+  * flips and the run notification, and commits once. A row that turns
+  * pending while the run works moves the table it was read from, so the
+  * commit fails and the retried run re-reads and re-extracts — it is never
+  * flipped unprocessed. The poll loop becomes "run until the pending slice
+  * is empty" (streaming variant in [[graft.streaming]]).
   *
   * Scale: every step is a join/filter/union on key columns — no driver-side
   * iteration or collected id lists; status flips are join-based bulk
@@ -31,6 +34,7 @@ final case class StageMetrics(processed: Long, succeeded: Long,
 object Stages {
 
   private val pendingCond: Column = col("status").isNull
+  private val empty = StageMetrics(0, 0, 0, 0, 0)
 
   /** Deterministic engine id — the cuid role (`schema.prisma:17`), derived
     * from the natural key so replays are idempotent. */
@@ -41,29 +45,34 @@ object Stages {
   private def nullB: Column = lit(null).cast(BooleanType)
   private def nullT: Column = lit(null).cast(TimestampType)
 
-  /** One Notification row per stage run (`schema.prisma:90-99`): message +
-    * JSON metadata via `to_json(struct(...))` (the JSON.stringify of the
-    * reference's logs, SURVEY §2.E) + validated serviceName enum. */
-  private def notification(store: PipelineStore, serviceName: String,
-                           message: String, m: StageMetrics): org.apache.spark.sql.DataFrame = {
+  /** One stage run: `body` reads its inputs through `tx`, stages its
+    * writes and flips, and returns the run's metrics; a non-empty run
+    * stages its Notification row (`schema.prisma:90-99`: message + JSON
+    * metadata via `to_json(struct(...))`, the JSON.stringify of the
+    * reference's logs, SURVEY §2.E) in the same `tx`, so everything
+    * publishes in one commit checked against the snapshot the inputs were
+    * read from. An OCC conflict re-runs the whole body. An empty run
+    * stages nothing and commits nothing. */
+  private def runStage(store: PipelineStore, serviceName: String, message: String)
+                      (body: Txn => StageMetrics): StageMetrics = {
     require(Entities.serviceNames.contains(serviceName), s"invalid enum: $serviceName")
-    store.urls.spark.range(1).select(
-      concat(lit("nt_"), lit(java.util.UUID.randomUUID().toString.replace("-", ""))).as("id"),
-      lit(message).as("message"),
-      to_json(struct(
-        lit(m.processed).as("processed"), lit(m.succeeded).as("succeeded"),
-        lit(m.failed).as("failed"), lit(m.skipped).as("skipped"),
-        lit(m.inserted).as("inserted"))).as("metadata"),
-      lit(serviceName).as("serviceName"),
-      nullT.as("createdAt"), nullT.as("updatedAt"))
-  }
-
-  /** Append the run summary notification (own commit, OCC-retried). */
-  private def notify(store: PipelineStore, serviceName: String,
-                     message: String, m: StageMetrics): Unit =
     Retry.onConflict() {
-      store.notifications.createMany(notification(store, serviceName, message, m))
+      Txn.run(store.catalog) { tx =>
+        val m = body(tx)
+        if (m.processed > 0)
+          tx.createMany(store.notifications, store.urls.spark.range(1).select(
+            concat(lit("nt_"), lit(java.util.UUID.randomUUID().toString.replace("-", ""))).as("id"),
+            lit(message).as("message"),
+            to_json(struct(
+              lit(m.processed).as("processed"), lit(m.succeeded).as("succeeded"),
+              lit(m.failed).as("failed"), lit(m.skipped).as("skipped"),
+              lit(m.inserted).as("inserted"))).as("metadata"),
+            lit(serviceName).as("serviceName"),
+            nullT.as("createdAt"), nullT.as("updatedAt")), skipDuplicates = false)
+        m
+      }
     }
+  }
 
   /** A syntactically-valid http(s) URL — the `Schema.decodeUnknown(Schema.URL)`
     * gate (`extractGooglePlaces.ts:166-172`); invalid rows are skipped. */
@@ -82,47 +91,41 @@ object Stages {
   /** Poll the pending URL slice, extract place candidates, validate, insert
     * place entries (duplicates swallowed, `extractGooglePlaces.ts:305-317`),
     * flip source statuses — all in one transaction. */
-  def runLocator(store: PipelineStore, extractor: PlacesExtractor): StageMetrics = {
-    // catalog-level partition pruning: only the status=NULL slice is listed
-    val slice = store.urls.snapshotSlice(Map("status" -> null)).filter(pendingCond)
-    if (slice.isEmpty) return StageMetrics(0, 0, 0, 0, 0)
+  def runLocator(store: PipelineStore, extractor: PlacesExtractor): StageMetrics =
+    runStage(store, "Places_Locator", "locator run complete") { tx =>
+      // catalog-level partition pruning: only the status=NULL slice is listed
+      val slice = tx.readSlice(store.urls, Map("status" -> null)).filter(pendingCond)
+      if (slice.isEmpty) empty
+      else {
+        val extracted = extractor.extract(slice).cache()
+        try {
+          // URL validity gate + geo exclusion: drop "United States"
+          // addresses, KEEP null addresses (extractGooglePlaces.ts:295)
+          val valid = extracted
+            .filter(isValidUrl(col("url")))
+            .filter(!coalesce(col("address").contains("United States"), lit(false)))
 
-    val extracted = extractor.extract(slice).cache()
-    // URL validity gate + geo exclusion: drop "United States" addresses,
-    // KEEP null addresses (extractGooglePlaces.ts:295)
-    val valid = extracted
-      .filter(isValidUrl(col("url")))
-      .filter(!coalesce(col("address").contains("United States"), lit(false)))
+          val newPlaces = valid.select(
+            keyId("pl", col("url")).as("id"),
+            trim(col("name")).as("name"),
+            col("url"),
+            col("address"),
+            extractPhone(col("telephone")).as("telephone"),
+            col("location"),
+            nullB.as("status"), nullS.as("notes"),
+            nullT.as("createdAt"), nullT.as("updatedAt"))
 
-    val newPlaces = valid.select(
-      keyId("pl", col("url")).as("id"),
-      trim(col("name")).as("name"),
-      col("url"),
-      col("address"),
-      extractPhone(col("telephone")).as("telephone"),
-      col("location"),
-      nullB.as("status"), nullS.as("notes"),
-      nullT.as("createdAt"), nullT.as("updatedAt"))
+          // a source failed if the extractor yielded zero candidates for it
+          val okSources = extracted.select(col("sourceId").as("id")).distinct()
 
-    // a source failed if the extractor yielded zero candidates for it
-    val okSources = extracted.select(col("sourceId").as("id")).distinct()
-
-    var inserted = 0L
-    var flips = (0L, 0L)
-    Retry.onConflict() {
-      Txn.run(store.catalog) { tx =>
-        inserted = tx.createMany(store.places, newPlaces, skipDuplicates = true)
-        flips = tx.updateWhereIn(store.urls, "id", okSources, pendingCond,
-          Map("status" -> lit(true)),
-          otherwise = Map("status" -> lit(false), "notes" -> lit("extraction failed")))
+          val inserted = tx.createMany(store.places, newPlaces, skipDuplicates = true)
+          val (succeeded, failed) = tx.updateWhereIn(store.urls, "id", okSources, pendingCond,
+            Map("status" -> lit(true)),
+            otherwise = Map("status" -> lit(false), "notes" -> lit("extraction failed")))
+          StageMetrics(succeeded + failed, succeeded, failed, 0, inserted)
+        } finally extracted.unpersist()
       }
     }
-    extracted.unpersist()
-    val (succeeded, failed) = flips
-    val m = StageMetrics(succeeded + failed, succeeded, failed, 0, inserted)
-    notify(store, "Places_Locator", "locator run complete", m)
-    m
-  }
 
   // ------------------------------------------------------------------
   // Stage 2 — website scraper (runner/websiteScraper.ts + scrapeWebsite.ts)
@@ -133,69 +136,63 @@ object Stages {
     * extracted. Services dedup (`scrapeWebsite.ts:227`) + connectOrCreate
     * by unique name (`scrapeWebsite.ts:224-236`). */
   def runEnricher(store: PipelineStore, extractor: WebsiteExtractor,
-                  vocab: Seq[String] = ServiceVocabulary.default): StageMetrics = {
-    val slice = store.places.snapshotSlice(Map("status" -> null)).filter(pendingCond)
-    if (slice.isEmpty) return StageMetrics(0, 0, 0, 0, 0)
+                  vocab: Seq[String] = ServiceVocabulary.default): StageMetrics =
+    runStage(store, "Website_Content_Scrapper", "enricher run complete") { tx =>
+      val slice = tx.readSlice(store.places, Map("status" -> null)).filter(pendingCond)
+      if (slice.isEmpty) empty
+      else {
+        val vocabArr = array(vocab.map(lit): _*)
+        // vocabulary constraint + dedup (scrapeWebsite.ts:152,188,227)
+        val extracted = extractor.extract(slice)
+          .withColumn("servicesOffered",
+            array_distinct(array_intersect(coalesce(col("servicesOffered"),
+              array().cast(ArrayType(StringType))), vocabArr)))
 
-    val vocabArr = array(vocab.map(lit): _*)
-    // vocabulary constraint + dedup (scrapeWebsite.ts:152,188,227)
-    val extracted = extractor.extract(slice)
-      .withColumn("servicesOffered",
-        array_distinct(array_intersect(coalesce(col("servicesOffered"),
-          array().cast(ArrayType(StringType))), vocabArr)))
+        val accepted = extracted
+          .filter(!coalesce(col("phoneNumber").contains("+1"), lit(false)))
+          .filter(size(col("servicesOffered")) > 0)
+          // one company per unique name (unique constraint, migration.sql:81)
+          .dropDuplicates("name")
+          .cache()
+        try {
+          // company batch with the nested M-N payload riding along as an
+          // array column — the shape Prisma's nested `tags:
+          // {connectOrCreate: ...}` input takes (`scrapeWebsite.ts:215-241`),
+          // expressed batch-first
+          val companyBatch = accepted.select(
+            keyId("co", col("name")).as("id"),
+            col("name"),
+            col("websiteUrl"),
+            col("emailAddress"),
+            col("phoneNumber"),
+            col("address"),
+            col("industry"),
+            col("location"),
+            nullT.as("createdAt"), nullT.as("updatedAt"),
+            col("servicesOffered"))
 
-    val accepted = extracted
-      .filter(!coalesce(col("phoneNumber").contains("+1"), lit(false)))
-      .filter(size(col("servicesOffered")) > 0)
-      // one company per unique name (unique constraint, migration.sql:81)
-      .dropDuplicates("name")
-      .cache()
+          // connectOrCreate FirmService by unique name + link rows, derived
+          // from the actually-inserted company slice by the nested-write API
+          val tagsNested = ConnectOrCreate(
+            relation = store.services,
+            ensure = b => b.select(explode(col("servicesOffered")).as("name")).distinct()
+              .select(keyId("fs", col("name")).as("id"), col("name"),
+                nullT.as("createdAt"), nullT.as("updatedAt")),
+            link = store.companyServices,
+            links = b => b.select(col("id").as("A"),
+                explode(col("servicesOffered")).as("svc"))
+              .select(col("A"), keyId("fs", col("svc")).as("B")))
 
-    // company batch with the nested M-N payload riding along as an array
-    // column — the shape Prisma's nested `tags: {connectOrCreate: ...}`
-    // input takes (`scrapeWebsite.ts:215-241`), expressed batch-first
-    val companyBatch = accepted.select(
-      keyId("co", col("name")).as("id"),
-      col("name"),
-      col("websiteUrl"),
-      col("emailAddress"),
-      col("phoneNumber"),
-      col("address"),
-      col("industry"),
-      col("location"),
-      nullT.as("createdAt"), nullT.as("updatedAt"),
-      col("servicesOffered"))
-
-    // connectOrCreate FirmService by unique name + link rows, derived from
-    // the actually-inserted company slice by the nested-write API
-    val tagsNested = ConnectOrCreate(
-      relation = store.services,
-      ensure = b => b.select(explode(col("servicesOffered")).as("name")).distinct()
-        .select(keyId("fs", col("name")).as("id"), col("name"),
-          nullT.as("createdAt"), nullT.as("updatedAt")),
-      link = store.companyServices,
-      links = b => b.select(col("id").as("A"),
-          explode(col("servicesOffered")).as("svc"))
-        .select(col("A"), keyId("fs", col("svc")).as("B")))
-
-    val acceptedKeys = accepted.select(col("sourceId").as("id"))
-    var inserted = 0L
-    var flips = (0L, 0L)
-    Retry.onConflict() {
-      Txn.run(store.catalog) { tx =>
-        inserted = tx.createNested(store.companies, companyBatch, Seq(tagsNested),
-          skipDuplicates = true)
-        flips = tx.updateWhereIn(store.places, "id", acceptedKeys, pendingCond,
-          Map("status" -> lit(true)),
-          otherwise = Map("status" -> lit(false), "notes" -> lit("skipped: gate or no extraction")))
+          val inserted = tx.createNested(store.companies, companyBatch, Seq(tagsNested),
+            skipDuplicates = true)
+          val (succeeded, skipped) = tx.updateWhereIn(store.places, "id",
+            accepted.select(col("sourceId").as("id")), pendingCond,
+            Map("status" -> lit(true)),
+            otherwise = Map("status" -> lit(false), "notes" -> lit("skipped: gate or no extraction")))
+          StageMetrics(succeeded + skipped, succeeded, 0, skipped, inserted)
+        } finally accepted.unpersist()
       }
     }
-    accepted.unpersist()
-    val (succeeded, skipped) = flips
-    val m = StageMetrics(succeeded + skipped, succeeded, 0, skipped, inserted)
-    notify(store, "Website_Content_Scrapper", "enricher run complete", m)
-    m
-  }
 
   // ------------------------------------------------------------------
   // Stage 3 — CRM sync (runner/syncCrm.ts + syncCrm.ts activity)
@@ -204,16 +201,14 @@ object Stages {
   /** Sync never-synced companies with email to the CRM sink. Zero-service
     * companies take the compensation path: delete the Company (and its
     * links), reset the source PlaceEntry to pending
-    * (`runner/syncCrm.ts:107-125`). */
-  def runCrmSync(store: PipelineStore, sink: CrmSink): StageMetrics = {
-    var m = StageMetrics(0, 0, 0, 0, 0)
-    // every frame is built inside the retried body: an Observation fills
-    // once, so a retried transaction must observe its own run
-    Retry.onConflict() {
-      val companies = store.companies.snapshot()
-      val events = store.crmEvents.snapshot()
-      val links = store.companyServices.snapshot()
-      val services = store.services.snapshot()
+    * (`runner/syncCrm.ts:107-125`). Every frame is built inside the run's
+    * body: an Observation fills once, so a retried run observes its own. */
+  def runCrmSync(store: PipelineStore, sink: CrmSink): StageMetrics =
+    runStage(store, "CRM_Sync", "crm sync run complete") { tx =>
+      val companies = tx.read(store.companies)
+      val events = tx.read(store.crmEvents)
+      val links = tx.read(store.companyServices)
+      val services = tx.read(store.services)
 
       // "never synced, has email" + relation hydration (syncCrm.ts:60-69),
       // as one set operation: anti-join + not-null filter + M-N collect_list
@@ -239,7 +234,8 @@ object Stages {
       val processed = counts("n").asInstanceOf[Long]
       val skipped = counts("skip").asInstanceOf[Long]
 
-      if (processed > 0) {
+      if (processed == 0) empty
+      else {
         val toSkip = hydrated.filter(size(col("serviceNames")) === 0)
         val toSync = hydrated.filter(size(col("serviceNames")) > 0)
           // tag assembly [industry, location, ...services], deduped
@@ -261,28 +257,21 @@ object Stages {
           col("notes"),
           nullT.as("createdAt"), nullT.as("updatedAt"))
 
-        val skipKeys = toSkip.select("id")
-        val skipUrls = toSkip.select(col("websiteUrl").as("url"))
-        Txn.run(store.catalog) { tx =>
-          if (skipped > 0) {
-            // compensation: drop the companies + their links, requeue sources
-            tx.deleteWhereIn(store.companies, "id", skipKeys)
-            tx.deleteWhereIn(store.companyServices, "A", skipKeys.withColumnRenamed("id", "A"))
-            tx.updateWhereIn(store.places, "url", skipUrls, lit(true),
-              Map("status" -> nullB, "notes" -> lit("requeued: no services")))
-          }
-          tx.createMany(store.crmEvents, newEvents, skipDuplicates = true)
+        if (skipped > 0) {
+          // compensation: drop the companies + their links, requeue sources
+          val skipKeys = toSkip.select("id")
+          tx.deleteWhereIn(store.companies, "id", skipKeys)
+          tx.deleteWhereIn(store.companyServices, "A", skipKeys.withColumnRenamed("id", "A"))
+          tx.updateWhereIn(store.places, "url", toSkip.select(col("websiteUrl").as("url")),
+            lit(true), Map("status" -> nullB, "notes" -> lit("requeued: no services")))
         }
+        tx.createMany(store.crmEvents, newEvents, skipDuplicates = true)
         val outcome = outcomeCounts.get
         val succeeded = outcome("ok").asInstanceOf[Long]
         val failed = outcome("failed").asInstanceOf[Long]
-        m = StageMetrics(processed, succeeded, failed, skipped, succeeded + failed)
+        StageMetrics(processed, succeeded, failed, skipped, succeeded + failed)
       }
     }
-    if (m.processed == 0) return m
-    notify(store, "CRM_Sync", "crm sync run complete", m)
-    m
-  }
 
   /** Run stage 1→2→3 until every queue drains (the poll-loop composition,
     * `runner/locator.ts:166-178`). */

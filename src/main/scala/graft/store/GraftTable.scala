@@ -394,17 +394,21 @@ final class GraftTable(
     * values match `values` (null allowed; columns omitted from `values`
     * match any slice). At 100 TB this skips even the file LISTING of
     * non-matching slices — stronger than scan-side row-group skipping. */
-  def snapshotSlice(values: Map[String, Any]): DataFrame = {
+  def snapshotSlice(values: Map[String, Any]): DataFrame =
+    readDirs(sliceDirs(catalog.currentDirs(name), values))
+
+  /** The dirs of `dirs` (partKey → dir) whose partition values match
+    * `values` — the matching behind [[snapshotSlice]] and
+    * [[Txn.readSlice]]. */
+  private[store] def sliceDirs(dirs: Map[String, String],
+                               values: Map[String, Any]): Seq[String] = {
     val unknown = values.keySet -- partitionCols.toSet
     require(unknown.isEmpty,
-      s"$name: snapshotSlice on non-partition column(s) ${unknown.mkString(",")} " +
+      s"$name: slice read on non-partition column(s) ${unknown.mkString(",")} " +
         s"(partitioned by ${if (partitionCols.isEmpty) "<nothing>" else partitionCols.mkString(",")})" +
         " — would silently read nothing")
     val tokens = values.map { case (c, v) => s"$c=${Catalog.encodeValue(v)}" }.toSet
-    val dirs = catalog.currentDirs(name).collect {
-      case (pk, dir) if tokens.subsetOf(pk.split(",").toSet) => dir
-    }.toSeq
-    readDirs(dirs)
+    dirs.collect { case (pk, dir) if tokens.subsetOf(pk.split(",").toSet) => dir }.toSeq
   }
 
   /** Stats-based data skipping: a filtered snapshot that drops every slice
@@ -601,12 +605,7 @@ final class GraftTable(
                    skipDuplicates: Boolean = false): Long =
     autoCommit(_.createNested(this, rows, nested, skipDuplicates))
 
-  private def autoCommit(f: Txn => Long): Long = {
-    val txn = new Txn(catalog)
-    val n = f(txn)
-    txn.commit()
-    n
-  }
+  private def autoCommit(f: Txn => Long): Long = Txn.run(catalog)(f)
 
   // ---------- staged (transactional) computation ----------
 
@@ -1726,8 +1725,14 @@ final class Txn(catalog: Catalog, opts: TxnOptions = TxnOptions(timeoutMs = 0)) 
     s.n
   }
 
-  /** Read within the transaction (sees staged, uncommitted state). */
+  /** Read within the transaction (sees staged, uncommitted state). The
+    * first read pins the table: a commit that moves it fails ours (P2034). */
   def read(t: GraftTable): DataFrame = stateOf(t)
+
+  /** [[read]] with [[GraftTable.snapshotSlice]]'s catalog-level pruning:
+    * only the slices whose partition values match `values` are listed. */
+  def readSlice(t: GraftTable, values: Map[String, Any]): DataFrame =
+    t.readDirs(t.sliceDirs(workingDirs(t), values))
 
   /** Stage a streaming batch watermark (reserved [[Catalog.StreamTable]]
     * manifest entry) so it publishes in the SAME atomic commit as this
@@ -1757,14 +1762,10 @@ final class Txn(catalog: Catalog, opts: TxnOptions = TxnOptions(timeoutMs = 0)) 
 object Txn {
   /** Interactive-transaction closure (`\$transaction(async tx => …)`):
     * stage inside, commit on success, publish nothing on failure.
-    * This overload runs unbounded (pipeline stages manage their own
-    * [[graft.util.Timeouts]] budget). */
-  def run[A](catalog: Catalog)(body: Txn => A): A = {
-    val txn = new Txn(catalog)
-    val out = body(txn)
-    txn.commit()
-    out
-  }
+    * This overload runs unbounded; the [[TxnOptions]] overload bounds the
+    * body with a timeout. */
+  def run[A](catalog: Catalog)(body: Txn => A): A =
+    run(catalog, TxnOptions(timeoutMs = 0))(body)
 
   /** Interactive transaction with `\$transaction` options: the whole
     * closure (reads, staging writes, commit) is bounded by

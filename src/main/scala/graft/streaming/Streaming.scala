@@ -316,9 +316,9 @@ final class IncrementalLocator(
       .foreachBatch { (batch: DataFrame, batchId: Long) =>
         // idempotent ingest: replays hit the unique keys and are
         // swallowed. Retried on OCC conflict like every other store
-        // write in the pipeline (Stages wraps all four of its paths) —
-        // an unretried P2034 would propagate out of foreachBatch and
-        // kill the whole streaming query.
+        // write in the pipeline (each Stages run is one retried
+        // transaction) — an unretried P2034 would propagate out of
+        // foreachBatch and kill the whole streaming query.
         graft.pipeline.Retry.onConflict() {
           store.urls.createMany(batch, skipDuplicates = true)
         }

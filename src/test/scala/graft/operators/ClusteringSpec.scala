@@ -67,4 +67,53 @@ class ClusteringSpec extends AnyFunSuite with SparkTestBase {
       .queryExecution.executedPlan.toString
     assert(p.contains("BroadcastNestedLoopJoin") || p.contains("BroadcastExchange"), p)
   }
+
+  test("a duplicated id is rejected before training") {
+    val df = Seq((1L, Array(0.0f, 0.0f)), (2L, Array(0.5f, 0.5f)),
+      (2L, Array(0.4f, 0.4f))).toDF("id", "embedding")
+    val e = intercept[IllegalArgumentException] {
+      Clustering.kmeans(df, "embedding", "id", k = 2, iters = 1)
+    }
+    assert(e.getMessage.contains("duplicated id"))
+  }
+
+  /** Plain-Scala integer Lloyd's over SIGNED milli coordinates: md5 seeds,
+    * exact squared distances, smallest-cid ties, empty clusters dropped;
+    * `div` turns a micro-unit sum and a member count into a center. */
+  private def lloyd(pts: Seq[(Long, Seq[Long])], k: Int, iters: Int,
+                    div: (Long, Long) => Long): Map[Long, Long] = {
+    def md5(id: Long) = java.security.MessageDigest.getInstance("MD5")
+      .digest(id.toString.getBytes("UTF-8")).map("%02x".format(_)).mkString
+    var centers = pts.sortBy(p => (md5(p._1), p._1)).take(k).zipWithIndex
+      .map { case ((_, e), i) => ((i + 1).toLong, e.map(_ * 1000L)) }
+    def assign(): Map[Long, Long] = pts.map { case (id, e) =>
+      id -> centers.minBy { case (cid, c) =>
+        (e.zip(c).map { case (a, b) => (a * 1000 - b) * (a * 1000 - b) }.sum, cid)
+      }._1
+    }.toMap
+    (1 to iters).foreach { _ =>
+      val a = assign()
+      centers = centers.flatMap { case (cid, _) =>
+        val members = pts.collect { case (id, e) if a(id) == cid => e }
+        if (members.isEmpty) None
+        else Some((cid, members.transpose.map(c => div(c.sum * 1000L, members.size.toLong))))
+      }
+    }
+    assign()
+  }
+
+  test("all-negative coordinates: centers floor like Math.floorDiv (the +2000 milli shift)") {
+    // 1-D points whose first center update has a negative, non-integral
+    // mean: truncating toward zero instead of flooring moves point 3 to
+    // the other cluster
+    val milli = Seq(1L -> -1520L, 2L -> -1515L, 3L -> -1236L,
+      4L -> -873L, 5L -> -410L, 6L -> -1862L)
+    val pts = milli.map { case (id, m) => (id, Seq(m)) }
+    val floor = lloyd(pts, 2, 1, Math.floorDiv(_, _))
+    assert(floor != lloyd(pts, 2, 1, _ / _), "the fixture must tell floor from truncation")
+    val df = milli.map { case (id, m) => (id, Array(m / 1000.0)) }.toDF("id", "embedding")
+    val got = Clustering.kmeans(df, "embedding", "id", k = 2, iters = 1)
+      .as[(Long, Long)].collect().toMap
+    assert(got == floor)
+  }
 }

@@ -160,4 +160,15 @@ class PqSpec extends AnyFunSuite with SparkTestBase {
       assert(ids.head == qid, "self is always the exact rank-1 hit")
     }
   }
+
+  test("training rejects a duplicated id before the first round") {
+    val dup = clustered().unionByName(clustered().limit(1))
+    Seq[() => Any](
+      () => Pq.train(dup, "embedding", "vec_id", m = 4, k = 8, iters = 1),
+      () => Pq.trainPair(dup, "embedding", "vec_id", nCells = 4, m = 4, k = 8, iters = 1)
+    ).foreach { train =>
+      val e = intercept[IllegalArgumentException](train())
+      assert(e.getMessage.contains("duplicated id"))
+    }
+  }
 }

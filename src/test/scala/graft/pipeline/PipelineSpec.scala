@@ -17,15 +17,18 @@ class PipelineSpec extends AnyFunSuite with SparkTestBase {
   private def store(): PipelineStore = new PipelineStore(spark,
     new Catalog(java.nio.file.Files.createTempDirectory("graft-pipe").toString))
 
-  private def urlFixture: DataFrame = Seq(
+  /** Pending url rows (id, url, location). */
+  private def urlRows(rows: (String, String, Option[String])*): DataFrame =
+    rows.toDF("id", "url", "location")
+      .withColumn("status", lit(null).cast(BooleanType))
+      .withColumn("notes", lit(null).cast(StringType))
+      .withColumn("createdAt", lit(null).cast(TimestampType))
+      .withColumn("updatedAt", lit(null).cast(TimestampType))
+
+  private def urlFixture: DataFrame = urlRows(
     ("g1", "https://maps.example/search?q=london", Some("London")),
     ("g2", "https://maps.example/search?q=paris", Some("Paris")),
-    ("g3", "https://maps.example/search?q=empty", None) // extractor yields nothing
-  ).toDF("id", "url", "location")
-    .withColumn("status", lit(null).cast(BooleanType))
-    .withColumn("notes", lit(null).cast(StringType))
-    .withColumn("createdAt", lit(null).cast(TimestampType))
-    .withColumn("updatedAt", lit(null).cast(TimestampType))
+    ("g3", "https://maps.example/search?q=empty", None)) // extractor yields nothing
 
   // stage-1 extraction results keyed by sourceId (FIXTURES §A edge cases:
   // US-address exclusion, null address kept, invalid URL dropped, dup url)
@@ -202,5 +205,115 @@ class PipelineSpec extends AnyFunSuite with SparkTestBase {
     Stages.runLocator(st, new TablePlacesExtractor(placesResults.toDF()))
     val again = Stages.runLocator(st, new TablePlacesExtractor(placesResults.toDF()))
     assert(again == StageMetrics(0, 0, 0, 0, 0))
+  }
+
+  /** Runs `f` on its first `n` calls, then extracts from the fixture. */
+  private class RacingPlaces(n: Int, results: DataFrame)(f: Int => Unit)
+      extends PlacesExtractor {
+    var calls = 0
+    def extract(urls: DataFrame): DataFrame = {
+      calls += 1
+      if (calls <= n) f(calls)
+      new TablePlacesExtractor(results).extract(urls)
+    }
+  }
+
+  test("each non-empty stage run is one commit, an empty run none") {
+    val st = store()
+    st.urls.createMany(urlFixture)
+    def commits(run: => StageMetrics): (Long, Long) = {
+      val before = st.catalog.currentCommitId()
+      val m = run
+      (m.processed, st.catalog.currentCommitId() - before)
+    }
+    val web = new TableWebsiteExtractor(webResults(placesResults.select(
+      concat(lit("pl_"), md5(col("url"))).as("id"), col("url")).distinct()))
+    val places = new TablePlacesExtractor(placesResults)
+    val sink = new DeterministicCrmSink()
+    assert(commits(Stages.runLocator(st, places)) == (3L, 1L))
+    assert(commits(Stages.runEnricher(st, web)) == (3L, 1L))
+    assert(commits(Stages.runCrmSync(st, sink)) == (1L, 1L))
+    assert(commits(Stages.runLocator(st, places)) == (0L, 0L))
+    assert(commits(Stages.runEnricher(st, web)) == (0L, 0L))
+    assert(commits(Stages.runCrmSync(st, sink)) == (0L, 0L))
+    // the notification rides its stage's commit
+    assert(st.notifications.snapshot().select("serviceName").as[String].collect().sorted.toSeq ==
+      Seq("CRM_Sync", "Places_Locator", "Website_Content_Scrapper"))
+  }
+
+  test("locator: a url that turns pending mid-run is extracted by the retried run, never flipped unprocessed") {
+    val st = store()
+    st.urls.createMany(urlFixture)
+    val results = placesResults.unionByName(Seq(
+      ("g4", "Late Firm", "https://late.example", Some("4 Late St, Leeds"), "+44 4"))
+      .toDF("sourceId", "name", "url", "address", "telephone"))
+    val extractor = new RacingPlaces(1, results)({ _ =>
+      st.urls.createMany(urlRows(("g4", "https://maps.example/search?q=late", Some("Leeds"))))
+    })
+    val before = st.catalog.currentCommitId()
+    val m = Stages.runLocator(st, extractor)
+    // the late url's own commit plus the stage's one
+    assert(st.catalog.currentCommitId() - before == 2)
+    val g4 = st.urls.snapshot().filter($"id" === "g4").head()
+    val lateInserted = st.places.snapshot().filter($"url" === "https://late.example").count() == 1
+    assert(g4.isNullAt(g4.fieldIndex("status")) ||
+      (g4.getAs[Boolean]("status") && lateInserted && m.processed == 4), g4.toString)
+    assert(g4.getAs[String]("notes") == null, g4.toString)
+  }
+
+  test("enricher: a place requeued mid-run is extracted by the retried run, never flipped unprocessed") {
+    val st = store()
+    st.urls.createMany(urlFixture)
+    Stages.runLocator(st, new TablePlacesExtractor(placesResults))
+    val noaddr = $"url" === "https://noaddr.example"
+    st.places.updateMany(graft.query.RawCol(noaddr), Map("status" -> lit(true)))
+    val byUrl = st.places.snapshot().select("url", "id").as[(String, String)].collect().toMap
+    val web = Seq(
+      (byUrl("https://acme.example"), "Acme Law", "https://acme.example", "+44 20"),
+      (byUrl("https://noaddr.example"), "NoAddr Firm", "https://noaddr.example", "+44 30"))
+      .toDF("sourceId", "name", "websiteUrl", "phoneNumber")
+      .withColumn("emailAddress", lit("x@firm.example"))
+      .withColumn("address", lit(null).cast(StringType))
+      .withColumn("industry", lit("Legal Services"))
+      .withColumn("location", lit("EU"))
+      .withColumn("servicesOffered", array(lit("Tax Law")))
+    var calls = 0
+    val extractor = new WebsiteExtractor {
+      def extract(places: DataFrame): DataFrame = {
+        calls += 1
+        // CRM sync's requeue, landing while this run works
+        if (calls == 1)
+          st.places.updateMany(graft.query.RawCol(noaddr), Map("status" -> lit(null).cast(BooleanType)))
+        new TableWebsiteExtractor(web).extract(places)
+      }
+    }
+    val m = Stages.runEnricher(st, extractor)
+    val p = st.places.snapshot().filter(noaddr).head()
+    val enriched = st.companies.snapshot().filter($"name" === "NoAddr Firm").count() == 1
+    assert(p.isNullAt(p.fieldIndex("status")) ||
+      (p.getAs[Boolean]("status") && enriched && m.processed == 3), p.toString)
+    assert(p.getAs[String]("notes") == null, p.toString)
+  }
+
+  test("a stage that loses every commit race throws and publishes nothing") {
+    spark.catalog.clearCache()
+    val st = store()
+    st.urls.createMany(urlFixture)
+    val extractor = new RacingPlaces(Int.MaxValue, placesResults)({ i =>
+      st.urls.createMany(urlRows((s"x$i", s"https://maps.example/search?q=x$i", None)))
+    })
+    val before = st.catalog.currentCommitId()
+    intercept[graft.store.ConcurrentModificationException] {
+      Stages.runLocator(st, extractor)
+    }
+    // one attempt plus Retry.onConflict's three retries, each losing to
+    // the extractor's own commit — and only those commits landed
+    assert(extractor.calls == 4)
+    assert(st.catalog.currentCommitId() - before == 4)
+    assert(st.places.snapshot().isEmpty)
+    assert(st.urls.snapshot().filter($"status".isNotNull).isEmpty)
+    assert(st.notifications.snapshot().isEmpty)
+    // the extraction cache is released on the failing path too
+    assert(spark.sharedState.cacheManager.isEmpty)
   }
 }

@@ -144,15 +144,23 @@ class ActionBudgetSpec extends AnyFunSuite with SparkTestBase {
       .withColumn("address", lit(null).cast(StringType))
       .withColumn("industry", lit("Legal Services"))
       .withColumn("location", lit("EU"))
-    var ms = Seq.empty[StageMetrics]
-    val execs = countExecs {
-      ms = Seq(
-        Stages.runLocator(st, new TablePlacesExtractor(places)),
-        Stages.runEnricher(st, new TableWebsiteExtractor(web)),
-        Stages.runCrmSync(st, new DeterministicCrmSink()))
+    // (metrics, commits) of one stage run
+    def committed(run: => StageMetrics): (StageMetrics, Long) = {
+      val before = st.catalog.currentCommitId()
+      val m = run
+      (m, st.catalog.currentCommitId() - before)
     }
-    assert(ms.map(m => (m.processed, m.succeeded, m.failed, m.skipped, m.inserted)) == Seq(
-      (3L, 2L, 1L, 0L, 4L), (4L, 2L, 0L, 2L, 2L), (2L, 1L, 1L, 0L, 2L)))
+    var runs = Seq.empty[(StageMetrics, Long)]
+    val execs = countExecs {
+      runs = Seq(
+        committed(Stages.runLocator(st, new TablePlacesExtractor(places))),
+        committed(Stages.runEnricher(st, new TableWebsiteExtractor(web))),
+        committed(Stages.runCrmSync(st, new DeterministicCrmSink())))
+    }
+    assert(runs.map { case (m, _) => (m.processed, m.succeeded, m.failed, m.skipped, m.inserted) } ==
+      Seq((3L, 2L, 1L, 0L, 4L), (4L, 2L, 0L, 2L, 2L), (2L, 1L, 1L, 0L, 2L)))
+    // data, flips and the notification publish in one commit per stage
+    assert(runs.map(_._2) == Seq(1L, 1L, 1L))
     assert(execs <= 26, s"pipeline round regressed: $execs root executions (budget 26)")
   }
 
