@@ -1,7 +1,7 @@
 package graft.pipeline
 
 import graft.store.{ConnectOrCreate, Txn}
-import org.apache.spark.sql.{Column, DataFrame, Observation}
+import org.apache.spark.sql.{Column, DataFrame, Observation, Row}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
 
@@ -48,8 +48,8 @@ object Stages {
   /** One stage run: `body` reads its inputs through `tx`, stages its
     * writes and flips, and returns the run's metrics; a non-empty run
     * stages its Notification row (`schema.prisma:90-99`: message + JSON
-    * metadata via `to_json(struct(...))`, the JSON.stringify of the
-    * reference's logs, SURVEY §2.E) in the same `tx`, so everything
+    * metadata, the JSON.stringify of the reference's logs, SURVEY §2.E)
+    * in the same `tx`, so everything
     * publishes in one commit checked against the snapshot the inputs were
     * read from. An OCC conflict re-runs the whole body. An empty run
     * stages nothing and commits nothing. */
@@ -59,16 +59,16 @@ object Stages {
     Retry.onConflict() {
       Txn.run(store.catalog) { tx =>
         val m = body(tx)
-        if (m.processed > 0)
-          tx.createMany(store.notifications, store.urls.spark.range(1).select(
-            concat(lit("nt_"), lit(java.util.UUID.randomUUID().toString.replace("-", ""))).as("id"),
-            lit(message).as("message"),
-            to_json(struct(
-              lit(m.processed).as("processed"), lit(m.succeeded).as("succeeded"),
-              lit(m.failed).as("failed"), lit(m.skipped).as("skipped"),
-              lit(m.inserted).as("inserted"))).as("metadata"),
-            lit(serviceName).as("serviceName"),
-            nullT.as("createdAt"), nullT.as("updatedAt")), skipDuplicates = false)
+        if (m.processed > 0) {
+          // a one-row literal batch: the store stages it in one job
+          val metadata = Seq("processed" -> m.processed, "succeeded" -> m.succeeded,
+            "failed" -> m.failed, "skipped" -> m.skipped, "inserted" -> m.inserted)
+            .map { case (k, v) => s""""$k":$v""" }.mkString("{", ",", "}")
+          val row = Row("nt_" + java.util.UUID.randomUUID().toString.replace("-", ""),
+            message, metadata, serviceName, null, null)
+          tx.createMany(store.notifications, store.urls.spark.createDataFrame(
+            java.util.List.of(row), Entities.notification), skipDuplicates = false)
+        }
         m
       }
     }

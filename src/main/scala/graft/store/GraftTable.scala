@@ -1,18 +1,35 @@
 package graft.store
 
 import graft.query.Where
-import org.apache.spark.sql.{Column, DataFrame, Row, SparkSession}
+import org.apache.spark.sql.{Column, DataFrame, Observation, Row, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
 
 /** The computed next state of one mutation: the full next table state as a
   * lazy plan, the set of partition keys the mutation touches (ONLY these
-  * slices get rewritten), and the matched/inserted row count. */
-private[store] final case class Staged(next: DataFrame, touched: Set[String], n: Long)
+  * slices get rewritten), the matched/inserted row count, and the touched
+  * slices the mutation's own rows land in (a staged write must put rows
+  * there). */
+private[store] final case class Staged(next: DataFrame, touched: Set[String], n: Long,
+                                       landing: Set[String])
 
-/** What an update's staging needs from the rows it rewrites: rows per
-  * branch, and the slices they leave and land in. */
-private[store] final case class UpdateCensus(n: IndexedSeq[Long], touched: Set[String])
+/** What a statement's slice write observed: the slices the statement
+  * touches, those its rewritten or inserted rows land in, and its row
+  * count per branch. */
+private[store] final case class Census(touched: Set[String], landing: Set[String],
+                                       n: IndexedSeq[Long])
+
+/** A mutation whose census rides its own slice write, so the statement is
+  * one Spark job: `rows` is the next state of exactly the slices the
+  * statement touches, `__pk` attached; `census` reads what the write
+  * observed, throws on a constraint breach (before anything is
+  * published), and returns the touched slices and counts. */
+private[store] final case class ObservedStaged(rows: DataFrame, census: () => Census)
+
+/** A declared FK of an inserted table, checked inside the insert's
+  * checkpoint: `keys` holds the parent's distinct key values under the
+  * child column's name. */
+private[store] final case class ParentKeys(childCol: String, keys: DataFrame, message: String)
 
 /** Isolation levels accepted by `\$transaction`
   * (`internal/prismaNamespace.ts:885-892`). The store ALWAYS provides
@@ -411,6 +428,37 @@ final class GraftTable(
     dirs.collect { case (pk, dir) if tokens.subsetOf(pk.split(",").toSet) => dir }.toSeq
   }
 
+  /** The dirs of `dirs` a statement that rewrites the rows matching `pred`
+    * with one of `sets` must read: the slices whose sidecar stats let
+    * `pred` match, plus every slice a SET can move rows into — all slices
+    * when a moved partition column's new value is not a literal. */
+  private[store] def candidateDirs(dirs: Map[String, String], pred: Column,
+                                   sets: Seq[Map[String, Column]]): Seq[String] = {
+    // a predicate bound to another plan's columns only disables pruning
+    val cs = scala.util.Try(resolvedConjuncts(pred)).getOrElse(Nil)
+    // no sidecar → never skip
+    val kept = dirs.values.filter(d =>
+      SliceStats.readSidecar(d).forall(st => cs.forall(SliceStats.mayMatch(_, st))))
+    val targets = sets.flatMap { set =>
+      val moved = partitionCols.filter(set.contains).map(c => c -> literalOf(set(c), c))
+      if (moved.isEmpty) Nil
+      else if (moved.forall(_._2.isDefined)) sliceDirs(dirs, moved.map { case (c, v) => c -> v.get }.toMap)
+      else dirs.values
+    }
+    (kept ++ targets).toSeq.distinct.sorted
+  }
+
+  /** The driver-side value of a SET expression that is a literal of the
+    * column's own [[driverSafeTypes]] type (whose slice key
+    * [[Catalog.encodeValue]] renders exactly), else None. */
+  private def literalOf(c: Column, colName: String): Option[Option[Any]] = {
+    val e = org.apache.spark.sql.graftbridge.ColumnBridge.expression(c)
+    val dt = schema(colName).dataType
+    if (!driverSafeTypes.contains(dt) || !e.resolved || !e.foldable || e.dataType != dt) None
+    else Some(Option(org.apache.spark.sql.catalyst.CatalystTypeConverters
+      .convertToScala(e.eval(), dt)))
+  }
+
   /** Stats-based data skipping: a filtered snapshot that drops every slice
     * whose footer-derived column ranges ([[SliceStats]] sidecar) prove the
     * predicate can't match — the Iceberg/Delta file-skipping idea at the
@@ -470,15 +518,8 @@ final class GraftTable(
   /** (kept dirs, total dirs) under slice-level stats pruning — split out
     * for tests and for callers that want the skip ratio. */
   private[store] def prunedDirs(pred: Column): (Seq[String], Int) = {
-    val cs = resolvedConjuncts(pred)
-    val all = catalog.currentDirs(name).values.toSeq
-    val kept = all.filter { dir =>
-      SliceStats.readSidecar(dir) match {
-        case Some(st) => cs.forall(c => SliceStats.mayMatch(c, st))
-        case None     => true // no sidecar → never skip
-      }
-    }
-    (kept, all.size)
+    val all = catalog.currentDirs(name)
+    (candidateDirs(all, pred, Nil), all.size)
   }
 
   /** Two-level pruning: slices by merged stats, then FILES inside each
@@ -564,9 +605,10 @@ final class GraftTable(
       concat(lit(c + "="),
         coalesce(url_encode(col(c).cast("string")), lit(Catalog.NullToken)))): _*)
 
-  private def touch(df: DataFrame, cols: Seq[String]): DataFrame =
+  /** Set the timestamp columns among `cols` to the statement's `now`. */
+  private def touch(df: DataFrame, cols: Seq[String], now: Column): DataFrame =
     cols.filter(timestampCols.contains).filter(schema.fieldNames.contains)
-      .foldLeft(df)((d, c) => d.withColumn(c, current_timestamp()))
+      .foldLeft(df)((d, c) => d.withColumn(c, now))
 
   private def align(df: DataFrame): DataFrame =
     df.select(schema.fieldNames.map(col).toIndexedSeq: _*)
@@ -624,13 +666,16 @@ final class GraftTable(
     * expression evaluates against the PRE-update row, so
     * `SET a = b, b = a` swaps (Postgres semantics) instead of reading a
     * half-rewritten row. */
-  private def withSet(df: DataFrame, cond: Column, set: Map[String, Column]): DataFrame =
-    withSets(df, Seq(cond -> set))
+  private def withSet(df: DataFrame, cond: Column, set: Map[String, Column],
+                      now: Column): DataFrame =
+    withSets(df, Seq(cond -> set), now)
 
   /** [[withSet]] with several (condition, SET) branches, first match wins:
     * the two-branch update of [[stagedUpdateWhereIn]] rewrites both
-    * branches in the same single projection. */
-  private def withSets(df: DataFrame, branches: Seq[(Column, Map[String, Column])]): DataFrame = {
+    * branches in the same single projection. `now` is the statement's
+    * timestamp, written to `updatedAt` on every rewritten row. */
+  private def withSets(df: DataFrame, branches: Seq[(Column, Map[String, Column])],
+                       now: Column): DataFrame = {
     val touchesUpdatedAt = schema.fieldNames.contains("updatedAt") &&
       timestampCols.contains("updatedAt")
     df.select(df.columns.toIndexedSeq.map { c =>
@@ -638,7 +683,7 @@ final class GraftTable(
       // old value) so a later branch writing `c` cannot take them over
       val arms = branches.map { case (cond, set) =>
         cond -> set.get(c)
-          .orElse(if (c == "updatedAt" && touchesUpdatedAt) Some(current_timestamp()) else None)
+          .orElse(if (c == "updatedAt" && touchesUpdatedAt) Some(now) else None)
       }
       if (arms.forall(_._2.isEmpty)) col(c)
       else arms.tail.foldLeft(when(arms.head._1, arms.head._2.getOrElse(col(c)))) {
@@ -647,71 +692,150 @@ final class GraftTable(
     }: _*)
   }
 
-  /** ONE collect over the rows an update rewrites (`rows` holds only rows
-    * some branch matches): per branch, pre-image slice and post-image
-    * slice, the row count and the count of rows whose SET breaks a write
-    * constraint. Post-image slices are only computed when a SET moves a
-    * partition column. A violation is classified to its precise P-code
-    * by [[validateUpdated]] only once the census shows one. */
-  private def updateCensus(rows: DataFrame,
-                           branches: Seq[(Column, Map[String, Column])]): UpdateCensus = {
+  /** An observed metric that is a set of slice keys. */
+  private def observedKeys(m: Map[String, Any], key: String): Set[String] =
+    m.get(key).map(_.asInstanceOf[scala.collection.Seq[String]].toSet).getOrElse(Set.empty)
+
+  private def observedCount(m: Map[String, Any], key: String): Long =
+    m.get(key).map(_.asInstanceOf[Long]).getOrElse(0L)
+
+  /** The one-job update. `frame` is the candidate state with every
+    * predicate the branches test already projected as a column, so no SET
+    * changes what a condition sees; `branches` are (condition, SET) pairs,
+    * first match wins; `tmpCols` are dropped before the write.
+    *
+    * The census — per branch the row count and the count of rows whose
+    * SET breaks a write constraint, plus pre- and post-image slices (the
+    * latter differ only when a SET moves a partition column) — is
+    * observed inside the write ([[observedWrite]]). A violation is
+    * classified to its precise P-code by [[validateUpdated]] only once
+    * the census shows one. */
+  private def observedUpdate(frame: DataFrame, slices: Int,
+                             branches: Seq[(Column, Map[String, Column])],
+                             tmpCols: Seq[String], single: Boolean): ObservedStaged = {
+    val now = StatementTimestamp.draw()._1
     val moves = branches.exists(b => partitionCols.exists(b._2.contains))
     val br = branches.indices.reverse.foldLeft(lit(-1)) { (acc, i) =>
       when(branches(i)._1, lit(i)).otherwise(acc)
     }
-    val tagged = rows.withColumn("__br", br).withColumn("__prepk", partKeyCol)
-    val post = withSets(tagged,
-      branches.indices.map(i => (col("__br") === i) -> branches(i)._2))
-    val viol = branches.indices.flatMap { i =>
-      setViolation(branches(i)._2.keySet).map(col("__br") === i && _)
-    }.reduceOption(_ || _).getOrElse(lit(false))
-    val census = post
-      .groupBy(col("__br"), col("__prepk"),
-        (if (moves) partKeyCol else col("__prepk")).as("__postpk"))
-      .agg(count(lit(1)), count(when(viol, 1)))
-      .collect()
-    branches.indices.foreach { i =>
-      if (census.exists(r => r.getInt(0) == i && r.getLong(4) > 0))
-        validateUpdated(post.filter(col("__br") === i), branches(i)._2.keySet)
+    val post = withSets(frame.withColumn("__br", br).withColumn("__prepk", partKeyCol),
+      branches.indices.map(i => (col("__br") === i) -> branches(i)._2), now)
+      .withColumn("__postpk", if (moves) partKeyCol else col("__prepk"))
+    val aggs = branches.indices.flatMap { i =>
+      val viol = setViolation(branches(i)._2.keySet).getOrElse(lit(false))
+      Seq(count(when(col("__br") === i, 1)).as(s"n$i"),
+        count(when(col("__br") === i && viol, 1)).as(s"v$i"))
     }
-    UpdateCensus(
-      branches.indices.map(i => census.filter(_.getInt(0) == i).map(_.getLong(3)).sum),
-      census.flatMap(r => Seq(r.getString(1), r.getString(2))).toSet)
+    val (rows, census) = observedWrite(post, slices, col("__br") >= 0,
+      if (moves) Seq(col("__prepk"), col("__postpk")) else Seq(col("__prepk")),
+      aggs, "__br" +: "__prepk" +: "__postpk" +: tmpCols)
+    ObservedStaged(rows, () => {
+      val m = census()
+      branches.indices.foreach { i =>
+        if (observedCount(m, s"v$i") > 0)
+          validateUpdated(post.filter(col("__br") === i), branches(i)._2.keySet)
+      }
+      val n = branches.indices.map(i => observedCount(m, s"n$i"))
+      if (single && n(0) == 0)
+        throw new RecordNotFoundException(s"$name: update found no row")
+      // rewritten rows land in their post-image slices
+      Census(observedKeys(m, "__touched"), observedKeys(m, if (moves) "__pk1" else "__pk0"), n)
+    })
   }
 
-  private[store] def stagedCreate(current: DataFrame, rows: DataFrame,
-                                  failOnDup: Boolean): Staged =
-    stagedCreateReturning(current, rows, skipDuplicates = !failOnDup)._1
+  /** The one-job delete: `doomed` flags the rows of `current` (the state
+    * of `slices` candidate slices) to drop; `tmpCols` are dropped before
+    * the write. */
+  private[store] def observedDelete(current: DataFrame, slices: Int, doomed: Column,
+                                    tmpCols: Seq[String], single: Boolean): ObservedStaged = {
+    val flagged = current.withColumn("__doomed", doomed)
+    val (rows, census) = observedWrite(flagged, slices, col("__doomed"), Seq(partKeyCol),
+      Seq(count(when(col("__doomed"), 1)).as("n")), "__doomed" +: tmpCols,
+      keep = !col("__doomed"))
+    ObservedStaged(rows, () => {
+      val m = census()
+      val n = observedCount(m, "n")
+      if (single && n == 0)
+        throw new RecordNotFoundException(s"$name: delete found no row")
+      Census(observedKeys(m, "__touched"), Set.empty, IndexedSeq(n))
+    })
+  }
+
+  /** The write plan of a one-job statement and its census. `next` is the
+    * next state of the `slices` candidate slices (data columns plus
+    * `tmpCols`), `changed` flags the rows the statement rewrites or
+    * drops, `pks` their pre- and post-image slice keys, `aggs` the
+    * statement's own counts over them; rows where `keep` fails are not
+    * written.
+    *
+    * Over one candidate slice (every unpartitioned table, and a poll
+    * slice nothing else can be touched alongside) the census rides the
+    * write's own scan: the slice's rows are written whole, and published
+    * only if a row changed. Over several, the changed rows feed the census
+    * on the broadcast side of a semi-join that narrows the write to the
+    * slices they touch. (A constant slice key would turn that semi-join
+    * into a row-limited existence probe that starves the observed side,
+    * so an unpartitioned table never takes it.) `census` returns the
+    * observed metrics, with the touched slices under `__touched`. When the
+    * optimizer pruned the observed rows away with a side it proved empty
+    * (a delete of every row writes nothing), one aggregate action counts
+    * them instead. */
+  private def observedWrite(next: DataFrame, slices: Int, changed: Column, pks: Seq[Column],
+                            aggs: Seq[Column], tmpCols: Seq[String],
+                            keep: Column = lit(true)): (DataFrame, () => Map[String, Any]) = {
+    val obs = new Observation()
+    val (observed, metrics, rows) =
+      if (slices <= 1 || partitionCols.isEmpty) {
+        val metrics = aggs ++ pks.zipWithIndex.map { case (pk, i) =>
+          collect_set(when(changed, pk)).as(s"__pk$i") }
+        (next, metrics, next.observe(obs, metrics.head, metrics.tail: _*).filter(keep)
+          .drop(tmpCols: _*).withColumn("__pk", partKeyCol))
+      } else {
+        val metrics = aggs ++ pks.zipWithIndex.map { case (pk, i) => collect_set(pk).as(s"__pk$i") }
+        val observed = next.filter(changed)
+        val keys = observed.observe(obs, metrics.head, metrics.tail: _*)
+          .select((if (pks.size == 1) pks.head else explode(array(pks: _*))).as("__pk"))
+        (observed, metrics, next.filter(keep).drop(tmpCols: _*).withColumn("__pk", partKeyCol)
+          .join(broadcast(keys), Seq("__pk"), "left_semi"))
+      }
+    (rows, () => {
+      val m = Some(obs.get).filter(_.nonEmpty).getOrElse {
+        val r = observed.agg(metrics.head, metrics.tail: _*).collect().head
+        r.getValuesMap[Any](r.schema.fieldNames.toSeq)
+      }
+      m + ("__touched" -> pks.indices.flatMap(i => observedKeys(m, s"__pk$i")))
+    })
+  }
 
   /** SET applied unconditionally to every row of `df` (FK validation views). */
   private[store] def applySet(df: DataFrame, set: Map[String, Column]): DataFrame =
-    withSet(df, lit(true), set)
+    withSet(df, lit(true), set, StatementTimestamp.draw()._1)
 
-  /** stagedCreate that also returns the inserted slice
-    * (createManyAndReturn, `effect.ts:487-493`).
+  /** The insert, staged, plus the inserted slice (createManyAndReturn,
+    * `effect.ts:487-493`).
     *
     * ONE materialization of the incoming batch, with the survivor flag
     * computed INSIDE it: the in-batch dedup ranks (sequential per unique
     * key) and the snapshot existence probes all fold into a `__keep`
     * column frozen by a single checkpoint, and the per-slice stats, raw
-    * count, and null-constraint check fold into a single collect — three
-    * actions per insert (materialize, stats, slice write) where the
-    * round-3 path paid five, and at 100 TB the batch materializes once,
-    * not twice. The survivor choice among duplicate keys is arbitrary
-    * (as `dropDuplicates`' was) but frozen: every consumer — the stats
-    * action, FK probes, the slice writes, the returned slice — sees the
-    * same winners.
+    * count, null-constraint check and the FK orphan counts of `fks` ride
+    * that checkpoint as observed metrics — two actions per insert
+    * (materialize, slice write), and at 100 TB the batch materializes
+    * once. The survivor choice among duplicate keys is arbitrary (as
+    * `dropDuplicates`' was) but frozen: every consumer — the census, the
+    * slice writes, the returned slice — sees the same winners.
     *
     * `currentEmpty` = the caller (the transaction, which owns the
     * slice-dir map) KNOWS `current` has no committed slices — pre-first
     * insert — so the snapshot probes are skipped entirely. */
   private[store] def stagedCreateReturning(current: DataFrame, rows: DataFrame,
                                            skipDuplicates: Boolean,
-                                           currentEmpty: Boolean = false): (Staged, DataFrame) = {
+                                           currentEmpty: Boolean = false,
+                                           fks: Seq[ParentKeys] = Nil): (Staged, DataFrame) = {
     // a nondeterministic expression can't sit inside a window ORDER BY —
     // project the tie-break id first (its value is arbitrary; the
     // checkpoint below freezes whatever was drawn)
-    var marked = touch(align(rows), timestampCols)
+    var marked = touch(align(rows), timestampCols, StatementTimestamp.draw()._1)
       .withColumn("__mid", monotonically_increasing_id())
     var keep: Column = lit(true)
     var tmpCols: Seq[String] = Seq("__mid")
@@ -741,46 +865,138 @@ final class GraftTable(
       keep = keep && col(s"__ex$i").isNull
       tmpCols :+= s"__ex$i"
     }
-    // stats + raw count + null-constraint + length checks RIDE THE
+    // FK anti-joins as left joins against the distinct parent keys: a
+    // surviving non-NULL FK value without a parent row is an orphan
+    fks.zipWithIndex.foreach { case (fk, i) =>
+      marked = marked.join(fk.keys.select(col(fk.childCol))
+        .withColumn(s"__fk$i", lit(true)), Seq(fk.childCol), "left")
+      tmpCols :+= s"__fk$i"
+    }
+    // stats + raw count + null-constraint + length + FK checks RIDE THE
     // CHECKPOINT action as observed metrics — the insert path pays TWO
     // driver actions (materialize-with-stats, slice write), not three.
     // NULL into a non-nullable column is the P2011 equivalent; a string
     // over its declared maxLengths cap is P2000 (parquet itself would
     // happily store either; only surviving rows are checked).
-    val required = schema.fields.filterNot(_.nullable).map(_.name).toSeq
-    val nullViol = required.map(col(_).isNull).reduceOption(_ || _).getOrElse(lit(false))
-    val lenViol = maxLengths.toSeq
-      .map { case (c, mx) => length(col(c)) > mx }
-      .reduceOption(_ || _).getOrElse(lit(false))
-    val obs = new org.apache.spark.sql.Observation()
-    marked = marked.withColumn("__keep", keep).drop(tmpCols: _*)
+    val (nullViol, lenViol) = insertViolations
+    val obs = new Observation()
+    val orphans = fks.zipWithIndex.map { case (fk, i) =>
+      count(when(col("__keep") && col(fk.childCol).isNotNull && col(s"__fk$i").isNull, 1))
+        .as(s"fk$i")
+    }
+    marked = marked.withColumn("__keep", keep)
       .observe(obs,
         count(lit(1)).as("all"),
-        count(when(col("__keep"), 1)).as("n"),
-        count(when(col("__keep") && nullViol, 1)).as("nv"),
-        count(when(col("__keep") && lenViol, 1)).as("lv"),
-        collect_set(when(col("__keep"), partKeyCol)).as("pks"))
+        Seq(count(when(col("__keep"), 1)).as("n"),
+          count(when(col("__keep") && nullViol, 1)).as("nv"),
+          count(when(col("__keep") && lenViol, 1)).as("lv"),
+          collect_set(when(col("__keep"), partKeyCol)).as("pks")) ++ orphans: _*)
+      .drop(tmpCols: _*)
       .localCheckpoint()
     val m = obs.get
-    val rawN = m("all").asInstanceOf[Long]
-    val n = m("n").asInstanceOf[Long]
-    val touched = m("pks").asInstanceOf[scala.collection.Seq[String]].toSet
-    if (m("nv").asInstanceOf[Long] > 0)
-      throw new NullConstraintException(
-        s"$name: NULL in non-nullable column (one of ${required.mkString(",")})")
-    if (m("lv").asInstanceOf[Long] > 0)
-      throw new ValueTooLongException(
-        s"$name: value exceeds declared max length " +
-          s"(${maxLengths.map { case (c, mx) => s"$c<=$mx" }.mkString(",")})")
-    if (!skipDuplicates && uniqueKeys.nonEmpty && n < rawN)
-      throw new UniqueViolationException(
-        s"$name: unique constraint would be violated on ${uniqueKeys.mkString(",")}")
+    val n = observedCount(m, "n")
+    checkInsert(observedCount(m, "nv"), observedCount(m, "lv"),
+      dupes = n < observedCount(m, "all"), skipDuplicates)
+    fks.zipWithIndex.foreach { case (fk, i) =>
+      if (observedCount(m, s"fk$i") > 0) throw new ForeignKeyViolationException(fk.message)
+    }
     // the probe using-joins moved the key columns to the front — put the
     // returned slice back in declared order (createManyAndReturn hands
     // this frame to the caller; positional consumers must see the schema)
     val clean = marked.filter(col("__keep"))
       .select(schema.fieldNames.map(col).toIndexedSeq: _*)
-    (Staged(current.unionByName(clean), touched, n), clean)
+    val pks = observedKeys(m, "pks")
+    (Staged(current.unionByName(clean), pks, n, pks), clean)
+  }
+
+  private def requiredCols: Seq[String] = schema.fields.filterNot(_.nullable).map(_.name).toSeq
+
+  /** Row tests for a NULL in a non-nullable column (P2011) and for a
+    * string over its declared maxLengths cap (P2000). */
+  private def insertViolations: (Column, Column) = (
+    requiredCols.map(col(_).isNull).reduceOption(_ || _).getOrElse(lit(false)),
+    maxLengths.toSeq.map { case (c, mx) => length(col(c)) > mx }
+      .reduceOption(_ || _).getOrElse(lit(false)))
+
+  /** The insert checks over the surviving rows, in P-code order: NULL
+    * violations, over-length values, then (unless `skipDuplicates`) a
+    * duplicate key that cost a row. */
+  private def checkInsert(nullViolations: Long, lengthViolations: Long, dupes: Boolean,
+                          skipDuplicates: Boolean): Unit = {
+    if (nullViolations > 0)
+      throw new NullConstraintException(
+        s"$name: NULL in non-nullable column (one of ${requiredCols.mkString(",")})")
+    if (lengthViolations > 0)
+      throw new ValueTooLongException(
+        s"$name: value exceeds declared max length " +
+          s"(${maxLengths.map { case (c, mx) => s"$c<=$mx" }.mkString(",")})")
+    if (!skipDuplicates && uniqueKeys.nonEmpty && dupes)
+      throw new UniqueViolationException(
+        s"$name: unique constraint would be violated on ${uniqueKeys.mkString(",")}")
+  }
+
+  /** [[stagedCreateReturning]] for a literal batch ([[literalRows]]) into
+    * a table without declared FKs: one Spark job instead of two. The
+    * in-batch dedup (same sequential per-key rule, NULL keys never
+    * conflict) and the constraint census run on the driver, and the
+    * snapshot unique-key probe folds into the slice write as an observed
+    * count. A batch whose in-batch survivors break a constraint returns
+    * None, so the Spark path decides which survivors the snapshot probe
+    * leaves and classifies the breach exactly as before. */
+  private[store] def stagedCreateLiteral(dirs: Map[String, String], rows: DataFrame,
+                                         skipDuplicates: Boolean): Option[ObservedStaged] = {
+    if (parentRefs.nonEmpty) return None
+    val aligned = align(rows)
+    val batch = literalRows(aligned, uniqueKeys.flatten).getOrElse(return None)
+    val nowTs = StatementTimestamp.draw()._2
+    val ts = timestampCols.filter(schema.fieldNames.contains).toSet
+    val inSchema = StructType(aligned.schema.fields.toSeq.map(f =>
+      // nullable like the Spark path's input, so a rare-path probe never
+      // folds to false; touched timestamp columns hold the statement's
+      StructField(f.name, if (ts(f.name)) TimestampType else f.dataType, nullable = true)))
+    def idx(c: String): Int = inSchema.fieldIndex(c)
+    val vals = batch.map(r => Row.fromSeq(r.toSeq.zipWithIndex.map {
+      case (_, i) if ts(inSchema(i).name) => nowTs
+      case (v, _) => v
+    }))
+    val keep = Array.fill(vals.length)(true)
+    uniqueKeys.foreach { uk =>
+      val seen = scala.collection.mutable.HashSet.empty[Seq[Any]]
+      vals.indices.foreach { i =>
+        val key = uk.map(c => vals(i).get(idx(c)))
+        if (keep(i) && !key.contains(null) && !seen.add(key)) keep(i) = false
+      }
+    }
+    val survivors = vals.indices.filter(keep).map(vals)
+    if (survivors.exists(breaksConstraint(_, idx))) return None
+    checkInsert(0, 0, dupes = survivors.length < vals.length, skipDuplicates)
+    val lands = survivors.map(r =>
+      if (partitionCols.isEmpty) Catalog.AllKey
+      else partitionCols.map(c => s"$c=${Catalog.encodeValue(r.get(idx(c)))}").mkString(",")).toSet
+    val fresh = spark.createDataFrame(java.util.Arrays.asList(survivors: _*), inSchema)
+    val current = readDirs(dirs.values.toSeq)
+    // the snapshot probe: left joins so a hit stays countable (keys are
+    // unique in the snapshot, and a NULL key joins nothing)
+    val probes = if (dirs.isEmpty) Nil else uniqueKeys
+    val probed = probes.zipWithIndex.foldLeft(fresh) { case (df, (uk, i)) =>
+      df.join(current.select(uk.map(col): _*).withColumn(s"__ex$i", lit(true)), uk, "left")
+    }
+    val hit = probes.indices.map(i => col(s"__ex$i").isNotNull).reduceOption(_ || _)
+      .getOrElse(lit(false))
+    val obs = new Observation()
+    val inserted = probed
+      .observe(obs, count(when(hit, 1)).as("hits"),
+        collect_set(when(!hit, partKeyCol)).as("pks"))
+      .filter(!hit).select(inSchema.fieldNames.map(col).toIndexedSeq: _*)
+    val next = readDirs(dirs.collect { case (pk, d) if lands(pk) => d }.toSeq)
+      .unionByName(inserted)
+    Some(ObservedStaged(next.withColumn("__pk", partKeyCol), () => {
+      val m = obs.get
+      val hits = observedCount(m, "hits")
+      checkInsert(0, 0, dupes = hits > 0, skipDuplicates)
+      val pks = if (probes.isEmpty) lands else observedKeys(m, "pks")
+      Census(pks, pks, IndexedSeq(survivors.length - hits))
+    }))
   }
 
   /** The post-update image of ONLY the matched rows — the slice FK
@@ -790,7 +1006,7 @@ final class GraftTable(
   private[store] def updatedView(current: DataFrame, where: Where,
                                  set: Map[String, Column]): DataFrame = {
     val cond = coalesce(Where.compile(where, current.apply), lit(false))
-    withSet(current.filter(cond), lit(true), set)
+    withSet(current.filter(cond), lit(true), set, StatementTimestamp.draw()._1)
   }
 
   /** The PRE-update image of the matched rows (ON UPDATE CASCADE builds
@@ -856,39 +1072,40 @@ final class GraftTable(
     * destination slices. */
   private[store] def stagedUpdateReturning(current: DataFrame, where: Where,
                                            set: Map[String, Column]): (Staged, DataFrame) = {
+    val now = StatementTimestamp.draw()._1
     val cond0 = coalesce(Where.compile(where, current.apply), lit(false))
     val movesParts = partitionCols.exists(set.contains)
     val matched = current.filter(cond0).withColumn("__prepk", partKeyCol)
-    val obs = new org.apache.spark.sql.Observation()
+    val obs = new Observation()
     val obsCols = Seq(count(lit(1)).as("n"), collect_set(col("__prepk")).as("pre")) ++
       (if (movesParts) Seq(collect_set(partKeyCol).as("post")) else Nil)
-    val updated = withSet(matched, lit(true), set)
+    val updated = withSet(matched, lit(true), set, now)
       .observe(obs, obsCols.head, obsCols.tail: _*)
       .drop("__prepk").localCheckpoint()
     val m = obs.get
     validateUpdated(updated, set.keySet)
-    def pks(key: String): Set[String] =
-      m(key).asInstanceOf[scala.collection.Seq[String]].toSet
-    val touched = pks("pre") ++ (if (movesParts) pks("post") else Set.empty[String])
+    val touched = observedKeys(m, "pre") ++ observedKeys(m, "post")
     // materialize the predicate BEFORE any column is rewritten (see
     // stagedUpdate) — the next-state plan itself stays lazy
     val withCond = current.withColumn("__upd", cond0)
-    val next = withSet(withCond, col("__upd"), set).drop("__upd")
-    (Staged(next, touched, m("n").asInstanceOf[Long]), updated)
+    val next = withSet(withCond, col("__upd"), set, now).drop("__upd")
+    (Staged(next, touched, observedCount(m, "n"),
+      observedKeys(m, if (movesParts) "post" else "pre")), updated)
   }
 
-  private[store] def stagedUpdate(current: DataFrame, where: Where,
-                                  set: Map[String, Column], single: Boolean): Staged = {
-    val cond0 = coalesce(Where.compile(where, current.apply), lit(false))
-    val census = updateCensus(current.filter(cond0), Seq(lit(true) -> set))
-    if (single && census.n(0) == 0)
-      throw new RecordNotFoundException(s"$name: update found no row")
+  /** `update`/`updateMany` as one Spark job ([[observedUpdate]]) over the
+    * slices of `dirs` the condition can match or the SET can move rows
+    * into ([[candidateDirs]]). */
+  private[store] def stagedUpdate(dirs: Map[String, String], where: Where,
+                                  set: Map[String, Column], single: Boolean): ObservedStaged = {
+    val candidates = candidateDirs(dirs, Where.compile(where, col), Seq(set))
+    val current = readDirs(candidates)
     // materialize the predicate BEFORE any column is rewritten — a `when`
     // chain re-resolving the condition against already-updated columns
     // would silently stop matching mid-update
-    val withCond = current.withColumn("__upd", cond0)
-    val next = withSet(withCond, col("__upd"), set).drop("__upd")
-    Staged(next, census.touched, census.n(0))
+    val withCond = current.withColumn("__upd",
+      coalesce(Where.compile(where, current.apply), lit(false)))
+    observedUpdate(withCond, candidates.size, Seq(col("__upd") -> set), Seq("__upd"), single)
   }
 
   /** Join-based bulk update: set `set` on rows whose `keyCol` appears in
@@ -901,12 +1118,13 @@ final class GraftTable(
     * MATCHED BY SOURCE`: it applies to rows that satisfy `extraCond` but
     * whose key is not in `keys` (a NULL key is never in `keys`). Both
     * branches rewrite their slices in the same pass, and their counts come
-    * from the same census; the second element is the `otherwise` count
-    * (0 when `otherwise` is empty). */
-  private[store] def stagedUpdateWhereIn(current: DataFrame, keyCol: String,
+    * from the same census (the second is 0 when `otherwise` is empty). */
+  private[store] def stagedUpdateWhereIn(dirs: Map[String, String], keyCol: String,
                                          keys: DataFrame, extraCond: Column,
                                          set: Map[String, Column],
-                                         otherwise: Map[String, Column]): (Staged, Long) = {
+                                         otherwise: Map[String, Column]): ObservedStaged = {
+    val candidates = candidateDirs(dirs, extraCond, Seq(set, otherwise))
+    val current = readDirs(candidates)
     val marker = keys.select(col(keyCol)).distinct().withColumn("__match", lit(true))
     // materialize the predicates before rewriting columns (see stagedUpdate)
     val joined = current.join(marker, Seq(keyCol), "left")
@@ -914,24 +1132,20 @@ final class GraftTable(
       .withColumn("__upd", coalesce(col("__match"), lit(false)) && col("__in"))
     val branches = Seq(col("__upd") -> set) ++
       (if (otherwise.isEmpty) Nil else Seq(col("__in") -> otherwise))
-    val rewritten = if (otherwise.isEmpty) col("__upd") else col("__in")
-    val census = updateCensus(joined.filter(rewritten), branches)
-    val next = withSets(joined, branches).drop("__match", "__in", "__upd")
-    (Staged(next, census.touched, census.n(0)), census.n.lift(1).getOrElse(0L))
+    observedUpdate(joined, candidates.size, branches, Seq("__match", "__in", "__upd"),
+      single = false)
   }
 
-  /** Returns the staged next state plus the doomed slice (the caller — the
+  /** Returns the staged delete plus the doomed slice (the caller — the
     * transaction — checks the doomed keys against RESTRICT children, which
-    * needs its own staged view of those tables). */
-  private[store] def stagedDelete(current: DataFrame, where: Where,
-                                  single: Boolean): (Staged, DataFrame) = {
-    val cond = Where.compile(where, current.apply)
-    val cond0 = coalesce(cond, lit(false))
-    val doomed = current.filter(cond0)
-    val (touched, n) = pkStats(doomed)
-    if (single && n == 0)
-      throw new RecordNotFoundException(s"$name: delete found no row")
-    (Staged(current.filter(!cond0), touched, n), doomed)
+    * needs its own staged view of those tables). Reads only the slices of
+    * `dirs` the condition can match. */
+  private[store] def stagedDelete(dirs: Map[String, String], where: Where,
+                                  single: Boolean): (ObservedStaged, DataFrame) = {
+    val candidates = candidateDirs(dirs, Where.compile(where, col), Nil)
+    val current = readDirs(candidates)
+    val cond0 = coalesce(Where.compile(where, current.apply), lit(false))
+    (observedDelete(current, candidates.size, cond0, Nil, single), current.filter(cond0))
   }
 
   /** ONE materialization of a MERGE delta with everything the staging
@@ -962,7 +1176,7 @@ final class GraftTable(
     val dataCols = schema.fieldNames.toSeq
     val viaDriver = localDelta(tagged, keyCols)
     if (viaDriver.isDefined) return viaDriver.get
-    val marked = touch(tagged, timestampCols)
+    val marked = touch(tagged, timestampCols, StatementTimestamp.draw()._1)
       .withColumn("__mid", monotonically_increasing_id())
     // among rows sharing a key, a non-delete image ranks first; __keep
     // marks the one surviving upsert per key (tombstones never survive —
@@ -970,12 +1184,8 @@ final class GraftTable(
     val w = org.apache.spark.sql.expressions.Window
       .partitionBy(keyCols.map(col): _*)
       .orderBy(col("__del").cast("int"), col("__mid"))
-    val required = schema.fields.filterNot(_.nullable).map(_.name).toSeq
-    val nullViol = required.map(col(_).isNull).reduceOption(_ || _).getOrElse(lit(false))
-    val lenViol = maxLengths.toSeq
-      .map { case (c, mx) => length(col(c)) > mx }
-      .reduceOption(_ || _).getOrElse(lit(false))
-    val obs = new org.apache.spark.sql.Observation()
+    val (nullViol, lenViol) = insertViolations
+    val obs = new Observation()
     val chk = marked
       .withColumn("__keep", !col("__del") && row_number().over(w) === 1)
       .drop("__mid")
@@ -1006,14 +1216,52 @@ final class GraftTable(
     Set(StringType, BooleanType, ByteType, ShortType, IntegerType, LongType)
   }
 
+  /** The rows of a literal batch the driver can stage exactly like the
+    * Spark path: a plan that optimizes to a `LocalRelation` of at most 10k
+    * rows whose partition and `keyCols` columns are [[driverSafeTypes]],
+    * both as declared and as given. Else None. The rows are read off the
+    * plan: no job, no SQL execution. */
+  private def literalRows(df: DataFrame, keyCols: Seq[String]): Option[Array[Row]] = {
+    import org.apache.spark.sql.catalyst.plans.logical.LocalRelation
+    // Cheap pre-check on the ANALYZED plan first: reading optimizedPlan
+    // runs a full optimizer pass that the Spark path then throws away
+    // (its downstream actions build fresh QueryExecutions), and the
+    // change-feed deltas behind applyChanges are manifest-diff join
+    // trees expensive enough to optimize that paying it per mutation
+    // measurably slowed the CDC gates. Only a plan whose every leaf is
+    // already a LocalRelation can fold to one.
+    val leavesLocal = df.queryExecution.analyzed.collectLeaves()
+      .forall(_.isInstanceOf[LocalRelation])
+    if (!leavesLocal) return None
+    val safe = (partitionCols ++ keyCols).forall(c =>
+      driverSafeTypes.contains(schema(c).dataType) &&
+        driverSafeTypes.contains(df.schema(c).dataType))
+    df.queryExecution.optimizedPlan match {
+      case l: LocalRelation if safe && l.data.lengthCompare(10000) <= 0 =>
+        val toRow = org.apache.spark.sql.catalyst.CatalystTypeConverters
+          .createToScalaConverter(df.schema)
+        Some(l.data.map(r => toRow(r).asInstanceOf[Row]).toArray)
+      case _ => None
+    }
+  }
+
+  /** The driver-side twin of [[insertViolations]] for one literal row
+    * (`idx` maps a column to its position): a NULL in a non-nullable
+    * column, or a string longer, in characters, than its cap. */
+  private def breaksConstraint(r: Row, idx: String => Int): Boolean =
+    requiredCols.exists(c => r.isNullAt(idx(c))) ||
+      maxLengths.exists { case (c, mx) =>
+        !r.isNullAt(idx(c)) && { val v = r.getString(idx(c)); v.codePointCount(0, v.length) > mx }
+      }
+
   /** [[checkpointDelta]]'s DRIVER-SIDE fast path: a delta whose optimized
     * plan is a `LocalRelation` (literal batches — index meta rows,
     * cursor rows, small Seq-built upserts) is already driver-resident
     * metadata, so the survivor rank, counts, landing-slice census and
     * constraint census all compute in plain Scala and the window
     * shuffle + Observation + localCheckpoint job of the Spark path never
-    * runs — ZERO jobs for the checkpoint (the `collect()` of a
-    * LocalTableScan is executeCollect, no job). Semantics are identical
+    * runs — ZERO jobs for the checkpoint ([[literalRows]] reads the rows
+    * off the plan). Semantics are identical
     * by construction: survivor = the first non-delete image of each key
     * in input order (exactly what `row_number` over (__del, __mid)
     * picks on a LocalRelation's order-preserving ids), NULL key columns
@@ -1024,31 +1272,13 @@ final class GraftTable(
     * the Spark path. */
   private def localDelta(tagged: DataFrame, keyCols: Seq[String])
       : Option[(DataFrame, Long, Long, Set[String])] = {
-    import org.apache.spark.sql.catalyst.plans.logical.LocalRelation
-    // Cheap pre-check on the ANALYZED plan first: reading optimizedPlan
-    // runs a full optimizer pass that the Spark path then throws away
-    // (its downstream actions build fresh QueryExecutions), and the
-    // change-feed deltas behind applyChanges are manifest-diff join
-    // trees expensive enough to optimize that paying it per mutation
-    // measurably slowed the CDC gates. Only a plan whose every leaf is
-    // already a LocalRelation can fold to one.
-    val leavesLocal = tagged.queryExecution.analyzed.collectLeaves()
-      .forall(_.isInstanceOf[LocalRelation])
-    if (!leavesLocal) return None
-    val isLocal = tagged.queryExecution.optimizedPlan match {
-      case l: LocalRelation => l.data.lengthCompare(10000) <= 0
-      case _ => false
-    }
-    if (!isLocal) return None
-    if ((partitionCols ++ keyCols).exists(c => !driverSafeTypes.contains(schema(c).dataType)))
-      return None
+    val rows = literalRows(tagged, keyCols).getOrElse(return None)
     val dataCols = schema.fieldNames.toSeq
     val inSchema = tagged.schema // dataCols :+ __del, by both callers
     def idxOf(c: String): Int = inSchema.fieldIndex(c)
-    val rows = tagged.collect() // LocalTableScan: executeCollect, no job
     val delIdx = idxOf("__del")
     val keepIdx = inSchema.length // appended last
-    val now = new java.sql.Timestamp(System.currentTimeMillis())
+    val now = StatementTimestamp.draw()._2
     val tsIdx = timestampCols.filter(schema.fieldNames.contains)
       .map(idxOf).toSet
     val keyIdx = keyCols.map(idxOf)
@@ -1086,15 +1316,7 @@ final class GraftTable(
       else keepers.map(r => partitionCols.map(c =>
         s"$c=${Catalog.encodeValue(r.get(idxOf(c)))}").mkString(",")).toSet
     // constraint census over survivors — same rare-path classification
-    val requiredIdx = schema.fields.filterNot(_.nullable).map(f => idxOf(f.name)).toSeq
-    def chars(s: String): Int = s.codePointCount(0, s.length)
-    val anyViol = keepers.exists { r =>
-      requiredIdx.exists(r.isNullAt) ||
-        maxLengths.exists { case (c, mx) =>
-          val i = idxOf(c)
-          !r.isNullAt(i) && chars(r.getString(i)) > mx }
-    }
-    if (anyViol)
+    if (keepers.exists(breaksConstraint(_, idxOf)))
       validateUpdated(
         chk.filter(col("__keep")).select(dataCols.map(col): _*),
         schema.fieldNames.toSet)
@@ -1122,7 +1344,7 @@ final class GraftTable(
     val touched =
       if (partitionCols.isEmpty && inParts.nonEmpty) inParts
       else inParts ++ pkStats(current.join(keysOnly, keyCols, "left_semi"))._1
-    (Staged(kept.unionByName(incoming), touched, n), incoming)
+    (Staged(kept.unionByName(incoming), touched, n, inParts), incoming)
   }
 
   /** MERGE-apply of one [[ChangeFeed]] batch onto this table — the Delta
@@ -1164,7 +1386,7 @@ final class GraftTable(
     val touched =
       if (partitionCols.isEmpty && inParts.nonEmpty) inParts
       else inParts ++ pkStats(current.join(affected, pk, "left_semi"))._1
-    (Staged(kept.unionByName(ups), touched, nUp + nDel), ups)
+    (Staged(kept.unionByName(ups), touched, nUp + nDel, inParts), ups)
   }
 }
 
@@ -1173,13 +1395,16 @@ final class GraftTable(
   * engine's `\$transaction` (`effect.ts:369-396`). If any statement throws,
   * nothing was published.
   *
-  * Staging is partition-scoped: only the slices in `Staged.touched` are
-  * written (one pruned execution of the next-state plan per touched slice —
-  * when the SET does not modify a partition column, the slice filter pushes
-  * down through the plan to the scans, so each write reads only the data it
-  * rewrites). Untouched slices keep their version directory untouched on
-  * disk. A touched slice that ends up empty stays in the manifest as an
-  * empty directory (harmless for readers; vacuumable later).
+  * Staging is partition-scoped: only the slices a statement touches are
+  * written. Inserts, upserts and change batches know their slices before
+  * the write (a single slice is one pruned write straight into its
+  * version dir; several are one dynamic-partition write). Updates,
+  * deletes and literal inserts learn them from the write itself: one job
+  * writes the touched slices and observes the statement's census, whose
+  * checks run before any slice is published. Untouched slices keep their
+  * version directory untouched on disk. A touched slice that ends up
+  * empty stays in the manifest as an empty directory (harmless for
+  * readers; vacuumable later).
   */
 final class Txn(catalog: Catalog, opts: TxnOptions = TxnOptions(timeoutMs = 0)) {
   private var base: Map[String, Option[Map[String, String]]] = Map.empty
@@ -1215,11 +1440,15 @@ final class Txn(catalog: Catalog, opts: TxnOptions = TxnOptions(timeoutMs = 0)) 
     * all deleted still HAS (empty) slice dirs and takes the normal path. */
   private def isFresh(t: GraftTable): Boolean = workingDirs(t).isEmpty
 
-  private def stage(t: GraftTable, s: Staged): Unit = {
-    var dirs = workingDirs(t)
-    var parts = staged.getOrElse(t.name, Map.empty[String, Option[String]])
-    val raw = s.next.withColumn("__pk", t.partKeyCol)
+  /** Fault-injection hook: runs with the stage root after a statement's
+    * slice write and its census checks, before any slice moves into its
+    * version dir. */
+  private[store] var afterStagedWrite: java.nio.file.Path => Unit = _ => ()
+
+  private def stage(t: GraftTable, s: Staged): Unit =
     if (s.touched.size <= 1) {
+      var dirs = workingDirs(t)
+      var parts = staged.getOrElse(t.name, Map.empty[String, Option[String]])
       // Single-slice staging keeps the lazy plan: the typed sliceFilter
       // pre-filter prunes the source scans to (roughly) this slice's
       // files; the __pk residual is the exact slice membership test. The
@@ -1228,7 +1457,8 @@ final class Txn(catalog: Catalog, opts: TxnOptions = TxnOptions(timeoutMs = 0)) 
       s.touched.foreach { pk =>
         val (v, dir) = catalog.newVersionDir(t.name, pk)
         val pre = t.sliceFilter(pk).getOrElse(lit(true))
-        raw.filter(pre).filter(col("__pk") === lit(pk)).drop("__pk")
+        s.next.withColumn("__pk", t.partKeyCol)
+          .filter(pre).filter(col("__pk") === lit(pk)).drop("__pk")
           .select(t.schema.fieldNames.map(col).toIndexedSeq: _*)
           .write.mode("overwrite").options(t.bloomWriteOptions).parquet(dir)
         // pin footer-derived column stats beside the slice (O(files) driver
@@ -1237,61 +1467,86 @@ final class Txn(catalog: Catalog, opts: TxnOptions = TxnOptions(timeoutMs = 0)) 
         dirs += (pk -> dir)
         parts += (pk -> Some(v))
       }
+      working += (t.name -> dirs)
+      staged += (t.name -> parts)
     } else {
-      // MULTI-slice staging: ONE dynamic-partition write executes the
-      // staged plan exactly once and streams every row straight to its
-      // slice's directory. The previous shape (persist + one filtered
-      // write job per slice) paid a full second copy of the
-      // post-mutation data in block-manager memory/disk plus K filtered
-      // passes over it — an 8-bucket postings refresh ran 9 jobs where
-      // this runs 1, and at 100 TB the persist copy is pure overhead.
-      // The hex rendering of __pk is a bijection into filesystem-safe
-      // names that sidesteps Spark's partition-path escaping (and the
-      // empty-string → __HIVE_DEFAULT_PARTITION__ ambiguity); the data
-      // files themselves carry the declared columns in declared order,
-      // identical to the single-slice path's output.
-      val touched = s.touched.toSeq.sorted
-      val stageRoot = java.nio.file.Paths.get(catalog.root)
-        .resolve(s".stage-${java.util.UUID.randomUUID().toString.replace("-", "")}")
-      // Cleanup is exception-safe: whatever the move loop managed, the
-      // stage shell is always swept (finally), so a mid-loop failure
-      // (dest dir exists, partial FS fault) cannot leak a .stage-* dir
-      // under catalog.root. Unpublished version dirs a failed txn leaves
-      // behind are invisible to readers (never entered the manifest) and
-      // vacuumable; crashed-process leftovers are swept by the Catalog's
-      // open-time stale-stage sweep.
-      try {
-        raw.filter(col("__pk").isin(touched: _*))
-          .withColumn("__pkdir", concat(lit("p"), hex(col("__pk"))))
-          .select((t.schema.fieldNames.map(col) :+ col("__pkdir")).toIndexedSeq: _*)
-          .write.mode("overwrite").options(t.bloomWriteOptions)
-          .partitionBy("__pkdir").parquet(stageRoot.toString)
-        touched.foreach { pk =>
-          val (v, dir) = catalog.newVersionDir(t.name, pk)
-          val hexName = "p" + pk.getBytes(java.nio.charset.StandardCharsets.UTF_8)
-            .map("%02X".format(_)).mkString
-          val src = stageRoot.resolve(s"__pkdir=$hexName")
-          val dest = java.nio.file.Paths.get(dir)
-          java.nio.file.Files.createDirectories(dest.getParent)
-          if (java.nio.file.Files.isDirectory(src))
-            java.nio.file.Files.move(src, dest) // same filesystem: under catalog.root
-          else if (java.nio.file.Files.exists(stageRoot.resolve("_SUCCESS")))
-            // a touched slice every row left (e.g. all its keys deleted)
-            // stays in the manifest as an empty directory — same contract
-            // as the single-slice path's empty write
-            java.nio.file.Files.createDirectories(dest)
-          else
-            // the committed write is gone (swept or deleted under us):
-            // publishing its slices as empty would silently drop data
-            throw new IllegalStateException(
-              s"staged write for ${t.name} lost its output at $stageRoot " +
-                "(no _SUCCESS marker); refusing to publish empty slices")
-          SliceStats.writeSidecar(t.spark, dir, t.bloomCols.toSet)
-          dirs += (pk -> dir)
-          parts += (pk -> Some(v))
-        }
-      } finally Catalog.rmTree(stageRoot)
+      writeSlices(t, s.next.withColumn("__pk", t.partKeyCol)
+        .filter(col("__pk").isin(s.touched.toSeq.sorted: _*)),
+        () => Census(s.touched, s.landing, IndexedSeq(s.n)))
     }
+
+  /** Stage a statement whose census rides its slice write: the census
+    * checks, then `checks` (the statement's FK/RESTRICT probes), run after
+    * the write and before anything moves. */
+  private def stage(t: GraftTable, s: ObservedStaged, checks: => Unit = ()): Census = {
+    lazy val census = { val c = s.census(); checks; c }
+    writeSlices(t, s.rows, () => census)
+    census
+  }
+
+  /** ONE dynamic-partition write of `rows` (declared columns plus `__pk`)
+    * into a stage root, then each touched slice of `census()` moves into a
+    * new version dir. `census` is asked after the write, so a census the
+    * write observed (and its checks) decides what is published. The
+    * write executes its plan exactly once and streams every row straight
+    * to its slice's directory — where persist + one filtered write job
+    * per slice paid a second copy of the data and K passes over it. The
+    * hex rendering of __pk is a bijection into filesystem-safe names that
+    * sidesteps Spark's partition-path escaping (and the empty-string →
+    * __HIVE_DEFAULT_PARTITION__ ambiguity); the data files themselves
+    * carry the declared columns in declared order.
+    *
+    * A touched slice the census says the statement's rows land in, but
+    * that has no staged dir, throws, as does a stage root without its
+    * `_SUCCESS` marker, instead of publishing an empty slice. */
+  private def writeSlices(t: GraftTable, rows: DataFrame, census: () => Census): Unit = {
+    var dirs = workingDirs(t)
+    var parts = staged.getOrElse(t.name, Map.empty[String, Option[String]])
+    val stageRoot = java.nio.file.Paths.get(catalog.root)
+      .resolve(s".stage-${java.util.UUID.randomUUID().toString.replace("-", "")}")
+    // Cleanup is exception-safe: whatever the move loop managed, the
+    // stage shell is always swept (finally), so a mid-loop failure
+    // (dest dir exists, partial FS fault) cannot leak a .stage-* dir
+    // under catalog.root. Unpublished version dirs a failed txn leaves
+    // behind are invisible to readers (never entered the manifest) and
+    // vacuumable; crashed-process leftovers are swept by the Catalog's
+    // open-time stale-stage sweep.
+    try {
+      rows.withColumn("__pkdir", concat(lit("p"), hex(col("__pk"))))
+        .select((t.schema.fieldNames.map(col) :+ col("__pkdir")).toIndexedSeq: _*)
+        .write.mode("overwrite").options(t.bloomWriteOptions)
+        .partitionBy("__pkdir").parquet(stageRoot.toString)
+      val c = census()
+      afterStagedWrite(stageRoot)
+      c.touched.toSeq.sorted.foreach { pk =>
+        val (v, dir) = catalog.newVersionDir(t.name, pk)
+        val hexName = "p" + pk.getBytes(java.nio.charset.StandardCharsets.UTF_8)
+          .map("%02X".format(_)).mkString
+        val src = stageRoot.resolve(s"__pkdir=$hexName")
+        val dest = java.nio.file.Paths.get(dir)
+        java.nio.file.Files.createDirectories(dest.getParent)
+        if (java.nio.file.Files.isDirectory(src))
+          java.nio.file.Files.move(src, dest) // same filesystem: under catalog.root
+        else if (c.landing(pk))
+          throw new IllegalStateException(
+            s"staged write for ${t.name} lost slice $pk at $stageRoot " +
+              "(the statement's rows land there); refusing to publish it empty")
+        else if (java.nio.file.Files.exists(stageRoot.resolve("_SUCCESS")))
+          // a touched slice every row left (e.g. all its keys deleted)
+          // stays in the manifest as an empty directory — same contract
+          // as the single-slice path's empty write
+          java.nio.file.Files.createDirectories(dest)
+        else
+          // the committed write is gone (swept or deleted under us):
+          // publishing its slices as empty would silently drop data
+          throw new IllegalStateException(
+            s"staged write for ${t.name} lost its output at $stageRoot " +
+              "(no _SUCCESS marker); refusing to publish empty slices")
+        SliceStats.writeSidecar(t.spark, dir, t.bloomCols.toSet)
+        dirs += (pk -> dir)
+        parts += (pk -> Some(v))
+      }
+    } finally Catalog.rmTree(stageRoot)
     working += (t.name -> dirs)
     staged += (t.name -> parts)
   }
@@ -1306,9 +1561,11 @@ final class Txn(catalog: Catalog, opts: TxnOptions = TxnOptions(timeoutMs = 0)) 
     * Validation runs over the rows ACTUALLY written — under
     * `skipDuplicates` a dropped duplicate row is never FK-checked, like
     * `ON CONFLICT DO NOTHING`. The probe is an anti-join limited to one
-    * row — it never materializes the orphan set. */
-  private def checkParentRefs(t: GraftTable, written: DataFrame): Unit =
-    t.parentRefs.foreach { case (parent, childCol, parentCol) =>
+    * row — it never materializes the orphan set. Inserts fold the
+    * non-self references into their checkpoint instead ([[insert]]). */
+  private def checkParentRefs(t: GraftTable, written: DataFrame,
+                              refs: Seq[(GraftTable, String, String)]): Unit =
+    refs.foreach { case (parent, childCol, parentCol) =>
       val parentKeys = {
         val base = stateOf(parent).select(col(parentCol).as(childCol))
         if (parent eq t) base.unionByName(written.select(col(parentCol).as(childCol)))
@@ -1318,28 +1575,49 @@ final class Txn(catalog: Catalog, opts: TxnOptions = TxnOptions(timeoutMs = 0)) 
         .filter(col(childCol).isNotNull)
         .join(parentKeys, Seq(childCol), "left_anti")
       if (!orphans.isEmpty)
-        throw new ForeignKeyViolationException(
-          s"${t.name}: write rejected — ${t.name}.$childCol references no ${parent.name}.$parentCol row")
+        throw new ForeignKeyViolationException(orphanMessage(t, childCol, parent, parentCol))
     }
 
-  def create(t: GraftTable, rows: DataFrame): Long = {
-    val (s, inserted) = t.stagedCreateReturning(stateOf(t), rows,
-      skipDuplicates = false, currentEmpty = isFresh(t))
-    checkParentRefs(t, inserted)
-    stage(t, s); s.n
+  private def checkParentRefs(t: GraftTable, written: DataFrame): Unit =
+    checkParentRefs(t, written, t.parentRefs)
+
+  private def orphanMessage(t: GraftTable, childCol: String, parent: GraftTable,
+                            parentCol: String): String =
+    s"${t.name}: write rejected — ${t.name}.$childCol references no ${parent.name}.$parentCol row"
+
+  /** The checkpointed insert with its FK checks: a reference to another
+    * table rides the checkpoint as an orphan count over survivors; a
+    * self-reference is probed after it, since the batch is its own
+    * parent. Returns the staged insert and the inserted slice. */
+  private def insert(t: GraftTable, rows: DataFrame, skipDuplicates: Boolean): (Staged, DataFrame) = {
+    val (self, others) = t.parentRefs.partition(_._1 eq t)
+    val fks = others.map { case (parent, childCol, parentCol) =>
+      val keys = stateOf(parent).select(col(parentCol).as(childCol))
+      // a unique parent key is distinct already (NULLs join nothing)
+      ParentKeys(childCol,
+        if (parent.uniqueKeys.contains(Seq(parentCol))) keys else keys.distinct(),
+        orphanMessage(t, childCol, parent, parentCol))
+    }
+    val (s, inserted) = t.stagedCreateReturning(stateOf(t), rows, skipDuplicates,
+      currentEmpty = isFresh(t), fks = fks)
+    checkParentRefs(t, inserted, self)
+    (s, inserted)
   }
 
-  def createMany(t: GraftTable, rows: DataFrame, skipDuplicates: Boolean): Long = {
-    val (s, inserted) = t.stagedCreateReturning(stateOf(t), rows, skipDuplicates,
-      currentEmpty = isFresh(t))
-    checkParentRefs(t, inserted)
-    stage(t, s); s.n
-  }
+  def create(t: GraftTable, rows: DataFrame): Long = createMany(t, rows, skipDuplicates = false)
+
+  /** A literal batch ([[GraftTable.stagedCreateLiteral]]) is staged in one
+    * Spark job; any other batch is checkpointed, then written. */
+  def createMany(t: GraftTable, rows: DataFrame, skipDuplicates: Boolean): Long =
+    t.stagedCreateLiteral(workingDirs(t), rows, skipDuplicates) match {
+      case Some(s) => stage(t, s).n(0)
+      case None =>
+        val (s, _) = insert(t, rows, skipDuplicates)
+        stage(t, s); s.n
+    }
 
   def createManyAndReturn(t: GraftTable, rows: DataFrame, skipDuplicates: Boolean): DataFrame = {
-    val (s, inserted) = t.stagedCreateReturning(stateOf(t), rows, skipDuplicates,
-      currentEmpty = isFresh(t))
-    checkParentRefs(t, inserted)
+    val (s, inserted) = insert(t, rows, skipDuplicates)
     stage(t, s); inserted
   }
 
@@ -1440,14 +1718,15 @@ final class Txn(catalog: Catalog, opts: TxnOptions = TxnOptions(timeoutMs = 0)) 
         .drop("__old", "__new", "__hit")
       // a rewritten FK that is also a partition column moves rows across
       // slices — the destination slices are touched too
-      val touched: Set[String] =
+      val pre = preStats.map(_.getString(0)).toSet
+      // the slices the rewritten rows land in
+      val landing: Set[String] =
         if (child.partitionCols.contains(childCol)) {
           val post = cur.join(keyMap, cur(childCol) === keyMap("__old"), "inner")
             .withColumn(childCol, col("__new")).drop("__old", "__new")
-          preStats.map(_.getString(0)).toSet ++
-            post.groupBy(child.partKeyCol.as("__pk")).count().collect()
-              .map(_.getString(0))
-        } else preStats.map(_.getString(0)).toSet
+          post.groupBy(child.partKeyCol.as("__pk")).count().collect()
+            .map(_.getString(0)).toSet
+        } else pre
       // A CONSISTENT many-old→one-new remap passes the ambiguity probe
       // but can still collide child UNIQUE keys (Postgres raises
       // unique_violation at the child constraint) — re-validate every
@@ -1466,7 +1745,7 @@ final class Txn(catalog: Catalog, opts: TxnOptions = TxnOptions(timeoutMs = 0)) 
             s"${child.name}: ON UPDATE CASCADE would collide unique key " +
               s"(${uk.mkString(",")})")
       }
-      stage(child, Staged(next, touched, preStats.map(_.getLong(1)).sum))
+      stage(child, Staged(next, pre ++ landing, preStats.map(_.getLong(1)).sum, landing))
     }
   }
 
@@ -1475,22 +1754,19 @@ final class Txn(catalog: Catalog, opts: TxnOptions = TxnOptions(timeoutMs = 0)) 
   // immutable), so a self-referential ON UPDATE CASCADE rewrites child
   // FK columns on top of the renamed state instead of clobbering it.
 
-  def update(t: GraftTable, where: Where, set: Map[String, Column]): Long = {
-    val cur = stateOf(t)
-    val s = t.stagedUpdate(cur, where, set, single = true)
-    checkUpdatedRefs(t, set, t.updatedView(cur, where, set))
-    stage(t, s)
-    cascadeParentKeyRewrite(t, set, t.matchedView(cur, where))
-    s.n
-  }
+  def update(t: GraftTable, where: Where, set: Map[String, Column]): Long =
+    updateWhere(t, where, set, single = true)
 
-  def updateMany(t: GraftTable, where: Where, set: Map[String, Column]): Long = {
+  def updateMany(t: GraftTable, where: Where, set: Map[String, Column]): Long =
+    updateWhere(t, where, set, single = false)
+
+  private def updateWhere(t: GraftTable, where: Where, set: Map[String, Column],
+                          single: Boolean): Long = {
     val cur = stateOf(t)
-    val s = t.stagedUpdate(cur, where, set, single = false)
-    checkUpdatedRefs(t, set, t.updatedView(cur, where, set))
-    stage(t, s)
+    val c = stage(t, t.stagedUpdate(workingDirs(t), where, set, single),
+      checkUpdatedRefs(t, set, t.updatedView(cur, where, set)))
     cascadeParentKeyRewrite(t, set, t.matchedView(cur, where))
-    s.n
+    c.n(0)
   }
 
   def updateWhereIn(t: GraftTable, keyCol: String, keys: DataFrame,
@@ -1507,7 +1783,6 @@ final class Txn(catalog: Catalog, opts: TxnOptions = TxnOptions(timeoutMs = 0)) 
                     extraCond: Column, set: Map[String, Column],
                     otherwise: Map[String, Column]): (Long, Long) = {
     val cur = stateOf(t)
-    val (s, nOtherwise) = t.stagedUpdateWhereIn(cur, keyCol, keys, extraCond, set, otherwise)
     // per-branch pre-image views: key ∈ keys ∧ extraCond, and the rest of
     // extraCond (the anti-join keeps NULL keys, which match nothing)
     val marker = keys.select(col(keyCol)).distinct()
@@ -1515,12 +1790,13 @@ final class Txn(catalog: Catalog, opts: TxnOptions = TxnOptions(timeoutMs = 0)) 
     def matched = cur.join(marker, Seq(keyCol), "left_semi").filter(inCond)
     def unmatched = cur.join(marker, Seq(keyCol), "left_anti").filter(inCond)
     // both helpers are no-ops (no job) for a SET that names no FK column
-    checkUpdatedRefs(t, set, t.applySet(matched, set))
-    checkUpdatedRefs(t, otherwise, t.applySet(unmatched, otherwise))
-    stage(t, s)
+    val c = stage(t, t.stagedUpdateWhereIn(workingDirs(t), keyCol, keys, extraCond, set, otherwise), {
+      checkUpdatedRefs(t, set, t.applySet(matched, set))
+      checkUpdatedRefs(t, otherwise, t.applySet(unmatched, otherwise))
+    })
     cascadeParentKeyRewrite(t, set, matched)
     cascadeParentKeyRewrite(t, otherwise, unmatched)
-    (s.n, nOtherwise)
+    (c.n(0), c.n.lift(1).getOrElse(0L))
   }
 
   /** FK `ON DELETE RESTRICT` (P2003): a delete whose doomed rows are still
@@ -1578,28 +1854,22 @@ final class Txn(catalog: Catalog, opts: TxnOptions = TxnOptions(timeoutMs = 0)) 
     val marker = keys.select(keyCols.map(col): _*).distinct()
     val doomed = cur.join(marker, keyCols, "left_semi")
     checkRestricts(t, doomed)
-    val stats = doomed.groupBy(t.partKeyCol.as("__pk")).count().collect()
-    val s = Staged(cur.join(marker, keyCols, "left_anti"),
-      stats.map(_.getString(0)).toSet, stats.map(_.getLong(1)).sum)
-    stage(t, s)
+    val c = stage(t, t.observedDelete(
+      cur.join(marker.withColumn("__hit", lit(true)), keyCols, "left"), workingDirs(t).size,
+      coalesce(col("__hit"), lit(false)), Seq("__hit"), single = false))
     cascadeDeletes(t, doomed)
-    s.n
+    c.n(0)
   }
 
-  def delete(t: GraftTable, where: Where): Long = {
-    val (s, doomed) = t.stagedDelete(stateOf(t), where, single = true)
-    checkRestricts(t, doomed)
-    stage(t, s)
-    cascadeDeletes(t, doomed)
-    s.n
-  }
+  def delete(t: GraftTable, where: Where): Long = deleteWhere(t, where, single = true)
 
-  def deleteMany(t: GraftTable, where: Where): Long = {
-    val (s, doomed) = t.stagedDelete(stateOf(t), where, single = false)
-    checkRestricts(t, doomed)
-    stage(t, s)
+  def deleteMany(t: GraftTable, where: Where): Long = deleteWhere(t, where, single = false)
+
+  private def deleteWhere(t: GraftTable, where: Where, single: Boolean): Long = {
+    val (s, doomed) = t.stagedDelete(workingDirs(t), where, single)
+    val c = stage(t, s, checkRestricts(t, doomed))
     cascadeDeletes(t, doomed)
-    s.n
+    c.n(0)
   }
 
   def upsert(t: GraftTable, keyCols: Seq[String], rows: DataFrame): Long = {
@@ -1683,9 +1953,7 @@ final class Txn(catalog: Catalog, opts: TxnOptions = TxnOptions(timeoutMs = 0)) 
           .filter(fcol("__rn") === 1).drop("__rn")
       }
     }
-    val (s, inserted) = t.stagedCreateReturning(stateOf(t), resolved, skipDuplicates,
-      currentEmpty = isFresh(t))
-    checkParentRefs(t, inserted)
+    val (s, inserted) = insert(t, resolved, skipDuplicates)
     stage(t, s)
     if (nested.nonEmpty) {
       // re-attach payload columns: batch rows whose key actually landed
