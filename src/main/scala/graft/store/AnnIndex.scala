@@ -91,16 +91,16 @@ final class AnnIndex private (
     val snap = src.snapshotAt(c0)
     val (coarse, cb) = Pq.trainPair(snap, embCol, idCol, nCells, m, k, iters)
     val streams = src.catalog.manifest().get(Catalog.StreamTable)
-    val txn = new Txn(src.catalog)
     val all = graft.query.RawCol(lit(true))
-    txn.deleteMany(model, all)
-    txn.createMany(model, AnnIndex.modelDf(src, coarse, cb),
-      skipDuplicates = false)
-    txn.deleteMany(codes, all)
-    txn.createMany(codes, Pq.encodeIvf(snap, embCol, idCol, coarse, cb),
-      skipDuplicates = false)
-    txn.recordStreamBatch(src, s"cdf:$consumerId", c0, streams)
-    txn.commit()
+    Txn.run(src.catalog) { txn =>
+      txn.deleteMany(model, all)
+      txn.createMany(model, AnnIndex.modelDf(src, coarse, cb),
+        skipDuplicates = false)
+      txn.deleteMany(codes, all)
+      txn.createMany(codes, Pq.encodeIvf(snap, embCol, idCol, coarse, cb),
+        skipDuplicates = false)
+      txn.recordStreamBatch(src, s"cdf:$consumerId", c0, streams)
+    }
   }
 
   /** Catch the codes table up with the source's change feed — one
@@ -206,14 +206,14 @@ object AnnIndex {
     val model = modelTable(src, name)
     val codes = codesTable(src, name, idCol)
     val streams = src.catalog.manifest().get(Catalog.StreamTable)
-    val txn = new Txn(src.catalog)
-    txn.createMany(model, modelDf(src, coarse, cb), skipDuplicates = false)
-    txn.createMany(codes, Pq.encodeIvf(snap, embCol, idCol, coarse, cb),
-      skipDuplicates = false)
-    // cursor = the commit the build encoded, published WITH the
-    // artifacts: refresh picks up exactly the post-build changes
-    txn.recordStreamBatch(src, s"cdf:ann:$name", c0, streams)
-    txn.commit()
+    Txn.run(src.catalog) { txn =>
+      txn.createMany(model, modelDf(src, coarse, cb), skipDuplicates = false)
+      txn.createMany(codes, Pq.encodeIvf(snap, embCol, idCol, coarse, cb),
+        skipDuplicates = false)
+      // cursor = the commit the build encoded, published WITH the
+      // artifacts: refresh picks up exactly the post-build changes
+      txn.recordStreamBatch(src, s"cdf:ann:$name", c0, streams)
+    }
     new AnnIndex(src, name, embCol, idCol, model, codes)
   }
 

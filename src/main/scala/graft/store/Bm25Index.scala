@@ -433,17 +433,17 @@ object Bm25Index {
     val sc = snap.agg(count(lit(1)).as("n"),
       coalesce(sum(size(tokens(textCol)).cast("long")), lit(0L)).as("s"))
       .collect()(0)
-    val txn = new Txn(src.catalog)
-    txn.createMany(post,
-      bucketed(postingsOf(snap, textCol, idCol, withPositions), nBuckets),
-      skipDuplicates = false)
-    txn.createMany(meta, src.spark.createDataFrame(
-      java.util.Arrays.asList(Row(0, sc.getLong(0), sc.getLong(1), nBuckets,
-        if (withPositions) 1 else 0)),
-      metaSchema), skipDuplicates = false)
-    txn.recordStreamBatch(src, s"cdf:bm25:$name", c0,
-      src.catalog.manifest().get(Catalog.StreamTable))
-    txn.commit()
+    Txn.run(src.catalog) { txn =>
+      txn.createMany(post,
+        bucketed(postingsOf(snap, textCol, idCol, withPositions), nBuckets),
+        skipDuplicates = false)
+      txn.createMany(meta, src.spark.createDataFrame(
+        java.util.Arrays.asList(Row(0, sc.getLong(0), sc.getLong(1), nBuckets,
+          if (withPositions) 1 else 0)),
+        metaSchema), skipDuplicates = false)
+      txn.recordStreamBatch(src, s"cdf:bm25:$name", c0,
+        src.catalog.manifest().get(Catalog.StreamTable))
+    }
     new Bm25Index(src, name, textCol, idCol, post, meta, withPositions)
   }
 

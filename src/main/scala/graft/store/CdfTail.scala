@@ -60,10 +60,10 @@ object CdfTail {
     if (to <= from || ChangeFeed.changedSliceKeys(src, from, to).isEmpty) None
     else {
       val changes = ChangeFeed.changesBetween(src, from, to)
-      val txn = new Txn(src.catalog)
-      body(txn, changes, from, to)
-      txn.recordStreamBatch(src, s"cdf:$consumerId", to, streams)
-      txn.commit()
+      Txn.run(src.catalog) { txn =>
+        body(txn, changes, from, to)
+        txn.recordStreamBatch(src, s"cdf:$consumerId", to, streams)
+      }
       Some((from, to))
     }
   }

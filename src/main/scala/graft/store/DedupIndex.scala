@@ -127,16 +127,16 @@ object DedupIndex {
     require(nBuckets >= 1, s"nBuckets $nBuckets must be positive")
     val c0 = src.catalog.currentCommitId()
     val (sketch, meta) = tables(src, name, textCol, idCol, k, numHashes)
-    val txn = new Txn(src.catalog)
-    txn.createMany(sketch, bucketed(
-      Dedup.minhashIndex(src.snapshotAt(c0), textCol, idCol, k, numHashes),
-      nBuckets), skipDuplicates = false)
-    txn.createMany(meta, src.spark.createDataFrame(
-      java.util.Arrays.asList(Row(k, numHashes, nBuckets)), metaSchema),
-      skipDuplicates = false)
-    txn.recordStreamBatch(src, s"cdf:dedup:$name", c0,
-      src.catalog.manifest().get(Catalog.StreamTable))
-    txn.commit()
+    Txn.run(src.catalog) { txn =>
+      txn.createMany(sketch, bucketed(
+        Dedup.minhashIndex(src.snapshotAt(c0), textCol, idCol, k, numHashes),
+        nBuckets), skipDuplicates = false)
+      txn.createMany(meta, src.spark.createDataFrame(
+        java.util.Arrays.asList(Row(k, numHashes, nBuckets)), metaSchema),
+        skipDuplicates = false)
+      txn.recordStreamBatch(src, s"cdf:dedup:$name", c0,
+        src.catalog.manifest().get(Catalog.StreamTable))
+    }
     new DedupIndex(src, name, textCol, idCol, sketch, meta)
   }
 

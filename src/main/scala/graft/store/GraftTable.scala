@@ -5,26 +5,20 @@ import org.apache.spark.sql.{Column, DataFrame, Observation, Row, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
 
-/** The computed next state of one mutation: the full next table state as a
-  * lazy plan, the set of partition keys the mutation touches (ONLY these
-  * slices get rewritten), the matched/inserted row count, and the touched
-  * slices the mutation's own rows land in (a staged write must put rows
-  * there). */
-private[store] final case class Staged(next: DataFrame, touched: Set[String], n: Long,
-                                       landing: Set[String])
-
-/** What a statement's slice write observed: the slices the statement
-  * touches, those its rewritten or inserted rows land in, and its row
-  * count per branch. */
+/** What a statement's slice write touches: the slices it rewrites, those
+  * its rewritten or inserted rows land in, and its row count per branch. */
 private[store] final case class Census(touched: Set[String], landing: Set[String],
                                        n: IndexedSeq[Long])
 
-/** A mutation whose census rides its own slice write, so the statement is
-  * one Spark job: `rows` is the next state of exactly the slices the
-  * statement touches, `__pk` attached; `census` reads what the write
-  * observed, throws on a constraint breach (before anything is
-  * published), and returns the touched slices and counts. */
-private[store] final case class ObservedStaged(rows: DataFrame, census: () => Census)
+/** A mutation staged as one slice write ([[Txn.writeSlices]]): `rows` is
+  * the next state of exactly the slices the statement touches, `__pk`
+  * attached. When the census rides the write, `census` reads what the
+  * write observed and throws on a constraint breach before anything is
+  * published. A `precounted` statement (a checkpointed insert, MERGE or
+  * returning update) knew its census before the write, so one that
+  * touches no slice writes nothing. */
+private[store] final case class ObservedStaged(rows: DataFrame, census: () => Census,
+                                               precounted: Boolean = false)
 
 /** A declared FK of an inserted table, checked inside the insert's
   * checkpoint: `keys` holds the parent's distinct key values under the
@@ -428,6 +422,11 @@ final class GraftTable(
     dirs.collect { case (pk, dir) if tokens.subsetOf(pk.split(",").toSet) => dir }.toSeq
   }
 
+  /** The slices of `dirs` (partKey → dir) among `pks`, read: a statement
+    * that knows its touched slices reads only their directories. */
+  private[store] def readSlices(dirs: Map[String, String], pks: Set[String]): DataFrame =
+    readDirs(dirs.collect { case (pk, dir) if pks(pk) => dir }.toSeq)
+
   /** The dirs of `dirs` a statement that rewrites the rows matching `pred`
     * with one of `sets` must read: the slices whose sidecar stats let
     * `pred` match, plus every slice a SET can move rows into — all slices
@@ -555,47 +554,6 @@ final class GraftTable(
     (paths, keptFiles, totalFiles)
   }
 
-  /** Scan-prunable predicate equivalent to `partKey == pk` over the RAW
-    * partition columns: typed `col = literal` / `col IS NULL` conjuncts
-    * push into parquet scans (file/row-group stat pruning), which the
-    * derived string `__pk` never can. Only emitted when every partition
-    * column's type roundtrips its string encoding exactly (string,
-    * boolean, integrals, date) — else None, and staging falls back to the
-    * authoritative-but-unpruned `__pk` filter alone. The `__pk` residual is
-    * ALWAYS also applied, so this is purely a pruning aid, never a
-    * correctness dependency. */
-  private[store] def sliceFilter(pk: String): Option[Column] = {
-    def safeType(dt: DataType): Boolean = dt match {
-      case StringType | BooleanType | ByteType | ShortType |
-           IntegerType | LongType | DateType => true
-      case _ => false
-    }
-    if (pk == Catalog.AllKey) Some(lit(true))
-    else {
-      val preds = pk.split(",", -1).toSeq.map { tok =>
-        val i = tok.indexOf('=')
-        val c = tok.substring(0, i)
-        val venc = tok.substring(i + 1)
-        schema.fields.find(_.name == c) match {
-          case Some(f) if safeType(f.dataType) =>
-            if (venc == Catalog.NullToken)
-              // a STRING value literally equal to the null token encodes to
-              // the same slice as NULL — the pre-filter must admit both or
-              // those rows would be dropped from the rewrite
-              Some(if (f.dataType == StringType)
-                col(c).isNull || col(c) === lit(Catalog.NullToken)
-              else col(c).isNull)
-            else Some(col(c) ===
-              lit(java.net.URLDecoder.decode(venc, "UTF-8")).cast(f.dataType))
-          case _ => None
-        }
-      }
-      if (preds.forall(_.isDefined))
-        Some(preds.flatten.reduceOption(_ && _).getOrElse(lit(true)))
-      else None
-    }
-  }
-
   /** Partition-key expression: `col1=<urlenc(value)>,col2=...`, the literal
     * [[Catalog.AllKey]] for unpartitioned tables. Scala-side counterpart is
     * [[Catalog.encodeValue]] — both must produce identical strings. */
@@ -620,20 +578,12 @@ final class GraftTable(
     autoCommit(_.createMany(this, rows, skipDuplicates))
   /** createManyAndReturn (`effect.ts:487-493`): bulk insert returning the
     * actually-inserted rows (duplicates excluded under skipDuplicates). */
-  def createManyAndReturn(rows: DataFrame, skipDuplicates: Boolean = false): DataFrame = {
-    val txn = new Txn(catalog)
-    val out = txn.createManyAndReturn(this, rows, skipDuplicates)
-    txn.commit()
-    out
-  }
+  def createManyAndReturn(rows: DataFrame, skipDuplicates: Boolean = false): DataFrame =
+    Txn.run(catalog)(_.createManyAndReturn(this, rows, skipDuplicates))
   /** updateManyAndReturn (`effect.ts:527-533`): bulk update returning the
     * post-update state of every matched row. */
-  def updateManyAndReturn(where: Where, set: Map[String, Column]): DataFrame = {
-    val txn = new Txn(catalog)
-    val out = txn.updateManyAndReturn(this, where, set)
-    txn.commit()
-    out
-  }
+  def updateManyAndReturn(where: Where, set: Map[String, Column]): DataFrame =
+    Txn.run(catalog)(_.updateManyAndReturn(this, where, set))
   def update(where: Where, set: Map[String, Column]): Long =
     autoCommit(_.update(this, where, set))
   def updateMany(where: Where, set: Map[String, Column]): Long =
@@ -651,11 +601,14 @@ final class GraftTable(
 
   // ---------- staged (transactional) computation ----------
 
-  /** Distinct partition keys of a slice plus its row count, in one action. */
-  private def pkStats(df: DataFrame): (Set[String], Long) = {
-    val rows = df.groupBy(partKeyCol.as("__pk")).count().collect()
-    (rows.map(_.getString(0)).toSet, rows.map(_.getLong(1)).sum)
-  }
+  /** The slices `df`'s rows live in, in one action. */
+  private def sliceKeys(df: DataFrame): Set[String] =
+    df.groupBy(partKeyCol.as("__pk")).count().collect().map(_.getString(0)).toSet
+
+  /** `rows`, the next state of `census`'s touched slices, staged with the
+    * census the statement computed before its write. */
+  private[store] def precounted(rows: DataFrame, census: Census): ObservedStaged =
+    ObservedStaged(rows.withColumn("__pk", partKeyCol), () => census, precounted = true)
 
   /** Apply a SET clause to rows where `cond` holds (untouched rows pass
     * through); `updatedAt` is touched on matched rows. The caller must have
@@ -825,13 +778,12 @@ final class GraftTable(
     * `dropDuplicates`' was) but frozen: every consumer — the census, the
     * slice writes, the returned slice — sees the same winners.
     *
-    * `currentEmpty` = the caller (the transaction, which owns the
-    * slice-dir map) KNOWS `current` has no committed slices — pre-first
-    * insert — so the snapshot probes are skipped entirely. */
-  private[store] def stagedCreateReturning(current: DataFrame, rows: DataFrame,
+    * `dirs` is the transaction's slice-dir map: the snapshot probes read
+    * every slice (none before the first insert, so they are skipped),
+    * the staged write only the slices the survivors land in. */
+  private[store] def stagedCreateReturning(dirs: Map[String, String], rows: DataFrame,
                                            skipDuplicates: Boolean,
-                                           currentEmpty: Boolean = false,
-                                           fks: Seq[ParentKeys] = Nil): (Staged, DataFrame) = {
+                                           fks: Seq[ParentKeys] = Nil): (ObservedStaged, DataFrame) = {
     // a nondeterministic expression can't sit inside a window ORDER BY —
     // project the tie-break id first (its value is arbitrary; the
     // checkpoint below freezes whatever was drawn)
@@ -855,7 +807,8 @@ final class GraftTable(
       keep = col(s"__k$i")
       tmpCols :+= s"__k$i"
     }
-    if (!currentEmpty) uniqueKeys.zipWithIndex.foreach { case (uk, i) =>
+    val current = readDirs(dirs.values.toSeq)
+    if (dirs.nonEmpty) uniqueKeys.zipWithIndex.foreach { case (uk, i) =>
       // left-join probe instead of an anti-join so non-surviving rows stay
       // countable; keys are unique in the snapshot (engine invariant), so
       // the join multiplies nothing, and a NULL key matches nothing — SQL
@@ -906,7 +859,7 @@ final class GraftTable(
     val clean = marked.filter(col("__keep"))
       .select(schema.fieldNames.map(col).toIndexedSeq: _*)
     val pks = observedKeys(m, "pks")
-    (Staged(current.unionByName(clean), pks, n, pks), clean)
+    (precounted(readSlices(dirs, pks).unionByName(clean), Census(pks, pks, IndexedSeq(n))), clean)
   }
 
   private def requiredCols: Seq[String] = schema.fields.filterNot(_.nullable).map(_.name).toSeq
@@ -988,8 +941,7 @@ final class GraftTable(
       .observe(obs, count(when(hit, 1)).as("hits"),
         collect_set(when(!hit, partKeyCol)).as("pks"))
       .filter(!hit).select(inSchema.fieldNames.map(col).toIndexedSeq: _*)
-    val next = readDirs(dirs.collect { case (pk, d) if lands(pk) => d }.toSeq)
-      .unionByName(inserted)
+    val next = readSlices(dirs, lands).unionByName(inserted)
     Some(ObservedStaged(next.withColumn("__pk", partKeyCol), () => {
       val m = obs.get
       val hits = observedCount(m, "hits")
@@ -1061,21 +1013,22 @@ final class GraftTable(
       .map { case (c, mx) => length(col(c)) > mx } ++
       nonNullableSetCols(setCols).map(col(_).isNull)).reduceOption(_ || _)
 
-  /** stagedUpdate that also returns the post-update matched slice
+  /** An update that also returns the post-update matched slice
     * (updateManyAndReturn, `effect.ts:527-533`).
     *
     * The matched count and touched-slice stats ride the returned slice's
-    * checkpoint as observed metrics — ONE driver action where the naive
-    * path (stagedUpdate's pkStats + a separate checkpoint) paid three.
-    * Pre-image partition keys are carried through the SET as a projected
-    * column so a partition-moving update still touches both source and
-    * destination slices. */
-  private[store] def stagedUpdateReturning(current: DataFrame, where: Where,
-                                           set: Map[String, Column]): (Staged, DataFrame) = {
+    * checkpoint as observed metrics, so the census is known before the
+    * write, which then reads only the touched slices of `dirs`. Pre-image
+    * partition keys are carried through the SET as a projected column so
+    * a partition-moving update still touches both source and destination
+    * slices. */
+  private[store] def stagedUpdateReturning(dirs: Map[String, String], where: Where,
+                                           set: Map[String, Column]): (ObservedStaged, DataFrame) = {
     val now = StatementTimestamp.draw()._1
-    val cond0 = coalesce(Where.compile(where, current.apply), lit(false))
+    val current = readDirs(dirs.values.toSeq)
     val movesParts = partitionCols.exists(set.contains)
-    val matched = current.filter(cond0).withColumn("__prepk", partKeyCol)
+    val matched = current.filter(coalesce(Where.compile(where, current.apply), lit(false)))
+      .withColumn("__prepk", partKeyCol)
     val obs = new Observation()
     val obsCols = Seq(count(lit(1)).as("n"), collect_set(col("__prepk")).as("pre")) ++
       (if (movesParts) Seq(collect_set(partKeyCol).as("post")) else Nil)
@@ -1087,10 +1040,12 @@ final class GraftTable(
     val touched = observedKeys(m, "pre") ++ observedKeys(m, "post")
     // materialize the predicate BEFORE any column is rewritten (see
     // stagedUpdate) — the next-state plan itself stays lazy
-    val withCond = current.withColumn("__upd", cond0)
+    val slices = readSlices(dirs, touched)
+    val withCond = slices.withColumn("__upd",
+      coalesce(Where.compile(where, slices.apply), lit(false)))
     val next = withSet(withCond, col("__upd"), set, now).drop("__upd")
-    (Staged(next, touched, observedCount(m, "n"),
-      observedKeys(m, if (movesParts) "post" else "pre")), updated)
+    (precounted(next, Census(touched, observedKeys(m, if (movesParts) "post" else "pre"),
+      IndexedSeq(observedCount(m, "n")))), updated)
   }
 
   /** `update`/`updateMany` as one Spark job ([[observedUpdate]]) over the
@@ -1167,7 +1122,7 @@ final class GraftTable(
     *
     * Before this, the delta plan — typically a change-feed full-outer
     * join or a tokenize — re-executed under the validation probe, both
-    * pkStats actions, and the delete count: five actions each paying
+    * slice-census actions, and the delete count: five actions each paying
     * the join, where this pays it once. Returns the checkpointed frame
     * (data columns + `__del` + `__keep`), survivor count, tombstone
     * count, and the survivors' landing slices. */
@@ -1323,70 +1278,52 @@ final class GraftTable(
     Some((chk, nUp, nDel, pks))
   }
 
-  /** MERGE: rows whose key exists replace the existing row (update wins),
-    * the rest append — Prisma `upsert` (`effect.ts:535-541`). Touches the
-    * slices the incoming rows land in plus the slices their pre-image rows
-    * currently live in (a key may move partitions). Also returns the
-    * materialized surviving rows (the FK validation input — checked over
-    * what is ACTUALLY written, from the checkpoint, never a plan replay). */
-  private[store] def stagedUpsertReturning(current: DataFrame, keyCols: Seq[String],
-                                           rows: DataFrame): (Staged, DataFrame) = {
-    val (chk, n, _, inParts) = checkpointDelta(
-      align(rows).withColumn("__del", lit(false)), keyCols)
-    val incoming = chk.filter(col("__keep"))
-      .select(schema.fieldNames.map(col).toIndexedSeq: _*)
-    val keysOnly = incoming.select(keyCols.map(col): _*)
-    val kept = current.join(keysOnly, keyCols, "left_anti")
-    // replaced-slice census: on an UNPARTITIONED table there is only one
-    // slice, so whenever anything survives the census can only re-state
-    // `inParts` — skip the probe action (a partitioned table still needs
-    // it: a key's pre-image may live in a different slice than it lands)
+  /** MERGE of one delta ([[mergeDelta]]) on `keyCols`: a key's surviving
+    * image replaces its row (update wins) or appends — Prisma `upsert`
+    * (`effect.ts:535-541`) — and a delete tombstone removes it. Set-based
+    * end to end: the delta materializes in ONE checkpoint
+    * ([[checkpointDelta]]), so a change-feed join behind it executes
+    * once, and no key list reaches the driver. The rewritten keys are
+    * those of the survivors and tombstones (a displaced duplicate image's
+    * key always has a surviving twin). Touches the slices the survivors
+    * land in plus those this table holds a rewritten key in: a key may
+    * move partitions, and a change batch's delete images may carry
+    * another layout's partition values. Also returns the surviving rows,
+    * the FK validation input — checked over what is ACTUALLY written,
+    * from the checkpoint, never a plan replay. */
+  private[store] def stagedMergeReturning(dirs: Map[String, String], keyCols: Seq[String],
+                                          delta: DataFrame): (ObservedStaged, DataFrame) = {
+    val (chk, nUp, nDel, inParts) = checkpointDelta(delta, keyCols)
+    val ups = chk.filter(col("__keep")).select(schema.fieldNames.map(col).toIndexedSeq: _*)
+    val rewritten = chk.filter(col("__keep") || col("__del")).select(keyCols.map(col): _*)
+    // replaced-slice census: on an UNPARTITIONED table with any survivor
+    // it can only re-state `inParts` — skip the action (a delete-only
+    // batch still needs it: whether the lone slice is touched depends on
+    // a key matching)
     val touched =
       if (partitionCols.isEmpty && inParts.nonEmpty) inParts
-      else inParts ++ pkStats(current.join(keysOnly, keyCols, "left_semi"))._1
-    (Staged(kept.unionByName(incoming), touched, n, inParts), incoming)
+      else inParts ++ sliceKeys(readDirs(dirs.values.toSeq).join(rewritten, keyCols, "left_semi"))
+    val next = readSlices(dirs, touched).join(rewritten, keyCols, "left_anti").unionByName(ups)
+    (precounted(next, Census(touched, inParts, IndexedSeq(nUp + nDel))), ups)
   }
 
-  /** MERGE-apply of one [[ChangeFeed]] batch onto this table — the Delta
-    * `table_changes() → MERGE` replication idiom, set-based end to end:
-    * inserts and update postimages upsert by the primary key, deletes
-    * remove theirs, `update_preimage` rows are information-only (their
-    * postimage twin carries the new values for the same key — pk pairing
-    * guarantees the key itself never changed). One anti-join + union
-    * next-state plan; no key list ever reaches the driver, so a 100 TB
-    * mirror pays for the delta, not the table. The whole delta — upsert
-    * images AND delete tombstones — materializes in ONE checkpoint
-    * ([[checkpointDelta]]), so the change-feed join behind `changes`
-    * executes exactly once; the only other action is the replaced-slice
-    * census against the current state. Also returns the materialized
-    * surviving upserts (FK validation input). */
-  private[store] def stagedApplyChangesReturning(current: DataFrame,
-                                                 changes: DataFrame): (Staged, DataFrame) = {
-    val pk: Seq[String] = uniqueKeys.headOption.getOrElse(
+  /** `rows` as a MERGE delta: the declared columns plus `__del`, the
+    * delete-tombstone flag (`lit(false)` for an upsert). */
+  private[store] def mergeDelta(rows: DataFrame, del: Column): DataFrame =
+    rows.select(schema.fieldNames.map(col).toIndexedSeq :+ del.as("__del"): _*)
+
+  /** One [[ChangeFeed]] batch as a MERGE delta on the primary key — the
+    * Delta `table_changes() → MERGE` replication idiom: inserts and
+    * update postimages upsert, deletes are tombstones, `update_preimage`
+    * rows are information only (their postimage twin carries the new
+    * values for the same key — pk pairing guarantees the key itself
+    * never changed). Returns (key, delta). */
+  private[store] def changeDelta(changes: DataFrame): (Seq[String], DataFrame) = {
+    val pk = uniqueKeys.headOption.getOrElse(
       throw new IllegalArgumentException(
         s"$name: applyChanges needs a unique key to pair row versions"))
-    val dataCols = schema.fieldNames.toSeq
-    val (chk, nUp, nDel, inParts) = checkpointDelta(
-      changes.filter(col("_change_type")
-          .isin("insert", "update_postimage", "delete"))
-        .select((dataCols.map(col) :+
-          (col("_change_type") === "delete").as("__del")): _*), pk)
-    val ups = chk.filter(col("__keep"))
-      .select(dataCols.map(col).toIndexedSeq: _*)
-    // every delta row's key is affected: survivors and tombstones
-    // directly, a displaced duplicate through its surviving twin
-    val affected = chk.select(pk.map(col): _*).distinct()
-    val kept = current.join(affected, pk, "left_anti")
-    // touched: the slices upserts LAND in plus the slices this table
-    // currently holds any affected key in (the source's partition values
-    // in the delete images may not be this mirror's layout). On an
-    // UNPARTITIONED table with any survivor the census can only re-state
-    // `inParts` — skip the probe action (delete-only batches still need
-    // it: whether the lone slice is touched depends on a key matching)
-    val touched =
-      if (partitionCols.isEmpty && inParts.nonEmpty) inParts
-      else inParts ++ pkStats(current.join(affected, pk, "left_semi"))._1
-    (Staged(kept.unionByName(ups), touched, nUp + nDel, inParts), ups)
+    (pk, mergeDelta(changes.filter(col("_change_type").isin("insert", "update_postimage", "delete")),
+      col("_change_type") === "delete"))
   }
 }
 
@@ -1395,16 +1332,16 @@ final class GraftTable(
   * engine's `\$transaction` (`effect.ts:369-396`). If any statement throws,
   * nothing was published.
   *
-  * Staging is partition-scoped: only the slices a statement touches are
-  * written. Inserts, upserts and change batches know their slices before
-  * the write (a single slice is one pruned write straight into its
-  * version dir; several are one dynamic-partition write). Updates,
-  * deletes and literal inserts learn them from the write itself: one job
-  * writes the touched slices and observes the statement's census, whose
-  * checks run before any slice is published. Untouched slices keep their
-  * version directory untouched on disk. A touched slice that ends up
-  * empty stays in the manifest as an empty directory (harmless for
-  * readers; vacuumable later).
+  * Staging is partition-scoped: every statement is one dynamic-partition
+  * write of only the slices it touches ([[writeSlices]]). Checkpointed
+  * statements (inserts, MERGE, returning updates, the ON UPDATE CASCADE
+  * rewrite) know their slices before the write and read only those
+  * slices' directories. Updates, deletes and literal inserts learn them
+  * from the write itself: one job writes the touched slices and observes
+  * the statement's census, whose checks run before any slice is
+  * published. Untouched slices keep their version directory untouched on
+  * disk. A touched slice that ends up empty stays in the manifest as an
+  * empty directory (harmless for readers; vacuumable later).
   */
 final class Txn(catalog: Catalog, opts: TxnOptions = TxnOptions(timeoutMs = 0)) {
   private var base: Map[String, Option[Map[String, String]]] = Map.empty
@@ -1435,58 +1372,25 @@ final class Txn(catalog: Catalog, opts: TxnOptions = TxnOptions(timeoutMs = 0)) 
 
   private def stateOf(t: GraftTable): DataFrame = t.readDirs(workingDirs(t).values.toSeq)
 
-  /** No slices at all (pre-first-insert) — lets the create path skip the
-    * snapshot anti-join without an isEmpty action. A table whose rows were
-    * all deleted still HAS (empty) slice dirs and takes the normal path. */
-  private def isFresh(t: GraftTable): Boolean = workingDirs(t).isEmpty
-
   /** Fault-injection hook: runs with the stage root after a statement's
     * slice write and its census checks, before any slice moves into its
     * version dir. */
   private[store] var afterStagedWrite: java.nio.file.Path => Unit = _ => ()
 
-  private def stage(t: GraftTable, s: Staged): Unit =
-    if (s.touched.size <= 1) {
-      var dirs = workingDirs(t)
-      var parts = staged.getOrElse(t.name, Map.empty[String, Option[String]])
-      // Single-slice staging keeps the lazy plan: the typed sliceFilter
-      // pre-filter prunes the source scans to (roughly) this slice's
-      // files; the __pk residual is the exact slice membership test. The
-      // staged slice is immutable on disk the moment it is written, so
-      // later statements in the txn build on real files, not a recompute.
-      s.touched.foreach { pk =>
-        val (v, dir) = catalog.newVersionDir(t.name, pk)
-        val pre = t.sliceFilter(pk).getOrElse(lit(true))
-        s.next.withColumn("__pk", t.partKeyCol)
-          .filter(pre).filter(col("__pk") === lit(pk)).drop("__pk")
-          .select(t.schema.fieldNames.map(col).toIndexedSeq: _*)
-          .write.mode("overwrite").options(t.bloomWriteOptions).parquet(dir)
-        // pin footer-derived column stats beside the slice (O(files) driver
-        // IO, no job) — snapshotWhere's data skipping reads these
-        SliceStats.writeSidecar(t.spark, dir, t.bloomCols.toSet)
-        dirs += (pk -> dir)
-        parts += (pk -> Some(v))
-      }
-      working += (t.name -> dirs)
-      staged += (t.name -> parts)
-    } else {
-      writeSlices(t, s.next.withColumn("__pk", t.partKeyCol)
-        .filter(col("__pk").isin(s.touched.toSeq.sorted: _*)),
-        () => Census(s.touched, s.landing, IndexedSeq(s.n)))
-    }
-
-  /** Stage a statement whose census rides its slice write: the census
-    * checks, then `checks` (the statement's FK/RESTRICT probes), run after
-    * the write and before anything moves. */
+  /** Stage a statement: one slice write, whose census checks, then
+    * `checks` (the statement's FK/RESTRICT probes), run after the write
+    * and before anything moves. A precounted statement that touches no
+    * slice writes nothing. */
   private def stage(t: GraftTable, s: ObservedStaged, checks: => Unit = ()): Census = {
     lazy val census = { val c = s.census(); checks; c }
-    writeSlices(t, s.rows, () => census)
+    if (!s.precounted || census.touched.nonEmpty) writeSlices(t, s.rows, () => census)
     census
   }
 
   /** ONE dynamic-partition write of `rows` (declared columns plus `__pk`)
-    * into a stage root, then each touched slice of `census()` moves into a
-    * new version dir. `census` is asked after the write, so a census the
+    * into a stage root (on an unpartitioned table, one plain write of its
+    * one slice), then each touched slice of `census()` moves into a new
+    * version dir. `census` is asked after the write, so a census the
     * write observed (and its checks) decides what is published. The
     * write executes its plan exactly once and streams every row straight
     * to its slice's directory — where persist + one filtered write job
@@ -1511,18 +1415,25 @@ final class Txn(catalog: Catalog, opts: TxnOptions = TxnOptions(timeoutMs = 0)) 
     // behind are invisible to readers (never entered the manifest) and
     // vacuumable; crashed-process leftovers are swept by the Catalog's
     // open-time stale-stage sweep.
+    def stagedDir(pk: String): java.nio.file.Path = stageRoot.resolve("__pkdir=p" +
+      pk.getBytes(java.nio.charset.StandardCharsets.UTF_8).map("%02X".format(_)).mkString)
     try {
-      rows.withColumn("__pkdir", concat(lit("p"), hex(col("__pk"))))
-        .select((t.schema.fieldNames.map(col) :+ col("__pkdir")).toIndexedSeq: _*)
-        .write.mode("overwrite").options(t.bloomWriteOptions)
-        .partitionBy("__pkdir").parquet(stageRoot.toString)
+      if (t.partitionCols.isEmpty)
+        // the one slice is written straight into its staged dir: the
+        // dynamic-partition writer would sort every row on a constant key
+        rows.select(t.schema.fieldNames.map(col).toIndexedSeq: _*)
+          .write.mode("overwrite").options(t.bloomWriteOptions)
+          .parquet(stagedDir(Catalog.AllKey).toString)
+      else
+        rows.withColumn("__pkdir", concat(lit("p"), hex(col("__pk"))))
+          .select((t.schema.fieldNames.map(col) :+ col("__pkdir")).toIndexedSeq: _*)
+          .write.mode("overwrite").options(t.bloomWriteOptions)
+          .partitionBy("__pkdir").parquet(stageRoot.toString)
       val c = census()
       afterStagedWrite(stageRoot)
       c.touched.toSeq.sorted.foreach { pk =>
         val (v, dir) = catalog.newVersionDir(t.name, pk)
-        val hexName = "p" + pk.getBytes(java.nio.charset.StandardCharsets.UTF_8)
-          .map("%02X".format(_)).mkString
-        val src = stageRoot.resolve(s"__pkdir=$hexName")
+        val src = stagedDir(pk)
         val dest = java.nio.file.Paths.get(dir)
         java.nio.file.Files.createDirectories(dest.getParent)
         if (java.nio.file.Files.isDirectory(src))
@@ -1533,8 +1444,7 @@ final class Txn(catalog: Catalog, opts: TxnOptions = TxnOptions(timeoutMs = 0)) 
               "(the statement's rows land there); refusing to publish it empty")
         else if (java.nio.file.Files.exists(stageRoot.resolve("_SUCCESS")))
           // a touched slice every row left (e.g. all its keys deleted)
-          // stays in the manifest as an empty directory — same contract
-          // as the single-slice path's empty write
+          // stays in the manifest as an empty directory
           java.nio.file.Files.createDirectories(dest)
         else
           // the committed write is gone (swept or deleted under us):
@@ -1589,7 +1499,8 @@ final class Txn(catalog: Catalog, opts: TxnOptions = TxnOptions(timeoutMs = 0)) 
     * table rides the checkpoint as an orphan count over survivors; a
     * self-reference is probed after it, since the batch is its own
     * parent. Returns the staged insert and the inserted slice. */
-  private def insert(t: GraftTable, rows: DataFrame, skipDuplicates: Boolean): (Staged, DataFrame) = {
+  private def insert(t: GraftTable, rows: DataFrame,
+                     skipDuplicates: Boolean): (ObservedStaged, DataFrame) = {
     val (self, others) = t.parentRefs.partition(_._1 eq t)
     val fks = others.map { case (parent, childCol, parentCol) =>
       val keys = stateOf(parent).select(col(parentCol).as(childCol))
@@ -1598,8 +1509,7 @@ final class Txn(catalog: Catalog, opts: TxnOptions = TxnOptions(timeoutMs = 0)) 
         if (parent.uniqueKeys.contains(Seq(parentCol))) keys else keys.distinct(),
         orphanMessage(t, childCol, parent, parentCol))
     }
-    val (s, inserted) = t.stagedCreateReturning(stateOf(t), rows, skipDuplicates,
-      currentEmpty = isFresh(t), fks = fks)
+    val (s, inserted) = t.stagedCreateReturning(workingDirs(t), rows, skipDuplicates, fks)
     checkParentRefs(t, inserted, self)
     (s, inserted)
   }
@@ -1609,25 +1519,26 @@ final class Txn(catalog: Catalog, opts: TxnOptions = TxnOptions(timeoutMs = 0)) 
   /** A literal batch ([[GraftTable.stagedCreateLiteral]]) is staged in one
     * Spark job; any other batch is checkpointed, then written. */
   def createMany(t: GraftTable, rows: DataFrame, skipDuplicates: Boolean): Long =
-    t.stagedCreateLiteral(workingDirs(t), rows, skipDuplicates) match {
-      case Some(s) => stage(t, s).n(0)
-      case None =>
-        val (s, _) = insert(t, rows, skipDuplicates)
-        stage(t, s); s.n
-    }
+    stage(t, t.stagedCreateLiteral(workingDirs(t), rows, skipDuplicates)
+      .getOrElse(insert(t, rows, skipDuplicates)._1)).n(0)
 
   def createManyAndReturn(t: GraftTable, rows: DataFrame, skipDuplicates: Boolean): DataFrame = {
     val (s, inserted) = insert(t, rows, skipDuplicates)
     stage(t, s); inserted
   }
 
-  def updateManyAndReturn(t: GraftTable, where: Where, set: Map[String, Column]): DataFrame = {
+  def updateManyAndReturn(t: GraftTable, where: Where, set: Map[String, Column]): DataFrame =
+    updateReturning(t, where, set)._2
+
+  /** The returning update: (matched count, post-update matched rows). */
+  private def updateReturning(t: GraftTable, where: Where,
+                              set: Map[String, Column]): (Long, DataFrame) = {
     val cur = stateOf(t)
-    val (s, updated) = t.stagedUpdateReturning(cur, where, set)
+    val (s, updated) = t.stagedUpdateReturning(workingDirs(t), where, set)
     checkUpdatedRefs(t, set, updated)
-    stage(t, s)
+    val c = stage(t, s)
     cascadeParentKeyRewrite(t, set, t.matchedView(cur, where))
-    updated
+    (c.n(0), updated)
   }
 
   /** An update that rewrites a declared FK column must re-validate it —
@@ -1710,8 +1621,7 @@ final class Txn(catalog: Catalog, opts: TxnOptions = TxnOptions(timeoutMs = 0)) 
             s"${child.name}: ON UPDATE CASCADE would null non-nullable $childCol")
       }
       val km = keyMap.withColumn("__hit", lit(true))
-      val joined = cur.join(km, cur(childCol) === km("__old"), "left")
-      val next = joined
+      def remapped(df: DataFrame): DataFrame = df.join(km, df(childCol) === km("__old"), "left")
         .withColumn(childCol,
           when(coalesce(col("__hit"), lit(false)), col("__new"))
             .otherwise(col(childCol)))
@@ -1733,7 +1643,7 @@ final class Txn(catalog: Catalog, opts: TxnOptions = TxnOptions(timeoutMs = 0)) 
       // unique key containing the FK column over the affected slice of
       // the post-rewrite state. NULL rows never conflict (SQL UNIQUE).
       child.uniqueKeys.filter(_.contains(childCol)).foreach { uk =>
-        val affectedKeys = next
+        val affectedKeys = remapped(cur)
           .join(keyMap.select(col("__new").as(childCol)).distinct(),
             Seq(childCol), "left_semi")
           .filter(uk.map(c => col(c).isNotNull).reduce(_ && _))
@@ -1745,7 +1655,9 @@ final class Txn(catalog: Catalog, opts: TxnOptions = TxnOptions(timeoutMs = 0)) 
             s"${child.name}: ON UPDATE CASCADE would collide unique key " +
               s"(${uk.mkString(",")})")
       }
-      stage(child, Staged(next, pre ++ landing, preStats.map(_.getLong(1)).sum, landing))
+      val touched = pre ++ landing
+      stage(child, child.precounted(remapped(child.readSlices(workingDirs(child), touched)),
+        Census(touched, landing, IndexedSeq(preStats.map(_.getLong(1)).sum))))
     }
   }
 
@@ -1872,24 +1784,26 @@ final class Txn(catalog: Catalog, opts: TxnOptions = TxnOptions(timeoutMs = 0)) 
     c.n(0)
   }
 
-  def upsert(t: GraftTable, keyCols: Seq[String], rows: DataFrame): Long = {
-    val (s, written) = t.stagedUpsertReturning(stateOf(t), keyCols, rows)
-    // FK-validated over the rows ACTUALLY written, from the checkpoint —
-    // probing the raw incoming frame would re-execute its plan per parent
-    checkParentRefs(t, written)
-    stage(t, s); s.n
-  }
+  def upsert(t: GraftTable, keyCols: Seq[String], rows: DataFrame): Long =
+    merge(t, keyCols, t.mergeDelta(rows, lit(false)))
 
   /** MERGE-apply one [[ChangeFeed]] batch onto `t` (CDC replication):
     * upsert the insert/postimage rows, delete the delete keys, all in
     * THIS transaction — pair with [[CdfTail.drainOnce]]'s cursor advance
     * for exactly-once incremental mirroring. Returns applied changes. */
   def applyChanges(t: GraftTable, changes: DataFrame): Long = {
-    val (s, ups) = t.stagedApplyChangesReturning(stateOf(t), changes)
-    // FK-validated over the surviving upserts, from the checkpoint — the
-    // change-feed join behind `changes` must never re-execute per parent
-    checkParentRefs(t, ups)
-    stage(t, s); s.n
+    val (pk, delta) = t.changeDelta(changes)
+    merge(t, pk, delta)
+  }
+
+  /** Stage a MERGE delta. FK-validated over the surviving rows, from the
+    * checkpoint — probing the delta's plan (a change-feed join, a
+    * tokenize) would re-execute it per parent. Returns the count of
+    * surviving images and tombstones. */
+  private def merge(t: GraftTable, keyCols: Seq[String], delta: DataFrame): Long = {
+    val (s, written) = t.stagedMergeReturning(workingDirs(t), keyCols, delta)
+    checkParentRefs(t, written)
+    stage(t, s).n(0)
   }
 
   /** Nested create (`create`/`createMany` with `{create | connectOrCreate}`
@@ -1954,7 +1868,7 @@ final class Txn(catalog: Catalog, opts: TxnOptions = TxnOptions(timeoutMs = 0)) 
       }
     }
     val (s, inserted) = insert(t, resolved, skipDuplicates)
-    stage(t, s)
+    val n = stage(t, s).n(0)
     if (nested.nonEmpty) {
       // re-attach payload columns: batch rows whose key actually landed
       val insertedFull = resolved
@@ -1968,7 +1882,7 @@ final class Txn(catalog: Catalog, opts: TxnOptions = TxnOptions(timeoutMs = 0)) 
           createMany(link, links(insertedFull), skipDuplicates = true)
       }
     }
-    s.n
+    n
   }
 
   /** Nested writes under `update` (`update({where, data: {..., relation:
@@ -1978,11 +1892,7 @@ final class Txn(catalog: Catalog, opts: TxnOptions = TxnOptions(timeoutMs = 0)) 
   def updateNested(t: GraftTable, where: Where, set: Map[String, Column],
                    nested: Seq[NestedWrite]): Long = {
     requireConnectKeys(nested)
-    val cur = stateOf(t)
-    val (s, updated) = t.stagedUpdateReturning(cur, where, set)
-    checkUpdatedRefs(t, set, updated)
-    stage(t, s)
-    cascadeParentKeyRewrite(t, set, t.matchedView(cur, where))
+    val (n, updated) = updateReturning(t, where, set)
     nested.foreach {
       case NestedCreate(child, f, skipDup) =>
         createMany(child, f(updated), skipDup)
@@ -1990,7 +1900,7 @@ final class Txn(catalog: Catalog, opts: TxnOptions = TxnOptions(timeoutMs = 0)) 
         createMany(rel, ensure(updated), skipDuplicates = true)
         createMany(link, links(updated), skipDuplicates = true)
     }
-    s.n
+    n
   }
 
   /** Read within the transaction (sees staged, uncommitted state). The

@@ -30,21 +30,21 @@ final class MaterializedColumn private (
 
   private def consumerId = s"mcol:$name"
 
-  private def project(df: DataFrame): DataFrame =
-    df.select(col(idCol).as("id") +: derived.map { case (n, c) => c.as(n) }: _*)
+  /** The derived projection of a change batch, `_change_type` kept. */
+  private def project(ch: DataFrame): DataFrame =
+    ch.select(col(idCol).as("id") +: derived.map { case (n, c) => c.as(n) } :+
+      col("_change_type"): _*)
 
   /** Source commit id the derived rows are current through. */
   def currentThrough(): Long = CdfTail.cursor(src, consumerId)
 
   /** Catch up with the source's change feed — the derivation runs over
-    * the DELTA only. */
+    * the DELTA only. One combined MERGE (see [[DedupIndex.refresh]]):
+    * arriving images upsert and departing ones delete, so each touched
+    * slice is rewritten once. */
   def refresh(): Option[(Long, Long)] =
     CdfTail.drainOnce(src, consumerId) { (txn, ch, _, _) =>
-      txn.upsert(table, Seq("id"), project(ch.filter(
-        col("_change_type").isin("insert", "update_postimage"))))
-      txn.deleteWhereKeysIn(table, Seq("id"),
-        ch.filter(col("_change_type") === "delete")
-          .select(col(idCol).as("id")))
+      txn.applyChanges(table, project(ch))
       ()
     }
 
@@ -72,14 +72,14 @@ object MaterializedColumn {
             derived: Seq[(String, Column)]): MaterializedColumn = {
     val c0 = src.catalog.currentCommitId()
     val table = tableFor(src, name, idCol, derived)
-    val txn = new Txn(src.catalog)
-    txn.createMany(table, src.snapshotAt(c0)
-        .select(col(idCol).as("id") +:
-          derived.map { case (n, c) => c.as(n) }: _*),
-      skipDuplicates = false)
-    txn.recordStreamBatch(src, s"cdf:mcol:$name", c0,
-      src.catalog.manifest().get(Catalog.StreamTable))
-    txn.commit()
+    Txn.run(src.catalog) { txn =>
+      txn.createMany(table, src.snapshotAt(c0)
+          .select(col(idCol).as("id") +:
+            derived.map { case (n, c) => c.as(n) }: _*),
+        skipDuplicates = false)
+      txn.recordStreamBatch(src, s"cdf:mcol:$name", c0,
+        src.catalog.manifest().get(Catalog.StreamTable))
+    }
     new MaterializedColumn(src, name, idCol, derived, table)
   }
 

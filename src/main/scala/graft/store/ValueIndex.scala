@@ -401,16 +401,16 @@ object ValueIndex {
     val post = postTable(src, name, valCols, idCol)
     val meta = metaTable(src, name)
     val nullCnt = snap.filter(col(valCols.head).isNull).count()
-    val txn = new Txn(src.catalog)
-    txn.createMany(post,
-      bucketed(postingsOf(snap, valCols, idCol), valCols, nBuckets),
-      skipDuplicates = false)
-    txn.createMany(meta, src.spark.createDataFrame(
-      java.util.Arrays.asList(Row(0, nBuckets, nullCnt)), metaSchema),
-      skipDuplicates = false)
-    txn.recordStreamBatch(src, s"cdf:vidx:$name", c0,
-      src.catalog.manifest().get(Catalog.StreamTable))
-    txn.commit()
+    Txn.run(src.catalog) { txn =>
+      txn.createMany(post,
+        bucketed(postingsOf(snap, valCols, idCol), valCols, nBuckets),
+        skipDuplicates = false)
+      txn.createMany(meta, src.spark.createDataFrame(
+        java.util.Arrays.asList(Row(0, nBuckets, nullCnt)), metaSchema),
+        skipDuplicates = false)
+      txn.recordStreamBatch(src, s"cdf:vidx:$name", c0,
+        src.catalog.manifest().get(Catalog.StreamTable))
+    }
     new ValueIndex(src, name, valCols, idCol, post, meta)
   }
 

@@ -56,10 +56,10 @@ object StoreSink {
         // replay detection: batch ids are monotone per checkpoint, so any
         // id at-or-below the committed watermark was already published
         if (!last.exists(_ >= batchId)) {
-          val txn = new Txn(t.catalog)
-          write(txn, df)
-          txn.recordStreamBatch(t, streamId, batchId, streams)
-          txn.commit()
+          Txn.run(t.catalog) { txn =>
+            write(txn, df)
+            txn.recordStreamBatch(t, streamId, batchId, streams)
+          }
         }
       }
     }

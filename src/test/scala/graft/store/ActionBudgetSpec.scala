@@ -1,7 +1,6 @@
 package graft.store
 
 import graft.SparkTestBase
-import org.apache.spark.sql.execution.ui.SparkListenerSQLExecutionStart
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
 import org.scalatest.funsuite.AnyFunSuite
@@ -21,35 +20,6 @@ import org.scalatest.funsuite.AnyFunSuite
   */
 class ActionBudgetSpec extends AnyFunSuite with SparkTestBase {
   import spark.implicits._
-
-  private class ExecCounter extends org.apache.spark.scheduler.SparkListener {
-    val n = new java.util.concurrent.atomic.AtomicInteger(0)
-    override def onOtherEvent(e: org.apache.spark.scheduler.SparkListenerEvent): Unit =
-      e match {
-        case s: SparkListenerSQLExecutionStart
-            if s.rootExecutionId.forall(_ == s.executionId) => n.incrementAndGet()
-        case _ => ()
-      }
-  }
-
-  /** Count root SQL executions of `body`, waiting for the async listener
-    * bus to drain (count stable for 400 ms, bounded at 5 s). */
-  private def countExecs(body: => Unit): Int = {
-    val counter = new ExecCounter
-    spark.sparkContext.addSparkListener(counter)
-    try {
-      body
-      var last = -1
-      var stableSince = System.nanoTime()
-      val deadline = System.nanoTime() + 5000000000L
-      while (System.nanoTime() < deadline &&
-             (last != counter.n.get() || System.nanoTime() - stableSince < 400000000L)) {
-        if (last != counter.n.get()) { last = counter.n.get(); stableSince = System.nanoTime() }
-        Thread.sleep(50)
-      }
-      counter.n.get()
-    } finally spark.sparkContext.removeSparkListener(counter)
-  }
 
   test("createNested with two relation writes stays within 8 driver actions") {
     val cat = new Catalog(
@@ -225,6 +195,23 @@ class ActionBudgetSpec extends AnyFunSuite with SparkTestBase {
     }
     assert(execs <= 1, s"literal insert regressed: $execs root executions (budget 1)")
     assert(t.snapshot().count() == 5L)
+  }
+
+  test("a checkpointed insert that keeps no row pays only its checkpoint") {
+    val t = queueTable("graft-budget-none")
+    val commit = t.catalog.currentCommitId()
+    // a computed (non-literal) batch whose every key is in the snapshot
+    val dupes = spark.range(2).select(
+      when(col("id") === 0, lit("a")).otherwise(lit("c")).as("id"),
+      lit("dup").as("ref"),
+      lit(null).cast(BooleanType).as("status"),
+      lit(null).cast(StringType).as("notes"),
+      lit(null).cast(TimestampType).as("createdAt"),
+      lit(null).cast(TimestampType).as("updatedAt"))
+    val execs = countExecs { assert(t.createMany(dupes, skipDuplicates = true) == 0L) }
+    assert(execs <= 1, s"an empty insert wrote: $execs root executions (budget 1)")
+    assert(t.catalog.currentCommitId() == commit)
+    assert(t.snapshot().count() == 4L)
   }
 
   test("an FK-checked insert pays two") {

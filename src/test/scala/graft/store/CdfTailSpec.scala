@@ -140,9 +140,10 @@ class CdfTailSpec extends AnyFunSuite with SparkTestBase {
     src.createMany((1L to 10L).map(i => (i, i)).toDF("id", "v"))
     val changes = ChangeFeed.changesBetween(src, 0L, src.catalog.currentCommitId())
     // the staged plan must be derivable lazily (no eager collect of keys)
-    val staged = mir.stagedApplyChangesReturning(mir.snapshot(), changes)._1
-    assert(staged.n == 10L)
-    val plan = staged.next.queryExecution.optimizedPlan.toString
-    assert(!plan.contains("LocalRelation") || staged.next.count() == 10L)
+    val (pk, delta) = mir.changeDelta(changes)
+    val staged = mir.stagedMergeReturning(mir.catalog.currentDirs(mir.name), pk, delta)._1
+    assert(staged.census().n(0) == 10L)
+    val plan = staged.rows.queryExecution.optimizedPlan.toString
+    assert(!plan.contains("LocalRelation") || staged.rows.count() == 10L)
   }
 }

@@ -48,13 +48,15 @@ class LiteralPathSpec extends AnyFunSuite with SparkTestBase {
 
   /** The count, rows without timestamps and slice keys after `op`, or the
     * class of what it threw. */
-  private def outcome(op: GraftTable => Long): Either[String, (Long, Set[Seq[Any]], Set[String])] = {
-    val t = table()
+  private def outcome(op: GraftTable => Long): Either[String, (Long, Set[Seq[Any]], Set[String])] =
+    outcomeOn(table(), op)
+
+  private def outcomeOn(t: GraftTable,
+                        op: GraftTable => Long): Either[String, (Long, Set[Seq[Any]], Set[String])] =
     scala.util.Try(op(t)).toEither.left.map(_.getClass.getName).map { n =>
       (n, t.snapshot().drop("createdAt", "updatedAt").collect().map(_.toSeq).toSet,
         t.catalog.currentDirs(t.name).keySet)
     }
-  }
 
   private val hostile = Seq("a b", "x=1/2", "100%", "café", "", "p,q", null, "__NULL__")
 
@@ -95,6 +97,71 @@ class LiteralPathSpec extends AnyFunSuite with SparkTestBase {
         outcome(t => Txn.run(t.catalog)(_.applyChanges(t, changes(rdd(withDelete))))),
         s"applyChanges: $what")
     }
+  }
+
+  // non-string keys: Int and Long unique keys, a Boolean partition column
+  private val typed = StructType(Seq(
+    StructField("n", IntegerType, nullable = true),
+    StructField("big", LongType, nullable = true),
+    StructField("flag", BooleanType, nullable = true),
+    StructField("label", StringType, nullable = false)))
+
+  private val typedInput = StructType(typed.fields.map(_.copy(nullable = true)))
+
+  private def typedLiteral(rs: Seq[Row]): DataFrame =
+    spark.createDataFrame(java.util.Arrays.asList(rs: _*), typedInput)
+
+  private def typedRdd(rs: Seq[Row]): DataFrame =
+    spark.createDataFrame(spark.sparkContext.parallelize(rs, 1), typedInput)
+
+  private def typedTable(): GraftTable = {
+    val t = new GraftTable(spark, new Catalog(
+      java.nio.file.Files.createTempDirectory("graft-literal-typed").toString), "typed", typed,
+      uniqueKeys = Seq(Seq("n"), Seq("big")), partitionCols = Seq("flag"),
+      maxLengths = Map("label" -> 5))
+    t.createMany(typedRdd(Seq(Row(1, 10L, true, "s1"), Row(2, 20L, false, "s2"),
+      Row(null, 30L, null, "s3"))))
+    t
+  }
+
+  private val typedBatches: Seq[(String, Seq[Row])] = Seq(
+    "in-batch duplicate Int key" -> Seq(Row(5, 50L, true, "a"), Row(5, 51L, false, "b")),
+    "in-batch duplicate Long key" -> Seq(Row(6, 60L, false, "a"), Row(7, 60L, true, "b")),
+    "Int key in the snapshot" -> Seq(Row(1, 70L, true, "a"), Row(8, 80L, false, "b")),
+    "Long key in the snapshot" -> Seq(Row(9, 20L, null, "a")),
+    "NULL keys" -> Seq(Row(null, 90L, true, "a"), Row(null, 91L, true, "b"),
+      Row(10, null, false, "c"), Row(11, null, null, "d")),
+    "NULL in a non-nullable column" -> Seq(Row(12, 120L, true, null)),
+    "over-length string" -> Seq(Row(13, 130L, false, "toolong")),
+    "extreme values in every slice" -> Seq(Row(Int.MinValue, Long.MaxValue, true, "x"),
+      Row(Int.MaxValue, Long.MinValue, false, "y"), Row(0, 0L, null, "z"), Row(-1, -1L, true, "w")))
+
+  test("Int and Long keys over a Boolean partition: literal paths equal the Spark paths") {
+    for ((what, batch) <- typedBatches) {
+      for (skip <- Seq(true, false))
+        assert(outcomeOn(typedTable(), _.createMany(typedLiteral(batch), skipDuplicates = skip)) ==
+          outcomeOn(typedTable(), _.createMany(typedRdd(batch), skipDuplicates = skip)),
+          s"insert: $what, skipDuplicates=$skip")
+      for (key <- Seq("n", "big"))
+        assert(outcomeOn(typedTable(), _.upsert(Seq(key), typedLiteral(batch))) ==
+          outcomeOn(typedTable(), _.upsert(Seq(key), typedRdd(batch))), s"upsert on $key: $what")
+      def changes(df: DataFrame): DataFrame = df.withColumn("_change_type",
+        when(col("n") === 2, lit("delete")).otherwise(lit("insert")))
+      val withDelete = batch :+ Row(2, 20L, false, "s2")
+      assert(outcomeOn(typedTable(), t => Txn.run(t.catalog)(_.applyChanges(t, changes(typedLiteral(withDelete))))) ==
+        outcomeOn(typedTable(), t => Txn.run(t.catalog)(_.applyChanges(t, changes(typedRdd(withDelete))))),
+        s"applyChanges: $what")
+    }
+    // the batches discriminate, and a clean one takes the literal insert
+    val thrown = typedBatches.map { case (_, b) => outcomeOn(typedTable(), _.createMany(typedLiteral(b))) }
+      .collect { case Left(e) => e.split('.').last }.toSet
+    assert(thrown == Set("UniqueViolationException", "NullConstraintException",
+      "ValueTooLongException"))
+    val t = typedTable()
+    assert(t.stagedCreateLiteral(t.catalog.currentDirs(t.name), typedLiteral(typedBatches.last._2),
+      skipDuplicates = false).isDefined)
+    assert(outcomeOn(typedTable(), _.createMany(typedLiteral(typedBatches.last._2))).map(_._3) ==
+      Right(Set("flag=true", "flag=false", "flag=__NULL__")))
   }
 
   test("the insert fixture exercises both paths' dedup and probes") {

@@ -36,6 +36,14 @@ class StageFaultSpec extends AnyFunSuite with SparkTestBase {
     * root; assert it throws and publishes nothing. */
   private def assertFailsClosed(fault: java.nio.file.Path => Unit): Unit = {
     val t = seeded()
+    assertFailsClosed(t, fault)(_.updateMany(t, RawCol(col("status").isNull),
+      Map("status" -> lit(true))))
+  }
+
+  /** Run `statement` on `t` with `fault` applied to the stage root; assert
+    * it throws and publishes nothing. */
+  private def assertFailsClosed(t: GraftTable, fault: java.nio.file.Path => Unit)
+                               (statement: Txn => Unit): Unit = {
     val manifest = t.catalog.manifest()
     val commit = t.catalog.currentCommitId()
     val rows = t.snapshot().collect().toSet
@@ -43,7 +51,7 @@ class StageFaultSpec extends AnyFunSuite with SparkTestBase {
     val e = intercept[IllegalStateException] {
       Txn.run(t.catalog) { tx =>
         tx.afterStagedWrite = root => { faulted = true; fault(root) }
-        tx.updateMany(t, RawCol(col("status").isNull), Map("status" -> lit(true)))
+        statement(tx)
       }
     }
     assert(faulted, "the hook never ran")
@@ -60,6 +68,29 @@ class StageFaultSpec extends AnyFunSuite with SparkTestBase {
 
   test("a stage root deleted before the move fails the statement") {
     assertFailsClosed(Catalog.rmTree)
+  }
+
+  test("a checkpointed insert into an unpartitioned table fails closed") {
+    val t = new GraftTable(spark, new Catalog(
+      java.nio.file.Files.createTempDirectory("graft-stage-fault-ins").toString), "events",
+      StructType(Seq(
+        StructField("id", StringType, nullable = false),
+        StructField("v", LongType, nullable = true))),
+      uniqueKeys = Seq(Seq("id")))
+    t.createMany(Seq(("a", 1L)).toDF("id", "v"))
+    // a computed (non-literal) batch takes the checkpointed insert
+    val batch = spark.range(3).select(concat(lit("e"), col("id").cast("string")).as("id"),
+      col("id").as("v"))
+    assertFailsClosed(t, root => stagedSlices(root).foreach(Catalog.rmTree))(
+      _.createMany(t, batch, skipDuplicates = false))
+  }
+
+  test("a multi-slice upsert fails closed") {
+    val t = seeded()
+    // lands in all three status slices and moves "a" out of the pending one
+    val rows = Seq(("a", Some(true)), ("d", None), ("e", Some(false))).toDF("id", "status")
+    assertFailsClosed(t, root => stagedSlices(root).foreach(Catalog.rmTree))(
+      _.upsert(t, Seq("id"), rows))
   }
 
   test("without a fault the same flip publishes both touched slices") {

@@ -1,7 +1,6 @@
 package graft.store
 
 import graft.SparkTestBase
-import org.apache.spark.sql.execution.ui.SparkListenerSQLExecutionStart
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
 import org.scalatest.funsuite.AnyFunSuite
@@ -21,33 +20,6 @@ import org.scalatest.funsuite.AnyFunSuite
   */
 class StagingSpec extends AnyFunSuite with SparkTestBase {
   import spark.implicits._
-
-  private class ExecCounter extends org.apache.spark.scheduler.SparkListener {
-    val n = new java.util.concurrent.atomic.AtomicInteger(0)
-    override def onOtherEvent(e: org.apache.spark.scheduler.SparkListenerEvent): Unit =
-      e match {
-        case s: SparkListenerSQLExecutionStart
-            if s.rootExecutionId.forall(_ == s.executionId) => n.incrementAndGet()
-        case _ => ()
-      }
-  }
-
-  private def countExecs(body: => Unit): Int = {
-    val counter = new ExecCounter
-    spark.sparkContext.addSparkListener(counter)
-    try {
-      body
-      var last = -1
-      var stableSince = System.nanoTime()
-      val deadline = System.nanoTime() + 5000000000L
-      while (System.nanoTime() < deadline &&
-             (last != counter.n.get() || System.nanoTime() - stableSince < 400000000L)) {
-        if (last != counter.n.get()) { last = counter.n.get(); stableSince = System.nanoTime() }
-        Thread.sleep(50)
-      }
-      counter.n.get()
-    } finally spark.sparkContext.removeSparkListener(counter)
-  }
 
   private def bucketTable(cat: Catalog, name: String): GraftTable =
     new GraftTable(spark, cat, name, StructType(Seq(
